@@ -9,14 +9,17 @@ import org.apache.spark.sql.SparkSession
   * running, losing q01–q19's medians each time):
   *
   *  - stdout: ONE compact JSON line (≤ ~500 chars, O(1) in the query
-  *    count) — {"metric","value","unit","sf","runs","n","warmup_sec",
-  *    "worst10":{...},"full":"bench_full_c<cpus>.json","total_sec"}
-  *    where `worst10` maps the 10 slowest qNNN prefixes to
-  *    [interleaved_median, isolated_median].
+  *    count) — {"metric","value","unit","sf","runs","n","failed",
+  *    "warmup_sec","worst10":{...},"full":"bench_full_c<cpus>.json",
+  *    "total_sec"} where `worst10` maps the 10 slowest qNNN prefixes to
+  *    [interleaved_median, isolated_median] and `failed` counts the
+  *    invocations that threw (stderr names each failing query).
   *  - bench_full_c<cpus>.json (cwd = repo root; override with
   *    SPARK_GRAFT_BENCH_FULL): the COMPLETE per-query artifact —
   *    every query's interleaved median plus the isolated worst-10
-  *    re-run — committed with the round, immune to suite growth.
+  *    re-run, and every query's failure count — committed with the
+  *    round, immune to suite growth. Medians are over the invocations
+  *    that succeeded; a query with none has a null median.
   *    Run-scoped by core count since r22 so the driver's 32-core and
   *    8-core passes leave distinct artifacts instead of clobbering
   *    one file (the r21 PERF per-query gap).
@@ -53,12 +56,26 @@ object Bench {
       }
     val warmupSec = (System.nanoTime() - w0) / 1e9
 
-    def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    // An invocation that throws is a failure, not a timing: it is
+    // counted per query and left out of that query's medians (a fast
+    // failure would otherwise pass for a fast query).
+    val failures = scala.collection.mutable.Map[String, Int]().withDefaultValue(0)
+    def timeOnce(name: String): Option[Double] = {
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      (System.nanoTime() - t0) / 1e9
+      try {
+        SparkEntry.queries(name)(spark, sfDir).count()
+        Some((System.nanoTime() - t0) / 1e9)
+      } catch {
+        case e: Throwable =>
+          failures(name) += 1
+          System.err.println(s"bench: $name failed: $e")
+          None
+      }
     }
-    def median(xs: Seq[Double]): Double = { val s = xs.sorted; s(s.length / 2) }
+    def median(xs: Seq[Double]): Option[Double] =
+      if (xs.isEmpty) None else { val s = xs.sorted; Some(s(s.length / 2)) }
+    def fmt(v: Option[Double], digits: Int): String =
+      v.fold("null")(x => s"%.${digits}f".format(x))
 
     // median of `runs` INTERLEAVED passes per query: the local VM host
     // shows not only per-run noise spikes but multi-minute whole-host
@@ -101,12 +118,13 @@ object Bench {
           case (_, ns) if ns.size > 1 => ns.mkString("/")
         }.mkString(", ")}")
     val samples = (1 to runs).flatMap { _ =>
-      queries.map { case (name, fn) => name -> timeOnce(fn) }
+      queries.map { case (name, _) => name -> timeOnce(name) }
     }
     val results = queries.map { case (name, _) =>
-      name -> median(samples.collect { case (`name`, t) => t })
+      name -> median(samples.collect { case (`name`, Some(t)) => t })
     }
-    val total = results.map(_._2).sum
+    val timed = results.collect { case (name, Some(t)) => name -> t }
+    val total = timed.map(_._2).sum
 
     // isolated worst-10 pass: re-run the 10 slowest queries back to
     // back, each timed alone (median of 3 consecutive runs). An
@@ -116,10 +134,15 @@ object Bench {
     // the interleaved sweep alone cannot certify a per-query
     // regression at the 2x gate).
     val isoRuns = sys.env.getOrElse("SPARK_GRAFT_BENCH_ISO_RUNS", "3").toInt
-    val worst = results.sortBy(-_._2).take(10)
+    val worst = timed.sortBy(-_._2).take(10)
     val isolated = worst.map { case (name, _) =>
-      name -> median((1 to isoRuns).map(_ => timeOnce(SparkEntry.queries(name))))
+      name -> median((1 to isoRuns).flatMap(_ => timeOnce(name)))
     }.toMap
+    val nFailed = failures.values.sum
+    queries.foreach { case (name, _) =>
+      if (failures(name) > 0)
+        System.err.println(s"bench: $name failures=${failures(name)}")
+    }
 
     // full artifact: every query's interleaved median + the isolated
     // worst-10, written as a committed pretty-ish JSON file so the
@@ -139,10 +162,12 @@ object Bench {
       else s"bench_full_c$cpus.json")
     val sfLabel = new java.io.File(sfDir).getName
     val fullJson = {
-      val qLines = results.map { case (n, v) => f"""    "$n": $v%.3f""" }
+      val qLines = results.map { case (n, v) => s"""    "$n": ${fmt(v, 3)}""" }
         .mkString(",\n")
       val isoLines = worst.map { case (n, v) =>
-        f"""    "$n": {"interleaved": $v%.3f, "isolated": ${isolated(n)}%.3f}""" }
+        f"""    "$n": {"interleaved": $v%.3f, "isolated": ${fmt(isolated(n), 3)}}""" }
+        .mkString(",\n")
+      val failLines = queries.map { case (n, _) => s"""    "$n": ${failures(n)}""" }
         .mkString(",\n")
       f"""{
          |  "metric": "bench_full",
@@ -157,6 +182,10 @@ object Bench {
          |  },
          |  "isolated_worst10_sec": {
          |$isoLines
+         |  },
+         |  "n_failed": $nFailed,
+         |  "failures": {
+         |$failLines
          |  }
          |}""".stripMargin
     }
@@ -169,8 +198,8 @@ object Bench {
     // duplicated at the END as belt-and-braces for any capture window
     // that still clips the head.
     val w10 = worst.map { case (n, v) =>
-      f""""${short(n)}":[$v%.2f,${isolated(n)}%.2f]""" }.mkString("{", ",", "}")
-    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","sf":"$sfLabel","runs":$runs,"n":${results.size},"warmup_sec":$warmupSec%.1f,"worst10":$w10,"full":"$fullPath","total_sec":$total%.3f}""")
+      f""""${short(n)}":[$v%.2f,${fmt(isolated(n), 2)}]""" }.mkString("{", ",", "}")
+    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","sf":"$sfLabel","runs":$runs,"n":${results.size},"failed":$nFailed,"warmup_sec":$warmupSec%.1f,"worst10":$w10,"full":"$fullPath","total_sec":$total%.3f}""")
     spark.stop()
   }
 }

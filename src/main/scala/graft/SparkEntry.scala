@@ -55,52 +55,6 @@ object SparkEntry {
     d
   }
 
-  /** r20-verdict diagnostic sidecar for the q219/q232/q235 trio (the
-    * byte-re-read family that has been driver-hash-red two rounds with
-    * no local repro): dump the per-shard stats the query is about to
-    * return plus the session fingerprint to `<name>_DIAG.json` in the
-    * repo root, so a red driver run leaves evidence a human can diff
-    * against a committed green run and name the first diverging
-    * shard/value. The stats frame is LOCAL post-verifyManifest, so the
-    * dump costs one local collect (bounded by the shard count); any
-    * write failure is swallowed (the harness cwd may be read-only).
-    *
-    * OFF by default since r22 (the HUGEINT root cause is fixed and
-    * pinned by OracleConsistencySpec): the dump added a collect + repo
-    * write to three hot queries on every bench/verify invocation. Set
-    * SPARK_GRAFT_DIAG=1 to re-arm it. */
-  private def diagSidecar(name: String, dir: String,
-                          stats: DataFrame): DataFrame = {
-    if (!sys.env.get("SPARK_GRAFT_DIAG").contains("1")) return stats
-    try {
-      val s = stats.sparkSession
-      def c(k: String) =
-        try s.conf.get(k, "unset") catch { case _: Throwable => "unset" }
-      val fp = Seq(
-        "sf_dir" -> dir,
-        "spark_version" -> s.version,
-        "jvm" -> System.getProperty("java.version"),
-        "tmpdir" -> System.getProperty("java.io.tmpdir"),
-        "master" -> s.sparkContext.master,
-        "parallelism" -> s.sparkContext.defaultParallelism.toString,
-        "shuffle_partitions" -> c("spark.sql.shuffle.partitions"),
-        "aqe" -> c("spark.sql.adaptive.enabled"),
-        "ansi" -> c("spark.sql.ansi.enabled"),
-        "speculation" -> c("spark.speculation"))
-      val cols = stats.columns
-      val body = stats.collect().map { r =>
-        cols.indices.map(i => s""""${cols(i)}": ${r.get(i)}""")
-          .mkString("{", ", ", "}")
-      }.mkString("[", ",\n  ", "]")
-      val json = "{\n" +
-        fp.map { case (k, v) => s"""  "$k": "$v"""" }.mkString(",\n") +
-        s""",\n  "shards": $body\n}\n"""
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"/root/repo/${name}_DIAG.json"), json)
-    } catch { case _: Throwable => () }
-    stats
-  }
-
   /** q169's written IVFADC index, memoized per sf dir: building is the
     * one-time batch job of the serving story, so repeated invocations
     * (bench medians, scale-curve passes) probe the SAME written index;
@@ -3447,12 +3401,12 @@ object SparkEntry {
       val packed = graft.io.TokenShards.packChunks(d, "doc_id", "text",
         vocab = 4096, seqLen = 64, seqsPerShard = 16, nBuckets = 8)
       val manifest = graft.io.TokenShards.write(packed, path)
-      diagSidecar("Q219", dir, graft.io.TokenShards
+      graft.io.TokenShards
         .verifyManifest(graft.io.TokenShards.readStats(s, path), manifest)
         .select(col("shard_id"),
           expr("n_tokens div 64L").as("n_seqs"),
           col("n_tokens"), col("token_sum"), col("poly_mod"),
-          lit(true).as("manifest_match")))
+          lit(true).as("manifest_match"))
     }),
 
     // ---- BYTE-FREE TWIN of q219 (the r20-verdict bifurcation
@@ -3562,7 +3516,7 @@ object SparkEntry {
     "q232_pretrain_release" -> ((s, dir) => {
       val d = t(s, dir, "documents")
       val path = tempResultDir("graft-q232") + "/release"
-      diagSidecar("Q232", dir, graft.pipelines.PretrainRelease.releaseShards(
+      graft.pipelines.PretrainRelease.releaseShards(
         docs = d.where(col("doc_id") % 97 =!= 0),
         bench = d.where(col("doc_id") % 97 === 0).select("doc_id", "text"),
         path = path, minTokens = 30, alphaQuarters = 2,
@@ -3571,7 +3525,7 @@ object SparkEntry {
         .select(col("shard_id"),
           expr("n_tokens div 64L").as("n_seqs"),
           col("n_tokens"), col("token_sum"), col("poly_mod"),
-          lit(true).as("manifest_match")))
+          lit(true).as("manifest_match"))
     }),
 
     // ---- RELEASE DOC-SPAN SIDECAR (PretrainRelease.releaseDocSpansTo
@@ -3628,14 +3582,14 @@ object SparkEntry {
     "q235_release_delta" -> ((s, dir) => {
       val d = t(s, dir, "documents")
       val base = tempResultDir("graft-q235")
-      diagSidecar("Q235", dir, graft.pipelines.PretrainRelease.releaseDeltaShards(
+      graft.pipelines.PretrainRelease.releaseDeltaShards(
         corpus = d.where(col("doc_id") % 97 =!= 0 && col("doc_id") % 3 === 0),
         batch = d.where(col("doc_id") % 97 =!= 0 && col("doc_id") % 3 =!= 0),
         bench = d.where(col("doc_id") % 97 === 0).select("doc_id", "text"),
         pathA = base + "/drop0", pathB = base + "/drop1",
         minTokens = 30, alphaQuarters = 2,
         vocab = 4096, seqLen = 64, seqsPerShard = 16, ngram = 5,
-        nBuckets = 8))
+        nBuckets = 8)
     }),
 
     // ---- TRAINING-ORDER MANIFEST (PretrainRelease.releaseEpochOrder

@@ -59,21 +59,47 @@ object Tables {
     "embeddings" -> Seq("vec_id" -> LongType,
       "embedding" -> ArrayType(FloatType), "label" -> IntegerType))
 
-  /** OBSERVED parquet schema per path, memoized for the JVM's
-    * lifetime (r22): without it every `load` ran a footer
-    * schema-inference job — ~30 ms × (tables per query) × (231
-    * queries × bench passes) of pure fixed overhead. This caches
-    * SCHEMA METADATA only (immutable for a given file within a run);
-    * every query still computes its results from the parquet bytes. */
+  /** OBSERVED parquet schema per path, memoized (r22): without it
+    * every `load` ran a footer schema-inference job — ~30 ms ×
+    * (tables per query) × (231 queries × bench passes) of pure fixed
+    * overhead. An entry is valid only for the bytes it was inferred
+    * from: it carries the path's [[stamp]], and a path rewritten in
+    * the same JVM (new length or mtime) is inferred again. This caches
+    * SCHEMA METADATA only; every query still computes its results from
+    * the parquet bytes. */
   private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+    new java.util.concurrent.ConcurrentHashMap[String, ((Long, Long, Long), StructType)]()
+
+  /** (file count, total bytes, newest mtime) of the files at `path` —
+    * the file itself, or every file under a parquet directory; None
+    * when the path does not exist. Walks `listStatus`, not
+    * `listFiles`: the latter's located statuses read each file's
+    * permissions, which the local file system does by forking a
+    * process per file. */
+  private def stamp(spark: SparkSession, path: String): Option[(Long, Long, Long)] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    var n, bytes, mtime = 0L
+    def walk(q: org.apache.hadoop.fs.Path): Unit = fs.listStatus(q).foreach { f =>
+      if (f.isDirectory) walk(f.getPath)
+      else { n += 1; bytes += f.getLen; mtime = math.max(mtime, f.getModificationTime) }
+    }
+    try { walk(p); Some((n, bytes, mtime)) }
+    catch { case _: java.io.FileNotFoundException => None }
+  }
 
   /** The observed (pre-[[normalize]]) schema of `<dir>/<name>.parquet`,
-    * inferred once per JVM. */
+    * inferred once per JVM for each state of its files. */
   def observedSchema(spark: SparkSession, dir: String, name: String): StructType = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schemaCache.computeIfAbsent(s"$dir/$name.parquet",
-      p => spark.read.parquet(p).schema)
+    val path = s"$dir/$name.parquet"
+    stamp(spark, path) match {
+      case None => spark.read.parquet(path).schema // fails with Spark's own error
+      case Some(st) =>
+        schemaCache.compute(path, (_, cached) =>
+          if (cached != null && cached._1 == st) cached
+          else (st, spark.read.parquet(path).schema))._2
+    }
   }
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {

@@ -225,6 +225,18 @@ object TokenShards {
     * returns the manifest (shard_id, n_tokens, n_bytes, token_sum,
     * poly_mod) as a local DataFrame.
     *
+    * Parallel publish: the shard exchange has an explicit partition
+    * count, `spark.sql.shuffle.partitions`. AQE merges the partitions
+    * of a plain by-column repartition; with the default
+    * `coalescePartitions.parallelismFirst` its target partition size
+    * never drops below `coalescePartitions.minPartitionSize` (1 MB),
+    * so a chunk stream under 1 MB (q232's is ~840 KB) would run as ONE
+    * task that creates, writes and renames every shard file in turn.
+    * AQE leaves a counted repartition alone, so shards publish in
+    * parallel; hash partitioning still puts each shard in exactly one
+    * partition, so files and manifest do not depend on the count
+    * (TokenShardsSpec pins both and the multi-task write stage).
+    *
     * Chunk grain (round 21): the shard exchange previously moved one
     * row PER TOKEN through a typed-Dataset encoder (one boxed tuple a
     * token) and sorted the per-token rows; chunks carry the same
@@ -268,12 +280,15 @@ object TokenShards {
 
     // one exchange onto shard ids; in-task order is (shard, gpos0) and
     // chunks within a shard concatenate into exactly the token stream.
-    // The writer runs over the physical plan's InternalRows (toRdd) —
-    // no per-row encoder, and the chunk's int array is read in place.
+    // The explicit partition count keeps AQE from merging the write
+    // into one task (see above). The writer runs over the physical
+    // plan's InternalRows (toRdd) — no per-row encoder, and the
+    // chunk's int array is read in place.
     val sorted = chunks
       .select(col("shard_id").cast("long"), col("gpos0").cast("long"),
         col("ids"))
-      .repartition(col("shard_id"))
+      .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt,
+        col("shard_id"))
       .sortWithinPartitions(col("shard_id"), col("gpos0"))
     val manifest = sorted.queryExecution.toRdd
       .mapPartitions { it =>

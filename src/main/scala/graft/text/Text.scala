@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.functions.TextFunctions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -11,15 +12,46 @@ import org.apache.spark.sql.functions._
   * scan stays whole-stage-codegen'd end to end. Each function has a
   * deliberately SQL-expressible definition so results are oracle-
   * verifiable bit-for-bit against DuckDB.
+  *
+  * Tokenizer semantics (what [[tokens]] returns and every count below
+  * is defined over), exactly those of Spark's
+  * `split(trim(text), "\\s+", -1)` with an empty-text guard:
+  *   - `trim` strips only spaces (0x20), not tabs or newlines;
+  *   - a trimmed-empty text (empty or all spaces) has no tokens;
+  *   - otherwise the trimmed text is cut at every maximal run of regex
+  *     `\\s`, which is `[ \t\n\x0B\f\r]` only (no Unicode spaces);
+  *   - leading and trailing empty tokens are kept, so `"\tab\t"` has
+  *     the three tokens `""`, `"ab"`, `""`;
+  *   - character counts are code points, as `length`;
+  *   - a null text gives a null token array, and every count is what
+  *     `size` of that null array gives under the session's settings.
+  * The per-document counts come from one codegen'd byte pass
+  * ([[graft.functions.TextKernels.textStats]]); the ratios are Catalyst
+  * arithmetic over them, so they equal the regex/lambda forms' doubles
+  * bit for bit, and a projection of several of them evaluates the pass
+  * once per row (subexpression elimination). `TextKernelsSpec` pins the
+  * equivalence against the regex forms.
   */
 object Text {
 
-  /** Whitespace tokens of trimmed text (empty text -> empty array). */
-  def tokens(text: Column): Column =
-    when(length(trim(text)) === 0, array().cast("array<string>"))
-      .otherwise(split(trim(text), "\\s+"))
+  /** Whitespace tokens of trimmed text (empty text -> empty array),
+    * per the tokenizer semantics above. */
+  def tokens(text: Column): Column = TextFunctions.wsTokens(text)
 
-  def tokenCount(text: Column): Column = size(tokens(text))
+  /** The one-pass per-document counts; [[EnglishStop]] unless a ratio
+    * asks for another word list. */
+  private def stats(text: Column, stopwords: Seq[String] = EnglishStop): Column =
+    TextFunctions.textStats(text, stopwords)
+
+  /** `size` of a null array: -1 or null, by the session's
+    * `spark.sql.legacy.sizeOfNull` and ANSI settings. */
+  private def nullSize: Column = size(lit(null).cast("array<string>"))
+
+  /** A count of [[stats]], or `size` of the null array for a null text. */
+  private def count(text: Column, field: String, stopwords: Seq[String]): Column =
+    coalesce(stats(text, stopwords).getField(field), nullSize)
+
+  def tokenCount(text: Column): Column = count(text, "n_tokens", EnglishStop)
 
   /** BPE-ish subword-boundary token count: alnum runs and individual
     * punctuation marks each count as one token (the classic pre-BPE
@@ -28,16 +60,17 @@ object Text {
     size(regexp_extract_all(text, lit("[a-z0-9]+|[^a-z0-9\\s]"), lit(0)))
 
   /** Ratio of characters outside [a-z0-9 ] (punctuation/other). */
-  def punctRatio(text: Column): Column =
-    when(length(text) === 0, lit(0.0))
-      .otherwise(
-        (length(text) - length(regexp_replace(text, "[^a-z0-9 ]", ""))) / length(text))
+  def punctRatio(text: Column): Column = {
+    val st = stats(text)
+    when(st.getField("n_chars") === 0, lit(0.0))
+      .otherwise(st.getField("n_other") / st.getField("n_chars"))
+  }
 
   /** Fraction of tokens found in `stopwords`. */
   def stopwordRatio(text: Column, stopwords: Seq[String]): Column = {
-    val toks = tokens(text)
-    when(size(toks) === 0, lit(0.0))
-      .otherwise(size(filter(toks, t => t.isInCollection(stopwords))) / size(toks))
+    val n = count(text, "n_tokens", stopwords)
+    when(n === 0, lit(0.0))
+      .otherwise(count(text, "n_stop", stopwords) / n)
   }
 
   val EnglishStop: Seq[String] = Seq("the", "a", "of", "and", "to", "in", "is", "it")
@@ -77,9 +110,12 @@ object Text {
     }
   }
 
-  /** Canonical whitespace-normalized lowercase form. */
+  /** Canonical whitespace-normalized lowercase form:
+    * `regexp_replace(lower(trim(text)), "\\s+", " ")`, the whitespace
+    * runs collapsed by a byte loop. `lower` stays Spark's own, so
+    * non-ASCII case mapping is exactly the oracle-checked one. */
   def normalized(text: Column): Column =
-    regexp_replace(lower(trim(text)), "\\s+", " ")
+    TextFunctions.collapseWhitespace(lower(trim(text)))
 
   /** Content fingerprint: MD5 of the normalized text (exact-dup key). */
   def fingerprint(text: Column): Column = md5(normalized(text))

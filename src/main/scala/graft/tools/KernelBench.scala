@@ -34,10 +34,22 @@ object KernelBench {
       println(f"$name%-32s median ${ts.sorted.apply(1)}%6.3f s  (${ts.map(t => f"$t%.3f").mkString(", ")})")
     }
 
-    val toks = graft.text.Text.tokens(col("text"))
+    val text = col("text")
+    val toks = graft.text.Text.tokens(text)
     time("scan only")(docs.select(col("doc_id")))
     time("tokens")(docs.select(toks.as("t")))
-    time("tokenCount")(docs.select(graft.text.Text.tokenCount(col("text")).as("n")))
+    time("tokenCount")(docs.select(graft.text.Text.tokenCount(text).as("n")))
+    // the one-pass text_stats kernel alone, then q42's four columns
+    // over it (one kernel call per row after subexpression elimination)
+    time("textStats")(docs.select(graft.functions.TextFunctions
+      .textStats(text, graft.text.Text.EnglishStop).as("st")))
+    time("q42 projection")(docs.select(
+      graft.text.Text.tokenCount(text).as("n_tokens"),
+      round(graft.text.Text.punctRatio(text), 6).as("punct_ratio"),
+      round(graft.text.Text.stopwordRatio(text, graft.text.Text.EnglishStop), 6)
+        .as("stop_ratio"),
+      graft.text.Text.qualityScore(text).as("quality")))
+    time("normalized")(docs.select(graft.text.Text.normalized(text).as("n")))
     time("md5TokenIds")(docs.select(
       graft.functions.HashFunctions.md5TokenIds(toks, 4096).as("ids")))
     time("fingerprint")(docs.select(graft.text.Text.fingerprint(col("text")).as("f")))
@@ -52,7 +64,7 @@ object KernelBench {
     time("packChunks (noop)")(chunks)
     time("packChunks+exchange+sort")(chunks
       .select(col("shard_id").cast("long"), col("gpos0").cast("long"), col("ids"))
-      .repartition(col("shard_id"))
+      .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt, col("shard_id"))
       .sortWithinPartitions(col("shard_id"), col("gpos0")))
     def timeRaw(name: String)(body: => Unit): Unit = {
       body // warm

@@ -1,6 +1,7 @@
 package graft
 
 import graft.core.Materialize
+import org.apache.spark.CheckpointDirAccess
 import org.apache.spark.sql.functions._
 
 /** Pins the cluster-safety switch of [[graft.core.Materialize]] (r22):
@@ -41,14 +42,18 @@ class MaterializeSpec extends SparkSuite {
   }
 
   test("reliable mode without a dir stays correct (falls back local)") {
-    // fresh session state: reliable asked for, no dir anywhere -> the
-    // call must still materialize correctly rather than throw
+    // reliable asked for, no dir anywhere -> the call must still
+    // materialize correctly rather than throw. The shared context may
+    // already carry a dir (the test above sets one), so it is cleared
+    // for the body and the precondition asserted, never assumed.
     spark.conf.set("spark.graft.checkpoint.reliable", "true")
-    try {
-      if (spark.sparkContext.getCheckpointDir.isEmpty) {
-        val out = Materialize.stable(frame())
-        assert(out.count() === 100L)
-      }
+    spark.conf.unset("spark.graft.checkpoint.dir")
+    try CheckpointDirAccess.withoutCheckpointDir(spark.sparkContext) {
+      assert(spark.sparkContext.getCheckpointDir.isEmpty)
+      val out = Materialize.stable(frame())
+      assert(out.collect().map(_.getLong(0)).sorted.toSeq === (0L until 100L))
+      // the fallback is a local checkpoint: no dir was set on the way
+      assert(spark.sparkContext.getCheckpointDir.isEmpty)
     } finally spark.conf.unset("spark.graft.checkpoint.reliable")
   }
 

@@ -116,6 +116,18 @@ class TablesSchemaSpec extends SparkSuite {
     assert(out.count() == 2)
   }
 
+  test("load sees a path rewritten with a new schema in the same JVM") {
+    val dir = Files.createTempDirectory("graft-rewrite").toString
+    Seq((1, 2L)).toDF("a", "b").write.parquet(s"$dir/scratch.parquet")
+    assert(Tables.load(spark, dir, "scratch").columns.toSeq === Seq("a", "b"))
+    Seq(("x", 3.0, true)).toDF("c", "d", "e")
+      .write.mode("overwrite").parquet(s"$dir/scratch.parquet")
+    val reread = Tables.load(spark, dir, "scratch")
+    assert(reread.schema.map(f => f.name -> f.dataType) ===
+      Seq("c" -> StringType, "d" -> DoubleType, "e" -> BooleanType))
+    assert(reread.as[(String, Double, Boolean)].collect().toSeq === Seq(("x", 3.0, true)))
+  }
+
   test("unknown drift and missing columns fail loudly") {
     val bad = Seq((1L, 9, "en", "web", 2L))
       .toDF("doc_id", "text", "lang", "source", "n_chars") // text as int

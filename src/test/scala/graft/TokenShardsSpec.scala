@@ -76,29 +76,41 @@ class TokenShardsSpec extends SparkSuite {
     assert(fromChunks.toSeq === perToken.toSeq)
   }
 
-  test("write emits int32-LE shard files the kernel and manifest agree on") {
-    val df = docs.toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("tokshard").toString
-    val packed = TokenShards.packChunks(df, "doc_id", "text",
-      vocab = Vocab, seqLen = 8, seqsPerShard = 2, nBuckets = 3)
-    val manifestFull = TokenShards.write(packed, s"$dir/shards")
+  /** Checks a written export against the reference stream: shard ids
+    * dense from 0, byte lengths 4·n, and every shard's bytes decoding
+    * to exactly its slice of the stream. Returns the full manifest. */
+  private def assertMatchesReference(dir: String, manifestDf: org.apache.spark.sql.DataFrame,
+                                     want: Seq[Int], seqLen: Int,
+                                     seqsPerShard: Int): Array[(Long, Long, Long, Long, Long)] = {
+    val manifestFull = manifestDf
       .as[(Long, Long, Long, Long, Long)].collect().sortBy(_._1)
     val manifest = manifestFull.map(m => (m._1, m._2, m._3))
-    val want = refStream(docs, seqLen = 8)
-    val nShards = (want.size / 8 + 1) / 2 // ceil(seqs / seqsPerShard)
+    val seqs = want.size / seqLen
+    val nShards = (seqs + seqsPerShard - 1) / seqsPerShard
+    val perShard = seqLen * seqsPerShard
     assert(manifest.map(_._1).toSeq === (0L until nShards.toLong))
     assert(manifest.map(_._2).sum === want.size.toLong)
     manifest.foreach { case (_, n, bytes) => assert(bytes === n * 4) }
-    // bytes on disk decode to exactly the reference stream slice
     manifest.foreach { case (sh, n, _) =>
-      val f = java.nio.file.Paths.get(s"$dir/shards", f"shard-$sh%05d.bin")
+      val f = java.nio.file.Paths.get(dir, f"shard-$sh%05d.bin")
       val bytes = java.nio.file.Files.readAllBytes(f)
       assert(bytes.length === n * 4)
       val bb = java.nio.ByteBuffer.wrap(bytes)
         .order(java.nio.ByteOrder.LITTLE_ENDIAN)
       val decoded = (0 until n.toInt).map(_ => bb.getInt())
-      assert(decoded === want.slice(sh.toInt * 16, sh.toInt * 16 + n.toInt))
+      assert(decoded === want.slice(sh.toInt * perShard, sh.toInt * perShard + n.toInt))
     }
+    manifestFull
+  }
+
+  test("write emits int32-LE shard files the kernel and manifest agree on") {
+    val df = docs.toDF("doc_id", "text")
+    val dir = java.nio.file.Files.createTempDirectory("tokshard").toString
+    val packed = TokenShards.packChunks(df, "doc_id", "text",
+      vocab = Vocab, seqLen = 8, seqsPerShard = 2, nBuckets = 3)
+    val want = refStream(docs, seqLen = 8)
+    val manifestFull = assertMatchesReference(s"$dir/shards",
+      TokenShards.write(packed, s"$dir/shards"), want, seqLen = 8, seqsPerShard = 2)
     // readStats (the codegen kernel over binaryFile) agrees with a
     // direct recomputation from the reference stream
     val stats = TokenShards.readStats(spark, s"$dir/shards")
@@ -115,6 +127,39 @@ class TokenShardsSpec extends SparkSuite {
     // kernel's (same arithmetic folded into the writer loop)
     assert(manifestFull.map(m => (m._1, m._2, m._4, m._5)).toSeq ===
       stats.toSeq)
+  }
+
+  test("write publishes shards from several tasks, bytes unchanged") {
+    // a stream far under AQE's 1 MB minimum partition size: a by-column
+    // repartition would be coalesced into one writer task
+    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    assume(parts >= 2)
+    val df = docs.toDF("doc_id", "text")
+    val packed = TokenShards.packChunks(df, "doc_id", "text",
+      vocab = Vocab, seqLen = 8, seqsPerShard = 1, nBuckets = 3)
+    val want = refStream(docs, seqLen = 8)
+    assert(want.size / 8 >= 2, "fixture must make at least two shards")
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.scheduler.SparkListenerJobStart]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add(e)
+    }
+    val dir = java.nio.file.Files.createTempDirectory("tokshard5").toString
+    spark.sparkContext.addSparkListener(listener)
+    val manifest =
+      try TokenShards.write(packed, s"$dir/shards")
+      finally {
+        org.apache.spark.sql.GraftBridge.waitListenerBusEmpty(spark.sparkContext)
+        spark.sparkContext.removeSparkListener(listener)
+      }
+    // the writer's job is the last one write() submits; its result
+    // stage (the highest stage id of the job) is the shard-write stage
+    val writeStage = jobs.toArray(Array.empty[org.apache.spark.scheduler.SparkListenerJobStart])
+      .last.stageInfos.maxBy(_.stageId)
+    assert(writeStage.numTasks === parts,
+      s"write stage ran ${writeStage.numTasks} task(s): ${writeStage.name}")
+    assertMatchesReference(s"$dir/shards", manifest, want, seqLen = 8, seqsPerShard = 1)
   }
 
   test("polynomial checksum is order-sensitive; plain sum is not") {
