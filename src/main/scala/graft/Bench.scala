@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Benchmark main.
   *
@@ -22,7 +24,15 @@ import org.apache.spark.sql.SparkSession
   *    that succeeded; a query with none has a null median.
   *    Run-scoped by core count since r22 so the driver's 32-core and
   *    8-core passes leave distinct artifacts instead of clobbering
-  *    one file (the r21 PERF per-query gap).
+  *    one file (the r21 PERF per-query gap). An unfiltered run also
+  *    writes the same document as `bench_full.json` next to it, the
+  *    fixed path per-query comparators read (the last run wins).
+  *    Per query it also records `codegen_compiles` and
+  *    `codegen_compile_s`: the classes Janino compiled, and the time it
+  *    took, over all of that query's timed invocations (interleaved
+  *    and isolated), with suite totals. A warm suite whose generated
+  *    classes fit Spark's codegen cache compiles ~0 per pass, so a
+  *    cache thrash shows here without a profiler.
   *
   * Timing includes plan + execution (count() action); a warmup pass
   * on three representative queries amortizes JVM/codegen startup.
@@ -60,7 +70,12 @@ object Bench {
     // counted per query and left out of that query's medians (a fast
     // failure would otherwise pass for a fast query).
     val failures = scala.collection.mutable.Map[String, Int]().withDefaultValue(0)
+    // JVM-wide codegen counters, read outside the timed interval
+    val compiles = scala.collection.mutable.Map[String, Long]().withDefaultValue(0L)
+    val compileNs = scala.collection.mutable.Map[String, Long]().withDefaultValue(0L)
     def timeOnce(name: String): Option[Double] = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val n0 = CodeGenerator.compileTime
       val t0 = System.nanoTime()
       try {
         SparkEntry.queries(name)(spark, sfDir).count()
@@ -70,6 +85,9 @@ object Bench {
           failures(name) += 1
           System.err.println(s"bench: $name failed: $e")
           None
+      } finally {
+        compiles(name) += CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+        compileNs(name) += CodeGenerator.compileTime - n0
       }
     }
     def median(xs: Seq[Double]): Option[Double] =
@@ -169,6 +187,10 @@ object Bench {
         .mkString(",\n")
       val failLines = queries.map { case (n, _) => s"""    "$n": ${failures(n)}""" }
         .mkString(",\n")
+      val compileLines = queries.map { case (n, _) => s"""    "$n": ${compiles(n)}""" }
+        .mkString(",\n")
+      val compileSecLines = queries.map { case (n, _) =>
+        f"""    "$n": ${compileNs(n) / 1e9}%.3f""" }.mkString(",\n")
       f"""{
          |  "metric": "bench_full",
          |  "sf": "$sfLabel",
@@ -186,12 +208,25 @@ object Bench {
          |  "n_failed": $nFailed,
          |  "failures": {
          |$failLines
+         |  },
+         |  "codegen_compiles_total": ${compiles.values.sum},
+         |  "codegen_compile_s_total": ${compileNs.values.sum / 1e9}%.3f,
+         |  "codegen_compiles": {
+         |$compileLines
+         |  },
+         |  "codegen_compile_s": {
+         |$compileSecLines
          |  }
          |}""".stripMargin
     }
-    Option(new java.io.File(fullPath).getParentFile).foreach(_.mkdirs())
-    val pw = new java.io.PrintWriter(fullPath, "UTF-8")
-    try pw.write(fullJson + "\n") finally pw.close()
+    val fullFile = new java.io.File(fullPath).getAbsoluteFile
+    val outFiles = fullFile +:
+      (if (filtered) Nil else Seq(new java.io.File(fullFile.getParentFile, "bench_full.json")))
+    outFiles.distinct.foreach { f =>
+      f.getParentFile.mkdirs()
+      val pw = new java.io.PrintWriter(f, "UTF-8")
+      try pw.write(fullJson + "\n") finally pw.close()
+    }
 
     // compact stdout line: O(1) in query count (~420 chars at n=196);
     // worst10 maps qNNN -> [interleaved, isolated]. "total_sec" is

@@ -2,8 +2,10 @@ package graft
 
 import graft.functions.{CosineSimilarity, HyperplaneLsh, MinHashSignature, SimHash64, WinnowFingerprint}
 import graft.geo.{CrsTransform, PointInRing, RingArea, WkbToRing}
+import org.apache.spark.SparkEnv
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.internal.StaticSQLConf
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 
 /** SQL surface for the engine's custom expressions: registered through
@@ -12,9 +14,16 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
   * `spark.sql("SELECT cosine_similarity(a, b) ...")` works exactly like
   * the Column API. All functions plan to the same native expressions —
   * no UDF wrapping, full codegen where the expression provides it.
+  *
+  * Installed through the config, it also sizes Spark's compiled-class
+  * cache to the engine's working set (see `CodegenCacheMaxEntries`).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
+    // null on the `withExtensions` path, which runs before any context
+    Option(SparkEnv.get).foreach(_.conf.setIfMissing(
+      StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key,
+      GraftExtensions.CodegenCacheMaxEntries.toString))
     GraftExtensions.builders.foreach { case (name, builder) =>
       e.injectFunction((new FunctionIdentifier(name),
         new ExpressionInfo("graft", name), builder))
@@ -25,6 +34,26 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
+
+  /** Entries kept in `CodeGenerator`'s compiled-class cache
+    * (`spark.sql.codegen.cache.maxEntries`, Spark's default 100). One
+    * corpus_release session generates about 210 distinct classes, an
+    * mhq_etl session about 91 and one pass of all 231 queries about
+    * 2,400. The cache evicts least-recently-used classes, so a pass over
+    * more classes than it holds recompiles nearly all of them on every
+    * pass (at 100 for corpus_release, at 1024 for the full suite). An
+    * entry holds about 5-8 KB of source and 2-3 KB of bytecode; the cap
+    * bounds what is retained, nothing is preallocated.
+    *
+    * `apply` sets it on the SparkContext's conf with `setIfMissing`, so
+    * it flows into every session's conf. Two limits:
+    *  - a value the user set (spark-submit --conf, builder config) wins;
+    *  - Spark sizes the cache once per JVM, when `CodeGenerator` is first
+    *    initialized, so a JVM that ran codegen before its first session
+    *    with these extensions keeps Spark's 100.
+    * `withExtensions` calls `apply` before any context exists; that path
+    * leaves the conf untouched. */
+  val CodegenCacheMaxEntries = 4096
 
   private def intArg(e: Expression, what: String): Int = e match {
     case Literal(v: Int, _) => v

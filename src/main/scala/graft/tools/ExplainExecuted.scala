@@ -15,6 +15,7 @@ object ExplainExecuted {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.drop(1).toSeq else Seq("q01_pricing_summary")
     val spark = SparkSession.builder().master("local[32]")
+      .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")

@@ -1,10 +1,13 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.internal.StaticSQLConf
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM-wide session; suites run
-  * sequentially under sbt's single test JVM). */
+  * sequentially under sbt's single test JVM). It is the first session in
+  * the forked test JVM, so it sizes the codegen class cache the way the
+  * shipped `GraftExtensions` does. */
 object SparkTestBase {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -14,6 +17,8 @@ object SparkTestBase {
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
     .config("spark.ui.enabled", "false")
+    .config(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key,
+      GraftExtensions.CodegenCacheMaxEntries.toLong)
     .getOrCreate()
 }
 
