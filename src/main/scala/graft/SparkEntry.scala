@@ -104,6 +104,16 @@ object SparkEntry {
   private val extDisc: Column =
     col("l_extendedprice") * (lit(1) - col("l_discount"))
 
+  /** Query name → the published reference-snapshot file it opens. These
+    * queries read that file as well as (or instead of) the sf dir, so
+    * they can be planned only where the snapshot is present; the
+    * snapshot is not part of the repository. */
+  val ReferenceInputs: Map[String, String] = Map(
+    "q158_roi_overlay" -> ("/root/reference/processed/3260_steekproefkader/" +
+      "steekproefkader_3260_v1_7_strata.shp"),
+    "q163_gpkg_design" -> ("/root/reference/processed/design_watersurfaces/" +
+      "mhq_standingwater_cycle2_2024-04-17.gpkg"))
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("q01_pricing_summary")(spark, "/root/testdata/sf0.001")
@@ -1565,8 +1575,7 @@ object SparkEntry {
     // reader bug (coordinate order, record skipping, dbf decode) is a
     // visible mismatch, not a replayed one. ----
     "q158_roi_overlay" -> ((s, dir) => {
-      val base = "/root/reference/processed/3260_steekproefkader/" +
-        "steekproefkader_3260_v1_7_strata"
+      val base = ReferenceInputs("q158_roi_overlay").stripSuffix(".shp")
       val roi = graft.geo.Shapefile.read(s, base)
         .select(col("objectid_1").as("segment_id"), col("sbz"),
           col("shape_leng"),
@@ -2717,10 +2726,9 @@ object SparkEntry {
     // read by Python's sqlite3 with GDAL's own blob-header envelopes —
     // an independent parser AND an independent envelope source. ----
     "q163_gpkg_design" -> ((s, dir) => {
-      val path = "/root/reference/processed/design_watersurfaces/" +
-        "mhq_standingwater_cycle2_2024-04-17.gpkg"
       val w = graft.geo.GeoPackage
-        .read(s, path, "mhq_standingwater_cycle2_2024-04-17")
+        .read(s, ReferenceInputs("q163_gpkg_design"),
+          "mhq_standingwater_cycle2_2024-04-17")
         .select(col("grts_ranking"), col("area_class"), col("sac"),
           col("type_all"), col("biotic_measurement"),
           graft.geo.WkbFunctions.wkbEnvelope(col("geom")).as("env"))

@@ -38,15 +38,20 @@ class CensusShapesSpec extends SparkSuite {
       .option("sep", "\t").option("header", "true").option("nullValue", "NA")
       .csv(path)
 
+  /** The published files [[pooledPlots]] reads. */
+  private val pooledPlotFiles = Seq(
+    s"$base/forests/result/lsvi_plot_fs.tsv",
+    s"$base/moneos/result/lsvi_globaal_moneos.tsv")
+
   /** Pooled forest + moneos(91E0_sf) plot visits with a constant fake
     * value (only the analysis set is validated — see class doc). */
   private lazy val pooledPlots: DataFrame = {
-    val fs = readTsv(s"$base/forests/result/lsvi_plot_fs.tsv").select(
+    val fs = readTsv(pooledPlotFiles(0)).select(
       col("id"),
       year(date_add(to_date(lit("1970-01-01")),
         col("date").cast("int"))).as("date"),
       col("point_code"), col("habitattype"), col("habitatsubtype"))
-    val mo = readTsv(s"$base/moneos/result/lsvi_globaal_moneos.tsv")
+    val mo = readTsv(pooledPlotFiles(1))
       .where(col("type_analysis") === "91E0_sf")
       .select(col("id"),
         year(to_date(substring_index(col("id"), "_", -1))).as("date"),
@@ -60,6 +65,8 @@ class CensusShapesSpec extends SparkSuite {
     concat_ws("; ", sort_array(split(col("habitatsubtype"), "; ")))
 
   test("status_dikdoodhout: the analysis set replays on all published rows") {
+    assumeFiles(pooledPlotFiles :+
+      s"$base/forests/result/status_dikdoodhout.tsv": _*)
     val got = LsviStatus.statusContinuous(pooledPlots,
       "hoeveelheid dik dood hout", "aantal exemplaren dik dood hout per ha")
       .withColumn("sub_set", subSet).drop("habitatsubtype")
@@ -78,6 +85,8 @@ class CensusShapesSpec extends SparkSuite {
   }
 
   test("trend_dikdoodhout: paired set and the interval-NA rule replay") {
+    assumeFiles(pooledPlotFiles :+
+      s"$base/forests/result/trend_dikdoodhout.tsv": _*)
     val got = LsviStatus.trendContinuous(pooledPlots,
       "hoeveelheid dik dood hout", "aantal exemplaren dik dood hout per ha")
       .withColumn("sub_set", subSet).drop("habitatsubtype")
@@ -97,6 +106,7 @@ class CensusShapesSpec extends SparkSuite {
   }
 
   test("weighted continuous overloads reduce exactly to unweighted at unit weights") {
+    assumeFiles(pooledPlotFiles: _*)
     // Kish n_eff = n at w = 1, and the weighted interval algebra
     // collapses to z·sd/√n — the same closed form the unweighted shape
     // computes through its fixed-point path, so the two overloads must
@@ -154,6 +164,11 @@ class CensusShapesSpec extends SparkSuite {
   }
 
   test("status 2110/5130: census shares, bounds and verdicts round-trip") {
+    assumeFiles(Seq("coastal_dunes/result/status_habitat_2110.tsv",
+      "coastal_dunes/result/status_indicatoren_2110.tsv",
+      "heath_inland_dunes/result/status_habitat_5130.tsv",
+      "heath_inland_dunes/result/status_indicatoren_5130.tsv")
+      .map(f => s"$base/$f"): _*)
     // 2110 publishes 4+-digit shares; 5130 rounds areas to 2 decimals,
     // so recomputed shares can move in the second decimal
     checkCensus("coastal_dunes/result/status_habitat_2110.tsv", Nil, 1e-3)
@@ -174,6 +189,9 @@ class CensusShapesSpec extends SparkSuite {
   }
 
   test("trend 2110: difference, factor-index klasse and year span replay") {
+    assumeFiles(Seq("trend_habitat_2110.tsv", "status_habitat_2110.tsv",
+      "trend_indicatoren_2110.tsv", "status_indicatoren_2110.tsv")
+      .map(f => s"$base/coastal_dunes/result/$f"): _*)
     Seq(
       ("coastal_dunes/result/trend_habitat_2110.tsv",
         "coastal_dunes/result/status_habitat_2110.tsv", Seq.empty[String]),

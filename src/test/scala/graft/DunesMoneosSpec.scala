@@ -14,10 +14,16 @@ import org.apache.spark.sql.functions._
   */
 class DunesMoneosSpec extends SparkSuite {
 
+  private def pubPath(dir: String, name: String): String =
+    s"/root/reference/processed/lsvi_mhq/$dir/result/$name"
+
   private def readTsv(dir: String, name: String): DataFrame =
     spark.read
       .option("sep", "\t").option("header", "true").option("nullValue", "NA")
-      .csv(s"/root/reference/processed/lsvi_mhq/$dir/result/$name")
+      .csv(pubPath(dir, name))
+
+  private def assumePublished(dir: String, names: String*): Unit =
+    assumeFiles(names.map(pubPath(dir, _)): _*)
 
   private val numRe = "^-?[0-9]+(\\.[0-9]+)?$"
 
@@ -126,6 +132,7 @@ class DunesMoneosSpec extends SparkSuite {
   private lazy val cdRules = Versie3Dunes.rulesDf(spark)
 
   test("dunes: rule table matches the published tuples") {
+    assumePublished("coastal_dunes", "lsvi_detail_cd.tsv")
     import spark.implicits._
     val published = cdDetail
       .select(col("type_analysis"), col("criterium"), col("indicator"), col("belang"),
@@ -137,15 +144,20 @@ class DunesMoneosSpec extends SparkSuite {
   }
 
   test("dunes: detail statuses exact; scores exact bar the 2 rijshout scale rows") {
+    assumePublished("coastal_dunes", "lsvi_detail_cd.tsv")
     checkDetail(cdDetail, cdRules, maxVsBad = 2L)
   }
 
   test("dunes: indicator rows all match (per-type sleutelsoorten OR/AND)") {
+    assumePublished("coastal_dunes", "lsvi_detail_cd.tsv",
+      "lsvi_indicator_cd.tsv")
     checkIndicator(cdDetail, readTsv("coastal_dunes", "lsvi_indicator_cd.tsv"),
       cdRules, noAgg = Set.empty, maxVsBad = 0L)
   }
 
   test("dunes: criterium exact; globaal exact bar 20 anomalous index_mean_crit") {
+    assumePublished("coastal_dunes", "lsvi_indicator_cd.tsv",
+      "lsvi_criterium_cd.tsv", "lsvi_globaal_cd.tsv")
     checkAggLevels(readTsv("coastal_dunes", "lsvi_indicator_cd.tsv"),
       readTsv("coastal_dunes", "lsvi_criterium_cd.tsv"),
       readTsv("coastal_dunes", "lsvi_globaal_cd.tsv"), maxImcBad = 20L)
@@ -157,6 +169,7 @@ class DunesMoneosSpec extends SparkSuite {
   private lazy val moRules = Versie3Moneos.rulesDf(spark)
 
   test("moneos: rule table matches the published tuples (91E0_sf shared with forests)") {
+    assumePublished("moneos", "lsvi_detail_moneos.tsv")
     import spark.implicits._
     val published = moDetail
       .select(col("type_analysis"), col("criterium"), col("indicator"), col("belang"),
@@ -168,10 +181,13 @@ class DunesMoneosSpec extends SparkSuite {
   }
 
   test("moneos: detail statuses and numeric scores exact") {
+    assumePublished("moneos", "lsvi_detail_moneos.tsv")
     checkDetail(moDetail, moRules, maxVsBad = 0L)
   }
 
   test("moneos: indicator statuses exact; scores gated on the pooled-count rows") {
+    assumePublished("moneos", "lsvi_detail_moneos.tsv",
+      "lsvi_indicator_moneos.tsv")
     // 57 published 1330_da sleutelsoorten scores imply a pooled species
     // count absent from the detail table (Versie3Moneos scaladoc)
     checkIndicator(moDetail, readTsv("moneos", "lsvi_indicator_moneos.tsv"),
@@ -179,6 +195,8 @@ class DunesMoneosSpec extends SparkSuite {
   }
 
   test("moneos: criterium and globaal exact (forest exclusions applied)") {
+    assumePublished("moneos", "lsvi_indicator_moneos.tsv",
+      "lsvi_criterium_moneos.tsv", "lsvi_globaal_moneos.tsv")
     checkAggLevels(readTsv("moneos", "lsvi_indicator_moneos.tsv"),
       readTsv("moneos", "lsvi_criterium_moneos.tsv"),
       readTsv("moneos", "lsvi_globaal_moneos.tsv"), maxImcBad = 0L)

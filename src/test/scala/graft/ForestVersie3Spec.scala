@@ -22,6 +22,9 @@ class ForestVersie3Spec extends SparkSuite {
       .option("sep", "\t").option("header", "true").option("nullValue", "NA")
       .csv(s"$refDir/$name")
 
+  private def assumePublished(names: String*): Unit =
+    assumeFiles(names.map(n => s"$refDir/$n"): _*)
+
   private lazy val pubDetail = readTsv("lsvi_detail_fs.tsv").cache()
 
   /** Published measurements fed back as engine input: the continuous
@@ -45,6 +48,7 @@ class ForestVersie3Spec extends SparkSuite {
     LsviForest.detail(plots, measurements, Versie3Forests.rulesDf(spark)).cache()
 
   test("rule table matches the published rule tuples exactly") {
+    assumePublished("lsvi_detail_fs.tsv")
     val published = pubDetail
       .select(col("type_analysis"), col("criterium"), col("indicator"), col("belang"),
         col("voorwaarde"), col("referentiewaarde"),
@@ -56,6 +60,7 @@ class ForestVersie3Spec extends SparkSuite {
   }
 
   test("detail: status_voorwaarde matches on every published row") {
+    assumePublished("lsvi_detail_fs.tsv")
     val joined = myDetail.alias("m").join(
       pubDetail.alias("p"),
       Seq("id", "type_analysis", "voorwaarde"))
@@ -67,6 +72,7 @@ class ForestVersie3Spec extends SparkSuite {
   }
 
   test("detail: verschilscore exact at the published 4-decimal half-ULP (numeric rows)") {
+    assumePublished("lsvi_detail_fs.tsv")
     val joined = myDetail.alias("m").join(
         pubDetail.alias("p"), Seq("id", "type_analysis", "voorwaarde"))
       .where(col("p.waarde_numeric").isNotNull) // categorical scores need unpublished covers
@@ -98,6 +104,7 @@ class ForestVersie3Spec extends SparkSuite {
   private lazy val myIndicator = LsviForest.indicator(pubDetailAsEngine).cache()
 
   test("indicator: status + verschilscore match all published rows") {
+    assumePublished("lsvi_detail_fs.tsv", "lsvi_indicator_fs.tsv")
     val pub = readTsv("lsvi_indicator_fs.tsv")
     val joined = myIndicator.alias("m").join(pub.alias("p"),
       Seq("id", "type_analysis", "criterium", "indicator", "belang"))
@@ -129,12 +136,14 @@ class ForestVersie3Spec extends SparkSuite {
   }
 
   test("criterium: every published row matches") {
+    assumePublished("lsvi_detail_fs.tsv", "lsvi_criterium_fs.tsv")
     checkAgg(LsviForest.criterium(myIndicator), readTsv("lsvi_criterium_fs.tsv"),
       Seq("id", "type_analysis", "criterium"), "status_criterium",
       Seq("aandeel_gunstig", "index_mean_ind", "doelbereik_mean_ind"))
   }
 
   test("plot report: published lsvi_plot_fs rows are globaal + metadata (q108 shape)") {
+    assumePublished("lsvi_plot_fs.tsv", "lsvi_globaal_fs.tsv")
     // every published plot-report row must equal its globaal row with
     // the gunstig/ongunstig label — the derivation q108 implements
     val plot = readTsv("lsvi_plot_fs.tsv")
@@ -155,6 +164,7 @@ class ForestVersie3Spec extends SparkSuite {
   }
 
   test("globaal: every published row matches") {
+    assumePublished("lsvi_detail_fs.tsv", "lsvi_globaal_fs.tsv")
     checkAgg(LsviForest.globaal(myIndicator), readTsv("lsvi_globaal_fs.tsv"),
       Seq("id", "type_analysis"), "status",
       Seq("aandeel_gunstig", "index_mean_ind", "index_mean_crit", "doelbereik_mean_ind"))

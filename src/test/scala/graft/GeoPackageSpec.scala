@@ -68,6 +68,7 @@ class GeoPackageSpec extends SparkSuite {
     // MULTIPOLYGON WKB in EPSG:31370
     val real = "/root/reference/processed/design_watersurfaces/" +
       "mhq_standingwater_cycle2_2024-04-17.gpkg"
+    assumeFiles(real)
     val name = "mhq_standingwater_cycle2_2024-04-17"
     assert(GeoPackage.tables(real).map(_._1) === Seq(name))
     val df = GeoPackage.read(spark, real, name)

@@ -25,6 +25,9 @@ class HeathVersie3Spec extends SparkSuite {
       .option("sep", "\t").option("header", "true").option("nullValue", "NA")
       .csv(s"$refDir/$name")
 
+  private def assumePublished(names: String*): Unit =
+    assumeFiles(names.map(n => s"$refDir/$n"): _*)
+
   private lazy val pubDetail = readTsv("lsvi_detail_hs_id.tsv").cache()
 
   private lazy val measurements =
@@ -46,6 +49,7 @@ class HeathVersie3Spec extends SparkSuite {
     LsviForest.detail(plots, measurements, Versie3Heath.rulesDf(spark)).cache()
 
   test("rule table matches the published rule tuples (dynamic ref collapsed)") {
+    assumePublished("lsvi_detail_hs_id.tsv")
     val published = pubDetail
       .select(col("type_analysis"), col("criterium"), col("indicator"), col("belang"),
         col("voorwaarde"),
@@ -59,6 +63,7 @@ class HeathVersie3Spec extends SparkSuite {
   }
 
   test("detail: status and verschilscore match every published row") {
+    assumePublished("lsvi_detail_hs_id.tsv")
     // the published id repeats per type_analysis (2330 plots score as
     // both subtypes), so the join keys include the type
     val joined = myDetail.alias("m").join(pubDetail.alias("p"),
@@ -82,6 +87,7 @@ class HeathVersie3Spec extends SparkSuite {
       lit("and").as("role"), lit(true).as("aggregate"))).cache()
 
   test("indicator: status + verschilscore match all published rows") {
+    assumePublished("lsvi_detail_hs_id.tsv", "lsvi_indicator_hs_id.tsv")
     val pub = readTsv("lsvi_indicator_hs_id.tsv")
     val joined = myIndicator.alias("m").join(pub.alias("p"),
       Seq("id", "type_analysis", "criterium", "indicator", "belang"))
@@ -95,6 +101,7 @@ class HeathVersie3Spec extends SparkSuite {
   }
 
   test("criterium: every published row matches") {
+    assumePublished("lsvi_detail_hs_id.tsv", "lsvi_criterium_hs_id.tsv")
     val mine = LsviForest.criterium(myIndicator)
     val pub = readTsv("lsvi_criterium_hs_id.tsv")
     val joined = mine.alias("m").join(pub.alias("p"),
@@ -111,6 +118,7 @@ class HeathVersie3Spec extends SparkSuite {
   }
 
   test("globaal: all columns exact; index_mean_crit >= 97% (2330 anomaly)") {
+    assumePublished("lsvi_detail_hs_id.tsv", "lsvi_globaal_hs_id.tsv")
     val mine = LsviForest.globaal(myIndicator)
     val pub = readTsv("lsvi_globaal_hs_id.tsv")
     val joined = mine.alias("m").join(pub.alias("p"), Seq("id", "type_analysis")).cache()

@@ -25,6 +25,16 @@ class LsviReportJobSpec extends SparkSuite {
   import spark.implicits._
 
   private val refDir = "/root/reference/processed/lsvi_mhq/forests/result"
+  private val moneosGlobaal =
+    "/root/reference/processed/lsvi_mhq/moneos/result/lsvi_globaal_moneos.tsv"
+
+  /** The published files the forest chain input ([[plots]],
+    * [[measurements]], [[meta]]) is read from. */
+  private val chainInputs =
+    Seq(s"$refDir/lsvi_detail_fs.tsv", s"$refDir/lsvi_plot_fs.tsv")
+
+  /** The published files the [[written]] forests run reads. */
+  private val writtenInputs = chainInputs :+ moneosGlobaal
 
   private def readTsv(name: String): DataFrame =
     spark.read
@@ -66,7 +76,7 @@ class LsviReportJobSpec extends SparkSuite {
       col("point_code"), col("habitattype"), col("habitatsubtype"))
     val mo = spark.read
       .option("sep", "\t").option("header", "true").option("nullValue", "NA")
-      .csv("/root/reference/processed/lsvi_mhq/moneos/result/lsvi_globaal_moneos.tsv")
+      .csv(moneosGlobaal)
       .where(col("type_analysis") === "91E0_sf")
       .select(col("id"),
         year(to_date(substring_index(col("id"), "_", -1))).as("date"),
@@ -92,6 +102,7 @@ class LsviReportJobSpec extends SparkSuite {
       "aantal exemplaren dik dood hout per ha")))
 
   test("the written file set matches the published forests directory exactly") {
+    assumeFiles(writtenInputs :+ refDir: _*)
     written.size // force the run
     val mine = new java.io.File(outDir).listFiles().map(_.getName).toSet
     // the FULL published directory — the `_fs` family plus the
@@ -103,6 +114,7 @@ class LsviReportJobSpec extends SparkSuite {
   }
 
   test("every sidecar carries the published sort keys (column-filtered)") {
+    assumeFiles(writtenInputs: _*)
     written.foreach { case (name, df) =>
       val base = if (name.endsWith("_dikdoodhout")) name else s"${name}_fs"
       val yml = java.nio.file.Files.readString(
@@ -117,6 +129,8 @@ class LsviReportJobSpec extends SparkSuite {
   }
 
   test("the written chain tables replay the published rows") {
+    assumeFiles(writtenInputs :+ s"$refDir/lsvi_globaal_fs.tsv": _*)
+    written.size // force the run
     // lsvi_globaal: row-for-row verdict equality with the published table
     val mineG = spark.read
       .option("sep", "\t").option("header", "true").option("nullValue", "NA")
@@ -143,11 +157,14 @@ class LsviReportJobSpec extends SparkSuite {
   }
 
   test("a second group (heath/inland dunes) runs end-to-end to the FULL published directory incl. the 5130 census sides") {
+    val hDir = "/root/reference/processed/lsvi_mhq/heath_inland_dunes/result"
+    assumeFiles(Seq("lsvi_detail_hs_id.tsv", "lsvi_plot_hs_id.tsv",
+      "status_habitat_5130.tsv", "status_indicatoren_5130.tsv")
+      .map(f => s"$hDir/$f"): _*)
     // same composition, different rule data and suffix — proves the
     // job is group-generic, not forests-shaped; the fully-mapped 5130
     // juniper scrub publishes as habitattype-suffixed census side
     // tables beside the _hs_id family (no 5130 trend tables exist)
-    val hDir = "/root/reference/processed/lsvi_mhq/heath_inland_dunes/result"
     def readH(name: String): DataFrame = spark.read
       .option("sep", "\t").option("header", "true").option("nullValue", "NA")
       .csv(s"$hDir/$name")
@@ -193,6 +210,10 @@ class LsviReportJobSpec extends SparkSuite {
 
   test("the coastal-dunes group publishes the full _cd directory incl. the 2110 census status AND trend sides") {
     val cdDir = "/root/reference/processed/lsvi_mhq/coastal_dunes/result"
+    assumeFiles(Seq("lsvi_detail_cd.tsv", "lsvi_plot_cd.tsv",
+      "status_habitat_2110.tsv", "status_indicatoren_2110.tsv",
+      "trend_habitat_2110.tsv", "trend_indicatoren_2110.tsv")
+      .map(f => s"$cdDir/$f"): _*)
     def readCd(name: String): DataFrame = spark.read
       .option("sep", "\t").option("header", "true").option("nullValue", "NA")
       .csv(s"$cdDir/$name")
@@ -260,6 +281,7 @@ class LsviReportJobSpec extends SparkSuite {
 
   test("the grassland/marsh group publishes the full _gr_bm directory (the default table set)") {
     val gDir = "/root/reference/processed/lsvi_mhq/grassland_marsh/result"
+    assumeFiles(s"$gDir/lsvi_detail_gr_bm.tsv", s"$gDir/lsvi_plot_gr_bm.tsv")
     def readG(name: String): DataFrame = spark.read
       .option("sep", "\t").option("header", "true").option("nullValue", "NA")
       .csv(s"$gDir/$name")
@@ -297,6 +319,7 @@ class LsviReportJobSpec extends SparkSuite {
     // the estuary scheme publishes just the four chain tables
     // (`processed/lsvi_mhq/moneos/result/`): tables= drives the subset
     val mDir = "/root/reference/processed/lsvi_mhq/moneos/result"
+    assumeFiles(s"$mDir/lsvi_detail_moneos.tsv")
     def readM(name: String): DataFrame = spark.read
       .option("sep", "\t").option("header", "true").option("nullValue", "NA")
       .csv(s"$mDir/$name")
@@ -332,6 +355,7 @@ class LsviReportJobSpec extends SparkSuite {
     // WATERSURFACE grain (code_watersurfaces, no coordinates, no
     // doelbereik) plus the ten reporting shapes — no chain tables
     val swDir = "/root/reference/processed/lsvi_mhq/standing_water/result"
+    assumeFiles(chainInputs :+ s"$swDir/lsvi_watersurface_sw.tsv": _*)
     val swOut =
       java.nio.file.Files.createTempDirectory("lsvi-report-sw").toString
     val metaWs = meta
@@ -354,6 +378,8 @@ class LsviReportJobSpec extends SparkSuite {
   }
 
   test("the rw mode reproduces the streams-published file set with weighted estimators") {
+    val pubDir = "/root/reference/processed/lsvi_mhq/streams/result"
+    assumeFiles(chainInputs :+ pubDir: _*)
     // the streams group publishes lsvi_plot + the nine design-weighted
     // reporting shapes as `*_rw` (no chain tables, no status_beheer);
     // run the job in that mode (weights synthetic — the real ones are
@@ -367,12 +393,13 @@ class LsviReportJobSpec extends SparkSuite {
       LsviReportJob.Config(suffix = "rw", weightCol = Some("weight"),
         tables = Some(LsviReportJob.streamsTables)))
     val mine = new java.io.File(rwDir).listFiles().map(_.getName).toSet
-    val pub = new java.io.File("/root/reference/processed/lsvi_mhq/streams/result")
-      .listFiles().map(_.getName).toSet
+    val pub = new java.io.File(pubDir).listFiles().map(_.getName).toSet
     assert(mine === pub, s"missing: ${pub -- mine}; extra: ${mine -- pub}")
   }
 
   test("the written dikdoodhout tables replay the published analysis sets") {
+    assumeFiles(writtenInputs ++ Seq("status_dikdoodhout.tsv",
+      "trend_dikdoodhout.tsv").map(f => s"$refDir/$f"): _*)
     written.size // force the run
     val subSet = concat_ws("; ", sort_array(split(col("habitatsubtype"), "; ")))
     for ((base, meanCol, versie) <- Seq(
@@ -410,6 +437,8 @@ class LsviReportJobSpec extends SparkSuite {
   }
 
   test("the written status tables carry the validated stratum estimates") {
+    assumeFiles(writtenInputs :+ s"$refDir/status_habitat_fs.tsv": _*)
+    written.size // force the run
     // status_habitat stratum rows are plain proportions: the written
     // file must agree with the published single-subtype stratum rows
     val mine = spark.read
@@ -431,6 +460,7 @@ class LsviReportJobSpec extends SparkSuite {
   }
 
   test("opt-in partitionBy publishes a pruning-capable partitioned twin") {
+    assumeFiles(writtenInputs: _*)
     // the 100x-scale publish path: the plot table (the only published
     // table whose size scales with plot count) routed through
     // Vc.writePartitioned by habitattype; same chain, same rows as the

@@ -39,12 +39,17 @@ class StatusShapesSpec extends SparkSuite {
       .option("sep", "\t").option("header", "true").option("nullValue", "NA")
       .csv(path)
 
+  private def fs(names: String*): Seq[String] = names.map(n => s"$fsDir/$n")
+
+  /** The published files [[plotMeta]] reads. */
+  private val plotMetaFiles = fs("lsvi_plot_fs.tsv", "lsvi_globaal_fs.tsv")
+
   /** (id, habitattype = full type_analysis, point_code, date, in_sac) —
     * plot metadata joined to the globaal table for the untruncated
     * type code (the plot table renders 9130_end as 9130). */
   private lazy val plotMeta =
-    readTsv(s"$fsDir/lsvi_plot_fs.tsv").alias("p")
-      .join(readTsv(s"$fsDir/lsvi_globaal_fs.tsv").alias("g"),
+    readTsv(plotMetaFiles(0)).alias("p")
+      .join(readTsv(plotMetaFiles(1)).alias("g"),
         col("p.id") === col("g.id"))
       .select(col("p.id").as("id"), col("g.type_analysis").as("habitattype"),
         col("p.point_code"), col("p.date").cast("int").as("date"),
@@ -57,6 +62,8 @@ class StatusShapesSpec extends SparkSuite {
     .where(!col("habitatsubtype").contains(";")).cache()
 
   test("status_indicatoren: stratum rows are exact plain proportions over latest-per-point") {
+    assumeFiles(plotMetaFiles ++ fs("lsvi_indicator_fs.tsv",
+      "status_indicatoren_fs.tsv"): _*)
     val ind = readTsv(s"$fsDir/lsvi_indicator_fs.tsv")
       .select(col("id"), col("type_analysis"), col("criterium"), col("indicator"),
         col("belang"), (col("status_indicator").cast("int") === 1)
@@ -92,6 +99,8 @@ class StatusShapesSpec extends SparkSuite {
   }
 
   test("beoordeling: the 75% CI verdict reproduces every published class") {
+    assumeFiles(s"$fsDir/status_indicatoren_fs.tsv",
+      s"$rwDir/status_indicatoren_rw.tsv")
     // fs codes: Goed=1, Niet goed=2, Onbekend=3; rw codes: 4/5/3
     def classes(df: DataFrame, m: Map[String, String]): Long = {
       val mm = typedLit(m)
@@ -112,6 +121,7 @@ class StatusShapesSpec extends SparkSuite {
   }
 
   test("logitTCi tracks the published stratum bounds within 2pp; t quantiles match the tables") {
+    assumeFiles(s"$fsDir/status_indicatoren_fs.tsv")
     // Student-t 97.5% quantiles against the standard printed table
     val expected = Map(1 -> 12.706, 2 -> 4.303, 5 -> 2.571, 10 -> 2.228,
       30 -> 2.042, 100 -> 1.984)
@@ -140,6 +150,7 @@ class StatusShapesSpec extends SparkSuite {
   }
 
   test("index_hq: n_obs exact, means and z bounds track published within 0.007") {
+    assumeFiles(plotMetaFiles ++ fs("index_hq_fs.tsv"): _*)
     val mine = LsviStatus.indexHq(plotMeta).cache()
     val pub = readTsv(s"$fsDir/index_hq_fs.tsv")
       .where(col("habitattype").isin("9110", "9120", "9130_end", "9160", "9190"))
@@ -160,6 +171,8 @@ class StatusShapesSpec extends SparkSuite {
   }
 
   test("trend_indicatoren: n_obs exact, equal-weight means track published (median <=1.5pp, max <=9pp)") {
+    assumeFiles(plotMetaFiles ++ fs("lsvi_indicator_fs.tsv",
+      "trend_indicatoren_fs.tsv"): _*)
     val ind = readTsv(s"$fsDir/lsvi_indicator_fs.tsv")
       .select(col("id"), col("type_analysis"), col("criterium"), col("indicator"),
         col("belang"), (col("status_indicator").cast("int") === 1)
@@ -192,6 +205,7 @@ class StatusShapesSpec extends SparkSuite {
   }
 
   test("status_habitat: stratum rows are exact plain proportions of the plot verdict") {
+    assumeFiles(plotMetaFiles ++ fs("status_habitat_fs.tsv"): _*)
     val mine = LsviStatus.statusHabitat(plotMeta)
     val pub = readTsv(s"$fsDir/status_habitat_fs.tsv")
       .withColumn("ht", coalesce(col("habitatsubtype"), col("habitattype")))
@@ -213,6 +227,7 @@ class StatusShapesSpec extends SparkSuite {
   }
 
   test("index_ind: n_obs exact, stratum means exact, pooled/bounds track published") {
+    assumeFiles(plotMetaFiles ++ fs("lsvi_indicator_fs.tsv", "index_ind_fs.tsv"): _*)
     val ind = readTsv(s"$fsDir/lsvi_indicator_fs.tsv")
       .select(col("id"), col("type_analysis"), col("criterium"), col("indicator"),
         col("belang"),
@@ -259,6 +274,7 @@ class StatusShapesSpec extends SparkSuite {
   }
 
   test("trend_index_hq: stratum rows exact (mean AND bounds — the published interval IS this z interval)") {
+    assumeFiles(plotMetaFiles ++ fs("trend_index_hq_fs.tsv"): _*)
     val mine = LsviStatus.trendIndexHq(plotMeta)
     val pub = readTsv(s"$fsDir/trend_index_hq_fs.tsv")
       .where(!col("habitattype").startsWith("91E0") &&
@@ -291,6 +307,8 @@ class StatusShapesSpec extends SparkSuite {
   }
 
   test("trend_index_ind: stratum rows exact, pooled within design-weight tolerance") {
+    assumeFiles(plotMetaFiles ++ fs("lsvi_indicator_fs.tsv",
+      "trend_index_ind_fs.tsv"): _*)
     val ind = readTsv(s"$fsDir/lsvi_indicator_fs.tsv")
       .select(col("id"), col("type_analysis"), col("criterium"), col("indicator"),
         col("belang"),
@@ -327,6 +345,7 @@ class StatusShapesSpec extends SparkSuite {
   }
 
   test("mc_nemar: transition counts exact, published p-values reproduce from weighted counts") {
+    assumeFiles(plotMetaFiles ++ fs("mc_nemar_fs.tsv"): _*)
     val mine = LsviStatus.mcNemar(plotMeta)
     val pub = readTsv(s"$fsDir/mc_nemar_fs.tsv")
       .where(col("habitatsubtype").isNull && col("habitattype") =!= "91E0")

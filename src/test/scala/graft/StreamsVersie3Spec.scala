@@ -33,9 +33,13 @@ class StreamsVersie3Spec extends SparkSuite {
       .option("sep", "\t").option("header", "true").option("nullValue", "NA")
       .csv(path)
 
-  private lazy val pubDetail = readTsv(s"$aqDir/HT3260_ResDetail.tsv").cache()
-  private lazy val pubInd = readTsv(s"$aqDir/HT3260_ResInd.tsv").cache()
-  private lazy val pubPlot = readTsv(s"$rwDir/lsvi_plot_rw.tsv").cache()
+  private val detailFile = s"$aqDir/HT3260_ResDetail.tsv"
+  private val indFile = s"$aqDir/HT3260_ResInd.tsv"
+  private val plotFile = s"$rwDir/lsvi_plot_rw.tsv"
+
+  private lazy val pubDetail = readTsv(detailFile).cache()
+  private lazy val pubInd = readTsv(indFile).cache()
+  private lazy val pubPlot = readTsv(plotFile).cache()
 
   private def clamp(c: org.apache.spark.sql.Column) =
     greatest(lit(-1.0), least(lit(1.0), c.cast("double")))
@@ -68,6 +72,7 @@ class StreamsVersie3Spec extends SparkSuite {
   private lazy val myInd = LsviForest.indicator(myDetail).cache()
 
   test("rule table matches the published rule tuples") {
+    assumeFiles(detailFile)
     val published = pubDetail
       .select(col("Habitattype"), col("Criterium"), col("Indicator"),
         col("Belang"), col("Voorwaarde"), col("Referentiewaarde"))
@@ -93,6 +98,7 @@ class StreamsVersie3Spec extends SparkSuite {
   }
 
   test("detail: status and clamped verschilscore exact on all 984 published rows") {
+    assumeFiles(detailFile)
     val joined = myDetail.alias("m")
       .join(pubDetail.alias("p"),
         col("m.id") === col("p.ID") && col("m.voorwaarde") === col("p.Voorwaarde"))
@@ -109,6 +115,7 @@ class StreamsVersie3Spec extends SparkSuite {
   }
 
   test("indicator: OR pair and AND singletons exact on all 820 published rows") {
+    assumeFiles(detailFile, indFile)
     val joined = myInd.alias("m")
       .join(pubInd.alias("p"),
         col("m.id") === col("p.ID") && col("m.indicator") === col("p.Indicator"))
@@ -125,6 +132,7 @@ class StreamsVersie3Spec extends SparkSuite {
   }
 
   test("plot level: lsvi / n_zb_ongunstig / aandeel_gunstig / index_mean_ind exact on all 164 rows") {
+    assumeFiles(detailFile, plotFile)
     val mine = LsviForest.globaal(myInd)
     val joined = mine.alias("m").join(pubPlot.alias("p"), col("m.id") === col("p.id"))
     assert(joined.count() === 164L)
@@ -140,6 +148,7 @@ class StreamsVersie3Spec extends SparkSuite {
   }
 
   test("max-cover prep: ladder matches and the Rmd collapse reproduces on the raw vegetation table") {
+    assumeFiles(s"$aqDir/HT3260_vegetation.tsv")
     val veg0 = readTsv(s"$aqDir/HT3260_vegetation.tsv")
     // the recording ladder is exactly the published (code, cover) pairs
     val ladder = veg0.select(col("species_cover_code"),
@@ -171,6 +180,7 @@ class StreamsVersie3Spec extends SparkSuite {
   }
 
   test("status_indicatoren_rw: strata are plain proportions pooled 2/3 Binnen + 1/3 Buiten") {
+    assumeFiles(s"$rwDir/status_indicatoren_rw.tsv")
     val rows = readTsv(s"$rwDir/status_indicatoren_rw.tsv")
       .select(col("sbzh"), col("indicator"), col("n_obs").cast("int"),
         col("aandeel_gunstig").cast("double"))

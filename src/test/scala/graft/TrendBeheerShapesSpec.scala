@@ -63,6 +63,7 @@ class TrendBeheerShapesSpec extends SparkSuite {
   }.reduce(_ unionByName _).cache()
 
   test("trend_habitat: effectKlasse reproduces every published klasse") {
+    assumeFiles(trendFiles.map(f => s"$base/$f"): _*)
     val lab = typedLit(labels)
     val key = Seq("src", "type_resultaat", "habitattype", "sbzh",
       "habitatsubtype")
@@ -112,6 +113,9 @@ class TrendBeheerShapesSpec extends SparkSuite {
       ("coastal_dunes", "lsvi_plot_cd.tsv", "trend_habitat_cd.tsv", 24L, false),
       ("grassland_marsh", "lsvi_plot_gr_bm.tsv", "trend_habitat_gr_bm.tsv", 52L, true))
     val key = Seq("periode", "type_resultaat", "habitattype", "sbzh", "parameter")
+    assumeFiles(groups.flatMap { case (g, plotFile, trendFile, _, _) =>
+      Seq(s"$base/$g/result/$plotFile", s"$base/$g/result/$trendFile")
+    }: _*)
     groups.foreach { case (g, plotFile, trendFile, nPub, useCycles) =>
       val dir = s"$base/$g/result"
       val plots = readTsv(s"$dir/$plotFile").select(
@@ -162,6 +166,7 @@ class TrendBeheerShapesSpec extends SparkSuite {
   }.reduce(_ unionByName _).cache()
 
   test("status_beheer: significance label flips at p = 0.05 and rows pair up") {
+    assumeFiles(beheerFiles.map(f => s"$base/$f"): _*)
     val withP = beheer.where(col("p").isNotNull)
     assert(withP.count() > 15)
     assert(withP.where((col("p") < 0.05) =!=
@@ -173,6 +178,7 @@ class TrendBeheerShapesSpec extends SparkSuite {
   }
 
   test("status_beheer: p is published only with both groups at n >= 5") {
+    assumeFiles(beheerFiles.map(f => s"$base/$f"): _*)
     val gate = beheer.groupBy("src", "habitattype").agg(
       count(lit(1)).as("n_groups"), min(col("n_obs")).as("n_min"),
       count(col("p")).as("n_p"))

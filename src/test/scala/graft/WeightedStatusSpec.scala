@@ -48,11 +48,16 @@ class WeightedStatusSpec extends SparkSuite {
       .option("sep", "\t").option("header", "true").option("nullValue", "NA")
       .csv(path)
 
+  private def fs(names: String*): Seq[String] = names.map(n => s"$fsDir/$n")
+
+  /** The published files [[plotMeta]] reads. */
+  private val plotMetaFiles = fs("lsvi_plot_fs.tsv", "lsvi_globaal_fs.tsv")
+
   /** Real forest plot metadata with the untruncated type code (like
     * StatusShapesSpec) and a unit weight column. */
   private lazy val plotMeta =
-    readTsv(s"$fsDir/lsvi_plot_fs.tsv").alias("p")
-      .join(readTsv(s"$fsDir/lsvi_globaal_fs.tsv").alias("g"),
+    readTsv(plotMetaFiles(0)).alias("p")
+      .join(readTsv(plotMetaFiles(1)).alias("g"),
         col("p.id") === col("g.id"))
       .select(col("p.id").as("id"), col("g.type_analysis").as("habitattype"),
         col("p.point_code"), col("p.date").cast("int").as("date"),
@@ -109,6 +114,7 @@ class WeightedStatusSpec extends SparkSuite {
   // ---- published design-weighted pooled rows reproduce ----
 
   test("solved stratum ratios: 5 single-subtype types, near-uniform design") {
+    assumeFiles(fs("status_habitat_fs.tsv"): _*)
     assert(solvedRatios.keySet ===
       Set("9110", "9120", "9130_end", "9160", "9190"))
     // the design oversamples neither stratum by more than ~2x
@@ -116,6 +122,7 @@ class WeightedStatusSpec extends SparkSuite {
   }
 
   test("weighted statusHabitat reproduces the pooled status_habitat_fs rows") {
+    assumeFiles(plotMetaFiles ++ fs("status_habitat_fs.tsv"): _*)
     val mine = LsviStatus.statusHabitat(weightedMeta, "weight")
       .where(col("sbzh") === "Binnen & Buiten")
       .select(col("habitattype"), col("n_obs"), col("aandeel_gunstig"))
@@ -137,6 +144,8 @@ class WeightedStatusSpec extends SparkSuite {
   }
 
   test("weighted statusIndicatoren reproduces all 50 pooled status_indicatoren_fs rows within 0.02pp") {
+    assumeFiles(plotMetaFiles ++ fs("status_habitat_fs.tsv",
+      "lsvi_indicator_fs.tsv", "status_indicatoren_fs.tsv"): _*)
     val mine = LsviStatus.statusIndicatoren(indicatorTbl, weightedMeta, "weight")
     val pub = readTsv(s"$fsDir/status_indicatoren_fs.tsv")
       .where(!col("habitatsubtype").contains(";"))
@@ -158,6 +167,7 @@ class WeightedStatusSpec extends SparkSuite {
   }
 
   test("weighted indexHq reproduces the pooled index_hq_fs means within 2e-4 (independent of the solve)") {
+    assumeFiles(plotMetaFiles ++ fs("status_habitat_fs.tsv", "index_hq_fs.tsv"): _*)
     val mine = LsviStatus.indexHq(weightedMeta, "weight")
       .where(col("type_resultaat") === "Habitattype")
       .select(col("habitattype"), col("n_obs"), col("index_hq_mean"))
@@ -182,6 +192,7 @@ class WeightedStatusSpec extends SparkSuite {
 
   test("weighted statusIndicatoren replays the streams _rw pooled rows under the frame's 2:1 SAC mix") {
     val rwDir = "/root/reference/processed/lsvi_mhq/streams/result"
+    assumeFiles(s"$rwDir/status_indicatoren_rw.tsv")
     val pub = readTsv(s"$rwDir/status_indicatoren_rw.tsv")
       .select(col("sbzh"), col("criterium"), col("indicator"),
         col("n_obs").cast("int"), col("aandeel_gunstig").cast("double"))
@@ -235,6 +246,7 @@ class WeightedStatusSpec extends SparkSuite {
 
   test("weighted indexHq replays the streams index_hq_rw pooled mean under the frame mix") {
     val rwDir = "/root/reference/processed/lsvi_mhq/streams/result"
+    assumeFiles(s"$rwDir/index_hq_rw.tsv")
     val pub = readTsv(s"$rwDir/index_hq_rw.tsv")
       .where(col("type_resultaat").isin("Habitattype", "SBZH"))
       .select(col("sbzh"), col("n_obs").cast("int"),
@@ -321,6 +333,7 @@ class WeightedStatusSpec extends SparkSuite {
   }
 
   test("unit weights reduce every weighted overload to its unweighted sibling") {
+    assumeFiles(plotMetaFiles ++ fs("lsvi_indicator_fs.tsv"): _*)
     assertClose(LsviStatus.statusHabitat(plotMeta, "one"),
       LsviStatus.statusHabitat(plotMeta), 1e-6)
     assertClose(LsviStatus.statusIndicatoren(indicatorTbl, plotMeta, "one"),
