@@ -1,7 +1,7 @@
 package graft
 
+import graft.core.GraftSession
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Benchmark main.
@@ -40,18 +40,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     // warmup: JVM + codegen + parquet footer caches across the three
     // main code-path families (relational aggs, text/jaccard, vectors).
@@ -104,18 +93,12 @@ object Bench {
     // entire sample, so the per-query median rejects it: a stall must
     // span more than half the passes before any median moves.
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "5").toInt
-    // isolated-mode dev aid (the r15 noise protocol): --only=q176,q202
-    // (or SPARK_GRAFT_BENCH_ONLY=regex) restricts the query set so a
-    // flagged query can be re-timed ALONE, separating a real
-    // regression from an ambient whole-host stall. The harness never
-    // sets either; driver runs always cover everything.
-    val onlyArg = args.collectFirst { case a if a.startsWith("--only=") =>
-      a.stripPrefix("--only=").split(",").map(_.trim).filter(_.nonEmpty).toSet }
+    // isolated-mode dev aid (the r15 noise protocol):
+    // SPARK_GRAFT_BENCH_ONLY=regex restricts the query set so a flagged
+    // query can be re-timed ALONE, separating a real regression from an
+    // ambient whole-host stall. Driver runs never set it and cover
+    // everything.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.r)
-    // dev aid: SPARK_GRAFT_BENCH_MAX=138 restricts to qNNN <= 138 (the
-    // round-over-round bisect runs an older round's exact query subset
-    // on the current tree; the harness never sets it)
-    val maxQ = sys.env.get("SPARK_GRAFT_BENCH_MAX").map(_.toInt)
     def qnum(name: String): Int = {
       val d = name.drop(1).takeWhile(_.isDigit)
       if (name.startsWith("q") && d.nonEmpty) d.toInt else Int.MaxValue
@@ -123,9 +106,6 @@ object Bench {
     def short(name: String): String = name.takeWhile(_ != '_').stripPrefix("q")
     val queries = SparkEntry.queries.toSeq.sortBy { case (n, _) => (qnum(n), n) }
       .filter { case (name, _) => only.forall(_.findFirstIn(name).isDefined) }
-      .filter { case (name, _) =>
-        onlyArg.forall(set => set.contains(name) || set.contains("q" + short(name))) }
-      .filter { case (name, _) => maxQ.forall(qnum(name) <= _) }
     // the stdout worst10 map keys by qNNN prefix — two full names
     // sharing a prefix would silently overwrite each other's entry.
     // Validate BEFORE the timing loops: a collision discovered after
@@ -165,19 +145,18 @@ object Bench {
     // full artifact: every query's interleaved median + the isolated
     // worst-10, written as a committed pretty-ish JSON file so the
     // harness capture window no longer bounds what a round records.
-    // a filtered dev run (--only / SPARK_GRAFT_BENCH_ONLY /
-    // SPARK_GRAFT_BENCH_MAX) must not clobber the round's committed
-    // full artifact with a partial one — default it under target/
-    // unless the caller names a path explicitly.
+    // a filtered dev run (SPARK_GRAFT_BENCH_ONLY) must not clobber the
+    // round's committed full artifact with a partial one — default it
+    // under target/ unless the caller names a path explicitly.
     // r22 (verdict item 2): the default path is RUN-SCOPED by core
     // count — the driver benches the same commit at 32 AND 8 cores,
     // and with a single "bench_full.json" the second run overwrote the
     // first, leaving the round's PERF per-query and scaling tables
     // empty. bench_full_c32.json / bench_full_c8.json coexist.
-    val filtered = onlyArg.isDefined || only.isDefined || maxQ.isDefined
+    val filtered = only.isDefined
     val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL",
       if (filtered) "target/bench_full_partial.json"
-      else s"bench_full_c$cpus.json")
+      else s"bench_full_c${GraftSession.cpus}.json")
     val sfLabel = new java.io.File(sfDir).getName
     val fullJson = {
       val qLines = results.map { case (n, v) => s"""    "$n": ${fmt(v, 3)}""" }

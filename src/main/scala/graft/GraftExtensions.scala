@@ -6,11 +6,11 @@ import org.apache.spark.SparkEnv
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.internal.StaticSQLConf
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 
 /** SQL surface for the engine's custom expressions: registered through
-  * `SparkSessionExtensions` (spark.sql.extensions=graft.GraftExtensions)
-  * or onto a live session via `GraftExtensions.register(spark)`, so
+  * `SparkSessionExtensions` (spark.sql.extensions=graft.GraftExtensions,
+  * which `graft.core.GraftSession` sets), so
   * `spark.sql("SELECT cosine_similarity(a, b) ...")` works exactly like
   * the Column API. All functions plan to the same native expressions —
   * no UDF wrapping, full codegen where the expression provides it.
@@ -74,7 +74,7 @@ object GraftExtensions {
       s"$what must be a string literal, got $other")
   }
 
-  private[graft] val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+  private val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "cosine_similarity" -> (es => CosineSimilarity(es(0), es(1))),
     "simhash64" -> (es => SimHash64(es(0))),
     "minhash_signature" -> (es => MinHashSignature(es(0), intArg(es(1), "k"))),
@@ -109,11 +109,4 @@ object GraftExtensions {
       stringArg(es(1), "left"), stringArg(es(2), "right"))),
     "gray_png" -> (es => graft.functions.GrayPngExpr(es(0), es(1), es(2))),
     "image_meta" -> (es => graft.functions.ImageMetaExpr(es(0))))
-
-  /** Register on an already-built session (tests, notebooks). */
-  def register(spark: SparkSession): Unit =
-    builders.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "built-in")
-    }
 }

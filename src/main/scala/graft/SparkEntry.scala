@@ -3133,8 +3133,7 @@ object SparkEntry {
         col("o_totalprice"), col("o_orderdate").cast("date").as("o_orderdate"))
       val existing = orders.where(col("o_orderkey") % 7 === 0)
       val incoming = orders.where(col("o_orderkey") % 7 === 1)
-      val base = java.nio.file.Files.createTempDirectory("vc_q94")
-        .resolve("orders_slice").toString
+      val base = tempResultDir("vc_q94") + "/orders_slice"
       graft.io.Vc.write(existing, base, sortKeys = Seq("o_orderkey"))
       graft.pipelines.IncrementalUpdate.applyToVc(s, base, incoming,
         keys = Seq("o_orderkey"), sortKeys = Seq("o_orderkey"))
@@ -3150,8 +3149,7 @@ object SparkEntry {
         col("c_custkey"), col("c_name"), col("c_acctbal"), col("c_mktsegment"))
       val patch = cust.where(col("c_custkey") % 10 === 3)
         .withColumn("c_acctbal", col("c_acctbal") * lit(1.5))
-      val base = java.nio.file.Files.createTempDirectory("vc_q95")
-        .resolve("customer_patched").toString
+      val base = tempResultDir("vc_q95") + "/customer_patched"
       graft.io.Vc.write(cust, base, sortKeys = Seq("c_custkey"))
       graft.pipelines.IncrementalUpdate.applyToVc(s, base, patch,
         keys = Seq("c_custkey"), sortKeys = Seq("c_custkey"), replace = true)

@@ -1,8 +1,8 @@
 package graft.tools
 
+import graft.core.GraftSession
 import graft.io.{Csv2, Vc}
 import graft.pipelines.{Fieldmap, IncrementalUpdate}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -16,12 +16,8 @@ object FieldmapDemo {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/fm_demo")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.warehouse.dir", s"$dir/warehouse")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(
+      extra = Map("spark.sql.warehouse.dir" -> s"$dir/warehouse"))
     import spark.implicits._
 
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/cover_scales.csv"),

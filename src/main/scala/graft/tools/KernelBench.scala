@@ -1,11 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.core.GraftSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev microbench: times individual map-side kernels over the sf
   * documents table with the noop sink (guide §1.4), so a multi-stage
-  * query's cost can be attributed to the kernel level — JobProfile
+  * query's cost can be attributed to the kernel level — `Inspect jobs`
   * stops at job granularity and the heavy queries run their whole
   * chain inside one job.
   *
@@ -14,25 +15,19 @@ import org.apache.spark.sql.functions._
 object KernelBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
     val docs = graft.core.Tables.load(spark, sfDir, "documents")
     docs.count() // warm the scan
 
-    def time(name: String)(df: => DataFrame): Unit = {
-      df.write.format("noop").mode("overwrite").save() // warm codegen
+    def timeRaw(name: String)(body: => Unit): Unit = {
+      body // warm
       val ts = (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        df.write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
+        val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
       }
       println(f"$name%-32s median ${ts.sorted.apply(1)}%6.3f s  (${ts.map(t => f"$t%.3f").mkString(", ")})")
     }
+    def time(name: String)(df: => DataFrame): Unit =
+      timeRaw(name)(df.write.format("noop").mode("overwrite").save())
 
     val text = col("text")
     val toks = graft.text.Text.tokens(text)
@@ -66,13 +61,6 @@ object KernelBench {
       .select(col("shard_id").cast("long"), col("gpos0").cast("long"), col("ids"))
       .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt, col("shard_id"))
       .sortWithinPartitions(col("shard_id"), col("gpos0")))
-    def timeRaw(name: String)(body: => Unit): Unit = {
-      body // warm
-      val ts = (1 to 3).map { _ =>
-        val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-      }
-      println(f"$name%-32s median ${ts.sorted.apply(1)}%6.3f s  (${ts.map(t => f"$t%.3f").mkString(", ")})")
-    }
     val base = java.nio.file.Files.createTempDirectory("graft-kb").toString
     var i = 0
     timeRaw("TokenShards.write (full)") {

@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 
 /** Empirical scale-curve gate for the flagship LLM-pipeline family:
   * times each query at sf0.01 AND sf0.1 (10× the data) in one session
@@ -79,18 +79,8 @@ object ScaleCurve {
 
   def main(args: Array[String]): Unit = {
     val names = if (args.nonEmpty) args.toSeq else DefaultFamily
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("SPARK_GRAFT_SCALE_RUNS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
 
     def median(name: String, sf: String): Double = {
       val times = (1 to runs).map { _ =>

@@ -23,6 +23,7 @@ class CodegenCacheSpec extends SparkSuite {
     val base = spark
     val sc = base.sparkContext
     val before = sc.getConf.getOption(key)
+    val extensionsBefore = sc.getConf.getOption("spark.sql.extensions")
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     org.apache.spark.sql.GraftBridge.setContextConf(sc, key, preset)
@@ -33,7 +34,8 @@ class CodegenCacheSpec extends SparkSuite {
       assert(injected ne base, "expected a fresh session over the shared context")
       injected.conf.get(key)
     } finally {
-      org.apache.spark.sql.GraftBridge.setContextConf(sc, "spark.sql.extensions", None)
+      org.apache.spark.sql.GraftBridge.setContextConf(sc, "spark.sql.extensions",
+        extensionsBefore)
       org.apache.spark.sql.GraftBridge.setContextConf(sc, key, before)
       // the shared base session stays the active/default one for later suites
       SparkSession.setActiveSession(base)

@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Proves the `spark.sql.extensions=graft.GraftExtensions` deployment
-  * path end to end: a session built ONLY from config (no `register`
-  * call, no `withExtensions`) gets the SQL functions and both injected
+  * path end to end: a session built ONLY from config (no
+  * `withExtensions`) gets the SQL functions and both injected
   * optimizer rules. This is how a cluster job picks up the engine —
   * spark-submit --conf spark.sql.extensions=graft.GraftExtensions —
   * so it must work without any code-side hook. */
@@ -15,6 +15,7 @@ class ConfigInjectionSpec extends SparkSuite {
     val base = spark // force the shared context into existence
     val prevActive = SparkSession.getActiveSession
     val prevDefault = SparkSession.getDefaultSession
+    val prevExtensions = base.sparkContext.getConf.getOption("spark.sql.extensions")
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     // spark.sql.extensions is a STATIC conf: when the builder reuses an
@@ -26,13 +27,13 @@ class ConfigInjectionSpec extends SparkSuite {
       try SparkSession.builder().getOrCreate()
       finally {
         org.apache.spark.sql.GraftBridge.setContextConf(base.sparkContext,
-          "spark.sql.extensions", None)
+          "spark.sql.extensions", prevExtensions)
         prevActive.foreach(SparkSession.setActiveSession)
         prevDefault.foreach(SparkSession.setDefaultSession)
       }
     assert(injected ne base, "expected a fresh session over the shared context")
     try {
-      // 1. SQL functions resolve without GraftExtensions.register(...)
+      // 1. SQL functions resolve
       val cos = injected.sql(
         "SELECT cosine_similarity(array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT))," +
           " array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT))) AS c")

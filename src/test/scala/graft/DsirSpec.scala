@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.PlanStats
 import graft.curation.Dsir
 import org.apache.spark.sql.functions._
 
@@ -53,11 +54,8 @@ class DsirSpec extends SparkSuite {
     // 4 shuffles) and shows up here
     val df = SparkEntry.queries("q174_dsir_select")(
       spark, "/root/testdata/sf0.001")
-    val plan = df.queryExecution.sparkPlan.toString
-    val scans = "file:[^\\]\\s]*/(\\w+)\\.parquet".r.findAllMatchIn(plan).size
-    val ex = df.queryExecution.executedPlan.toString
-    val shuffles = "Exchange".r.findAllIn(ex).size -
-      "BroadcastExchange".r.findAllIn(ex).size
+    val scans = PlanStats.scans(df)
+    val shuffles = PlanStats.shuffles(df)
     assert(scans === 1, s"q174 returned plan scans: $scans")
     assert(shuffles === 0, s"q174 returned plan shuffles: $shuffles")
   }

@@ -6,7 +6,6 @@ class ExtensionsSpec extends SparkSuite {
   import spark.implicits._
 
   test("custom expressions are callable from SQL after registration") {
-    GraftExtensions.register(spark)
     val cos = spark.sql(
       "SELECT cosine_similarity(array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT))," +
         " array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT))) AS c")
@@ -120,7 +119,6 @@ class ExtensionsSpec extends SparkSuite {
   }
 
   test("non-literal k for minhash_signature is rejected with a clear error") {
-    GraftExtensions.register(spark)
     val e = intercept[Exception] {
       spark.sql("SELECT minhash_signature(array('a'), CAST(rand()*4 AS INT))").collect()
     }

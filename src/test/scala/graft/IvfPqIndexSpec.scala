@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.PlanStats
 import graft.similarity.Ann
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
@@ -211,9 +212,8 @@ class IvfPqIndexSpec extends SparkSuite {
     val plan = searched.queryExecution.executedPlan.toString
     // the only exchanges allowed are the partial-top-k groupBy and the
     // final rank window (+ broadcasts); the scored join itself is
-    // broadcast — mirror ScanCountSpec's counting
-    val shuffles = "Exchange".r.findAllIn(plan).size -
-      "BroadcastExchange".r.findAllIn(plan).size
+    // broadcast; counted by PlanStats, as ScanCountSpec counts
+    val shuffles = PlanStats.shuffles(searched)
     assert(shuffles <= 2, s"expected <=2 shuffles, plan had $shuffles:\n$plan")
   }
 }

@@ -167,31 +167,34 @@ class RulesSpec extends SparkSuite {
 
   test("spatial rewrite turns the PIP cross product into a cell equi-join") {
     import graft.rules.SpatialJoinRewrite
-    val naive = spatialQuery.as[(Long, Long)].collect().toSet
-    assert(spatialQuery.queryExecution.executedPlan.toString
-      .contains("NestedLoopJoin")) // the shape we are eliminating
+    // the naive baseline: the session installs the rule, so exclude it
+    // for this one frame
+    val excluded = "spark.sql.optimizer.excludedRules"
+    val prevExcluded = spark.conf.getOption(excluded)
+    spark.conf.set(excluded, SpatialJoinRewrite.ruleName)
+    val (naive, naivePlan, naiveOptimized) =
+      try {
+        val q = spatialQuery
+        (q.as[(Long, Long)].collect().toSet, q.queryExecution.executedPlan.toString,
+          q.queryExecution.optimizedPlan)
+      } finally prevExcluded.fold(spark.conf.unset(excluded))(spark.conf.set(excluded, _))
+    assert(naivePlan.contains("NestedLoopJoin")) // the shape we are eliminating
 
-    val optimized = SpatialJoinRewrite(spatialQuery.queryExecution.optimizedPlan)
+    val optimized = SpatialJoinRewrite(naiveOptimized)
     assert(optimized.toString.contains("bbox_cells"),
       s"rewrite did not fire:\n$optimized")
     // idempotent: the rewritten join now has an equality conjunct
     assert(SpatialJoinRewrite(optimized).toString === optimized.toString)
 
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ SpatialJoinRewrite
-    try {
-      val plan = spatialQuery.queryExecution.executedPlan.toString
-      assert(!plan.contains("NestedLoopJoin"), s"still a cross product:\n$plan")
-      assert(plan.contains("HashJoin"), s"expected hash join:\n$plan")
-      assert(spatialQuery.as[(Long, Long)].collect().toSet === naive)
-      // hole semantics preserved through the rewrite: a point inside
-      // polygon 20's hole matches only the outer square 10
-      assert(!naive.exists { case (pid, poly) => poly == 20L &&
-        { val p = (pid * 2.5, pid * 1.5); p._1 > 25 && p._1 < 30 && p._2 > 15 && p._2 < 20 } })
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ == SpatialJoinRewrite)
-    }
+    // with the installed rule
+    val plan = spatialQuery.queryExecution.executedPlan.toString
+    assert(!plan.contains("NestedLoopJoin"), s"still a cross product:\n$plan")
+    assert(plan.contains("HashJoin"), s"expected hash join:\n$plan")
+    assert(spatialQuery.as[(Long, Long)].collect().toSet === naive)
+    // hole semantics preserved through the rewrite: a point inside
+    // polygon 20's hole matches only the outer square 10
+    assert(!naive.exists { case (pid, poly) => poly == 20L &&
+      { val p = (pid * 2.5, pid * 1.5); p._1 > 25 && p._1 < 30 && p._2 > 15 && p._2 < 20 } })
   }
 
   test("spatial rewrite preserves the output schema with no trailing select") {

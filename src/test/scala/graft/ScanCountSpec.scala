@@ -1,5 +1,7 @@
 package graft
 
+import graft.core.PlanStats
+
 /** Plan-reuse regression gate: pins the number of parquet scans each
   * optimization-sensitive query plans. The LSVI globaal family and the
   * paired trend shapes were rewritten to single-chain aggregations
@@ -12,19 +14,12 @@ package graft
   * is the regression.
   */
 class ScanCountSpec extends SparkSuite {
-  private def scanCount(name: String): Int = {
-    val plan = SparkEntry.queries(name)(spark, "/root/testdata/sf0.001")
-      .queryExecution.sparkPlan.toString
-    "file:[^\\]\\s]*/(\\w+)\\.parquet".r.findAllMatchIn(plan).size
-  }
+  private def scanCount(name: String): Int =
+    PlanStats.scans(SparkEntry.queries(name)(spark, "/root/testdata/sf0.001"))
 
   /** Shuffle (non-broadcast) exchanges in the executed plan. */
-  private def shuffleCount(name: String): Int = {
-    val plan = SparkEntry.queries(name)(spark, "/root/testdata/sf0.001")
-      .queryExecution.executedPlan.toString
-    "Exchange".r.findAllIn(plan).size -
-      "BroadcastExchange".r.findAllIn(plan).size
-  }
+  private def shuffleCount(name: String): Int =
+    PlanStats.shuffles(SparkEntry.queries(name)(spark, "/root/testdata/sf0.001"))
 
   test("single-chain globaal family plans a bounded number of scans") {
     assert(scanCount("q103_lsvi_forest_globaal") <= 2)
@@ -377,10 +372,8 @@ class ScanCountSpec extends SparkSuite {
       .map(q => s"$q=${scanCount(q)}/${shuffleCount(q)}").mkString(", "))
     // q106 invoked ONCE (its construction replays the stream); only the
     // batch resolve tail is plannable here
-    val plan106 = SparkEntry.queries("q106_dedup_stream")(
-      spark, "/root/testdata/sf0.001").queryExecution.executedPlan.toString
-    val sh106 = "Exchange".r.findAllIn(plan106).size -
-      "BroadcastExchange".r.findAllIn(plan106).size
+    val sh106 = PlanStats.shuffles(SparkEntry.queries("q106_dedup_stream")(
+      spark, "/root/testdata/sf0.001"))
     assert(sh106 <= 2, s"q106 resolve-tail shuffles: $sh106")
   }
 

@@ -1,25 +1,19 @@
 package graft
 
+import graft.core.GraftSession
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.internal.StaticSQLConf
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM-wide session; suites run
-  * sequentially under sbt's single test JVM). It is the first session in
-  * the forked test JVM, so it sizes the codegen class cache the way the
-  * shipped `GraftExtensions` does. */
+  * sequentially under sbt's single test JVM). Built by the shipped
+  * `GraftSession`, so tests plan and run with the extensions, optimizer
+  * rules and settings that ship; only the core count and a throwaway
+  * warehouse dir are the suite's own. */
 object SparkTestBase {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-tests")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-    .config("spark.ui.enabled", "false")
-    .config(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key,
-      GraftExtensions.CodegenCacheMaxEntries.toLong)
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession(cores = 4, extra = Map(
+    "spark.app.name" -> "graft-tests",
+    "spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft-warehouse").toString))
 }
 
 abstract class SparkSuite extends AnyFunSuite {

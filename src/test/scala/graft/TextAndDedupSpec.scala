@@ -186,8 +186,7 @@ class TextAndDedupSpec extends SparkSuite {
     // (here ~60) must yield at least one shared fingerprint
     assert((fp(1L).toSet & fp(2L).toSet).nonEmpty)
     assert((fp(5L).toSet & fp(1L).toSet).isEmpty) // disjoint text, no prints shared
-    // registered SQL surface agrees with the Column API
-    graft.GraftExtensions.register(spark)
+    // the installed SQL surface agrees with the Column API
     Seq((1L, docA)).toDF("doc_id", "text").createOrReplaceTempView("winnow_t")
     val viaSql = spark.sql(
       s"SELECT winnow_fingerprint(text, $k, $t) AS fp FROM winnow_t")

@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.PlanStats
 import graft.curation.Unimax
 import org.apache.spark.sql.functions._
 
@@ -85,8 +86,7 @@ class UnimaxSpec extends SparkSuite {
   test("q175's returned plan re-plans no corpus scan") {
     val df = SparkEntry.queries("q175_unimax_alloc")(
       spark, "/root/testdata/sf0.001")
-    val plan = df.queryExecution.sparkPlan.toString
-    val scans = "file:[^\\]\\s]*/(\\w+)\\.parquet".r.findAllMatchIn(plan).size
+    val scans = PlanStats.scans(df)
     assert(scans === 0,
       s"corpus re-planned past the checkpoint: $scans scans")
   }
