@@ -1,24 +1,17 @@
 package graft
 
-import graft.core.Materialize.StableOps
-import graft.core.Tables
-import graft.dedup.Dedup
-import graft.functions.{HashFunctions, VectorFunctions}
-import graft.lsvi.Lsvi
-import graft.multimodal.Media
-import graft.ops.{Aggs, Layout, Relational, Reshape}
-import graft.similarity.Ann
-import graft.streaming.Events
-import graft.text.Text
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.queries._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver contract — one `queries` entry per implemented operator from
   * SURVEY.md §2 (the key names cite the §2 row ids they cover), plus the
   * training-data-pipeline operator suite (dedup / similarity / text /
   * multimodal / streaming-batch-twin queries) over the `documents`,
   * `embeddings` and `events` tables.
+  *
+  * Each query is declared once, with its DuckDB oracle SQL, in a family
+  * object under `graft.queries`; `queries`, `oracleSql` and
+  * `ReferenceInputs` are derived from those declarations.
   *
   * Determinism contract (needed for hash-exact DuckDB oracle parity):
   *   - money sums use the exact-cents idiom (Aggs.sumExact) — integer
@@ -30,11319 +23,30 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   */
 object SparkEntry {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  /** Temp dir for queries that materialize a table mid-query (q139,
-    * q142). The returned DataFrame is evaluated AFTER the query
-    * function returns, so the dir cannot be deleted inline; a JVM
-    * shutdown hook reaps every dir instead — repeated bench samples
-    * no longer accumulate table copies for the life of the machine. */
-  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      tempDirs.forEach { d =>
-        try
-          java.nio.file.Files.walk(java.nio.file.Paths.get(d))
-            .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-            .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-        catch { case _: Throwable => () }
-      }))
-  }
-  private def tempResultDir(prefix: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(prefix).toString
-    tempDirs.add(d)
-    d
-  }
-
-  /** q169's written IVFADC index, memoized per sf dir: building is the
-    * one-time batch job of the serving story, so repeated invocations
-    * (bench medians, scale-curve passes) probe the SAME written index;
-    * the dirs ride the [[tempDirs]] shutdown reaper. */
-  private val ivfPqIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      graft.similarity.Ann.IvfPqIndex]()
-
-  /** q203's trained per-direction quantizer states, memoized per sf
-    * dir (the [[ivfPqIndexCache]] pattern): training is the rare
-    * batch job of the mining story, so repeated invocations (bench
-    * medians, scale-curve passes) measure CODING + PROBING + RE-RANK —
-    * the serving cost — not quantizer re-training. q207 keeps the
-    * uncached in-query training gated as the honest E2E twin. */
-  private val ivfPqStateCache =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      graft.similarity.Ann.IvfPqState]()
-
-  /** Streaming read of the events table with the same schema-adaptive
-    * `ts` normalization as the batch path (`Tables.normalizeEventsTs`):
-    * the harness has generated events.ts both as INT64 TIMESTAMP(NANOS)
-    * (surfacing as a raw long under nanosAsLong) and as native micros. */
-  private def eventsStream(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = Tables.observedSchema(s, dir, "events")
-    Tables.normalizeEventsTs(s, s.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir))
-  }
-
-  /** round(x*10^s) as bigint — exact fixed-point per-row scaling. */
-  private def cents(c: Column, scale: Int): Column =
-    round(c * math.pow(10, scale)).cast("long")
-
-  /** Engine-stable 6-decimal rounding for NON-NEGATIVE values:
-    * `floor(x*1e6 + 0.5)/1e6`, the exact float sequence DuckDB's
-    * `floor(x*1e6 + 0.5)/1e6` runs. Spark's `round()` goes through
-    * BigDecimal (exact decimal view of the double) while DuckDB's
-    * multiplies in floating point — on values that land exactly on a
-    * .5 e-6 boundary the two disagree by 1 ulp (seen at sf0.1). The
-    * matching SQL is [[round6Sql]]. */
-  private def round6(c: Column): Column =
-    floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
-
-  private def round6Sql(expr: String): String =
-    s"floor(($expr)*1e6 + 0.5)/1e6"
-
-  private val extDisc: Column =
-    col("l_extendedprice") * (lit(1) - col("l_discount"))
-
-  /** Query name → the published reference-snapshot file it opens. These
-    * queries read that file as well as (or instead of) the sf dir, so
-    * they can be planned only where the snapshot is present; the
-    * snapshot is not part of the repository. */
-  val ReferenceInputs: Map[String, String] = Map(
-    "q158_roi_overlay" -> ("/root/reference/processed/3260_steekproefkader/" +
-      "steekproefkader_3260_v1_7_strata.shp"),
-    "q163_gpkg_design" -> ("/root/reference/processed/design_watersurfaces/" +
-      "mhq_standingwater_cycle2_2024-04-17.gpkg"))
-
-  /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
-  def entry(spark: SparkSession): DataFrame =
-    queries("q01_pricing_summary")(spark, "/root/testdata/sf0.001")
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // ---- aggregations (§2.4 A1-A3) ----
-    "q01_pricing_summary" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-          sum(col("l_quantity")).as("sum_qty"),
-          (sum(cents(col("l_extendedprice"), 2)) / 100.0).as("sum_base_price"),
-          (sum(cents(extDisc, 4)) / 10000.0).as("sum_disc_price"),
-          count(lit(1)).as("count_order"))
-    }),
-
-    // ---- multi-way dimension join (§2.3 J1/J2/J9) ----
-    "q02_region_revenue" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(t(s, dir, "nation")), col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(t(s, dir, "region")), col("n_regionkey") === col("r_regionkey"))
-        .groupBy("r_name")
-        .agg(
-          (sum(cents(extDisc, 4)) / 10000.0).as("revenue"),
-          count_distinct(col("o_orderkey")).as("n_orders"))
-    }),
-
-    // ---- top-n after aggregation (§2.4 A12) ----
-    "q03_top_orders" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg((sum(cents(extDisc, 4)) / 10000.0).as("revenue"))
-        .orderBy(col("revenue").desc, col("l_orderkey").asc)
-        .limit(10)
-    }),
-
-    // ---- left join with unmatched rows (§2.3 J1, §2.2 P6) ----
-    "q04_part_line_stats" -> ((s, dir) => {
-      val part = t(s, dir, "part")
-      val li = t(s, dir, "lineitem")
-      part.join(li, part("p_partkey") === li("l_partkey"), "left")
-        .groupBy("p_partkey")
-        .agg(
-          count(col("l_orderkey")).as("n_lines"),
-          coalesce(sum(col("l_quantity")), lit(0.0)).as("total_qty"))
-    }),
-
-    // ---- semi join (§2.3 J6) ----
-    "q05_big_order_customers" -> ((s, dir) => {
-      val big = t(s, dir, "orders").where(col("o_totalprice") > 300000)
-      t(s, dir, "customer")
-        .join(big, col("c_custkey") === col("o_custkey"), "left_semi")
-        .select("c_custkey", "c_name", "c_mktsegment")
-    }),
-
-    // ---- anti join (§2.3 J7) ----
-    "q06_never_bulk_ordered" -> ((s, dir) => {
-      val bulk = t(s, dir, "lineitem").where(col("l_quantity") >= 48)
-      t(s, dir, "part")
-        .join(bulk, col("p_partkey") === col("l_partkey"), "left_anti")
-        .select("p_partkey", "p_name")
-    }),
-
-    // ---- full outer join (§2.3 J5, §2.2 P15) ----
-    "q07_nation_coverage" -> ((s, dir) => {
-      val cn = t(s, dir, "customer").groupBy(col("c_nationkey").as("nationkey"))
-        .agg(count(lit(1)).as("n_customers"))
-      val sn = t(s, dir, "supplier").groupBy(col("s_nationkey").as("nationkey"))
-        .agg(count(lit(1)).as("n_suppliers"))
-      cn.join(sn, Seq("nationkey"), "full")
-        .select(col("nationkey"),
-          coalesce(col("n_customers"), lit(0L)).as("n_customers"),
-          coalesce(col("n_suppliers"), lit(0L)).as("n_suppliers"))
-    }),
-
-    // ---- membership flag / semi-join as boolean (§2.3 J10) ----
-    "q08_membership_flag" -> ((s, dir) => {
-      Relational.withMembershipFlag(
-          t(s, dir, "customer"), "c_custkey",
-          t(s, dir, "orders").where(col("o_totalprice") > 300000).select("o_custkey"),
-          "o_custkey", "has_big_order")
-        .select("c_custkey", "has_big_order")
-    }),
-
-    // ---- latest record per key (§2.5 W2) ----
-    "q09_latest_order" -> ((s, dir) => {
-      Relational.latestPerKey(t(s, dir, "orders"), Seq("o_custkey"),
-          Seq(col("o_orderdate").desc, col("o_orderkey").desc))
-        .select(col("o_custkey"), col("o_orderkey"),
-          col("o_orderdate").cast("date").as("latest_date"))
-    }),
-
-    // ---- duplicate-key probe rows (§2.5 W1) ----
-    "q10_dup_order_days" -> ((s, dir) => {
-      val withDay = t(s, dir, "orders")
-        .withColumn("order_day", col("o_orderdate").cast("date"))
-      Relational.withGroupCount(withDay, Seq("o_custkey", "order_day"), "n")
-        .where(col("n") > 1)
-        .select("o_orderkey", "o_custkey", "n")
-    }),
-
-    // ---- slice_min with ties (§2.5 W3) ----
-    "q11_first_shipment" -> ((s, dir) => {
-      Relational.slicePerKeyWithTies(t(s, dir, "lineitem"), Seq("l_orderkey"),
-          Seq(col("l_shipdate").asc))
-        .select(col("l_orderkey"), col("l_linenumber"),
-          col("l_shipdate").cast("date").as("ship_day"))
-    }),
-
-    // ---- group sum kept on rows (§2.5 W5) ----
-    "q12_line_share" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .withColumn("line_cents", cents(extDisc, 4))
-        .withColumn("share", round(
-          col("line_cents") / sum(col("line_cents")).over(Window.partitionBy("l_orderkey")), 6))
-        .select("l_orderkey", "l_linenumber", "share")
-    }),
-
-    // ---- group-max fill of nulls (§2.5 W6, §2.2 P15) ----
-    "q13_fill_group_max" -> ((s, dir) => {
-      val nulled = t(s, dir, "events")
-        .withColumn("v", when(col("event_type") === "error", lit(null).cast("double"))
-          .otherwise(col("value")))
-      Relational.fillWithGroupMax(nulled, Seq("user_id"), "v")
-        .select(col("event_id"), col("user_id"), col("v").as("value_filled"))
-    }),
-
-    // ---- distinct count per group as filter (§2.5 W7) ----
-    "q14_multi_status_custs" -> ((s, dir) => {
-      Relational.withGroupDistinctCount(t(s, dir, "orders"), Seq("o_custkey"),
-          col("o_orderstatus"), "n_status")
-        .where(col("n_status") > 1)
-        .select("o_custkey", "n_status")
-        .distinct()
-    }),
-
-    // ---- pivot_wider (§2.6 R2) ----
-    "q15_status_pivot" -> ((s, dir) => {
-      Reshape.pivotWide(t(s, dir, "orders"), Seq("o_custkey"), "o_orderstatus",
-          Seq("F", "O", "P"), count(lit(1)), fill = Some(lit(0L)), prefix = "n_")
-        .withColumnRenamed("n_F", "n_f")
-        .withColumnRenamed("n_O", "n_o")
-        .withColumnRenamed("n_P", "n_p")
-    }),
-
-    // ---- pivot_longer / melt (§2.6 R1/R5) ----
-    "q16_part_melt" -> ((s, dir) => {
-      Reshape.melt(
-        t(s, dir, "part").select(col("p_partkey"), col("p_retailprice"),
-          col("p_size").cast("double").as("p_size_d")),
-        ids = Seq("p_partkey"), values = Seq("p_retailprice", "p_size_d"))
-    }),
-
-    // ---- multi-value pivot_wider (§2.6 R3) ----
-    "q36_pivot_multi" -> ((s, dir) => {
-      Reshape.pivotWideMulti(t(s, dir, "orders"),
-          keys = Seq("o_custkey"), pivotCol = "o_orderstatus",
-          levels = Seq("F", "O", "P"),
-          aggs = Seq(
-            count(lit(1)) -> "n",
-            (sum(cents(col("o_totalprice"), 2)) / 100.0) -> "total"))
-        .na.fill(0L, Seq("f_n", "o_n", "p_n"))
-    }),
-
-    // ---- J13: paired compare via self-pivot on periode — the plot
-    // coordinate-displacement pattern (multi-value pivot + Euclidean
-    // distance, process_external_data.Rmd:103-106) ----
-    "q75_coord_displacement" -> ((s, dir) => {
-      val sup = t(s, dir, "supplier")
-      val p1 = sup.select(col("s_suppkey").as("plot_id"), lit("1").as("periode"),
-        ((col("s_suppkey") * 7) % 1000).cast("double").as("x"),
-        ((col("s_suppkey") * 13) % 1000).cast("double").as("y"))
-      val p2 = sup.select(col("s_suppkey").as("plot_id"), lit("2").as("periode"),
-        (((col("s_suppkey") * 7) % 1000) + (col("s_suppkey") % 9) - 4).cast("double").as("x"),
-        (((col("s_suppkey") * 13) % 1000) + (col("s_suppkey") % 7) - 3).cast("double").as("y"))
-      val wide = Reshape.pivotWideMulti(p1.unionByName(p2),
-        keys = Seq("plot_id"), pivotCol = "periode", levels = Seq("1", "2"),
-        aggs = Seq(min(col("x")) -> "x", min(col("y")) -> "y"))
-      wide.withColumn("displacement_m", round(
-          sqrt(pow(col("1_x") - col("2_x"), 2) + pow(col("1_y") - col("2_y"), 2)), 6))
-        .select("plot_id", "1_x", "1_y", "2_x", "2_y", "displacement_m")
-    }),
-
-    // ---- separate (§2.6 R4) ----
-    "q17_separate_name" -> ((s, dir) => {
-      Reshape.separate(t(s, dir, "part"), "p_name", Seq("color", "object"), " ")
-        .select("p_partkey", "color", "object")
-    }),
-
-    // ---- union by name with tag (§2.8 U1, E1 step 3) ----
-    "q18_union_cycles" -> ((s, dir) => {
-      val orders = t(s, dir, "orders")
-      val early = orders.where(year(col("o_orderdate")) < 1998)
-        .select("o_orderkey", "o_totalprice")
-      val late = orders.where(year(col("o_orderdate")) >= 1998)
-        .select("o_orderkey")
-      Relational.unionCycles(Seq(1 -> early, 2 -> late))
-    }),
-
-    // ---- case_when recode (§2.2 P12/P13) ----
-    "q19_priority_recode" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .withColumn("priority_class",
-          when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"), "high")
-            .when(col("o_orderpriority") === "3-MEDIUM", "medium")
-            .otherwise("low"))
-        .groupBy("priority_class")
-        .agg(count(lit(1)).as("n"))
-    }),
-
-    // ---- string scalar functions (§2.7) ----
-    "q20_string_funcs" -> ((s, dir) => {
-      t(s, dir, "customer").select(
-        col("c_custkey"),
-        lower(col("c_name")).as("name_lower"),
-        substring(col("c_name"), 1, 8).as("name_prefix"),
-        regexp_extract(col("c_name"), "([0-9]+)", 1).cast("long").as("cust_num"),
-        length(col("c_name")).as("name_len"),
-        concat_ws("-", col("c_mktsegment"), col("c_name")).as("seg_name"))
-    }),
-
-    // ---- date scalar functions (§2.7) ----
-    "q21_year_stats" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .groupBy(year(col("o_orderdate")).as("order_year"))
-        .agg(
-          count(lit(1)).as("n_orders"),
-          (sum(cents(col("o_totalprice"), 2)) / 100.0).as("sum_total"))
-    }),
-
-    // ---- coalesce / nullif / least (§2.2 P14/P15, §2.7) ----
-    "q22_discount_rules" -> ((s, dir) => {
-      t(s, dir, "lineitem").select(
-        col("l_orderkey"), col("l_linenumber"),
-        coalesce(nullif(col("l_discount"), lit(0.0)), lit(0.05)).as("discount_imputed"),
-        round(least(col("l_discount") + col("l_tax"), lit(0.15)), 6).as("charge_rate"),
-        greatest(col("l_quantity"), lit(10.0)).as("qty_floor"))
-    }),
-
-    // ---- complement-product cover union (§2.4 A7 / §2.10 K3-adjacent) ----
-    "q23_discount_union" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(round6(Aggs.complementProductSorted(col("l_discount")))
-          .as("effective_discount"))
-    }),
-
-    // ---- ordered group string concat (§2.4 A10) ----
-    "q24_status_concat" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .groupBy("o_custkey")
-        .agg(Aggs.stringAggSorted(col("o_orderstatus"), ";").as("statuses"))
-    }),
-
-    // ---- boolean any/all aggregation (§2.4 A5) ----
-    "q25_bool_flags" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .groupBy("o_custkey")
-        .agg(
-          Aggs.boolAny(col("o_orderpriority") === "1-URGENT").as("any_urgent"),
-          Aggs.boolAll(col("o_orderstatus") === "F").as("all_finished"))
-    }),
-
-    // ---- assert-single-value collapse (§2.4 A9) ----
-    "q26_nation_region" -> ((s, dir) => {
-      val cols = Aggs.singleValue(col("n_regionkey"), "regionkey_first")
-      t(s, dir, "nation").groupBy("n_nationkey").agg(cols.head, cols.tail: _*)
-    }),
-
-    // ---- stddev / avg (§2.4 A8, A11) ----
-    "q27_qty_stats" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .groupBy("l_returnflag")
-        .agg(
-          count(lit(1)).as("n"),
-          round(sum(col("l_quantity")) / count(lit(1)), 6).as("avg_qty"),
-          round(stddev_samp(col("l_quantity")), 6).as("sd_qty"))
-    }),
-
-    // ---- grouped ratio summaries (§2.4 A11, A4) ----
-    "q28_acctbal_ratio" -> ((s, dir) => {
-      t(s, dir, "customer")
-        .groupBy("c_nationkey")
-        .agg(
-          count(lit(1)).as("n_customers"),
-          round(lit(100.0) * count(when(col("c_acctbal") > 0, 1)) / count(lit(1)), 6)
-            .as("pct_positive"))
-    }),
-
-    // ---- event-time tumbling window, batch twin of streaming (§2.9) ----
-    "q29_events_hourly" -> ((s, dir) => {
-      Events.hourlyStats(t(s, dir, "events"))
-        .select(date_format(col("hour"), "yyyy-MM-dd HH:mm:ss").as("hour"),
-          col("event_type"), col("n_events"), col("sum_value"))
-    }),
-
-    // ---- sessionization, batch twin of mapGroupsWithState (§2.9) ----
-    "q30_user_sessions" -> ((s, dir) =>
-      Events.sessionCounts(t(s, dir, "events"), gapMinutes = 30)),
-
-    // ---- regex field extraction from semi-structured props (§2.7) ----
-    "q31_events_props" -> ((s, dir) => {
-      t(s, dir, "events")
-        .withColumn("k", regexp_extract(col("props"), "\"k\": ([0-9]+)", 1).cast("int"))
-        .groupBy("event_type")
-        .agg(
-          round(sum(col("k")) / count(lit(1)), 6).as("avg_k"),
-          max(col("k")).as("max_k"))
-    }),
-
-    // ---- salted two-phase aggregation (hot-key mitigation): must be
-    // plan-equivalent to a plain groupBy count — the oracle IS the
-    // plain form, so the rewrite's correctness is hash-checked ----
-    "q33_salted_hot_count" -> ((s, dir) =>
-      graft.ops.Skew.saltedCount(t(s, dir, "orders"), Seq("o_orderpriority"))),
-
-    // ---- Structured Streaming twin of q29: the same tumbling-window
-    // aggregation executed as a streaming query over the events parquet
-    // (memory sink, complete mode) — checked against the SAME DuckDB
-    // oracle as the batch form, proving batch/stream parity ----
-    "q32_events_hourly_stream" -> ((s, dir) => {
-      val stream = eventsStream(s, dir)
-      val sink = "graft_q32_sink"
-      Events.withStatePartitions(s, 8) {
-        val q = Events.hourlyStats(stream)
-          .writeStream.format("memory").queryName(sink).outputMode("complete").start()
-        q.processAllAvailable()
-        q.stop()
-      }
-      s.table(sink)
-        .select(date_format(col("hour"), "yyyy-MM-dd HH:mm:ss").as("hour"),
-          col("event_type"), col("n_events"), col("sum_value"))
-    }),
-
-    // ---- stateful streaming: mapGroupsWithState sessionization run as
-    // a real streaming query, oracle-checked against the batch window
-    // formulation (state = one (count, lastTs) pair per user) ----
-    "q34_sessions_stateful_stream" -> ((s, dir) => {
-      val stream = eventsStream(s, dir)
-      val sink = "graft_q34_sink"
-      Events.withStatePartitions(s, 8) {
-        val q = Events.sessionCountsStream(s, stream, gapMinutes = 30)
-          .writeStream.format("memory").queryName(sink).outputMode("update").start()
-        q.processAllAvailable()
-        q.stop()
-      }
-      s.table(sink).select(col("user_id"), col("n_sessions"))
-    }),
-
-    // ---- streaming exact-duplicate suppression twin: state bounded by
-    // key-cardinality x watermark horizon (dropDuplicatesWithinWatermark);
-    // emits only the key columns so the result is survivor-independent
-    // and hash-checkable against DISTINCT in the oracle ----
-    "q37_events_dedup_stream" -> ((s, dir) => {
-      val stream = eventsStream(s, dir)
-      val sink = "graft_q37_sink"
-      Events.withStatePartitions(s, 8) {
-        val q = graft.streaming.Events
-          .distinctKeysStream(stream, Seq("user_id", "event_type"))
-          .writeStream.format("memory").queryName(sink).outputMode("append").start()
-        q.processAllAvailable()
-        q.stop()
-      }
-      s.table(sink)
-    }),
-
-    // ---- streaming near-dup dedup (DedupStream, md5-arithmetic since
-    // round 17 — ORACLE-GATED): real Structured Streaming replay of the
-    // documents table through the per-bucket signature state, then the
-    // cross-band min-canonical resolve. The md5-slice signatures +
-    // integer agreement floor make the arrival-order state machine
-    // SQL-replayable: with the corpus in one micro-batch (id-sorted per
-    // bucket), a doc's band verdict is the min id reachable through
-    // ≥-agreeMin edges to earlier-id members — a recursive closure the
-    // oracle replays per bucket. The xxhash64 form (bandVerdicts)
-    // remains the codegen'd throughput path, batch-twin-pinned by
-    // DedupStreamSpec. ----
-    "q106_dedup_stream" -> ((s, dir) => {
-      val schema = Tables.observedSchema(s, dir, "documents")
-      val stream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
-      val sink = "graft_q106_sink"
-      graft.streaming.Events.withStatePartitions(s, 8) {
-        val q = graft.streaming.DedupStream
-          .bandVerdictsMd5(stream, "text", "doc_id",
-            tauMicros = Md5MinhashTauMicros, k = Md5MinhashK,
-            bands = Md5MinhashBands)
-          .writeStream.format("memory").queryName(sink).outputMode("append").start()
-        q.processAllAvailable()
-        q.stop()
-      }
-      graft.streaming.DedupStream.resolveCanonical(s.table(sink))
-    }),
-
-    // ---- winnowing canonical ids (md5-arithmetic since round 17 —
-    // ORACLE-GATED): the O(n)-output doc->representative form over
-    // md5 robust-winnowing fingerprints; the xxhash64 kernel form
-    // (winnowCanonicalIds) remains the map-side throughput path,
-    // chain collapse pinned by TextAndDedupSpec ----
-    "q105_winnow_canonical" -> ((s, dir) =>
-      graft.dedup.Dedup.winnowCanonicalIdsMd5(t(s, dir, "documents"), "text", "doc_id")),
-
-    // ---- winnowing document fingerprints (MOSS robust winnowing,
-    // md5-arithmetic since round 17 — ORACLE-GATED): per-doc stats of
-    // the selected k=16-char-gram fingerprints, window t=8; the
-    // rightmost-min pick set replays in SQL via the shared lag/lead
-    // formula ----
-    "q38_docs_winnow" -> ((s, dir) =>
-      graft.dedup.Dedup.winnowSelectedMd5(t(s, dir, "documents"), "text", "doc_id", 16, 8)
-        .groupBy(col("id").as("doc_id"))
-        .agg(count(lit(1)).as("n_fingerprints"),
-          countDistinct(col("h")).as("n_distinct_fp"),
-          min_by(col("h"), col("p")).as("first_fp"),
-          sum(col("h")).as("fp_sum"))),
-
-    // ---- exact dedup: canonical id per content fingerprint ----
-    "q40_docs_exact_dedup" -> ((s, dir) =>
-      Dedup.exactCanonicalIds(t(s, dir, "documents"), "text", "doc_id")),
-
-    // ---- token counting ----
-    "q41_docs_tokens" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      d.select(
-        col("doc_id"),
-        Text.tokenCount(col("text")).as("n_tokens"),
-        Text.bpeishTokenCount(col("text")).as("n_tokens_bpe"),
-        length(col("text")).as("n_chars_measured"),
-        round(length(translate(col("text"), " ", "")).cast("double") /
-          Text.tokenCount(col("text")), 6).as("avg_token_len"))
-    }),
-
-    // ---- quality scoring ----
-    "q42_docs_quality" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      d.select(
-        col("doc_id"),
-        Text.tokenCount(col("text")).as("n_tokens"),
-        round(Text.punctRatio(col("text")), 6).as("punct_ratio"),
-        round(Text.stopwordRatio(col("text"), Text.EnglishStop), 6).as("stop_ratio"),
-        Text.qualityScore(col("text")).as("quality"))
-    }),
-
-    // ---- language-ID heuristic ----
-    "q43_docs_langid" -> ((s, dir) => {
-      t(s, dir, "documents").select(
-        col("doc_id"),
-        Text.langId(col("text")).as("lang_pred"),
-        (Text.langId(col("text")) === col("lang")).as("is_match"))
-    }),
-
-    // ---- document signatures (SimHash + MinHash, md5-arithmetic
-    // since round 17 — ORACLE-GATED): 32-bit md5 SimHash plus scalar
-    // projections of the 16-component md5-MinHash signature (first /
-    // last / integer-sum fold) rather than the raw array<bigint>: the
-    // driver's compare sorts every output column, which arrays break.
-    // ONE map-only scan since round 19: both fused kernels
-    // (Md5SimHash32 + Md5MinhashSig) compute side by side in a single
-    // projection — the round-18 report still paid a second documents
-    // scan + a doc_id join to emit both families; with both kernels
-    // per-row there is nothing to join (token-less docs: sig 0 via
-    // the coalesce contract, null minhash columns via the kernel's
-    // null struct — exactly the old left join's gap rows). The
-    // xxhash64 kernels (simhash64 / minhashSignature) stay the
-    // codegen'd throughput path. ----
-    "q44_docs_signatures" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      d.select(col("doc_id"),
-          coalesce(HashFunctions.md5Simhash32(Text.tokens(col("text"))),
-            lit(0L)).as("simhash"),
-          HashFunctions.md5MinhashSig(
-            Dedup.md5UnitExpr("text", 1), Md5MinhashK).as("__ms"))
-        .select(col("doc_id"), col("simhash"),
-          col("__ms.sig").getItem(0).as("minhash_first"),
-          col("__ms.sig").getItem(Md5MinhashK - 1).as("minhash_last"),
-          aggregate(col("__ms.sig"), lit(0L), (acc, x) => acc + x)
-            .as("minhash_fold"))
-    }),
-
-    // ---- MinHash-LSH near-dup detection (md5-arithmetic since round
-    // 17 — ORACLE-GATED: band keys, agreement prefilter, integer
-    // Jaccard verify and the CC closure all replay in DuckDB).
-    // Canonical-id output, NOT the pair list: inside a bucket of m
-    // near-identical docs the pair list is m(m-1)/2 rows (judge-measured
-    // 175,817 pairs at sf0.1 vs 1,692 at sf0.01 — quadratic on this
-    // degenerate corpus) while the doc->canonical mapping is O(n). Only
-    // clustered docs are emitted; banding stays highly selective
-    // (2 bands x 8 md5 minima) so candidates stay near-linear too. The
-    // xxhash64 form (minhashCanonicalIds) stays the throughput path.
-    "q45_minhash_neardups" -> ((s, dir) =>
-      Dedup.minhashCanonicalIdsMd5(t(s, dir, "documents"), "text", "doc_id",
-          tauMicros = Md5MinhashTauMicros, shingleSize = 1,
-          k = Md5MinhashK, bands = Md5MinhashBands)
-        .where(col("canonical_id") =!= col("doc_id"))),
-
-    // ---- blocked exact n-gram Jaccard pairs ----
-    "q46_blocked_jaccard" -> ((s, dir) =>
-      Dedup.blockedJaccardPairs(t(s, dir, "documents"), "text", "doc_id",
-        Seq("lang", "source"), threshold = 0.5)),
-
-    // ---- SimHash near-dup canonical ids (md5-arithmetic since round
-    // 17 — ORACLE-GATED): 32-bit md5 bit planes in four 8-bit bands
-    // (pigeonhole recall for Hamming <= 3), O(n) output rows via
-    // bucket-representative edges, like q45; the 64-bit xxhash64 form
-    // (simhashCanonicalIds) stays the throughput path ----
-    "q47_simhash_neardups" -> ((s, dir) =>
-      Dedup.simhashCanonicalIdsMd5(t(s, dir, "documents"), "text", "doc_id",
-        maxHamming = 3)),
-
-    // ---- exact quantiles per group (corpus length statistics) ----
-    "q48_length_quantiles" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .withColumn("n_tokens", Text.tokenCount(col("text")).cast("double"))
-        .groupBy("lang")
-        .agg(
-          round(expr("percentile(n_tokens, 0.5)"), 6).as("median_tokens"),
-          round(expr("percentile(n_tokens, 0.9)"), 6).as("p90_tokens"),
-          count(lit(1)).as("n_docs"))
-    }),
-
-    // ---- top-fraction quality selection (keep best 30% per lang) ----
-    "q49_quality_topfrac" -> ((s, dir) => {
-      val scored = t(s, dir, "documents")
-        .withColumn("quality", Text.qualityScore(col("text")))
-      scored.withColumn("pr", percent_rank().over(
-          Window.partitionBy("lang").orderBy(col("quality").desc, col("doc_id").asc)))
-        .where(col("pr") <= 0.3)
-        .select("doc_id", "lang", "quality")
-    }),
-
-    // ---- deterministic stratified sampling (N docs per source, keyed
-    // by content hash so the sample is stable across runs/engines) ----
-    "q65_stratified_sample" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .withColumn("h", md5(col("text")))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("source").orderBy(col("h").asc, col("doc_id").asc)))
-        .where(col("rn") <= 5)
-        .select("source", "doc_id", "h")
-    }),
-
-    // ---- vocabulary top-k: token frequencies per language ----
-    "q66_vocab_topk" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .select(col("lang"), explode(Text.tokens(col("text"))).as("token"))
-        .groupBy("lang", "token")
-        .agg(count(lit(1)).as("n"))
-        .withColumn("rk", row_number().over(
-          Window.partitionBy("lang").orderBy(col("n").desc, col("token").asc)))
-        .where(col("rk") <= 10)
-        .select(col("lang"), col("token"), col("n"), col("rk"))
-    }),
-
-    // ---- full corpus curation as one declarative plan: exact-dedup
-    // survivors + length gate + per-language quality selection ----
-    "q67_corpus_curation" -> ((s, dir) =>
-      graft.pipelines.Curation.curatedIds(t(s, dir, "documents"))),
-
-    // ---- brute-force cosine top-k (ANN baseline) ----
-    "q50_ann_bruteforce" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      Ann.bruteForceTopK(e.where(col("vec_id") < 10), e, "vec_id", "embedding", k = 5)
-    }),
-
-    // ---- LSH-bucketed ANN (scale path; no SQL oracle). 64-bit
-    // signature in 16 x 4-bit bands: this corpus is near-random unit
-    // vectors (top-5 cosine ~0.4 -> per-hyperplane agreement ~0.63), so
-    // narrow bands are the recall knob — 16 bands give ~0.9 recall@5
-    // (RecallSpec) where the old 2 x 8-bit banding measured 0.02. The
-    // extra candidates only scale the broadcast top-k's scored rows
-    // (queries are few), never an all-pairs join. ----
-    "q51_ann_lsh" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      Ann.lshTopK(e.where(col("vec_id") < 10), e, "vec_id", "embedding", k = 5,
-        bits = 64, bandBits = 4)
-    }),
-
-    // ---- IVF ANN: deterministic k-means coarse quantizer + nprobe
-    // cell search (no SQL oracle: quantizer is iterative; per-pair
-    // scores are exact-verified against brute force in the specs) ----
-    "q54_ann_ivf" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      Ann.ivfTopK(e.where(col("vec_id") < 10), e, "vec_id", "embedding", k = 5,
-        nCells = 16, nProbe = 4, iters = 2)
-    }),
-
-    // ---- embedding near-dup via hyperplane LSH (no SQL oracle) ----
-    "q52_embedding_neardups" -> ((s, dir) =>
-      Dedup.embeddingNearDups(t(s, dir, "embeddings"), "embedding", "vec_id",
-        threshold = 0.3)),
-
-    // ---- exact within-label cosine pairs (IVF-style coarse partition) ----
-    "q53_label_cosine_pairs" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val a = e.select(col("vec_id").as("id_a"), col("label"), col("embedding").as("vec_a"))
-      val b = e.select(col("vec_id").as("id_b"), col("label"), col("embedding").as("vec_b"))
-      a.join(b, Seq("label"))
-        .where(col("id_a") < col("id_b"))
-        .withColumn("cosine", round(VectorFunctions.cosineSim(col("vec_a"), col("vec_b")), 6))
-        .where(col("cosine") >= 0.3)
-        .select("id_a", "id_b", "cosine")
-    }),
-
-    // ---- spatial point-in-polygon join (J11) via grid-index prefilter.
-    // Deterministic synthetic geometry derived from the driver tables:
-    // rectangle rings, so DuckDB can oracle the join with interval
-    // predicates while Spark runs the generic ray-casting path. ----
-    "q61_pip_join" -> ((s, dir) => {
-      val pts = t(s, dir, "customer").select(
-        col("c_custkey").as("pid"),
-        ((col("c_custkey") * 7) % 97).cast("double").as("x"),
-        ((col("c_custkey") * 13) % 89).cast("double").as("y"))
-      val rect = t(s, dir, "nation").select(
-        col("n_nationkey").as("poly_id"),
-        (((col("n_nationkey") * 11) % 80).cast("double") - 0.5).as("x0"),
-        (((col("n_nationkey") * 17) % 70).cast("double") - 0.5).as("y0"))
-        .withColumn("x1", col("x0") + 15.0)
-        .withColumn("y1", col("y0") + 20.0)
-      val polys = rect.select(col("poly_id"), array(
-        struct(col("x0").as("x"), col("y0").as("y")),
-        struct(col("x1").as("x"), col("y0").as("y")),
-        struct(col("x1").as("x"), col("y1").as("y")),
-        struct(col("x0").as("x"), col("y1").as("y"))).as("ring"))
-      graft.geo.GeoJoin.pointInPolygonJoin(pts, polys, "x", "y", "ring", cellSize = 16.0)
-        .select("pid", "poly_id")
-    }),
-
-    // ---- spatial PIP join against MULTIPOLYGONS WITH HOLES (J11 on the
-    // habitat-map shape, check_observed_habitat_type.Rmd:99,148): part A
-    // is a rectangle with a rectangular hole, part B a disjoint
-    // rectangle; even-odd containment over all three rings. Rectangles
-    // keep it DuckDB-oracle-expressible with interval predicates while
-    // Spark runs the generic even-odd ray-casting path. ----
-    "q76_pip_multipolygon" -> ((s, dir) => {
-      val pts = t(s, dir, "customer").select(
-        col("c_custkey").as("pid"),
-        ((col("c_custkey") * 7) % 97).cast("double").as("x"),
-        ((col("c_custkey") * 13) % 89).cast("double").as("y"))
-      val rect = t(s, dir, "nation").select(
-        col("n_nationkey").as("poly_id"),
-        (((col("n_nationkey") * 11) % 80).cast("double") - 0.5).as("x0"),
-        (((col("n_nationkey") * 17) % 70).cast("double") - 0.5).as("y0"))
-      def p(x: org.apache.spark.sql.Column, y: org.apache.spark.sql.Column) =
-        struct(x.as("x"), y.as("y"))
-      def rectRing(ax: org.apache.spark.sql.Column, ay: org.apache.spark.sql.Column,
-                   bx: org.apache.spark.sql.Column, by: org.apache.spark.sql.Column) =
-        array(p(ax, ay), p(bx, ay), p(bx, by), p(ax, by))
-      val polys = rect.select(col("poly_id"), array(
-        rectRing(col("x0"), col("y0"), col("x0") + 15.0, col("y0") + 20.0),
-        rectRing(col("x0") + 4.0, col("y0") + 5.0, col("x0") + 8.0, col("y0") + 12.0),
-        rectRing(col("x0") + 18.0, col("y0"), col("x0") + 24.0, col("y0") + 8.0)
-      ).as("rings"))
-      graft.geo.GeoJoin.pointInMultiPolygonJoin(pts, polys, "x", "y", "rings",
-          cellSize = 16.0)
-        .select("pid", "poly_id")
-    }),
-
-    // ---- K1 plot-segment geometry: exact circle-clip areas + weights.
-    // Oracle-checked: the Green's-theorem edge decomposition
-    // (GeoKernels.circleIntersectionArea) is deterministic arithmetic, so
-    // the DuckDB oracle replays the same per-edge formula and the weights
-    // use exact fixed-point micro-m² so the per-plot sum is
-    // accumulation-order independent on both engines. ----
-    "q62_plot_segment_areas" -> ((s, dir) => {
-      val segs = t(s, dir, "part").select(
-        (col("p_partkey") % 500).as("plot_id"),
-        (col("p_partkey") / 500).cast("int").as("segment_id"),
-        (col("p_size") % 12 - 6).cast("double").as("x0"),
-        (col("p_partkey") % 9 - 4).cast("double").as("y0"))
-        .withColumn("x1", col("x0") + 8.0)
-        .withColumn("y1", col("y0") + 7.0)
-        .select(col("plot_id"), col("segment_id"), array(
-          struct(col("x0").as("x"), col("y0").as("y")),
-          struct(col("x1").as("x"), col("y0").as("y")),
-          struct(col("x1").as("x"), col("y1").as("y")),
-          struct(col("x0").as("x"), col("y1").as("y"))).as("ring"))
-      val byPlot = Window.partitionBy("plot_id")
-      graft.pipelines.PlotSegments.withAreas(segs)
-        .withColumn("a3_u", floor(col("area_a3_m2") * lit(1e6) + lit(0.5)).cast("long"))
-        .withColumn("plot_u", sum(col("a3_u")).over(byPlot))
-        .select(col("plot_id"), col("segment_id"),
-          round6(col("area_a3_m2")).as("area_a3_m2"),
-          round6(col("area_a4_m2")).as("area_a4_m2"),
-          when(col("plot_u") > 0,
-            round6(col("a3_u").cast("double") / col("plot_u").cast("double")))
-            .as("segment_weight_a3"))
-    }),
-
-    // ---- CRS transform 31370 <-> 4326. Oracle-checked: the whole chain
-    // (LCC-2SP inverse with its 16-step fixed iteration, ECEF, 7-param
-    // Helmert, 20-step geodetic iteration, and back) is a fixed formula
-    // sequence over EPSG registry constants, replayed verbatim in the
-    // DuckDB oracle with recursive CTEs for the iterations. ----
-    "q63_crs_roundtrip" -> ((s, dir) => {
-      val pts = t(s, dir, "supplier").select(
-        col("s_suppkey"),
-        (lit(140000.0) + col("s_suppkey") * 100).as("x"),
-        (lit(160000.0) + col("s_suppkey") * 80).as("y"))
-      pts.withColumn("wgs", graft.geo.GeoFunctions.toWgs84(col("x"), col("y")))
-        .withColumn("back", graft.geo.GeoFunctions.toLambert72(
-          col("wgs.lon"), col("wgs.lat")))
-        .select(col("s_suppkey"),
-          (floor(col("wgs.lon") * lit(1e7) + lit(0.5)) / lit(1e7)).as("lon"),
-          (floor(col("wgs.lat") * lit(1e7) + lit(0.5)) / lit(1e7)).as("lat"),
-          round6(abs(col("back.x") - col("x")) + abs(col("back.y") - col("y")))
-            .as("roundtrip_err_m"))
-    }),
-
-    // ---- session boundaries: per (user, session) start/end/size —
-    // the session-window shape (timestamps as exact epoch micros) ----
-    "q35_session_bounds" -> ((s, dir) => {
-      Events.sessionize(t(s, dir, "events"), gapMinutes = 30)
-        .groupBy("user_id", "session_seq")
-        .agg(
-          min(unix_micros(col("ts").cast("timestamp"))).as("start_us"),
-          max(unix_micros(col("ts").cast("timestamp"))).as("end_us"),
-          count(lit(1)).as("n_events"))
-        .withColumn("session_seq", col("session_seq").cast("long"))
-    }),
-
-    // ---- E2 LOQ/numeric/class parsing of raw qualifier strings:
-    // decimal-comma numerics, "<"/">"-marked LOQ values, class codes —
-    // value strings synthesized deterministically from lineitem ----
-    "q68_loq_parsing" -> ((s, dir) => {
-      val raw = t(s, dir, "lineitem")
-        .where(col("l_linenumber") === 1)
-        .select(col("l_orderkey"),
-          when(col("l_quantity") < 10, concat(lit("<"), translate(col("l_quantity").cast("string"), ".", ",")))
-            .when(col("l_quantity") > 45, concat(lit("> "), translate(col("l_quantity").cast("string"), ".", ",")))
-            .when(col("l_quantity") % 2 === 0, concat(lit("K"), (col("l_quantity") % 5).cast("int").cast("string")))
-            .otherwise(translate(col("l_quantity").cast("string"), ".", ","))
-            .as("value"))
-      graft.pipelines.Inboveg.loqAdjusted(
-          graft.pipelines.Inboveg.parseStructureValues(raw))
-        .select(col("l_orderkey"), col("value"), col("is_below_LOQ"),
-          col("is_above_LOQ"), col("is_numeric"), col("value_numeric"),
-          col("value_adjusted"))
-    }),
-
-    // ---- K2 LSVI rules engine: data-driven verdicts (detail table) ----
-    "q70_lsvi_detail" -> ((s, dir) =>
-      Lsvi.detail(lsviMeasurements(s, dir), lsviRules(s))
-        .withColumn("value_numeric", round(col("value_numeric"), 6))),
-
-    // ---- K2 LSVI rules engine: RapportageHR global aggregation ----
-    "q71_lsvi_globaal" -> ((s, dir) =>
-      Lsvi.globaal(Lsvi.indicator(Lsvi.detail(lsviMeasurements(s, dir), lsviRules(s))))),
-
-    // ---- K2 forest-detail report shape (`data_lsvi_forests.R:32`,
-    // `lsvi_detail_fs.yml`): verschilscore / theoretischmaximum /
-    // status_voorwaarde per condition, plus the plot_type and
-    // type_observed passthroughs. `waarde` is the measurement's
-    // character form (category, or the 6-decimal fixed-point print of
-    // the numeric value — printf semantics identical on both engines
-    // once the value is floor-rounded). ----
-    "q96_lsvi_detail_report" -> ((s, dir) => {
-      val meas = lsviMeasurements(s, dir)
-        .withColumn("type_observed",
-          when(col("id") % 2 === 0, "9120").otherwise("9130"))
-        .withColumn("plot_type",
-          when(col("voorwaarde").isin("avg_qty", "avg_price"), "square")
-            .otherwise("circle"))
-        .withColumn("waarde", coalesce(col("value_category"),
-          when(col("value_numeric").isNotNull,
-            format_string("%.6f", round6(col("value_numeric"))))))
-      Lsvi.detailReport(meas, lsviRules(s))
-        .withColumn("waarde_numeric", round6(col("waarde_numeric")))
-        .withColumn("verschilscore", round6(col("verschilscore")))
-    }),
-
-    // ---- K2 with the REAL Versie-3 rule content (graft.lsvi.Versie3,
-    // HT31xx_LSVI.Rmd:68-185): INBOVEG-shaped synthetic inputs exercise
-    // the full preparation path — LOQ parse + halving, class->value
-    // mapping, the VZuSS/Vzuur 3160 substitution, taxon
-    // canonicalization, TANSLEY sleutelsoorten aggregation — against the
-    // per-habitattype rule table, all mirrored in the DuckDB oracle. ----
-    "q77_lsvi_v3_detail" -> ((s, dir) => {
-      val (hab, sc, veg) = v3Inputs(s, dir)
-      graft.lsvi.Versie3.score(hab, sc, veg)._1
-        .withColumn("value_numeric", round(col("value_numeric"), 6))
-        .select("id", "habitattype", "criterium", "indicator", "voorwaarde",
-          "belang", "value_numeric", "op", "ref_numeric", "voldoet")
-    }),
-
-    "q78_lsvi_v3_globaal" -> ((s, dir) => {
-      val (hab, sc, veg) = v3Inputs(s, dir)
-      graft.lsvi.Versie3.score(hab, sc, veg)._4
-    }),
-
-    // ---- K2 FOREST Versie-3 rule content (graft.lsvi.Versie3Forests —
-    // the 203 published rule rows of lsvi_detail_fs.tsv) on synthetic
-    // forest plots: q102 reproduces the 17-column lsvi_detail_fs shape
-    // (skeleton left-join, NA rows kept, class-membership verdicts,
-    // validated verschilscore formula), q103 the lsvi_globaal_fs shape
-    // (RapportageHR + index/doelbereik means). ----
-    "q102_lsvi_forest_detail" -> ((s, dir) => {
-      val (plots, m) = forestInputs(s, dir)
-      graft.lsvi.LsviForest.detail(plots, m, graft.lsvi.Versie3Forests.rulesDf(s))
-        .drop("role", "aggregate")
-    }),
-
-    // The means are computed in 1e-6 fixed point (quantize each
-    // indicator verschilscore once, then integer sums all the way up):
-    // integer addition is order-independent, so Spark's partial
-    // aggregation and DuckDB's sequential scan produce bit-identical
-    // doubles — a float avg() of 3 criterium means straddles 6-decimal
-    // rounding boundaries between engines (observed at sf0.01).
-    "q103_lsvi_forest_globaal" -> ((s, dir) => forestGlobaal(s, dir)),
-
-    // ---- lsvi_plot_fs shape: the plot-level deliverable is the globaal
-    // report joined with plot metadata + the gunstig/ongunstig label
-    // (verified against the reference: all 1,174 published lsvi_plot_fs
-    // rows are exactly their lsvi_globaal_fs row + metadata) ----
-    "q108_lsvi_plot_report" -> ((s, dir) => {
-      val meta = t(s, dir, "customer").select(
-        concat(lit("FP_"), col("c_custkey")).as("id"),
-        (lit(14610) + col("c_custkey") % 3650).cast("long").as("date"),
-        concat(lit("vbi_"), col("c_custkey")).as("point_code"),
-        (lit(150000) + (col("c_custkey") * 97) % 100000).cast("double").as("x"),
-        (lit(150000) + (col("c_custkey") * 53) % 100000).cast("double").as("y"),
-        (col("c_custkey") % 2).cast("int").as("in_sac"))
-      forestGlobaal(s, dir).join(meta, Seq("id"))
-        .select(col("id"), col("date"), col("point_code"), col("x"), col("y"),
-          col("in_sac"),
-          when(col("type_analysis").startsWith("91E0"), "91E0")
-            .when(col("type_analysis") === "9130_end", "9130")
-            .otherwise(col("type_analysis")).as("habitattype"),
-          col("type_analysis").as("habitatsubtype"),
-          when(col("status"), "gunstig").otherwise("ongunstig").as("lsvi"),
-          col("aggregatiemethode"), col("n_zb_ongunstig"), col("aandeel_gunstig"),
-          col("index_mean_ind"), col("doelbereik_mean_ind"))
-    }),
-
-    // ---- K2 HEATH/INLAND-DUNES Versie-3 rule content
-    // (graft.lsvi.Versie3Heath — lsvi_detail_hs_id.tsv): same engine,
-    // second rule set, exercising the strict-> dynamic per-plot
-    // reference and the split status/score references. ----
-    "q107_lsvi_heath_globaal" -> ((s, dir) => {
-      val (plots, m) = heathInputs(s, dir)
-      lsviGlobaalFixedPoint(graft.lsvi.LsviForest.indicator(
-        graft.lsvi.LsviForest.detail(plots, m, graft.lsvi.Versie3Heath.rulesDf(s))))
-    }),
-
-    // ---- K2 COASTAL-DUNES and MONEOS Versie-3 rule content
-    // (graft.lsvi.Versie3Dunes / Versie3Moneos): fourth and fifth rule
-    // sets through the same engine — WT class-membership verdicts,
-    // split WT status/score references, zero-reference optimum. ----
-    "q109_lsvi_dunes_globaal" -> ((s, dir) => {
-      val v3d = graft.lsvi.Versie3Dunes
-      val (plots, m) = wtGroupInputs(s, dir, "DP_", v3d.habitattypes,
-        v3d.rules, v3d.wtCategorical.keySet)
-      lsviGlobaalFixedPoint(graft.lsvi.LsviForest.indicator(
-        graft.lsvi.LsviForest.detail(plots, m, v3d.rulesDf(s))))
-    }),
-
-    "q110_lsvi_moneos_globaal" -> ((s, dir) => {
-      val v3m = graft.lsvi.Versie3Moneos
-      val catVws = graft.lsvi.Versie3Dunes.wtCategorical.keySet ++
-        graft.lsvi.Versie3Forests.categorical.keySet
-      val (plots, m) = wtGroupInputs(s, dir, "MP_", v3m.habitattypes,
-        v3m.rules, catVws)
-      lsviGlobaalFixedPoint(graft.lsvi.LsviForest.indicator(
-        graft.lsvi.LsviForest.detail(plots, m, v3m.rulesDf(s))))
-    }),
-
-    // ---- K2 GRASSLAND/MARSH Versie-3 rule content
-    // (graft.lsvi.Versie3Grasslands): the sixth rule set — strict-<
-    // verdicts, a per-plot dynamic reference (rbbzil), and the T
-    // class/value references. ----
-    "q111_lsvi_grassland_globaal" -> ((s, dir) => {
-      val v3g = graft.lsvi.Versie3Grasslands
-      val (plots, m) = wtGroupInputs(s, dir, "GP_", v3g.habitattypes,
-        v3g.rules, v3g.tCategorical.keySet, Some(v3g.dynamicVoorwaarde))
-      lsviGlobaalFixedPoint(graft.lsvi.LsviForest.indicator(
-        graft.lsvi.LsviForest.detail(plots, m, v3g.rulesDf(s))))
-    }),
-
-    // ---- K2 STREAMS (3260) Versie-3 rule content
-    // (graft.lsvi.Versie3Streams): the seventh and final rule set — an
-    // OR-combined sleutelsoorten pair, a Tansley-class split reference
-    // (status 0.1 / score 0.05), and the HT3260_LSVI.Rmd:96-119
-    // multi-growth-form max-cover species prep feeding the key-species
-    // counts. ----
-    "q112_lsvi_streams_globaal" -> ((s, dir) => {
-      val (plots, m) = streamsInputs(s, dir)
-      lsviGlobaalFixedPoint(graft.lsvi.LsviForest.indicator(
-        graft.lsvi.LsviForest.detail(plots, m, graft.lsvi.Versie3Streams.rulesDf(s))))
-    }),
-
-    // ---- Design-level status/trend shapes over the per-plot LSVI
-    // results (graft.lsvi.LsviStatus): latest-cycle-per-point
-    // selection, stratified favourability with Wilson bounds and the
-    // Goed/Niet goed/Onbekend verdict (q113), the mean
-    // habitat-quality index with a normal interval (q114), and the
-    // McNemar paired two-cycle trend on weighted discordant pairs
-    // (q115) — the reference's status_indicatoren_fs / index_hq_fs /
-    // mc_nemar_fs shapes. ----
-    "q113_status_indicatoren" -> ((s, dir) => {
-      val (meta, ind) = statusInputs(s, dir)
-      graft.lsvi.LsviStatus.statusIndicatoren(ind, meta)
-    }),
-
-    "q114_index_hq" -> ((s, dir) => {
-      val (meta, _) = statusInputs(s, dir)
-      graft.lsvi.LsviStatus.indexHq(meta)
-    }),
-
-    "q115_mc_nemar" -> ((s, dir) => {
-      val (meta, _) = statusInputs(s, dir)
-      graft.lsvi.LsviStatus.mcNemar(meta)
-    }),
-
-    "q116_trend_indicatoren" -> ((s, dir) => {
-      val (meta, ind) = statusInputs(s, dir)
-      graft.lsvi.LsviStatus.trendIndicatoren(ind, meta)
-    }),
-
-    "q117_status_habitat" -> ((s, dir) => {
-      val (meta, _) = statusInputs(s, dir)
-      graft.lsvi.LsviStatus.statusHabitat(meta)
-    }),
-
-    "q118_index_ind" -> ((s, dir) => {
-      val (meta, ind) = statusInputs(s, dir)
-      graft.lsvi.LsviStatus.indexInd(ind, meta)
-    }),
-
-    "q119_trend_index_hq" -> ((s, dir) => {
-      val (meta, _) = statusInputs(s, dir)
-      graft.lsvi.LsviStatus.trendIndexHq(meta)
-    }),
-
-    "q120_trend_index_ind" -> ((s, dir) => {
-      val (meta, ind) = statusInputs(s, dir)
-      graft.lsvi.LsviStatus.trendIndexInd(ind, meta)
-    }),
-
-    // q121/q122 complete the published status/trend shape catalogue:
-    // the paired two-cycle habitat trend with the ten-class effect
-    // classification (trend_habitat_*.tsv — klasse thresholds +-12pp
-    // absolute / +-25% relative, validated 147/147 on the published
-    // rows in TrendBeheerShapesSpec) and the management split with the
-    // two-proportion chi-square (status_beheer_*.tsv).
-    "q121_trend_habitat" -> ((s, dir) => {
-      val (meta, _) = statusInputs(s, dir)
-      graft.lsvi.LsviStatus.trendHabitat(meta)
-    }),
-
-    "q122_status_beheer" -> ((s, dir) => {
-      val (meta, _) = statusInputs(s, dir)
-      graft.lsvi.LsviStatus.statusBeheer(meta)
-    }),
-
-    // ---- E4 external-variables pipeline (process_external_data.Rmd):
-    // PIP join to the habitat map + broadcast cluster/type dictionary
-    // joins (q123, the msa flow Rmd:117-126) and the paired-coordinate
-    // QA distance (q124, Rmd:96-106). Same rectangle-ring harness as
-    // q61: Spark runs the generic even-odd ray cast, the oracle
-    // expresses containment as interval predicates (half-integer
-    // edges, integer coordinates — no boundary ambiguity). ----
-    "q123_extra_vars_msa" -> ((s, dir) => {
-      val pts = t(s, dir, "customer").select(
-        col("c_custkey").as("plot_id"),
-        (col("c_custkey") % 2 + 2).as("periode"),
-        ((col("c_custkey") * 7) % 97).cast("double").as("x"),
-        ((col("c_custkey") * 13) % 89).cast("double").as("y"))
-      val polys = t(s, dir, "nation").select(
-        col("n_nationkey").as("polygon_id"),
-        (((col("n_nationkey") * 11) % 80).cast("double") - 0.5).as("x0"),
-        (((col("n_nationkey") * 17) % 70).cast("double") - 0.5).as("y0"))
-        .withColumn("x1", col("x0") + 15.0)
-        .withColumn("y1", col("y0") + 20.0)
-        .select(col("polygon_id"), array(
-          struct(col("x0").as("x"), col("y0").as("y")),
-          struct(col("x1").as("x"), col("y0").as("y")),
-          struct(col("x1").as("x"), col("y1").as("y")),
-          struct(col("x0").as("x"), col("y1").as("y"))).as("ring"))
-      val clusters = t(s, dir, "nation").select(
-        col("n_nationkey").as("polygon_id"),
-        (col("n_nationkey") % 7).as("cluster_id"))
-      val types = t(s, dir, "nation").where(col("n_nationkey") < 7).select(
-        col("n_nationkey").as("cluster_id"),
-        concat(lit("T"), col("n_nationkey") % 3).as("type"),
-        ((col("n_nationkey") + 1).cast("double") * 1.5).as("msa_area_ha"))
-      graft.pipelines.ExtraVars.msa(pts, polys, clusters, types,
-        Seq("plot_id", "periode", "type", "msa_area_ha"), cellSize = 16.0)
-    }),
-
-    "q124_coord_paired_check" -> ((s, dir) => {
-      val coords = t(s, dir, "customer").select(
-        expr("c_custkey div 2").as("idplots"),
-        (col("c_custkey") % 2 + 2).as("periode"),
-        when(expr("c_custkey div 2") % 5 === 0, lit(null).cast("long"))
-          .otherwise(expr("c_custkey div 2") % 13).as("idgroup"),
-        concat(lit("ht"), col("c_custkey") % 4).as("type"),
-        ((col("c_custkey") * 7) % 97).cast("double").as("x"),
-        ((col("c_custkey") * 13) % 89).cast("double").as("y"))
-      graft.pipelines.ExtraVars.pairedCoordinateDistance(coords, 2, 3)
-    }),
-
-    // ---- census / continuous published shapes (status_dikdoodhout,
-    // trend_dikdoodhout, status_habitat_2110, trend_habitat_2110):
-    // q125/q126 mean + normal interval of a measured per-plot value
-    // over latest-per-(point, subtype) strata with habitattype
-    // roll-ups for multi-subtype types; q127/q128 area-weighted
-    // census shares with pessimistic/optimistic unknown-area bounds
-    // and the factor-index trend klasse. ----
-    "q125_status_continuous" -> ((s, dir) =>
-      graft.lsvi.LsviStatus.statusContinuous(continuousInputs(s, dir),
-        "hoeveelheid dik dood hout",
-        "aantal exemplaren dik dood hout per ha")),
-    "q126_trend_continuous" -> ((s, dir) =>
-      graft.lsvi.LsviStatus.trendContinuous(continuousInputs(s, dir),
-        "hoeveelheid dik dood hout",
-        "aantal exemplaren dik dood hout per ha")),
-    // q140/q141: the design-weighted continuous overloads — the
-    // published dikdoodhout values are design-weighted, completing the
-    // weighted family (q130-q137) for the continuous shapes. Same
-    // single-chain plan; Σw-moments ride the same aggregations.
-    "q140_status_continuous_weighted" -> ((s, dir) =>
-      graft.lsvi.LsviStatus.statusContinuous(continuousInputs(s, dir),
-        "hoeveelheid dik dood hout",
-        "aantal exemplaren dik dood hout per ha", "weight")),
-    "q141_trend_continuous_weighted" -> ((s, dir) =>
-      graft.lsvi.LsviStatus.trendContinuous(continuousInputs(s, dir),
-        "hoeveelheid dik dood hout",
-        "aantal exemplaren dik dood hout per ha", "weight")),
-    "q127_status_area_census" -> ((s, dir) =>
-      graft.lsvi.LsviStatus.statusAreaCensus(censusPolys(s, dir, 1),
-        Seq("indicator"))),
-    "q128_trend_area_census" -> ((s, dir) =>
-      graft.lsvi.LsviStatus.trendAreaCensus(
-        censusPolys(s, dir, 1).withColumn("date", lit(2017)),
-        censusPolys(s, dir, 2).withColumn("date", lit(2023)),
-        Seq("indicator"))),
-    // cycle-based pairing (the grassland/marsh scheme: overlapping
-    // per-stratum 6-year windows — see LsviStatus.assignCycles): only
-    // points seen in BOTH cycle 0 and 1 pair; same-cycle revisits and
-    // cycle-2 visits drop out
-    "q129_trend_habitat_cycles" -> ((s, dir) =>
-      graft.lsvi.LsviStatus.trendHabitat(
-        graft.lsvi.LsviStatus.assignCycles(cycleTrendInputs(s, dir)))),
-
-    // ---- design-weighted status estimators (LsviStatus weighted
-    // overloads): Hájek shares/means Σw·x/Σw with Kish-n_eff Wilson /
-    // z intervals — the machinery that reproduces the reference's
-    // design-weighted pooled rows (WeightedStatusSpec replays
-    // status_indicatoren_fs / index_hq_fs pooled rows from solved
-    // stratum weights). q130 weights the habitat-status shape, q131
-    // the habitat-quality mean (over the binary-fraction index twin —
-    // see statusInputs). ----
-    "q130_status_habitat_weighted" -> ((s, dir) => {
-      val (meta, _) = statusInputs(s, dir)
-      graft.lsvi.LsviStatus.statusHabitat(meta, "weight")
-    }),
-    "q131_index_hq_weighted" -> ((s, dir) => {
-      val (meta, _) = statusInputs(s, dir)
-      graft.lsvi.LsviStatus.indexHq(
-        meta.drop("index_mean_ind")
-          .withColumnRenamed("index_b", "index_mean_ind"), "weight")
-    }),
-
-    // ---- remaining weighted overloads, oracle-backed (q132-q135):
-    // trend_habitat / status_indicatoren / index_ind /
-    // trend_indicatoren with design weights. q132/q135 perturb the
-    // weight on the 2020 visit (+0.125, a binary fraction) so the
-    // latest-visit weight the pairing selects is distinguishable from
-    // the first visit's. q134 snaps verschilscore to its nearest
-    // 1/1024 step so every weighted double sum is exact and
-    // order-independent (same rationale as q131's binary-fraction
-    // index twin; weights are quarter steps, so w·x and w·x² are
-    // 2^-12 / 2^-22 multiples). ----
-    "q132_trend_habitat_weighted" -> ((s, dir) => {
-      val (meta, _) = statusInputs(s, dir)
-      graft.lsvi.LsviStatus.trendHabitat(
-        meta.withColumn("weight",
-          col("weight") + when(col("date") === 2020, 0.125).otherwise(0.0)),
-        "weight")
-    }),
-    "q133_status_indicatoren_weighted" -> ((s, dir) => {
-      val (meta, ind) = statusInputs(s, dir)
-      graft.lsvi.LsviStatus.statusIndicatoren(ind, meta, "weight")
-    }),
-    "q134_index_ind_weighted" -> ((s, dir) => {
-      val (meta, ind) = statusInputs(s, dir)
-      graft.lsvi.LsviStatus.indexInd(
-        ind.withColumn("verschilscore",
-          round(col("verschilscore") * 1024) / 1024.0), meta, "weight")
-    }),
-    "q135_trend_indicatoren_weighted" -> ((s, dir) => {
-      val (meta, ind) = statusInputs(s, dir)
-      graft.lsvi.LsviStatus.trendIndicatoren(ind,
-        meta.withColumn("weight",
-          col("weight") + when(col("date") === 2020, 0.125).otherwise(0.0)),
-        "weight")
-    }),
-    // q136/q137: weighted paired index-difference shapes over the
-    // binary-fraction twins (index_b / 1/1024-snapped verschilscore —
-    // paired differences and their squares stay exact binary-fraction
-    // multiples, so the weighted double sums are order-independent).
-    // Same +0.125-on-the-2020-visit weight perturbation as q132/q135:
-    // it makes the pairing's LATEST-visit weight selection observable
-    // (a regression to the first visit's weight breaks the hash).
-    "q136_trend_index_hq_weighted" -> ((s, dir) => {
-      val (meta, _) = statusInputs(s, dir)
-      graft.lsvi.LsviStatus.trendIndexHq(
-        meta.drop("index_mean_ind")
-          .withColumnRenamed("index_b", "index_mean_ind")
-          .withColumn("weight",
-            col("weight") + when(col("date") === 2020, 0.125).otherwise(0.0)),
-        "weight")
-    }),
-    "q137_trend_index_ind_weighted" -> ((s, dir) => {
-      val (meta, ind) = statusInputs(s, dir)
-      graft.lsvi.LsviStatus.trendIndexInd(
-        ind.withColumn("verschilscore",
-          round(col("verschilscore") * 1024) / 1024.0),
-        meta.withColumn("weight",
-          col("weight") + when(col("date") === 2020, 0.125).otherwise(0.0)),
-        "weight")
-    }),
-    // q138: cycle-based pairing × design weights composed — the q129
-    // overlapping-window scheme through the WEIGHTED trend estimator
-    // (per-visit weights, the pairing keeps the latest cycle-1 visit's)
-    "q138_trend_habitat_cycles_weighted" -> ((s, dir) =>
-      graft.lsvi.LsviStatus.trendHabitat(
-        graft.lsvi.LsviStatus.assignCycles(
-          cycleTrendInputs(s, dir).withColumn("weight",
-            (expr("(date - 2010) div 3") + 1) * lit(0.25))),
-        "weight")),
-
-    // ---- E2 publish round trip (q139): the LAST-MILE composition the
-    // per-shape queries cannot see — forest chain -> LsviReportJob ->
-    // Vc sorted-TSV write (yml sidecar, data_hash) -> Vc verified read.
-    // The read-back globaal subset is the hash-deterministic column
-    // set (verdict, counts, count-ratio aandeel); the verschilscore
-    // means stay in the written file but out of the compare (double
-    // avg is aggregation-order dependent — q103 pins those via its
-    // fixed-point twin). Oracle: q103's chain SQL wrapped in a column
-    // subset — any corruption in sort, sidecar, escaping or type
-    // restore breaks the hash. ----
-    "q139_report_publish_roundtrip" -> ((s, dir) => {
-      val (plots, m) = forestInputs(s, dir)
-      val meta = t(s, dir, "customer").select(
-        concat(lit("FP_"), col("c_custkey")).as("id"),
-        (lit(14610) + col("c_custkey") % 3650).cast("long").as("date"),
-        concat(lit("vbi_"), expr("c_custkey div 2")).as("point_code"),
-        lit(0.0).as("x"), lit(0.0).as("y"),
-        (col("c_custkey") % 2).cast("int").as("in_sac"))
-      val out = tempResultDir("graft-q139")
-      graft.pipelines.LsviReportJob.run(plots, m,
-        graft.lsvi.Versie3Forests.rulesDf(s), meta, out,
-        graft.pipelines.LsviReportJob.Config(suffix = "fs",
-          tables = Some(Set("lsvi_globaal"))))
-      graft.io.Vc.read(s, s"$out/lsvi_globaal_fs")
-        .select("id", "type_analysis", "status", "aggregatiemethode",
-          "n_zb_ongunstig", "aandeel_gunstig")
-    }),
-
-    // ---- S5/S8 at scale (q142): the PARTITIONED versioned-table
-    // round trip — write events hive-partitioned by mon_cycle with the
-    // Vc sidecar + order-independent data digest, read back through
-    // the VERIFIED partitioned reader (digest recomputed), aggregate.
-    // Oracle replays the aggregate from the raw table, so sidecar
-    // type-restore, partition-column recovery from directory names,
-    // and the digest path are all hash-gated (the pruning itself is
-    // pinned by VcPartitionedSpec's numFiles assertion). ----
-    "q142_vc_partitioned_roundtrip" -> ((s, dir) => {
-      val out = tempResultDir("graft-q142") + "/events_part"
-      val ev = t(s, dir, "events").withColumn("mon_cycle", year(col("ts")))
-      graft.io.Vc.writePartitioned(ev, out, Seq("mon_cycle"))
-      graft.io.Vc.readPartitioned(s, out)
-        .groupBy(col("mon_cycle"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(cents(col("value"), 2)).as("value_cents"),
-          count_distinct(col("user_id")).as("n_users"))
-    }),
-
-    // ---- S4/S9 oracle gate (q143): the semicolon-CSV decimal-comma
-    // round trip — per-nation supplier balances written through
-    // Csv2.writeFile (single file, %.4f with COMMA decimal marks, the
-    // write_csv2 format of the published *_dikdoodhout.csv twins:
-    // processed/lsvi_mhq/forests/result/status_dikdoodhout.csv) and
-    // read back through Csv2.read's translate-and-cast path. The
-    // double is a cent-sum (exact at 2 decimals), so the 4-digit
-    // rendering is lossless; the oracle replays the aggregate from raw
-    // parquet, so any loss in comma formatting, header, null handling
-    // or the cast restore breaks the hash. ----
-    "q143_csv2_roundtrip" -> ((s, dir) => {
-      import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
-      val perNation = t(s, dir, "supplier")
-        .join(t(s, dir, "nation"), col("s_nationkey") === col("n_nationkey"))
-        .groupBy(col("n_name"))
-        .agg(count(lit(1)).as("n_suppliers"),
-          (sum(cents(col("s_acctbal"), 2)) / 100.0).as("acctbal_total"))
-        .orderBy("n_name")
-      val file = tempResultDir("graft-q143") + "/supplier_balance.csv"
-      graft.io.Csv2.writeFile(perNation, file)
-      graft.io.Csv2.read(s, file, StructType(Seq(
-        StructField("n_name", StringType),
-        StructField("n_suppliers", LongType),
-        StructField("acctbal_total", DoubleType))))
-    }),
-
-    // ---- S1/S2/J8 oracle gate (q144): the JDBC round trip — the
-    // nation/region dims loaded into an embedded Derby database (the
-    // engine DbDialectsSpec integrates the dialect registry against),
-    // then read back through JdbcQuerySource with the dimension join +
-    // aggregate PUSHED INTO the database — the reference's
-    // hand-written source-side SQL (query_fieldmap.Rmd:139-154).
-    // Columns are written UPPERCASE so the quoted identifiers Spark
-    // creates match Derby's unquoted (uppercased) references in the
-    // pushed query; the read lowercases like DialectQuerySource, and
-    // Derby's INTEGER COUNT widens to the oracle's BIGINT. ----
-    "q144_jdbc_roundtrip" -> ((s, dir) => {
-      val url = "jdbc:derby:memory:q144;create=true"
-      val props = new java.util.Properties
-      t(s, dir, "nation").toDF("N_NATIONKEY", "N_NAME", "N_REGIONKEY")
-        .coalesce(1).write.mode("overwrite")
-        .option("createTableColumnTypes", "N_NAME VARCHAR(64)")
-        .jdbc(url, "nation", props)
-      t(s, dir, "region").toDF("R_REGIONKEY", "R_NAME")
-        .coalesce(1).write.mode("overwrite")
-        .option("createTableColumnTypes", "R_NAME VARCHAR(64)")
-        .jdbc(url, "region", props)
-      val pushed = graft.core.JdbcQuerySource(url,
-        "SELECT r.R_NAME, COUNT(*) AS N_NATIONS, MIN(n.N_NAME) AS FIRST_NATION " +
-          "FROM nation n JOIN region r ON n.N_REGIONKEY = r.R_REGIONKEY " +
-          "GROUP BY r.R_NAME").load(s)
-      pushed.toDF(pushed.columns.map(_.toLowerCase): _*)
-        .select(col("r_name"), col("n_nations").cast("long").as("n_nations"),
-          col("first_nation"))
-    }),
-
-    // ---- S3 oracle gate (q145): the INBOVEG survey facade driven
-    // over real JDBC — survey/recording/classification entities loaded
-    // into embedded Derby, registered as lowercase-normalized
-    // JdbcTableSources, and extracted through
-    // InbovegSource.classification (query_inboveg.Rmd:36-64; in
-    // production the broadcast survey scoping pushes IN-filters into
-    // the remote scan). The oracle replays the survey-scoped two-join
-    // chain from raw parquet. ----
-    "q145_inboveg_jdbc" -> ((s, dir) => {
-      val url = "jdbc:derby:memory:q145;create=true"
-      val props = new java.util.Properties
-      def lc(tbl: String) = graft.core.LowercaseSource(
-        graft.core.JdbcTableSource(url, tbl))
-      // the three fixture loads write to INDEPENDENT Derby tables —
-      // run them on driver threads so the single-task JDBC insert
-      // jobs overlap instead of serializing (guide §2.6, r22);
-      // batchsize 10k cuts the executeBatch round trips ~10× on the
-      // 60k-row classification table. Loaded tables are identical.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val loads = Seq(
-        Future(t(s, dir, "region").select(
-            col("r_regionkey").as("SURVEY_ID"),
-            concat(lit("HT"), col("r_regionkey")).as("NAME"))
-          .coalesce(1).write.mode("overwrite")
-          .option("createTableColumnTypes", "NAME VARCHAR(32)")
-          .option("batchsize", "10000")
-          .jdbc(url, "inboveg_survey", props)),
-        Future(t(s, dir, "customer").select(
-            concat(lit("IV"), col("c_custkey")).as("RECORDING_GIVID"),
-            (col("c_custkey") % 5).cast("int").as("SURVEY_ID"),
-            col("c_name").as("USER_REFERENCE"))
-          .coalesce(1).write.mode("overwrite")
-          .option("createTableColumnTypes",
-            "RECORDING_GIVID VARCHAR(32), USER_REFERENCE VARCHAR(64)")
-          .option("batchsize", "10000")
-          .jdbc(url, "inboveg_recording", props)),
-        Future(t(s, dir, "orders").select(
-            concat(lit("IV"), col("o_custkey")).as("RECORDING_GIVID"),
-            when(col("o_orderkey") % 3 === 0, "3260").otherwise("gh").as("CLASSIF"),
-            when(col("o_orderkey") % 2 === 0, "N2k").otherwise("BWK").as("ACTION_GROUP"),
-            col("o_orderpriority").as("LIST_NAME"),
-            (col("o_orderkey") % 100).cast("double").as("COVER"))
-          .coalesce(1).write.mode("overwrite")
-          .option("createTableColumnTypes",
-            "RECORDING_GIVID VARCHAR(32), CLASSIF VARCHAR(8), " +
-              "ACTION_GROUP VARCHAR(8), LIST_NAME VARCHAR(32)")
-          .option("batchsize", "10000")
-          .jdbc(url, "inboveg_classification", props)))
-      loads.foreach(Await.result(_, Duration.Inf))
-      val reg = graft.core.SourceRegistry(Map(
-        "inboveg_survey" -> lc("inboveg_survey"),
-        "inboveg_recording" -> lc("inboveg_recording"),
-        "inboveg_classification" -> lc("inboveg_classification")))
-      graft.core.InbovegSource(reg, Seq("HT1", "HT3")).classification(s)
-    }),
-
-    // ---- W4/W8 oracle gate (q146): group-wise any-flag kept on rows
-    // (the reference's per-plot `any(cond)` probes, e.g. the
-    // missing-plot checks at query_fieldmap.Rmd:1520-1546) — flag every
-    // order of a customer who ever placed an urgent order, then keep a
-    // deterministic row subset so the flag's row-preserving nature is
-    // hash-visible. ----
-    "q146_group_any_flag" -> ((s, dir) => {
-      Relational.withGroupAny(t(s, dir, "orders"), Seq("o_custkey"),
-          col("o_orderpriority") === "1-URGENT", "has_urgent")
-        .where(col("o_orderkey") % 5 === 0)
-        .select("o_orderkey", "o_custkey", "o_orderstatus", "has_urgent")
-    }),
-
-    // ---- distributed k-means corpus clustering (Ann.lloydCluster):
-    // full-corpus Lloyd with per-document cluster ids — the curation
-    // counterpart of the IVF quantizer. HASH-EXACT despite float
-    // embeddings: distances rank via the floor(d*1e6+0.5) idiom with
-    // id tiebreaks and centroid updates snap to 2^-20 fixed point
-    // before summing, so both engines derive bit-equal centroids. The
-    // per-cluster dist_micros sum gates the full assignment geometry,
-    // not just the counts. ----
-    "q147_kmeans_clusters" -> ((s, dir) => {
-      Ann.lloydCluster(t(s, dir, "embeddings"), "vec_id", "embedding",
-          k = 8, iters = 2)
-        .groupBy(col("cluster").cast("int").as("cluster_id"))
-        .agg(count(lit(1)).as("n_points"),
-          sum(col("vec_id")).as("id_sum"),
-          sum(col("dist_micros")).as("dist_micros"))
-    }),
-
-    // ---- SemDeDup semantic dedup (Dedup.semanticDedup): q147's
-    // deterministic k-means partitions the embedding space, then
-    // within-cluster cosine >= 0.40 against any better-ranked cluster
-    // mate (rank = distance-to-centroid, id) marks semantic dups. The
-    // pair join is an equi-join on the cluster id — never all-pairs.
-    // HASH-EXACT: snapped-integer dots/norms + a fixed IEEE double op
-    // sequence make both engines' similarities bit-equal; the dup/kept
-    // id sums gate the full flag assignment, not just the counts. ----
-    "q148_semantic_dedup" -> ((s, dir) => {
-      Dedup.semanticDedup(t(s, dir, "embeddings"), "embedding", "vec_id",
-          k = 8, iters = 2, tauMicros = 400000L)
-        .groupBy(col("cluster").cast("int").as("cluster_id"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(when(col("is_dup"), 1L).otherwise(0L)).as("n_dups"),
-          sum(when(col("is_dup"), col("vec_id"))).as("dup_id_sum"),
-          sum(when(!col("is_dup"), col("vec_id"))).as("kept_id_sum"))
-    }),
-
-    // ---- distributed linear quality-probe training
-    // (ml.LinearProbe): 2 full-batch GD steps on y = label % 2 with
-    // the rational sigmoid (IEEE-exact — no libm exp), then score the
-    // corpus with the final weights. HASH-EXACT: snapped 2^-20 inputs
-    // make the per-dimension gradients exact integer sums, so both
-    // engines derive bit-equal weights; the per-label score sums gate
-    // the whole trajectory, not just the final predictions. ----
-    "q149_linear_probe" -> ((s, dir) => {
-      graft.ml.LinearProbe.scored(t(s, dir, "embeddings"), "embedding",
-          "vec_id", "label", iters = 2, lr = 4.0)
-        .groupBy(col("label"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(when(col("pred"), 1L).otherwise(0L)).as("n_pred_pos"),
-          sum(col("score_micros")).as("score_micros_sum"),
-          sum(when(col("pred") === (col("label") % 2 === 1), 1L)
-            .otherwise(0L)).as("n_correct"))
-    }),
-
-    // ---- cluster-balanced coreset selection (Curate.coresetSample):
-    // the 20 most-central documents of each learned k-means cell —
-    // geometry-aware diversity sampling over q147's deterministic
-    // clustering. HASH-EXACT: the (dist_micros, id) rank is integer
-    // arithmetic end to end. ----
-    "q150_coreset_sample" -> ((s, dir) => {
-      graft.curation.Curate.coresetSample(t(s, dir, "embeddings"),
-          "embedding", "vec_id", k = 8, iters = 2, perCluster = 20)
-        .select(col("vec_id"), col("cluster").cast("int").as("cluster_id"),
-          col("dist_micros"), col("rk"))
-    }),
-
-    // ---- leakage-safe split (Curate.leakageSafeSplit): the
-    // train/val/test assignment is a hash of the EXACT-DEDUP canonical
-    // id, so duplicate texts can never straddle the eval boundary —
-    // q40's fingerprint window composed with q82's hash-split
-    // arithmetic. ----
-    "q151_leakage_safe_split" -> ((s, dir) =>
-      graft.curation.Curate.leakageSafeSplit(t(s, dir, "documents"))
-        .select("doc_id", "canonical_id", "bucket", "split")),
-
-    // ---- dominant principal direction via deterministic power
-    // iteration (ml.Spectral): the "all-but-the-top" embedding
-    // post-processing step — mean-center, two power steps from the
-    // all-ones start, project onto the unit direction. HASH-EXACT via
-    // the q147/q149 fixed-point recipe; the per-label signed and
-    // absolute projection sums gate both the direction and its sign.
-    // ----
-    "q152_dominant_direction" -> ((s, dir) => {
-      graft.ml.Spectral.dominantProjection(t(s, dir, "embeddings"),
-          "embedding", "vec_id", "label", iters = 2)
-        .groupBy(col("label"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("proj_micros")).as("proj_micros_sum"),
-          sum(abs(col("proj_micros"))).as("abs_proj_micros_sum"),
-          sum(when(col("proj_micros") >= 0, 1L).otherwise(0L)).as("n_pos"))
-    }),
-
-    // ---- REAL PCM audio decode (functions.PcmWindowFeatures): the
-    // multimodal audio path with no stub — little-endian int16
-    // samples from the binary payload, per-window RMS / zero
-    // crossings / peak as a codegen'd native expression. HASH-EXACT:
-    // integer sample arithmetic plus one deterministic sqrt; the
-    // oracle re-parses the same bytes through hex(). ----
-    "q153_pcm_features" -> ((s, dir) => {
-      val media = Media.fromText(t(s, dir, "documents"), "doc_id", "text", "audio")
-      media.select(col("media_id"),
-          explode(graft.functions.MediaFunctions
-            .pcmWindowFeatures(col("media"), 256)).as("w"))
-        .groupBy("media_id")
-        .agg(count(lit(1)).as("n_windows"),
-          sum(col("w.rms_micros")).as("rms_micros_sum"),
-          sum(col("w.zero_crossings").cast("long")).as("zero_crossings"),
-          max(col("w.peak")).cast("int").as("peak"))
-    }),
-
-    // ---- BPE merge induction (text.Bpe): 6 frequency-ranked merges
-    // learned from the frequency-weighted word vocabulary — the corpus
-    // is scanned ONCE into the cached vocab; each round is a
-    // dictionary-sized pair count + a 1-row collect + a map-side
-    // greedy merge (codegen'd BpeApplyMerge). HASH-EXACT: the DuckDB
-    // oracle UNROLLS the six rounds (the r12 "needs per-word
-    // recursion" note was wrong — fixed-round unrolling needs none):
-    // per round a pair count over the exploded (word, pos, sym) state,
-    // the same (count desc, l, r) top-1, and the greedy non-overlapping
-    // left-to-right application via window functions (a candidate
-    // chain can only arise for l==r runs, where the odd row_number
-    // parity within each consecutive-candidate island is exactly the
-    // greedy choice). BpeSpec still pins tie-breaks + deep (256-round)
-    // runs against a local reference. ----
-    "q154_bpe_merges" -> ((s, dir) =>
-      graft.text.Bpe.merges(t(s, dir, "documents"), "text", rounds = 6)),
-
-    // ---- BPE segmentation (text.Bpe.segment): the APPLY half of the
-    // tokenizer — six fixed merges (the ones q154 learns at sf0.01,
-    // frozen as explicit parameters so the two queries gate the two
-    // halves independently) applied greedily to every word of every
-    // document, reduced to the corpus token histogram. Map-side only
-    // until the final aggregate: one pass per merge over the exploded
-    // token stream, no shuffle before the groupBy. ----
-    "q157_bpe_segment" -> ((s, dir) =>
-      graft.text.Bpe.segment(t(s, dir, "documents"), "text", "doc_id",
-          SparkEntry.bpeFixedMerges)
-        .groupBy("token")
-        .agg(count(lit(1)).as("n"),
-          count_distinct(col("doc_id")).as("n_docs"))),
-
-    // ---- data-questions ROI overlay (data_heide_groot_schietveld.Rmd:
-    // 31-46 + data_questions.Rmd:54-70): the LAST reference entry point
-    // without an end-to-end gate — REAL shapefile read (S6, the 3260
-    // sampling frame's 255 stream-segment polylines) → vertex-derived
-    // envelope (WkbEnvelope) → rectangular ROI rings → st_join-style
-    // PIP overlay of measurement points (grid-cell bucketed broadcast
-    // join, the J11 path) with the link_mhq coalesce idiom → the
-    // check_paired two-level visit summary plus per-stratum frame
-    // totals (exact integer sums) and a sampling-intensity ratio.
-    // The DuckDB oracle replays it over RoiFixture3260 — the SAME
-    // shapefile parsed by an INDEPENDENT Python struct-unpacker — so a
-    // reader bug (coordinate order, record skipping, dbf decode) is a
-    // visible mismatch, not a replayed one. ----
-    "q158_roi_overlay" -> ((s, dir) => {
-      val base = ReferenceInputs("q158_roi_overlay").stripSuffix(".shp")
-      val roi = graft.geo.Shapefile.read(s, base)
-        .select(col("objectid_1").as("segment_id"), col("sbz"),
-          col("shape_leng"),
-          graft.geo.WkbFunctions.wkbEnvelope(col("geometry")).as("env"))
-        .where(col("env").isNotNull)
-        .select(col("segment_id"), col("sbz"), col("shape_leng"),
-          col("env.xmin").as("x0"), col("env.ymin").as("y0"),
-          col("env.xmax").as("x1"), col("env.ymax").as("y1"))
-      val rings = roi.select(col("segment_id"), col("sbz"),
-        array(struct(col("x0").as("x"), col("y0").as("y")),
-          struct(col("x1").as("x"), col("y0").as("y")),
-          struct(col("x1").as("x"), col("y1").as("y")),
-          struct(col("x0").as("x"), col("y1").as("y"))).as("ring"))
-      // refpoints: deterministic Lambert-72 coords inside the frame's
-      // window; measurements: one row per order, visit date =
-      // o_orderdate, link_mhq = the user_reference-else-db_ref idiom
-      val refpoints = t(s, dir, "customer").select(
-        col("c_custkey").as("plot_id"),
-        (lit(33000.0) + (col("c_custkey") * 37 % 1009).cast("double")
-          / lit(1009.0) * lit(224100.0)).as("x"),
-        (lit(157400.0) + (col("c_custkey") * 61 % 997).cast("double")
-          / lit(997.0) * lit(86100.0)).as("y"))
-      val meas = t(s, dir, "orders").select(
-          col("o_custkey").as("plot_id"),
-          col("o_orderdate").as("date_assessment"),
-          when(col("o_custkey") % 3 === 0,
-            concat(lit("REF_"), col("o_custkey"))).as("user_reference"),
-          concat(lit("DB_"), col("o_orderkey")).as("db_ref"))
-        .withColumn("link_mhq",
-          coalesce(col("user_reference"), col("db_ref")))
-        .join(refpoints, "plot_id")
-      val hits = graft.geo.GeoJoin.pointInPolygonJoin(
-        meas, rings, "x", "y", "ring", cellSize = 4096.0)
-      val perPlot = hits.groupBy(col("sbz"), col("plot_id"))
-        .agg(count_distinct(col("date_assessment")).as("n_visits"),
-          count_distinct(col("link_mhq")).as("n_links_plot"))
-      val visits = perPlot.groupBy("sbz").agg(
-        sum(col("n_visits")).as("n_records"),
-        count(lit(1)).as("n_plots"),
-        sum(when(col("n_visits") >= 2, 1L).otherwise(0L)).as("n_repeated_plots"),
-        sum(col("n_links_plot")).as("n_links"))
-      val frame = roi.groupBy("sbz").agg(
-        count(lit(1)).as("n_segments"),
-        sum(floor(col("shape_leng") * lit(1e6) + lit(0.5)).cast("long"))
-          .as("length_micros"),
-        sum(floor((col("x1") - col("x0")) * (col("y1") - col("y0"))
-          * lit(100.0) + lit(0.5)).cast("long")).as("bbox_area_dm2"))
-      frame.join(visits, Seq("sbz"), "left")
-        .withColumn("points_per_km_micros",
-          floor(col("n_records").cast("double")
-            / (col("length_micros").cast("double") / lit(1.0e9))
-            * lit(1e6) + lit(0.5)).cast("long"))
-    }),
-
-    // ---- product-quantization codes (Ann.pqCodes): m=4 per-subspace
-    // Lloyd codebooks over the 64-dim embeddings (k=4 codes each,
-    // 2 iterations) — the memory-bounded ANN compression layout.
-    // HASH-EXACT: the oracle unrolls the per-subspace Lloyd exactly
-    // like q147's, over v[lo:hi] slices. One corpus scan + one k×dim
-    // map-side-combined exchange per iteration; the returned
-    // per-vector plan is map-only (broadcast codebooks, no shuffle). ----
-    "q159_pq_codes" -> ((s, dir) =>
-      graft.similarity.Ann.pqCodes(t(s, dir, "embeddings"), "vec_id",
-        "embedding", m = 4, k = 4, iters = 2)),
-
-    // ---- PQ asymmetric-distance search (Ann.pqSearchTopK): q50's
-    // exact top-k replayed through the q159 codes — the corpus is
-    // scored against each vector's RECONSTRUCTION (query-to-centroid
-    // subspace distances, summed), the memory-bounded search path.
-    // Same no-shuffle scored cross-product + partial top-k shape as
-    // q50; fully deterministic → hash-exact. ----
-    "q160_pq_search" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      graft.similarity.Ann.pqSearchTopK(e.where(col("vec_id") < 5), e,
-        "vec_id", "embedding", m = 4, k = 4, iters = 2, topK = 5)
-    }),
-
-    // ---- duplicated-substring spans (Dedup.dupSpanStats): Lee et al.
-    // 2022 substring dedup at 8-token-window granularity — a span whose
-    // exact text occurs >1 time corpus-wide marks a duplicated region;
-    // per-doc span/dup counts + the ≤20% keep gate. ONE corpus scan;
-    // the (key,id) grouping map-side-combines within-doc repeats, the
-    // corpus total rides a whole-partition window on the key. ----
-    "q161_dup_spans" -> ((s, dir) =>
-      Dedup.dupSpanStats(t(s, dir, "documents"), "text", "doc_id",
-        w = 8, maxDupPerMille = 200)),
-
-    // ---- IVFADC (Ann.ivfPqSearchTopK): coarse quantizer routes to
-    // inverted lists, PQ codebooks on the RESIDUALS compress inside
-    // each list, queries probe their 2 nearest cells only — the full
-    // Jégou et al. two-level ANN at 100 TB scale. Corpus pipeline is
-    // one scan / zero shuffles; probed queries broadcast into the
-    // cell join. Fully deterministic → hash-exact. ----
-    "q162_ivfpq_search" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      graft.similarity.Ann.ivfPqSearchTopK(e.where(col("vec_id") < 4), e,
-        "vec_id", "embedding", kc = 4, m = 4, k = 4, iters = 2,
-        nprobe = 2, topK = 5)
-    }),
-
-    // ---- IVFADC + exact re-rank (Ann.ivfPqSearchRerank): ADC picks a
-    // 10-deep shortlist per query from the m-byte codes; only the
-    // finalists are re-scored against their FULL vectors (the bare-id
-    // shortlist broadcasts into the corpus scan — the corpus never
-    // shuffles for the exact pass). The standard two-stage retrieval
-    // at 100 TB. Fully deterministic → hash-exact. ----
-    "q164_ivfpq_rerank" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      graft.similarity.Ann.ivfPqSearchRerank(e.where(col("vec_id") < 4), e,
-        "vec_id", "embedding", kc = 4, m = 4, k = 4, iters = 2,
-        nprobe = 2, shortlist = 10, topK = 5)
-    }),
-
-    // ---- retrieval-stack E2E composition (q155's analogue for ANN):
-    // IVFADC probe → exact rerank → join the hits back to the
-    // documents table for the serving payload — the whole two-stage
-    // retrieval flow as ONE gated composition. The hit set is tiny
-    // and BROADCASTS into the documents scan (the corpus never
-    // shuffles at any stage of the stack). Hash-exact. ----
-    "q167_retrieval_e2e" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val hits = graft.similarity.Ann.ivfPqSearchRerank(
-        e.where(col("vec_id") < 4), e, "vec_id", "embedding",
-        kc = 4, m = 4, k = 4, iters = 2, nprobe = 2,
-        shortlist = 10, topK = 3)
-      t(s, dir, "documents")
-        .select(col("doc_id").as("neighbor_id"), col("lang"), col("n_chars"))
-        .join(broadcast(hits), Seq("neighbor_id"))
-        .select("query_id", "rank", "neighbor_id", "exact_micros",
-          "lang", "n_chars")
-    }),
-
-    // ---- bigram Stupid-Backoff LM scoring (Brants et al. 2007,
-    // "Large Language Models in Machine Translation" — the web-scale
-    // backoff that needs NO discounting pass): counts from the train
-    // split score the HELD-OUT docs (scoring the training corpus
-    // itself never fires backoff — every observed bigram has c2 ≥ 1),
-    // S(w|p) = c2/c1(p) when the bigram was seen, else 0.4·S1(w),
-    // S1(w) = (c1(w) | 0.4 OOV mass)/N; the first token scores as S1.
-    // Per-position ln terms round to 1e-6 BEFORE the fold and the
-    // fold runs in position order (q92's determinism recipe). The
-    // count tables join by key (bigram/unigram shuffle joins — the
-    // standard LM-scoring exchange; the eval side is benchmark-sized
-    // by construction). The synthetic eval split shares every bigram
-    // with train, so a deterministic OOV tail (' zz<id> join') is
-    // appended to each eval doc — it fires BOTH backoff branches
-    // (unseen bigram with an unseen w, then with a seen w), the
-    // q170-typo-stream trick of gating the non-identity path.
-    // Hash-exact. ----
-    // ---- DSIR importance resampling (curation.Dsir, Xie et al.
-    // 2023): hashed-bigram bag-of-words models fit on the target
-    // slice (docs mentioning 'join' — the q172 label, so the two
-    // data-selection shapes share a ground truth) vs the raw
-    // remainder; per-doc log importance weight = sum of per-bucket
-    // count x snapped log-ratio in fixed bucket order; deterministic
-    // top-50 (TakeOrderedAndProject — no global corpus sort). TWO
-    // corpus scans (fit + score, DSIR's definitional minimum); the
-    // fit collapses to k=8 rows of bounded driver trainer state whose
-    // snapped log-ratios re-enter the scoring scan as literals, so
-    // the RETURNED plan is one scan / zero shuffles. Hash-exact. ----
-    "q174_dsir_select" -> ((s, dir) =>
-      graft.curation.Dsir.selectTopN(
-        t(s, dir, "documents")
-          .select(col("doc_id"), col("text"),
-            array_contains(Text.tokens(col("text")), "join").as("is_target")),
-        "text", "doc_id", "is_target", k = 8, n = 50)),
-
-    // ---- UniMax language-budget allocation (curation.Unimax, Chung
-    // et al. 2023): water-filling a 4/5-of-corpus token budget across
-    // languages with a 1-epoch cap — on the synthetic lang mix the
-    // four minority languages hit their cap and English absorbs the
-    // water level, exercising BOTH branches of the closed form. The
-    // corpus collapses to a 5-row checkpointed aggregate; integer
-    // token arithmetic until the two mirrored divisions. Hash-exact.
-    "q175_unimax_alloc" -> ((s, dir) =>
-      graft.curation.Unimax.allocation(t(s, dir, "documents"),
-        "text", "lang", budgetNum = 4L, budgetDen = 5L, nEpochs = 1L)),
-
-    // ---- margin-based bitext mining (similarity.Bitext, Artetxe &
-    // Schwenk 2019): embeddings split into two deterministic "language"
-    // halves by label; ratio-margin scoring over both directional
-    // top-4 neighborhoods cancels hubness, best-margin candidate per
-    // source above 1.02. Both directional passes ride bruteForceTopK's
-    // no-shuffle scored-broadcast plan; the margin layer only ever
-    // touches shortlist-sized rows. Hash-exact (integer neighborhood
-    // sums, two mirrored IEEE ops). ----
-    "q176_bitext_margin" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      graft.similarity.Bitext.marginMining(
-        e.where(col("label") < 5), e.where(col("label") >= 5),
-        "vec_id", "embedding", k = 4, minMargin = 1.02)
-    }),
-
-    // ---- Gopher rule-based quality gate (text.GopherRules, Rae et
-    // al. 2021 Table A1): the published hard-rule set with a per-rule
-    // failure bitmask. The [25, 80] word band and the ≥2-distinct-
-    // stopword rule (list adapted to the synthetic corpus's function
-    // words, as the operator contract allows) each reject a real
-    // slice, so keep=true/false and several mask bits are exercised.
-    // One map-only projection, exact integer counts, each ratio a
-    // single 1e-6-rounded division. Hash-exact. ----
-    "q177_gopher_rules" -> ((s, dir) =>
-      graft.text.GopherRules.flags(t(s, dir, "documents"),
-        "doc_id", "text", minWords = 25, maxWords = 80,
-        stops = Seq("the", "a", "of", "and", "to", "that", "have", "with"))),
-
-    // ---- CCNet perplexity bucketing (Curate.perplexityBuckets,
-    // Wenzek et al. 2020): q92's unigram-LM scoring recipe carrying
-    // the language, then per-language head/middle/tail terciles of
-    // the perplexity proxy. One LM-scoring exchange + one
-    // language-key window shuffle. Hash-exact (the q92 rounded-ln
-    // fold; ntile has identical SQL semantics in both engines). ----
-    "q178_ccnet_buckets" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val toks = docs.select(col("doc_id"), col("lang"),
-        explode(Text.tokens(col("text"))).as("term"))
-      // tf checkpoints ONCE (the inverted-index intermediate, smaller
-      // than the text): vocab and the grand total derive from it, so
-      // the corpus scans a single time instead of thrice (q170 lesson)
-      val tf = toks.groupBy("doc_id", "lang", "term")
-        .agg(count(lit(1)).as("tf")).stable()
-      val vocab = tf.groupBy("term").agg(sum("tf").as("cnt"))
-      val total = tf.agg(sum("tf").as("total"))
-      val scored = tf
-        .join(broadcast(vocab), "term")
-        .crossJoin(broadcast(total))
-        .withColumn("contrib",
-          round6(col("tf") * log(col("cnt").cast("double") / col("total"))))
-        .groupBy("doc_id", "lang")
-        .agg(sum(col("tf")).as("n_tokens"),
-          aggregate(
-            array_sort(collect_list(struct(col("term"), col("contrib")))),
-            lit(0.0), (acc, x) => acc + x.getField("contrib")).as("lp"))
-        .select(col("doc_id"), col("lang"),
-          round6(col("lp") * -1 / col("n_tokens")).as("ppl_proxy"))
-      graft.curation.Curate.perplexityBuckets(scored, "doc_id", "lang", "ppl_proxy")
-    }),
-
-    // ---- tokenizer fertility / compression-rate eval (the standard
-    // multilingual-tokenizer quality report: tokens-per-word and
-    // chars-per-token per language under a FIXED merge list — how a
-    // vocabulary "taxes" each language, cf. the fertility tables of
-    // the mBERT/XLM-R papers). One segmentation scan through the
-    // fused bpe_segment_all kernel + one word-count scan, both
-    // collapsing map-side to language-sized aggregates. Hash-exact
-    // (integer counts, two mirrored divisions). ----
-    "q179_tokenizer_fertility" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val tstats = graft.text.Bpe
-        .segment(docs, "text", "lang", bpeFixedMerges)
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n_tokens"),
-          sum(length(col("token"))).as("n_chars"))
-      docs.groupBy("lang")
-        .agg(sum(Text.tokenCount(col("text")).cast("long")).as("n_words"))
-        .join(tstats, "lang")
-        .select(col("lang"), col("n_words"), col("n_tokens"), col("n_chars"),
-          round6(col("n_tokens").cast("double") / col("n_words").cast("double"))
-            .as("fertility"),
-          round6(col("n_chars").cast("double") / col("n_tokens").cast("double"))
-            .as("chars_per_token"))
-    }),
-
-    // ---- rank-aware ANN eval (Ann.adcEval, the Jégou 2011 recall@R
-    // protocol): recall@5 and reciprocal rank of the true NN for the
-    // q160 ADC searcher against the exact L2 ground truth on the
-    // 5-query panel. System side codes-only/no-shuffle; truth side
-    // the bounded-panel exact pass. Hash-exact. ----
-    "q181_ann_recall_eval" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      graft.similarity.Ann.adcEval(e.where(col("vec_id") < 5), e,
-        "vec_id", "embedding", m = 4, k = 4, iters = 2, topK = 5)
-    }),
-
-    // ---- hard-negative triplet mining (Ann.hardestTriplets, the
-    // DPR/SimCSE training-data step): nearest same-label positive +
-    // nearest different-label negative per anchor on the 10-anchor
-    // panel, margin as an exact integer micros difference. One scored
-    // broadcast pass, one (anchor, same) window. Hash-exact. ----
-    "q182_hard_negatives" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      graft.similarity.Ann.hardestTriplets(e.where(col("vec_id") < 10), e,
-        "vec_id", "embedding", "label")
-    }),
-
-    // ---- reciprocal-rank fusion (similarity.Fusion, Cormack 2009):
-    // the hybrid-retrieval glue — fuse the q160 ADC ranking and the
-    // q185 Hamming ranking (two independent compressed tiers) into
-    // one per-query top-5. Rank-only, k0 = 60; inputs are top-k
-    // lists, so the fusion layer never touches the corpus.
-    // Hash-exact (snapped divisions, system-ordered fold). ----
-    // ---- IVFADC index DELETE (similarity.Ann.ivfPqDeleteFromIndex):
-    // the third leg of index maintenance CRUD — build (q169), append
-    // (q192), delete. The index is built on the FULL corpus, then the
-    // vec_id % 7 = 3 rows are deleted: only their cells' partitions
-    // rewrite (dynamic partition overwrite) and the sidecar digest is
-    // SUBTRACTED (digest(base∖removed) = digest(base) − digest(
-    // removed) — the additive-digest dual, O(removed)). The trained
-    // state never changes: deletion just removes candidates, so the
-    // oracle is q162's chain with ONE extra predicate on the scored
-    // neighbors. Hash-exact. ----
-    "q197_ivfpq_index_delete" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val idx = SparkEntry.ivfPqIndexCache.computeIfAbsent(s"$dir#delete", _ => {
-        val path = tempResultDir("ivfpq_del") + "/codes"
-        val built = graft.similarity.Ann.ivfPqBuildIndex(e, "vec_id",
-          "embedding", kc = 4, m = 4, k = 4, iters = 2, path)
-        graft.similarity.Ann.ivfPqDeleteFromIndex(s, built,
-          col("neighbor_id") % 7 === 3)
-      })
-      graft.similarity.Ann.ivfPqSearchIndex(idx, e.where(col("vec_id") < 4),
-        "vec_id", "embedding", nprobe = 2, topK = 5)
-    }),
-
-    // ---- STREAMING decontamination (streaming.DecontamStream, the
-    // q187 pattern applied to q190): training docs arrive as a
-    // stream, shingles are prefiltered MAP-SIDE by the broadcast
-    // Bloom bits before any join or state, survivors verify against
-    // the static benchmark shingle set, and per-doc state holds the
-    // contaminated-shingle set so replays never double-count. Single-
-    // file source = one ordered micro-batch, so emissions equal the
-    // batch operator row-for-row and q190's ORACLE gates a stateful
-    // streaming query hash-exact; the cross-batch cumulative path is
-    // DecontamStreamSpec's. ----
-    "q196_decontam_stream" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val bench = docs.where(col("doc_id") % 89 === 0)
-      // static-side shingle set evaluated ONCE (the q229 fix, r22):
-      // without the checkpoint the scan+tokenize+explode+distinct chain
-      // re-runs for the bloom build AND inside every micro-batch's
-      // broadcast join
-      val benchSh = bench
-        .select(Text.tokens(col("text")).as("toks"))
-        .select(explode(Text.shingles(col("toks"), 3)).as("shingle"))
-        .distinct()
-        .stable()
-      val words = graft.curation.Curate.bloomBits(benchSh, 1 << 16, 4)
-      val schema = Tables.observedSchema(s, dir, "documents")
-      val stream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
-        .where(col("doc_id") % 89 =!= 0)
-      val sink = "graft_q196_sink"
-      graft.streaming.Events.withStatePartitions(s, 8) {
-        val q = graft.streaming.DecontamStream
-          .contaminationStream(s, stream, benchSh, words.toIndexedSeq, 4, 3,
-            "text", "doc_id")
-          .writeStream.format("memory").queryName(sink).outputMode("append").start()
-        q.processAllAvailable()
-        q.stop()
-      }
-      s.table(sink)
-    }),
-
-    // ---- HYBRID sparse+dense retrieval (the RAG-stack standard:
-    // BM25 keyword ranking + PQ/ADC dense ranking fused by RRF —
-    // Cormack 2009 glue over Robertson/Jégou halves): three queries
-    // carry BOTH a keyword text (q188's set) and a dense query vector
-    // (the same-id embedding; embeddings.vec_id keys the documents
-    // corpus). Each half is its own pinned plan — the inverted-index
-    // term-at-a-time pass and the codes-only no-shuffle ADC scan —
-    // and the fusion layer touches top-k lists only. Dense excludes
-    // the query's own vector (ANN self-match convention), BM25 has no
-    // self to exclude; the oracle mirrors both. Hash-exact. ----
-    "q195_hybrid_retrieval" -> ((s, dir) => {
-      import s.implicits._
-      val queries = Seq((1L, "spark join"), (2L, "customer order"),
-        (3L, "stream window batch")).toDF("query_id", "qtext")
-      val sparse = graft.text.Bm25.searchTopK(t(s, dir, "documents"),
-          queries, "doc_id", "text", "query_id", "qtext", topK = 10)
-        .select(col("query_id"), col("doc_id").as("neighbor_id"), col("rank"))
-      val e = t(s, dir, "embeddings")
-      val dense = graft.similarity.Ann.pqSearchTopK(
-          e.where(col("vec_id").isin(1, 2, 3)), e, "vec_id", "embedding",
-          m = 4, k = 4, iters = 2, topK = 10)
-        .select("query_id", "neighbor_id", "rank")
-      graft.similarity.Fusion.rrf(Seq(dense, sparse), k0 = 60, topK = 10)
-    }),
-
-    // ---- character-entropy gibberish filter (functions.CharEntropy):
-    // Shannon entropy of the non-whitespace char distribution, the
-    // low-diversity signal CCNet-adjacent pipelines gate on next to
-    // LM perplexity. ONE codegen'd kernel per row — counts, −p·ln p
-    // per codepoint snapped to integer micros, summed EXACTLY
-    // (order-free) — no explode, no shuffle; keep = entropy ≥ 2 nats
-    // compared on the integers. Hash-exact via the q92 rounded-ln
-    // recipe (oracle mirrors the float op sequence token-for-token).
-    "q194_char_entropy" -> ((s, dir) => {
-      val st = t(s, dir, "documents")
-        .select(col("doc_id"),
-          graft.functions.TextFunctions.charEntropy(col("text")).as("e"))
-        .where(col("e.n_chars") > 0)
-      st.select(col("doc_id"), col("e.n_chars").as("n_chars"),
-        col("e.distinct_chars").as("distinct_chars"),
-        col("e.entropy_micros").as("entropy_micros"),
-        (col("e.entropy_micros") >= 2000000L).as("keep"))
-    }),
-
-    // ---- phrase-blocklist gate (text.Blocklist — the C4 bad-words
-    // filter, Raffel 2020 §2.2, with whole-token multi-word phrases):
-    // the ranked list ships ONCE as an Aho–Corasick reference object
-    // and every doc pays one padded-string pass regardless of list
-    // size (vs m substring searches for a contains() disjunction).
-    // One scan, zero shuffles, fully codegen'd; hash-exact — matching
-    // is substring search on the padded token join, which the oracle
-    // replays as per-phrase position() probes. ----
-    "q198_blocklist_filter" -> ((s, dir) =>
-      graft.text.Blocklist.report(
-        t(s, dir, "documents"), "doc_id", "text", BlocklistPhrases)),
-
-    // ---- EXACT per-language percentile length trim
-    // (curation.Curate.histogramQuantileTrim): drop each language's
-    // shortest and longest 5% of documents by n_chars with thresholds
-    // from a histogram CDF — the corpus's only shuffle carries one row
-    // per distinct (lang, n_chars), NOT per doc, and the thresholds
-    // broadcast back; a percent_rank window would sort every
-    // language's full partition (the English-dominates skew trap).
-    // Hash-exact: integer-only threshold inequality (cum·20 ≥ k·N),
-    // the quantile_disc convention on both engines. ----
-    "q199_length_trim" -> ((s, dir) =>
-      graft.curation.Curate.histogramQuantileTrim(
-        t(s, dir, "documents").select("doc_id", "lang", "n_chars"),
-        "lang", "n_chars", loNum = 1, hiNum = 19, denom = 20)
-        .select("doc_id", "lang", "n_chars", "lo", "hi", "keep")),
-
-    // ---- ingest drift gate (ops.Drift.psiReport): Population
-    // Stability Index between the reference and current event windows
-    // per event_type, each category's term one fixed-order double
-    // expression snapped to integer micros and summed exactly (the
-    // q92/q186 transcendental recipe). ONE corpus scan collapsing to
-    // a category-sized conditional aggregate; the even/odd split is
-    // the A/A control — the machinery is exercised, the expected
-    // verdict is "no drift" (planted-drift branches are spec-gated).
-    "q200_drift_psi" -> ((s, dir) =>
-      graft.ops.Drift.psiReport(t(s, dir, "events"), "event_type",
-        col("event_id") % 2 === 0, thresholdMicros = 200000L)),
-
-    // ---- STREAMING drift gate (streaming.DriftStream — q200's
-    // stateful twin, the q187/q196 pattern): current-window events
-    // stream in; their per-category counts are a live Complete-mode
-    // streaming aggregation (state = one counter per category, never
-    // per event); the PSI report derives from that profile joined
-    // with the static reference counts through the SAME psiFromCounts
-    // math. Single ordered micro-batch ⟹ profile ≡ the batch
-    // conditional aggregate, so q200's ORACLE gates this stateful
-    // streaming query hash-exact; the cross-batch cumulative path is
-    // DriftStreamSpec's. ----
-    "q205_drift_stream" -> ((s, dir) => {
-      val ref = t(s, dir, "events").where(col("event_id") % 2 === 0)
-        .groupBy(col("event_type")).agg(count(lit(1)).as("c_ref"))
-      val schema = Tables.observedSchema(s, dir, "events")
-      val stream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(dir)
-        .where(col("event_id") % 2 =!= 0)
-      val sink = "graft_q205_sink"
-      graft.streaming.Events.withStatePartitions(s, 8) {
-        val q = graft.streaming.DriftStream.profileStream(stream, "event_type")
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("complete").start()
-        q.processAllAvailable()
-        q.stop()
-      }
-      graft.streaming.DriftStream.psiFromProfile(
-        s.table(sink), ref, "event_type", thresholdMicros = 200000L)
-    }),
-
-    // ---- quality-filter bias audit (ml.Eval.rankAuc): per-source
-    // ROC-AUC of the q42 quality score separating en vs non-en docs
-    // (Gururangan 2022's "whose language counts" audit as a corpus
-    // operator). Midrank Mann–Whitney over the per-(source, score)
-    // HISTOGRAM — the q199 CDF recipe: the one corpus-scale shuffle
-    // carries one row per distinct (source, score_micros); every
-    // rank/U/AUC step is integer arithmetic, so the gate is
-    // hash-exact with no float tolerance anywhere. ----
-    "q201_quality_auc" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      graft.ml.Eval.rankAuc(
-        d.select(col("source"),
-          round(Text.qualityScore(col("text")) * lit(1e6), 0)
-            .cast("long").as("score_micros"),
-          (col("lang") === "en").as("label")),
-        "source", "score_micros", "label")
-    }),
-
-    // ---- FUZZY benchmark decontamination (curation.Curate
-    // .fuzzyDecontam — the GPT-3 appendix-C near-dup gate,
-    // complementing q190's exact bloom overlap): md5-arithmetic
-    // MinHash (k=8, 4 bands of 2) so every stage — signatures, band
-    // keys, exact-Jaccard verify — replays in ANSI SQL, upgrading
-    // this family from the rows-only xxhash64 checks to hash-exact.
-    // Eval side (doc_id % 89 == 0, q190's split) broadcasts at every
-    // step; the corpus collapses to per-doc signatures in one
-    // map-side-combined pass and only band-collision candidates are
-    // re-shingled for verification. ----
-    "q202_fuzzy_decontam" -> ((s, dir) =>
-      graft.curation.Curate.fuzzyDecontam(
-        t(s, dir, "documents"), isEval = col("doc_id") % 89 === 0)),
-
-    // ---- calibration audit (ml.Eval.calibrationReport — Guo et al.
-    // 2017's Expected Calibration Error as a corpus operator,
-    // completing the audit trio with q200's PSI and q201's AUC): the
-    // q42 quality score read as a micro-probability of "this doc is
-    // en", binned into 10 equal-width confidence bins per source;
-    // per-bin observed positive rate vs mean claimed confidence, ECE
-    // = row-weighted mean absolute gap. q199/q201's histogram shape
-    // (one scan, the only corpus shuffle carries ≤ sources×bins
-    // rows); bins, rates, gaps and ECE are ALL integer floor
-    // divisions — hash-exact with no float tolerance. ----
-    "q204_calibration_audit" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      graft.ml.Eval.calibrationReport(
-        d.select(col("source"),
-          round(Text.qualityScore(col("text")) * lit(1e6), 0)
-            .cast("long").as("score_micros"),
-          (col("lang") === "en").as("label")),
-        "source", "score_micros", "label", nBins = 10)
-    }),
-
-    // ---- BOUNDED-PROBE bitext mining over CACHED quantizer states
-    // (Bitext.marginMiningApproxWithState — round 17): q176's
-    // ratio-margin protocol with both directional neighborhoods
-    // served by the IVFADC shortlist (ADC over 2 probed cells of 4,
-    // exact cosine re-rank of the 8 finalists). The per-direction
-    // quantizer states train ONCE per sf dir (ivfPqStateCache — the
-    // q169/q206 frozen-state pattern), so the bench median measures
-    // MINING (coding + probe + re-rank), the realistic serving
-    // topology; q207 keeps the in-query training E2E. Coding under
-    // the frozen state equals the build coding (IvfPqIndexSpec), so
-    // the output is IDENTICAL to the full-train form and the oracle —
-    // BOTH two-level quantizer chains + cosine re-rank + margin
-    // tail — stays hash-exact end to end. ----
-    "q203_bitext_margin_ivf" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      def st(side: String, pred: org.apache.spark.sql.Column) =
-        SparkEntry.ivfPqStateCache.computeIfAbsent(s"$dir#bitext_$side", _ =>
-          graft.similarity.Ann.ivfPqTrainState(e.where(pred), "vec_id",
-            "embedding", kc = 4, m = 4, k = 4, iters = 2))
-      graft.similarity.Bitext.marginMiningApproxWithState(
-        e.where(col("label") < 5), e.where(col("label") >= 5),
-        srcState = st("src", col("label") < 5),
-        tgtState = st("tgt", col("label") >= 5),
-        "vec_id", "embedding", k = 4, minMargin = 1.02,
-        nprobe = 2, shortlist = 8)
-    }),
-
-    // ---- the FULL-TRAIN bitext miner (Bitext.marginMiningApprox):
-    // q203's exact math with both directions' coarse + PQ quantizers
-    // trained INSIDE the query — the honest E2E cost of standing the
-    // miner up from nothing, kept oracle-gated so the training chain
-    // itself stays verified (the q162-vs-q169 convention: one query
-    // pays training, the cached/served twins ride its oracle). ----
-    "q207_bitext_train_e2e" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      graft.similarity.Bitext.marginMiningApprox(
-        e.where(col("label") < 5), e.where(col("label") >= 5),
-        "vec_id", "embedding", k = 4, minMargin = 1.02,
-        kc = 4, m = 4, pqK = 4, iters = 2, nprobe = 2, shortlist = 8)
-    }),
-
-    // ---- the COMPOSED nightly ingest gate (ml.Eval.ingestAudit —
-    // q200's PSI + q201's AUC + q204's ECE fused off ONE documents
-    // scan into one per-source report row, the shape a shard-admission
-    // pipeline actually runs). The corpus collapses to the
-    // per-(source, score) histogram in one map-side-combined groupBy —
-    // the only corpus-scale shuffle — and one source-partitioned
-    // exchange later the CDF window (AUC), the per-bin windows
-    // (ECE + PSI score-decile categories) and the final fold all run
-    // shuffle-free: 1 scan / 2 shuffles, pinned. PSI's reference
-    // window is the even/odd doc_id A/A control (q200's convention);
-    // each audit's math is its original's verbatim, so the whole
-    // report stays hash-exact. ----
-    "q208_ingest_audit" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      graft.ml.Eval.ingestAudit(
-        d.select(col("source"), col("doc_id"),
-          round(Text.qualityScore(col("text")) * lit(1e6), 0)
-            .cast("long").as("score_micros"),
-          (col("lang") === "en").as("label")),
-        "source", "score_micros", "label",
-        isRef = col("doc_id") % 2 === 0, nBins = 10,
-        psiThresholdMicros = 200000L)
-    }),
-
-    // ---- PLANTED-drift ingest audit (q208's expected-to-fire twin):
-    // the reference window is the ENGLISH docs, whose quality-score
-    // distribution genuinely differs (the stopword-ratio term), so
-    // the PSI total is nonzero and the bin-grain transcendental term
-    // is hash-proven on real values, not just the A/A zero (the
-    // q92/q200 ln-recipe convention: fixed inputs, fixed op order,
-    // micros snap). Same 1-scan/2-shuffle fused plan as q208. ----
-    "q211_ingest_audit_drift" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      graft.ml.Eval.ingestAudit(
-        d.select(col("source"), col("lang"),
-          round(Text.qualityScore(col("text")) * lit(1e6), 0)
-            .cast("long").as("score_micros"),
-          (col("lang") === "en").as("label")),
-        "source", "score_micros", "label",
-        isRef = col("lang") === "en", nBins = 10,
-        psiThresholdMicros = 100000L)
-    }),
-
-    // ---- JSONL corpus ingest round trip (io.Jsonl — the raw-corpus
-    // shard format: one JSON object per line, gzipped shards; the
-    // q143/q144 value-invisible convention): documents write out as
-    // 4 .jsonl.gz shards and read back through the supplied-schema
-    // PERMISSIVE reader (corrupt lines would land in _corrupt_record
-    // — counted in the report, expected 0; the malformed-line paths
-    // are JsonlSpec's). The per-group md5 content checksum makes the
-    // gate sensitive to any text mangling in the JSON encode/decode,
-    // not just row counts. ----
-    "q209_jsonl_ingest" -> ((s, dir) => {
-      import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-      val d = t(s, dir, "documents")
-      val path = tempResultDir("graft-q209") + "/docs_jsonl"
-      graft.io.Jsonl.write(d.repartition(4), path)
-      val back = graft.io.Jsonl.read(s, path, StructType(Seq(
-        StructField("doc_id", LongType), StructField("text", StringType),
-        StructField("lang", StringType), StructField("source", StringType),
-        StructField("n_chars", LongType))))
-      back.groupBy(col("lang"), col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).as("chars_total"),
-          sum(conv(substring(md5(col("text")), 1, 8), 16, 10).cast("long"))
-            .as("text_checksum"),
-          sum(when(col(graft.io.Jsonl.CorruptCol).isNotNull, 1L)
-            .otherwise(0L)).as("n_corrupt"))
-    }),
-
-    // ---- ORC interchange round trip (core.OrcSource — the Hive-era
-    // columnar format; q209's convention minus the corrupt-line
-    // machinery, which ORC's binary layout makes a task failure by
-    // construction). Upgrades the registry's ORC dispatch from
-    // spec-only to oracle-gated: documents write as zlib ORC shards,
-    // read back through the registry source, and the same md5 content
-    // checksum catches any value mangling. ----
-    "q210_orc_roundtrip" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val path = tempResultDir("graft-q210") + "/docs_orc"
-      d.repartition(4).write.mode("overwrite").orc(path)
-      val back = graft.core.OrcSource(path).load(s)
-      back.groupBy(col("lang"), col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).as("chars_total"),
-          sum(conv(substring(md5(col("text")), 1, 8), 16, 10).cast("long"))
-            .as("text_checksum"))
-    }),
-
-    // ---- the COMPOSED corpus-ingest E2E off JSONL SHARD DELIVERIES
-    // (q100's admission chain fed by io.Jsonl instead of parquet — the
-    // scenario Jsonl.scala documents: real crawl drops arrive as
-    // .jsonl.gz shards, not columnar files). The batch writes out as 4
-    // gzip shards PLUS one planted truncated line in its own shard;
-    // the PERMISSIVE read captures it whole in _corrupt_record (data
-    // columns null), the audit row counts it, and ONLY audited-clean
-    // rows enter the admission chain (quality floor → within-batch
-    // exact dedup → against-corpus anti-join → decontamination →
-    // append). Output = the ingested corpus per-(lang, source) with
-    // q209's md5 content checksum — any JSON text mangling OR a
-    // corrupt line leaking past the audit breaks the hash gate — plus
-    // the '__audit__' corrupt-line row. ----
-    "q212_jsonl_corpus_e2e" -> ((s, dir) => {
-      import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-      val docs = t(s, dir, "documents")
-      val path = tempResultDir("graft-q212") + "/batch_jsonl"
-      graft.io.Jsonl.write(docs.where(col("doc_id") % 3 =!= 0).repartition(4), path)
-      // one truncated line as its own delivery shard — the exact
-      // failure a million-shard drop ships at least once
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(path, "shard-corrupt.jsonl"),
-        """{"doc_id": -1, "text": "truncat""")
-      val back = graft.io.Jsonl.read(s, path, StructType(Seq(
-        StructField("doc_id", LongType), StructField("text", StringType),
-        StructField("lang", StringType), StructField("source", StringType),
-        StructField("n_chars", LongType))))
-      val clean = back.where(col(graft.io.Jsonl.CorruptCol).isNull)
-        .drop(graft.io.Jsonl.CorruptCol)
-      val ingested = graft.pipelines.CorpusIngest.ingest(
-        corpus = docs.where(col("doc_id") % 3 === 0),
-        batch = clean,
-        bench = docs.where(col("doc_id") % 97 === 0).select("doc_id", "text"),
-        minTokens = 30)
-      val summary = ingested.groupBy(col("lang"), col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).as("chars_total"),
-          sum(conv(substring(md5(col("text")), 1, 8), 16, 10).cast("long"))
-            .as("text_checksum"))
-      // the delivery-audit rows: corrupt-line AND parsed-line counts
-      // from the SAME read. Both counts survive into the output, which
-      // keeps a data column in the scan's required schema — a
-      // corrupt-count-only aggregate prunes to the corrupt column
-      // alone and the JSON source (rightly) rejects that shape, since
-      // corruptness is only defined relative to parsing data columns.
-      val audit = back.agg(
-          sum(when(col(graft.io.Jsonl.CorruptCol).isNotNull, 1L)
-            .otherwise(0L)).as("n_corrupt"),
-          count(col("doc_id")).as("n_parsed"))
-        .select(explode(array(
-          struct(lit("__audit__").as("lang"), lit("corrupt_lines").as("source"),
-            col("n_corrupt").as("n_docs"), lit(0L).as("chars_total"),
-            lit(0L).as("text_checksum")),
-          struct(lit("__audit__").as("lang"), lit("parsed_lines").as("source"),
-            col("n_parsed").as("n_docs"), lit(0L).as("chars_total"),
-            lit(0L).as("text_checksum")))).as("r"))
-        .select("r.*")
-      summary.unionByName(audit)
-    }),
-
-    // ---- bitext mining over WRITTEN per-direction indexes
-    // (Bitext.marginMiningIndexed — q203 through q169's persistent
-    // cell-partitioned layout): each side's codes are built ON DISK
-    // once (frozen state cached per sf dir, the q192/q197 pattern);
-    // every probe prunes the file listing to its 2 cells, and only
-    // raw-vector finalists join. Codes and state round-trip
-    // bit-exact, so the output is IDENTICAL to q203 — q203's oracle
-    // gates the serving topology end to end. ----
-    "q206_bitext_indexed" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      def idx(side: String, pred: org.apache.spark.sql.Column) =
-        SparkEntry.ivfPqIndexCache.computeIfAbsent(s"$dir#bitext_$side", _ => {
-          val path = tempResultDir(s"ivfpq_bt_$side") + "/codes"
-          graft.similarity.Ann.ivfPqBuildIndex(e.where(pred), "vec_id",
-            "embedding", kc = 4, m = 4, k = 4, iters = 2, path)
-        })
-      graft.similarity.Bitext.marginMiningIndexed(
-        e.where(col("label") < 5), e.where(col("label") >= 5),
-        srcIdx = idx("src", col("label") < 5),
-        tgtIdx = idx("tgt", col("label") >= 5),
-        "vec_id", "embedding", k = 4, minMargin = 1.02,
-        nprobe = 2, shortlist = 8)
-    }),
-
-    // ---- duplicated-span REMOVAL with text reconstitution (dedup
-    // .Dedup.removeDupSpans — Lee et al. 2022 §4's actual transform,
-    // completing q161's keep-flag): token positions covered by any
-    // 8-token window repeating corpus-wide are deleted and the doc is
-    // reassembled in order. Spans/positions shuffle as (key, id, pos)
-    // triples — text only materializes in the final reassembly,
-    // whose payload is the output. Hash-exact: integer positions,
-    // deterministic order-by-position rebuild. ----
-    "q193_dup_span_removal" -> ((s, dir) =>
-      graft.dedup.Dedup.removeDupSpans(
-        t(s, dir, "documents"), "text", "doc_id", w = 8)),
-
-    // ---- IVFADC index APPEND (similarity.Ann.ivfPqAppendIndex):
-    // q169's written index under the shard-arrival maintenance shape —
-    // the index is BUILT on the base corpus (vec_id % 5 ≠ 4, so the
-    // deterministic Lloyd inits come from the same lowest ids), the
-    // delta is coded map-only under the FROZEN state and appended
-    // into its coarse cells' partition dirs with the arithmetic
-    // sidecar-digest update (Vc.appendPartitioned — O(delta), base
-    // never rescanned), and the probe searches the MERGED index with
-    // pruning intact. Oracle = the q162 CTE chain with both quantizer
-    // levels trained over the base predicate and coding over the full
-    // corpus — exactly the frozen-state semantics, hash-exact. ----
-    "q192_ivfpq_index_append" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val idx = SparkEntry.ivfPqIndexCache.computeIfAbsent(s"$dir#append", _ => {
-        val path = tempResultDir("ivfpq_app") + "/codes"
-        val built = graft.similarity.Ann.ivfPqBuildIndex(
-          e.where(col("vec_id") % 5 =!= 4), "vec_id", "embedding",
-          kc = 4, m = 4, k = 4, iters = 2, path)
-        graft.similarity.Ann.ivfPqAppendIndex(built,
-          e.where(col("vec_id") % 5 === 4), "vec_id", "embedding")
-      })
-      graft.similarity.Ann.ivfPqSearchIndex(idx, e.where(col("vec_id") < 4),
-        "vec_id", "embedding", nprobe = 2, topK = 5)
-    }),
-
-    // ---- IVFADC index COMPACTION (Ann.ivfPqCompactIndex — the
-    // fourth leg of maintenance CRUD, closing build q169 / append
-    // q192 / delete q197): q192's build-on-base + frozen-state append
-    // leaves every touched cell holding base + delta files; compaction
-    // rewrites ONLY the fragmented cells to one file each (the delete
-    // path's dynamic partition overwrite pointed at fragmentation).
-    // Rows, codes and the arithmetic sidecar digest are untouched by
-    // construction, so the probe output is IDENTICAL to q192's and
-    // rides its oracle (the q169 ≡ q162 convention); the numFiles
-    // shrink + untouched-cell mtimes are IvfPqIndexSpec's pins. ----
-    "q213_ivfpq_index_compact" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val idx = SparkEntry.ivfPqIndexCache.computeIfAbsent(s"$dir#compact", _ => {
-        val path = tempResultDir("ivfpq_cmp") + "/codes"
-        val built = graft.similarity.Ann.ivfPqBuildIndex(
-          e.where(col("vec_id") % 5 =!= 4), "vec_id", "embedding",
-          kc = 4, m = 4, k = 4, iters = 2, path)
-        graft.similarity.Ann.ivfPqAppendIndex(built,
-          e.where(col("vec_id") % 5 === 4), "vec_id", "embedding")
-        graft.similarity.Ann.ivfPqCompactIndex(s, built)
-      })
-      graft.similarity.Ann.ivfPqSearchIndex(idx, e.where(col("vec_id") < 4),
-        "vec_id", "embedding", nprobe = 2, topK = 5)
-    }),
-
-    // ---- Gopher REPETITION rules (Rae et al. 2021 Table A1, the
-    // other half of q177's hard rules): top 2/3/4-gram character
-    // fraction and duplicate 5..10-gram character mass per document,
-    // each from ONE fused native run-scan (functions.RunStats) over
-    // the codegen'd word_spans n-grams — per-row work, the corpus
-    // never shuffles, no explode/groupBy (the per-doc mode must not
-    // become a corpus-wide aggregation at 100 TB). The keep flag is
-    // the paper's nine thresholds compared in EXACT integer
-    // arithmetic (count·chars·100 ≤ pct·doc_chars), so no float
-    // boundary can flip it between engines. ----
-    "q191_repetition_rules" -> ((s, dir) =>
-      graft.text.GopherRules.repetitionReport(
-        t(s, dir, "documents"), "doc_id", "text")),
-
-    // ---- Bloom-prefiltered benchmark decontamination (curation
-    // .Curate.bloomContamination): q81's exact n-gram overlap check
-    // with the TRAINING side prefiltered through a broadcast Bloom
-    // bit array (mBits = 2^16, k = 4) built from the benchmark
-    // shingles — the layout for when the eval-suite shingle set
-    // outgrows an exact broadcast (bits, not strings). Bloom has no
-    // false negatives and the exact verify join removes the false
-    // positives, so the result is EXACTLY the overlap and the oracle
-    // replays q81's SQL over this query's %89 split. BloomSpec pins
-    // the ≡-contamination property and the prefilter selectivity. ----
-    "q190_bloom_decontam" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      graft.curation.Curate.bloomContamination(
-        train = docs.where(col("doc_id") % 89 =!= 0),
-        bench = docs.where(col("doc_id") % 89 === 0),
-        n = 3, mBits = 1 << 16, kHashes = 4)
-    }),
-
-    "q189_rrf_fusion" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val q = e.where(col("vec_id") < 5)
-      graft.similarity.Fusion.rrf(Seq(
-        graft.similarity.Ann.pqSearchTopK(q, e, "vec_id", "embedding",
-          m = 4, k = 4, iters = 2, topK = 5),
-        graft.similarity.Ann.hammingTopK(q, e, "vec_id", "embedding",
-          topK = 5)), k0 = 60, topK = 5)
-    }),
-
-    // ---- BM25 keyword retrieval (text.Bm25, Robertson & Zaragoza
-    // 2009, Lucene idf): the sparse half of hybrid retrieval — three
-    // fixed keyword queries against the corpus, term-at-a-time over
-    // the checkpointed inverted index, top-10 per query. Hash-exact
-    // (integer tf/df/dl, snapped ln idf, term-ordered fold). ----
-    "q188_bm25_search" -> ((s, dir) => {
-      import s.implicits._
-      val queries = Seq((1L, "spark join"), (2L, "customer order"),
-        (3L, "stream window batch")).toDF("query_id", "qtext")
-      graft.text.Bm25.searchTopK(t(s, dir, "documents"), queries,
-        "doc_id", "text", "query_id", "qtext", topK = 10)
-    }),
-
-    // ---- STREAMING twin of q184 (streaming.IngestDedupStream):
-    // delta docs arrive as a stream, labeled against the static base
-    // fingerprint index (stream-static broadcast join) + one-boolean-
-    // per-fingerprint flatMapGroupsWithState memory. Single-file
-    // source = one ordered micro-batch, so labels equal the batch
-    // twin's min-id semantics and q184's ORACLE gates a stateful
-    // streaming query hash-exact; the multi-batch state path is
-    // spec-pinned. ----
-    "q187_ingest_dedup_stream" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val baseFp = docs.where(col("doc_id") % 3 =!= 0)
-        .select(Text.fingerprint(col("text")).as("fingerprint")).distinct()
-      val schema = Tables.observedSchema(s, dir, "documents")
-      val stream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
-        .where(col("doc_id") % 3 === 0)
-      val sink = "graft_q187_sink"
-      graft.streaming.Events.withStatePartitions(s, 8) {
-        val q = graft.streaming.IngestDedupStream
-          .statusStream(s, stream, baseFp, "text", "doc_id")
-          .writeStream.format("memory").queryName(sink).outputMode("append").start()
-        q.processAllAvailable()
-        q.stop()
-      }
-      s.table(sink)
-    }),
-
-    // ---- STREAMING JSONL shard-delivery ingest (q187's stateful
-    // dedup admission fed by io.Jsonl.readStream — the continuous
-    // form of q212's delivery layer): the delta docs arrive as a
-    // .jsonl.gz shard PLUS a planted truncated line; the PERMISSIVE
-    // streaming read carries the torn line as a _corrupt_record row
-    // (a FAILFAST stance would kill the continuous job), the
-    // admission filter drops it map-side, and the clean rows label
-    // against the static base fingerprint index through the same
-    // one-boolean-per-fingerprint state. Single delivery = one
-    // ordered micro-batch, so labels equal the batch twin's and
-    // q187's ORACLE gates the whole streaming JSONL path hash-exact
-    // — emitting the corrupt row's null doc_id, or dying on it,
-    // both break the gate. ----
-    "q217_jsonl_ingest_stream" -> ((s, dir) => {
-      import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-      val docs = t(s, dir, "documents")
-      val baseFp = docs.where(col("doc_id") % 3 =!= 0)
-        .select(Text.fingerprint(col("text")).as("fingerprint")).distinct()
-      val path = tempResultDir("graft-q217") + "/delta_jsonl"
-      graft.io.Jsonl.write(docs.where(col("doc_id") % 3 === 0)
-        .select("doc_id", "text", "lang", "source", "n_chars")
-        .coalesce(1), path)
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(path, "shard-corrupt.jsonl"),
-        """{"doc_id": -1, "text": "truncat""")
-      val stream = graft.io.Jsonl.readStream(s, path, StructType(Seq(
-          StructField("doc_id", LongType), StructField("text", StringType),
-          StructField("lang", StringType), StructField("source", StringType),
-          StructField("n_chars", LongType))))
-        .where(col(graft.io.Jsonl.CorruptCol).isNull)
-        .drop(graft.io.Jsonl.CorruptCol)
-      val sink = "graft_q217_sink"
-      graft.streaming.Events.withStatePartitions(s, 8) {
-        val q = graft.streaming.IngestDedupStream
-          .statusStream(s, stream, baseFp, "text", "doc_id")
-          .writeStream.format("memory").queryName(sink).outputMode("append").start()
-        q.processAllAvailable()
-        q.stop()
-      }
-      s.table(sink)
-    }),
-
-    // ---- PMI collocations (text.Colloc, Church & Hanks 1990): top
-    // adjacent pairs by pointwise mutual information, pair count ≥ 5.
-    // One checkpointed explode feeds counts + totals; PMI is one ln
-    // of an exact rational, snapped at 1e-6. Hash-exact. ----
-    "q186_pmi_collocations" -> ((s, dir) =>
-      graft.text.Colloc.topPmi(t(s, dir, "documents"), "text",
-        n = 40, minCount = 5L)),
-
-    // ---- 1-bit sign-quantized Hamming top-k (Ann.hammingTopK): the
-    // cheapest compression tier — 64 dims in two 32-bit words, the
-    // distance a codegen'd xor-popcount, no floats in the hot loop.
-    // Same no-shuffle scored-broadcast scaffold as q50. Hash-exact;
-    // recall vs exact gated in RecallSpec. ----
-    "q185_hamming_topk" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      graft.similarity.Ann.hammingTopK(e.where(col("vec_id") < 10), e,
-        "vec_id", "embedding", topK = 5)
-    }),
-
-    // ---- incremental-ingest exact dedup (Dedup.incrementalStatus):
-    // the shard-arrival shape — delta docs (doc_id % 3 = 0) dedup
-    // against the already-ingested base's FINGERPRINT INDEX (never
-    // its text) with full new/dup_of_base/dup_in_delta accounting.
-    // All three statuses fire at sf0.1 (8 exact-dup fingerprint
-    // groups); sf0.01 has no cross-split dups, so the non-'new'
-    // branches are additionally pinned by the TextAndDedupSpec
-    // fixture. Hash-exact. ----
-    "q184_incremental_dedup" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      graft.dedup.Dedup.incrementalStatus(
-        docs.where(col("doc_id") % 3 =!= 0),
-        docs.where(col("doc_id") % 3 === 0), "text", "doc_id")
-    }),
-
-    // ---- Efraimidis-Spirakis weighted sampling without replacement
-    // (Curate.weightedSample): 60 docs weighted by token count —
-    // longer documents proportionally likelier, no duplicates by
-    // construction. Map-side hash-uniform keys + partial top-n; the
-    // ln snaps to 1e-6 (q92 recipe). Hash-exact. ----
-    "q183_weighted_sample" -> ((s, dir) =>
-      graft.curation.Curate.weightedSample(
-        t(s, dir, "documents")
-          .select(col("doc_id"),
-            greatest(Text.tokenCount(col("text")), lit(1)).as("n_tok")),
-        "doc_id", "n_tok", n = 60, seed = 7L)),
-
-    // ---- length-grouped batching with padding-waste accounting
-    // (Curate.lengthGroupedBatches): 16-token length buckets, batches
-    // of 8 within each — per-batch pad_frac quantifies the padding
-    // the grouping saves. Map-side bucket arithmetic + per-bucket
-    // rank windows (no global sort/window). Hash-exact. ----
-    "q180_length_batches" -> ((s, dir) =>
-      graft.curation.Curate.lengthGroupedBatches(
-        t(s, dir, "documents")
-          .select(col("doc_id"), Text.tokenCount(col("text")).as("n_tok")),
-        "doc_id", "n_tok", bucketWidth = 16, batchSize = 8)),
-
-    "q173_stupid_backoff" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val train = docs.where(col("doc_id") % 97 =!= 0)
-      val ev = docs.where(col("doc_id") % 97 === 0)
-        .select(col("doc_id"), concat(col("text"), lit(" zz"),
-          col("doc_id").cast("string"), lit(" join")).as("text"))
-      val trainToks = train.select(
-        explode(graft.text.Text.tokens(col("text"))).as("term"))
-      val c1 = trainToks.groupBy("term").agg(count(lit(1)).as("c1"))
-      val nTot = trainToks.agg(count(lit(1)).as("n"))
-      val c2 = train.select(explode(
-          graft.text.Text.bigrams(graft.text.Text.tokens(col("text")))).as("bg"))
-        .groupBy("bg").agg(count(lit(1)).as("c2"))
-      val evToks = ev.select(col("doc_id"),
-          graft.text.Text.tokens(col("text")).as("ts"))
-        .where(size(col("ts")) > 0)
-      val first = evToks
-        .select(col("doc_id"), lit(0).as("pos"),
-          element_at(col("ts"), 1).as("term"))
-        .join(c1, Seq("term"), "left").crossJoin(broadcast(nTot))
-        .select(col("doc_id"), col("pos"),
-          round6(log(coalesce(col("c1").cast("double"), lit(0.4))
-            / col("n"))).as("contrib"))
-      val pairs = evToks
-        .select(col("doc_id"), posexplode(
-          graft.text.Text.bigrams(col("ts"))).as(Seq("pos0", "bg")))
-        .select(col("doc_id"), (col("pos0") + 1).as("pos"), col("bg"),
-          element_at(split(col("bg"), " "), 1).as("prev"),
-          element_at(split(col("bg"), " "), 2).as("w"))
-        .join(c2, Seq("bg"), "left")
-        .join(c1.select(col("term").as("prev"), col("c1").as("c1p")),
-          Seq("prev"), "left")
-        .join(c1.select(col("term").as("w"), col("c1").as("c1w")),
-          Seq("w"), "left")
-        .crossJoin(broadcast(nTot))
-        .select(col("doc_id"), col("pos"),
-          round6(log(
-            when(col("c2").isNotNull,
-              col("c2").cast("double") / col("c1p"))
-              .otherwise(lit(0.4)
-                * (coalesce(col("c1w").cast("double"), lit(0.4)) / col("n")))))
-            .as("contrib"))
-      first.unionByName(pairs)
-        .groupBy("doc_id")
-        .agg(count(lit(1)).cast("long").as("n_tokens"),
-          aggregate(
-            array_sort(collect_list(struct(col("pos"), col("contrib")))),
-            lit(0.0), (acc, x) => acc + x.getField("contrib")).as("lp"))
-        .select(col("doc_id"), col("n_tokens"),
-          round6(col("lp")).as("score"),
-          round6(col("lp") * -1 / col("n_tokens")).as("ppl_proxy"))
-    }),
-
-    // ---- fastText-style quality probe (ml.QualityProbe): word
-    // bigrams hashed into 8 buckets (the fastText hashing trick, md5
-    // prefix mod k so the oracle reproduces it), then q149's
-    // deterministic rational-sigmoid GD trains a linear scorer — the
-    // CCNet/LLaMA quality-filter shape. The label is a text-derivable
-    // property (document mentions the 'join' token) so the hashed
-    // features carry real signal (the synthetic lang column is
-    // text-independent); the oracle unrolls 2 GD steps, which moves
-    // scores by label but not yet the sign — QualityProbeSpec runs
-    // the probe to convergence on a separable corpus to pin that the
-    // SAME machinery actually learns. Featurization is map-only (one
-    // md5 per bigram); training is one scan + a (k+1)-row exchange
-    // per iteration. Hash-exact. ----
-    "q172_quality_probe" -> ((s, dir) =>
-      graft.ml.QualityProbe.scored(
-        t(s, dir, "documents")
-          .select(col("doc_id"), col("text"),
-            when(array_contains(graft.text.Text.tokens(col("text")), "join"),
-              1L).otherwise(0L).as("label")),
-        "text", "doc_id", "label", k = 8, iters = 2, lr = 4.0)),
-
-    // ---- sliding-window document chunking (Curate.chunkTokens): the
-    // context-window splitter of RAG/pretraining prep — 24-token
-    // chunks with 8-token overlap (stride 16), chunk count
-    // 1 + max(0, ceil((n-24)/16)), final chunk may be short but is
-    // never a pure suffix of its predecessor. ONE map-only scan (a
-    // bounded sequence explode + slice per chunk, no shuffle before
-    // the driver's collect). Hash-exact via DuckDB list slicing. ----
-    "q171_doc_chunking" -> ((s, dir) =>
-      graft.curation.Curate.chunkTokens(t(s, dir, "documents"),
-        "text", "doc_id", chunkSize = 24, overlap = 8)),
-
-    // ---- typo-grade vocabulary canonicalization (Dedup.typoCanonical):
-    // FastSS deletion-variant blocking (exact for edit distance ≤ 1 —
-    // no LSH recall loss) + built-in levenshtein verify + the Norvig
-    // best-neighbor pick (freq desc, word asc, one hop). The corpus
-    // collapses to the dictionary-sized vocabulary BEFORE the variant
-    // explode, so candidate generation never touches corpus-scale
-    // rows. The synthetic vocabulary is typo-free, so the query
-    // injects a deterministic misspelling stream (every 7th doc's
-    // first ≥5-char word minus its 2nd char) that MUST remap to its
-    // frequent neighbor — the gate exercises the remapping path, not
-    // just the identity. Fully deterministic → hash-exact. ----
-    "q170_typo_canonical" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val w1 = element_at(graft.text.Text.tokens(col("text")), 1)
-      val typos = docs.where(col("doc_id") % 7 === 0)
-        .select(w1.as("w"))
-        .where(length(col("w")) >= 5)
-        .select(concat(col("w").substr(lit(1), lit(1)),
-          col("w").substr(lit(3), length(col("w")) - 2)).as("text"))
-      Dedup.typoCanonical(
-        docs.select(col("text")).unionByName(typos), "text", minLen = 4)
-    }),
-
-    // ---- IVFADC WRITTEN-index probe (Ann.ivfPqBuildIndex/
-    // ivfPqSearchIndex): the q162 pipeline with the codes
-    // MATERIALIZED cell-partitioned on disk through the sidecar
-    // partitioned writer, then re-read with the probed cells pushed
-    // as a literal partition filter — the scan lists ONLY the probed
-    // cells' files (IvfPqIndexSpec pins numFiles), which is the
-    // claim that makes IVFADC the 100 TB layout: a probe touches
-    // nprobe/kc of the data and reads m-int codes, not vectors.
-    // Same parameters as q162 ⟹ same oracle, hash-exact. ----
-    "q169_ivfpq_index_probe" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      // the index build is the one-time batch job of the serving story
-      // — memoize per sf dir so repeated invocations (bench medians,
-      // scale-curve runs) time the PROBE against the written index
-      // instead of re-training and re-writing per sample (and don't
-      // leave one temp index copy per invocation)
-      val idx = SparkEntry.ivfPqIndexCache.computeIfAbsent(dir, _ => {
-        val path = tempResultDir("ivfpq_idx") + "/codes"
-        graft.similarity.Ann.ivfPqBuildIndex(e, "vec_id", "embedding",
-          kc = 4, m = 4, k = 4, iters = 2, path)
-      })
-      graft.similarity.Ann.ivfPqSearchIndex(idx, e.where(col("vec_id") < 4),
-        "vec_id", "embedding", nprobe = 2, topK = 5)
-    }),
-
-    // ---- tokenizer-stack E2E composition (q155/q167's pattern for
-    // the tokenizer family): BPE merge induction (q154) → corpus
-    // segmentation under the LEARNED merges through the fused
-    // single-projection kernel (q157's apply half) → per-doc token
-    // counts → fixed token-budget sequence packing (q88's two-pass
-    // offsets, no single-partition window). The learned merge list is
-    // driver state (6 rows) shipped once into the segment kernel; the
-    // corpus never shuffles before the per-doc count. Hash-exact —
-    // the oracle learns the merges itself with q154's unrolled CTEs
-    // and applies them with q157's machinery. ----
-    "q168_tokenizer_e2e" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val learned = graft.text.Bpe.merges(docs, "text", rounds = 6)
-        .orderBy("rank").collect()
-        .map(r => (r.getString(1), r.getString(2))).toSeq
-      val counts = graft.text.Bpe.segment(docs, "text", "doc_id", learned)
-        .groupBy("doc_id").agg(count(lit(1)).as("n_tokens"))
-      graft.curation.Curate.packBudget(counts, costCol = "n_tokens",
-          budget = 512L, seed = 42L, nPartitions = 8)
-        .select(col("doc_id"), col("n_tokens"), col("bin"))
-    }),
-
-    // ---- SQ8 scalar quantization (Ann.sq8Stats): per-dim affine
-    // byte codes — the 4x compression tier below PQ; per-dim min/max
-    // trains in one scan (dim-row driver state), returned plan is
-    // map-only off broadcast literals with the native LongDot /
-    // SquaredL2Micros kernels. Hash-exact. ----
-    "q166_sq8_quantize" -> ((s, dir) =>
-      graft.similarity.Ann.sq8Stats(t(s, dir, "embeddings"),
-        "vec_id", "embedding")),
-
-    // ---- S7 GeoPackage end-to-end gate: the REAL standing-water
-    // cycle-2 design layer (design_watersurfaces/, the GDAL-produced
-    // .gpkg the reference reads with st_read) through the pure-Scala
-    // SQLite walk + GPKG-header strip + vertex-fold WkbEnvelope, then
-    // the design summary per (area_class, sac): polygon counts, GRTS
-    // rank sums, bbox areas, measured fraction, and the multi-type
-    // split (R4 over 'a; b' type_all lists — bounded habitat-type
-    // domain, so the distinct-flatten aggregate is k-sized). The
-    // oracle replays against GpkgFixtureStandingWater, the same file
-    // read by Python's sqlite3 with GDAL's own blob-header envelopes —
-    // an independent parser AND an independent envelope source. ----
-    "q163_gpkg_design" -> ((s, dir) => {
-      val w = graft.geo.GeoPackage
-        .read(s, ReferenceInputs("q163_gpkg_design"),
-          "mhq_standingwater_cycle2_2024-04-17")
-        .select(col("grts_ranking"), col("area_class"), col("sac"),
-          col("type_all"), col("biotic_measurement"),
-          graft.geo.WkbFunctions.wkbEnvelope(col("geom")).as("env"))
-      w.groupBy("area_class", "sac")
-        .agg(
-          count(lit(1)).as("n_polygons"),
-          sum(col("grts_ranking")).as("rank_sum"),
-          sum(floor((col("env.xmax") - col("env.xmin"))
-            * (col("env.ymax") - col("env.ymin"))
-            * lit(100.0) + lit(0.5)).cast("long")).as("bbox_area_dm2"),
-          sum(when(col("biotic_measurement").isNotNull, 1L).otherwise(0L))
-            .as("n_measured"),
-          size(array_distinct(flatten(
-            collect_list(split(col("type_all"), lit("; "))))))
-            .cast("long").as("n_types"))
-    }),
-
-    // ---- E2E curation funnel (q155): the whole LLM-curation flow as
-    // ONE correctness-gated composition — exact dedup (q40's
-    // fingerprint canonical), semantic dedup (q148's SemDeDup flags
-    // over the embedding twin), quality gate (q41's token count), and
-    // the leakage-safe split (q151's canonical-id hash) — per-split
-    // doc/id/token sums gate every stage's geometry at once, the way
-    // q139 gates the publication tail. ----
-    // ---- contrastive triplet mining (Curate.contrastiveTriplets):
-    // positives from SemDeDup's qualifying pairs (better-ranked doc =
-    // anchor), hard-ish negative = the most-central doc of the
-    // lowest-id other cluster — training-data prep for embedding
-    // models, fully deterministic → hash-exact. ----
-    "q156_contrastive_triplets" -> ((s, dir) =>
-      graft.curation.Curate.contrastiveTriplets(t(s, dir, "embeddings"),
-          "embedding", "vec_id", k = 8, iters = 2, tauMicros = 400000L)
-        .select(col("cluster").cast("int").as("cluster_id"), col("id_a"),
-          col("id_b"), col("sim_micros"), col("neg_id"))),
-
-    "q155_curation_funnel" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val sem = Dedup.semanticDedup(t(s, dir, "embeddings"), "embedding",
-          "vec_id", k = 8, iters = 2, tauMicros = 400000L)
-        .select(col("vec_id").as("doc_id"), col("is_dup"))
-      val canon = Dedup.exactCanonicalIds(docs, "text", "doc_id")
-        .select("doc_id", "canonical_id")
-      val funnel = docs
-        .join(canon, "doc_id")
-        .join(sem, Seq("doc_id"), "left")
-        .where(col("doc_id") === col("canonical_id"))
-        .where(!coalesce(col("is_dup"), lit(false)))
-        .where(Text.tokenCount(col("text")) >= 30)
-        .withColumn("n_tokens", Text.tokenCount(col("text")))
-      graft.curation.Curate.hashSplit(funnel, "canonical_id")
-        .groupBy("split")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("doc_id")).as("id_sum"),
-          sum(col("n_tokens").cast("long")).as("token_sum"))
-    }),
-
-    // ---- E1 heath structure variables (query_fieldmap.Rmd:417-431):
-    // melt the BMS-scale class columns to long form (R5 exclusion melt),
-    // separate the "CODE - description" dictionary (R4), patch KW->KB,
-    // join cover_mean (K3 broadcast), and bind the directly-measured
-    // shrub/tree cover rows (U1 schema-tolerant union). ----
-    "q79_heath_structure" -> ((s, dir) => {
-      import s.implicits._
-      val bmsCols = Seq("sphagnumlayer", "campylopus_introflexus", "lowshrublayer",
-        "brushwood", "herbs", "calluna_phase_pioneer")
-      val idCols = Seq(
-        col("p_partkey").as("plot_id"),
-        (col("p_partkey") % 4).as("segment_id"),
-        (col("p_size") * 10).cast("double").as("area_m2"),
-        ((col("p_partkey") * 3) % 101).cast("double").as("shrub_and_treelayer_18m"))
-      val clsCols = bmsCols.zipWithIndex.map { case (c, i) =>
-        ((col("p_partkey") * (i + 2)) % 7 + 1).cast("int").as(c)
-      }
-      val sv = t(s, dir, "part").select(idCols ++ clsCols: _*)
-      val bms = Seq((1, "KB - kaal"), (2, "KW - kwijnend"), (3, "O - open"),
-        (4, "F - frequent"), (5, "T - talrijk"), (6, "CD - codominant"),
-        (7, "D - dominant")).toDF("class_id", "cover_description")
-      val coverscales = Seq(("KB", 0.5), ("O", 5.0), ("F", 15.0), ("T", 35.0),
-        ("CD", 62.5), ("D", 87.5)).toDF("class_code", "cover_mean")
-      val bms2 = Reshape.separate(bms, "cover_description",
-          Seq("class_code", "cover_description"), " - ")
-        .withColumn("class_code",
-          when(col("class_code") === "KW", "KB").otherwise(col("class_code")))
-        .join(broadcast(coverscales), Seq("class_code"), "left")
-        .select("class_id", "cover_description", "cover_mean")
-      val melted = Reshape.melt(sv,
-          Seq("plot_id", "segment_id", "area_m2"), bmsCols, "structure_var", "class_id")
-        .withColumn("coverscale_name", lit("Beheermonitoringsschaal"))
-        .join(broadcast(bms2), Seq("class_id"), "left")
-        .select(col("plot_id"), col("segment_id"), col("area_m2"),
-          lower(col("structure_var")).as("structure_var"), col("coverscale_name"),
-          col("cover_description"), col("cover_mean"))
-      val coverRows = sv.select(col("plot_id"), col("segment_id"), col("area_m2"),
-        lit("shrub_treelayer").as("structure_var"),
-        col("shrub_and_treelayer_18m").as("cover"))
-      melted.unionByName(coverRows, allowMissingColumns = true)
-    }),
-
-    // ---- E1 trees_a3a4: the full dendrometry export shape
-    // (processed/fieldmap_mhq/trees_a3a4.yml) — tariff volumes (K4),
-    // basal area, stem+total volumes, the date_assessment join the
-    // reference applies to every fact table (query_fieldmap.Rmd:
-    // 1855-1938) and the derived mon_cycle. ----
-    "q80_trees_a3a4" -> ((s, dir) => {
-      import s.implicits._
-      val trees = t(s, dir, "part").select(
-          col("p_partkey").as("tree_id"),
-          (col("p_partkey") % 500).as("plot_id"),
-          (col("p_partkey") % 4 + 1).as("segment_id"),
-          (col("p_partkey") % 20).as("tree_species_id"),
-          (lit(50) + col("p_size") * 10).cast("int").as("perimeter_cm"),
-          (lit(8) + col("p_partkey") % 15).cast("double").as("height_m"))
-        .withColumn("dbh_mm", round(col("perimeter_cm") * 10 / lit(math.Pi)).cast("int"))
-        .withColumn("name_nl", concat(lit("soort_"), col("tree_species_id")))
-        .withColumn("name_sc", concat(lit("species_"), col("tree_species_id")))
-        .withColumn("status_tree", when(col("tree_id") % 3 === 0, "alive")
-          .when(col("tree_id") % 3 === 1, "dead standing").otherwise("lying"))
-        .withColumn("coppice_individual",
-          when(col("tree_id") % 5 === 0, "coppice").otherwise("individual"))
-        .withColumn("intact_tree",
-          when(col("tree_id") % 7 < 5, "intact").otherwise("broken"))
-      val params = tariffParams.toDF(
-        "tree_species_id", "a", "b", "c", "d", "e", "f", "formule_type")
-      val dated = t(s, dir, "orders")
-        .groupBy((col("o_custkey") % 500).as("plot_id"))
-        .agg(max(col("o_orderdate")).as("date_assessment"))
-      graft.pipelines.Vbi.treeVolume(graft.pipelines.Vbi.withTreeMetrics(trees), params)
-        .join(dated, Seq("plot_id"), "left")
-        .withColumn("mon_cycle",
-          (floor((year(col("date_assessment")) - 1992) / lit(4.0)) + 1).cast("double"))
-        .select(col("plot_id"), col("segment_id"), col("perimeter_cm"), col("dbh_mm"),
-          col("height_m"), col("name_nl"), col("status_tree"), col("coppice_individual"),
-          col("intact_tree"), col("tree_id"), col("date_assessment"),
-          round6(col("basalarea_m2")).as("basalarea_m2"),
-          round6(col("vol_m3")).as("vol_stem_m3"),
-          round6(col("vol_m3") * (lit(1.0) + lit(1.0) / (col("tree_species_id") + 2)))
-            .as("vol_tot_m3"),
-          col("mon_cycle"), col("name_sc"), col("tree_species_id"))
-    }),
-
-    // ---- benchmark decontamination: training docs sharing a token
-    // n-gram with the held-out benchmark slice (GPT-3-appendix style;
-    // n=3 here because the synthetic corpus has no longer shared runs;
-    // production uses n=8..13 with the identical plan) ----
-    "q81_decontamination" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      graft.curation.Curate.contamination(
-        train = docs.where(col("doc_id") % 97 =!= 0),
-        bench = docs.where(col("doc_id") % 97 === 0),
-        n = 3)
-    }),
-
-    // ---- ROI selection report (data_heide_groot_schietveld.Rmd:32-117):
-    // ROI polygons -> type filter -> PIP spatial join of measurement
-    // points -> membership flag against the LSVI global results (the
-    // report's `lsvi_data = id %in% lsvi_detail$id` check). Rectangles
-    // with half-unit offsets keep the oracle interval-expressible while
-    // Spark runs the generic grid-indexed ray-cast path. ----
-    "q101_roi_selection" -> ((s, dir) => {
-      val meas = t(s, dir, "customer").select(
-          col("c_custkey").as("id"),
-          concat(lit("P"), col("c_custkey")).as("point_code"),
-          when(col("c_custkey") % 4 === 0, "4010")
-            .when(col("c_custkey") % 4 === 1, "4030")
-            .when(col("c_custkey") % 4 === 2, "7140_oli")
-            .otherwise("2310").as("type"),
-          ((col("c_custkey") * 7) % 97).cast("double").as("x"),
-          ((col("c_custkey") * 13) % 89).cast("double").as("y"))
-        .where(col("type").isin("4010", "4030", "7140_oli"))
-      val roi = t(s, dir, "region").select(
-          concat(lit("md_"), col("r_regionkey")).as("code_md"),
-          (((col("r_regionkey") * 19) % 60).cast("double") - 0.5).as("x0"),
-          (((col("r_regionkey") * 23) % 50).cast("double") - 0.5).as("y0"))
-        .withColumn("x1", col("x0") + 25.0)
-        .withColumn("y1", col("y0") + 30.0)
-      val polys = roi.select(col("code_md"), array(
-        struct(col("x0").as("x"), col("y0").as("y")),
-        struct(col("x1").as("x"), col("y0").as("y")),
-        struct(col("x1").as("x"), col("y1").as("y")),
-        struct(col("x0").as("x"), col("y1").as("y"))).as("ring"))
-      val inRoi = graft.geo.GeoJoin.pointInPolygonJoin(
-        meas, polys, "x", "y", "ring", cellSize = 16.0)
-      val glob = Lsvi.globaal(Lsvi.indicator(
-        Lsvi.detail(lsviMeasurements(s, dir), lsviRules(s))))
-      inRoi
-        .join(glob.select(col("id"), lit(true).as("__has")), Seq("id"), "left")
-        .select(col("id"), col("point_code"), col("type"), col("x"), col("y"),
-          col("code_md"), coalesce(col("__has"), lit(false)).as("lsvi_data"))
-    }),
-
-    // ---- L-series E2E: one corpus-ingestion round (quality floor ->
-    // within-batch exact dedup -> against-corpus fingerprint anti-join
-    // -> benchmark decontamination -> append); all rules relational,
-    // so the whole round is oracle-checked ----
-    "q100_corpus_ingest" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      graft.pipelines.CorpusIngest.ingest(
-        corpus = docs.where(col("doc_id") % 3 === 0),
-        batch = docs.where(col("doc_id") % 3 =!= 0),
-        bench = docs.where(col("doc_id") % 97 === 0).select("doc_id", "text"),
-        minTokens = 30)
-    }),
-
-    // ---- deterministic hash split: stable train/val/test assignment
-    // from md5(doc_id) alone — adding documents never reassigns
-    // existing ones ----
-    "q82_hash_split" -> ((s, dir) =>
-      graft.curation.Curate.hashSplit(t(s, dir, "documents"))
-        .select(col("doc_id"), col("bucket"), col("split"))),
-
-    // ---- mixture/epoch sampling: per-language weights realized as
-    // deterministic per-doc copy counts (floor(w) + hash-Bernoulli
-    // frac(w)); one output row per training copy ----
-    "q83_mixture_sampling" -> ((s, dir) =>
-      graft.curation.Curate.mixtureCopies(
-        t(s, dir, "documents"),
-        weights = Map("en" -> 2.5, "de" -> 1.5, "es" -> 1.0,
-          "fr" -> 0.8, "zh" -> 0.3))),
-
-    // ---- temperature-flattened mixture (Curate.temperatureCopies):
-    // α=0.5 — per-group weight derived from the corpus histogram
-    // (w_g = N·n_g^α / (n_g·Σn^α)), realized as q83's hash-Bernoulli
-    // copy counts. sqrt chains keep n^α correctly rounded (pow isn't),
-    // the cross-group Σn^α is a snapped integer sum → hash-exact. ----
-    "q165_temperature_mixture" -> ((s, dir) =>
-      graft.curation.Curate.temperatureCopies(
-        t(s, dir, "documents"), alphaQuarters = 2)),
-
-    // ---- per-domain quality quota: best k docs per source by the
-    // composite quality score, deterministic id tiebreak ----
-    "q84_domain_quota" -> ((s, dir) =>
-      graft.curation.Curate.domainQuota(t(s, dir, "documents"), k = 10)),
-
-    // ---- deterministic epoch shuffle with global positions: range
-    // partition + sort on md5(id:seed), then zipWithIndex-style
-    // offsets — the scale form of ORDER BY random() + row_number() ----
-    "q85_epoch_shuffle" -> ((s, dir) =>
-      graft.curation.Curate.epochPositions(
-          t(s, dir, "documents"), seed = 42L, nPartitions = 8)
-        .select(col("doc_id"), col("shuffle_key"), col("pos"))),
-
-    // ---- PII scrub: typed-placeholder redaction of emails / IPv4s /
-    // phone runs, with per-kind match counts. The synthetic corpus has
-    // no PII, so the query plants a deterministic specimen of each kind
-    // per document (both engines build the identical string) and the
-    // oracle checks the redaction itself ----
-    "q86_pii_redaction" -> ((s, dir) => {
-      val seeded = t(s, dir, "documents").select(col("doc_id"),
-        concat(lit("contact user"), col("doc_id").cast("string"),
-          lit("@example."),
-          when(col("doc_id") % 2 === 0, "com").otherwise("org"),
-          lit(" ip 10."), (col("doc_id") % 256).cast("string"),
-          lit(".0."), (col("doc_id") % 100).cast("string"),
-          lit(" tel +1 555 01"),
-          lpad((col("doc_id") % 100).cast("string"), 2, "0"),
-          lit(" "), col("text")).as("text"))
-      seeded.select(col("doc_id"),
-        regexp_count(col("text"), lit(Text.EmailRe)).as("n_emails"),
-        regexp_count(col("text"), lit(Text.Ipv4Re)).as("n_ips"),
-        regexp_count(col("text"), lit(Text.PhoneRe)).as("n_phones"),
-        Text.redactPii(col("text")).as("redacted"))
-    }),
-
-    // ---- Gopher-style repetition signals: duplicate-token fraction
-    // and most-frequent-bigram share, all per-row HOFs (the per-doc
-    // mode is a sorted-run scan, never a corpus-wide groupBy) ----
-    "q87_repetition_stats" -> ((s, dir) => {
-      val withToks = t(s, dir, "documents")
-        .select(col("doc_id"), Text.tokens(col("text")).as("t"))
-      withToks.select(col("doc_id"),
-        size(col("t")).as("n_tokens"),
-        round6(Text.dupTokenFrac(col("t"))).as("dup_token_frac"),
-        Text.maxElementCount(Text.bigrams(col("t"))).as("top_bigram_count"),
-        round6(Text.maxElementCount(Text.bigrams(col("t"))).cast("double") /
-          (size(col("t")) - 1)).as("top_bigram_frac"))
-    }),
-
-    // ---- context-window sequence packing: fixed char-budget bins over
-    // the deterministic shuffle order, global running sum via the
-    // two-pass offsets pattern (no single-partition window) ----
-    "q88_sequence_packing" -> ((s, dir) =>
-      graft.curation.Curate.packBudget(
-          t(s, dir, "documents"), costCol = "n_chars", budget = 4096L,
-          seed = 42L, nPartitions = 8)
-        .select(col("doc_id"), col("bin"))),
-
-    // ---- TF-IDF: corpus document frequencies joined back to per-doc
-    // term counts; each document's top term by tf*ln(N/df), ranked on
-    // the ROUNDED score with a term tiebreak for bit-stable output ----
-    "q89_tfidf_top_term" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val toks = docs.select(col("doc_id"),
-        explode(Text.tokens(col("text"))).as("term"))
-      val tf = toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      val dfreq = toks.groupBy("term")
-        .agg(count_distinct(col("doc_id")).as("df"))
-      val n = docs.agg(count(lit(1)).as("n"))
-      val scored = tf
-        .join(broadcast(dfreq), "term") // vocab is tiny next to the corpus
-        .crossJoin(broadcast(n))
-        .withColumn("tfidf",
-          round6(col("tf") * log(col("n").cast("double") / col("df"))))
-      val byDoc = org.apache.spark.sql.expressions.Window
-        .partitionBy("doc_id")
-        .orderBy(col("tfidf").desc, col("term").asc)
-      scored.withColumn("rk", row_number().over(byDoc))
-        .where(col("rk") === 1)
-        .select(col("doc_id"), col("term").as("top_term"), col("tfidf"))
-    }),
-
-    // ---- backward as-of join: each click picks up the user's latest
-    // purchase at-or-before it — union + one keyed window, NO join in
-    // the plan (see Temporal.asofJoinBackward's scale notes) ----
-    "q90_asof_join" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      val clicks = ev.where(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"),
-          unix_micros(col("ts").cast("timestamp")).as("ts_us"))
-      val purchases = ev.where(col("event_type") === "purchase")
-        .select(col("user_id"),
-          unix_micros(col("ts").cast("timestamp")).as("ts_us"), col("value"))
-      graft.ops.Temporal.asofJoinBackward(clicks, purchases,
-          keys = Seq("user_id"), timeCol = "ts_us", payload = Seq("value"))
-        .select(col("event_id"), col("user_id"), col("ts_us"),
-          col("ts_us_right").as("purchase_ts_us"),
-          col("value_right").as("purchase_value"))
-    }),
-
-    // ---- un-keyed interval join: every event against 240 overlapping
-    // global 2h maintenance windows, via the 1-D grid-cell equi-join
-    // (no cross join, no inequality-only join) ----
-    "q91_interval_join" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      val t0 = ev.agg(unix_micros(date_trunc("day", min(col("ts")))
-        .cast("timestamp")).as("t0_us"))
-      val hourUs = 3600L * 1000000L
-      val windows = t0
-        .select(explode(sequence(lit(0), lit(239))).as("window_id"), col("t0_us"))
-        .select(col("window_id"),
-          (col("t0_us") + col("window_id") * lit(3 * hourUs)).as("start_us"),
-          (col("t0_us") + col("window_id") * lit(3 * hourUs) + lit(2 * hourUs))
-            .as("end_us"))
-      val points = ev.select(col("event_id"),
-        unix_micros(col("ts").cast("timestamp")).as("ts_us"))
-      graft.ops.Temporal.intervalJoin(points, "ts_us",
-          windows.select("window_id", "start_us", "end_us"),
-          "start_us", "end_us", cellUs = 2 * hourUs)
-        .select("event_id", "window_id", "ts_us")
-    }),
-
-    // ---- unigram LM scoring: corpus-trained token frequencies ->
-    // per-document log-probability and a per-token perplexity proxy.
-    // The float fold runs in canonical ascending-term order on BOTH
-    // engines, so the sum is bit-stable (see Aggs.complementProductSorted
-    // for the same trick on products) ----
-    "q92_unigram_logprob" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val toks = docs.select(col("doc_id"),
-        explode(Text.tokens(col("text"))).as("term"))
-      val tf = toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      val vocab = toks.groupBy("term").agg(count(lit(1)).as("cnt"))
-      val total = toks.agg(count(lit(1)).as("total"))
-      val contrib = tf
-        .join(broadcast(vocab), "term") // vocab is tiny next to the corpus
-        .crossJoin(broadcast(total))
-        .withColumn("contrib",
-          round6(col("tf") * log(col("cnt").cast("double") / col("total"))))
-      contrib.groupBy("doc_id")
-        .agg(sum(col("tf")).as("n_tokens"),
-          aggregate(
-            array_sort(collect_list(struct(col("term"), col("contrib")))),
-            lit(0.0), (acc, x) => acc + x.getField("contrib")).as("lp"))
-        .select(col("doc_id"), col("n_tokens"),
-          round6(col("lp")).as("logprob"),
-          round6(col("lp") * -1 / col("n_tokens")).as("ppl_proxy"))
-    }),
-
-    // ---- sketch twins: HLL++ distinct terms and KLL-style quantiles
-    // per source — approximate by nature, so rows-only here; the
-    // RecallSpec-style accuracy bound vs the exact twin lives in
-    // TemporalSketchSpec ----
-    "q93_sketch_stats" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val toks = docs.select(col("source"),
-        explode(Text.tokens(col("text"))).as("term"), col("n_chars"))
-      toks.groupBy("source").agg(
-        approx_count_distinct(col("term"), 0.02).as("approx_vocab"),
-        percentile_approx(col("n_chars"), lit(0.5), lit(10000)).as("approx_p50"),
-        percentile_approx(col("n_chars"), lit(0.9), lit(10000)).as("approx_p90"))
-    }),
-
-    // ---- S5/S8/S10 versioned-table IO end-to-end: parquet -> Vc.write
-    // (sorted TSV + sidecar) -> Vc.read (hash-verified) -> guarded
-    // incremental append of a disjoint batch -> Vc.read the rewritten
-    // table. The oracle computes the same final frame straight from
-    // parquet, so a green hash proves the TSV round-trip is value-exact
-    // and the merge appended precisely the incoming keys
-    // (`query_fieldmap_update_fieldwork2022.Rmd:945-1076`). ----
-    "q94_vc_incremental_append" -> ((s, dir) => {
-      val orders = t(s, dir, "orders").select(
-        col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
-        col("o_totalprice"), col("o_orderdate").cast("date").as("o_orderdate"))
-      val existing = orders.where(col("o_orderkey") % 7 === 0)
-      val incoming = orders.where(col("o_orderkey") % 7 === 1)
-      val base = tempResultDir("vc_q94") + "/orders_slice"
-      graft.io.Vc.write(existing, base, sortKeys = Seq("o_orderkey"))
-      graft.pipelines.IncrementalUpdate.applyToVc(s, base, incoming,
-        keys = Seq("o_orderkey"), sortKeys = Seq("o_orderkey"))
-      graft.io.Vc.read(s, base)
-    }),
-
-    // ---- S8/S10 upsert path: Vc-stored table patched in place
-    // (replace = true -> Relational.applyPatches) and read back.
-    // The patch frame derives from the same parquet, so the oracle is a
-    // CASE WHEN over the source table. ----
-    "q95_vc_upsert_patch" -> ((s, dir) => {
-      val cust = t(s, dir, "customer").select(
-        col("c_custkey"), col("c_name"), col("c_acctbal"), col("c_mktsegment"))
-      val patch = cust.where(col("c_custkey") % 10 === 3)
-        .withColumn("c_acctbal", col("c_acctbal") * lit(1.5))
-      val base = tempResultDir("vc_q95") + "/customer_patched"
-      graft.io.Vc.write(cust, base, sortKeys = Seq("c_custkey"))
-      graft.pipelines.IncrementalUpdate.applyToVc(s, base, patch,
-        keys = Seq("c_custkey"), sortKeys = Seq("c_custkey"), replace = true)
-      graft.io.Vc.read(s, base)
-    }),
-
-    // ---- K2 forest plot-level report (`data_lsvi_forests.R:35-41`,
-    // the lsvi_globaal_boshabitat.csv shape): RapportageHR globaal
-    // results joined to point metadata, scheme detected from the
-    // point code (vbi vs mhq), observed subtype passthrough. ----
-    "q98_lsvi_plot_report" -> ((s, dir) => {
-      val glob = Lsvi.globaal(Lsvi.indicator(
-        Lsvi.detail(lsviMeasurements(s, dir), lsviRules(s))))
-      val pts = t(s, dir, "supplier").select(
-        col("s_suppkey").as("id"),
-        when(col("s_suppkey") % 3 === 0, concat(lit("vbi_"), col("s_suppkey")))
-          .otherwise(concat(lit("mhq_"), col("s_suppkey"))).as("point_code"),
-        date_add(lit("2022-01-01").cast("date"),
-          (col("s_suppkey") % 365).cast("int")).as("date"),
-        (lit(140000.0) + col("s_suppkey") * 100).as("x"),
-        (lit(160000.0) + col("s_suppkey") * 80).as("y"),
-        when(col("s_suppkey") % 2 === 0, "9120").otherwise("9130")
-          .as("habitatsubtype"))
-      glob.join(pts, Seq("id"))
-        .select(
-          when(col("point_code").contains("vbi"), "vbi").otherwise("mhq")
-            .as("scheme"),
-          col("id"), col("date"), col("point_code"), col("x"), col("y"),
-          col("habitatsubtype").as("type_observed"), col("lsvi"),
-          lit("RapportageHR").as("aggregatiemethode"),
-          col("aandeel_gunstig"), col("index_mean_ind"))
-    }),
-
-    // ---- E2 HT3260 header prep (`HT3260_data_preparation.Rmd:70-115,
-    // 157-178`): sitequal spread to reliability / reason_no_survey with
-    // prefix strip + recode, N2k factor recode, suitable_mhq and
-    // measured flags from the three-extract completeness anti-joins.
-    // INBOVEG-shaped inputs synthesized deterministically from customer. ----
-    "q97_ht3260_header" -> ((s, dir) => {
-      val cust = t(s, dir, "customer")
-      def recId = concat(lit("IV"), col("c_custkey")).as("recording_givid")
-      val header = cust.select(recId, lit("HT3260").as("survey"),
-        col("c_name").as("user_reference"), col("c_mktsegment").as("location"))
-      val classif = cust.where(col("c_custkey") % 11 =!= 5).select(recId,
-        when(col("c_custkey") % 3 === 0, "-9")
-          .when(col("c_custkey") % 3 === 1, "0")
-          .otherwise("3260").as("value_code"))
-      val sitequal = cust.where(col("c_custkey") % 4 === 0).select(recId,
-          concat(lit("Betrouwbaarheid opname: "),
-            when(col("c_custkey") % 3 === 0, "hoog")
-              .when(col("c_custkey") % 3 === 1, "matig")
-              .otherwise("laag")).as("value"),
-          lit(null).cast("string").as("comment"))
-        .unionByName(cust.where(col("c_custkey") % 5 === 0).select(recId,
-          when(col("c_custkey") % 2 === 0, "Geen opname: niet toegankelijk")
-            .otherwise("Geen opname: drooggevallen").as("value"),
-          when(col("c_custkey") % 10 === 0, "tijdelijk droog")
-            .cast("string").as("comment")))
-      val structure = cust.where(col("c_custkey") % 7 =!= 2).select(recId)
-      val layerqual = cust.where(col("c_custkey") % 7 =!= 3).select(recId)
-      val vegetation = cust.where(col("c_custkey") % 7 =!= 4).select(recId)
-      graft.pipelines.Inboveg.ht3260Header(
-        header, classif, sitequal, structure, layerqual, vegetation)
-    }),
-
-    // ---- multimodal segment sampling: stride-aligned byte windows
-    // over the binary media column (frame-sampling plumbing; ASCII
-    // text payloads make it DuckDB-oracle-checkable) ----
-    "q64_media_segments" -> ((s, dir) => {
-      val media = Media.fromText(t(s, dir, "documents"), "doc_id", "text", "text_blob")
-      Media.sampleSegments(media, segmentBytes = 64, strideBytes = 64)
-        .select(col("media_id"), col("segment_idx"),
-          decode(col("segment"), "UTF-8").as("segment_text"))
-    }),
-
-    // ---- z-order layout key (Layout.zvalue): Morton code over
-    // declared domains. Map-only and bit-exact across engines — the
-    // write path (Layout.writeZOrdered) range-exchanges on this key so
-    // parquet min/max pruning works on EVERY dimension (LayoutSpec
-    // proves the per-file envelope property). ----
-    "q99_zorder_key" -> ((s, dir) =>
-      t(s, dir, "part").select(col("p_partkey"),
-        Layout.zvalue(Seq(
-          Layout.ZDim(col("p_size"), 1, 50),
-          Layout.ZDim(col("p_retailprice"), 900, 2100)), bits = 8).as("z"))),
-
-    // ---- K4 volume tariff polynomials (data-driven per formule_type) ----
-    "q72_tree_volume" -> ((s, dir) => {
-      import s.implicits._
-      val trees = t(s, dir, "part").select(
-        col("p_partkey").as("tree_id"),
-        (col("p_partkey") % 20).as("tree_species_id"),
-        (lit(50) + col("p_size") * 10).cast("double").as("perimeter_cm"),
-        (lit(8) + col("p_partkey") % 15).cast("double").as("height_m"))
-      val params = tariffParams.toDF(
-        "tree_species_id", "a", "b", "c", "d", "e", "f", "formule_type")
-      graft.pipelines.Vbi.treeVolume(trees, params)
-        .select(col("tree_id"), col("tree_species_id"), col("formule_type"),
-          round6(col("vol_m3")).as("vol_m3"))
-    }),
-
-    // ---- dendrometry: per-tree basal area + per-plot stand totals ----
-    "q73_tree_metrics" -> ((s, dir) => {
-      val trees = t(s, dir, "part").select(
-        (col("p_partkey") % 500).as("plot_id"),
-        col("p_partkey").as("tree_id"),
-        (lit(100) + (col("p_size") * 17) % 500).as("dbh_mm"))
-      graft.pipelines.Vbi.withTreeMetrics(trees)
-        .groupBy("plot_id")
-        .agg(
-          count(lit(1)).as("n_trees"),
-          round(sum(col("basalarea_m2")), 6).as("basal_area_m2"),
-          round(max(col("basalarea_m2")), 6).as("max_tree_basal_m2"))
-    }),
-
-    // ---- deadwood line-intersect volume (Van Wagner) ----
-    "q74_deadwood_volume" -> ((s, dir) => {
-      val lim = t(s, dir, "lineitem").select(
-        col("l_suppkey").as("plot_id"),
-        col("l_quantity").as("diameter_cm"),
-        ((col("l_partkey") % 30)).cast("double").as("angle_degrees"))
-      graft.pipelines.Vbi.deadwoodVolume(lim, "plot_id", lineLengthM = 100.0)
-        .withColumn("vol_m3_ha", round(col("vol_m3_ha"), 6))
-    }),
-
-    // ---- multimodal binary plumbing: metadata + content hash ----
-    "q60_media_meta" -> ((s, dir) => {
-      val media = Media.fromText(t(s, dir, "documents"), "doc_id", "text", "text_blob")
-      Media.extractFeatures(s, media).toDF()
-        .select("media_id", "kind", "byte_len", "content_hash")
-    }),
-
-    // ---- REAL raster decode (JDK ImageIO): generate constant-fill
-    // gray PNGs with closed-form dims, decode them back — both codec
-    // calls are native codegen'd expressions (the q153 PCM treatment:
-    // one fused whole-stage loop, no typed-Dataset ser/de boundary;
-    // the mapPartitions batch variant stays pinned row-identical in
-    // IoMediaStreamSpec); the oracle recomputes the closed form ----
-    "q104_image_decode" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .select(col("doc_id").as("media_id"),
-          graft.functions.MediaFunctions.grayPng(
-            (col("doc_id") % 13 + 3).cast("int"),
-            (col("doc_id") % 7 + 2).cast("int"),
-            (col("doc_id") % 251).cast("int")).as("media"))
-        .select(col("media_id"),
-          graft.functions.MediaFunctions.imageMeta(col("media")).as("m"))
-        .select(col("media_id"), col("m.width").as("width"),
-          col("m.height").as("height"), col("m.mean_px").as("mean_px"))),
-
-    // ---- REAL multi-frame CONTAINER decode (animated GIF through the
-    // JDK sequence codec — the q104 treatment for the last stubbed
-    // decode class): per doc, doc_id % 3 + 1 constant-fill gray frames
-    // with closed-form values encode as ONE GIF container, then
-    // gif_frames decodes every frame back to (frame, dims, mean_px) —
-    // generate and decode both native codegen'd expressions, one fused
-    // loop, and the oracle recomputes the closed form per frame. The
-    // identity gray palette represents constant fills exactly and
-    // heights stay >= 5 (the probed JDK small-frame codec quirk —
-    // GifKernels.grayGif), so the round trip is hash-exact; frame
-    // rasters also bridge into Media.resizeRaster's real-resample
-    // branch (IoMediaStreamSpec pins that chain + the mapPartitions
-    // batch-variant identity). ----
-    "q214_gif_container_decode" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .select(col("doc_id").as("media_id"),
-          graft.functions.MediaFunctions.grayGif(
-            (col("doc_id") % 13 + 3).cast("int"),
-            (col("doc_id") % 7 + 5).cast("int"),
-            transform(sequence(lit(0L), col("doc_id") % 3),
-              f => ((col("doc_id") * 7 + f * 31) % 251).cast("int")))
-            .as("media"))
-        .select(col("media_id"),
-          explode(graft.functions.MediaFunctions.gifFrames(col("media")))
-            .as("fr"))
-        .select(col("media_id"), col("fr.frame").as("frame"),
-          col("fr.width").as("width"), col("fr.height").as("height"),
-          col("fr.mean_px").as("mean_px"))),
-
-    // ---- FRAME SAMPLING + RESIZE over real containers (the
-    // multimodal preprocessing composition: container → sample every
-    // 2nd frame → raw raster → nearest-neighbor resize → features):
-    // per doc a doc_id % 6 + 1 frame GIF; gif_frames picks the
-    // sampled frame ids, gif_frame_raster decodes ONLY those to raw
-    // rasters (GIF is sequential-decode, so sampling saves the
-    // downstream work, not the codec pass), and Media.resizeRaster's
-    // REAL resample branch shrinks each to 4x3. Output = per sampled
-    // frame the resized byte count and byte sum — for constant fills
-    // the closed form v*12, so the oracle gates the resize OUTPUT
-    // BYTES end to end (the nearest-neighbor pick semantics on
-    // gradients are IoMediaStreamSpec's pin). ----
-    "q218_gif_frame_sample" -> ((s, dir) => {
-      val gifs = t(s, dir, "documents")
-        .select(col("doc_id").as("media_id"),
-          graft.functions.MediaFunctions.grayGif(
-            (col("doc_id") % 13 + 3).cast("int"),
-            (col("doc_id") % 7 + 5).cast("int"),
-            transform(sequence(lit(0L), col("doc_id") % 6),
-              f => ((col("doc_id") * 11 + f * 37) % 251).cast("int")))
-            .as("media"),
-          (col("doc_id") % 13 + 3).cast("int").as("width"),
-          (col("doc_id") % 7 + 5).cast("int").as("height"))
-      // the FUSED sampling decode (gif_frame_rasters): one container
-      // pass per doc instead of a per-frame re-open — the per-frame
-      // form walked frames 0..f-1 to reach each sampled f (O(F²)
-      // container work; this query's round-18 shape benched 5.3s
-      // isolated at sf0.1, the fused form ~1.3s). Output identical:
-      // the kernel emits exactly the frame % 2 == 0 rasters, pinned
-      // byte-equal to the per-frame kernel in IoMediaStreamSpec.
-      val sampled = gifs
-        .select(col("media_id"), col("width"), col("height"),
-          explode(graft.functions.MediaFunctions
-            .gifFrameRasters(col("media"), 2)).as("fr"))
-        // synthetic row key: frame count <= 6, so media_id*8+frame is
-        // collision-free and survives resizeRaster's fixed row shape
-        .select((col("media_id") * 8 + col("fr.frame")).as("media_id"),
-          lit("image/gif").as("kind"), col("fr.raster").as("media"),
-          col("width"), col("height"), lit(0).as("sample_rate"))
-      graft.multimodal.Media.resizeRaster(s, sampled, targetW = 4, targetH = 3)
-        .toDF()
-        .select((col("media_id") / 8).cast("long").as("media_id"),
-          (col("media_id") % 8).cast("int").as("frame"),
-          length(col("media")).as("n_bytes"),
-          // resized-bytes checksum via the q153 hex convention
-          // (DuckDB's md5 is VARCHAR-only, so both engines hash the
-          // uppercase hex rendering of the bytes)
-          conv(substring(md5(hex(col("media"))), 1, 8), 16, 10).cast("long")
-            .as("resized_checksum"))
-    }),
-
-    // ---- TOKEN TRAINING-SHARD EXPORT (io.TokenShards — the LLM
-    // pipeline's last mile: the corpus leaves the engine as binary
-    // int32-LE shards of back-to-back 64-token sequences, the layout a
-    // training loader memory-maps). Docs in doc-id order, one EOS
-    // (=vocab) each, partial tail sequence dropped, 16 seqs per shard.
-    // Every byte is oracle-recomputable: token ids are the md5-slice
-    // hash, so the DuckDB gate rebuilds the exact stream from parquet
-    // and checks each shard's count/sum AND the position-weighted
-    // polynomial checksum — the bytes on disk must encode exactly the
-    // right tokens in exactly the right order. manifest_match pins the
-    // writer's self-report against the re-read bytes. Plan: one
-    // documents scan; offsets move (doc_id, cost) pairs only; the text
-    // shuffles once (offsets join), the token stream once (shard
-    // exchange, at CHUNK grain since round 21 — ~seqLen tokens per
-    // shuffle record); the read-back is a map-only binaryFile scan through
-    // the fused token_shard_stats kernel — shard contents never reach
-    // a shuffle, only 3-field stat structs do. manifest_match is a
-    // GATE, not a reported bit: verifyManifest THROWS on any
-    // readStats-vs-manifest divergence (missing/extra/short shard), so
-    // a bad write is a loud err row in CORRECTNESS, never a silent
-    // hash mismatch. ----
-    "q219_token_shards" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val path = tempResultDir("graft-q219") + "/shards"
-      val packed = graft.io.TokenShards.packChunks(d, "doc_id", "text",
-        vocab = 4096, seqLen = 64, seqsPerShard = 16, nBuckets = 8)
-      val manifest = graft.io.TokenShards.write(packed, path)
-      graft.io.TokenShards
-        .verifyManifest(graft.io.TokenShards.readStats(s, path), manifest)
-        .select(col("shard_id"),
-          expr("n_tokens div 64L").as("n_seqs"),
-          col("n_tokens"), col("token_sum"), col("poly_mod"),
-          lit(true).as("manifest_match"))
-    }),
-
-    // ---- BYTE-FREE TWIN of q219 (the r20-verdict bifurcation
-    // instrument for the driver-only hash divergence): the IDENTICAL
-    // per-shard report computed straight from pack()'s token stream —
-    // no write, no byte re-read. The within-shard position rn is pure
-    // arithmetic (gpos − shard_id·seqLen·seqsPerShard + 1, shards
-    // being contiguous gpos ranges), so the polynomial folds in one
-    // map-side-combined aggregate; manifest_match is the constant the
-    // oracle emits (there is no manifest here by construction). Gated
-    // by the SAME oracle SQL as q219: twin green + q219 red localizes
-    // the divergence to the write/re-read leg; both red localizes it
-    // to the packed stream vs the oracle's DuckDB replay. ----
-    "q238_token_shards_stream" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      graft.io.TokenShards.pack(d, "doc_id", "text",
-          vocab = 4096, seqLen = 64, seqsPerShard = 16, nBuckets = 8)
-        .groupBy(col("shard_id"))
-        .agg(count(lit(1)).as("n_tokens"),
-          sum(col("tid").cast("long")).as("token_sum"),
-          (sum((col("gpos") - col("shard_id") * lit(1024L) + lit(1L)) *
-            (col("tid").cast("long") + lit(1L))) % lit(1000000007L))
-            .as("poly_mod"))
-        .select(col("shard_id"),
-          expr("n_tokens div 64L").as("n_seqs"),
-          col("n_tokens"), col("token_sum"), col("poly_mod"),
-          lit(true).as("manifest_match"))
-    }),
-
-    // ---- AVRO interchange round trip (core.AvroSource / io.Avro —
-    // the row-oriented lake/streaming delivery format next to q210's
-    // columnar ORC; the jar set has no spark-avro connector, so the
-    // container blocks are parsed DIRECTLY with avro-core over
-    // per-shard-file bytes, which is also the honest parallelism
-    // grain: one map task per shard like the gzip JSONL deliveries).
-    // documents write as 4 deflate container shards and read back
-    // through the registry source with the supplied schema as the
-    // Avro READER schema; q209's md5 content checksum gates any
-    // encode/decode value mangling. ----
-    "q221_avro_roundtrip" -> ((s, dir) => {
-      import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-      val d = t(s, dir, "documents")
-      val path = tempResultDir("graft-q221") + "/docs_avro"
-      graft.io.Avro.write(d.repartition(4), path)
-      val back = graft.core.AvroSource(path, StructType(Seq(
-        StructField("doc_id", LongType), StructField("text", StringType),
-        StructField("lang", StringType), StructField("source", StringType),
-        StructField("n_chars", LongType)))).load(s)
-      back.groupBy(col("lang"), col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).as("chars_total"),
-          sum(conv(substring(md5(col("text")), 1, 8), 16, 10).cast("long"))
-            .as("text_checksum"))
-    }),
-
-    // ---- VERSIONED-SNAPSHOT DIFF (ops.Relational.snapshotDiff — the
-    // publish-audit question "what changed between version A and B" as
-    // one query). Version A = the corpus minus the doc_id%11 rows with
-    // the %17 rows' text amended (' v2' suffix); version B = the
-    // corpus minus the %13 rows — so added/removed/changed rows all
-    // genuinely occur and the oracle replays the same derivation. Both
-    // sides collapse map-side to (doc_id, md5 row fingerprint); only
-    // 16-byte digests reach the full outer join, never text. Report =
-    // the non-unchanged rows. ----
-    "q222_snapshot_diff" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val old = d.where(col("doc_id") % 11 =!= 0)
-        .withColumn("text", when(col("doc_id") % 17 === 0,
-          concat(col("text"), lit(" v2"))).otherwise(col("text")))
-      val nw = d.where(col("doc_id") % 13 =!= 0)
-      graft.ops.Relational.snapshotDiff(old, nw, Seq("doc_id"),
-          Seq("text", "lang", "source", "n_chars"))
-        .where(col("change") =!= "unchanged")
-    }),
-
-    // ---- PREFERENCE-PAIR construction (Curate.preferencePairs — the
-    // DPO/reward-model data shape: per (lang, source) group the
-    // highest-quality doc is `chosen`, the lowest `rejected`, margin
-    // carried). Picks ride ONE composite integer key (score·10¹² +
-    // inverted id) so max/min ARE the rounded-score-then-id arg-picks
-    // and the identical arithmetic replays in the oracle. One group
-    // shuffle; never a corpus sort. ----
-    "q231_preference_pairs" -> ((s, dir) =>
-      graft.curation.Curate.preferencePairs(t(s, dir, "documents"),
-        Seq("lang", "source"), "doc_id", "text")),
-
-    // ---- PRETRAINING-RELEASE E2E (pipelines.PretrainRelease — the
-    // export-side analogue of q100's admission chain, the chain a real
-    // data release runs as ONE query: curation floor → exact dedup →
-    // benchmark decontamination (bench = the %97≡0 split; 5-gram
-    // shingles — the release-grade grain: the synthetic corpus's
-    // shared phrase pool makes 3-grams wipe 98% of sf0.1, while 5-grams
-    // leave a real-but-active contamination stage at both SFs) →
-    // α=0.5 temperature mixture with weights over the CLEAN set
-    // (q165's copies) → token-shard export + doc-span-capable stream +
-    // VERIFIED manifest (q219's writer behind the verifyManifest
-    // gate). Copy c of doc d packs as release_id = d·16 + c−1, so
-    // copies are adjacent and the oracle replays the global order as
-    // plain integer order. Scale shape: the gates move ids + 16-byte
-    // digests only (quality flag map-only, dedup window on (id, fp),
-    // contamination via broadcast bench shingles, mixture histogram
-    // bounded driver state); document text shuffles exactly twice
-    // (admitted-copies join + pack's offsets join), the token stream
-    // once. The oracle shares q100's fp/dedup text, q81's shingle
-    // CTEs, q165's mixture CTEs, and q219's stream tail verbatim —
-    // OracleConsistencySpec pins the lockstep. ----
-    "q232_pretrain_release" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val path = tempResultDir("graft-q232") + "/release"
-      graft.pipelines.PretrainRelease.releaseShards(
-        docs = d.where(col("doc_id") % 97 =!= 0),
-        bench = d.where(col("doc_id") % 97 === 0).select("doc_id", "text"),
-        path = path, minTokens = 30, alphaQuarters = 2,
-        vocab = 4096, seqLen = 64, seqsPerShard = 16, ngram = 5,
-        nBuckets = 8)
-        .select(col("shard_id"),
-          expr("n_tokens div 64L").as("n_seqs"),
-          col("n_tokens"), col("token_sum"), col("poly_mod"),
-          lit(true).as("manifest_match"))
-    }),
-
-    // ---- RELEASE DOC-SPAN SIDECAR (PretrainRelease.releaseDocSpansTo
-    // — q225's masking metadata at the RELEASE grain: where each
-    // admitted copy starts inside each packed sequence of the q232
-    // export, so a loader of the released shards resets attention
-    // state at copy boundaries). Same gate chain as q232 (shared
-    // CTEs, lockstep-pinned), q225's interval tail keyed by
-    // release_id; O(release docs + crossings) rows, the token stream
-    // never explodes. Since round 21 the sidecar MATERIALIZES to a
-    // temp parquet (the path-scoped form a release ships): the eager
-    // write lets the copy list persist across docSpans' two prefix-sum
-    // passes, so the gate chain evaluates ONCE instead of once per
-    // pass — identical rows, same oracle. ----
-    "q233_release_doc_spans" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      graft.pipelines.PretrainRelease.releaseDocSpansTo(
-        docs = d.where(col("doc_id") % 97 =!= 0),
-        bench = d.where(col("doc_id") % 97 === 0).select("doc_id", "text"),
-        path = tempResultDir("graft-q233") + "/spans",
-        minTokens = 30, alphaQuarters = 2, vocab = 4096, seqLen = 64,
-        ngram = 5, nBuckets = 8)
-        .select(col("seq_id"), col("doc_id").as("release_id"),
-          col("start_off"), col("n_tokens"))
-    }),
-
-    // ---- RELEASE DATA CARD (PretrainRelease.releaseDataCard — the
-    // per-group accounting a release ships in its model card: docs
-    // admitted, training copies, stream tokens (EOS included — what
-    // the shards actually encode), token share in ppm). Token costs
-    // computed map-side at the scan; the copies join and the group
-    // aggregate move ids + ints only; the cross-group total is a
-    // window over the bounded group rows. Same shared chain as
-    // q232/q233. ----
-    "q234_release_data_card" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      graft.pipelines.PretrainRelease.releaseDataCard(
-        docs = d.where(col("doc_id") % 97 =!= 0),
-        bench = d.where(col("doc_id") % 97 === 0).select("doc_id", "text"),
-        minTokens = 30, alphaQuarters = 2, ngram = 5)
-    }),
-
-    // ---- INCREMENTAL RELEASE DROP (PretrainRelease.releaseDeltaShards
-    // — "a new crawl landed after the release shipped": the %3≡0
-    // slice releases first (full q232 chain, shards 0..k−1); the rest
-    // arrives as a delta, runs the SAME admission gates (floor,
-    // within-batch min-id dedup, anti-join against the RELEASED
-    // fingerprints — 16 bytes per shipped doc, never text — and
-    // benchmark decontamination) and packs into NEW files with shard
-    // ids continuing after k. Shipped bytes are never rewritten;
-    // per-drop packing keeps full windows only; the delta ships one
-    // copy per doc (the mixture is a property of the initial release).
-    // Both drops' bytes re-read and manifest-gated. ----
-    "q235_release_delta" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val base = tempResultDir("graft-q235")
-      graft.pipelines.PretrainRelease.releaseDeltaShards(
-        corpus = d.where(col("doc_id") % 97 =!= 0 && col("doc_id") % 3 === 0),
-        batch = d.where(col("doc_id") % 97 =!= 0 && col("doc_id") % 3 =!= 0),
-        bench = d.where(col("doc_id") % 97 === 0).select("doc_id", "text"),
-        pathA = base + "/drop0", pathB = base + "/drop1",
-        minTokens = 30, alphaQuarters = 2,
-        vocab = 4096, seqLen = 64, seqsPerShard = 16, ngram = 5,
-        nBuckets = 8)
-    }),
-
-    // ---- TRAINING-ORDER MANIFEST (PretrainRelease.releaseEpochOrder
-    // — the per-epoch consumption order a loader of the released
-    // shards follows: every released sequence gets a deterministic
-    // shuffled position per epoch, q85's two-pass md5 order at
-    // sequence grain). The sequence count comes from the chain's
-    // ids-only cost sum — one bounded driver scalar; the manifest plan
-    // is a parallel range, no text anywhere. ----
-    "q236_release_epoch_order" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      graft.pipelines.PretrainRelease.releaseEpochOrder(
-        docs = d.where(col("doc_id") % 97 =!= 0),
-        bench = d.where(col("doc_id") % 97 === 0).select("doc_id", "text"),
-        minTokens = 30, alphaQuarters = 2, seqLen = 64, epochs = 2,
-        ngram = 5, nPartitions = 8)
-    }),
-
-    // ---- RELEASE FUNNEL (PretrainRelease.releaseFunnel — the
-    // one-row audit header of the release: per-stage survivor counts,
-    // candidates → quality floor → dedup canonical → decontaminated →
-    // training copies; q155's funnel discipline applied to the q232
-    // chain). All counts ids-only distributed aggregates; five
-    // scalars reach the driver. ----
-    "q237_release_funnel" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      graft.pipelines.PretrainRelease.releaseFunnel(
-        docs = d.where(col("doc_id") % 97 =!= 0),
-        bench = d.where(col("doc_id") % 97 === 0).select("doc_id", "text"),
-        minTokens = 30, alphaQuarters = 2, ngram = 5)
-    }),
-
-    // ---- SFT TRANSCRIPT assembly (Events.sftTranscripts —
-    // interaction logs become supervised fine-tuning documents: each
-    // 30-min-gap session collapses to one role-alternating transcript
-    // truncated to its LAST 8 turns, the context-window trim). Turn
-    // order is the total (ts, event_id) order, so the oracle gates
-    // every transcript character. One (user, session) shuffle. ----
-    "q230_sft_transcripts" -> ((s, dir) =>
-      Events.sftTranscripts(t(s, dir, "events"), gapMinutes = 30,
-        maxTurns = 8)),
-
-    // ---- STREAMING RESTART RECOVERY (the production semantic no
-    // single-run streaming query shows: the q187 stateful dedup
-    // admission run as TWO SEPARATE query starts sharing one
-    // checkpoint + file sink — delivery A, stop, delivery B lands,
-    // restart). Exactly-once across the restart comes from the source
-    // offset log (run 2 reads ONLY B) and the sink's _spark_metadata
-    // (run 1's files are never re-committed); the dedup STATE is
-    // restored from the state store, so a fingerprint first seen in A
-    // labels its B arrivals dup_in_delta — only possible via restored
-    // state. The oracle replays the delivery-split semantics: 'new'
-    // goes to the min id of the FIRST delivery containing the
-    // fingerprint (A if present there, else B). ----
-    "q229_restart_recovery" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      // the static-side fingerprint index is re-planned per micro-batch
-      // per stream RUN (two runs here) — checkpoint the 16-byte keys
-      // once so each batch's broadcast builds off the materialized
-      // index instead of re-hashing the base corpus (round 21)
-      val baseFp = docs.where(col("doc_id") % 3 =!= 0)
-        .select(Text.fingerprint(col("text")).as("fingerprint")).distinct()
-        .stable()
-      val streamed = docs.where(col("doc_id") % 3 === 0)
-        .select(col("doc_id"), col("text"))
-      val base = tempResultDir("graft-q229")
-      val src = s"$base/src"; val out = s"$base/out"; val ckpt = s"$base/ckpt"
-      def run(): Unit = Events.withStatePartitions(s, 8) {
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("text",
-            org.apache.spark.sql.types.StringType)))
-        val q = graft.streaming.IngestDedupStream
-          .statusStream(s, s.readStream.schema(schema).parquet(src),
-            baseFp, "text", "doc_id")
-          .writeStream.format("parquet").option("path", out)
-          .option("checkpointLocation", ckpt)
-          .outputMode("append").start()
-        q.processAllAvailable()
-        q.stop()
-      }
-      streamed.where(col("doc_id") % 2 === 0)
-        .coalesce(1).write.parquet(s"$src/d=1")
-      run() // delivery A processed, state checkpointed, query STOPPED
-      streamed.where(col("doc_id") % 2 =!= 0)
-        .coalesce(1).write.parquet(s"$src/d=2")
-      run() // RESTART: offsets + state recovered, only B processed
-      s.read.parquet(out)
-    }),
-
-    // ---- FILL-IN-THE-MIDDLE transform (Curate.fimTransform — the
-    // decoder-model sibling of q226's span corruption, the PSM format
-    // of OpenAI-FIM/StarCoder): deterministic third-boundary cuts so
-    // the hash gate covers every byte of the re-serialized training
-    // string. Map-only, zero exchanges. ----
-    "q228_fim_transform" -> ((s, dir) =>
-      graft.curation.Curate.fimTransform(t(s, dir, "documents"),
-        "doc_id", "text")),
-
-    // ---- PER-DOCUMENT ADMISSION AUDIT (CorpusIngest.rejectionReasons
-    // — the "why was my doc rejected?" answer q100's funnel counts
-    // cannot give): q100's exact corpus/batch/bench split, one row per
-    // batch doc with its FIRST failing gate (quality → dup_in_batch →
-    // dup_of_corpus → contaminated → admitted) in ingest's own stage
-    // order. The oracle extends the SHARED corpusIngestChainSql with a
-    // CASE over the chain's own CTEs, so the audit and the chain
-    // cannot drift; CorpusIngestSpec pins admitted ≡ what ingest
-    // actually appends. ----
-    "q227_ingest_rejection_audit" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      graft.pipelines.CorpusIngest.rejectionReasons(
-        corpus = docs.where(col("doc_id") % 3 === 0),
-        batch = docs.where(col("doc_id") % 3 =!= 0),
-        bench = docs.where(col("doc_id") % 97 === 0).select("doc_id", "text"),
-        minTokens = 30)
-    }),
-
-    // ---- T5-STYLE SPAN CORRUPTION (curation.Curate.spanCorrupt — the
-    // denoising-objective constructor: masked token blocks leave the
-    // input as <extra_id_j> sentinels and become the target, one ready
-    // (input_text, target_text) training pair per doc). Deterministic
-    // block selection — block b masked iff (b + doc_id) % 7 == 0, the
-    // sentinel ordinal a closed form — so the HASH GATE covers every
-    // output byte of both strings. Map-only: one scan, all array
-    // lambdas in codegen. ----
-    "q226_span_corruption" -> ((s, dir) =>
-      graft.curation.Curate.spanCorrupt(t(s, dir, "documents"),
-        "doc_id", "text")),
-
-    // ---- DOC-BOUNDARY SIDECAR of the token-shard export
-    // (io.TokenShards.docSpans — the masking metadata a real training
-    // shard ships with: where each document starts inside each packed
-    // sequence, so the loader resets attention/position state and
-    // packed sequences train without cross-document attention).
-    // Computed at DOC grain straight from the shared offsets stage —
-    // a bounded integer explode per doc, never the token stream:
-    // O(docs + sequence-crossings) rows, not O(tokens). The oracle
-    // replays the same interval arithmetic from the cumulative
-    // window; q219's bytes and this sidecar derive from ONE offsets
-    // definition, so they cannot drift. ----
-    "q225_shard_doc_spans" -> ((s, dir) =>
-      graft.io.TokenShards.docSpans(t(s, dir, "documents"), "doc_id", "text",
-        vocab = 4096, seqLen = 64, nBuckets = 8)),
-
-    // ---- CDC ROUND TRIP (ops.Relational.changeFeed/applyChangeFeed —
-    // q222's diff made actionable: the feed carries the new payload
-    // for upserts and NULL for removals, and applying it to version A
-    // must reconstruct version B EXACTLY). Same derived versions as
-    // q222; the report aggregates the RECONSTRUCTED table per (lang,
-    // source) with the content checksum, so any wrong/missing/extra
-    // row after apply breaks the hash gate — the oracle aggregates
-    // the derived version B directly. Feed payloads join back only
-    // for touched keys; the diff itself still moves digests only. ----
-    "q224_cdc_roundtrip" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val old = d.where(col("doc_id") % 11 =!= 0)
-        .withColumn("text", when(col("doc_id") % 17 === 0,
-          concat(col("text"), lit(" v2"))).otherwise(col("text")))
-      val nw = d.where(col("doc_id") % 13 =!= 0)
-      val vals = Seq("text", "lang", "source", "n_chars")
-      // the feed is a shipped artifact in real CDC (the batch another
-      // system consumes) — materialize it, then apply FROM DISK, so
-      // the returned plan is old + feed, not a re-planned diff per use
-      val feedPath = tempResultDir("graft-q224") + "/feed"
-      graft.ops.Relational.changeFeed(old, nw, Seq("doc_id"), vals)
-        .write.mode("overwrite").parquet(feedPath)
-      val feed = s.read.parquet(feedPath)
-      graft.ops.Relational.applyChangeFeed(old, feed, Seq("doc_id"))
-        .groupBy(col("lang"), col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).as("chars_total"),
-          sum(conv(substring(md5(col("text")), 1, 8), 16, 10).cast("long"))
-            .as("text_checksum"))
-    }),
-
-    // ---- LATE-DATA accounting (streaming.Events.hourlyCountsAppend —
-    // the append-mode watermark contract q32's complete-mode twin
-    // cannot show): three ordered deliveries — the bulk backfill, a
-    // fresh trickle, and a REPLAYED OLD SHARD (the classic upstream
-    // re-send) — stream through the 90-minute watermark; windows emit
-    // exactly once when the watermark passes, and the replayed shard's
-    // rows are DROPPED because their windows were already evicted. The
-    // oracle replays the measured semantics: the trigger-N late filter
-    // uses trigger N−1's watermark (drop iff window end <= previous
-    // trigger's wm), emission iff window end <= the final wm. The
-    // delivery split is SF-independent (fresh = within 24h of max ts);
-    // explicit file mtimes pin the delivery order. ----
-    "q223_late_data_audit" -> ((s, dir) => {
-      import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType, TimestampType}
-      val ev = t(s, dir, "events").select("event_id", "ts", "event_type")
-      val maxTs = ev.agg(max("ts")).head().getTimestamp(0)
-      val cutoff = new java.sql.Timestamp(maxTs.getTime - 24L * 3600 * 1000)
-      val base = tempResultDir("graft-q223")
-      // ONE events pass fans the three deliveries out via partitionBy
-      // (round 21) — the previous three filtered writes each re-scanned
-      // the table (guide §2.4); same three files, same directory names,
-      // delivery order still set by the mtimes below
-      ev.withColumn("d",
-          when(col("event_id") % 5 =!= 0, 1)
-            .when(col("ts") >= lit(cutoff), 2)
-            .when(col("ts") < lit(cutoff), 3))
-        .where(col("d").isNotNull) // the old filters dropped null keys
-        .repartition(col("d"))
-        .write.mode("overwrite").partitionBy("d").parquet(base)
-      Seq("d=1", "d=2", "d=3").zipWithIndex.foreach { case (n, i) =>
-        new java.io.File(s"$base/$n").listFiles()
-          .foreach(_.setLastModified(1700000000000L + i * 60000L))
-      }
-      val schema = StructType(Seq(StructField("event_id", LongType),
-        StructField("ts", TimestampType), StructField("event_type", StringType)))
-      val sink = "graft_q223_sink"
-      Events.withStatePartitions(s, 8) {
-        val q = Events.hourlyCountsAppend(
-            s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-              .parquet(base))
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("append").start()
-        q.processAllAvailable()
-        q.stop()
-      }
-      s.table(sink).select(
-        date_format(col("window.end"), "yyyy-MM-dd HH:mm:ss").as("hour_end"),
-        col("event_type"), col("n_events"))
-    }),
-
-    // ---- SPECTRAL audio feature (functions.PcmDftBin — the
-    // frequency-domain half of the PCM path; q153 is the time-domain
-    // half): per 256-sample window the single-bin DFT projection onto
-    // bin 4 (250 Hz at 16 kHz), as exact int64 micro-scaled sums.
-    // The twiddle tables are computed ONCE in Scala (StrictMath) and
-    // the SAME numbers are embedded as literal lists in the oracle
-    // SQL, so — unlike the ln-recipe audits — there is NO cross-engine
-    // transcendental at all: both engines multiply int16 samples by
-    // the same integer table. Map-only scan; only 3-field window
-    // structs leave it. ----
-    "q220_pcm_spectral" -> ((s, dir) => {
-      val media = Media.fromText(t(s, dir, "documents"), "doc_id", "text", "audio")
-      media.select(col("media_id"),
-          explode(graft.functions.MediaFunctions
-            .pcmDftBin(col("media"), 256, 4)).as("w"))
-        .groupBy("media_id")
-        .agg(count(lit(1)).as("n_windows"),
-          sum(expr("abs(w.re_u) div 1000")).as("re_mag_sum"),
-          sum(expr("abs(w.im_u) div 1000")).as("im_mag_sum"),
-          max(expr("abs(w.re_u) div 1000 + abs(w.im_u) div 1000"))
-            .as("peak_bin_energy"))
-    }),
-
-    // ---- RAW-TEXT corpus shards (io.RawText — the other corpus
-    // delivery format next to JSONL: plain .txt.gz, one doc per
-    // line): documents' text writes out as 4 gzip text shards and
-    // reads back through the native text source; the report is ONE
-    // order-independent row (count, char total, md5 content
-    // checksum), so any line mangling — splitting, truncation,
-    // encoding damage — fails the hash gate. Line mode cannot carry
-    // embedded newlines by format contract (this corpus has none);
-    // the per-FILE wholetext mode is RawTextSpec's. ----
-    "q215_rawtext_ingest" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val path = tempResultDir("graft-q215") + "/docs_txt"
-      graft.io.RawText.writeLines(d.select(col("text")).repartition(4), path)
-      graft.io.RawText.readLines(s, path)
-        .agg(count(lit(1)).as("n_docs"),
-          sum(length(col("value"))).as("chars_total"),
-          sum(conv(substring(md5(col("value")), 1, 8), 16, 10).cast("long"))
-            .as("text_checksum"))
-    }),
-
-    // ---- semicolon-CSV delivery AUDIT (Csv2.readAudit — the q212
-    // corrupt-capture convention on the reference's own interchange
-    // format): documents write as one `;`-CSV via Csv2.write, plus a
-    // planted shard whose data line has 7 fields against the 5-column
-    // schema; PERMISSIVE capture lands it whole in _corrupt_record
-    // (data columns null), where it surfaces as the (NULL, NULL)
-    // group with n_corrupt = 1 — leaking it into a real group or
-    // dropping it breaks the hash gate. ----
-    "q216_csv2_audit" -> ((s, dir) => {
-      import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-      val d = t(s, dir, "documents")
-      val path = tempResultDir("graft-q216") + "/docs_csv"
-      graft.io.Csv2.write(
-        d.select(col("doc_id"), col("text"), col("lang"), col("source"),
-          col("n_chars")), path)
-      // its own shard with a header line (the directory-read contract
-      // skips line 1 per file) and ONE 7-field data line
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(path, "shard-corrupt.csv"),
-        "doc_id;text;lang;source;n_chars\n-1;torn;line;with;too;many;fields\n")
-      val back = graft.io.Csv2.readAudit(s, path, StructType(Seq(
-        StructField("doc_id", LongType), StructField("text", StringType),
-        StructField("lang", StringType), StructField("source", StringType),
-        StructField("n_chars", LongType))))
-      back.groupBy(col("lang"), col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).as("chars_total"),
-          sum(conv(substring(md5(col("text")), 1, 8), 16, 10).cast("long"))
-            .as("text_checksum"),
-          sum(when(col(graft.io.Csv2.CorruptCol).isNotNull, 1L)
-            .otherwise(0L)).as("n_corrupt"))
-    })
-  )
-
-  /** LSVI demo inputs derived from the harness tables: scale-free
-    * per-supplier metrics as "measurements", plus a categorical region
-    * condition — the same contract shapes as the reference's
-    * data_voorwaarden / data_soortenkenmerken (`HT31xx_LSVI.Rmd:84-185`). */
-  private def lsviMeasurements(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
-    val sup = t(s, dir, "supplier")
-    val nat = t(s, dir, "nation")
-    val base = li.join(sup, col("l_suppkey") === col("s_suppkey"))
-      .groupBy(col("s_suppkey").as("id"))
-      .agg(
-        (sum(cents(col("l_discount"), 2)) / count(lit(1)) / 100.0).as("avg_discount"),
-        (count(when(col("l_returnflag") === "R", 1)) / count(lit(1))).as("return_rate"),
-        (sum(col("l_quantity")) / count(lit(1))).as("avg_qty"),
-        (sum(cents(col("l_extendedprice"), 2)) / count(lit(1)) / 100.0).as("avg_price"))
-    val numeric = Reshape.melt(base, ids = Seq("id"),
-        values = Seq("avg_discount", "return_rate", "avg_qty", "avg_price"),
-        varName = "voorwaarde", valName = "value_numeric")
-      .withColumn("value_category", lit(null).cast("string"))
-    val categorical = sup.join(broadcast(nat), col("s_nationkey") === col("n_nationkey"))
-      .select(col("s_suppkey").as("id"), lit("regio").as("voorwaarde"),
-        lit(null).cast("double").as("value_numeric"), col("n_name").as("value_category"))
-    numeric.unionByName(categorical)
-  }
-
-  private val lsviRegions: Seq[String] = (0 to 12).map(i => s"NATION_$i")
-
-  /** q198 blocklist, priority order: multi-word phrases (incl. an
-    * overlapping pair and a 3-gram), one single word, one phrase
-    * absent from the synthetic vocabulary (zero-hit path). */
-  private val BlocklistPhrases: Seq[String] = Seq("slow table",
-    "table table", "agg", "scan slow fast", "vector stream",
-    "data vector warehouse")
-
-  private def blocklistPhraseValuesSql: String =
-    BlocklistPhrases.zipWithIndex
-      .map { case (p, i) => s"($i, '$p')" }.mkString(", ")
-
-  /** K4 tariff parameters: power-of-two-scaled values so the Scala
-    * doubles and the SQL literals parse to identical bits (exact float
-    * parity between Spark and the oracle). */
-  private val tariffParams: Seq[(Long, Double, Double, Double, Double, Double, Double, Int)] =
-    (0L to 19L).map { sp =>
-      (sp, (sp + 1) * 0.015625, (sp + 1) * 0.0078125, 0.00390625,
-        0.001953125, 0.0009765625, 0.00048828125, (sp % 3 + 1).toInt)
-    }
-
-  private def tariffValuesSql: String =
-    tariffParams.map { case (sp, a, b, c, d, e, f, ft) =>
-      s"($sp, $a, $b, $c, $d, $e, $f, $ft)"
-    }.mkString(",\n   ")
-
-  // ---- Versie-3 LSVI synthetic INBOVEG-shaped inputs (q77/q78) ----
-  private val v3NumVars = Seq("Subm", "Chara", "Helo", "HabVl", "BooOv",
-    "MonoR", "Boom", "Eutro", "Invas", "Vzuur", "VZuSS")
-  private val v3Species = Seq("Chara hispida L.", "Warnstorfia fluitans (Hedw.) Loeske",
-    "Littorella uniflora", "Juncus bulbosus", "Stratiotes aloides",
-    "Sphagnum cuspidatum", "Samolus valerandi", "Elodea canadensis")
-
-  /** (habitat, site_characteristics, vegetation) shaped like the INBOVEG
-    * extracts the Versie-3 pipeline consumes: decimal-comma numerics
-    * with LOQ markers, class-coded horst/7140o/verst/chara values, a
-    * VZuSS twin for the 3160 substitution, and TANSLEY-coded species
-    * covers including the two canonicalization source names. */
-  private def v3Inputs(s: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) = {
-    val hab0 = t(s, dir, "customer").select(
-      concat(lit("REC_"), col("c_custkey")).as("id"),
-      element_at(typedLit(graft.lsvi.Versie3.habitattypes),
-        (col("c_custkey") % 6 + 1).cast("int")).as("habitattype"),
-      col("c_custkey").as("ck"))
-    val numStructs = v3NumVars.zipWithIndex.map { case (v, p) =>
-      struct(lit(v).as("var_code"),
-        concat(
-          when(col("ck") % 13 === 0, "<").when(col("ck") % 29 === 0, ">").otherwise(""),
-          ((col("ck") * (p + 3)) % 100).cast("string"), lit(","),
-          (col("ck") % 10).cast("string")).as("value"))
-    }
-    val clsStructs = Seq(
-      struct(lit("horst").as("var_code"),
-        when((col("ck") % 7) % 3 === 0, "g10m²")
-          .when((col("ck") % 7) % 3 === 1, "10m2").otherwise("1m2").as("value")),
-      struct(lit("7140o").as("var_code"),
-        when(col("ck") % 7 < 4, "ja").otherwise("nee").as("value")),
-      struct(lit("verst").as("var_code"),
-        when(col("ck") % 11 < 6, "gisoe").otherwise("kisoe").as("value")),
-      struct(lit("chara").as("var_code"),
-        when(col("ck") % 9 < 5, "51ss").otherwise("49ss").as("value")))
-    val sc = hab0.select(col("id"),
-        explode(array(numStructs ++ clsStructs: _*)).as("m"))
-      .select(col("id"), col("m.var_code").as("var_code"), col("m.value").as("value"))
-    val veg = hab0.select(col("id"),
-        explode(array((0 to 2).map(i => struct(
-          element_at(typedLit(v3Species),
-            ((col("ck") + i * 5) % 8 + 1).cast("int")).as("name"),
-          element_at(typedLit(graft.lsvi.Versie3.tansleyCover.map(_._1)),
-            ((col("ck") * 3 + i) % 6 + 1).cast("int")).as("cover_code"))): _*)).as("v"))
-      .select(col("id"), col("v.name").as("name"), col("v.cover_code").as("cover_code"))
-    (hab0.select("id", "habitattype"), sc, veg)
-  }
-
-  private def sqlStr(s: String) = "'" + s.replace("'", "''") + "'"
-
-  /** Shared CTE prefix for the Versie-3 oracle SQL: synthesizes the same
-    * inputs as [[v3Inputs]] and replays the preparation + rule join in
-    * DuckDB, with the rule/dictionary VALUES generated from the SAME
-    * [[graft.lsvi.Versie3]] constants (single source of truth). */
-  private def v3OracleCtes: String = {
-    val v3 = graft.lsvi.Versie3
-    val htList = v3.habitattypes.map(sqlStr).mkString("[", ", ", "]")
-    val numVarValues = v3NumVars.zipWithIndex
-      .map { case (v, p) => s"(${sqlStr(v)}, $p)" }.mkString(", ")
-    val vereisten = v3.invoervereistenJoin
-      .map { case (vc, _, _, vw, _) => s"(${sqlStr(vc)}, ${sqlStr(vw)})" }.mkString(",\n   ")
-    val classMap = v3.classValueMap
-      .map { case (vc, cv, _, mn) => s"(${sqlStr(vc)}, ${sqlStr(cv)}, $mn)" }.mkString(",\n   ")
-    val tansley = v3.tansleyCover
-      .map { case (c, p) => s"(${sqlStr(c)}, $p)" }.mkString(", ")
-    val lijst = v3.soortenlijst
-      .map { case (ht, sp) => s"(${sqlStr(ht)}, ${sqlStr(sp)})" }.mkString(",\n   ")
-    val speciesList = v3Species.map(sqlStr).mkString("[", ", ", "]")
-    val rules = v3.rules
-      .map { case (ht, cr, ind, vw, b, op, ref) =>
-        s"(${sqlStr(ht)}, ${sqlStr(cr)}, ${sqlStr(ind)}, ${sqlStr(vw)}, ${sqlStr(b)}, ${sqlStr(op)}, $ref)"
-      }.mkString(",\n   ")
-    s"""WITH hab AS (
-       |  SELECT 'REC_' || c_custkey AS id,
-       |    $htList[CAST(c_custkey % 6 AS INTEGER) + 1] AS habitattype,
-       |    c_custkey AS ck
-       |  FROM customer),
-       |raw_num AS (
-       |  SELECT id, habitattype, ck, v.var_code,
-       |    (CASE WHEN ck % 13 = 0 THEN '<' WHEN ck % 29 = 0 THEN '>' ELSE '' END)
-       |      || CAST((ck * (v.p + 3)) % 100 AS VARCHAR) || ',' || CAST(ck % 10 AS VARCHAR) AS value
-       |  FROM hab CROSS JOIN (VALUES $numVarValues) v(var_code, p)),
-       |raw_cls AS (
-       |  SELECT id, habitattype, ck, 'horst' AS var_code,
-       |    CASE (ck % 7) % 3 WHEN 0 THEN 'g10m²' WHEN 1 THEN '10m2' ELSE '1m2' END AS value FROM hab
-       |  UNION ALL SELECT id, habitattype, ck, '7140o',
-       |    CASE WHEN ck % 7 < 4 THEN 'ja' ELSE 'nee' END FROM hab
-       |  UNION ALL SELECT id, habitattype, ck, 'verst',
-       |    CASE WHEN ck % 11 < 6 THEN 'gisoe' ELSE 'kisoe' END FROM hab
-       |  UNION ALL SELECT id, habitattype, ck, 'chara',
-       |    CASE WHEN ck % 9 < 5 THEN '51ss' ELSE '49ss' END FROM hab),
-       |swapped AS (
-       |  SELECT id, habitattype,
-       |    CASE WHEN var_code = 'VZuSS' AND habitattype = '3160' THEN 'Vzuur'
-       |         ELSE var_code END AS var_code,
-       |    value
-       |  FROM (SELECT id, habitattype, var_code, value FROM raw_num
-       |        UNION ALL SELECT id, habitattype, var_code, value FROM raw_cls)
-       |  WHERE NOT (var_code = 'Vzuur' AND habitattype = '3160')
-       |    AND NOT (var_code = 'VZuSS' AND habitattype <> '3160')),
-       |parsed AS (
-       |  SELECT id, habitattype, var_code, value,
-       |    replace(regexp_replace(trim(value), '^[<>]\\s*', ''), ',', '.') AS stripped,
-       |    starts_with(trim(value), '<') AS below
-       |  FROM swapped),
-       |meas_num AS (
-       |  SELECT p.id, p.habitattype, iv.voorwaarde,
-       |    CASE WHEN below THEN CAST(stripped AS DOUBLE) / 2
-       |         ELSE CAST(stripped AS DOUBLE) END AS value_numeric
-       |  FROM parsed p
-       |  JOIN (VALUES
-       |   $vereisten) iv(var_code, voorwaarde) ON p.var_code = iv.var_code
-       |  WHERE regexp_matches(stripped, '^[0-9]+(\\.[0-9]+)?$$')),
-       |meas_cls AS (
-       |  SELECT p.id, p.habitattype, iv.voorwaarde,
-       |    CAST(cm.mapped_numeric AS DOUBLE) AS value_numeric
-       |  FROM parsed p
-       |  JOIN (VALUES
-       |   $classMap) cm(var_code, class_value, mapped_numeric)
-       |    ON p.var_code = cm.var_code AND trim(p.value) = cm.class_value
-       |  JOIN (VALUES
-       |   $vereisten) iv(var_code, voorwaarde) ON p.var_code = iv.var_code
-       |  WHERE NOT regexp_matches(stripped, '^[0-9]+(\\.[0-9]+)?$$')),
-       |veg AS (
-       |  SELECT id, habitattype,
-       |    $speciesList[CAST((ck + i * 5) % 8 AS INTEGER) + 1] AS name,
-       |    ${v3.tansleyCover.map(_._1).map(sqlStr).mkString("[", ", ", "]")}[CAST((ck * 3 + i) % 6 AS INTEGER) + 1] AS waarde
-       |  FROM hab CROSS JOIN (VALUES (0), (1), (2)) t(i)),
-       |kenm AS (
-       |  SELECT id, habitattype,
-       |    CASE name WHEN 'Chara hispida L.' THEN 'Chara major'
-       |              WHEN 'Warnstorfia fluitans (Hedw.) Loeske' THEN 'Warnstorfia fluitans groep'
-       |              ELSE name END AS kenmerk,
-       |    waarde FROM veg),
-       |sleutel AS (
-       |  SELECT k.id, k.habitattype, 'aandeel sleutelsoorten' AS voorwaarde,
-       |    round(100.0 * sum(CASE WHEN sl.kenmerk IS NOT NULL THEN tc.pct ELSE 0 END)
-       |          / sum(tc.pct), 6) AS value_numeric
-       |  FROM kenm k
-       |  JOIN (VALUES $tansley) tc(waarde, pct) ON k.waarde = tc.waarde
-       |  LEFT JOIN (VALUES
-       |   $lijst) sl(habitattype, kenmerk)
-       |    ON k.habitattype = sl.habitattype AND k.kenmerk = sl.kenmerk
-       |  GROUP BY 1, 2),
-       |m AS (
-       |  SELECT * FROM meas_num
-       |  UNION ALL SELECT * FROM meas_cls
-       |  UNION ALL SELECT * FROM sleutel),
-       |r(habitattype, criterium, indicator, voorwaarde, belang, op, ref_numeric) AS (
-       |  VALUES
-       |   $rules),
-       |d AS (
-       |  SELECT m.id, m.habitattype, r.criterium, r.indicator, m.voorwaarde, r.belang,
-       |    m.value_numeric, r.op, CAST(r.ref_numeric AS DOUBLE) AS ref_numeric,
-       |    CASE r.op WHEN '>=' THEN m.value_numeric >= CAST(r.ref_numeric AS DOUBLE)
-       |              WHEN '<=' THEN m.value_numeric <= CAST(r.ref_numeric AS DOUBLE)
-       |              WHEN '=' THEN m.value_numeric = CAST(r.ref_numeric AS DOUBLE) END AS voldoet
-       |  FROM m JOIN r ON m.habitattype = r.habitattype AND m.voorwaarde = r.voorwaarde)
-       |""".stripMargin
-  }
-
-  /** Shared CTE prefix for the LSVI oracle SQL (measurements + rules +
-    * detail verdicts) — mirrors lsviMeasurements/lsviRules/Lsvi.detail. */
-  private def lsviOracleCtes: String = {
-    val regions = lsviRegions.map("'" + _ + "'").mkString("[", ", ", "]")
-    s"""WITH base AS (
-       |  SELECT s_suppkey AS id,
-       |    CAST(sum(CAST(round(l_discount*100) AS BIGINT)) AS BIGINT)/count(*)/100.0 AS avg_discount,
-       |    count(CASE WHEN l_returnflag = 'R' THEN 1 END)/count(*) AS return_rate,
-       |    sum(l_quantity)/count(*) AS avg_qty,
-       |    CAST(sum(CAST(round(l_extendedprice*100) AS BIGINT)) AS BIGINT)/count(*)/100.0 AS avg_price
-       |  FROM lineitem JOIN supplier ON l_suppkey = s_suppkey GROUP BY 1),
-       |m AS (
-       |  SELECT id, 'avg_discount' AS voorwaarde, avg_discount AS value_numeric,
-       |         CAST(NULL AS VARCHAR) AS value_category FROM base
-       |  UNION ALL SELECT id, 'return_rate', return_rate, NULL FROM base
-       |  UNION ALL SELECT id, 'avg_qty', avg_qty, NULL FROM base
-       |  UNION ALL SELECT id, 'avg_price', avg_price, NULL FROM base
-       |  UNION ALL SELECT s_suppkey, 'regio', CAST(NULL AS DOUBLE), n_name
-       |    FROM supplier JOIN nation ON s_nationkey = n_nationkey),
-       |r(criterium, indicator, voorwaarde, belang, op, ref_numeric, ref_categories) AS (
-       |  VALUES
-       |   ('verstoring', 'prijsdruk', 'avg_discount', 'b', '<=', 0.05, CAST(NULL AS VARCHAR[])),
-       |   ('verstoring', 'retour', 'return_rate', 'zb', '<', 0.336, CAST(NULL AS VARCHAR[])),
-       |   ('structuur', 'kwantiteit', 'avg_qty', 'b', '>=', 25.3, CAST(NULL AS VARCHAR[])),
-       |   ('structuur', 'waarde', 'avg_price', 'b', '>=', 53000.0, CAST(NULL AS VARCHAR[])),
-       |   ('context', 'herkomst', 'regio', 'b', 'in', CAST(NULL AS DOUBLE), $regions)),
-       |d AS (
-       |  SELECT id, criterium, indicator, voorwaarde, belang, value_numeric,
-       |    value_category, op, ref_numeric,
-       |    CASE WHEN op = '>=' THEN value_numeric >= ref_numeric
-       |         WHEN op = '<=' THEN value_numeric <= ref_numeric
-       |         WHEN op = '>'  THEN value_numeric > ref_numeric
-       |         WHEN op = '<'  THEN value_numeric < ref_numeric
-       |         WHEN op = '='  THEN value_numeric = ref_numeric
-       |         WHEN op = '!=' THEN value_numeric <> ref_numeric
-       |         WHEN op = 'in' THEN list_contains(ref_categories, value_category)
-       |         WHEN op = 'not_in' THEN NOT list_contains(ref_categories, value_category)
-       |    END AS voldoet
-       |  FROM m JOIN r USING (voorwaarde))
-       |""".stripMargin
-  }
-
-  // ---- forest Versie-3 synthetic inputs (q102/q103): deterministic
-  // integer-derived measurements so Spark and the DuckDB oracle compute
-  // bit-identical doubles; ~14% of (plot, voorwaarde) pairs are left
-  // unmeasured to exercise the published NA skeleton rows. ----
-
-  /** Numeric voorwaarden as (name, index, modulo span); span = twice the
-    * largest theoretisch maximum over types so values land on both sides
-    * of every per-type reference. */
-  private lazy val forestNumVars: Seq[(String, Int, Int)] = {
-    val cat = graft.lsvi.Versie3Forests.categorical.keySet
-    graft.lsvi.Versie3Forests.rules
-      .collect { case (_, _, _, _, vw, _, tm) if !cat(vw) => (vw, tm) }
-      .groupBy(_._1).map { case (vw, xs) => (vw, xs.map(_._2).max) }
-      .toSeq.sortBy(_._1)
-      .zipWithIndex.map { case ((vw, tmMax), p) => (vw, p, 2 * tmMax.toInt + 1) }
-  }
-
-  /** Categorical voorwaarden as (name, index) — indices continue after
-    * the numeric ones so every voorwaarde has a distinct stream. */
-  private lazy val forestCatVars: Seq[(String, Int)] =
-    graft.lsvi.Versie3Forests.categorical.keySet.toSeq.sorted
-      .zipWithIndex.map { case (vw, i) => (vw, forestNumVars.size + i) }
-
-  /** (plots, measurements) in the [[graft.lsvi.LsviForest.detail]]
-    * input contract, derived from the customer table. */
-  private def forestInputs(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val v3f = graft.lsvi.Versie3Forests
-    val base = t(s, dir, "customer").select(
-        concat(lit("FP_"), col("c_custkey")).as("id"),
-        element_at(typedLit(v3f.habitattypes),
-          (col("c_custkey") % 11 + 1).cast("int")).as("type_analysis"),
-        col("c_custkey").as("ck"))
-      .withColumn("type_observed",
-        when(col("type_analysis").startsWith("91E0"), "91E0")
-          .when(col("type_analysis") === "9130_end", "9130")
-          .otherwise(col("type_analysis")))
-      .withColumn("survey", when(col("ck") % 2 === 0, "anb").otherwise("vbi"))
-      .withColumn("record_id_square", concat(lit("SQ_"), col("ck")))
-      .withColumn("record_id_circle", concat(lit("CI_"), col("ck")))
-      .withColumn("plot_type", lit("vbi"))
-    val numStructs = forestNumVars.map { case (vw, p, span) =>
-      struct(lit(vw).as("voorwaarde"), lit(p).as("p"),
-        ((col("ck") * (2 * p + 3)) % span).as("v"),
-        lit(null).cast("string").as("cls"),
-        lit(null).cast("double").as("vd"))
-    }
-    // the class and its continuous cover move together (midpoint per
-    // class), as in the field data — the class verdict and the
-    // value-branched score must not contradict each other
-    val catStructs = forestCatVars.map { case (vw, p) =>
-      val clsIdx = ((col("ck") * (p + 2)) % 9 + 1).cast("int")
-      struct(lit(vw).as("voorwaarde"), lit(p).as("p"),
-        lit(null).cast("long").as("v"),
-        element_at(typedLit(v3f.coverClasses), clsIdx).as("cls"),
-        element_at(typedLit(v3f.coverMidpoints), clsIdx).as("vd"))
-    }
-    val m = base.select(col("id"), col("ck"),
-        explode(array(numStructs ++ catStructs: _*)).as("s"))
-      .where((col("ck") + col("s.p") * 3) % 7 =!= 0)
-      .select(col("id"), col("s.voorwaarde").as("voorwaarde"),
-        coalesce(col("s.cls"), col("s.v").cast("string")).as("waarde"),
-        coalesce(col("s.vd"), col("s.v").cast("double")).as("value_numeric"),
-        col("s.cls").as("value_category"))
-    (base.select("id", "type_analysis", "survey", "record_id_square",
-      "record_id_circle", "type_observed", "plot_type"), m)
-  }
-
-  /** Globaal report in 1e-6 fixed point (see q103's comment: integer
-    * sums are order-independent, so Spark's partial aggregation and the
-    * DuckDB oracle produce bit-identical doubles). Shared by the forest
-    * (q103) and heath (q107) globaal queries.
-    *
-    * ONE chained aggregation path (indicator -> criterium -> plot):
-    * the plot-level counts are sums of the criterium-level partials
-    * (every indicator row belongs to exactly one criterium), so the
-    * criterium mean-of-means and the plot rollup come out of the same
-    * pass — the earlier perPlot ⋈ critMean self-join evaluated the
-    * whole upstream (rules join, measurement prep) twice because
-    * Spark does not reuse the common subplan across the two grouping
-    * branches (measured: q112's species prep ran double, 3.1s -> this
-    * shape). Values are bit-identical; the oracle SQL is unchanged. */
-  private def lsviGlobaalFixedPoint(indicator0: DataFrame): DataFrame = {
-    val ind = indicator0
-      .withColumn("vs6", floor(col("verschilscore") * 1e6 + 0.5).cast("long"))
-    val crit = ind.groupBy("id", "type_analysis", "criterium").agg(
-      count(when(col("status_indicator").isNotNull, 1)).as("nk"),
-      count(when(col("status_indicator"), 1)).as("ng"),
-      count(when(col("belang") === "zb" && !col("status_indicator"), 1))
-        .as("nzb"),
-      sum(col("vs6")).as("cs6"), count(col("vs6")).as("cn"),
-      // guard: Spark's least() skips nulls, so an unguarded
-      // least(vs6, 0)+1e6 would count unknown indicators as 1.0
-      sum(when(col("vs6").isNotNull, least(col("vs6"), lit(0L)) + lit(1000000L)))
-        .as("cd6"))
-    val perPlot = crit.groupBy("id", "type_analysis").agg(
-      sum(col("nk")).as("n_known"),
-      sum(col("ng")).as("n_gunstig"),
-      sum(col("nzb")).as("n_zb_ongunstig"),
-      sum(col("cs6")).as("s6"), sum(col("cn")).as("n_vs"),
-      sum(col("cd6")).as("d6"),
-      sum(when(col("cn") > 0,
-        floor(col("cs6").cast("double") / col("cn") + 0.5).cast("long")))
-        .as("mc6"),
-      count(when(col("cn") > 0, 1)).as("n_crit"))
-    perPlot
-      .select(col("id"), col("type_analysis"),
-        when(col("n_known") > 0,
-          lit(100.0) * col("n_gunstig") / col("n_known") > 50.0 &&
-            col("n_zb_ongunstig") === 0).as("status"),
-        lit("RapportageHR").as("aggregatiemethode"),
-        col("n_zb_ongunstig"),
-        when(col("n_known") > 0, lit(100.0) * col("n_gunstig") / col("n_known"))
-          .as("aandeel_gunstig"),
-        when(col("n_vs") > 0, col("s6").cast("double") / col("n_vs") / lit(1e6))
-          .as("index_mean_ind"),
-        when(col("n_crit") > 0,
-          col("mc6").cast("double") / col("n_crit") / lit(1e6))
-          .as("index_mean_crit"),
-        when(col("n_vs") > 0, col("d6").cast("double") / col("n_vs") / lit(1e6))
-          .as("doelbereik_mean_ind"))
-  }
-
-  /** q103's oracle SQL (the forest chain replay through the fixed-point
-    * globaal tail); q139 wraps it in a column subset. */
-  private lazy val forestGlobaalOracleSql: String =
-    forestOracleCtes.stripSuffix("\n") + lsviGlobaalSqlTail
-
-  /** Forest globaal report (q103's body; q108 joins plot metadata). */
-  private def forestGlobaal(s: SparkSession, dir: String): DataFrame = {
-    val (plots, m) = forestInputs(s, dir)
-    lsviGlobaalFixedPoint(graft.lsvi.LsviForest.indicator(
-      graft.lsvi.LsviForest.detail(plots, m, graft.lsvi.Versie3Forests.rulesDf(s))))
-  }
-
-  /** Heath voorwaarden as (name, index, modulo span); the dynamic rule
-    * additionally gets a per-plot reference stream. */
-  private lazy val heathVars: Seq[(String, Int, Int)] =
-    graft.lsvi.Versie3Heath.rules.map { case (_, _, _, _, vw, _, tm) => (vw, tm) }
-      .groupBy(_._1).map { case (vw, xs) => (vw, xs.map(_._2).max) }
-      .toSeq.sortBy(_._1)
-      .zipWithIndex.map { case ((vw, tmMax), p) => (vw, p, 2 * tmMax.toInt + 1) }
-
-  /** (plots, measurements) for the heath rule set: all-numeric values,
-    * a ref_override stream for the dynamic éénjarigen rule, plot_type
-    * on the measurement side (subplot protocol). */
-  private def heathInputs(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val v3h = graft.lsvi.Versie3Heath
-    val base = t(s, dir, "customer").select(
-        concat(lit("HP_"), col("c_custkey")).as("id"),
-        element_at(typedLit(v3h.habitattypes),
-          (col("c_custkey") % 5 + 1).cast("int")).as("type_analysis"),
-        col("c_custkey").as("ck"))
-      .withColumn("type_observed",
-        when(col("type_analysis").startsWith("2330"), "2330")
-          .otherwise(col("type_analysis")))
-      .withColumn("survey", when(col("ck") % 2 === 0, "anb").otherwise("inbo"))
-      .withColumn("record_id_square", concat(lit("SQ_"), col("ck")))
-      .withColumn("record_id_circle", concat(lit("CI_"), col("ck")))
-    val structs = heathVars.map { case (vw, p, span) =>
-      struct(lit(vw).as("voorwaarde"), lit(p).as("p"),
-        ((col("ck") * (2 * p + 3)) % span).as("v"),
-        (if (vw == v3h.dynamicVoorwaarde) ((col("ck") * (p + 11)) % 101).cast("double")
-         else lit(null).cast("double")).as("refo"))
-    }
-    val m = base.select(col("id"), col("ck"),
-        explode(array(structs: _*)).as("s"))
-      .where((col("ck") + col("s.p") * 3) % 7 =!= 0)
-      .select(col("id"), col("s.voorwaarde").as("voorwaarde"),
-        col("s.v").cast("string").as("waarde"),
-        lit("square").as("plot_type"),
-        col("s.v").cast("double").as("value_numeric"),
-        lit(null).cast("string").as("value_category"),
-        col("s.refo").as("ref_override"))
-    (base.select("id", "type_analysis", "survey", "record_id_square",
-      "record_id_circle", "type_observed"), m)
-  }
-
-  /** Shared CTE prefix for the heath oracle SQL: replays [[heathInputs]]
-    * and the op/status_ref/ref_override detail semantics in DuckDB from
-    * the SAME [[graft.lsvi.Versie3Heath]] constants. */
-  private def heathOracleCtes: String = {
-    val v3h = graft.lsvi.Versie3Heath
-    val htList = v3h.habitattypes.map(sqlStr).mkString("[", ", ", "]")
-    val varVals = heathVars.map { case (vw, p, span) =>
-      val dyn = if (vw == v3h.dynamicVoorwaarde) "TRUE" else "FALSE"
-      s"(${sqlStr(vw)}, $p, $span, $dyn)"
-    }.mkString(",\n   ")
-    val ruleVals = v3h.rules.map { case (ht, cr, ind, b, vw, ref, tm) =>
-      val op =
-        if (vw == v3h.dynamicVoorwaarde) ">"
-        else if (v3h.downVoorwaarden(vw)) "<=" else ">="
-      val split = v3h.splitRefs.get((vw, ref))
-      val sref = split.map(_._1.toString).getOrElse(
-        if (ref == "dynamisch") "CAST(NULL AS DOUBLE)" else ref)
-      val cref = split.map(_._2.toString).getOrElse(
-        if (ref == "dynamisch") "CAST(NULL AS DOUBLE)" else ref)
-      s"(${sqlStr(ht)}, ${sqlStr(cr)}, ${sqlStr(ind)}, ${sqlStr(b)}, ${sqlStr(vw)}, " +
-        s"'$op', $sref, $cref, $tm)"
-    }.mkString(",\n   ")
-    s"""WITH plots AS (
-       |  SELECT 'HP_' || c_custkey AS id,
-       |    $htList[CAST(c_custkey % 5 AS INTEGER) + 1] AS type_analysis,
-       |    c_custkey AS ck
-       |  FROM customer),
-       |m AS (
-       |  SELECT id, v.voorwaarde,
-       |    CAST((ck * (2*v.p + 3)) % v.span AS DOUBLE) AS value_numeric,
-       |    CASE WHEN v.dyn THEN CAST((ck * (v.p + 11)) % 101 AS DOUBLE) END AS ref_override
-       |  FROM plots CROSS JOIN (VALUES
-       |   $varVals) v(voorwaarde, p, span, dyn)
-       |  WHERE (ck + 3*v.p) % 7 <> 0),
-       |r(habitattype, criterium, indicator, belang, voorwaarde, op, status_ref,
-       |  score_ref, score_max) AS (
-       |  VALUES
-       |   $ruleVals),
-       |d AS (
-       |  SELECT p.id, p.type_analysis, r.criterium, r.indicator, r.belang,
-       |    r.voorwaarde, 'and' AS role, TRUE AS aggregate,
-       |    m.value_numeric AS v,
-       |    COALESCE(m.ref_override, r.status_ref) AS sref,
-       |    COALESCE(m.ref_override, r.score_ref) AS cref,
-       |    r.score_max, r.op
-       |  FROM plots p
-       |  JOIN r ON p.type_analysis = r.habitattype
-       |  LEFT JOIN m ON m.id = p.id AND m.voorwaarde = r.voorwaarde),
-       |d2 AS (
-       |  SELECT id, type_analysis, criterium, indicator, belang, voorwaarde,
-       |    role, aggregate,
-       |    CASE WHEN op = '>=' THEN v >= sref
-       |         WHEN op = '>'  THEN v > sref
-       |         WHEN op = '<=' THEN v <= sref
-       |         ELSE v < sref END AS status_voorwaarde,
-       |    CASE WHEN v IS NULL OR sref IS NULL THEN NULL
-       |         ELSE greatest(-1.0, least(1.0,
-       |           CASE WHEN op IN ('>=', '>') THEN
-       |                  CASE WHEN v >= cref THEN
-       |                         (CASE WHEN score_max = cref THEN 1.0
-       |                               ELSE (v - cref) / (score_max - cref) END)
-       |                       WHEN cref <> 0 THEN (v - cref) / cref
-       |                       WHEN v = cref THEN 0.0 END
-       |                ELSE
-       |                  CASE WHEN v <= cref THEN
-       |                         (CASE WHEN cref = 0 THEN 1.0
-       |                               ELSE (cref - v) / cref END)
-       |                       ELSE (cref - v) / (score_max - cref) END
-       |           END)) END AS verschilscore
-       |  FROM d)
-       |""".stripMargin
-  }
-
-  /** Synthetic (plots, measurements) for the streams (3260) rule set,
-    * exercising the HT3260_LSVI.Rmd:96-119 prep: a per-plot species
-    * stream in which one species may be recorded under two growth
-    * forms, collapsed by [[graft.lsvi.Versie3Streams.prepSpecies]]
-    * (max effective cover + dictionary back-join), then counted into
-    * the two key-species voorwaarden; the four directly-measured
-    * voorwaarden are numeric modular streams, with the invasieve-
-    * exoten one sometimes a Tansley class converted to its midpoint
-    * on the prep side (the published `o` row's path). */
-  private def streamsInputs(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val v3s = graft.lsvi.Versie3Streams
-    val base = t(s, dir, "customer").select(
-        concat(lit("RW_"), col("c_custkey")).as("id"),
-        lit("3260").as("type_analysis"),
-        col("c_custkey").as("ck"))
-      .withColumn("type_observed", lit("3260"))
-      .withColumn("survey", when(col("ck") % 2 === 0, "anb").otherwise("inbo"))
-      .withColumn("record_id_square", concat(lit("SQ_"), col("ck")))
-      .withColumn("record_id_circle", concat(lit("CI_"), col("ck")))
-    // species stream: 10 recording slots over a 12-species pool (the
-    // first 6 are key species); slot collisions on one species model
-    // the multi-growth-form double recording the Rmd works around
-    val ladder = v3s.speciesCoverLadder.map(_._1)
-    val slots = (0 until 10).map { j =>
-      struct(
-        concat(lit("sp_"), ((col("ck") * (j + 3)) % 12).cast("int")).as("name"),
-        element_at(typedLit(ladder),
-          (((col("ck") * (2 * j + 5)) % 7) + 1).cast("int")).as("class_code"),
-        lit(j).as("j"))
-    }
-    val veg = base.select(col("id"), col("ck"), explode(array(slots: _*)).as("sp"))
-      .where((col("ck") * (col("sp.j") + 7)) % 5 =!= 0)
-      .select(col("id"), col("sp.name").as("name"),
-        col("sp.class_code").as("class_code"))
-    // counts over key species only: "frequent" = class f or higher
-    // (effective cover >= 2.5), "laag-abundant" = la or higher (>= 15)
-    val counts = v3s.prepSpecies(veg)
-      .where(substring(col("name"), 4, 8).cast("int") < 6)
-      .groupBy("id")
-      .agg(
-        count(when(col("cover") >= 2.5, 1)).cast("double").as("n_freq"),
-        count(when(col("cover") >= 15.0, 1)).cast("double").as("n_la"))
-    val countM = counts.select(col("id"), explode(array(
-        struct(lit("aantal sleutelsoorten frequent").as("voorwaarde"),
-          col("n_freq").as("v")),
-        struct(lit("aantal sleutelsoorten laag-abundant").as("voorwaarde"),
-          col("n_la").as("v")))).as("s"))
-      .select(col("id"), col("s.voorwaarde").as("voorwaarde"),
-        col("s.v").cast("string").as("waarde"),
-        col("s.v").as("value_numeric"),
-        lit(null).cast("string").as("value_category"))
-    val mids = typedLit(v3s.tansleyMidpoints)
-    val exoCls = when(col("ck") % 2 === 0, "r").otherwise("o")
-    val directs = Seq(
-      ("grootste vegetatievlek in m²", 0,
-        ((col("ck") * 3) % 61).cast("double"), lit(null).cast("string")),
-      ("bedekking helofyten", 1,
-        ((col("ck") * 5) % 201).cast("double") * 0.5, lit(null).cast("string")),
-      ("bedekking eutrofiëring", 2,
-        ((col("ck") * 7) % 201).cast("double") * 0.5, lit(null).cast("string")),
-      ("bedekking invasieve exoten", 3,
-        when(col("ck") % 5 === 0, element_at(mids, exoCls))
-          .otherwise((col("ck") % 41).cast("double") * 0.025),
-        when(col("ck") % 5 === 0, exoCls)))
-    val structsD = directs.map { case (vw, p, v, cls) =>
-      struct(lit(vw).as("voorwaarde"), lit(p).as("p"), v.as("v"), cls.as("cls"))
-    }
-    val directM = base.select(col("id"), col("ck"),
-        explode(array(structsD: _*)).as("s"))
-      .where((col("ck") + col("s.p") * 3) % 7 =!= 0)
-      .select(col("id"), col("s.voorwaarde").as("voorwaarde"),
-        coalesce(col("s.cls"), col("s.v").cast("string")).as("waarde"),
-        col("s.v").as("value_numeric"),
-        col("s.cls").as("value_category"))
-    (base.select("id", "type_analysis", "survey", "record_id_square",
-      "record_id_circle", "type_observed"),
-      directM.unionByName(countM))
-  }
-
-  /** Oracle CTE prefix for q112: replays [[streamsInputs]] (species
-    * synthesis, max-cover prep, key-species counts, direct streams)
-    * and the streams detail semantics in DuckDB from the SAME
-    * [[graft.lsvi.Versie3Streams]] constants. */
-  private def streamsOracleCtes: String = {
-    val v3s = graft.lsvi.Versie3Streams
-    val ladderCls = v3s.speciesCoverLadder.map(p => sqlStr(p._1))
-      .mkString("[", ", ", "]")
-    val coverCase = v3s.speciesCoverLadder.map { case (c, _) =>
-      s"WHEN ${sqlStr(c)} THEN ${v3s.effectiveCover(c)}"
-    }.mkString(" ")
-    val slotVals = (0 until 10).map(j => s"($j)").mkString(",")
-    val ruleVals = v3s.rules.map { case (ht, cr, ind, b, vw, ref, tm) =>
-      val isT = vw == v3s.tansleyVoorwaarde
-      val op =
-        if (v3s.strictVoorwaarden(vw)) ">"
-        else if (v3s.downVoorwaarden(vw)) "<=" else ">="
-      val sref = if (isT) v3s.tansleyStatusRef.toString else ref
-      val cref = if (isT) v3s.tansleyScoreRef.toString else ref
-      val role = if (v3s.orVoorwaarden(vw)) "or" else "and"
-      s"(${sqlStr(ht)}, ${sqlStr(cr)}, ${sqlStr(ind)}, ${sqlStr(b)}, ${sqlStr(vw)}, " +
-        s"'$op', $sref, $cref, $tm, '$role')"
-    }.mkString(",\n   ")
-    val exoR = v3s.tansleyMidpoints("r")
-    val exoO = v3s.tansleyMidpoints("o")
-    s"""WITH plots AS (
-       |  SELECT 'RW_' || c_custkey AS id, '3260' AS type_analysis,
-       |    c_custkey AS ck
-       |  FROM customer),
-       |veg AS (
-       |  SELECT id, ck,
-       |    'sp_' || CAST((ck * (s.j + 3)) % 12 AS INTEGER) AS name,
-       |    $ladderCls[CAST((ck * (2*s.j + 5)) % 7 AS INTEGER) + 1] AS class_code
-       |  FROM plots CROSS JOIN (VALUES $slotVals) s(j)
-       |  WHERE (ck * (s.j + 7)) % 5 <> 0),
-       |veg2 AS (
-       |  SELECT id, name,
-       |    max(CASE class_code $coverCase END) AS cover
-       |  FROM veg GROUP BY 1, 2),
-       |counts AS (
-       |  SELECT id,
-       |    CAST(count(CASE WHEN cover >= 2.5 THEN 1 END) AS DOUBLE) AS n_freq,
-       |    CAST(count(CASE WHEN cover >= 15.0 THEN 1 END) AS DOUBLE) AS n_la
-       |  FROM veg2 WHERE CAST(substr(name, 4) AS INTEGER) < 6 GROUP BY 1),
-       |m AS (
-       |  SELECT id, v.voorwaarde,
-       |    CASE v.p
-       |      WHEN 0 THEN CAST((ck * 3) % 61 AS DOUBLE)
-       |      WHEN 1 THEN CAST((ck * 5) % 201 AS DOUBLE) * 0.5
-       |      WHEN 2 THEN CAST((ck * 7) % 201 AS DOUBLE) * 0.5
-       |      ELSE CASE WHEN ck % 5 = 0
-       |                THEN CASE WHEN ck % 2 = 0 THEN $exoR ELSE $exoO END
-       |                ELSE CAST(ck % 41 AS DOUBLE) * 0.025 END
-       |    END AS value_numeric
-       |  FROM plots CROSS JOIN (VALUES
-       |    ('grootste vegetatievlek in m²', 0),
-       |    ('bedekking helofyten', 1),
-       |    ('bedekking eutrofiëring', 2),
-       |    ('bedekking invasieve exoten', 3)) v(voorwaarde, p)
-       |  WHERE (ck + 3*v.p) % 7 <> 0
-       |  UNION ALL
-       |  SELECT id, 'aantal sleutelsoorten frequent', n_freq FROM counts
-       |  UNION ALL
-       |  SELECT id, 'aantal sleutelsoorten laag-abundant', n_la FROM counts),
-       |r(habitattype, criterium, indicator, belang, voorwaarde, op, status_ref,
-       |  score_ref, score_max, role) AS (
-       |  VALUES
-       |   $ruleVals),
-       |d AS (
-       |  SELECT p.id, p.type_analysis, r.criterium, r.indicator, r.belang,
-       |    r.voorwaarde, r.role, TRUE AS aggregate,
-       |    m.value_numeric AS v, r.status_ref AS sref, r.score_ref AS cref,
-       |    r.score_max, r.op
-       |  FROM plots p
-       |  JOIN r ON p.type_analysis = r.habitattype
-       |  LEFT JOIN m ON m.id = p.id AND m.voorwaarde = r.voorwaarde),
-       |d2 AS (
-       |  SELECT id, type_analysis, criterium, indicator, belang, voorwaarde,
-       |    role, aggregate,
-       |    CASE WHEN op = '>=' THEN v >= sref
-       |         WHEN op = '>'  THEN v > sref
-       |         WHEN op = '<=' THEN v <= sref
-       |         ELSE v < sref END AS status_voorwaarde,
-       |    CASE WHEN v IS NULL OR sref IS NULL THEN NULL
-       |         ELSE greatest(-1.0, least(1.0,
-       |           CASE WHEN op IN ('>=', '>') THEN
-       |                  CASE WHEN v >= cref THEN
-       |                         (CASE WHEN score_max = cref THEN 1.0
-       |                               ELSE (v - cref) / (score_max - cref) END)
-       |                       WHEN cref <> 0 THEN (v - cref) / cref
-       |                       WHEN v = cref THEN 0.0 END
-       |                ELSE
-       |                  CASE WHEN v <= cref THEN
-       |                         (CASE WHEN cref <> 0 THEN (cref - v) / cref
-       |                               WHEN v = cref THEN 1.0 END)
-       |                       ELSE (cref - v) / (score_max - cref) END
-       |           END)) END AS verschilscore
-       |  FROM d)
-       |""".stripMargin
-  }
-
-  /** Synthetic (plotMeta, indicatorRows) for the status/trend shapes
-    * (q113-q115): two measurement cycles per sampling point (some
-    * points dropping to one or zero), forest habitat types, an SAC
-    * stratum flag, a quarter-step design weight (exact in binary, so
-    * distributed double sums stay order-independent), a per-plot lsvi
-    * verdict and habitat-quality index, and five tri-state indicator
-    * statuses per plot. */
-  private def statusInputs(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val types = graft.lsvi.Versie3Forests.habitattypes
-    val base = t(s, dir, "customer")
-      .select(col("c_custkey").as("ck"), expr("c_custkey div 2").as("pt"))
-      .where((col("ck") * 3) % 7 =!= 0)
-    val meta = base.select(
-      concat(lit("ST_"), col("ck")).as("id"),
-      col("ck"),
-      element_at(typedLit(types), (col("pt") % 11 + 1).cast("int"))
-        .as("habitattype"),
-      concat(lit("pt_"), col("pt")).as("point_code"),
-      (lit(2010) + lit(10) * (col("ck") % 2)).as("date"),
-      when(col("pt") % 3 < 2, 1).otherwise(0).as("in_sac"),
-      when((col("ck") * 5) % 3 === 0, "gunstig").otherwise("ongunstig").as("lsvi"),
-      when((col("pt") * 7) % 5 < 3, "ja").otherwise("nee").as("passend_beheer"),
-      ((col("pt") % 7 + 1).cast("double") * 0.25).as("weight"),
-      (((col("ck") * 11) % 2001 - 1000).cast("double") / 1000.0)
-        .as("index_mean_ind"),
-      // binary-fraction twin of the index for the WEIGHTED mean shape
-      // (q131): 1/1024 steps make every Σw·x / Σw·x² double sum exact,
-      // so the distributed aggregation is order-independent without
-      // the unweighted path's integer fixed point (quarter-step
-      // weights × 2^-10 values: products are 2^-12 multiples, sums
-      // stay far below 2^53 in step units)
-      (((col("ck") * 7) % 2049 - 1024).cast("double") / 1024.0)
-        .as("index_b"))
-    val indStructs = (0 until 5).map { j =>
-      val m = (col("ck") * (j + 2)) % 5
-      struct(
-        lit(s"crit_${j % 2}").as("criterium"), lit(s"ind_$j").as("indicator"),
-        lit(if (j < 2) "zb" else "b").as("belang"),
-        when(m === 0, lit(null).cast("boolean")).otherwise(m % 2 === 1)
-          .as("status_indicator"),
-        when(m === 0, lit(null).cast("double"))
-          .otherwise(((col("ck") * (j + 4)) % 2001 - 1000).cast("double") / 1000.0)
-          .as("verschilscore"))
-    }
-    val ind = meta.select(col("id"), col("habitattype").as("type_analysis"),
-        col("ck"), explode(array(indStructs: _*)).as("i"))
-      .select(col("id"), col("type_analysis"), col("i.criterium"),
-        col("i.indicator"), col("i.belang"), col("i.status_indicator"),
-        col("i.verschilscore"))
-    (meta.drop("ck"), ind)
-  }
-
-  /** Synthetic per-visit measured values for q125/q126: two visits
-    * per point (2010/2020), a habitatsubtype that shifts between
-    * visits on every fifth row (so multi-subtype roll-ups and
-    * unpaired strata both occur), and 2-decimal values — exact at
-    * the engine's 1e-4 fixed point, so the oracle compare is
-    * hash-stable under any aggregation order. */
-  private def continuousInputs(s: SparkSession, dir: String): DataFrame = {
-    val types = graft.lsvi.Versie3Forests.habitattypes
-    val base = t(s, dir, "customer")
-      .select(col("c_custkey").as("ck"), expr("c_custkey div 2").as("pt"))
-      .where((col("ck") * 3) % 7 =!= 0)
-    val ht = element_at(typedLit(types), (col("pt") % 11 + 1).cast("int"))
-    val sub = concat(ht, lit("_s"),
-      when(col("ck") % 5 === 0, (col("pt") + 1) % 3).otherwise(col("pt") % 3))
-    base.select(
-      concat(lit("CT_"), col("ck")).as("id"),
-      ht.as("habitattype"),
-      sub.as("habitatsubtype"),
-      concat(lit("pt_"), col("pt")).as("point_code"),
-      (lit(2010) + lit(10) * (col("ck") % 2)).as("date"),
-      (((col("ck") * 13) % 4001).cast("double") / 100.0).as("value"),
-      // quarter-step per-visit design weight for the weighted
-      // overloads (q140/q141): products with the 1e-4 fixed-point
-      // values stay exact doubles, so the weighted sums are
-      // order-independent (ignored by the unweighted q125/q126)
-      (((col("ck") * 3) % 7 + 1).cast("double") * 0.25).as("weight"))
-  }
-
-  /** Synthetic visits for q129: 3-year-stepped dates (2010..2022)
-    * against 6-year cycles make every pairing path occur — cross-cycle
-    * pairs, same-cycle revisits (excluded), and cycle-2 visits
-    * (dropped before pairing). Subtype is stable per point, so
-    * [[graft.lsvi.LsviStatus.assignCycles]]'s per-stratum start years
-    * drive the windows. */
-  private def cycleTrendInputs(s: SparkSession, dir: String): DataFrame = {
-    val types = graft.lsvi.Versie3Forests.habitattypes
-    val base = t(s, dir, "customer")
-      .select(col("c_custkey").as("ck"), expr("c_custkey div 2").as("pt"))
-      .where((col("ck") * 3) % 7 =!= 0)
-    val ht = element_at(typedLit(types), (col("pt") % 11 + 1).cast("int"))
-    base.select(
-      concat(lit("CY_"), col("ck")).as("id"),
-      ht.as("habitattype"),
-      concat(ht, lit("_s"), col("pt") % 3).as("habitatsubtype"),
-      concat(lit("pt_"), col("pt")).as("point_code"),
-      (lit(2010) + lit(3) * (col("ck") % 5)).as("date"),
-      when(col("pt") % 3 < 2, 1).otherwise(0).as("in_sac"),
-      when((col("ck") * 5) % 3 === 0, "gunstig").otherwise("ongunstig")
-        .as("lsvi"))
-  }
-
-  /** Synthetic assessed polygons for q127/q128: the verdict mix
-    * varies with the cycle tag so the trend has signal; areas are
-    * exact binary fractions (k/64 ha), keeping distributed double
-    * sums order-independent and the oracle compare hash-exact. */
-  private def censusPolys(s: SparkSession, dir: String,
-      cycle: Int): DataFrame = {
-    val types = graft.lsvi.Versie3Forests.habitattypes
-    t(s, dir, "part")
-      .select(col("p_partkey").as("pk"))
-      .select(
-        element_at(typedLit(types), (col("pk") % 7 + 1).cast("int"))
-          .as("habitattype"),
-        when(col("pk") % 3 < 2, 1).otherwise(0).as("in_sac"),
-        when((col("pk") * cycle) % 5 < 2, "gunstig")
-          .when((col("pk") * cycle) % 5 === 4, "onbekend")
-          .otherwise("ongunstig").as("verdict"),
-        (((col("pk") * 17) % 997).cast("double") / 64.0).as("area_ha"),
-        concat(lit("ind_"), col("pk") % 4).as("indicator"))
-  }
-
-  /** Shared oracle CTE prefix for q125/q126: replays
-    * [[continuousInputs]] with the engine's 1e-4 fixed-point value
-    * (the trailing `latest` CTE is unused by q126 — harmless). */
-  private def continuousOracleCtes: String = {
-    val typeList = graft.lsvi.Versie3Forests.habitattypes
-      .map(sqlStr).mkString("[", ", ", "]")
-    s"""WITH base AS (
-       |  SELECT c_custkey AS ck, c_custkey // 2 AS pt
-       |  FROM customer WHERE (c_custkey * 3) % 7 <> 0),
-       |m AS (
-       |  SELECT 'CT_' || ck AS id,
-       |    $typeList[CAST(pt % 11 AS INTEGER) + 1] AS habitattype,
-       |    $typeList[CAST(pt % 11 AS INTEGER) + 1] || '_s' ||
-       |      (CASE WHEN ck % 5 = 0 THEN (pt + 1) % 3 ELSE pt % 3 END)
-       |      AS habitatsubtype,
-       |    'pt_' || pt AS point_code,
-       |    2010 + 10 * (ck % 2) AS mdate,
-       |    CAST(floor(CAST((ck * 13) % 4001 AS DOUBLE) / 100.0 * 10000.0
-       |      + 0.5) AS BIGINT) AS v4,
-       |    CAST((ck * 3) % 7 + 1 AS DOUBLE) * 0.25 AS w
-       |  FROM base),
-       |latest AS (
-       |  SELECT point_code, habitatsubtype,
-       |    arg_max(v4, mdate || '|' || id) AS v,
-       |    arg_max(habitattype, mdate || '|' || id) AS habitattype
-       |  FROM m GROUP BY 1, 2),
-       |""".stripMargin
-  }
-
-  /** Shared oracle tail for q125/q126: habitattype roll-up rows for
-    * multi-subtype types over a `persub` CTE, like the engine's
-    * `continuousShape`. */
-  private val continuousRollupSql: String =
-    """multi AS (
-      |  SELECT habitattype, count(*) AS nsub,
-      |    CAST(sum(n) AS BIGINT) AS rn, CAST(sum(s1) AS BIGINT) AS rs1,
-      |    CAST(sum(s2) AS BIGINT) AS rs2,
-      |    string_agg(habitatsubtype, '; ' ORDER BY habitatsubtype) AS subs
-      |  FROM persub GROUP BY 1),
-      |allr AS (
-      |  SELECT CASE WHEN m2.nsub > 1 THEN 'Habitatsubtype'
-      |           ELSE 'Habitattype' END AS type_resultaat,
-      |    p.habitattype, p.habitatsubtype, p.n, p.s1, p.s2
-      |  FROM persub p JOIN multi m2 USING (habitattype)
-      |  UNION ALL
-      |  SELECT 'Habitattype', habitattype, subs, rn, rs1, rs2
-      |  FROM multi WHERE nsub > 1)""".stripMargin
-
-  /** Weighted twin of [[continuousRollupSql]] over a `persubw` CTE
-    * carrying (n, Σw, Σw², Σw·v, Σw·v²); used by q140/q141. */
-  private val continuousRollupWeightedSql: String =
-    """multi AS (
-      |  SELECT habitattype, count(*) AS nsub,
-      |    CAST(sum(n) AS BIGINT) AS rn, sum(sw) AS rsw, sum(sw2) AS rsw2,
-      |    sum(swv) AS rswv, sum(swv2) AS rswv2,
-      |    string_agg(habitatsubtype, '; ' ORDER BY habitatsubtype) AS subs
-      |  FROM persubw GROUP BY 1),
-      |allr AS (
-      |  SELECT CASE WHEN m2.nsub > 1 THEN 'Habitatsubtype'
-      |           ELSE 'Habitattype' END AS type_resultaat,
-      |    p.habitattype, p.habitatsubtype, p.n, p.sw, p.sw2, p.swv, p.swv2
-      |  FROM persubw p JOIN multi m2 USING (habitattype)
-      |  UNION ALL
-      |  SELECT 'Habitattype', habitattype, subs, rn, rsw, rsw2, rswv, rswv2
-      |  FROM multi WHERE nsub > 1)""".stripMargin
-
-  /** Shared q140/q141 oracle tail: the Kish-n_eff z interval with the
-    * EXACT float shape of `LsviStatus.continuousShapeWeighted`
-    * (m = swv/sw/1e4; vpop = greatest(swv2/sw/1e8 − m², 0);
-    * h = z·sqrt(vpop/(n_eff − 1))). Positive fixture weights with
-    * n > 1 give n_eff > 1 strictly, so no zero-division guard is
-    * needed on either side. */
-  private def continuousWeightedSelectSql(meanCol: String, minN: Int): String = {
-    val z = graft.lsvi.LsviStatus.z975
-    val m = "swv / sw / 10000.0"
-    val h = s"$z * sqrt(greatest(swv2 / sw / 1.0e8 - ($m) * ($m), 0.0) / " +
-      "(sw * sw / sw2 - 1.0))"
-    s"""SELECT type_resultaat, habitattype, habitatsubtype,
-       |  'Binnen & Buiten' AS sbzh, n AS n_obs,
-       |  round($m, 6) AS $meanCol,
-       |  CASE WHEN n >= $minN THEN round($m - $h, 6) END AS ${meanCol}_llci,
-       |  CASE WHEN n >= $minN THEN round($m + $h, 6) END AS ${meanCol}_ulci,
-       |  'hoeveelheid dik dood hout' AS indicator,
-       |  'aantal exemplaren dik dood hout per ha' AS voorwaarde
-       |FROM allr""".stripMargin
-  }
-
-  /** One census cycle for the q127/q128 oracles: polygons, the
-    * stratum explode and the per-verdict area sums, suffixed by the
-    * cycle tag (no trailing comma — callers chain with ",\n"). */
-  private def censusOracleCte(cycle: Int): String = {
-    val typeList = graft.lsvi.Versie3Forests.habitattypes
-      .map(sqlStr).mkString("[", ", ", "]")
-    s"""WITH p$cycle AS (
-       |  SELECT $typeList[CAST(p_partkey % 7 AS INTEGER) + 1] AS habitattype,
-       |    CASE WHEN p_partkey % 3 < 2 THEN 1 ELSE 0 END AS in_sac,
-       |    CASE WHEN (p_partkey * $cycle) % 5 < 2 THEN 'gunstig'
-       |         WHEN (p_partkey * $cycle) % 5 = 4 THEN 'onbekend'
-       |         ELSE 'ongunstig' END AS verdict,
-       |    CAST((p_partkey * 17) % 997 AS DOUBLE) / 64.0 AS area_ha,
-       |    'ind_' || (p_partkey % 4) AS indicator
-       |  FROM part),
-       |strata$cycle AS (
-       |  SELECT 'Habitattype' AS type_resultaat, 'Binnen & Buiten' AS sbzh,
-       |    habitattype, verdict, area_ha, indicator FROM p$cycle
-       |  UNION ALL
-       |  SELECT 'SBZH', CASE WHEN in_sac = 1 THEN 'Binnen' ELSE 'Buiten' END,
-       |    habitattype, verdict, area_ha, indicator FROM p$cycle),
-       |agg$cycle AS (
-       |  SELECT type_resultaat, habitattype, sbzh, indicator,
-       |    sum(CASE WHEN verdict = 'gunstig' THEN area_ha ELSE 0.0 END) AS g,
-       |    sum(CASE WHEN verdict = 'ongunstig' THEN area_ha ELSE 0.0 END) AS o,
-       |    sum(CASE WHEN verdict = 'onbekend' THEN area_ha ELSE 0.0 END) AS u
-       |  FROM strata$cycle GROUP BY 1, 2, 3, 4)""".stripMargin
-  }
-
-  /** Shared oracle tail for q121/q129 (`trend_habitat`): from the
-    * paired flags to the four published row families; `ncPred` is the
-    * pairing filter (`nc > 1` visit-based, `nc = 2` cycle-based). */
-  /** SQL rendering of [[graft.lsvi.LsviStatus.effectKlasse]] (the
-    * ten-class trend-effect ladder) over rounded mean/llci/ulci
-    * columns — shared by the unweighted and weighted trend oracle
-    * tails so the ladder cannot drift between them. */
-  private def klasseSql(tl: Double, th: Double): String =
-    s"""CASE WHEN coalesce(llci, mean) IS NULL THEN NULL
-       |     WHEN coalesce(llci, mean) > $th THEN '++'
-       |     WHEN coalesce(ulci, mean) < -$tl THEN '--'
-       |     WHEN coalesce(llci, mean) > 0.0 THEN
-       |       CASE WHEN coalesce(ulci, mean) > $th THEN '+' ELSE '+~' END
-       |     WHEN coalesce(ulci, mean) < 0.0 THEN
-       |       CASE WHEN coalesce(llci, mean) < -$tl THEN '-' ELSE '-~' END
-       |     WHEN coalesce(llci, mean) >= -$tl AND coalesce(ulci, mean) <= $th
-       |       THEN '~'
-       |     WHEN coalesce(llci, mean) >= -$tl THEN '?+'
-       |     WHEN coalesce(ulci, mean) <= $th THEN '?-'
-       |     ELSE '?' END""".stripMargin.replace("\n", " ").replaceAll(" +", " ")
-
-  private def trendHabitatOracleTail(ncPred: String): String = {
-    val z = graft.lsvi.LsviStatus.z975
-    val z2 = z * z
-    s"""rows_ AS (
-           |  SELECT habitattype,
-           |    CASE WHEN g.g = 0 THEN 'SBZH' ELSE 'Habitattype' END AS type_resultaat,
-           |    CASE WHEN g.g = 1 THEN 'Binnen & Buiten'
-           |         WHEN in_sac = 1 THEN 'Binnen' ELSE 'Buiten' END AS sbzh,
-           |    g1, g2, j1, j2
-           |  FROM pairs CROSS JOIN (VALUES (0),(1)) g(g) WHERE $ncPred),
-           |agg AS (
-           |  SELECT type_resultaat, habitattype, sbzh, count(*) AS n_obs,
-           |    count(CASE WHEN g1 THEN 1 END) AS k1,
-           |    count(CASE WHEN g2 THEN 1 END) AS k2,
-           |    count(CASE WHEN g1 AND NOT g2 THEN 1 END) AS b,
-           |    count(CASE WHEN NOT g1 AND g2 THEN 1 END) AS c,
-           |    min(j1) AS jmin1, max(j1) AS jmax1,
-           |    min(j2) AS jmin2, max(j2) AS jmax2,
-           |    sum(j2 - j1) AS sdj
-           |  FROM rows_ GROUP BY 1, 2, 3),
-           |acyc AS (
-           |  SELECT 'c_1' AS periode, type_resultaat, habitattype, sbzh, n_obs,
-           |    k1 AS k, jmin1 AS jaar_min, jmax1 AS jaar_max FROM agg
-           |  UNION ALL
-           |  SELECT 'c_2', type_resultaat, habitattype, sbzh, n_obs,
-           |    k2, jmin2, jmax2 FROM agg),
-           |wil AS (
-           |  SELECT *, CAST(k AS DOUBLE) / CAST(n_obs AS DOUBLE) AS p,
-           |    1.0 + $z2 / n_obs AS den
-           |  FROM acyc),
-           |wil2 AS (
-           |  SELECT *,
-           |    (p + $z2 / (2.0 * n_obs)) / den AS center,
-           |    ($z / den) * sqrt(p * (1.0 - p) / n_obs + $z2 / (4.0 * n_obs * n_obs)) AS half
-           |  FROM wil),
-           |aand AS (
-           |  SELECT periode, type_resultaat, habitattype, sbzh, n_obs,
-           |    'aandeel_gunstig' AS parameter,
-           |    round(100.0 * p, 6) AS mean,
-           |    round(CASE WHEN k = 0 OR k = n_obs THEN 100.0 * p
-           |               ELSE 100.0 * greatest(0.0, center - half) END, 6) AS llci,
-           |    round(CASE WHEN k = 0 OR k = n_obs THEN 100.0 * p
-           |               ELSE 100.0 * least(1.0, center + half) END, 6) AS ulci,
-           |    CAST(NULL AS VARCHAR) AS klasse, CAST(NULL AS VARCHAR) AS periode_ref,
-           |    jaar_min, jaar_max, CAST(NULL AS DOUBLE) AS verschil_jaar
-           |  FROM wil2),
-           |vboth AS (
-           |  SELECT *,
-           |    100.0 * (CAST(k2 AS DOUBLE) - k1) / n_obs AS d,
-           |    100.0 * sqrt(b + c - pow(CAST(b AS DOUBLE) - c, 2) / n_obs) / n_obs AS se,
-           |    least(jmin1, jmin2) AS jaar_min, greatest(jmax1, jmax2) AS jaar_max,
-           |    -- half-even to 1 decimal like the engine's bround (DuckDB
-           |    -- round() is half-away-from-zero on doubles): integer
-           |    -- half-even of the exact rational sdj*10/n_obs, which the
-           |    -- correctly-rounded IEEE division makes identical to
-           |    -- Spark's decimal-string HALF_EVEN (sdj >= 0 by pairing)
-           |    CAST(CASE
-           |      WHEN 2 * ((sdj * 10) % n_obs) > n_obs THEN (sdj * 10) // n_obs + 1
-           |      WHEN 2 * ((sdj * 10) % n_obs) < n_obs THEN (sdj * 10) // n_obs
-           |      ELSE (sdj * 10) // n_obs + ((sdj * 10) // n_obs) % 2
-           |    END AS DOUBLE) / 10 AS vj
-           |  FROM agg),
-           |vabs AS (
-           |  SELECT 'c_2' AS periode, type_resultaat, habitattype, sbzh, n_obs,
-           |    'verschil_aandeel_gunstig_abs' AS parameter,
-           |    round(d, 6) AS mean, round(d - $z * se, 6) AS llci,
-           |    round(d + $z * se, 6) AS ulci,
-           |    CAST(NULL AS VARCHAR) AS klasse, 'c_1' AS periode_ref,
-           |    jaar_min, jaar_max, vj AS verschil_jaar
-           |  FROM vboth),
-           |vabs2 AS (
-           |  SELECT periode, type_resultaat, habitattype, sbzh, n_obs, parameter,
-           |    mean, llci, ulci, ${klasseSql(12.0, 12.0)} AS klasse,
-           |    periode_ref, jaar_min, jaar_max, verschil_jaar
-           |  FROM vabs),
-           |vrel AS (
-           |  SELECT 'c_2' AS periode, type_resultaat, habitattype, sbzh, n_obs,
-           |    'verschil_aandeel_gunstig_rel' AS parameter,
-           |    CASE WHEN k1 > 0
-           |         THEN round(100.0 * (CAST(k2 AS DOUBLE) - k1) / k1, 6) END AS mean,
-           |    CASE WHEN k1 > 0 AND k2 > 0
-           |         THEN round(100.0 * (exp(ln(CAST(k2 AS DOUBLE) / k1)
-           |                - $z * sqrt((b + c) / (CAST(k1 AS DOUBLE) * k2))) - 1.0), 6)
-           |         END AS llci,
-           |    CASE WHEN k1 > 0 AND k2 > 0
-           |         THEN round(100.0 * (exp(ln(CAST(k2 AS DOUBLE) / k1)
-           |                + $z * sqrt((b + c) / (CAST(k1 AS DOUBLE) * k2))) - 1.0), 6)
-           |         END AS ulci,
-           |    k1, round(d - $z * se, 6) AS abs_llci,
-           |    jaar_min, jaar_max, vj
-           |  FROM vboth),
-           |vrel2 AS (
-           |  SELECT periode, type_resultaat, habitattype, sbzh, n_obs, parameter,
-           |    mean, llci, ulci,
-           |    CASE WHEN k1 > 0 THEN ${klasseSql(25.0, 25.0)}
-           |         WHEN abs_llci > 0.0 THEN '++' ELSE '?' END AS klasse,
-           |    'c_1' AS periode_ref, jaar_min, jaar_max, vj AS verschil_jaar
-           |  FROM vrel)
-           |SELECT * FROM aand UNION ALL SELECT * FROM vabs2
-           |UNION ALL SELECT * FROM vrel2""".stripMargin
-  }
-
-  /** Weighted twin of [[trendHabitatOracleTail]]: expects a `pairs` CTE
-    * that also carries the latest-visit design weight `w`. Mirrors
-    * [[graft.lsvi.LsviStatus.trendHabitat(plotLsvi,weightCol)*]]:
-    * Hájek shares, Kish-n_eff Wilson/Wald intervals, effective-count
-    * log-ratio interval, both klasse ladders, unweighted year columns. */
-  private def trendHabitatWeightedOracleTail: String =
-    trendHabitatWeightedOracleTail("nc > 1")
-
-  private def trendHabitatWeightedOracleTail(ncPred: String): String = {
-    val z = graft.lsvi.LsviStatus.z975
-    val z2 = z * z
-    s"""rows_ AS (
-           |  SELECT habitattype,
-           |    CASE WHEN g.g = 0 THEN 'SBZH' ELSE 'Habitattype' END AS type_resultaat,
-           |    CASE WHEN g.g = 1 THEN 'Binnen & Buiten'
-           |         WHEN in_sac = 1 THEN 'Binnen' ELSE 'Buiten' END AS sbzh,
-           |    g1, g2, j1, j2, w
-           |  FROM pairs CROSS JOIN (VALUES (0),(1)) g(g) WHERE $ncPred),
-           |agg AS (
-           |  SELECT type_resultaat, habitattype, sbzh, count(*) AS n_obs,
-           |    sum(w) AS sw, sum(w * w) AS sw2,
-           |    sum(CASE WHEN g1 THEN w ELSE 0.0 END) AS swk1,
-           |    sum(CASE WHEN g2 THEN w ELSE 0.0 END) AS swk2,
-           |    sum(CASE WHEN g1 AND NOT g2 THEN w ELSE 0.0 END) AS swb,
-           |    sum(CASE WHEN NOT g1 AND g2 THEN w ELSE 0.0 END) AS swc,
-           |    min(j1) AS jmin1, max(j1) AS jmax1,
-           |    min(j2) AS jmin2, max(j2) AS jmax2,
-           |    sum(j2 - j1) AS sdj
-           |  FROM rows_ GROUP BY 1, 2, 3),
-           |acyc AS (
-           |  SELECT 'c_1' AS periode, type_resultaat, habitattype, sbzh, n_obs,
-           |    sw, sw2, swk1 AS swk, jmin1 AS jaar_min, jmax1 AS jaar_max
-           |  FROM agg
-           |  UNION ALL
-           |  SELECT 'c_2', type_resultaat, habitattype, sbzh, n_obs,
-           |    sw, sw2, swk2, jmin2, jmax2 FROM agg),
-           |wil AS (
-           |  SELECT *, sw * sw / sw2 AS neff, swk / sw AS p FROM acyc),
-           |wil2 AS (SELECT *, 1.0 + $z2 / neff AS den FROM wil),
-           |wil3 AS (
-           |  SELECT *,
-           |    (p + $z2 / (2.0 * neff)) / den AS center,
-           |    ($z / den) * sqrt(p * (1.0 - p) / neff
-           |      + $z2 / (4.0 * neff * neff)) AS half
-           |  FROM wil2),
-           |aand AS (
-           |  SELECT periode, type_resultaat, habitattype, sbzh, n_obs,
-           |    'aandeel_gunstig' AS parameter,
-           |    round(100.0 * swk / sw, 6) AS mean,
-           |    round(CASE WHEN swk = 0.0 OR swk = sw THEN 100.0 * p
-           |               ELSE 100.0 * greatest(0.0, center - half) END, 6) AS llci,
-           |    round(CASE WHEN swk = 0.0 OR swk = sw THEN 100.0 * p
-           |               ELSE 100.0 * least(1.0, center + half) END, 6) AS ulci,
-           |    CAST(NULL AS VARCHAR) AS klasse, CAST(NULL AS VARCHAR) AS periode_ref,
-           |    jaar_min, jaar_max, CAST(NULL AS DOUBLE) AS verschil_jaar
-           |  FROM wil3),
-           |vb0 AS (
-           |  SELECT *, sw * sw / sw2 AS neff, (swk2 - swk1) / sw AS md FROM agg),
-           |vb1 AS (
-           |  SELECT *, 100.0 * md AS d,
-           |    greatest((swb + swc) / sw - md * md, 0.0) AS vpop,
-           |    neff * (swk1 / sw) AS k1e, neff * (swk2 / sw) AS k2e,
-           |    neff * ((swb + swc) / sw) AS bce,
-           |    least(jmin1, jmin2) AS jaar_min, greatest(jmax1, jmax2) AS jaar_max,
-           |    CAST(CASE
-           |      WHEN 2 * ((sdj * 10) % n_obs) > n_obs THEN (sdj * 10) // n_obs + 1
-           |      WHEN 2 * ((sdj * 10) % n_obs) < n_obs THEN (sdj * 10) // n_obs
-           |      ELSE (sdj * 10) // n_obs + ((sdj * 10) // n_obs) % 2
-           |    END AS DOUBLE) / 10 AS vj
-           |  FROM vb0),
-           |vboth AS (
-           |  SELECT *, 100.0 * sqrt(vpop / neff) AS se,
-           |    sqrt(bce / (k1e * k2e)) AS se_ln
-           |  FROM vb1),
-           |vabs AS (
-           |  SELECT 'c_2' AS periode, type_resultaat, habitattype, sbzh, n_obs,
-           |    'verschil_aandeel_gunstig_abs' AS parameter,
-           |    round(d, 6) AS mean, round(d - $z * se, 6) AS llci,
-           |    round(d + $z * se, 6) AS ulci,
-           |    CAST(NULL AS VARCHAR) AS klasse, 'c_1' AS periode_ref,
-           |    jaar_min, jaar_max, vj AS verschil_jaar
-           |  FROM vboth),
-           |vabs2 AS (
-           |  SELECT periode, type_resultaat, habitattype, sbzh, n_obs, parameter,
-           |    mean, llci, ulci, ${klasseSql(12.0, 12.0)} AS klasse,
-           |    periode_ref, jaar_min, jaar_max, verschil_jaar
-           |  FROM vabs),
-           |vrel AS (
-           |  SELECT 'c_2' AS periode, type_resultaat, habitattype, sbzh, n_obs,
-           |    'verschil_aandeel_gunstig_rel' AS parameter,
-           |    CASE WHEN swk1 > 0.0
-           |         THEN round(100.0 * (swk2 - swk1) / swk1, 6) END AS mean,
-           |    CASE WHEN swk1 > 0.0 AND swk2 > 0.0
-           |         THEN round(100.0 * (exp(ln(swk2 / swk1)
-           |                - $z * se_ln) - 1.0), 6) END AS llci,
-           |    CASE WHEN swk1 > 0.0 AND swk2 > 0.0
-           |         THEN round(100.0 * (exp(ln(swk2 / swk1)
-           |                + $z * se_ln) - 1.0), 6) END AS ulci,
-           |    swk1, round(d - $z * se, 6) AS abs_llci,
-           |    jaar_min, jaar_max, vj
-           |  FROM vboth),
-           |vrel2 AS (
-           |  SELECT periode, type_resultaat, habitattype, sbzh, n_obs, parameter,
-           |    mean, llci, ulci,
-           |    CASE WHEN swk1 > 0.0 THEN ${klasseSql(25.0, 25.0)}
-           |         WHEN abs_llci > 0.0 THEN '++' ELSE '?' END AS klasse,
-           |    'c_1' AS periode_ref, jaar_min, jaar_max, vj AS verschil_jaar
-           |  FROM vrel)
-           |SELECT * FROM aand UNION ALL SELECT * FROM vabs2
-           |UNION ALL SELECT * FROM vrel2""".stripMargin
-  }
-
-  /** Shared oracle CTE prefix for q113-q115: replays [[statusInputs]]
-    * and the latest-cycle-per-point selection in DuckDB (`mdate`, not
-    * `date` — reserved word). Every arg_min/arg_max orders by
-    * `mdate || '|' || id` — with fixed-width 4-digit years that string
-    * key sorts exactly like the engine's `struct(date, id)`, so
-    * same-date revisits break ties identically on both sides. */
-  private def statusOracleCtes: String = {
-    val typeList = graft.lsvi.Versie3Forests.habitattypes
-      .map(sqlStr).mkString("[", ", ", "]")
-    s"""WITH base AS (
-       |  SELECT c_custkey AS ck, c_custkey // 2 AS pt
-       |  FROM customer WHERE (c_custkey * 3) % 7 <> 0),
-       |plots AS (
-       |  SELECT 'ST_' || ck AS id, ck, pt,
-       |    $typeList[CAST(pt % 11 AS INTEGER) + 1] AS habitattype,
-       |    'pt_' || pt AS point_code,
-       |    2010 + 10 * (ck % 2) AS mdate,
-       |    CASE WHEN pt % 3 < 2 THEN 1 ELSE 0 END AS in_sac,
-       |    CASE WHEN (ck * 5) % 3 = 0 THEN 'gunstig' ELSE 'ongunstig' END AS lsvi,
-       |    CASE WHEN (pt * 7) % 5 < 3 THEN 'ja' ELSE 'nee' END AS beheer,
-       |    CAST((pt % 7 + 1) AS DOUBLE) * 0.25 AS w,
-       |    CAST((ck * 11) % 2001 - 1000 AS DOUBLE) / 1000.0 AS idx,
-       |    CAST((ck * 7) % 2049 - 1024 AS DOUBLE) / 1024.0 AS idx_b
-       |  FROM base),
-       |latest AS (
-       |  SELECT habitattype, point_code, arg_max(id, mdate || '|' || id) AS id,
-       |    arg_max(in_sac, mdate || '|' || id) AS in_sac, arg_max(idx, mdate || '|' || id) AS idx,
-       |    arg_max(idx_b, mdate || '|' || id) AS idx_b, arg_max(w, mdate || '|' || id) AS w,
-       |    arg_max(lsvi, mdate || '|' || id) AS lsvi, arg_max(beheer, mdate || '|' || id) AS beheer
-       |  FROM plots GROUP BY 1, 2)
-       |""".stripMargin
-  }
-
-  /** Per-rule engine metadata for the WT-bearing groups (dunes/moneos),
-    * derived from the SAME constants as the group's `rulesDf`:
-    * (op, status_ref, score_ref, score_max, met_classes, role, agg). */
-  private def wtRuleMeta(vw: String, ref: String, tm: Double,
-                         down: Set[String], or: Set[String], noAgg: Set[String],
-                         ind: String):
-      (String, Option[Double], Option[Double], Double, Option[Seq[String]], String, Boolean) = {
-    val v3d = graft.lsvi.Versie3Dunes
-    val isWt = ref == "WT"
-    val isFCat = ref == "B" || ref == "ZS"
-    val isCat = (isWt && !v3d.wtNumeric(vw)) || isFCat
-    val op = if (down(vw)) "<=" else ">="
-    val scoreRef: Option[Double] =
-      if (isWt) Some(v3d.wtScoreRef)
-      else if (isFCat) Some(graft.lsvi.Versie3Forests.categorical(vw)._2)
-      else Some(ref.toDouble)
-    val statusRef: Option[Double] =
-      if (isWt && !isCat) Some(if (down(vw)) v3d.wtStatusDown else v3d.wtStatusUp)
-      else scoreRef
-    val met: Option[Seq[String]] =
-      if (isCat)
-        Some(if (isWt) v3d.wtCategorical(vw)
-          else graft.lsvi.Versie3Forests.categorical(vw)._1)
-      else None
-    val scoreMax = if (isWt || isFCat) 100.0 else tm
-    (op, statusRef, scoreRef, scoreMax, met,
-      if (or(vw)) "or" else "and", !noAgg(ind))
-  }
-
-  /** Synthetic (plots, measurements) for a WT-bearing group: numeric
-    * streams per voorwaarde; class-coded voorwaarden draw a cover class
-    * and its midpoint together. */
-  private def wtGroupInputs(s: SparkSession, dir: String, idPrefix: String,
-      types: Seq[String],
-      rules: Seq[(String, String, String, String, String, String, Double)],
-      catVws: Set[String],
-      dynamicVw: Option[String] = None): (DataFrame, DataFrame) = {
-    val v3f = graft.lsvi.Versie3Forests
-    val vars = rules.map { case (_, _, _, _, vw, _, tm) => (vw, tm) }
-      .groupBy(_._1).map { case (vw, xs) => (vw, xs.map(_._2).max) }
-      .toSeq.sortBy(_._1)
-      .zipWithIndex.map { case ((vw, tmMax), p) => (vw, p, 2 * tmMax.toInt + 1) }
-    val n = types.size
-    val base = t(s, dir, "customer").select(
-        concat(lit(idPrefix), col("c_custkey")).as("id"),
-        element_at(typedLit(types), (col("c_custkey") % n + 1).cast("int"))
-          .as("type_analysis"),
-        col("c_custkey").as("ck"))
-      .withColumn("type_observed", substring_index(col("type_analysis"), "_", 1))
-      .withColumn("survey", when(col("ck") % 2 === 0, "anb").otherwise("inbo"))
-      .withColumn("record_id_square", concat(lit("SQ_"), col("ck")))
-      .withColumn("record_id_circle", concat(lit("CI_"), col("ck")))
-    val structs = vars.map { case (vw, p, span) =>
-      val refo =
-        if (dynamicVw.contains(vw)) ((col("ck") * (p + 11)) % 101).cast("double")
-        else lit(null).cast("double")
-      if (catVws(vw)) {
-        val clsIdx = ((col("ck") * (p + 2)) % 9 + 1).cast("int")
-        struct(lit(vw).as("voorwaarde"), lit(p).as("p"),
-          element_at(typedLit(v3f.coverMidpoints), clsIdx).as("v"),
-          element_at(typedLit(v3f.coverClasses), clsIdx).as("cls"),
-          refo.as("refo"))
-      } else
-        struct(lit(vw).as("voorwaarde"), lit(p).as("p"),
-          ((col("ck") * (2 * p + 3)) % span).cast("double").as("v"),
-          lit(null).cast("string").as("cls"),
-          refo.as("refo"))
-    }
-    val m = base.select(col("id"), col("ck"), explode(array(structs: _*)).as("s"))
-      .where((col("ck") + col("s.p") * 3) % 7 =!= 0)
-      .select(col("id"), col("s.voorwaarde").as("voorwaarde"),
-        coalesce(col("s.cls"), col("s.v").cast("string")).as("waarde"),
-        lit("square").as("plot_type"),
-        col("s.v").as("value_numeric"),
-        col("s.cls").as("value_category"),
-        col("s.refo").as("ref_override"))
-    (base.select("id", "type_analysis", "survey", "record_id_square",
-      "record_id_circle", "type_observed"), m)
-  }
-
-  /** Oracle CTE prefix for a WT-bearing group: replays [[wtGroupInputs]]
-    * plus the op/status_ref/class-membership/value-branch detail
-    * semantics in DuckDB from the same constants. */
-  private def wtGroupOracleCtes(idPrefix: String, types: Seq[String],
-      rules: Seq[(String, String, String, String, String, String, Double)],
-      down: Set[String], or: Set[String], noAgg: Set[String],
-      catVws: Set[String],
-      dynamicVw: Option[String] = None,
-      metaFn: Option[(String, String, Double, String) =>
-        (String, Option[Double], Option[Double], Double, Option[Seq[String]], String, Boolean)] = None):
-      String = {
-    val v3f = graft.lsvi.Versie3Forests
-    val typeList = types.map(sqlStr).mkString("[", ", ", "]")
-    val clsList = v3f.coverClasses.map(sqlStr).mkString("[", ", ", "]")
-    val midList = v3f.coverMidpoints
-      .map(x => s"CAST($x AS DOUBLE)").mkString("[", ", ", "]")
-    val vars = rules.map { case (_, _, _, _, vw, _, tm) => (vw, tm) }
-      .groupBy(_._1).map { case (vw, xs) => (vw, xs.map(_._2).max) }
-      .toSeq.sortBy(_._1)
-      .zipWithIndex.map { case ((vw, tmMax), p) => (vw, p, 2 * tmMax.toInt + 1) }
-    val varVals = vars.map { case (vw, p, span) =>
-      s"(${sqlStr(vw)}, $p, $span, ${catVws(vw).toString.toUpperCase}, " +
-        s"${dynamicVw.contains(vw).toString.toUpperCase})"
-    }.mkString(",\n   ")
-    val meta = metaFn.getOrElse(wtRuleMeta(_, _, _, down, or, noAgg, _))
-    val ruleVals = rules.map { case (ht, cr, ind, b, vw, ref, tm) =>
-      val (op, sref, cref, smax, met, role, agg) = meta(vw, ref, tm, ind)
-      val metSql = met.map(_.map(sqlStr).mkString("[", ", ", "]"))
-        .getOrElse("CAST(NULL AS VARCHAR[])")
-      val srefSql = sref.map(_.toString).getOrElse("CAST(NULL AS DOUBLE)")
-      val crefSql = cref.map(_.toString).getOrElse("CAST(NULL AS DOUBLE)")
-      s"(${sqlStr(ht)}, ${sqlStr(cr)}, ${sqlStr(ind)}, ${sqlStr(b)}, ${sqlStr(vw)}, " +
-        s"'$op', $srefSql, $crefSql, $smax, $metSql, '$role', $agg)"
-    }.mkString(",\n   ")
-    s"""WITH plots AS (
-       |  SELECT '$idPrefix' || c_custkey AS id,
-       |    $typeList[CAST(c_custkey % ${types.size} AS INTEGER) + 1] AS type_analysis,
-       |    c_custkey AS ck
-       |  FROM customer),
-       |m AS (
-       |  SELECT id,
-       |    v.voorwaarde,
-       |    CASE WHEN v.is_cat
-       |         THEN $midList[CAST((ck * (v.p + 2)) % 9 AS INTEGER) + 1]
-       |         ELSE CAST((ck * (2*v.p + 3)) % v.span AS DOUBLE) END AS value_numeric,
-       |    CASE WHEN v.is_cat
-       |         THEN $clsList[CAST((ck * (v.p + 2)) % 9 AS INTEGER) + 1] END AS value_category,
-       |    CASE WHEN v.dyn THEN CAST((ck * (v.p + 11)) % 101 AS DOUBLE) END AS ref_override
-       |  FROM plots CROSS JOIN (VALUES
-       |   $varVals) v(voorwaarde, p, span, is_cat, dyn)
-       |  WHERE (ck + 3*v.p) % 7 <> 0),
-       |r(habitattype, criterium, indicator, belang, voorwaarde, op, status_ref,
-       |  score_ref, score_max, met_classes, role, aggregate) AS (
-       |  VALUES
-       |   $ruleVals),
-       |d AS (
-       |  SELECT p.id, p.type_analysis, r.criterium, r.indicator, r.belang,
-       |    r.voorwaarde, r.role, r.aggregate,
-       |    m.value_numeric AS v, m.value_category AS cls,
-       |    COALESCE(m.ref_override, r.status_ref) AS sref,
-       |    COALESCE(m.ref_override, r.score_ref) AS cref,
-       |    r.score_max, r.op, r.met_classes
-       |  FROM plots p
-       |  JOIN r ON p.type_analysis = r.habitattype
-       |  LEFT JOIN m ON m.id = p.id AND m.voorwaarde = r.voorwaarde),
-       |d2 AS (
-       |  SELECT id, type_analysis, criterium, indicator, belang, voorwaarde,
-       |    role, aggregate,
-       |    CASE WHEN met_classes IS NOT NULL THEN
-       |           (CASE WHEN cls IS NOT NULL THEN list_contains(met_classes, cls) END)
-       |         WHEN op = '>=' THEN v >= sref
-       |         WHEN op = '>'  THEN v > sref
-       |         WHEN op = '<=' THEN v <= sref
-       |         ELSE v < sref END AS status_voorwaarde,
-       |    CASE WHEN v IS NULL OR cref IS NULL OR
-       |              (met_classes IS NOT NULL AND cls IS NULL) THEN NULL
-       |         ELSE greatest(-1.0, least(1.0,
-       |           CASE WHEN op IN ('>=', '>') THEN
-       |                  CASE WHEN v >= cref THEN
-       |                         (CASE WHEN score_max = cref THEN 1.0
-       |                               ELSE (v - cref) / (score_max - cref) END)
-       |                       WHEN cref <> 0 THEN (v - cref) / cref
-       |                       WHEN v = cref THEN 0.0 END
-       |                ELSE
-       |                  CASE WHEN v <= cref THEN
-       |                         (CASE WHEN cref = 0 THEN 1.0
-       |                               ELSE (cref - v) / cref END)
-       |                       ELSE (cref - v) / (score_max - cref) END
-       |           END)) END AS verschilscore
-       |  FROM d)
-       |""".stripMargin
-  }
-
-  /** Shared CTE prefix for the forest oracle SQL: replays
-    * [[forestInputs]] and the [[graft.lsvi.LsviForest]] detail semantics
-    * in DuckDB, with all dictionary VALUES generated from the SAME
-    * [[graft.lsvi.Versie3Forests]] constants (single source of truth). */
-  private def forestOracleCtes: String = {
-    val v3f = graft.lsvi.Versie3Forests
-    val htList = v3f.habitattypes.map(sqlStr).mkString("[", ", ", "]")
-    val clsList = v3f.coverClasses.map(sqlStr).mkString("[", ", ", "]")
-    val midList = v3f.coverMidpoints
-      .map(m => s"CAST($m AS DOUBLE)").mkString("[", ", ", "]")
-    val numVals = forestNumVars
-      .map { case (vw, p, span) => s"(${sqlStr(vw)}, $p, $span)" }.mkString(",\n   ")
-    val catVals = forestCatVars
-      .map { case (vw, p) => s"(${sqlStr(vw)}, $p)" }.mkString(",\n   ")
-    val ruleVals = v3f.rules.map { case (ht, cr, ind, b, vw, ref, tm) =>
-      val catOpt = v3f.categorical.get(vw)
-      val met = catOpt
-        .map { case (cls, _) => cls.map(sqlStr).mkString("[", ", ", "]") }
-        .getOrElse("CAST(NULL AS VARCHAR[])")
-      val refNum = catOpt.map(_._2).getOrElse(ref.toDouble)
-      val scoreMax = if (catOpt.isDefined) 100.0 else tm
-      val dir = if (v3f.downVoorwaarden(vw)) "down" else "up"
-      val role = if (v3f.orVoorwaarden(vw)) "or" else "and"
-      val agg = !v3f.noAggregateIndicators(ind)
-      s"(${sqlStr(ht)}, ${sqlStr(cr)}, ${sqlStr(ind)}, ${sqlStr(b)}, ${sqlStr(vw)}, " +
-        s"${sqlStr(ref)}, $tm, '$dir', $refNum, $scoreMax, $met, '$role', $agg)"
-    }.mkString(",\n   ")
-    s"""WITH plots AS (
-       |  SELECT 'FP_' || c_custkey AS id,
-       |    $htList[CAST(c_custkey % 11 AS INTEGER) + 1] AS type_analysis,
-       |    c_custkey AS ck
-       |  FROM customer),
-       |plots2 AS (
-       |  SELECT id, type_analysis, ck,
-       |    CASE WHEN type_analysis LIKE '91E0%' THEN '91E0'
-       |         WHEN type_analysis = '9130_end' THEN '9130'
-       |         ELSE type_analysis END AS type_observed,
-       |    CASE WHEN ck % 2 = 0 THEN 'anb' ELSE 'vbi' END AS survey,
-       |    'SQ_' || ck AS record_id_square, 'CI_' || ck AS record_id_circle,
-       |    'vbi' AS plot_type
-       |  FROM plots),
-       |mnum AS (
-       |  SELECT id, v.voorwaarde,
-       |    CAST((ck * (2*v.p + 3)) % v.span AS VARCHAR) AS waarde,
-       |    CAST((ck * (2*v.p + 3)) % v.span AS DOUBLE) AS value_numeric,
-       |    CAST(NULL AS VARCHAR) AS value_category
-       |  FROM plots2 CROSS JOIN (VALUES
-       |   $numVals) v(voorwaarde, p, span)
-       |  WHERE (ck + 3*v.p) % 7 <> 0),
-       |mcat AS (
-       |  SELECT id, v.voorwaarde,
-       |    $clsList[CAST((ck * (v.p + 2)) % 9 AS INTEGER) + 1] AS waarde,
-       |    $midList[CAST((ck * (v.p + 2)) % 9 AS INTEGER) + 1] AS value_numeric,
-       |    $clsList[CAST((ck * (v.p + 2)) % 9 AS INTEGER) + 1] AS value_category
-       |  FROM plots2 CROSS JOIN (VALUES
-       |   $catVals) v(voorwaarde, p)
-       |  WHERE (ck + 3*v.p) % 7 <> 0),
-       |m AS (SELECT * FROM mnum UNION ALL SELECT * FROM mcat),
-       |r(habitattype, criterium, indicator, belang, voorwaarde, referentiewaarde,
-       |  theoretischmaximum, direction, ref_numeric, score_max, met_classes,
-       |  role, aggregate) AS (
-       |  VALUES
-       |   $ruleVals),
-       |d AS (
-       |  SELECT p.id, p.survey, p.record_id_square, p.record_id_circle,
-       |    p.type_observed, p.type_analysis, r.criterium, r.indicator, r.belang,
-       |    r.voorwaarde, p.plot_type, m.waarde,
-       |    CASE WHEN r.met_classes IS NULL THEN m.value_numeric END AS waarde_numeric,
-       |    r.referentiewaarde,
-       |    CASE WHEN r.met_classes IS NOT NULL THEN
-       |           (CASE WHEN m.value_category IS NOT NULL
-       |                 THEN list_contains(r.met_classes, m.value_category) END)
-       |         WHEN r.direction = 'up' THEN m.value_numeric >= r.ref_numeric
-       |         ELSE m.value_numeric <= r.ref_numeric END AS status_voorwaarde,
-       |    CAST(r.theoretischmaximum AS DOUBLE) AS theoretischmaximum,
-       |    r.role, r.aggregate,
-       |    m.value_numeric AS score_value, r.direction, r.ref_numeric, r.score_max
-       |  FROM plots2 p
-       |  JOIN r ON p.type_analysis = r.habitattype
-       |  LEFT JOIN m ON m.id = p.id AND m.voorwaarde = r.voorwaarde),
-       |d2 AS (
-       |  SELECT *,
-       |    CASE WHEN status_voorwaarde IS NULL OR score_value IS NULL THEN NULL
-       |         ELSE greatest(-1.0, least(1.0,
-       |           CASE WHEN direction = 'up' THEN
-       |                  CASE WHEN status_voorwaarde THEN
-       |                         (CASE WHEN score_max = ref_numeric THEN 1.0
-       |                               ELSE (score_value - ref_numeric)
-       |                                    / (score_max - ref_numeric) END)
-       |                       ELSE (score_value - ref_numeric) / ref_numeric END
-       |                ELSE
-       |                  CASE WHEN status_voorwaarde THEN
-       |                         (ref_numeric - score_value) / ref_numeric
-       |                       ELSE (ref_numeric - score_value)
-       |                            / (score_max - ref_numeric) END
-       |           END)) END AS verschilscore
-       |  FROM d)
-       |""".stripMargin
-  }
-
-  private def lsviRules(s: SparkSession): DataFrame = {
-    import s.implicits._
-    Seq(
-      ("verstoring", "prijsdruk", "avg_discount", "b", "<=", Option(0.05), Option.empty[Seq[String]],
-        "0.05", Option(0.1)),
-      ("verstoring", "retour", "return_rate", "zb", "<", Option(0.336), Option.empty[Seq[String]],
-        "0.336", Option(1.0)),
-      ("structuur", "kwantiteit", "avg_qty", "b", ">=", Option(25.3), Option.empty[Seq[String]],
-        "25.3", Option(50.0)),
-      ("structuur", "waarde", "avg_price", "b", ">=", Option(53000.0), Option.empty[Seq[String]],
-        "53000", Option(100000.0)),
-      ("context", "herkomst", "regio", "b", "in", Option.empty[Double], Option(lsviRegions),
-        lsviRegions.mkString(", "), Option.empty[Double]))
-      .toDF("criterium", "indicator", "voorwaarde", "belang", "op",
-        "ref_numeric", "ref_categories", "referentiewaarde", "theoretisch_maximum")
-  }
-
-  /** Fixed-point globaal aggregation SQL on top of a `d2` detail CTE
-    * (mirrors [[lsviGlobaalFixedPoint]]); shared by q103 and q107. */
-  private val lsviGlobaalSqlTail: String =
-    """, ind AS (
-        |  SELECT id, type_analysis, criterium, indicator, belang,
-        |    count(CASE WHEN role = 'and' AND status_voorwaarde IS NOT NULL THEN 1 END) AS and_known,
-        |    count(CASE WHEN role = 'and' AND NOT status_voorwaarde THEN 1 END) AS and_bad,
-        |    count(CASE WHEN role = 'or' AND status_voorwaarde IS NOT NULL THEN 1 END) AS or_known,
-        |    count(CASE WHEN role = 'or' AND status_voorwaarde THEN 1 END) AS or_true,
-        |    min(CASE WHEN role = 'and' THEN verschilscore END) AS vs_and,
-        |    max(CASE WHEN role = 'or' THEN verschilscore END) AS vs_or
-        |  FROM d2 WHERE aggregate GROUP BY 1, 2, 3, 4, 5),
-        |ind2 AS (
-        |  SELECT id, type_analysis, criterium, belang,
-        |    CASE WHEN and_known + or_known = 0 THEN NULL
-        |         ELSE (and_known = 0 OR and_bad = 0) AND
-        |              (or_known = 0 OR or_true > 0) END AS status_indicator,
-        |    CASE WHEN vs_and IS NULL THEN vs_or
-        |         WHEN vs_or IS NULL THEN vs_and
-        |         WHEN vs_and < vs_or THEN vs_and ELSE vs_or END AS verschilscore
-        |  FROM ind),
-        |ind3 AS (
-        |  SELECT *, CAST(floor(verschilscore * 1000000.0 + 0.5) AS BIGINT) AS vs6
-        |  FROM ind2),
-        |crit AS (
-        |  SELECT id, type_analysis, criterium,
-        |    CAST(sum(vs6) AS BIGINT) AS cs6, count(vs6) AS cn
-        |  FROM ind3 GROUP BY 1, 2, 3),
-        |critmean AS (
-        |  SELECT id, type_analysis,
-        |    CAST(sum(CAST(floor(CAST(cs6 AS DOUBLE) / cn + 0.5) AS BIGINT)) AS BIGINT) AS mc6,
-        |    count(*) AS n_crit
-        |  FROM crit WHERE cn > 0 GROUP BY 1, 2),
-        |gl AS (
-        |  SELECT id, type_analysis,
-        |    count(CASE WHEN status_indicator IS NOT NULL THEN 1 END) AS n_known,
-        |    count(CASE WHEN status_indicator THEN 1 END) AS n_gunstig,
-        |    count(CASE WHEN belang = 'zb' AND NOT status_indicator THEN 1 END) AS n_zb_ongunstig,
-        |    CAST(sum(vs6) AS BIGINT) AS s6, count(vs6) AS n_vs,
-        |    CAST(sum(CASE WHEN vs6 IS NOT NULL THEN
-        |          (CASE WHEN vs6 < 0 THEN vs6 ELSE 0 END) + 1000000 END) AS BIGINT) AS d6
-        |  FROM ind3 GROUP BY 1, 2)
-        |SELECT g.id, g.type_analysis,
-        | CASE WHEN g.n_known > 0 THEN
-        |   100.0 * g.n_gunstig / g.n_known > 50.0 AND g.n_zb_ongunstig = 0 END AS status,
-        | 'RapportageHR' AS aggregatiemethode, g.n_zb_ongunstig,
-        | CASE WHEN g.n_known > 0 THEN 100.0 * g.n_gunstig / g.n_known END AS aandeel_gunstig,
-        | CASE WHEN g.n_vs > 0 THEN CAST(g.s6 AS DOUBLE) / g.n_vs / 1000000.0 END AS index_mean_ind,
-        | CAST(cm.mc6 AS DOUBLE) / cm.n_crit / 1000000.0 AS index_mean_crit,
-        | CASE WHEN g.n_vs > 0 THEN CAST(g.d6 AS DOUBLE) / g.n_vs / 1000000.0 END AS doelbereik_mean_ind
-        |FROM gl g LEFT JOIN critmean cm
-        |  ON g.id = cm.id AND g.type_analysis = cm.type_analysis""".stripMargin
-
-  /** The fixed merge list q157 applies (the six merges q154 learns at
-    * sf0.01, frozen as explicit parameters — q157 gates the APPLY half
-    * of BPE independently of the learner). */
-  val bpeFixedMerges: Seq[(String, String)] =
-    Seq(("e", "r"), ("i", "n"), ("o", "w"), ("o", "r"), ("s", "t"), ("m", "er"))
-
-  /** One greedy non-overlapping left-to-right merge application of the
-    * pair in scope, as DuckDB window SQL over an exploded
-    * (partition-keys…, pos, sym) state. The only way two candidate
-    * starts can be adjacent is an l==r run ("aaaa" under (a,a) has
-    * candidates at 1,2,3), where greedy keeps every other one — i.e.
-    * the odd row_number parity within each consecutive-candidate
-    * island (islands via the pos - row_number gaps trick). A consumed
-    * position is one whose predecessor was a kept candidate
-    * (lag(kept)); survivors are re-numbered. `lSql`/`rSql` are SQL
-    * expressions for the pair (literals for q157, the top_k row for
-    * q154). */
-  private def bpeApplyMergeSql(k: Int, prev: String, keys: String,
-                               fromExtra: String, lSql: String,
-                               rSql: String, p: String = ""): String =
-    s"""${p}cand_$k AS (
-       |  SELECT s.*,
-       |         COALESCE(s.sym = $lSql AND
-       |          lead(s.sym) OVER (PARTITION BY $keys ORDER BY s.pos) = $rSql,
-       |          false) AS cand
-       |  FROM $prev s$fromExtra),
-       |${p}grp_$k AS (
-       |  SELECT *, CASE WHEN cand THEN
-       |      pos - row_number() OVER (PARTITION BY $keys, cand ORDER BY pos)
-       |    END AS grp
-       |  FROM ${p}cand_$k),
-       |${p}seg_$k AS MATERIALIZED (
-       |  SELECT * EXCLUDE (pos, sym, cand, grp, kept, prev_kept, lead_sym),
-       |         row_number() OVER (PARTITION BY $keys ORDER BY pos) AS pos,
-       |         CASE WHEN kept THEN sym || lead_sym ELSE sym END AS sym
-       |  FROM (SELECT *,
-       |          lag(kept, 1, false) OVER (PARTITION BY $keys ORDER BY pos) AS prev_kept,
-       |          lead(sym) OVER (PARTITION BY $keys ORDER BY pos) AS lead_sym
-       |        FROM (SELECT *,
-       |                cand AND (row_number() OVER (PARTITION BY $keys, grp ORDER BY pos) % 2 = 1) AS kept
-       |              FROM ${p}grp_$k) kk)
-       |  WHERE NOT prev_kept)""".stripMargin
-
-  /** q154's oracle: the 6 learning rounds UNROLLED — per round a pair
-    * count over the exploded per-word symbol state, the (n desc, l, r)
-    * top-1 (DuckDB varchar comparison is memcmp, same as Spark's
-    * UTF8String binary order), and the greedy merge application. */
-  /** q195's oracle: the q160 ADC chain (dense half, queries 1..3,
-    * self-matches excluded) + the q188 BM25 chain verbatim with
-    * b-prefixed CTE names (sparse half, no self to exclude), fused by
-    * the q189 RRF tail — contributions fold in system order
-    * (0 = dense, 1 = sparse), matching `Fusion.rrf`'s Seq order. */
-  private def hybridRrfOracleSql(m: Int, k: Int, dim: Int,
-                                 topK: Int, k0: Int): String = {
-    val sub = dim / m
-    val scoreCtes = (0 until m).map { s =>
-      val lo = s * sub + 1; val hi = (s + 1) * sub
-      s"""s_$s AS (SELECT qv.query_id, a1_$s.vec_id AS neighbor_id,
-         |    CAST(floor(list_sum(list_transform(list_zip(qv.qv[$lo:$hi], c1_$s.cv),
-         |      p -> (p[1]-p[2])*(p[1]-p[2])))*1e6 + 0.5) AS BIGINT) AS dm
-         |  FROM a1_$s JOIN c1_$s USING (cid), qv)""".stripMargin
-    }
-    val joins = (1 until m).map(s =>
-      s"JOIN s_$s USING (query_id, neighbor_id)").mkString(" ")
-    val adc = (0 until m).map(s => s"s_$s.dm").mkString(" + ")
-    pqTrainCtes(m, k, dim) +
-      s""",
-         |qv AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id IN (1, 2, 3)),
-         |${scoreCtes.mkString(",\n")},
-         |adc AS (SELECT query_id, neighbor_id, CAST($adc AS BIGINT) AS adc_micros
-         |        FROM s_0 $joins
-         |        WHERE query_id <> neighbor_id),
-         |sysa AS (SELECT query_id, neighbor_id, rk AS rank
-         |         FROM (SELECT *, row_number() OVER (
-         |                 PARTITION BY query_id ORDER BY adc_micros, neighbor_id) rk
-         |               FROM adc) t
-         |         WHERE rk <= $topK),
-         |btoks AS (
-         |  SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS term
-         |  FROM documents WHERE length(trim(text)) > 0),
-         |btf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-         |        FROM btoks GROUP BY 1, 2),
-         |bdl AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl FROM btf GROUP BY 1),
-         |bgp AS (SELECT CAST(count(*) AS BIGINT) AS nd,
-         |          CAST(sum(dl) AS BIGINT) AS tot FROM bdl),
-         |bavg AS (SELECT CAST(tot AS DOUBLE) / CAST(nd AS DOUBLE) AS avgdl FROM bgp),
-         |bdfq AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM btf GROUP BY 1),
-         |bq AS (SELECT query_id, unnest(string_split_regex(trim(qtext), '\\s+')) AS term
-         |       FROM (VALUES (CAST(1 AS BIGINT), 'spark join'),
-         |                    (CAST(2 AS BIGINT), 'customer order'),
-         |                    (CAST(3 AS BIGINT), 'stream window batch'))
-         |         AS v(query_id, qtext)),
-         |bidf AS (SELECT bdfq.term,
-         |           floor(ln((CAST(nd AS DOUBLE) - CAST(df AS DOUBLE) + 0.5e0)
-         |                    / (CAST(df AS DOUBLE) + 0.5e0) + 1e0)*1e6 + 0.5)/1e6
-         |             AS idf
-         |         FROM bdfq, bgp),
-         |bc AS (
-         |  SELECT bq.query_id, btf.doc_id, btf.term,
-         |    floor((bidf.idf * (CAST(btf.tf AS DOUBLE) * 2.2e0)
-         |           / (CAST(btf.tf AS DOUBLE)
-         |              + 1.2e0 * (1e0 - 0.75e0
-         |                 + 0.75e0 * (CAST(bdl.dl AS DOUBLE) / bavg.avgdl))))
-         |          *1e6 + 0.5)/1e6 AS contrib
-         |  FROM btf JOIN bq ON btf.term = bq.term
-         |    JOIN bidf ON btf.term = bidf.term
-         |    JOIN bdl ON btf.doc_id = bdl.doc_id, bavg),
-         |bsc AS (SELECT query_id, doc_id,
-         |          floor(list_reduce(list(contrib ORDER BY term), (x, y) -> x + y)
-         |                *1e6 + 0.5)/1e6 AS score
-         |        FROM bc GROUP BY 1, 2),
-         |sysb AS (SELECT query_id, doc_id AS neighbor_id, rk AS rank
-         |         FROM (SELECT *, row_number() OVER (
-         |                 PARTITION BY query_id ORDER BY score DESC, doc_id) rk
-         |               FROM bsc) t
-         |         WHERE rk <= $topK),
-         |u AS (SELECT query_id, neighbor_id, 0 AS sys, rank FROM sysa
-         |      UNION ALL
-         |      SELECT query_id, neighbor_id, 1 AS sys, rank FROM sysb),
-         |cr AS (SELECT query_id, neighbor_id, sys,
-         |         floor(1e0/(${k0}e0 + CAST(rank AS DOUBLE))*1e6 + 0.5)/1e6
-         |           AS contrib
-         |       FROM u),
-         |sc AS (SELECT query_id, neighbor_id,
-         |         floor(list_reduce(list(contrib ORDER BY sys), (x, y) -> x + y)
-         |               *1e6 + 0.5)/1e6 AS rrf
-         |       FROM cr GROUP BY 1, 2)
-         |SELECT query_id, neighbor_id, rrf, CAST(rk AS INTEGER) AS rank
-         |FROM (SELECT *, row_number() OVER (
-         |        PARTITION BY query_id ORDER BY rrf DESC, neighbor_id) rk
-         |      FROM sc) t
-         |WHERE rk <= $topK""".stripMargin
-  }
-
-  /** q191's oracle: per n in 2..10 the n-gram multiset groups per doc;
-    * n ≤ 4 takes the top type's cnt·chars mass (tie: cnt DESC, gram
-    * ASC — the kernel's first-max-run-in-sorted-order), n ≥ 5 sums
-    * cnt·chars over types with cnt ≥ 2. Masses are exact integers;
-    * the keep flag compares them scaled by 100 against pct·doc_chars
-    * so no float boundary exists. */
-  private def repetitionOracleSql: String = {
-    val pct = Map(2 -> 20, 3 -> 18, 4 -> 16, 5 -> 15, 6 -> 14,
-      7 -> 13, 8 -> 12, 9 -> 11, 10 -> 10)
-    def gramCtes(n: Int) =
-      s"""g$n AS (SELECT doc_id, array_to_string(ts[i:i+${n - 1}], ' ') AS g
-         |  FROM toks, unnest(range(1, len(ts) - ${n - 2})) AS r(i)
-         |  WHERE len(ts) >= $n),
-         |c$n AS (SELECT doc_id, g, count(*) AS cnt FROM g$n GROUP BY 1, 2)""".stripMargin
-    def massCte(n: Int) =
-      if (n <= 4)
-        s"""m$n AS (SELECT doc_id, cnt * len(g) AS m FROM (
-           |  SELECT doc_id, g, cnt,
-           |    row_number() OVER (PARTITION BY doc_id ORDER BY cnt DESC, g) AS rk
-           |  FROM c$n) t WHERE rk = 1)""".stripMargin
-      else
-        s"""m$n AS (SELECT doc_id, CAST(sum(cnt * len(g)) AS BIGINT) AS m
-           |  FROM c$n WHERE cnt >= 2 GROUP BY 1)""".stripMargin
-    def fracCol(n: Int, name: String) =
-      s"  ${round6Sql(s"CAST(COALESCE(m$n.m, 0) AS DOUBLE) / b.nc")} AS $name"
-    val fracs =
-      Seq(fracCol(2, "top_2gram_char_frac"), fracCol(3, "top_3gram_char_frac"),
-        fracCol(4, "top_4gram_char_frac")) ++
-        (5 to 10).map(n => fracCol(n, s"dup_${n}gram_char_frac"))
-    val keep = (2 to 10)
-      .map(n => s"COALESCE(m$n.m, 0) * 100 <= ${pct(n)} * b.nc")
-      .mkString("\n    AND ")
-    s"""WITH toks AS (
-       |  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS ts,
-       |    CAST(len(trim(text)) AS BIGINT) AS nc
-       |  FROM documents WHERE length(trim(text)) > 0),
-       |${(2 to 10).map(gramCtes).mkString(",\n")},
-       |${(2 to 10).map(massCte).mkString(",\n")}
-       |SELECT b.doc_id,
-       |${fracs.mkString(",\n")},
-       |  ($keep) AS keep
-       |FROM toks b
-       |${(2 to 10).map(n => s"LEFT JOIN m$n ON m$n.doc_id = b.doc_id").mkString("\n")}""".stripMargin
-  }
-
-  private def bpeMergeOracleSql(rounds: Int): String = {
-    val head =
-      """WITH vocab AS (
-        |  SELECT w AS word, CAST(count(*) AS BIGINT) AS freq
-        |  FROM (SELECT unnest(regexp_split_to_array(trim(text), '\s+')) AS w
-        |        FROM documents WHERE length(trim(text)) > 0)
-        |  WHERE length(w) > 0 GROUP BY 1),
-        |seg_0 AS MATERIALIZED (
-        |  SELECT word, freq, i AS pos, chars[i] AS sym
-        |  FROM (SELECT word, freq, regexp_split_to_array(word, '') AS chars FROM vocab),
-        |       unnest(generate_series(1, len(chars))) AS gs(i))""".stripMargin
-    val perRound = (1 to rounds).map { k =>
-      s"""pairs_$k AS (
-         |  SELECT a.sym AS l, b.sym AS r, CAST(SUM(a.freq) AS BIGINT) AS n
-         |  FROM seg_${k - 1} a JOIN seg_${k - 1} b
-         |    ON a.word = b.word AND b.pos = a.pos + 1
-         |  GROUP BY 1, 2),
-         |top_$k AS MATERIALIZED (
-         |  SELECT l, r, n FROM pairs_$k ORDER BY n DESC, l ASC, r ASC LIMIT 1),
-         |""".stripMargin +
-        bpeApplyMergeSql(k, s"seg_${k - 1}", "word", s" CROSS JOIN top_$k t",
-          "t.l", "t.r")
-    }
-    val sel = (1 to rounds).map(k =>
-      s"""SELECT $k AS rank, l AS "left", r AS "right", l || r AS merged, n AS pair_count FROM top_$k""")
-      .mkString(" UNION ALL ")
-    (head +: perRound).mkString(",\n") + s"\nSELECT * FROM ($sel) ORDER BY rank"
-  }
-
-  /** q157's oracle: the fixed merges applied (same unrolled machinery,
-    * pair literals instead of a learned top-1) to the exploded
-    * (doc_id, word-index, pos, sym) corpus state, reduced to the
-    * token histogram. */
-  /** q179's oracle: q157's per-word segmentation chain with `lang`
-    * carried through the words CTE, collapsed to per-language
-    * fertility (tokens/word) and compression (chars/token) stats. */
-  private def bpeFertilityOracleSql(ms: Seq[(String, String)]): String = {
-    val head =
-      """WITH words AS (
-        |  SELECT doc_id, lang, i AS widx, ws[i] AS word
-        |  FROM (SELECT doc_id, lang, regexp_split_to_array(trim(text), '\s+') AS ws
-        |        FROM documents WHERE length(trim(text)) > 0),
-        |       unnest(generate_series(1, len(ws))) AS gs(i)
-        |  WHERE length(ws[i]) > 0),
-        |seg_0 AS MATERIALIZED (
-        |  SELECT doc_id, widx, i AS pos, chars[i] AS sym
-        |  FROM (SELECT doc_id, widx, regexp_split_to_array(word, '') AS chars FROM words),
-        |       unnest(generate_series(1, len(chars))) AS gs(i))""".stripMargin
-    def lit(x: String) = "'" + x.replace("'", "''") + "'"
-    val perRound = ms.zipWithIndex.map { case ((l, r), i) =>
-      bpeApplyMergeSql(i + 1, s"seg_$i", "doc_id, widx", "", lit(l), lit(r))
-    }
-    (head +: perRound).mkString(",\n") +
-      s""",
-         |wstats AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_words
-         |           FROM words GROUP BY 1),
-         |tstats AS (
-         |  SELECT w.lang, CAST(count(*) AS BIGINT) AS n_tokens,
-         |         CAST(sum(length(s.sym)) AS BIGINT) AS n_chars
-         |  FROM seg_${ms.size} s
-         |  JOIN words w ON s.doc_id = w.doc_id AND s.widx = w.widx
-         |  GROUP BY 1)
-         |SELECT lang, n_words, n_tokens, n_chars,
-         |  floor(CAST(n_tokens AS DOUBLE)/CAST(n_words AS DOUBLE)*1e6 + 0.5)/1e6
-         |    AS fertility,
-         |  floor(CAST(n_chars AS DOUBLE)/CAST(n_tokens AS DOUBLE)*1e6 + 0.5)/1e6
-         |    AS chars_per_token
-         |FROM wstats JOIN tstats USING (lang)""".stripMargin
-  }
-
-  private def bpeSegmentOracleSql(ms: Seq[(String, String)]): String = {
-    val head =
-      """WITH words AS (
-        |  SELECT doc_id, i AS widx, ws[i] AS word
-        |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS ws
-        |        FROM documents WHERE length(trim(text)) > 0),
-        |       unnest(generate_series(1, len(ws))) AS gs(i)
-        |  WHERE length(ws[i]) > 0),
-        |seg_0 AS MATERIALIZED (
-        |  SELECT doc_id, widx, i AS pos, chars[i] AS sym
-        |  FROM (SELECT doc_id, widx, regexp_split_to_array(word, '') AS chars FROM words),
-        |       unnest(generate_series(1, len(chars))) AS gs(i))""".stripMargin
-    def lit(x: String) = "'" + x.replace("'", "''") + "'"
-    val perRound = ms.zipWithIndex.map { case ((l, r), i) =>
-      bpeApplyMergeSql(i + 1, s"seg_$i", "doc_id, widx", "", lit(l), lit(r))
-    }
-    (head +: perRound).mkString(",\n") +
-      s"""
-         |SELECT sym AS token, CAST(count(*) AS BIGINT) AS n,
-         |       CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs
-         |FROM seg_${ms.size} GROUP BY 1""".stripMargin
-  }
-
-  /** q168's oracle: the tokenizer stack end-to-end — q154's unrolled
-    * learning rounds (vocab seg/top chain) interleaved with q157's
-    * corpus-application machinery driven by each round's LEARNED
-    * `top_k` row (CROSS JOIN instead of pair literals; `c`-prefixed
-    * CTE names keep the two chains apart), then per-doc token counts
-    * packed with q88's hash-order running-sum bins. */
-  private def bpeTokenizerE2eOracleSql(rounds: Int, budget: Long): String = {
-    val head =
-      """WITH vocab AS (
-        |  SELECT w AS word, CAST(count(*) AS BIGINT) AS freq
-        |  FROM (SELECT unnest(regexp_split_to_array(trim(text), '\s+')) AS w
-        |        FROM documents WHERE length(trim(text)) > 0)
-        |  WHERE length(w) > 0 GROUP BY 1),
-        |seg_0 AS MATERIALIZED (
-        |  SELECT word, freq, i AS pos, chars[i] AS sym
-        |  FROM (SELECT word, freq, regexp_split_to_array(word, '') AS chars FROM vocab),
-        |       unnest(generate_series(1, len(chars))) AS gs(i)),
-        |words AS (
-        |  SELECT doc_id, i AS widx, ws[i] AS word
-        |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS ws
-        |        FROM documents WHERE length(trim(text)) > 0),
-        |       unnest(generate_series(1, len(ws))) AS gs(i)
-        |  WHERE length(ws[i]) > 0),
-        |cseg_0 AS MATERIALIZED (
-        |  SELECT doc_id, widx, i AS pos, chars[i] AS sym
-        |  FROM (SELECT doc_id, widx, regexp_split_to_array(word, '') AS chars FROM words),
-        |       unnest(generate_series(1, len(chars))) AS gs(i))""".stripMargin
-    // topx_k: top_k padded with a never-matching NULL sentinel when a
-    // round finds no pair (corpus exhausted before `rounds` merges) —
-    // the corpus chain then passes through unchanged, mirroring
-    // Bpe.merges' early stop, instead of the CROSS JOIN emptying every
-    // later cseg (the COALESCE(cand, false) in the apply makes the
-    // NULL pair a no-op rather than a null-contagion row drop)
-    val perRound = (1 to rounds).map { k =>
-      s"""pairs_$k AS (
-         |  SELECT a.sym AS l, b.sym AS r, CAST(SUM(a.freq) AS BIGINT) AS n
-         |  FROM seg_${k - 1} a JOIN seg_${k - 1} b
-         |    ON a.word = b.word AND b.pos = a.pos + 1
-         |  GROUP BY 1, 2),
-         |top_$k AS MATERIALIZED (
-         |  SELECT l, r, n FROM pairs_$k ORDER BY n DESC, l ASC, r ASC LIMIT 1),
-         |topx_$k AS (
-         |  SELECT l, r FROM top_$k
-         |  UNION ALL
-         |  SELECT NULL, NULL WHERE NOT EXISTS (SELECT 1 FROM top_$k)),
-         |""".stripMargin +
-        bpeApplyMergeSql(k, s"seg_${k - 1}", "word", s" CROSS JOIN top_$k t",
-          "t.l", "t.r") + ",\n" +
-        bpeApplyMergeSql(k, s"cseg_${k - 1}", "doc_id, widx",
-          s" CROSS JOIN topx_$k t", "t.l", "t.r", p = "c")
-    }
-    (head +: perRound).mkString(",\n") +
-      s""",
-         |tc AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens
-         |       FROM cseg_$rounds GROUP BY 1),
-         |cum AS (
-         |  SELECT doc_id, n_tokens,
-         |    COALESCE(sum(n_tokens) OVER (ORDER BY md5(CAST(doc_id AS VARCHAR) || ':42')
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_before
-         |  FROM tc)
-         |SELECT doc_id, n_tokens, CAST(cum_before // $budget AS BIGINT) AS bin
-         |FROM cum""".stripMargin
-  }
-
-  /** Shared PQ training CTEs (q159/q160): q147's two-iteration Lloyd
-    * CTE instantiated once per PQ subspace over the v[lo:hi] slice
-    * (same init-from-lowest-ids, same fixed-point distance rank, same
-    * 2^-20 integer update). Exposes per subspace `a1_s` (final codes +
-    * dm) and `c1_s` (final codebook). */
-  private def pqTrainCtes(m: Int, k: Int, dim: Int): String =
-    "WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v\n" +
-      "           FROM embeddings),\n" + pqSubCtes(m, k, dim, src = "e")
-
-  /** The m per-subspace Lloyd CTE chains (no WITH header) over any
-    * source CTE exposing (vec_id, v) — `src = "e"` for q159/q160's
-    * direct PQ, `src = "res"` for q162's residual PQ. */
-  private def pqSubCtes(m: Int, k: Int, dim: Int, src: String,
-                        trainPred: Option[String] = None,
-                        pfx: String = "",
-                        subsetInit: Boolean = false): String = {
-    require(dim % m == 0)
-    val sub = dim / m
-    val perSub = (0 until m).map { s0 =>
-      // `pfx` namespaces every CTE so two chains (e.g. the two
-      // directions of the bitext oracle) compose in one WITH;
-      // `subsetInit` switches the lowest-id codebook init from the
-      // dense-id shortcut (vec_id < k) to the general ORDER BY/LIMIT
-      // form a subset corpus needs (same set, order-isomorphic cids).
-      // Defaults emit byte-identical text to the pre-refactor
-      // generator (OracleConsistencySpec pins the shared fragments).
-      val s = pfx + s0
-      val lo = s0 * sub + 1; val hi = (s0 + 1) * sub
-      // see ivfPqAdcCtes: train over `et_N` when trainPred is set,
-      // final assignment (d1_N/a1_N) always over the full e_N
-      val tr = if (trainPred.isDefined) s"et_$s" else s"e_$s"
-      val etCte = trainPred
-        .map(p => s"et_$s AS (SELECT * FROM e_$s WHERE $p),\n").getOrElse("")
-      val init = if (subsetInit) s"ORDER BY vec_id LIMIT $k" else s"WHERE vec_id < $k"
-      s"""e_$s AS (SELECT vec_id, v[$lo:$hi] AS v FROM $src),
-         |${etCte}c0_$s AS (SELECT vec_id AS cid, v AS cv FROM $tr $init),
-         |d0_$s AS (SELECT $tr.vec_id, c0_$s.cid,
-         |         CAST(floor(list_sum(list_transform(list_zip($tr.v, c0_$s.cv),
-         |           p -> (p[1]-p[2])*(p[1]-p[2])))*1e6 + 0.5) AS BIGINT) AS dm
-         |       FROM $tr, c0_$s),
-         |a0_$s AS (SELECT vec_id, cid FROM (
-         |         SELECT vec_id, cid,
-         |           row_number() OVER (PARTITION BY vec_id ORDER BY dm, cid) rk
-         |         FROM d0_$s) t
-         |       WHERE rk = 1),
-         |ex_$s AS (SELECT vec_id,
-         |         unnest(list_transform(v, (x, i) -> {'dim': i, 'x': x}),
-         |                recursive := true)
-         |       FROM $tr),
-         |upd_$s AS (SELECT a0_$s.cid, ex_$s.dim,
-         |          sum(CAST(floor(ex_$s.x*1048576.0 + 0.5) AS BIGINT)) AS s,
-         |          count(*) AS n
-         |        FROM ex_$s JOIN a0_$s USING (vec_id) GROUP BY 1, 2),
-         |c1_$s AS (SELECT cid, list(s/(n*1048576.0) ORDER BY dim) AS cv
-         |       FROM upd_$s GROUP BY cid),
-         |d1_$s AS (SELECT e_$s.vec_id, c1_$s.cid,
-         |         CAST(floor(list_sum(list_transform(list_zip(e_$s.v, c1_$s.cv),
-         |           p -> (p[1]-p[2])*(p[1]-p[2])))*1e6 + 0.5) AS BIGINT) AS dm
-         |       FROM e_$s, c1_$s),
-         |a1_$s AS (SELECT vec_id, cid, dm FROM (
-         |         SELECT vec_id, cid, dm,
-         |           row_number() OVER (PARTITION BY vec_id ORDER BY dm, cid) rk
-         |         FROM d1_$s) t
-         |       WHERE rk = 1)""".stripMargin
-    }
-    perSub.mkString(",\n")
-  }
-
-  /** q159's oracle: the m final assignments joined back per vector. */
-  private def pqOracleSql(m: Int, k: Int, dim: Int): String = {
-    val joins = (1 until m).map(s => s"JOIN a1_$s USING (vec_id)").mkString(" ")
-    val codes = (0 until m).map(s =>
-      s"CAST(a1_$s.cid AS INTEGER) AS code_$s").mkString(", ")
-    val err = (0 until m).map(s => s"a1_$s.dm").mkString(" + ")
-    pqTrainCtes(m, k, dim) +
-      s"\nSELECT a1_0.vec_id, $codes, CAST($err AS BIGINT) AS err_micros" +
-      s"\nFROM a1_0 $joins"
-  }
-
-  /** q160's oracle: ADC search — per subspace the query slice is
-    * scored against each corpus vector's ASSIGNED centroid (a1_s join
-    * c1_s on cid), per-subspace floor'd micros summed, (adc, id)
-    * ranked per query. */
-  private def pqSearchOracleSql(m: Int, k: Int, dim: Int,
-                                nQueries: Int, topK: Int): String = {
-    val sub = dim / m
-    val scoreCtes = (0 until m).map { s =>
-      val lo = s * sub + 1; val hi = (s + 1) * sub
-      s"""s_$s AS (SELECT q.query_id, a1_$s.vec_id AS neighbor_id,
-         |    CAST(floor(list_sum(list_transform(list_zip(q.qv[$lo:$hi], c1_$s.cv),
-         |      p -> (p[1]-p[2])*(p[1]-p[2])))*1e6 + 0.5) AS BIGINT) AS dm
-         |  FROM a1_$s JOIN c1_$s USING (cid), q)""".stripMargin
-    }
-    val joins = (1 until m).map(s =>
-      s"JOIN s_$s USING (query_id, neighbor_id)").mkString(" ")
-    val adc = (0 until m).map(s => s"s_$s.dm").mkString(" + ")
-    pqTrainCtes(m, k, dim) +
-      s""",
-         |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < $nQueries),
-         |${scoreCtes.mkString(",\n")},
-         |adc AS (SELECT query_id, neighbor_id, CAST($adc AS BIGINT) AS adc_micros
-         |        FROM s_0 $joins
-         |        WHERE query_id <> neighbor_id)
-         |SELECT query_id, neighbor_id, adc_micros, CAST(rk AS INTEGER) AS rank
-         |FROM (SELECT *, row_number() OVER (
-         |        PARTITION BY query_id ORDER BY adc_micros, neighbor_id) rk
-         |      FROM adc) t
-         |WHERE rk <= $topK""".stripMargin
-  }
-
-  /** q181's oracle: q160's ADC chain as the system ranking, the exact
-    * L2 top-k as ground truth, left-joined into per-query recall@k and
-    * the reciprocal rank of the true NN (rk=1), coalesced to 0 on a
-    * miss — divisions mirror Ann.adcEval token for token. */
-  private def adcEvalOracleSql(m: Int, k: Int, dim: Int,
-                               nQueries: Int, topK: Int): String = {
-    val sub = dim / m
-    val scoreCtes = (0 until m).map { s =>
-      val lo = s * sub + 1; val hi = (s + 1) * sub
-      s"""s_$s AS (SELECT q.query_id, a1_$s.vec_id AS neighbor_id,
-         |    CAST(floor(list_sum(list_transform(list_zip(q.qv[$lo:$hi], c1_$s.cv),
-         |      p -> (p[1]-p[2])*(p[1]-p[2])))*1e6 + 0.5) AS BIGINT) AS dm
-         |  FROM a1_$s JOIN c1_$s USING (cid), q)""".stripMargin
-    }
-    val joins = (1 until m).map(s =>
-      s"JOIN s_$s USING (query_id, neighbor_id)").mkString(" ")
-    val adc = (0 until m).map(s => s"s_$s.dm").mkString(" + ")
-    pqTrainCtes(m, k, dim) +
-      s""",
-         |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < $nQueries),
-         |${scoreCtes.mkString(",\n")},
-         |adc AS (SELECT query_id, neighbor_id, CAST($adc AS BIGINT) AS adc_micros
-         |        FROM s_0 $joins
-         |        WHERE query_id <> neighbor_id),
-         |sys AS (SELECT query_id, neighbor_id, rk AS sys_rank
-         |        FROM (SELECT *, row_number() OVER (
-         |                PARTITION BY query_id ORDER BY adc_micros, neighbor_id) rk
-         |              FROM adc) t
-         |        WHERE rk <= $topK),
-         |em AS (SELECT q.query_id, e.vec_id AS neighbor_id,
-         |         CAST(floor(list_sum(list_transform(list_zip(q.qv, e.v),
-         |           p -> (p[1]-p[2])*(p[1]-p[2])))*1e6 + 0.5) AS BIGINT) AS em
-         |       FROM e, q WHERE q.query_id <> e.vec_id),
-         |tr AS (SELECT query_id, neighbor_id, rk FROM (
-         |         SELECT *, row_number() OVER (
-         |           PARTITION BY query_id ORDER BY em, neighbor_id) rk
-         |         FROM em) t
-         |       WHERE rk <= $topK),
-         |j AS (SELECT tr.query_id, tr.rk, sys.sys_rank
-         |      FROM tr LEFT JOIN sys USING (query_id, neighbor_id))
-         |SELECT query_id, CAST(count(sys_rank) AS BIGINT) AS n_hits,
-         |  floor((CAST(count(sys_rank) AS DOUBLE) / ${topK}e0)*1e6 + 0.5e0)/1e6
-         |    AS recall,
-         |  floor(coalesce(max(CASE WHEN rk = 1
-         |          THEN coalesce(1e0/sys_rank, 0e0) END), 0e0)*1e6 + 0.5e0)/1e6
-         |    AS rr
-         |FROM j GROUP BY 1""".stripMargin
-  }
-
-  /** q189's oracle: q160's ADC ranking (system 0) and q185's sign-bit
-    * Hamming ranking (system 1, sharing the `e` CTE), RRF-fused with
-    * snapped 1/(k0+rank) contributions folded in system order. */
-  private def rrfFusionOracleSql(m: Int, k: Int, dim: Int, nQueries: Int,
-                                 topK: Int, k0: Int): String = {
-    val sub = dim / m
-    val scoreCtes = (0 until m).map { s =>
-      val lo = s * sub + 1; val hi = (s + 1) * sub
-      s"""s_$s AS (SELECT q.query_id, a1_$s.vec_id AS neighbor_id,
-         |    CAST(floor(list_sum(list_transform(list_zip(q.qv[$lo:$hi], c1_$s.cv),
-         |      p -> (p[1]-p[2])*(p[1]-p[2])))*1e6 + 0.5) AS BIGINT) AS dm
-         |  FROM a1_$s JOIN c1_$s USING (cid), q)""".stripMargin
-    }
-    val joins = (1 until m).map(s =>
-      s"JOIN s_$s USING (query_id, neighbor_id)").mkString(" ")
-    val adc = (0 until m).map(s => s"s_$s.dm").mkString(" + ")
-    pqTrainCtes(m, k, dim) +
-      s""",
-         |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < $nQueries),
-         |${scoreCtes.mkString(",\n")},
-         |adc AS (SELECT query_id, neighbor_id, CAST($adc AS BIGINT) AS adc_micros
-         |        FROM s_0 $joins
-         |        WHERE query_id <> neighbor_id),
-         |sysa AS (SELECT query_id, neighbor_id, rk AS rank
-         |         FROM (SELECT *, row_number() OVER (
-         |                 PARTITION BY query_id ORDER BY adc_micros, neighbor_id) rk
-         |               FROM adc) t
-         |         WHERE rk <= $topK),
-         |hb AS (SELECT vec_id,
-         |    list_sum(list_transform(v[1:32],
-         |      (x, i) -> CASE WHEN x > 0 THEN 1::BIGINT << (i-1) ELSE 0::BIGINT END)) AS w1,
-         |    list_sum(list_transform(v[33:64],
-         |      (x, i) -> CASE WHEN x > 0 THEN 1::BIGINT << (i-1) ELSE 0::BIGINT END)) AS w2
-         |  FROM e),
-         |hq AS (SELECT vec_id AS query_id, w1 AS q1, w2 AS q2
-         |       FROM hb WHERE vec_id < $nQueries),
-         |hs AS (SELECT query_id, hb.vec_id AS neighbor_id,
-         |        CAST(bit_count(xor(q1, w1)) + bit_count(xor(q2, w2)) AS INTEGER)
-         |          AS hamming
-         |      FROM hb, hq WHERE query_id <> hb.vec_id),
-         |sysb AS (SELECT query_id, neighbor_id, rk AS rank
-         |         FROM (SELECT *, row_number() OVER (
-         |                 PARTITION BY query_id ORDER BY hamming, neighbor_id) rk
-         |               FROM hs) t
-         |         WHERE rk <= $topK),
-         |u AS (SELECT query_id, neighbor_id, 0 AS sys, rank FROM sysa
-         |      UNION ALL
-         |      SELECT query_id, neighbor_id, 1 AS sys, rank FROM sysb),
-         |cr AS (SELECT query_id, neighbor_id, sys,
-         |         floor(1e0/(${k0}e0 + CAST(rank AS DOUBLE))*1e6 + 0.5)/1e6
-         |           AS contrib
-         |       FROM u),
-         |sc AS (SELECT query_id, neighbor_id,
-         |         floor(list_reduce(list(contrib ORDER BY sys), (x, y) -> x + y)
-         |               *1e6 + 0.5)/1e6 AS rrf
-         |       FROM cr GROUP BY 1, 2)
-         |SELECT query_id, neighbor_id, rrf, CAST(rk AS INTEGER) AS rank
-         |FROM (SELECT *, row_number() OVER (
-         |        PARTITION BY query_id ORDER BY rrf DESC, neighbor_id) rk
-         |      FROM sc) t
-         |WHERE rk <= $topK""".stripMargin
-  }
-
-  /** q162's oracle: IVFADC — q147's full-dim Lloyd CTE verbatim as the
-    * coarse quantizer (c0..a1), residuals = v − final coarse centroid,
-    * the per-subspace Lloyd chains instantiated over `res`, then the
-    * probed-cell ADC: each query ranks the kc cells on its
-    * micros-floored distance, keeps `nprobe`, forms its per-cell
-    * residual, and scores ONLY vectors assigned to probed cells. */
-  private def ivfPqSearchOracleSql(kc: Int, m: Int, k: Int, dim: Int,
-                                   nQueries: Int, nprobe: Int,
-                                   topK: Int,
-                                   trainPred: Option[String] = None,
-                                   codePred: Option[String] = None): String =
-    ivfPqAdcCtes(kc, m, k, dim, nQueries, nprobe, trainPred, codePred) +
-      s"""
-         |SELECT query_id, neighbor_id, adc_micros, CAST(rk AS INTEGER) AS rank
-         |FROM (SELECT *, row_number() OVER (
-         |        PARTITION BY query_id ORDER BY adc_micros, neighbor_id) rk
-         |      FROM adc) t
-         |WHERE rk <= $topK""".stripMargin
-
-  /** The q208/q211 composed-ingest-audit oracle chain, parameterized
-    * by the reference-window predicate and the PSI alert threshold —
-    * ONE builder so the A/A control and the planted-drift twin cannot
-    * drift apart. */
-  private def ingestAuditOracleSql(isRefSql: String, thresholdMicros: Long): String =
-    s"""WITH q AS (
-       |  SELECT source, $isRefSql AS is_ref, lang = 'en' AS label,
-       |    CAST(round(round(0.4 * least(1.0, n_tokens / 100.0)
-       |        + 0.4 * (1.0 - punct_ratio)
-       |        + 0.2 * (1.0 - abs(stop_ratio - 0.4)), 6) * 1e6) AS BIGINT) AS s
-       |  FROM (
-       |    SELECT doc_id, source, lang, len(toks) AS n_tokens,
-       |      (length(text) - length(regexp_replace(text, '[^a-z0-9 ]', '', 'g'))) / length(text) AS punct_ratio,
-       |      CAST(len(list_filter(toks, x -> x IN ('the','a','of','and','to','in','is','it'))) AS BIGINT) / len(toks) AS stop_ratio
-       |    FROM (SELECT doc_id, source, lang, text, string_split_regex(trim(text), '\\s+') AS toks FROM documents))),
-       |hist AS (
-       |  SELECT source, s, CAST(count(*) AS BIGINT) AS n,
-       |    CAST(sum(CASE WHEN label THEN 1 ELSE 0 END) AS BIGINT) AS p,
-       |    CAST(sum(CASE WHEN is_ref THEN 1 ELSE 0 END) AS BIGINT) AS r
-       |  FROM q GROUP BY 1, 2),
-       |cdf AS (
-       |  SELECT *, CAST(sum(n) OVER (PARTITION BY source ORDER BY s) AS BIGINT) AS cum,
-       |    least(CAST(9 AS BIGINT), (s * 10) // 1000000) AS bin
-       |  FROM hist),
-       |tot AS (
-       |  SELECT source,
-       |    CAST(sum(n) AS BIGINT) AS nn,
-       |    CAST(sum(p) AS BIGINT) AS n_pos,
-       |    CAST(sum(p * (2 * cum - n + 1)) AS BIGINT) AS r2_pos,
-       |    CAST(sum(r) AS BIGINT) AS nref,
-       |    CAST(sum(n - r) AS BIGINT) AS ncur
-       |  FROM cdf GROUP BY 1),
-       |g AS (
-       |  SELECT source, bin, CAST(sum(n) AS BIGINT) AS bn,
-       |    CAST(sum(p) AS BIGINT) AS bp,
-       |    CAST(sum(s * n) AS BIGINT) AS bconf,
-       |    CAST(sum(r) AS BIGINT) AS bref,
-       |    CAST(sum(n - r) AS BIGINT) AS bcur
-       |  FROM cdf GROUP BY 1, 2),
-       |bt AS (
-       |  SELECT source, bn,
-       |    abs(bp * 1000000 // bn - bconf // bn) AS gap,
-       |    CASE WHEN bref > 0 AND bcur > 0 THEN CAST(floor(
-       |        (CAST(bcur AS DOUBLE) / CAST(ncur AS DOUBLE)
-       |          - CAST(bref AS DOUBLE) / CAST(nref AS DOUBLE))
-       |        * ln((CAST(bcur AS DOUBLE) * CAST(nref AS DOUBLE))
-       |              / (CAST(bref AS DOUBLE) * CAST(ncur AS DOUBLE)))
-       |        * 1e6 + 0.5) AS BIGINT) END AS term
-       |  FROM g JOIN tot USING (source)),
-       |ag AS (
-       |  SELECT source, CAST(sum(bn * gap) AS BIGINT) AS gapw,
-       |    CAST(sum(term) AS BIGINT) AS psi
-       |  FROM bt GROUP BY 1)
-       |SELECT source, nn AS n, n_pos, nn - n_pos AS n_neg,
-       |  r2_pos - n_pos * (n_pos + 1) AS u2,
-       |  CASE WHEN n_pos > 0 AND nn - n_pos > 0 THEN
-       |    (r2_pos - n_pos * (n_pos + 1)) * 1000000 // (2 * n_pos * (nn - n_pos))
-       |  END AS auc_micros,
-       |  gapw // nn AS ece_micros,
-       |  COALESCE(psi, 0) AS psi_total_micros,
-       |  COALESCE(psi, 0) >= $thresholdMicros AS drifted
-       |FROM tot JOIN ag USING (source)""".stripMargin
-
-  /** q200's oracle, shared verbatim by its streaming twin q205 (the
-    * q190/q196 convention: batch-identical single-micro-batch runs
-    * ride the batch oracle). The A/A split (even/odd event_id), the
-    * fixed-order transcendental term and the micros snap mirror
-    * `Drift.psiFromCounts` token for token. */
-  /** The q100 admission-chain CTE block (corpus ∪ surviving batch docs
-    * after quality floor → within-batch exact dedup → against-corpus
-    * anti-join → decontamination), shared verbatim by the q100 replay
-    * and q212's JSONL-fed E2E so the two oracles cannot drift. Ends at
-    * the `clean` CTE; callers add their own final SELECT. */
-  private val corpusIngestChainSql: String =
-    """corpus AS (
-      |  SELECT doc_id, text, lang, source, n_chars FROM documents WHERE doc_id % 3 = 0),
-      |batch AS (
-      |  SELECT doc_id, text, lang, source, n_chars FROM documents WHERE doc_id % 3 <> 0),
-      |bench AS (SELECT doc_id, text FROM documents WHERE doc_id % 97 = 0),
-      |quality AS (
-      |  SELECT * FROM batch WHERE len(string_split_regex(trim(text), '\s+')) >= 30),
-      |fp AS (
-      |  SELECT *, md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS f FROM quality),
-      |dedup AS (
-      |  SELECT * FROM (SELECT *, min(doc_id) OVER (PARTITION BY f) AS canon FROM fp)
-      |  WHERE doc_id = canon),
-      |corpusfp AS (
-      |  SELECT DISTINCT md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS f
-      |  FROM corpus),
-      |fresh AS (
-      |  SELECT d.doc_id, d.text, d.lang, d.source, d.n_chars FROM dedup d
-      |  WHERE NOT EXISTS (SELECT 1 FROM corpusfp c WHERE c.f = d.f)),
-      |fsh AS (
-      |  SELECT doc_id,
-      |    CASE WHEN len(toks) <= 3 THEN [array_to_string(toks, ' ')]
-      |         ELSE list_transform(range(1, len(toks) - 3 + 2),
-      |                i -> array_to_string(toks[i:i+2], ' ')) END AS shingles
-      |  FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM fresh)),
-      |bsh AS (
-      |  SELECT DISTINCT unnest(
-      |    CASE WHEN len(toks) <= 3 THEN [array_to_string(toks, ' ')]
-      |         ELSE list_transform(range(1, len(toks) - 3 + 2),
-      |                i -> array_to_string(toks[i:i+2], ' ')) END) AS shingle
-      |  FROM (SELECT string_split_regex(trim(text), '\s+') AS toks FROM bench)),
-      |contaminated AS (
-      |  SELECT DISTINCT t.doc_id
-      |  FROM (SELECT doc_id, unnest(shingles) AS shingle FROM fsh) t
-      |  JOIN bsh USING (shingle)),
-      |clean AS (
-      |  SELECT doc_id, text, lang, source, n_chars FROM fresh
-      |  WHERE doc_id NOT IN (SELECT doc_id FROM contaminated))""".stripMargin
-
-  /** The q232–q235 pretraining-release gate chain — floor → min-id
-    * dedup → 5-gram decontamination → α=0.5 temperature mixture →
-    * release ids — ONE builder shared by the shard export, the
-    * doc-span sidecar, the data card and the delta drop so none can
-    * drift (the corpusIngestChainSql convention). Fragments replay
-    * q100's fingerprint/dedup text, q81's shingle shape (n=5) and
-    * q165's mixture CTEs; OracleConsistencySpec pins each lockstep.
-    * `relPred` selects the candidate corpus (q235 releases only the
-    * %3≡0 slice first, then drops the rest incrementally). */
-  private def pretrainReleaseChainSql(
-      relPred: String = "doc_id % 97 <> 0"): String =
-    s"""rel_docs AS (
-      |  SELECT doc_id, text, lang FROM documents WHERE $relPred),
-      |bench AS (SELECT doc_id, text FROM documents WHERE doc_id % 97 = 0),
-      |quality AS (
-      |  SELECT * FROM rel_docs WHERE len(string_split_regex(trim(text), '\\s+')) >= 30),
-      |fp AS (
-      |  SELECT *, md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS f FROM quality),
-      |dedup AS (
-      |  SELECT * FROM (SELECT *, min(doc_id) OVER (PARTITION BY f) AS canon FROM fp)
-      |  WHERE doc_id = canon),
-      |fsh AS (
-      |  SELECT doc_id,
-      |    CASE WHEN len(toks) <= 5 THEN [array_to_string(toks, ' ')]
-      |         ELSE list_transform(range(1, len(toks) - 5 + 2),
-      |                i -> array_to_string(toks[i:i+4], ' ')) END AS shingles
-      |  FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks FROM dedup)),
-      |bsh AS (
-      |  SELECT DISTINCT unnest(
-      |    CASE WHEN len(toks) <= 5 THEN [array_to_string(toks, ' ')]
-      |         ELSE list_transform(range(1, len(toks) - 5 + 2),
-      |                i -> array_to_string(toks[i:i+4], ' ')) END) AS shingle
-      |  FROM (SELECT string_split_regex(trim(text), '\\s+') AS toks FROM bench)),
-      |contaminated AS (
-      |  SELECT DISTINCT t.doc_id
-      |  FROM (SELECT doc_id, unnest(shingles) AS shingle FROM fsh) t
-      |  JOIN bsh USING (shingle)),
-      |clean AS (
-      |  SELECT doc_id, text, lang FROM dedup
-      |  WHERE doc_id NOT IN (SELECT doc_id FROM contaminated)),
-      |g AS (SELECT lang, count(*) AS n FROM clean GROUP BY 1),
-      |ga AS (SELECT lang, n, sqrt(CAST(n AS DOUBLE)) AS a FROM g),
-      |tot AS (SELECT sum(n) AS nn,
-      |          sum(CAST(floor(a*1048576.0 + 0.5) AS BIGINT)) AS s FROM ga),
-      |wd AS (SELECT d.doc_id, d.text,
-      |         (CAST(tot.nn AS DOUBLE) * ga.a * 1048576.0)
-      |           / (CAST(ga.n AS DOUBLE) * CAST(tot.s AS DOUBLE)) AS w
-      |       FROM clean d JOIN ga ON d.lang = ga.lang, tot),
-      |c AS (SELECT doc_id, text,
-      |        CAST(floor(w) AS INTEGER) +
-      |          CASE WHEN CAST(CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':mix'), 1, 8)) AS BIGINT) AS DOUBLE)
-      |                 / CAST(4294967296 AS DOUBLE) < w - floor(w)
-      |               THEN 1 ELSE 0 END AS n_copies
-      |      FROM wd),
-      |cc AS (SELECT doc_id, text,
-      |         CAST(unnest(range(1, n_copies + 1)) AS BIGINT) AS copy_no
-      |       FROM c WHERE n_copies >= 1),
-      |release AS (
-      |  SELECT doc_id * 16 + copy_no - 1 AS release_id, text FROM cc)""".stripMargin
-
-  /** The q187 incremental-dedup labeling chain, shared verbatim with
-    * q217 (the same admission semantics fed from JSONL shards — one
-    * builder, the twins cannot drift). */
-  private val ingestDedupStreamOracleSql: String =
-    """WITH basefp AS (
-      |  SELECT DISTINCT md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))
-      |    AS fingerprint
-      |  FROM documents WHERE doc_id % 3 <> 0),
-      |delta AS (
-      |  SELECT doc_id,
-      |    md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS fingerprint,
-      |    min(doc_id) OVER (
-      |      PARTITION BY md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')))
-      |      AS first_id
-      |  FROM documents WHERE doc_id % 3 = 0)
-      |SELECT d.doc_id, d.fingerprint,
-      |  CASE WHEN b.fingerprint IS NOT NULL THEN 'dup_of_base'
-      |       WHEN d.first_id <> d.doc_id THEN 'dup_in_delta'
-      |       ELSE 'new' END AS status
-      |FROM delta d LEFT JOIN basefp b ON d.fingerprint = b.fingerprint""".stripMargin
-
-  private val DriftPsiOracleSql: String =
-    """WITH c AS (
-      |  SELECT event_type,
-      |    CAST(sum(CASE WHEN event_id % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS c_ref,
-      |    CAST(sum(CASE WHEN event_id % 2 = 0 THEN 0 ELSE 1 END) AS BIGINT) AS c_cur
-      |  FROM events GROUP BY 1),
-      |w AS (
-      |  SELECT *, CAST(sum(c_ref) OVER () AS BIGINT) AS n_ref,
-      |    CAST(sum(c_cur) OVER () AS BIGINT) AS n_cur FROM c),
-      |t AS (
-      |  SELECT *, CASE WHEN c_ref > 0 AND c_cur > 0 THEN CAST(floor(
-      |      (CAST(c_cur AS DOUBLE) / CAST(n_cur AS DOUBLE)
-      |        - CAST(c_ref AS DOUBLE) / CAST(n_ref AS DOUBLE))
-      |      * ln((CAST(c_cur AS DOUBLE) * CAST(n_ref AS DOUBLE))
-      |            / (CAST(c_ref AS DOUBLE) * CAST(n_cur AS DOUBLE)))
-      |      * 1e6 + 0.5) AS BIGINT) END AS term_micros FROM w)
-      |SELECT event_type, c_ref, c_cur, term_micros,
-      |  COALESCE(CAST(sum(term_micros) OVER () AS BIGINT), 0) AS psi_total_micros,
-      |  COALESCE(CAST(sum(term_micros) OVER () AS BIGINT), 0) >= 200000 AS drifted
-      |FROM t""".stripMargin
-
-  /** q203's oracle: BOTH directional bounded-probe searches of the
-    * approximate bitext miner, each a full [[ivfPqAdcCtes]] two-level
-    * quantizer chain (prefixes `f`/`b`) trained on its own label-split
-    * corpus with the OTHER side as queries, ADC-shortlisted to
-    * `shortlist`, re-ranked by the exact cosine off the RAW float
-    * embeddings (q176's cosine text, same round/tie order as
-    * `Ann.ivfPqCosineTopK`), then q176's margin tail verbatim over
-    * the two approximate top-`k` lists. */
-  /** q219's shard-stream replay, shared VERBATIM with its byte-free
-    * twin q238: the stream is replayed arithmetically (gpos computed
-    * from cumulative doc costs, never from row order), cut at the
-    * complete-sequence boundary, and reduced per shard to count / sum
-    * / position-weighted polynomial mod 1e9+7. */
-  private val tokenShardsStreamOracleSql: String =
-    """WITH ids AS (
-      |  SELECT doc_id,
-      |    list_append(
-      |      list_transform(
-      |        CASE WHEN length(trim(text)) = 0 THEN []
-      |             ELSE string_split_regex(trim(text), '\s+') END,
-      |        t -> CAST(('0x' || substr(md5(t), 1, 8)) AS BIGINT) % 4096),
-      |      4096) AS ids
-      |  FROM documents),
-      |offs AS (
-      |  SELECT doc_id, ids,
-      |    coalesce(sum(len(ids)) OVER (ORDER BY doc_id
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS doc_off,
-      |    sum(len(ids)) OVER () AS total
-      |  FROM ids),
-      |toks AS (
-      |  SELECT doc_off + i AS gpos, ids[i + 1] AS tid, total
-      |  FROM (SELECT doc_off, ids, total, unnest(range(len(ids))) AS i
-      |        FROM offs) t),
-      |sh AS (
-      |  SELECT CAST((gpos // 64) // 16 AS BIGINT) AS shard_id, gpos, tid
-      |  FROM toks WHERE gpos < (total // 64) * 64),
-      |st AS (
-      |  SELECT shard_id, tid,
-      |    row_number() OVER (PARTITION BY shard_id ORDER BY gpos) AS rn
-      |  FROM sh)
-      |SELECT shard_id, CAST(count(*) // 64 AS BIGINT) AS n_seqs,
-      |  CAST(count(*) AS BIGINT) AS n_tokens,
-      |  CAST(sum(tid) AS BIGINT) AS token_sum,
-      |  CAST(CAST(sum(rn * (tid + 1)) AS HUGEINT) % 1000000007 AS BIGINT)
-      |    AS poly_mod,
-      |  true AS manifest_match
-      |FROM st GROUP BY 1""".stripMargin
-
-  private def bitextApproxOracleSql(kc: Int, m: Int, pqK: Int, dim: Int,
-                                    nprobe: Int, shortlist: Int, k: Int,
-                                    minMargin: String): String = {
-    val fwd = ivfPqAdcCtes(kc, m, pqK, dim, nQueries = 0, nprobe = nprobe,
-      pfx = "f", corpusPred = Some("label >= 5"), queryPred = Some("label < 5"))
-    val bwd = ivfPqAdcCtes(kc, m, pqK, dim, nQueries = 0, nprobe = nprobe,
-      pfx = "b", corpusPred = Some("label < 5"), queryPred = Some("label >= 5"))
-    // exact cosine of the raw float embeddings, q176's token order:
-    // dot / (sqrt(||q||²) · sqrt(||c||²)), each element widened
-    def cosine(qv: String, cv: String) =
-      s"""round(
-         |     list_sum(list_transform(list_zip($qv, $cv), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-         |     / (sqrt(list_sum(list_transform($qv, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-         |      * sqrt(list_sum(list_transform($cv, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 6)""".stripMargin
-    def rerank(p: String, qRaw: String, cRaw: String) =
-      s"""${p}short AS (SELECT query_id, neighbor_id
-         |  FROM (SELECT *, row_number() OVER (
-         |          PARTITION BY query_id ORDER BY adc_micros, neighbor_id) rk
-         |        FROM ${p}adc) t
-         |  WHERE rk <= $shortlist),
-         |${p}cos AS (SELECT s.query_id, s.neighbor_id,
-         |    ${cosine("qr.embedding", "cr.embedding")} AS cosine
-         |  FROM ${p}short s JOIN $qRaw qr ON qr.vec_id = s.query_id
-         |    JOIN $cRaw cr ON cr.vec_id = s.neighbor_id),
-         |${p}top AS (SELECT query_id, neighbor_id, cosine,
-         |    CAST(floor(cosine * 1e6 + 0.5e0) AS BIGINT) AS cm
-         |  FROM (SELECT *, row_number() OVER (
-         |          PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) rk
-         |        FROM ${p}cos) t
-         |  WHERE rk <= $k)""".stripMargin
-    fwd + ",\n" + bwd.stripPrefix("WITH ") + ",\n" +
-      s"""rsrc AS (SELECT vec_id, embedding FROM embeddings WHERE label < 5),
-         |rtgt AS (SELECT vec_id, embedding FROM embeddings WHERE label >= 5),
-         |${rerank("f", "rsrc", "rtgt")},
-         |${rerank("b", "rtgt", "rsrc")},
-         |fnb AS (SELECT query_id AS sid, CAST(sum(cm) AS BIGINT) AS f_sum
-         |        FROM ftop GROUP BY 1),
-         |bnb AS (SELECT query_id AS tid, CAST(sum(cm) AS BIGINT) AS b_sum
-         |        FROM btop GROUP BY 1),
-         |mg AS (SELECT f.query_id AS sid, f.neighbor_id AS tid, f.cosine,
-         |         floor((CAST(f.cm AS DOUBLE) * ${2.0 * k}e0)
-         |               / CAST(fnb.f_sum + bnb.b_sum AS DOUBLE) * 1e6 + 0.5e0)/1e6
-         |           AS margin
-         |       FROM ftop f JOIN fnb ON f.query_id = fnb.sid
-         |         JOIN bnb ON f.neighbor_id = bnb.tid)
-         |SELECT sid AS src_id, tid AS tgt_id, cosine, margin
-         |FROM (SELECT *, row_number() OVER (PARTITION BY sid
-         |        ORDER BY margin DESC, tid) AS rk2 FROM mg)
-         |WHERE rk2 = 1 AND margin >= $minMargin""".stripMargin
-  }
-
-  /** q164's oracle: the q162 ADC CTEs select an `shortlist`-deep
-    * candidate set per query; the finalists alone are re-scored with
-    * the EXACT full-vector distance and re-ranked. */
-  private def ivfPqRerankOracleSql(kc: Int, m: Int, k: Int, dim: Int,
-                                   nQueries: Int, nprobe: Int,
-                                   shortlist: Int, topK: Int): String =
-    ivfPqAdcCtes(kc, m, k, dim, nQueries, nprobe) +
-      s""",
-         |short AS (SELECT query_id, neighbor_id
-         |          FROM (SELECT *, row_number() OVER (
-         |                  PARTITION BY query_id ORDER BY adc_micros, neighbor_id) rk
-         |                FROM adc) t
-         |          WHERE rk <= $shortlist),
-         |rr AS (SELECT short.query_id, short.neighbor_id,
-         |         CAST(floor(list_sum(list_transform(list_zip(q.qv, e.v),
-         |           p -> (p[1]-p[2])*(p[1]-p[2])))*1e6 + 0.5) AS BIGINT)
-         |           AS exact_micros
-         |       FROM short JOIN e ON e.vec_id = short.neighbor_id
-         |         JOIN q ON q.query_id = short.query_id)
-         |SELECT query_id, neighbor_id, exact_micros, CAST(rk AS INTEGER) AS rank
-         |FROM (SELECT *, row_number() OVER (
-         |        PARTITION BY query_id ORDER BY exact_micros, neighbor_id) rk
-         |      FROM rr) t
-         |WHERE rk <= $topK""".stripMargin
-
-  /** Shared q162/q164 CTE chain: coarse Lloyd → residuals →
-    * per-subspace PQ → probe → per-subspace ADC scores → `adc`. */
-  private def ivfPqAdcCtes(kc: Int, m: Int, k: Int, dim: Int,
-                           nQueries: Int, nprobe: Int,
-                           trainPred: Option[String] = None,
-                           codePred: Option[String] = None,
-                           pfx: String = "",
-                           corpusPred: Option[String] = None,
-                           queryPred: Option[String] = None): String = {
-    val sub = dim / m
-    // q203's bitext variant: `pfx` namespaces EVERY CTE so two whole
-    // chains (the forward and backward search directions, each with
-    // its own corpus/query split of the embeddings table) compose in
-    // one WITH; `corpusPred` restricts the indexed corpus (switching
-    // the lowest-id inits to the general ORDER BY/LIMIT form, since a
-    // subset's lowest ids are no longer 0..k-1); `queryPred` draws the
-    // query set from its own embeddings predicate instead of the dense
-    // vec_id < nQueries shortcut. All defaults emit byte-identical
-    // text to the pre-refactor generator (OracleConsistencySpec pins
-    // the shared fragments).
-    val P = pfx
-    // q192's append variant: the quantizer levels TRAIN over the base
-    // rows only (`et`), while the final assignment/coding chains
-    // (d1/a1/res and the per-subspace d1_s/a1_s) stay over the full
-    // corpus — exactly what build-on-base + frozen-state delta coding
-    // produces. With trainPred = None the emitted text is byte-
-    // identical to the shared q162/q164/q169 chain
-    // (OracleConsistencySpec pins that stability).
-    val tr = if (trainPred.isDefined) s"${P}et" else s"${P}e"
-    val etCte = trainPred
-      .map(p => s"${P}et AS (SELECT * FROM ${P}e WHERE $p),\n").getOrElse("")
-    // q197's delete variant: the state is trained and the corpus coded
-    // in full; deletion only removes candidates from the searched set,
-    // so the oracle is ONE extra predicate on the scored neighbors
-    // (None emits the byte-identical shared chain).
-    val codeFilter = codePred.map(p => s" AND $p").getOrElse("")
-    val coarseInit =
-      if (corpusPred.isDefined) s"ORDER BY vec_id LIMIT $kc"
-      else s"WHERE vec_id < $kc"
-    val coarse =
-      s"""${etCte}${P}c0 AS (SELECT vec_id AS cid, v AS cv FROM $tr $coarseInit),
-         |${P}d0 AS (SELECT $tr.vec_id, ${P}c0.cid,
-         |         CAST(floor(list_sum(list_transform(list_zip($tr.v, ${P}c0.cv),
-         |           p -> (p[1]-p[2])*(p[1]-p[2])))*1e6 + 0.5) AS BIGINT) AS dm
-         |       FROM $tr, ${P}c0),
-         |${P}a0 AS (SELECT vec_id, cid FROM (
-         |         SELECT vec_id, cid,
-         |           row_number() OVER (PARTITION BY vec_id ORDER BY dm, cid) rk
-         |         FROM ${P}d0) t
-         |       WHERE rk = 1),
-         |${P}ex AS (SELECT vec_id,
-         |         unnest(list_transform(v, (x, i) -> {'dim': i, 'x': x}),
-         |                recursive := true)
-         |       FROM $tr),
-         |${P}upd AS (SELECT ${P}a0.cid, ${P}ex.dim,
-         |          sum(CAST(floor(${P}ex.x*1048576.0 + 0.5) AS BIGINT)) AS s,
-         |          count(*) AS n
-         |        FROM ${P}ex JOIN ${P}a0 USING (vec_id) GROUP BY 1, 2),
-         |${P}c1 AS (SELECT cid, list(s/(n*1048576.0) ORDER BY dim) AS cv
-         |       FROM ${P}upd GROUP BY cid),
-         |${P}d1 AS (SELECT ${P}e.vec_id, ${P}c1.cid,
-         |         CAST(floor(list_sum(list_transform(list_zip(${P}e.v, ${P}c1.cv),
-         |           p -> (p[1]-p[2])*(p[1]-p[2])))*1e6 + 0.5) AS BIGINT) AS dm
-         |       FROM ${P}e, ${P}c1),
-         |${P}a1 AS (SELECT vec_id, cid, dm FROM (
-         |         SELECT vec_id, cid, dm,
-         |           row_number() OVER (PARTITION BY vec_id ORDER BY dm, cid) rk
-         |         FROM ${P}d1) t
-         |       WHERE rk = 1),
-         |${P}res AS (SELECT ${P}e.vec_id, ${P}a1.cid AS gcell,
-         |          list_transform(list_zip(${P}e.v, ${P}c1.cv), p -> p[1]-p[2]) AS v
-         |        FROM ${P}e JOIN ${P}a1 USING (vec_id) JOIN ${P}c1 ON ${P}a1.cid = ${P}c1.cid)""".stripMargin
-    val scoreCtes = (0 until m).map { s =>
-      val lo = s * sub + 1; val hi = (s + 1) * sub
-      s"""${P}s_$s AS (SELECT ${P}probe.query_id, ${P}res.vec_id AS neighbor_id,
-         |    CAST(floor(list_sum(list_transform(list_zip(${P}probe.qr[$lo:$hi], c1_$P$s.cv),
-         |      p -> (p[1]-p[2])*(p[1]-p[2])))*1e6 + 0.5) AS BIGINT) AS dm
-         |  FROM ${P}probe JOIN ${P}res ON ${P}probe.gcell = ${P}res.gcell
-         |    JOIN a1_$P$s ON a1_$P$s.vec_id = ${P}res.vec_id
-         |    JOIN c1_$P$s ON c1_$P$s.cid = a1_$P$s.cid)""".stripMargin
-    }
-    val joins = (1 until m).map(s =>
-      s"JOIN ${P}s_$s USING (query_id, neighbor_id)").mkString(" ")
-    val adc = (0 until m).map(s => s"${P}s_$s.dm").mkString(" + ")
-    val corpusWhere = corpusPred.map(p => s" WHERE $p").getOrElse("")
-    val qCte = queryPred match {
-      case None =>
-        s"${P}q AS (SELECT vec_id AS query_id, v AS qv FROM ${P}e WHERE vec_id < $nQueries),"
-      case Some(qp) =>
-        s"""${P}qe AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           |           FROM embeddings WHERE $qp),
-           |${P}q AS (SELECT vec_id AS query_id, v AS qv FROM ${P}qe),""".stripMargin
-    }
-    s"WITH ${P}e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v\n" +
-      s"           FROM embeddings$corpusWhere),\n" + coarse + ",\n" +
-      pqSubCtes(m, k, dim, src = s"${P}res", trainPred = trainPred,
-        pfx = P, subsetInit = corpusPred.isDefined) +
-      s""",
-         |$qCte
-         |${P}qd AS (SELECT ${P}q.query_id, ${P}q.qv, ${P}c1.cid AS gcell, ${P}c1.cv AS gcv,
-         |         CAST(floor(list_sum(list_transform(list_zip(${P}q.qv, ${P}c1.cv),
-         |           p -> (p[1]-p[2])*(p[1]-p[2])))*1e6 + 0.5) AS BIGINT) AS gdm
-         |       FROM ${P}q, ${P}c1),
-         |${P}probe AS (SELECT query_id, gcell,
-         |            list_transform(list_zip(qv, gcv), p -> p[1]-p[2]) AS qr
-         |          FROM (SELECT *, row_number() OVER (
-         |                  PARTITION BY query_id ORDER BY gdm, gcell) rk
-         |                FROM ${P}qd) t
-         |          WHERE rk <= $nprobe),
-         |${scoreCtes.mkString(",\n")},
-         |${P}adc AS (SELECT query_id, neighbor_id, CAST($adc AS BIGINT) AS adc_micros
-         |        FROM ${P}s_0 $joins
-         |        WHERE query_id <> neighbor_id$codeFilter)""".stripMargin
-  }
-
-  /** q45/q106 lockstep md5-MinHash tuning: k signature components in
-    * `bands` bands at Jaccard threshold tau (micros). BOTH the engine
-    * call sites and the oracle-SQL interpolations (the
-    * [[md5SigCtes]] digest-group/band structure, the agreement floor
-    * via `Dedup.md5AgreeMin`) read these — retuning one side cannot
-    * silently desync the other. */
-  private[graft] val Md5MinhashK = 16
-  private[graft] val Md5MinhashBands = 2
-  private[graft] val Md5MinhashTauMicros = 950000L
-  private def md5MinhashAgreeMin: Long =
-    graft.dedup.Dedup.md5AgreeMin(Md5MinhashK, Md5MinhashTauMicros)
-
-  /** Shared md5-MinHash oracle fragments (q44/q45/q106 — the round-17
-    * upgrade of the signature family to hash-exact oracles via the
-    * q202 md5-arithmetic technique; OracleConsistencySpec pins the
-    * consumers stay in lockstep): whitespace tokens of non-blank docs
-    * (blank docs carry no signature, the engine contract), the
-    * 16-permutation md5-slice hash table (permutation i = hex digits
-    * 8·(i%4)+1..+8 of md5(u || ':' || i/4) — `Dedup.md5Slice`),
-    * per-doc minima, and the 2-band × 8-minima band-key strings. */
-  private def md5SigCtes: String =
-    s"""docs AS (
-       |  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks FROM documents
-       |  WHERE length(trim(text)) > 0),
-       |tok AS (SELECT DISTINCT doc_id, unnest(toks) AS u FROM docs),
-       |hx AS (SELECT doc_id, u, g * 4 + j AS i,
-       |    CAST(('0x' || substr(md5(u || ':' || g), 1 + 8 * j, 8)) AS BIGINT) AS h
-       |  FROM tok CROSS JOIN range(${Md5MinhashK / 4}) rg(g) CROSS JOIN range(4) rj(j)),
-       |sig AS (SELECT doc_id, i, min(h) AS mh FROM hx GROUP BY 1, 2),
-       |bands AS (
-       |  SELECT doc_id, CAST(i // ${Md5MinhashK / Md5MinhashBands} AS VARCHAR) || '|' ||
-       |    string_agg(CAST(mh AS VARCHAR), '|' ORDER BY i) AS band
-       |  FROM sig GROUP BY doc_id, i // ${Md5MinhashK / Md5MinhashBands})""".stripMargin
-
-  /** Shared md5 32-bit SimHash oracle fragment (q44/q47 lockstep):
-    * token-hash bit planes from the first 8 md5 hex digits, bit b set
-    * when the multiset has more b-bits set than clear; token-less docs
-    * resolve to signature 0 via the left join in the consumer. */
-  private def md5SimhashCtes: String =
-    """sdocs AS (
-      |  SELECT doc_id, CASE WHEN length(trim(text)) = 0 THEN []
-      |    ELSE string_split_regex(trim(text), '\s+') END AS toks FROM documents),
-      |th AS (SELECT doc_id, CAST(('0x' || substr(md5(u), 1, 8)) AS BIGINT) AS h
-      |  FROM (SELECT doc_id, unnest(toks) AS u FROM sdocs)),
-      |bits AS (SELECT doc_id, b,
-      |    sum(CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END) AS s
-      |  FROM th CROSS JOIN range(32) rb(b) GROUP BY 1, 2),
-      |sig0 AS (SELECT doc_id,
-      |    CAST(sum(CASE WHEN s > 0 THEN 1::BIGINT << b ELSE 0 END) AS BIGINT) AS sig
-      |  FROM bits GROUP BY 1)""".stripMargin
-
-  /** Shared md5 robust-winnowing pick-set fragment (q38/q105
-    * lockstep) — the declarative lag/lead replay of
-    * `Dedup.winnowSelectedMd5`'s native per-doc window kernel: gram
-    * hash = first 8 md5 hex digits of the k-codepoint substring
-    * (DuckDB substring counts codepoints, as does the kernel); a
-    * position is selected iff it is the rightmost minimum of at least
-    * one length-t window. */
-  private def winnowSelCtes(k: Int, t: Int): String = {
-    val lags = (1 until t).map(j => s"lag(h, $j) OVER win AS l$j").mkString(", ")
-    val leads = (1 until t).map(j => s"lead(h, $j) OVER win AS d$j").mkString(", ")
-    def beforeOk(j1: Int) =
-      if (j1 == 0) "TRUE"
-      else (1 to j1).map(j => s"l$j >= h").mkString("(", " AND ", ")")
-    def afterOk(j2: Int) =
-      if (j2 == 0) "TRUE"
-      else (1 to j2).map(j => s"d$j > h").mkString("(", " AND ", ")")
-    val allBefore = (1 until t).map(j => s"(l$j IS NULL OR l$j >= h)").mkString(" AND ")
-    val allAfter = (1 until t).map(j => s"(d$j IS NULL OR d$j > h)").mkString(" AND ")
-    val anyWin = (0 until t).map { j1 =>
-      s"($j1 <= p - 1 AND $j1 >= p - n + ${t - 1} AND ${beforeOk(j1)} AND ${afterOk(t - 1 - j1)})"
-    }.mkString("(", " OR ", ")")
-    s"""g AS (
-       |  SELECT doc_id, CAST(i AS BIGINT) AS p,
-       |    CAST(len(text) - ${k - 1} AS BIGINT) AS n,
-       |    CAST(('0x' || substr(md5(substring(text, i, $k)), 1, 8)) AS BIGINT) AS h
-       |  FROM documents, unnest(range(1, len(text) - $k + 2)) AS r(i)
-       |  WHERE len(text) >= $k),
-       |wn AS (SELECT doc_id, p, n, h, $lags, $leads
-       |  FROM g WINDOW win AS (PARTITION BY doc_id ORDER BY p)),
-       |sel AS (SELECT doc_id, p, h FROM wn
-       |  WHERE CASE WHEN n < $t THEN ($allBefore AND $allAfter) ELSE $anyWin END)""".stripMargin
-  }
-
-  /** Shared connected-components closure fragment (q45/q47/q105
-    * lockstep): min-reachable over the undirected `edges` (id_a, id_b)
-    * graph via a recursive CTE — the SQL replay of
-    * `graft.graph.ConnectedComponents.run`. Consumers must open the
-    * oracle with WITH RECURSIVE and define `edges`. */
-  private def ccCtes: String =
-    """und AS (SELECT id_a AS a, id_b AS b FROM edges
-      |  UNION SELECT id_b, id_a FROM edges),
-      |cnodes AS (SELECT DISTINCT a AS node FROM und),
-      |reach AS (SELECT node, node AS m FROM cnodes
-      |  UNION SELECT u2.a, r.m FROM und u2 JOIN reach r ON r.node = u2.b),
-      |comp AS (SELECT node, min(m) AS comp FROM reach GROUP BY node)""".stripMargin
+  /** Every query declaration, family by family. */
+  val declarations: Seq[Query] =
+    OperatorQueries.all ++ LsviQueries.all ++ FieldworkQueries.all ++
+      DedupQueries.all ++ CurationQueries.all ++ ReleaseQueries.all ++
+      StreamingQueries.all
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    declarations.map(q => q.name -> q.build).toMap
 
   /** DuckDB-equivalent SQL per query (driver correctness gate). Omitted
     * for the seeded-hyperplane / sketch queries DuckDB cannot replay
     * (rows-only check there; their EXACT verifiers q46/q50/q53 are
     * oracle-checked). */
-  def oracleSql: Map[String, String] = Map(
-    // q38: md5 robust winnowing per-doc fingerprint stats — the
-    // engine's winnowSelectedMd5 lag/lead selection replayed verbatim
-    "q38_docs_winnow" ->
-      s"""WITH ${winnowSelCtes(16, 8)}
-         |SELECT doc_id, count(*) AS n_fingerprints,
-         |  count(DISTINCT h) AS n_distinct_fp,
-         |  arg_min(h, p) AS first_fp,
-         |  CAST(sum(h) AS BIGINT) AS fp_sum
-         |FROM sel GROUP BY doc_id""".stripMargin,
-
-    // q44: md5 SimHash + md5-MinHash scalar projections; token-less
-    // docs keep simhash 0 and NULL minhash columns on both sides
-    "q44_docs_signatures" ->
-      s"""WITH ${md5SimhashCtes},
-         |${md5SigCtes},
-         |mrow AS (SELECT doc_id,
-         |    min(CASE WHEN i = 0 THEN mh END) AS minhash_first,
-         |    min(CASE WHEN i = ${Md5MinhashK - 1} THEN mh END) AS minhash_last,
-         |    CAST(sum(mh) AS BIGINT) AS minhash_fold
-         |  FROM sig GROUP BY 1)
-         |SELECT d.doc_id, COALESCE(s0.sig, 0) AS simhash,
-         |  m.minhash_first, m.minhash_last, m.minhash_fold
-         |FROM documents d
-         |LEFT JOIN sig0 s0 USING (doc_id)
-         |LEFT JOIN mrow m USING (doc_id)""".stripMargin,
-
-    // q45: md5-MinHash LSH canonical ids — band-key candidates against
-    // the bucket min-id representative, integer agreement prefilter
-    // (>= ceil(k·(tau−0.1))), exact token-set Jaccard in micros, then
-    // the recursive CC closure; only clustered docs emitted
-    "q45_minhash_neardups" ->
-      s"""WITH RECURSIVE ${md5SigCtes},
-         |cnt AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_u FROM tok GROUP BY 1),
-         |rep AS (SELECT band, min(doc_id) AS rid FROM bands GROUP BY band),
-         |cand0 AS (SELECT DISTINCT r.rid AS id_a, b.doc_id AS id_b
-         |  FROM bands b JOIN rep r USING (band) WHERE b.doc_id <> r.rid),
-         |agr AS (SELECT c.id_a, c.id_b
-         |  FROM cand0 c JOIN sig sa ON sa.doc_id = c.id_a
-         |  JOIN sig sb ON sb.doc_id = c.id_b AND sb.i = sa.i
-         |  GROUP BY 1, 2
-         |  HAVING count(*) FILTER (WHERE sa.mh = sb.mh) >= ${md5MinhashAgreeMin}),
-         |ninter AS (SELECT p.id_a, p.id_b, CAST(count(*) AS BIGINT) AS inter
-         |  FROM agr p JOIN tok ta ON ta.doc_id = p.id_a
-         |  JOIN tok tb ON tb.doc_id = p.id_b AND tb.u = ta.u
-         |  GROUP BY 1, 2),
-         |edges AS (SELECT n.id_a, n.id_b
-         |  FROM ninter n JOIN cnt ca ON ca.doc_id = n.id_a
-         |  JOIN cnt cb ON cb.doc_id = n.id_b
-         |  WHERE n.inter * 1000000 // (ca.n_u + cb.n_u - n.inter) >= ${Md5MinhashTauMicros}),
-         |${ccCtes}
-         |SELECT node AS doc_id, comp AS canonical_id
-         |FROM comp WHERE comp <> node""".stripMargin,
-
-    // q47: md5 32-bit SimHash canonical ids — four 8-bit band buckets,
-    // doc -> bucket-min-rep edges verified by bit_count(xor) <= 3,
-    // recursive CC closure, one row per doc
-    "q47_simhash_neardups" ->
-      s"""WITH RECURSIVE ${md5SimhashCtes},
-         |sigs AS (SELECT d.doc_id, COALESCE(s0.sig, 0) AS sig
-         |  FROM documents d LEFT JOIN sig0 s0 USING (doc_id)),
-         |banded AS (SELECT doc_id, sig, b AS band, (sig >> (8 * b)) & 255 AS bucket
-         |  FROM sigs CROSS JOIN range(4) rb(b)),
-         |rep AS (SELECT band, bucket, min(doc_id) AS rid FROM banded GROUP BY 1, 2),
-         |repx AS (SELECT r.band, r.bucket, r.rid, s.sig AS rsig
-         |  FROM rep r JOIN sigs s ON s.doc_id = r.rid),
-         |edges AS (SELECT DISTINCT x.rid AS id_a, b.doc_id AS id_b
-         |  FROM banded b JOIN repx x USING (band, bucket)
-         |  WHERE b.doc_id <> x.rid AND bit_count(xor(b.sig, x.rsig)) <= 3),
-         |${ccCtes}
-         |SELECT d.doc_id, COALESCE(c.comp, d.doc_id) AS canonical_id
-         |FROM documents d LEFT JOIN comp c ON c.node = d.doc_id""".stripMargin,
-
-    // q105: md5 winnowing canonical ids — distinct selected hashes per
-    // doc, stop-fingerprint df <= 50, doc -> fingerprint-min-rep
-    // candidates verified on true surviving-set intersection >= 2,
-    // recursive CC closure, one row per doc
-    "q105_winnow_canonical" ->
-      s"""WITH RECURSIVE ${winnowSelCtes(16, 8)},
-         |fps AS (SELECT DISTINCT doc_id, h AS fp FROM sel),
-         |rare AS (SELECT fp, min(doc_id) AS rep FROM fps
-         |  GROUP BY fp HAVING count(*) <= 50),
-         |surv AS (SELECT f.doc_id, f.fp FROM fps f
-         |  WHERE f.fp IN (SELECT fp FROM rare)),
-         |cand AS (SELECT DISTINCT r.rep AS id_a, f.doc_id AS id_b
-         |  FROM fps f JOIN rare r USING (fp) WHERE f.doc_id <> r.rep),
-         |ncommon AS (SELECT c.id_a, c.id_b, count(*) AS ninter
-         |  FROM cand c JOIN surv a ON a.doc_id = c.id_a
-         |  JOIN surv b ON b.doc_id = c.id_b AND b.fp = a.fp
-         |  GROUP BY 1, 2),
-         |edges AS (SELECT id_a, id_b FROM ncommon WHERE ninter >= 2),
-         |${ccCtes}
-         |SELECT d.doc_id, COALESCE(c.comp, d.doc_id) AS canonical_id
-         |FROM documents d LEFT JOIN comp c ON c.node = d.doc_id""".stripMargin,
-
-    // q106: the md5 streaming dedup's arrival-order state machine,
-    // replayed exactly: with the whole corpus in one micro-batch
-    // (id-sorted per bucket, members capped at the 1000 smallest ids),
-    // a doc's band verdict is the min id reachable through
-    // >=-agreeMin match edges to earlier-id members, and the final
-    // canonical is the min across bands
-    "q106_dedup_stream" ->
-      s"""WITH RECURSIVE ${md5SigCtes},
-         |rk AS (SELECT doc_id, band,
-         |    row_number() OVER (PARTITION BY band ORDER BY doc_id) AS rk
-         |  FROM bands),
-         |prs AS (SELECT a.band, a.doc_id AS hi, b.doc_id AS lo
-         |  FROM rk a JOIN rk b ON a.band = b.band
-         |    AND b.doc_id < a.doc_id AND b.rk <= 1000),
-         |mt AS (SELECT p.band, p.hi, p.lo
-         |  FROM prs p JOIN sig sa ON sa.doc_id = p.hi
-         |  JOIN sig sb ON sb.doc_id = p.lo AND sb.i = sa.i
-         |  GROUP BY 1, 2, 3
-         |  HAVING count(*) FILTER (WHERE sa.mh = sb.mh) >= ${md5MinhashAgreeMin}),
-         |reach AS (SELECT band, doc_id AS node, doc_id AS m FROM bands
-         |  UNION SELECT e.band, e.hi, r.m
-         |  FROM mt e JOIN reach r ON r.band = e.band AND r.node = e.lo),
-         |verd AS (SELECT band, node, min(m) AS c FROM reach GROUP BY 1, 2)
-         |SELECT node AS id, min(c) AS canonical_id FROM verd GROUP BY 1""".stripMargin,
-    // q159/q160: per-subspace Lloyd + ADC search (generators above)
-    "q161_dup_spans" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS ts
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |sp AS (
-        |  SELECT doc_id, array_to_string(ts[i:i+7], ' ') AS span
-        |  FROM toks, unnest(range(1, len(ts) - 6)) AS r(i)
-        |  WHERE len(ts) >= 8),
-        |kd AS (SELECT span, doc_id, count(*) AS cnt FROM sp GROUP BY 1, 2),
-        |tot AS (SELECT span, sum(cnt) AS total FROM kd GROUP BY 1)
-        |SELECT kd.doc_id,
-        |  CAST(sum(kd.cnt) AS BIGINT) AS n_spans,
-        |  CAST(sum(CASE WHEN tot.total > 1 THEN kd.cnt ELSE 0 END) AS BIGINT)
-        |    AS dup_spans,
-        |  sum(CASE WHEN tot.total > 1 THEN kd.cnt ELSE 0 END) * 1000
-        |    <= 200 * sum(kd.cnt) AS keep
-        |FROM kd JOIN tot ON kd.span = tot.span
-        |GROUP BY kd.doc_id""".stripMargin,
-
-    "q162_ivfpq_search" -> ivfPqSearchOracleSql(kc = 4, m = 4, k = 4,
-      dim = 64, nQueries = 4, nprobe = 2, topK = 5),
-    // q169 = q162 through the written cell-partitioned index: the
-    // round-tripped codes must reproduce the in-memory pipeline
-    // exactly, so the oracle IS q162's CTE chain at equal parameters
-    "q169_ivfpq_index_probe" -> ivfPqSearchOracleSql(kc = 4, m = 4, k = 4,
-      dim = 64, nQueries = 4, nprobe = 2, topK = 5),
-    // q192 = the same chain with BOTH quantizer levels trained over
-    // the base predicate only (the frozen-state append semantics);
-    // coding/probe/ranking stay over the full corpus.
-    "q192_ivfpq_index_append" -> ivfPqSearchOracleSql(kc = 4, m = 4, k = 4,
-      dim = 64, nQueries = 4, nprobe = 2, topK = 5,
-      trainPred = Some("vec_id % 5 <> 4")),
-    // q197 = the same chain trained+coded in full, with the deleted
-    // ids removed from the scored candidate set only.
-    "q197_ivfpq_index_delete" -> ivfPqSearchOracleSql(kc = 4, m = 4, k = 4,
-      dim = 64, nQueries = 4, nprobe = 2, topK = 5,
-      codePred = Some("neighbor_id % 7 <> 3")),
-    // q213 = q192's oracle verbatim: compaction rewrites fragmented
-    // cells file-for-file but row-for-row — identical codes, identical
-    // search — so the gate proves the rewrite is value-invisible.
-    "q213_ivfpq_index_compact" -> ivfPqSearchOracleSql(kc = 4, m = 4, k = 4,
-      dim = 64, nQueries = 4, nprobe = 2, topK = 5,
-      trainPred = Some("vec_id % 5 <> 4")),
-    // q203 = TWO of q162's chains (one per mining direction, each
-    // trained on its own label-split corpus) + cosine re-rank of the
-    // ADC shortlists + q176's margin tail — the bounded-probe bitext
-    // miner gated hash-exact at its real (non-degenerate) settings.
-    "q203_bitext_margin_ivf" -> bitextApproxOracleSql(kc = 4, m = 4,
-      pqK = 4, dim = 64, nprobe = 2, shortlist = 8, k = 4,
-      minMargin = "1.02e0"),
-    // q206 = q203 through the written cell-partitioned indexes: codes
-    // and trained state round-trip bit-exact (the q169 ≡ q162
-    // identity), so the oracle IS q203's chain at equal parameters.
-    "q206_bitext_indexed" -> bitextApproxOracleSql(kc = 4, m = 4,
-      pqK = 4, dim = 64, nprobe = 2, shortlist = 8, k = 4,
-      minMargin = "1.02e0"),
-    // q207 = the full-train twin: the oracle ALWAYS replays the
-    // training chain, so the in-query-training form shares it with
-    // the cached-state q203 verbatim.
-    "q207_bitext_train_e2e" -> bitextApproxOracleSql(kc = 4, m = 4,
-      pqK = 4, dim = 64, nprobe = 2, shortlist = 8, k = 4,
-      minMargin = "1.02e0"),
-
-    // q208/q211: the composed ingest gate — q201's score CTE verbatim
-    // (extended with a reference-window flag), then ONE histogram from
-    // which the q201 midrank-AUC chain, the q204 bin/gap/ECE chain and
-    // the q200 fixed-order PSI term (applied at bin grain) all derive
-    // — each audit's oracle math token-for-token (the lockstep pin
-    // extends to these oracles). q208 splits even/odd doc_id (the A/A
-    // control, PSI 0); q211 splits on lang = 'en' (planted drift, the
-    // nonzero-term proof of the ln recipe at bin grain).
-    "q208_ingest_audit" ->
-      ingestAuditOracleSql("doc_id % 2 = 0", 200000L),
-    "q211_ingest_audit_drift" ->
-      ingestAuditOracleSql("lang = 'en'", 100000L),
-
-    // q209: the JSONL round trip must be value-invisible — the oracle
-    // replays counts, char totals and the md5 content checksum from
-    // raw parquet; a clean read has zero corrupt rows by definition.
-    "q209_jsonl_ingest" ->
-      """SELECT lang, source, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(n_chars) AS BIGINT) AS chars_total,
-        |  CAST(sum(CAST(('0x' || substr(md5(text), 1, 8)) AS BIGINT)) AS BIGINT)
-        |    AS text_checksum,
-        |  CAST(0 AS BIGINT) AS n_corrupt
-        |FROM documents GROUP BY 1, 2""".stripMargin,
-
-    // q210: the ORC round trip is value-invisible like q209's —
-    // counts, char totals and the content checksum replay from parquet
-    "q210_orc_roundtrip" ->
-      """SELECT lang, source, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(n_chars) AS BIGINT) AS chars_total,
-        |  CAST(sum(CAST(('0x' || substr(md5(text), 1, 8)) AS BIGINT)) AS BIGINT)
-        |    AS text_checksum
-        |FROM documents GROUP BY 1, 2""".stripMargin,
-
-    // q212: the JSONL round trip is value-invisible (q209's gate), so
-    // the oracle replays q100's admission chain from raw parquet —
-    // the SHARED corpusIngestChainSql — aggregates the ingested
-    // corpus with q209's content checksum, and appends the audit row:
-    // exactly ONE planted corrupt line, zero leaked data columns.
-    "q212_jsonl_corpus_e2e" ->
-      s"""WITH $corpusIngestChainSql,
-        |ingested AS (
-        |  SELECT doc_id, text, lang, source, n_chars FROM corpus
-        |  UNION ALL SELECT doc_id, text, lang, source, n_chars FROM clean)
-        |SELECT lang, source, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(n_chars) AS BIGINT) AS chars_total,
-        |  CAST(sum(CAST(('0x' || substr(md5(text), 1, 8)) AS BIGINT)) AS BIGINT)
-        |    AS text_checksum
-        |FROM ingested GROUP BY 1, 2
-        |UNION ALL
-        |SELECT '__audit__' AS lang, 'corrupt_lines' AS source,
-        |  CAST(1 AS BIGINT) AS n_docs, CAST(0 AS BIGINT) AS chars_total,
-        |  CAST(0 AS BIGINT) AS text_checksum
-        |UNION ALL
-        |SELECT '__audit__' AS lang, 'parsed_lines' AS source,
-        |  (SELECT CAST(count(*) AS BIGINT) FROM documents WHERE doc_id % 3 <> 0)
-        |    AS n_docs, CAST(0 AS BIGINT) AS chars_total,
-        |  CAST(0 AS BIGINT) AS text_checksum""".stripMargin,
-
-    // q174: DSIR — the fit CTEs mirror the two-model chain (add-1
-    // smoothing over the 8-bucket spine, each ln snapped to 1e-6
-    // BEFORE the subtraction), the score unrolls the 8-term fold in
-    // bucket order, top-50 by (logw DESC, doc_id).
-    "q174_dsir_select" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    CASE WHEN length(trim(text)) = 0 THEN CAST([] AS VARCHAR[])
-        |         ELSE string_split_regex(trim(text), '\s+') END AS ts
-        |  FROM documents),
-        |bm AS (
-        |  SELECT doc_id, list_contains(ts, 'join') AS is_t,
-        |    list_transform(
-        |      [ts[i] || ' ' || ts[i+1] FOR i IN range(1, len(ts))],
-        |      g -> CAST(CAST(('0x' || substr(md5(g), 1, 8)) AS BIGINT) % 8 AS INT)) AS bmap
-        |  FROM toks),
-        |ex AS (SELECT is_t, unnest(bmap) AS b FROM bm),
-        |cn0 AS (SELECT b,
-        |          sum(CASE WHEN is_t THEN 1 ELSE 0 END) AS ct,
-        |          sum(CASE WHEN is_t THEN 0 ELSE 1 END) AS cr
-        |        FROM ex GROUP BY b),
-        |cn AS (SELECT s.b,
-        |         CAST(coalesce(cn0.ct, 0) AS BIGINT) AS ct,
-        |         CAST(coalesce(cn0.cr, 0) AS BIGINT) AS cr
-        |       FROM (SELECT unnest(range(0, 8)) AS b) s
-        |       LEFT JOIN cn0 ON s.b = cn0.b),
-        |tot AS (SELECT CAST(sum(ct) AS BIGINT) AS tt,
-        |               CAST(sum(cr) AS BIGINT) AS tr FROM cn),
-        |lam AS (SELECT cn.b,
-        |          floor(ln(CAST(ct + 1 AS DOUBLE) / CAST(tt + 8 AS DOUBLE))*1e6 + 0.5)/1e6
-        |        - floor(ln(CAST(cr + 1 AS DOUBLE) / CAST(tr + 8 AS DOUBLE))*1e6 + 0.5)/1e6
-        |          AS lam
-        |        FROM cn, tot),
-        |lr AS (SELECT list(lam ORDER BY b) AS lams FROM lam),
-        |fv AS (SELECT doc_id, len(bmap) AS nb,
-        |         [len(list_filter(bmap, x -> x = b)) FOR b IN range(0, 8)] AS fv
-        |       FROM bm),
-        |sc AS (SELECT doc_id, CAST(nb AS BIGINT) AS n_bigrams,
-        |         floor((CAST(fv[1] AS DOUBLE)*lams[1] + CAST(fv[2] AS DOUBLE)*lams[2]
-        |              + CAST(fv[3] AS DOUBLE)*lams[3] + CAST(fv[4] AS DOUBLE)*lams[4]
-        |              + CAST(fv[5] AS DOUBLE)*lams[5] + CAST(fv[6] AS DOUBLE)*lams[6]
-        |              + CAST(fv[7] AS DOUBLE)*lams[7] + CAST(fv[8] AS DOUBLE)*lams[8])*1e6
-        |              + 0.5)/1e6 AS logw
-        |       FROM fv, lr)
-        |SELECT doc_id, n_bigrams, logw FROM sc
-        |ORDER BY logw DESC, doc_id LIMIT 50""".stripMargin,
-
-    // q175: UniMax — the window chain IS the closed form: prefix sums
-    // of ascending caps, candidate level per position, first
-    // qualifying position wins; capped rows keep cap, the rest get
-    // the level. Integer arithmetic throughout; the two divisions
-    // mirror Spark's ops token for token.
-    "q175_unimax_alloc" ->
-      """WITH toks AS (
-        |  SELECT lang,
-        |    CASE WHEN length(trim(text)) = 0 THEN CAST([] AS VARCHAR[])
-        |         ELSE string_split_regex(trim(text), '\s+') END AS ts
-        |  FROM documents),
-        |cnt AS (SELECT lang, CAST(sum(len(ts)) AS BIGINT) AS n
-        |        FROM toks GROUP BY lang),
-        |tot AS (SELECT CAST(sum(n) AS BIGINT) AS t FROM cnt),
-        |w AS (SELECT lang, n, n * 1 AS cap, (t * 4) // 5 AS b
-        |      FROM cnt, tot),
-        |o AS (SELECT lang, n, cap, b,
-        |        CAST(row_number() OVER (ORDER BY cap, lang) AS BIGINT) AS idx,
-        |        CAST(coalesce(sum(cap) OVER (ORDER BY cap, lang
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |          AS BIGINT) AS pre,
-        |        CAST(count(*) OVER () AS BIGINT) AS l
-        |      FROM w),
-        |u AS (SELECT *,
-        |        CAST(b - pre AS DOUBLE) / CAST(l - idx + 1 AS DOUBLE) AS cand
-        |      FROM o),
-        |sel AS (SELECT idx AS sidx, cand AS lvl FROM u
-        |        WHERE cand <= CAST(cap AS DOUBLE) ORDER BY idx LIMIT 1)
-        |SELECT lang, n AS n_tokens, cap AS cap_tokens,
-        |  floor((CASE WHEN sidx IS NOT NULL AND idx >= sidx THEN lvl
-        |              ELSE CAST(cap AS DOUBLE) END)*1e6 + 0.5)/1e6
-        |    AS alloc_tokens,
-        |  floor(((CASE WHEN sidx IS NOT NULL AND idx >= sidx THEN lvl
-        |               ELSE CAST(cap AS DOUBLE) END) / CAST(n AS DOUBLE))*1e6
-        |        + 0.5)/1e6 AS epochs
-        |FROM u LEFT JOIN sel ON TRUE""".stripMargin,
-
-    // q176: both directional top-4 lists off the q50 cosine CTE shape,
-    // neighborhood sums as exact BIGINT micros, margin = cm·2k /
-    // (f_sum + b_sum) — multiply-then-divide token order mirrors
-    // Bitext.marginMining; rank on the 1e-6-floored margin, tgt_id
-    // ties.
-    "q176_bitext_margin" ->
-      """WITH src AS (SELECT vec_id AS sid, embedding AS sv
-        |             FROM embeddings WHERE label < 5),
-        |tgt AS (SELECT vec_id AS tid, embedding AS tv
-        |        FROM embeddings WHERE label >= 5),
-        |s AS (SELECT sid, tid,
-        |   round(
-        |     list_sum(list_transform(list_zip(sv, tv), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |     / (sqrt(list_sum(list_transform(sv, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-        |      * sqrt(list_sum(list_transform(tv, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 6) AS cosine
-        |   FROM src, tgt),
-        |cmx AS (SELECT sid, tid, cosine,
-        |          CAST(floor(cosine * 1e6 + 0.5e0) AS BIGINT) AS cm
-        |        FROM s),
-        |f AS (SELECT * FROM (SELECT sid, tid, cosine, cm,
-        |        row_number() OVER (PARTITION BY sid
-        |          ORDER BY cosine DESC, tid) AS rk FROM cmx)
-        |      WHERE rk <= 4),
-        |b AS (SELECT * FROM (SELECT sid, tid, cm,
-        |        row_number() OVER (PARTITION BY tid
-        |          ORDER BY cosine DESC, sid) AS rk FROM cmx)
-        |      WHERE rk <= 4),
-        |fs AS (SELECT sid, CAST(sum(cm) AS BIGINT) AS f_sum FROM f GROUP BY sid),
-        |bs AS (SELECT tid, CAST(sum(cm) AS BIGINT) AS b_sum FROM b GROUP BY tid),
-        |m AS (SELECT f.sid, f.tid, f.cosine,
-        |        floor((CAST(f.cm AS DOUBLE) * 8e0)
-        |              / CAST(fs.f_sum + bs.b_sum AS DOUBLE) * 1e6 + 0.5e0)/1e6
-        |          AS margin
-        |      FROM f JOIN fs USING (sid) JOIN bs ON f.tid = bs.tid)
-        |SELECT sid AS src_id, tid AS tgt_id, cosine, margin
-        |FROM (SELECT *, row_number() OVER (PARTITION BY sid
-        |        ORDER BY margin DESC, tid) AS rk2 FROM m)
-        |WHERE rk2 = 1 AND margin >= 1.02e0""".stripMargin,
-
-    // q177: Gopher rules — tokens/lines projected once, every ratio a
-    // single division of exact integers floored to 1e-6 before its
-    // threshold, the fail mask the same CASE sum bit for bit.
-    "q177_gopher_rules" ->
-      """WITH base AS (
-        |  SELECT doc_id, text,
-        |    CASE WHEN length(trim(text)) = 0 THEN CAST([] AS VARCHAR[])
-        |         ELSE string_split_regex(trim(text), '\s+') END AS toks,
-        |    str_split(text, chr(10)) AS lines
-        |  FROM documents),
-        |m AS (
-        |  SELECT doc_id,
-        |    len(toks) AS n_words,
-        |    CASE WHEN len(toks) = 0 THEN 0e0 ELSE
-        |      floor(CAST(length(regexp_replace(trim(text), '\s+', '', 'g')) AS DOUBLE)
-        |            / CAST(len(toks) AS DOUBLE) * 1e6 + 0.5e0)/1e6 END AS mean_word_len,
-        |    CASE WHEN len(toks) = 0 THEN 0e0 ELSE
-        |      floor(CAST((length(text) - length(regexp_replace(text, '#', '', 'g'))) * 3
-        |                 + (length(text) - length(regexp_replace(text, '\.\.\.', '', 'g'))) AS DOUBLE)
-        |            / CAST(len(toks) * 3 AS DOUBLE) * 1e6 + 0.5e0)/1e6 END AS symbol_ratio,
-        |    CASE WHEN len(lines) = 0 THEN 0e0 ELSE
-        |      floor(CAST(len(list_filter(lines, l -> regexp_matches(l, '^\s*[-*•]'))) AS DOUBLE)
-        |            / CAST(len(lines) AS DOUBLE) * 1e6 + 0.5e0)/1e6 END AS bullet_frac,
-        |    CASE WHEN len(lines) = 0 THEN 0e0 ELSE
-        |      floor(CAST(len(list_filter(lines, l -> ends_with(l, '...'))) AS DOUBLE)
-        |            / CAST(len(lines) AS DOUBLE) * 1e6 + 0.5e0)/1e6 END AS ell_frac,
-        |    CASE WHEN len(toks) = 0 THEN 0e0 ELSE
-        |      floor(CAST(len(list_filter(toks, w -> regexp_matches(w, '[A-Za-z]'))) AS DOUBLE)
-        |            / CAST(len(toks) AS DOUBLE) * 1e6 + 0.5e0)/1e6 END AS alpha_frac,
-        |    len(list_intersect(toks,
-        |      ['the','a','of','and','to','that','have','with'])) AS stop_hits
-        |  FROM base),
-        |f AS (
-        |  SELECT doc_id, n_words, mean_word_len,
-        |    (CASE WHEN n_words < 25 OR n_words > 80 THEN 1 ELSE 0 END
-        |     + CASE WHEN mean_word_len < 3.0e0 OR mean_word_len > 10.0e0 THEN 2 ELSE 0 END
-        |     + CASE WHEN symbol_ratio > 0.1e0 THEN 4 ELSE 0 END
-        |     + CASE WHEN bullet_frac > 0.9e0 THEN 8 ELSE 0 END
-        |     + CASE WHEN ell_frac > 0.3e0 THEN 16 ELSE 0 END
-        |     + CASE WHEN alpha_frac < 0.8e0 THEN 32 ELSE 0 END
-        |     + CASE WHEN stop_hits < 2 THEN 64 ELSE 0 END) AS fail_mask
-        |  FROM m)
-        |SELECT doc_id, CAST(n_words AS INTEGER) AS n_words, mean_word_len,
-        |  CAST(fail_mask AS INTEGER) AS fail_mask, fail_mask = 0 AS keep
-        |FROM f""".stripMargin,
-
-    // q178: q92's oracle chain with lang carried through, then the
-    // per-language ntile(3) tercile label (identical ntile semantics:
-    // earlier groups absorb the remainder rows in both engines).
-    "q178_ccnet_buckets" ->
-      """WITH toks AS (
-        |  SELECT doc_id, lang,
-        |    unnest(string_split_regex(trim(text), '\s+')) AS term
-        |  FROM documents),
-        |tf AS (SELECT doc_id, lang, term, count(*) AS tf FROM toks GROUP BY 1, 2, 3),
-        |vocab AS (SELECT term, count(*) AS cnt FROM toks GROUP BY 1),
-        |tot AS (SELECT count(*) AS total FROM toks),
-        |contrib AS (
-        |  SELECT tf.doc_id, tf.lang, tf.term, tf.tf,
-        |    floor((tf.tf * ln(CAST(vocab.cnt AS DOUBLE) / tot.total))*1e6 + 0.5)/1e6 AS contrib
-        |  FROM tf, vocab, tot WHERE tf.term = vocab.term),
-        |folded AS (
-        |  SELECT doc_id, lang, CAST(sum(tf) AS BIGINT) AS n_tokens,
-        |    list_reduce(list(contrib ORDER BY term), (x, y) -> x + y) AS lp
-        |  FROM contrib GROUP BY doc_id, lang),
-        |scored AS (
-        |  SELECT doc_id, lang,
-        |    floor((lp * -1 / n_tokens)*1e6 + 0.5)/1e6 AS ppl_proxy
-        |  FROM folded)
-        |SELECT doc_id, lang, ppl_proxy,
-        |  CASE ntile(3) OVER (PARTITION BY lang ORDER BY ppl_proxy, doc_id)
-        |    WHEN 1 THEN 'head' WHEN 2 THEN 'middle' ELSE 'tail' END AS bucket
-        |FROM scored""".stripMargin,
-
-    // q173: Stupid-Backoff scoring of the held-out split with train
-    // counts; ln terms rounded to 1e-6 before the position-ordered
-    // fold (q92's recipe). OOV unigram mass 0.4; first token = S1.
-    "q173_stupid_backoff" ->
-      """WITH train AS (SELECT * FROM documents WHERE doc_id % 97 <> 0),
-        |ttoks AS (
-        |  SELECT unnest(string_split_regex(trim(text), '\s+')) AS term
-        |  FROM train WHERE length(trim(text)) > 0),
-        |c1 AS (SELECT term, count(*) AS c1 FROM ttoks GROUP BY 1),
-        |tot AS (SELECT count(*) AS n FROM ttoks),
-        |tbg AS (
-        |  SELECT ts[i] || ' ' || ts[i+1] AS bg
-        |  FROM (SELECT string_split_regex(trim(text), '\s+') AS ts
-        |        FROM train WHERE length(trim(text)) > 0),
-        |       unnest(range(1, len(ts))) AS r(i)),
-        |c2 AS (SELECT bg, count(*) AS c2 FROM tbg GROUP BY 1),
-        |ev AS (
-        |  SELECT doc_id, string_split_regex(trim(
-        |      text || ' zz' || CAST(doc_id AS VARCHAR) || ' join'), '\s+') AS ts
-        |  FROM documents
-        |  WHERE doc_id % 97 = 0
-        |    AND length(trim(text || ' zz' || CAST(doc_id AS VARCHAR) || ' join')) > 0),
-        |first AS (
-        |  SELECT ev.doc_id, 0 AS pos,
-        |    floor(ln(COALESCE(CAST(c1.c1 AS DOUBLE), 0.4) / tot.n)*1e6 + 0.5)/1e6
-        |      AS contrib
-        |  FROM ev LEFT JOIN c1 ON c1.term = ev.ts[1], tot),
-        |pairs AS (
-        |  SELECT doc_id, CAST(i AS INT) AS pos,
-        |    ts[i] AS prev, ts[i+1] AS w, ts[i] || ' ' || ts[i+1] AS bg
-        |  FROM ev, unnest(range(1, len(ts))) AS r(i)),
-        |pc AS (
-        |  SELECT p.doc_id, p.pos,
-        |    floor(ln(CASE WHEN c2.c2 IS NOT NULL
-        |                  THEN CAST(c2.c2 AS DOUBLE) / cp.c1
-        |                  ELSE 0.4 * (COALESCE(CAST(cw.c1 AS DOUBLE), 0.4) / tot.n)
-        |             END)*1e6 + 0.5)/1e6 AS contrib
-        |  FROM pairs p
-        |  LEFT JOIN c2 ON c2.bg = p.bg
-        |  LEFT JOIN c1 cp ON cp.term = p.prev
-        |  LEFT JOIN c1 cw ON cw.term = p.w, tot),
-        |allc AS (SELECT * FROM first UNION ALL SELECT * FROM pc),
-        |folded AS (
-        |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-        |    list_reduce(list(contrib ORDER BY pos), (x, y) -> x + y) AS lp
-        |  FROM allc GROUP BY doc_id)
-        |SELECT doc_id, n_tokens,
-        |  floor(lp*1e6 + 0.5)/1e6 AS score,
-        |  floor((lp * -1 / n_tokens)*1e6 + 0.5)/1e6 AS ppl_proxy
-        |FROM folded""".stripMargin,
-
-    // q172: the q149 two-step GD machinery verbatim over hashed-bigram
-    // bucket counts (md5-prefix mod 8 — integer features, so q149's
-    // 2^-20 snap is the identity and is elided here); per-doc output.
-    "q172_quality_probe" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    CASE WHEN list_contains(
-        |           CASE WHEN length(trim(text)) = 0 THEN CAST([] AS VARCHAR[])
-        |                ELSE string_split_regex(trim(text), '\s+') END, 'join')
-        |         THEN 1 ELSE 0 END AS label,
-        |    CASE WHEN length(trim(text)) = 0 THEN CAST([] AS VARCHAR[])
-        |         ELSE string_split_regex(trim(text), '\s+') END AS ts
-        |  FROM documents),
-        |bm AS (
-        |  SELECT doc_id, label,
-        |    list_transform(
-        |      [ts[i] || ' ' || ts[i+1] FOR i IN range(1, len(ts))],
-        |      g -> CAST(CAST(('0x' || substr(md5(g), 1, 8)) AS BIGINT) % 8 AS INT)) AS bmap
-        |  FROM toks),
-        |e AS (
-        |  SELECT doc_id AS vec_id, label, CAST(label % 2 AS DOUBLE) AS y,
-        |    list_concat(
-        |      [floor((CAST(len(list_filter(bmap, x -> x = b)) AS DOUBLE)
-        |         / CAST(greatest(len(bmap), 1) AS DOUBLE))*1048576.0 + 0.5)/1048576.0
-        |       FOR b IN range(0, 8)],
-        |      [CAST(1.0 AS DOUBLE)]) AS xs
-        |  FROM bm),
-        |ex1 AS (SELECT y,
-        |          unnest(list_transform(xs, (x, i) -> {'dim': i, 'x': x}),
-        |                 recursive := true)
-        |        FROM e),
-        |g1 AS (SELECT dim,
-        |         sum(CAST(floor((0.5 - y)*x*1048576.0 + 0.5) AS BIGINT)) AS g,
-        |         CAST(count(*) AS DOUBLE) AS n
-        |       FROM ex1 GROUP BY dim),
-        |w1 AS (SELECT list(0.0 - 4.0*(CAST(g AS DOUBLE)/(n*1048576.0)) ORDER BY dim) AS w
-        |       FROM g1),
-        |r2 AS (SELECT e.vec_id, e.y, e.xs,
-        |         (0.5 + z/(2.0*(1.0 + abs(z)))) - e.y AS r
-        |       FROM (SELECT e.*, list_sum(list_transform(list_zip(e.xs, w1.w),
-        |               p -> p[1]*p[2])) AS z
-        |             FROM e, w1) e),
-        |ex2 AS (SELECT r,
-        |          unnest(list_transform(xs, (x, i) -> {'dim': i, 'x': x}),
-        |                 recursive := true)
-        |        FROM r2),
-        |g2 AS (SELECT dim,
-        |         sum(CAST(floor(r*x*1048576.0 + 0.5) AS BIGINT)) AS g,
-        |         CAST(count(*) AS DOUBLE) AS n
-        |       FROM ex2 GROUP BY dim),
-        |w2 AS (SELECT list(w1.w[g2.dim] - 4.0*(CAST(g2.g AS DOUBLE)/(g2.n*1048576.0))
-        |                   ORDER BY g2.dim) AS w
-        |       FROM g2, w1),
-        |sc AS (SELECT e.vec_id, e.label, e.y,
-        |         list_sum(list_transform(list_zip(e.xs, w2.w), p -> p[1]*p[2])) AS z
-        |       FROM e, w2)
-        |SELECT vec_id, CAST(label AS BIGINT) AS label,
-        |  CAST(floor((0.5 + z/(2.0*(1.0 + abs(z))))*1e6 + 0.5) AS BIGINT)
-        |    AS score_micros,
-        |  z >= 0.0 AS pred
-        |FROM sc""".stripMargin,
-
-    "q171_doc_chunking" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS ts
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |k AS (
-        |  SELECT doc_id, ts,
-        |    greatest(0, (len(ts) - 24 + 15) // 16) AS last_idx
-        |  FROM toks WHERE len(ts) > 0),
-        |ch AS (
-        |  SELECT doc_id, CAST(i AS INT) AS chunk_idx,
-        |    ts[CAST(i*16+1 AS INT):CAST(i*16+24 AS INT)] AS chunk
-        |  FROM k, unnest(range(0, last_idx + 1)) AS r(i))
-        |SELECT doc_id, chunk_idx,
-        |  CAST(len(chunk) AS BIGINT) AS n_tokens,
-        |  array_to_string(chunk, ' ') AS chunk_text
-        |FROM ch""".stripMargin,
-
-    "q170_typo_canonical" ->
-      """WITH corpus AS (
-        |  SELECT text FROM documents
-        |  UNION ALL
-        |  SELECT w[1:1] || w[3:] AS text
-        |  FROM (SELECT (string_split_regex(trim(text), '\s+'))[1] AS w
-        |        FROM documents WHERE doc_id % 7 = 0)
-        |  WHERE length(w) >= 5),
-        |toks AS (
-        |  SELECT unnest(string_split_regex(trim(text), '\s+')) AS word
-        |  FROM corpus WHERE length(trim(text)) > 0),
-        |vocab AS (
-        |  SELECT word, CAST(count(*) AS BIGINT) AS freq
-        |  FROM toks WHERE length(word) >= 4 GROUP BY 1),
-        |vars AS (
-        |  SELECT word, freq, unnest(list_distinct(list_append(
-        |    [word[1:CAST(i-1 AS INT)] || word[CAST(i+1 AS INT):]
-        |     FOR i IN range(1, length(word)+1)], word))) AS v
-        |  FROM vocab),
-        |p0 AS (
-        |  SELECT DISTINCT a.word AS w1, a.freq AS f1, b.word AS w2, b.freq AS f2
-        |  FROM vars a JOIN vars b ON a.v = b.v AND a.word < b.word),
-        |p AS (SELECT * FROM p0 WHERE levenshtein(w1, w2) <= 1),
-        |cands AS (
-        |  SELECT w1 AS word, w2 AS cand, f2 AS cf FROM p
-        |  UNION ALL SELECT w2, w1, f1 FROM p
-        |  UNION ALL SELECT word, word, freq FROM vocab),
-        |best AS (
-        |  SELECT word, cand FROM (
-        |    SELECT word, cand,
-        |      row_number() OVER (PARTITION BY word ORDER BY cf DESC, cand ASC) rk
-        |    FROM cands) t
-        |  WHERE rk = 1)
-        |SELECT vocab.word, vocab.freq, best.cand AS canonical,
-        |  best.cand <> vocab.word AS remapped
-        |FROM vocab JOIN best USING (word)""".stripMargin,
-    "q164_ivfpq_rerank" -> ivfPqRerankOracleSql(kc = 4, m = 4, k = 4,
-      dim = 64, nQueries = 4, nprobe = 2, shortlist = 10, topK = 5),
-
-    "q167_retrieval_e2e" -> {
-      val rerank = ivfPqRerankOracleSql(kc = 4, m = 4, k = 4, dim = 64,
-        nQueries = 4, nprobe = 2, shortlist = 10, topK = 3)
-      s"""SELECT h.query_id, h.rank, h.neighbor_id, h.exact_micros,
-         |  d.lang, d.n_chars
-         |FROM (
-         |$rerank
-         |) h JOIN documents d ON d.doc_id = h.neighbor_id""".stripMargin
-    },
-
-    "q166_sq8_quantize" ->
-      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |ex AS (SELECT vec_id,
-        |         unnest(list_transform(v, (x, i) -> {'dim': i, 'x': x}),
-        |                recursive := true)
-        |       FROM e),
-        |mm AS (SELECT dim, min(x) AS mn, max(x) AS mx FROM ex GROUP BY 1),
-        |cr AS (SELECT ex.vec_id, ex.dim, ex.x, mm.mn,
-        |         (mm.mx - mm.mn) / 255.0 AS sc,
-        |         CASE WHEN mm.mx = mm.mn THEN 0
-        |              ELSE least(255, greatest(0, CAST(floor((ex.x - mm.mn)
-        |                / ((mm.mx - mm.mn) / 255.0) + 0.5) AS BIGINT))) END AS c
-        |       FROM ex JOIN mm USING (dim)),
-        |pe AS (SELECT vec_id, dim, c,
-        |         (x - (mn + c * sc)) * (x - (mn + c * sc)) AS e2
-        |       FROM cr)
-        |SELECT vec_id, CAST(sum(c) AS BIGINT) AS code_sum,
-        |  CAST(floor(list_sum(list(e2 ORDER BY dim)) * 1e6 + 0.5) AS BIGINT)
-        |    AS err_micros
-        |FROM pe GROUP BY vec_id""".stripMargin,
-
-    "q163_gpkg_design" ->
-      s"""WITH gpkg AS (SELECT * FROM ${graft.geo.GpkgFixtureStandingWater.valuesSql})
-         |SELECT area_class, CAST(sac AS BIGINT) AS sac,
-         |  count(*) AS n_polygons,
-         |  CAST(sum(grts_ranking) AS BIGINT) AS rank_sum,
-         |  CAST(sum(CAST(floor((xmax - xmin) * (ymax - ymin) * 100.0 + 0.5)
-         |    AS BIGINT)) AS BIGINT) AS bbox_area_dm2,
-         |  CAST(sum(CASE WHEN biotic IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS n_measured,
-         |  CAST(len(list_distinct(flatten(list(string_split(type_all, '; ')))))
-         |    AS BIGINT) AS n_types
-         |FROM gpkg GROUP BY 1, 2""".stripMargin,
-    "q159_pq_codes" -> pqOracleSql(m = 4, k = 4, dim = 64),
-    "q181_ann_recall_eval" -> adcEvalOracleSql(m = 4, k = 4, dim = 64,
-      nQueries = 5, topK = 5),
-
-    "q189_rrf_fusion" -> rrfFusionOracleSql(m = 4, k = 4, dim = 64,
-      nQueries = 5, topK = 5, k0 = 60),
-
-    // q188: BM25 with the exact op order of Bm25.searchTopK — snapped
-    // ln idf, 2.2/1.2/0.75 literals, term-ordered contribution fold.
-    "q188_bm25_search" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS term
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-        |       FROM toks GROUP BY 1, 2),
-        |dl AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
-        |gp AS (SELECT CAST(count(*) AS BIGINT) AS nd,
-        |         CAST(sum(dl) AS BIGINT) AS tot FROM dl),
-        |avg_ AS (SELECT CAST(tot AS DOUBLE) / CAST(nd AS DOUBLE) AS avgdl FROM gp),
-        |dfq AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY 1),
-        |q AS (SELECT query_id, unnest(string_split_regex(trim(qtext), '\s+')) AS term
-        |      FROM (VALUES (CAST(1 AS BIGINT), 'spark join'),
-        |                   (CAST(2 AS BIGINT), 'customer order'),
-        |                   (CAST(3 AS BIGINT), 'stream window batch'))
-        |        AS v(query_id, qtext)),
-        |idf AS (SELECT dfq.term,
-        |          floor(ln((CAST(nd AS DOUBLE) - CAST(df AS DOUBLE) + 0.5e0)
-        |                   / (CAST(df AS DOUBLE) + 0.5e0) + 1e0)*1e6 + 0.5)/1e6
-        |            AS idf
-        |        FROM dfq, gp),
-        |c AS (
-        |  SELECT q.query_id, tf.doc_id, tf.term,
-        |    floor((idf.idf * (CAST(tf.tf AS DOUBLE) * 2.2e0)
-        |           / (CAST(tf.tf AS DOUBLE)
-        |              + 1.2e0 * (1e0 - 0.75e0
-        |                 + 0.75e0 * (CAST(dl.dl AS DOUBLE) / avg_.avgdl))))
-        |          *1e6 + 0.5)/1e6 AS contrib
-        |  FROM tf JOIN q ON tf.term = q.term
-        |    JOIN idf ON tf.term = idf.term
-        |    JOIN dl ON tf.doc_id = dl.doc_id, avg_),
-        |sc AS (SELECT query_id, doc_id,
-        |         floor(list_reduce(list(contrib ORDER BY term), (x, y) -> x + y)
-        |               *1e6 + 0.5)/1e6 AS score
-        |       FROM c GROUP BY 1, 2)
-        |SELECT query_id, doc_id, score, CAST(rk AS INTEGER) AS rank
-        |FROM (SELECT *, row_number() OVER (
-        |        PARTITION BY query_id ORDER BY score DESC, doc_id) rk
-        |      FROM sc) t
-        |WHERE rk <= 10""".stripMargin,
-
-    // q187: the streaming twin's output equals the batch q184 exactly
-    // (single ordered micro-batch) -> same oracle SQL.
-    "q187_ingest_dedup_stream" -> ingestDedupStreamOracleSql,
-
-    // q217 = q187's chain verbatim: the JSONL round trip is
-    // value-invisible (q209's gate) and the planted corrupt line is
-    // filtered before the state path, so the streamed-from-shards
-    // labels must equal the streamed-from-parquet labels exactly.
-    "q217_jsonl_ingest_stream" -> ingestDedupStreamOracleSql,
-
-    // q186: PMI = ln of the exact rational in the same multiply order
-    // (c_ab·N1·N1 over N2·c_a·c_b), 1e-6-floored; (pmi DESC, w1, w2).
-    "q186_pmi_collocations" ->
-      """WITH toks AS (
-        |  SELECT unnest(string_split_regex(trim(text), '\s+')) AS term
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |uni AS (SELECT term, CAST(count(*) AS BIGINT) AS c FROM toks GROUP BY 1),
-        |n1 AS (SELECT CAST(sum(c) AS BIGINT) AS n1 FROM uni),
-        |bg AS (
-        |  SELECT ts[i] AS w1, ts[i+1] AS w2
-        |  FROM (SELECT string_split_regex(trim(text), '\s+') AS ts
-        |        FROM documents WHERE length(trim(text)) > 0),
-        |       unnest(range(1, len(ts))) AS r(i)),
-        |big AS (SELECT w1, w2, CAST(count(*) AS BIGINT) AS c_ab
-        |        FROM bg GROUP BY 1, 2),
-        |n2 AS (SELECT CAST(sum(c_ab) AS BIGINT) AS n2 FROM big),
-        |j AS (SELECT big.w1, big.w2, big.c_ab, ua.c AS c_a, ub.c AS c_b
-        |      FROM big JOIN uni ua ON big.w1 = ua.term
-        |        JOIN uni ub ON big.w2 = ub.term
-        |      WHERE big.c_ab >= 5)
-        |SELECT w1, w2, c_ab,
-        |  floor(ln((CAST(c_ab AS DOUBLE) * CAST(n1 AS DOUBLE) * CAST(n1 AS DOUBLE))
-        |           / (CAST(n2 AS DOUBLE) * CAST(c_a AS DOUBLE) * CAST(c_b AS DOUBLE)))
-        |        *1e6 + 0.5)/1e6 AS pmi
-        |FROM j, n1, n2
-        |ORDER BY pmi DESC, w1, w2 LIMIT 40""".stripMargin,
-
-    // q185: sign-bit packing into two 32-bit words (bit i-1 of the
-    // word for slice position i), xor-popcount distance, (hamming,
-    // id) rank — mirrors Ann.hammingTopK/HashKernels.signBits.
-    "q185_hamming_topk" ->
-      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |b AS (SELECT vec_id,
-        |    list_sum(list_transform(v[1:32],
-        |      (x, i) -> CASE WHEN x > 0 THEN 1::BIGINT << (i-1) ELSE 0::BIGINT END)) AS w1,
-        |    list_sum(list_transform(v[33:64],
-        |      (x, i) -> CASE WHEN x > 0 THEN 1::BIGINT << (i-1) ELSE 0::BIGINT END)) AS w2
-        |  FROM e),
-        |q AS (SELECT vec_id AS query_id, w1 AS q1, w2 AS q2 FROM b WHERE vec_id < 10),
-        |s AS (SELECT query_id, b.vec_id AS neighbor_id,
-        |        CAST(bit_count(xor(q1, w1)) + bit_count(xor(q2, w2)) AS INTEGER)
-        |          AS hamming
-        |      FROM b, q WHERE query_id <> b.vec_id)
-        |SELECT query_id, neighbor_id, hamming, CAST(rk AS INTEGER) AS rank
-        |FROM (SELECT *, row_number() OVER (
-        |        PARTITION BY query_id ORDER BY hamming, neighbor_id) rk
-        |      FROM s) t
-        |WHERE rk <= 5""".stripMargin,
-
-    // q184: base fingerprints distinct, delta min-id window, left
-    // join; the status CASE mirrors incrementalStatus branch order.
-    "q184_incremental_dedup" ->
-      """WITH basefp AS (
-        |  SELECT DISTINCT md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'))
-        |    AS fingerprint
-        |  FROM documents WHERE doc_id % 3 <> 0),
-        |delta AS (
-        |  SELECT doc_id,
-        |    md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fingerprint,
-        |    min(doc_id) OVER (
-        |      PARTITION BY md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')))
-        |      AS first_id
-        |  FROM documents WHERE doc_id % 3 = 0)
-        |SELECT d.doc_id, d.fingerprint,
-        |  CASE WHEN b.fingerprint IS NOT NULL THEN 'dup_of_base'
-        |       WHEN d.first_id <> d.doc_id THEN 'dup_in_delta'
-        |       ELSE 'new' END AS status
-        |FROM delta d LEFT JOIN basefp b ON d.fingerprint = b.fingerprint""".stripMargin,
-
-    // q183: E-S keys ln(u)/w off the md5 uniform, ln snapped at 1e-6
-    // before the one division; top-60 by (key DESC, id).
-    "q183_weighted_sample" ->
-      """WITH w AS (
-        |  SELECT doc_id,
-        |    CAST(greatest(CASE WHEN length(trim(text)) = 0 THEN 0
-        |      ELSE len(string_split_regex(trim(text), '\s+')) END, 1) AS BIGINT) AS w
-        |  FROM documents),
-        |k AS (
-        |  SELECT doc_id, w,
-        |    CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':es7'), 1, 8))
-        |      AS BIGINT) AS h
-        |  FROM w),
-        |scored AS (
-        |  SELECT doc_id, w,
-        |    floor(
-        |      (floor(ln(CAST(h + 1 AS DOUBLE) / 4294967296e0)*1e6 + 0.5)/1e6)
-        |        / CAST(w AS DOUBLE) * 1e6 + 0.5)/1e6 AS es_key
-        |  FROM k)
-        |SELECT doc_id, w, es_key FROM scored
-        |ORDER BY es_key DESC, doc_id LIMIT 60""".stripMargin,
-
-    // q182: one scored pass, winners per (anchor, same-label) island,
-    // integer-micros margin; mirrors Ann.hardestTriplets exactly.
-    "q182_hard_negatives" ->
-      """WITH a AS (SELECT vec_id AS anchor_id, label AS a_label,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qv
-        |           FROM embeddings WHERE vec_id < 10),
-        |c AS (SELECT vec_id AS cand_id, label AS c_label,
-        |        list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |      FROM embeddings),
-        |s AS (SELECT anchor_id, cand_id, a_label = c_label AS same,
-        |        CAST(floor(list_sum(list_transform(list_zip(qv, v),
-        |          p -> (p[1]-p[2])*(p[1]-p[2])))*1e6 + 0.5) AS BIGINT) AS em
-        |      FROM c, a WHERE anchor_id <> cand_id),
-        |best AS (SELECT * FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY anchor_id, same
-        |      ORDER BY em, cand_id) AS rk FROM s) t
-        |  WHERE rk = 1)
-        |SELECT anchor_id,
-        |  max(CASE WHEN same THEN cand_id END) AS pos_id,
-        |  max(CASE WHEN NOT same THEN cand_id END) AS neg_id,
-        |  max(CASE WHEN same THEN em END) AS pos_micros,
-        |  max(CASE WHEN NOT same THEN em END) AS neg_micros,
-        |  max(CASE WHEN NOT same THEN em END) - max(CASE WHEN same THEN em END)
-        |    AS margin_micros
-        |FROM best GROUP BY 1""".stripMargin,
-
-    "q160_pq_search" -> pqSearchOracleSql(m = 4, k = 4, dim = 64,
-      nQueries = 5, topK = 5),
-    // q154/q157: the BPE learner and the BPE segmenter, both via the
-    // unrolled greedy-merge window machinery (generators above).
-    "q154_bpe_merges" -> bpeMergeOracleSql(6),
-    "q157_bpe_segment" -> bpeSegmentOracleSql(bpeFixedMerges),
-    "q168_tokenizer_e2e" -> bpeTokenizerE2eOracleSql(rounds = 6, budget = 512L),
-    "q179_tokenizer_fertility" -> bpeFertilityOracleSql(bpeFixedMerges),
-
-    // q180: length buckets DIV 16, per-bucket (cost, id) rank into
-    // batches of 8, pad_frac = (n·max − Σ)/(n·max) floored at 1e-6.
-    "q180_length_batches" ->
-      """WITH c AS (
-        |  SELECT doc_id,
-        |    CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-        |         ELSE len(string_split_regex(trim(text), '\s+')) END AS BIGINT) AS cost
-        |  FROM documents),
-        |r AS (SELECT doc_id, cost, cost // 16 AS bucket,
-        |        row_number() OVER (PARTITION BY cost // 16
-        |          ORDER BY cost, doc_id) AS rn
-        |      FROM c),
-        |g AS (SELECT bucket, (rn - 1) // 8 AS batch,
-        |        CAST(count(*) AS BIGINT) AS n_docs,
-        |        max(cost) AS max_len, CAST(sum(cost) AS BIGINT) AS sum_len
-        |      FROM r GROUP BY 1, 2)
-        |SELECT bucket, batch, n_docs, max_len, sum_len,
-        |  CASE WHEN n_docs * max_len = 0 THEN 0e0 ELSE
-        |    floor(CAST(n_docs * max_len - sum_len AS DOUBLE)
-        |          / CAST(n_docs * max_len AS DOUBLE) * 1e6 + 0.5e0)/1e6 END
-        |    AS pad_frac
-        |FROM g""".stripMargin,
-
-    // q158: the ROI overlay replayed over the INDEPENDENTLY-parsed
-    // shapefile fixture (strict-inequality interval PIP mirrors the
-    // ray-cast for points never exactly on a boundary, the q61/q76
-    // convention); same two-level visit summary and exact integer
-    // frame sums, same left-join tail.
-    "q158_roi_overlay" ->
-      s"""WITH roi AS (SELECT * FROM ${graft.geo.RoiFixture3260.valuesSql}),
-         |pts AS (
-         |  SELECT c_custkey AS plot_id,
-         |    33000.0 + CAST((c_custkey * 37) % 1009 AS DOUBLE) / 1009.0 * 224100.0 AS x,
-         |    157400.0 + CAST((c_custkey * 61) % 997 AS DOUBLE) / 997.0 * 86100.0 AS y
-         |  FROM customer),
-         |meas AS (
-         |  SELECT o_custkey AS plot_id, o_orderdate AS date_assessment,
-         |    COALESCE(CASE WHEN o_custkey % 3 = 0 THEN 'REF_' || o_custkey END,
-         |             'DB_' || o_orderkey) AS link_mhq
-         |  FROM orders),
-         |hits AS (
-         |  SELECT roi.sbz, m.plot_id, m.date_assessment, m.link_mhq
-         |  FROM meas m JOIN pts USING (plot_id) JOIN roi
-         |    ON pts.x > roi.xmin AND pts.x < roi.xmax
-         |   AND pts.y > roi.ymin AND pts.y < roi.ymax),
-         |per_plot AS (
-         |  SELECT sbz, plot_id,
-         |    CAST(count(DISTINCT date_assessment) AS BIGINT) AS n_visits,
-         |    CAST(count(DISTINCT link_mhq) AS BIGINT) AS n_links_plot
-         |  FROM hits GROUP BY 1, 2),
-         |visits AS (
-         |  SELECT sbz, CAST(sum(n_visits) AS BIGINT) AS n_records,
-         |    CAST(count(*) AS BIGINT) AS n_plots,
-         |    CAST(sum(CASE WHEN n_visits >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_repeated_plots,
-         |    CAST(sum(n_links_plot) AS BIGINT) AS n_links
-         |  FROM per_plot GROUP BY 1),
-         |frame AS (
-         |  SELECT sbz, CAST(count(*) AS BIGINT) AS n_segments,
-         |    CAST(sum(CAST(floor(shape_leng * 1000000.0 + 0.5) AS BIGINT)) AS BIGINT) AS length_micros,
-         |    CAST(sum(CAST(floor((xmax - xmin) * (ymax - ymin) * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS bbox_area_dm2
-         |  FROM roi GROUP BY 1)
-         |SELECT f.sbz, f.n_segments, f.length_micros, f.bbox_area_dm2,
-         |  v.n_records, v.n_plots, v.n_repeated_plots, v.n_links,
-         |  CAST(floor(CAST(v.n_records AS DOUBLE)
-         |    / (CAST(f.length_micros AS DOUBLE) / 1000000000.0)
-         |    * 1000000.0 + 0.5) AS BIGINT) AS points_per_km_micros
-         |FROM frame f LEFT JOIN visits v ON f.sbz = v.sbz""".stripMargin,
-    // q99: replay Layout.zvalue — quantize each dimension to an 8-bit
-    // cell (scale by 2^bits, clamp the top cell; identical IEEE double
-    // ops in both engines), then interleave via unrolled shift/mask
-    // terms (bit b of dim i lands at b*ndims + i).
-    "q99_zorder_key" -> {
-      val cx = "least(CAST(floor((least(greatest(CAST(p_size AS DOUBLE), 1.0), 50.0)" +
-        " - 1.0) / 49.0 * 256.0) AS BIGINT), 255)"
-      val cy = "least(CAST(floor((least(greatest(CAST(p_retailprice AS DOUBLE), 900.0), 2100.0)" +
-        " - 900.0) / 1200.0 * 256.0) AS BIGINT), 255)"
-      val interleave = (0 until 8).flatMap(b => Seq(
-        s"(((cx >> $b) & 1) << ${2 * b})",
-        s"(((cy >> $b) & 1) << ${2 * b + 1})")).mkString(" + ")
-      s"""WITH cells AS (
-         |  SELECT p_partkey, $cx AS cx, $cy AS cy FROM part)
-         |SELECT p_partkey, $interleave AS z FROM cells""".stripMargin
-    },
-
-    // q142: the partitioned-Vc round trip must be value-invisible —
-    // the oracle aggregates the RAW events table; any loss in the
-    // partition write, directory-name type recovery, sidecar cast, or
-    // digest verification shows as a hash mismatch.
-    "q142_vc_partitioned_roundtrip" ->
-      """SELECT CAST(year(ts) AS INTEGER) AS mon_cycle, event_type,
-        | count(*) AS n,
-        | CAST(sum(CAST(round(value*100) AS BIGINT)) AS BIGINT) AS value_cents,
-        | count(DISTINCT user_id) AS n_users
-        |FROM events GROUP BY 1, 2""".stripMargin,
-
-    // q143: the decimal-comma CSV round trip must be value-invisible —
-    // the oracle aggregates raw parquet; any loss in the %.4f comma
-    // rendering or the translate-and-cast restore breaks the hash.
-    "q143_csv2_roundtrip" ->
-      """SELECT n_name, count(*) AS n_suppliers,
-        | CAST(sum(CAST(round(s_acctbal*100) AS BIGINT)) AS BIGINT)/100.0 AS acctbal_total
-        |FROM supplier JOIN nation ON s_nationkey = n_nationkey
-        |GROUP BY 1""".stripMargin,
-
-    // q144: the Derby round trip must be value-invisible — the oracle
-    // replays the pushed-down join/aggregate from raw parquet.
-    "q144_jdbc_roundtrip" ->
-      """SELECT r_name, CAST(count(*) AS BIGINT) AS n_nations,
-        | min(n_name) AS first_nation
-        |FROM nation JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY 1""".stripMargin,
-
-    // q145: the survey-scoped INBOVEG extract chain replayed from raw
-    // parquet — survey dim from region, recordings from customer,
-    // classifications from orders, scoped to surveys HT1/HT3.
-    "q145_inboveg_jdbc" ->
-      """SELECT 'IV' || o_custkey AS recording_givid,
-        | 'HT' || r_regionkey AS survey,
-        | CASE WHEN o_orderkey % 3 = 0 THEN '3260' ELSE 'gh' END AS type_observed,
-        | CASE WHEN o_orderkey % 2 = 0 THEN 'N2k' ELSE 'BWK' END AS classif_type,
-        | o_orderpriority AS classif_key,
-        | CAST(o_orderkey % 100 AS DOUBLE) AS type_cover
-        |FROM orders
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN region ON c_custkey % 5 = r_regionkey
-        |WHERE r_regionkey IN (1, 3)""".stripMargin,
-
-    "q146_group_any_flag" ->
-      """SELECT o_orderkey, o_custkey, o_orderstatus, has_urgent FROM (
-        |  SELECT o_orderkey, o_custkey, o_orderstatus,
-        |    max(CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END)
-        |      OVER (PARTITION BY o_custkey) = 1 AS has_urgent
-        |  FROM orders) t
-        |WHERE o_orderkey % 5 = 0""".stripMargin,
-
-    // q147: two Lloyd iterations replayed — init from the 8 lowest
-    // ids, fixed-point distance ranking (floor(d*1e6+0.5), id
-    // tiebreak), 2^-20-snapped integer coordinate sums for the update
-    // (order-independent -> bit-equal centroids), reassign, aggregate.
-    "q147_kmeans_clusters" ->
-      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |c0 AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 8),
-        |d0 AS (SELECT e.vec_id, c0.cid,
-        |         CAST(floor(list_sum(list_transform(list_zip(e.v, c0.cv),
-        |           p -> (p[1]-p[2])*(p[1]-p[2])))*1e6 + 0.5) AS BIGINT) AS dm
-        |       FROM e, c0),
-        |a0 AS (SELECT vec_id, cid FROM (
-        |         SELECT vec_id, cid,
-        |           row_number() OVER (PARTITION BY vec_id ORDER BY dm, cid) rk
-        |         FROM d0) t
-        |       WHERE rk = 1),
-        |ex AS (SELECT vec_id,
-        |         unnest(list_transform(v, (x, i) -> {'dim': i, 'x': x}),
-        |                recursive := true)
-        |       FROM e),
-        |upd AS (SELECT a0.cid, ex.dim,
-        |          sum(CAST(floor(ex.x*1048576.0 + 0.5) AS BIGINT)) AS s,
-        |          count(*) AS n
-        |        FROM ex JOIN a0 USING (vec_id) GROUP BY 1, 2),
-        |c1 AS (SELECT cid, list(s/(n*1048576.0) ORDER BY dim) AS cv
-        |       FROM upd GROUP BY cid),
-        |d1 AS (SELECT e.vec_id, c1.cid,
-        |         CAST(floor(list_sum(list_transform(list_zip(e.v, c1.cv),
-        |           p -> (p[1]-p[2])*(p[1]-p[2])))*1e6 + 0.5) AS BIGINT) AS dm
-        |       FROM e, c1),
-        |a1 AS (SELECT vec_id, cid, dm FROM (
-        |         SELECT vec_id, cid, dm,
-        |           row_number() OVER (PARTITION BY vec_id ORDER BY dm, cid) rk
-        |         FROM d1) t
-        |       WHERE rk = 1)
-        |SELECT CAST(cid AS INTEGER) AS cluster_id, count(*) AS n_points,
-        |  CAST(sum(vec_id) AS BIGINT) AS id_sum,
-        |  CAST(sum(dm) AS BIGINT) AS dist_micros
-        |FROM a1 GROUP BY 1""".stripMargin,
-
-    // q148: q147's two-iteration Lloyd CTE replayed verbatim through
-    // a1, then SemDeDup's within-cluster pairing: rank by (distance to
-    // final centroid, id); a doc is a dup when its fixed-point cosine
-    // to ANY better-ranked cluster mate reaches 400000 (0.40 in 1e-6
-    // units). Dots/norms are exact integer sums over 2^-20-snapped
-    // coordinates; the cosine double op sequence (dot / (sqrt·sqrt),
-    // ×1e6, +0.5, floor) matches the Spark expression exactly.
-    "q148_semantic_dedup" ->
-      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |c0 AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 8),
-        |d0 AS (SELECT e.vec_id, c0.cid,
-        |         CAST(floor(list_sum(list_transform(list_zip(e.v, c0.cv),
-        |           p -> (p[1]-p[2])*(p[1]-p[2])))*1e6 + 0.5) AS BIGINT) AS dm
-        |       FROM e, c0),
-        |a0 AS (SELECT vec_id, cid FROM (
-        |         SELECT vec_id, cid,
-        |           row_number() OVER (PARTITION BY vec_id ORDER BY dm, cid) rk
-        |         FROM d0) t
-        |       WHERE rk = 1),
-        |ex AS (SELECT vec_id,
-        |         unnest(list_transform(v, (x, i) -> {'dim': i, 'x': x}),
-        |                recursive := true)
-        |       FROM e),
-        |upd AS (SELECT a0.cid, ex.dim,
-        |          sum(CAST(floor(ex.x*1048576.0 + 0.5) AS BIGINT)) AS s,
-        |          count(*) AS n
-        |        FROM ex JOIN a0 USING (vec_id) GROUP BY 1, 2),
-        |c1 AS (SELECT cid, list(s/(n*1048576.0) ORDER BY dim) AS cv
-        |       FROM upd GROUP BY cid),
-        |d1 AS (SELECT e.vec_id, c1.cid,
-        |         CAST(floor(list_sum(list_transform(list_zip(e.v, c1.cv),
-        |           p -> (p[1]-p[2])*(p[1]-p[2])))*1e6 + 0.5) AS BIGINT) AS dm
-        |       FROM e, c1),
-        |a1 AS (SELECT vec_id, cid, dm FROM (
-        |         SELECT vec_id, cid, dm,
-        |           row_number() OVER (PARTITION BY vec_id ORDER BY dm, cid) rk
-        |         FROM d1) t
-        |       WHERE rk = 1),
-        |sv AS (SELECT vec_id,
-        |         list_transform(v, x -> CAST(floor(x*1048576.0 + 0.5) AS BIGINT)) AS sv
-        |       FROM e),
-        |n2 AS (SELECT vec_id,
-        |         CAST(list_sum(list_transform(sv, x -> x*x)) AS BIGINT) AS n2
-        |       FROM sv),
-        |rnk AS (SELECT vec_id, cid,
-        |          row_number() OVER (PARTITION BY cid ORDER BY dm, vec_id) AS rk
-        |        FROM a1),
-        |dups AS (SELECT DISTINCT y.vec_id
-        |         FROM rnk x JOIN rnk y ON x.cid = y.cid AND x.rk < y.rk
-        |         JOIN sv xs ON xs.vec_id = x.vec_id
-        |         JOIN sv ys ON ys.vec_id = y.vec_id
-        |         JOIN n2 xn ON xn.vec_id = x.vec_id
-        |         JOIN n2 yn ON yn.vec_id = y.vec_id
-        |         WHERE xn.n2 > 0 AND yn.n2 > 0
-        |           AND CAST(floor(CAST(list_sum(list_transform(
-        |                 list_zip(xs.sv, ys.sv), p -> p[1]*p[2])) AS DOUBLE)
-        |               / (sqrt(CAST(xn.n2 AS DOUBLE)) * sqrt(CAST(yn.n2 AS DOUBLE)))
-        |               * 1e6 + 0.5) AS BIGINT) >= 400000)
-        |SELECT CAST(a1.cid AS INTEGER) AS cluster_id, count(*) AS n_docs,
-        |  CAST(sum(CASE WHEN d.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_dups,
-        |  CAST(sum(CASE WHEN d.vec_id IS NOT NULL THEN a1.vec_id END) AS BIGINT) AS dup_id_sum,
-        |  CAST(sum(CASE WHEN d.vec_id IS NULL THEN a1.vec_id END) AS BIGINT) AS kept_id_sum
-        |FROM a1 LEFT JOIN dups d ON d.vec_id = a1.vec_id
-        |GROUP BY 1""".stripMargin,
-
-    // q149: two unrolled full-batch GD steps on the 2^-20-snapped
-    // inputs (trailing 1.0 = bias feature). Iteration 1 uses the exact
-    // simplification of zero weights: z = 0, s = 0.5, r = 0.5 - y —
-    // bit-equal to the engine's generic evaluation. Gradients are
-    // exact BIGINT sums; weight updates replay the engine's IEEE op
-    // sequence (g / (n·2^20), times lr, subtract); DuckDB's 1-based
-    // lambda index/list indexing stay internally consistent. The pred
-    // predicate is z >= 0 on BOTH sides (s >= 0.5 could diverge by one
-    // rounding ulp at z ~ 0).
-    "q149_linear_probe" ->
-      """WITH e AS (SELECT vec_id, label, CAST(label % 2 AS DOUBLE) AS y,
-        |    list_concat(list_transform(embedding,
-        |      x -> floor(CAST(x AS DOUBLE)*1048576.0 + 0.5)/1048576.0),
-        |      [CAST(1.0 AS DOUBLE)]) AS xs
-        |  FROM embeddings),
-        |ex1 AS (SELECT y,
-        |          unnest(list_transform(xs, (x, i) -> {'dim': i, 'x': x}),
-        |                 recursive := true)
-        |        FROM e),
-        |g1 AS (SELECT dim,
-        |         sum(CAST(floor((0.5 - y)*x*1048576.0 + 0.5) AS BIGINT)) AS g,
-        |         CAST(count(*) AS DOUBLE) AS n
-        |       FROM ex1 GROUP BY dim),
-        |w1 AS (SELECT list(0.0 - 4.0*(CAST(g AS DOUBLE)/(n*1048576.0)) ORDER BY dim) AS w
-        |       FROM g1),
-        |r2 AS (SELECT e.vec_id, e.y, e.xs,
-        |         (0.5 + z/(2.0*(1.0 + abs(z)))) - e.y AS r
-        |       FROM (SELECT e.*, list_sum(list_transform(list_zip(e.xs, w1.w),
-        |               p -> p[1]*p[2])) AS z
-        |             FROM e, w1) e),
-        |ex2 AS (SELECT r,
-        |          unnest(list_transform(xs, (x, i) -> {'dim': i, 'x': x}),
-        |                 recursive := true)
-        |        FROM r2),
-        |g2 AS (SELECT dim,
-        |         sum(CAST(floor(r*x*1048576.0 + 0.5) AS BIGINT)) AS g,
-        |         CAST(count(*) AS DOUBLE) AS n
-        |       FROM ex2 GROUP BY dim),
-        |w2 AS (SELECT list(w1.w[g2.dim] - 4.0*(CAST(g2.g AS DOUBLE)/(g2.n*1048576.0))
-        |                   ORDER BY g2.dim) AS w
-        |       FROM g2, w1),
-        |sc AS (SELECT e.vec_id, e.label, e.y,
-        |         list_sum(list_transform(list_zip(e.xs, w2.w), p -> p[1]*p[2])) AS z
-        |       FROM e, w2)
-        |SELECT label, count(*) AS n_docs,
-        |  CAST(sum(CASE WHEN z >= 0.0 THEN 1 ELSE 0 END) AS BIGINT) AS n_pred_pos,
-        |  CAST(sum(CAST(floor((0.5 + z/(2.0*(1.0 + abs(z))))*1e6 + 0.5) AS BIGINT)) AS BIGINT)
-        |    AS score_micros_sum,
-        |  CAST(sum(CASE WHEN (z >= 0.0) = (y = 1.0) THEN 1 ELSE 0 END) AS BIGINT) AS n_correct
-        |FROM sc GROUP BY 1""".stripMargin,
-
-    // q150: q147's Lloyd CTE replayed verbatim through a1, then the
-    // per-cluster (dist_micros, id) rank keeps the 20 most-central
-    // documents of each cell — integer arithmetic end to end.
-    "q150_coreset_sample" ->
-      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |c0 AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 8),
-        |d0 AS (SELECT e.vec_id, c0.cid,
-        |         CAST(floor(list_sum(list_transform(list_zip(e.v, c0.cv),
-        |           p -> (p[1]-p[2])*(p[1]-p[2])))*1e6 + 0.5) AS BIGINT) AS dm
-        |       FROM e, c0),
-        |a0 AS (SELECT vec_id, cid FROM (
-        |         SELECT vec_id, cid,
-        |           row_number() OVER (PARTITION BY vec_id ORDER BY dm, cid) rk
-        |         FROM d0) t
-        |       WHERE rk = 1),
-        |ex AS (SELECT vec_id,
-        |         unnest(list_transform(v, (x, i) -> {'dim': i, 'x': x}),
-        |                recursive := true)
-        |       FROM e),
-        |upd AS (SELECT a0.cid, ex.dim,
-        |          sum(CAST(floor(ex.x*1048576.0 + 0.5) AS BIGINT)) AS s,
-        |          count(*) AS n
-        |        FROM ex JOIN a0 USING (vec_id) GROUP BY 1, 2),
-        |c1 AS (SELECT cid, list(s/(n*1048576.0) ORDER BY dim) AS cv
-        |       FROM upd GROUP BY cid),
-        |d1 AS (SELECT e.vec_id, c1.cid,
-        |         CAST(floor(list_sum(list_transform(list_zip(e.v, c1.cv),
-        |           p -> (p[1]-p[2])*(p[1]-p[2])))*1e6 + 0.5) AS BIGINT) AS dm
-        |       FROM e, c1),
-        |a1 AS (SELECT vec_id, cid, dm FROM (
-        |         SELECT vec_id, cid, dm,
-        |           row_number() OVER (PARTITION BY vec_id ORDER BY dm, cid) rk
-        |         FROM d1) t
-        |       WHERE rk = 1)
-        |SELECT vec_id, CAST(cid AS INTEGER) AS cluster_id,
-        |  dm AS dist_micros, CAST(rk AS INTEGER) AS rk
-        |FROM (SELECT vec_id, cid, dm,
-        |        row_number() OVER (PARTITION BY cid ORDER BY dm, vec_id) AS rk
-        |      FROM a1) t
-        |WHERE rk <= 20""".stripMargin,
-
-    // q151: q40's fingerprint-window canonical id feeding q82's
-    // md5-prefix bucket arithmetic, keyed on the canonical id.
-    "q151_leakage_safe_split" ->
-      """WITH canon AS (
-        |  SELECT doc_id,
-        |    min(doc_id) OVER (
-        |      PARTITION BY md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'))
-        |    ) AS canonical_id
-        |  FROM documents)
-        |SELECT doc_id, canonical_id,
-        |  CAST(('0x' || substr(md5(CAST(canonical_id AS VARCHAR)), 1, 8)) AS BIGINT) % 100 AS bucket,
-        |  CASE WHEN CAST(('0x' || substr(md5(CAST(canonical_id AS VARCHAR)), 1, 8)) AS BIGINT) % 100 < 80 THEN 'train'
-        |       WHEN CAST(('0x' || substr(md5(CAST(canonical_id AS VARCHAR)), 1, 8)) AS BIGINT) % 100 < 90 THEN 'val'
-        |       ELSE 'test' END AS split
-        |FROM canon""".stripMargin,
-
-    // q152: mean-center on exact integer sums, two unrolled power
-    // steps (step 1 uses the exact all-ones simplification c·1 = c, so
-    // dot = list_sum(cs)), then the unit projection. The update
-    // floor(c·dot·2^20 + 0.5) is an exact BIGINT sum; the norm is an
-    // in-order list_sum matching the engine's left fold.
-    "q152_dominant_direction" ->
-      """WITH e AS (SELECT vec_id, label,
-        |    list_transform(embedding,
-        |      x -> floor(CAST(x AS DOUBLE)*1048576.0 + 0.5)/1048576.0) AS xs
-        |  FROM embeddings),
-        |exm AS (SELECT unnest(list_transform(xs, (x, i) -> {'dim': i, 'x': x}),
-        |                      recursive := true)
-        |        FROM e),
-        |ms AS (SELECT dim, sum(CAST(floor(x*1048576.0 + 0.5) AS BIGINT)) AS s,
-        |         CAST(count(*) AS DOUBLE) AS n
-        |       FROM exm GROUP BY dim),
-        |mu AS (SELECT list(CAST(s AS DOUBLE)/(n*1048576.0) ORDER BY dim) AS m FROM ms),
-        |cc AS (SELECT e.vec_id, e.label,
-        |         list_transform(list_zip(e.xs, mu.m), p -> p[1]-p[2]) AS cs
-        |       FROM e, mu),
-        |d1 AS (SELECT vec_id, label, cs, list_sum(cs) AS dot FROM cc),
-        |ex1 AS (SELECT dot,
-        |          unnest(list_transform(cs, (x, i) -> {'dim': i, 'c': x}),
-        |                 recursive := true)
-        |        FROM d1),
-        |g1 AS (SELECT dim, sum(CAST(floor(c*dot*1048576.0 + 0.5) AS BIGINT)) AS g,
-        |         CAST(count(*) AS DOUBLE) AS n
-        |       FROM ex1 GROUP BY dim),
-        |v1 AS (SELECT list(CAST(g AS DOUBLE)/(n*1048576.0) ORDER BY dim) AS v FROM g1),
-        |d2 AS (SELECT cc.vec_id, cc.label, cc.cs,
-        |         list_sum(list_transform(list_zip(cc.cs, v1.v), p -> p[1]*p[2])) AS dot
-        |       FROM cc, v1),
-        |ex2 AS (SELECT dot,
-        |          unnest(list_transform(cs, (x, i) -> {'dim': i, 'c': x}),
-        |                 recursive := true)
-        |        FROM d2),
-        |g2 AS (SELECT dim, sum(CAST(floor(c*dot*1048576.0 + 0.5) AS BIGINT)) AS g,
-        |         CAST(count(*) AS DOUBLE) AS n
-        |       FROM ex2 GROUP BY dim),
-        |v2 AS (SELECT list(CAST(g AS DOUBLE)/(n*1048576.0) ORDER BY dim) AS v FROM g2),
-        |nv AS (SELECT sqrt(list_sum(list_transform(v2.v, x -> x*x))) AS nrm FROM v2),
-        |sc AS (SELECT cc.vec_id, cc.label,
-        |         CAST(floor(list_sum(list_transform(list_zip(cc.cs, v2.v),
-        |             p -> p[1]*p[2]))/nv.nrm*1e6 + 0.5) AS BIGINT) AS pm
-        |       FROM cc, v2, nv)
-        |SELECT label, count(*) AS n_docs,
-        |  CAST(sum(pm) AS BIGINT) AS proj_micros_sum,
-        |  CAST(sum(abs(pm)) AS BIGINT) AS abs_proj_micros_sum,
-        |  CAST(sum(CASE WHEN pm >= 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_pos
-        |FROM sc GROUP BY 1""".stripMargin,
-
-    // q153: re-parse the UTF-8 payload as little-endian int16 PCM
-    // through hex() — byte 2i is the low byte (positions 4i+1..4i+2 of
-    // the hex string), byte 2i+1 the high byte — then replay the
-    // window features: RMS = floor(sqrt(Σs²/cnt)·1e6 + 0.5) (exact
-    // integer sums, one deterministic sqrt), zero crossings between
-    // consecutive samples within a window (window starts excluded via
-    // i % 256 = 0), peak = max |s|. A trailing odd byte is ignored
-    // (octet_length // 2), zero-sample docs vanish on both sides.
-    "q153_pcm_features" ->
-      """WITH m AS (SELECT doc_id, hex(encode(text)) AS h,
-        |             octet_length(encode(text)) // 2 AS n
-        |           FROM documents),
-        |sm AS (SELECT doc_id, i,
-        |         CAST(('0x' || substr(h, 4*i + 3, 2) || substr(h, 4*i + 1, 2))
-        |              AS INTEGER) AS v
-        |       FROM (SELECT doc_id, h, unnest(range(n)) AS i FROM m) t),
-        |sg AS (SELECT doc_id, i, i // 256 AS win,
-        |         CASE WHEN v >= 32768 THEN v - 65536 ELSE v END AS s
-        |       FROM sm),
-        |zcs AS (SELECT doc_id, i, win, s,
-        |          CASE WHEN i % 256 <> 0
-        |                 AND (s >= 0) <>
-        |                     (lag(s) OVER (PARTITION BY doc_id ORDER BY i) >= 0)
-        |               THEN 1 ELSE 0 END AS z
-        |        FROM sg),
-        |wn AS (SELECT doc_id, win,
-        |         CAST(floor(sqrt(CAST(sum(CAST(s AS BIGINT)*s) AS DOUBLE)
-        |                         / count(*)) * 1e6 + 0.5) AS BIGINT) AS rms,
-        |         sum(z) AS zc, max(abs(s)) AS pk
-        |       FROM zcs GROUP BY 1, 2)
-        |SELECT doc_id AS media_id, count(*) AS n_windows,
-        |  CAST(sum(rms) AS BIGINT) AS rms_micros_sum,
-        |  CAST(sum(zc) AS BIGINT) AS zero_crossings,
-        |  CAST(max(pk) AS INTEGER) AS peak
-        |FROM wn GROUP BY 1""".stripMargin,
-
-    // q156: q148's Lloyd CTE through rnk, pairs with the sim in the
-    // SELECT (filtered in the outer), cluster representatives ranked
-    // by cluster id for the deterministic negative pick.
-    "q156_contrastive_triplets" ->
-      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |c0 AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 8),
-        |d0 AS (SELECT e.vec_id, c0.cid,
-        |         CAST(floor(list_sum(list_transform(list_zip(e.v, c0.cv),
-        |           p -> (p[1]-p[2])*(p[1]-p[2])))*1e6 + 0.5) AS BIGINT) AS dm
-        |       FROM e, c0),
-        |a0 AS (SELECT vec_id, cid FROM (
-        |         SELECT vec_id, cid,
-        |           row_number() OVER (PARTITION BY vec_id ORDER BY dm, cid) rk
-        |         FROM d0) t
-        |       WHERE rk = 1),
-        |ex AS (SELECT vec_id,
-        |         unnest(list_transform(v, (x, i) -> {'dim': i, 'x': x}),
-        |                recursive := true)
-        |       FROM e),
-        |upd AS (SELECT a0.cid, ex.dim,
-        |          sum(CAST(floor(ex.x*1048576.0 + 0.5) AS BIGINT)) AS s,
-        |          count(*) AS n
-        |        FROM ex JOIN a0 USING (vec_id) GROUP BY 1, 2),
-        |c1 AS (SELECT cid, list(s/(n*1048576.0) ORDER BY dim) AS cv
-        |       FROM upd GROUP BY cid),
-        |d1 AS (SELECT e.vec_id, c1.cid,
-        |         CAST(floor(list_sum(list_transform(list_zip(e.v, c1.cv),
-        |           p -> (p[1]-p[2])*(p[1]-p[2])))*1e6 + 0.5) AS BIGINT) AS dm
-        |       FROM e, c1),
-        |a1 AS (SELECT vec_id, cid, dm FROM (
-        |         SELECT vec_id, cid, dm,
-        |           row_number() OVER (PARTITION BY vec_id ORDER BY dm, cid) rk
-        |         FROM d1) t
-        |       WHERE rk = 1),
-        |sv AS (SELECT vec_id,
-        |         list_transform(v, x -> CAST(floor(x*1048576.0 + 0.5) AS BIGINT)) AS sv
-        |       FROM e),
-        |n2 AS (SELECT vec_id,
-        |         CAST(list_sum(list_transform(sv, x -> x*x)) AS BIGINT) AS n2
-        |       FROM sv),
-        |rnk AS (SELECT vec_id, cid,
-        |          row_number() OVER (PARTITION BY cid ORDER BY dm, vec_id) AS rk
-        |        FROM a1),
-        |reps AS (SELECT cid, vec_id AS rep_id,
-        |           row_number() OVER (ORDER BY cid) AS o
-        |         FROM rnk WHERE rk = 1),
-        |prs AS (SELECT x.cid, x.vec_id AS id_a, y.vec_id AS id_b,
-        |          CAST(floor(CAST(list_sum(list_transform(
-        |              list_zip(xs.sv, ys.sv), p -> p[1]*p[2])) AS DOUBLE)
-        |            / (sqrt(CAST(xn.n2 AS DOUBLE)) * sqrt(CAST(yn.n2 AS DOUBLE)))
-        |            * 1e6 + 0.5) AS BIGINT) AS sim_micros
-        |        FROM rnk x JOIN rnk y ON x.cid = y.cid AND x.rk < y.rk
-        |        JOIN sv xs ON xs.vec_id = x.vec_id
-        |        JOIN sv ys ON ys.vec_id = y.vec_id
-        |        JOIN n2 xn ON xn.vec_id = x.vec_id
-        |        JOIN n2 yn ON yn.vec_id = y.vec_id
-        |        WHERE xn.n2 > 0 AND yn.n2 > 0),
-        |q AS (SELECT * FROM prs WHERE sim_micros >= 400000)
-        |SELECT CAST(q.cid AS INTEGER) AS cluster_id, q.id_a, q.id_b, q.sim_micros,
-        |  CASE WHEN q.cid = (SELECT cid FROM reps WHERE o = 1)
-        |       THEN (SELECT rep_id FROM reps WHERE o = 2)
-        |       ELSE (SELECT rep_id FROM reps WHERE o = 1) END AS neg_id
-        |FROM q""".stripMargin,
-
-    // q155: the curation funnel assembled from pinned fragments —
-    // q148's full SemDeDup CTE (Lloyd prefix in lockstep), q40's
-    // fingerprint canonical, q41's token count, q82's md5-bucket split
-    // keyed on the canonical id.
-    "q155_curation_funnel" ->
-      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |c0 AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 8),
-        |d0 AS (SELECT e.vec_id, c0.cid,
-        |         CAST(floor(list_sum(list_transform(list_zip(e.v, c0.cv),
-        |           p -> (p[1]-p[2])*(p[1]-p[2])))*1e6 + 0.5) AS BIGINT) AS dm
-        |       FROM e, c0),
-        |a0 AS (SELECT vec_id, cid FROM (
-        |         SELECT vec_id, cid,
-        |           row_number() OVER (PARTITION BY vec_id ORDER BY dm, cid) rk
-        |         FROM d0) t
-        |       WHERE rk = 1),
-        |ex AS (SELECT vec_id,
-        |         unnest(list_transform(v, (x, i) -> {'dim': i, 'x': x}),
-        |                recursive := true)
-        |       FROM e),
-        |upd AS (SELECT a0.cid, ex.dim,
-        |          sum(CAST(floor(ex.x*1048576.0 + 0.5) AS BIGINT)) AS s,
-        |          count(*) AS n
-        |        FROM ex JOIN a0 USING (vec_id) GROUP BY 1, 2),
-        |c1 AS (SELECT cid, list(s/(n*1048576.0) ORDER BY dim) AS cv
-        |       FROM upd GROUP BY cid),
-        |d1 AS (SELECT e.vec_id, c1.cid,
-        |         CAST(floor(list_sum(list_transform(list_zip(e.v, c1.cv),
-        |           p -> (p[1]-p[2])*(p[1]-p[2])))*1e6 + 0.5) AS BIGINT) AS dm
-        |       FROM e, c1),
-        |a1 AS (SELECT vec_id, cid, dm FROM (
-        |         SELECT vec_id, cid, dm,
-        |           row_number() OVER (PARTITION BY vec_id ORDER BY dm, cid) rk
-        |         FROM d1) t
-        |       WHERE rk = 1),
-        |sv AS (SELECT vec_id,
-        |         list_transform(v, x -> CAST(floor(x*1048576.0 + 0.5) AS BIGINT)) AS sv
-        |       FROM e),
-        |n2 AS (SELECT vec_id,
-        |         CAST(list_sum(list_transform(sv, x -> x*x)) AS BIGINT) AS n2
-        |       FROM sv),
-        |rnk AS (SELECT vec_id, cid,
-        |          row_number() OVER (PARTITION BY cid ORDER BY dm, vec_id) AS rk
-        |        FROM a1),
-        |dups AS (SELECT DISTINCT y.vec_id
-        |         FROM rnk x JOIN rnk y ON x.cid = y.cid AND x.rk < y.rk
-        |         JOIN sv xs ON xs.vec_id = x.vec_id
-        |         JOIN sv ys ON ys.vec_id = y.vec_id
-        |         JOIN n2 xn ON xn.vec_id = x.vec_id
-        |         JOIN n2 yn ON yn.vec_id = y.vec_id
-        |         WHERE xn.n2 > 0 AND yn.n2 > 0
-        |           AND CAST(floor(CAST(list_sum(list_transform(
-        |                 list_zip(xs.sv, ys.sv), p -> p[1]*p[2])) AS DOUBLE)
-        |               / (sqrt(CAST(xn.n2 AS DOUBLE)) * sqrt(CAST(yn.n2 AS DOUBLE)))
-        |               * 1e6 + 0.5) AS BIGINT) >= 400000),
-        |canon AS (
-        |  SELECT doc_id, text,
-        |    min(doc_id) OVER (
-        |      PARTITION BY md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'))
-        |    ) AS canonical_id
-        |  FROM documents),
-        |funnel AS (
-        |  SELECT c.doc_id, c.canonical_id,
-        |    len(string_split_regex(trim(c.text), '\s+')) AS n_tokens
-        |  FROM canon c LEFT JOIN dups d ON d.vec_id = c.doc_id
-        |  WHERE c.doc_id = c.canonical_id AND d.vec_id IS NULL
-        |    AND len(string_split_regex(trim(c.text), '\s+')) >= 30),
-        |sp AS (
-        |  SELECT doc_id, n_tokens,
-        |    CASE WHEN CAST(('0x' || substr(md5(CAST(canonical_id AS VARCHAR)), 1, 8)) AS BIGINT) % 100 < 80 THEN 'train'
-        |         WHEN CAST(('0x' || substr(md5(CAST(canonical_id AS VARCHAR)), 1, 8)) AS BIGINT) % 100 < 90 THEN 'val'
-        |         ELSE 'test' END AS split
-        |  FROM funnel)
-        |SELECT split, count(*) AS n_docs,
-        |  CAST(sum(doc_id) AS BIGINT) AS id_sum,
-        |  CAST(sum(n_tokens) AS BIGINT) AS token_sum
-        |FROM sp GROUP BY 1""".stripMargin,
-
-    "q94_vc_incremental_append" ->
-      """SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,
-        | CAST(o_orderdate AS DATE) AS o_orderdate
-        |FROM orders WHERE o_orderkey % 7 IN (0, 1)""".stripMargin,
-
-    "q95_vc_upsert_patch" ->
-      """SELECT c_custkey, c_name,
-        | CASE WHEN c_custkey % 10 = 3 THEN c_acctbal * 1.5 ELSE c_acctbal END AS c_acctbal,
-        | c_mktsegment
-        |FROM customer""".stripMargin,
-
-    "q97_ht3260_header" ->
-      """WITH sq AS (
-        |  SELECT 'IV' || c_custkey AS recording_givid,
-        |    'Betrouwbaarheid opname: ' ||
-        |      CASE WHEN c_custkey % 3 = 0 THEN 'hoog'
-        |           WHEN c_custkey % 3 = 1 THEN 'matig' ELSE 'laag' END AS value,
-        |    CAST(NULL AS VARCHAR) AS comment
-        |  FROM customer WHERE c_custkey % 4 = 0
-        |  UNION ALL
-        |  SELECT 'IV' || c_custkey,
-        |    CASE WHEN c_custkey % 2 = 0 THEN 'Geen opname: niet toegankelijk'
-        |         ELSE 'Geen opname: drooggevallen' END,
-        |    CASE WHEN c_custkey % 10 = 0 THEN 'tijdelijk droog' END
-        |  FROM customer WHERE c_custkey % 5 = 0),
-        |spread AS (
-        |  SELECT recording_givid,
-        |    replace(min(CASE WHEN value LIKE '%Betrouwbaarheid opname:%' THEN value END),
-        |            'Betrouwbaarheid opname: ', '') AS reliability,
-        |    replace(replace(min(CASE WHEN value LIKE '%Geen opname:%' THEN value END),
-        |            'Geen opname: ', ''), 'niet toegankelijk', 'ongeschikt') AS reason_no_survey,
-        |    min(comment) AS comment
-        |  FROM sq GROUP BY 1),
-        |hdr AS (
-        |  SELECT 'IV' || c_custkey AS recording_givid, 'HT3260' AS survey,
-        |    c_name AS user_reference, c_mktsegment AS location,
-        |    CASE WHEN c_custkey % 11 = 5 THEN NULL
-        |         WHEN c_custkey % 3 = 0 THEN 'gh'
-        |         WHEN c_custkey % 3 = 1 THEN 'unknown'
-        |         ELSE '3260' END AS type_observed,
-        |    (c_custkey % 7 NOT IN (2, 3, 4)) AS measured
-        |  FROM customer)
-        |SELECT h.recording_givid, h.survey, h.user_reference, h.location,
-        |  h.type_observed, s.reliability, s.reason_no_survey,
-        |  CASE WHEN s.comment IS NULL THEN s.reason_no_survey
-        |       ELSE concat_ws('; ', s.reason_no_survey, s.comment) END AS comment_not_measured,
-        |  (h.type_observed = '3260' AND s.reason_no_survey IS NULL) AS suitable_mhq,
-        |  h.measured
-        |FROM hdr h LEFT JOIN spread s USING (recording_givid)""".stripMargin,
-
-    // q62: DuckDB replay of the Green's-theorem circle∩polygon edge
-    // decomposition (GeoKernels.circleIntersectionArea, r = 9 at the
-    // origin) over the same 4-edge rectangle rings; weights from exact
-    // micro-m² fixed point so the per-plot sum is order-independent.
-    "q62_plot_segment_areas" ->
-      """WITH seg AS (
-        |  SELECT p_partkey % 500 AS plot_id,
-        |         CAST(p_partkey // 500 AS INTEGER) AS segment_id,
-        |         CAST(p_size % 12 - 6 AS DOUBLE) AS x0,
-        |         CAST(p_partkey % 9 - 4 AS DOUBLE) AS y0
-        |  FROM part),
-        |ring AS (SELECT *, x0 + 8.0 AS x1, y0 + 7.0 AS y1 FROM seg),
-        |edges AS (
-        |  SELECT plot_id, segment_id, x0, y0, x1, y1, x0 AS ax, y0 AS ay, x1 AS bx, y0 AS by FROM ring
-        |  UNION ALL SELECT plot_id, segment_id, x0, y0, x1, y1, x1, y0, x1, y1 FROM ring
-        |  UNION ALL SELECT plot_id, segment_id, x0, y0, x1, y1, x1, y1, x0, y1 FROM ring
-        |  UNION ALL SELECT plot_id, segment_id, x0, y0, x1, y1, x0, y1, x0, y0 FROM ring),
-        |e1 AS (
-        |  SELECT *, 81.0 AS r2, bx - ax AS dx, by - ay AS dy,
-        |    ax*ax + ay*ay AS na, bx*bx + by*by AS nb,
-        |    ax*by - ay*bx AS crossab, ax*bx + ay*by AS dotab
-        |  FROM edges),
-        |e2 AS (
-        |  SELECT *, dx*dx + dy*dy AS a, 2*(ax*dx + ay*dy) AS b, na - r2 AS c,
-        |    (na <= r2 + 1e-12) AS in1, (nb <= r2 + 1e-12) AS in2
-        |  FROM e1),
-        |e3 AS (SELECT *, b*b - 4*a*c AS disc FROM e2),
-        |e4 AS (
-        |  SELECT *,
-        |    CASE WHEN disc > 0 THEN (-b - sqrt(disc))/(2*a) END AS t1,
-        |    CASE WHEN disc > 0 THEN (-b + sqrt(disc))/(2*a) END AS t2
-        |  FROM e3),
-        |e5 AS (
-        |  SELECT *,
-        |    CASE WHEN t1 > 0 AND t1 < 1 THEN t1 ELSE t2 END AS t_exit,
-        |    CASE WHEN t2 > 0 AND t2 < 1 THEN t2 ELSE t1 END AS t_enter
-        |  FROM e4),
-        |e6 AS (
-        |  SELECT *,
-        |    ax + t_exit*dx AS xx, ay + t_exit*dy AS xy,
-        |    ax + t_enter*dx AS ex, ay + t_enter*dy AS ey,
-        |    ax + t1*dx AS p1x, ay + t1*dy AS p1y,
-        |    ax + t2*dx AS p2x, ay + t2*dy AS p2y
-        |  FROM e5),
-        |contrib AS (
-        |  SELECT plot_id, segment_id, x0, y0, x1, y1,
-        |    CASE
-        |      WHEN a < 1e-24 THEN 0.0
-        |      WHEN in1 AND in2 THEN crossab/2.0
-        |      WHEN disc <= 0 THEN 0.5*r2*atan2(crossab, dotab)
-        |      WHEN in1 AND NOT in2 THEN
-        |        (ax*xy - ay*xx)/2.0 + 0.5*r2*atan2(xx*by - xy*bx, xx*bx + xy*by)
-        |      WHEN NOT in1 AND in2 THEN
-        |        0.5*r2*atan2(ax*ey - ay*ex, ax*ex + ay*ey) + (ex*by - ey*bx)/2.0
-        |      WHEN t1 > 0 AND t1 < 1 AND t2 > 0 AND t2 < 1 AND t2 > t1 THEN
-        |        0.5*r2*atan2(ax*p1y - ay*p1x, ax*p1x + ay*p1y)
-        |        + (p1x*p2y - p1y*p2x)/2.0
-        |        + 0.5*r2*atan2(p2x*by - p2y*bx, p2x*bx + p2y*by)
-        |      ELSE 0.5*r2*atan2(crossab, dotab)
-        |    END AS contribution
-        |  FROM e6),
-        |areas AS (
-        |  SELECT plot_id, segment_id,
-        |    abs(sum(contribution)) AS a3,
-        |    abs(((any_value(x0) + any_value(x0))*(any_value(y0) - any_value(y1))
-        |       + (any_value(x1) + any_value(x1))*(any_value(y1) - any_value(y0)))/2.0) AS a4
-        |  FROM contrib GROUP BY plot_id, segment_id),
-        |fixedpt AS (
-        |  SELECT *, CAST(floor(a3*1e6 + 0.5) AS BIGINT) AS a3_u FROM areas),
-        |weighted AS (
-        |  SELECT *, sum(a3_u) OVER (PARTITION BY plot_id) AS plot_u FROM fixedpt)
-        |SELECT plot_id, segment_id,
-        |  floor(a3*1e6 + 0.5)/1e6 AS area_a3_m2,
-        |  floor(a4*1e6 + 0.5)/1e6 AS area_a4_m2,
-        |  CASE WHEN plot_u > 0
-        |       THEN floor((CAST(a3_u AS DOUBLE)/CAST(plot_u AS DOUBLE))*1e6 + 0.5)/1e6
-        |  END AS segment_weight_a3
-        |FROM weighted""".stripMargin,
-
-    // q63: DuckDB replay of the Lambert-72 <-> WGS84 chain
-    // (GeoKernels.lambert72ToWgs84 / wgs84ToLambert72): same EPSG
-    // constants, same fixed iteration counts (16 LCC / 20+20 geodetic)
-    // via recursive CTEs, same Java toRadians/toDegrees multipliers.
-    "q63_crs_roundtrip" ->
-      """WITH RECURSIVE const AS (
-        |  SELECT 6378388.0 AS ai,
-        |    2.0*(1.0/297.0) - (1.0/297.0)*(1.0/297.0) AS e2i,
-        |    sqrt(2.0*(1.0/297.0) - (1.0/297.0)*(1.0/297.0)) AS ei,
-        |    6378137.0 AS aw,
-        |    2.0*(1.0/298.257223563) - (1.0/298.257223563)*(1.0/298.257223563) AS e2w,
-        |    (49.0 + 50.0/60 + 0.00204/3600) * 0.017453292519943295 AS phi1,
-        |    (51.0 + 10.0/60 + 0.00204/3600) * 0.017453292519943295 AS phi2,
-        |    90.0 * 0.017453292519943295 AS phi0,
-        |    (4.0 + 22.0/60 + 2.952/3600) * 0.017453292519943295 AS lam0,
-        |    150000.013 AS xoff, 5400088.438 AS yoff,
-        |    -106.8686 AS htx, 52.2978 AS hty, -103.7239 AS htz,
-        |    (-0.3366/3600) * 0.017453292519943295 AS hrx,
-        |    (0.457/3600) * 0.017453292519943295 AS hry,
-        |    (-1.8422/3600) * 0.017453292519943295 AS hrz,
-        |    1.0 + (-1.2747e-6) AS hs),
-        |const2 AS (
-        |  SELECT *,
-        |    cos(phi1)/sqrt(1 - e2i*sin(phi1)*sin(phi1)) AS m1,
-        |    cos(phi2)/sqrt(1 - e2i*sin(phi2)*sin(phi2)) AS m2,
-        |    tan(pi()/4 - phi1/2) / pow((1 - ei*sin(phi1))/(1 + ei*sin(phi1)), ei/2) AS tf1,
-        |    tan(pi()/4 - phi2/2) / pow((1 - ei*sin(phi2))/(1 + ei*sin(phi2)), ei/2) AS tf2,
-        |    tan(pi()/4 - phi0/2) / pow((1 - ei*sin(phi0))/(1 + ei*sin(phi0)), ei/2) AS tf0
-        |  FROM const),
-        |const3 AS (SELECT *, (ln(m1) - ln(m2))/(ln(tf1) - ln(tf2)) AS n FROM const2),
-        |const4 AS (SELECT *, m1/(n * pow(tf1, n)) AS ff FROM const3),
-        |cc AS (SELECT *, CASE WHEN tf0 <= 0 THEN 0.0 ELSE ai*ff*pow(tf0, n) END AS rho0 FROM const4),
-        |pts AS (
-        |  SELECT s_suppkey, 140000.0 + s_suppkey*100 AS x, 160000.0 + s_suppkey*80 AS y
-        |  FROM supplier),
-        |prep AS (
-        |  SELECT p.s_suppkey, p.x, p.y, c.*,
-        |    p.x - c.xoff AS dx, c.rho0 - (p.y - c.yoff) AS dy
-        |  FROM pts p CROSS JOIN cc c),
-        |prep2 AS (
-        |  SELECT *, sign(n)*sqrt(dx*dx + dy*dy) AS rho, atan2(dx, dy) AS theta FROM prep),
-        |prep3 AS (SELECT *, pow(rho/(ai*ff), 1.0/n) AS tt FROM prep2),
-        |inv(it, s_suppkey, phi) AS (
-        |  SELECT 0, s_suppkey, pi()/2 - 2*atan(tt) FROM prep3
-        |  UNION ALL
-        |  SELECT i.it + 1, i.s_suppkey,
-        |    pi()/2 - 2*atan(p.tt * pow((1 - p.ei*sin(i.phi))/(1 + p.ei*sin(i.phi)), p.ei/2))
-        |  FROM inv i JOIN prep3 p ON i.s_suppkey = p.s_suppkey WHERE i.it < 16),
-        |geo AS (
-        |  SELECT p.*, i.phi AS phib, p.theta/p.n + p.lam0 AS lamb
-        |  FROM prep3 p JOIN inv i ON i.s_suppkey = p.s_suppkey AND i.it = 16),
-        |ecef1 AS (
-        |  SELECT *, ai/sqrt(1 - e2i*sin(phib)*sin(phib)) AS nu1 FROM geo),
-        |ecef2 AS (
-        |  SELECT *,
-        |    nu1*cos(phib)*cos(lamb) AS gx, nu1*cos(phib)*sin(lamb) AS gy,
-        |    nu1*(1 - e2i)*sin(phib) AS gz
-        |  FROM ecef1),
-        |helm AS (
-        |  SELECT *,
-        |    htx + hs*(gx + hrz*gy - hry*gz) AS wx,
-        |    hty + hs*(-hrz*gx + gy + hrx*gz) AS wy,
-        |    htz + hs*(hry*gx - hrx*gy + gz) AS wz
-        |  FROM ecef2),
-        |g2 AS (
-        |  SELECT *, atan2(wy, wx) AS lamw, sqrt(wx*wx + wy*wy) AS pw FROM helm),
-        |wgs(it, s_suppkey, phi) AS (
-        |  SELECT 0, s_suppkey, atan2(wz, pw*(1 - e2w)) FROM g2
-        |  UNION ALL
-        |  SELECT i.it + 1, i.s_suppkey,
-        |    atan2(g.wz + g.e2w*(g.aw/sqrt(1 - g.e2w*sin(i.phi)*sin(i.phi)))*sin(i.phi), g.pw)
-        |  FROM wgs i JOIN g2 g ON i.s_suppkey = g.s_suppkey WHERE i.it < 20),
-        |fwd AS (
-        |  SELECT g.*, w.phi AS phiw,
-        |    g.lamw * 57.29577951308232 AS lon_deg,
-        |    w.phi * 57.29577951308232 AS lat_deg
-        |  FROM g2 g JOIN wgs w ON w.s_suppkey = g.s_suppkey AND w.it = 20),
-        |back0 AS (
-        |  SELECT *,
-        |    lat_deg * 0.017453292519943295 AS phb,
-        |    lon_deg * 0.017453292519943295 AS lmb
-        |  FROM fwd),
-        |back1 AS (
-        |  SELECT *, aw/sqrt(1 - e2w*sin(phb)*sin(phb)) AS nu2 FROM back0),
-        |back2 AS (
-        |  SELECT *,
-        |    nu2*cos(phb)*cos(lmb) AS cx, nu2*cos(phb)*sin(lmb) AS cy,
-        |    nu2*(1 - e2w)*sin(phb) AS cz
-        |  FROM back1),
-        |back3 AS (
-        |  SELECT *, (cx - htx)/hs AS xs, (cy - hty)/hs AS ys, (cz - htz)/hs AS zs FROM back2),
-        |back4 AS (
-        |  SELECT *,
-        |    xs - hrz*ys + hry*zs AS ix, hrz*xs + ys - hrx*zs AS iy,
-        |    -hry*xs + hrx*ys + zs AS iz
-        |  FROM back3),
-        |back5 AS (
-        |  SELECT *, atan2(iy, ix) AS lami, sqrt(ix*ix + iy*iy) AS pi2 FROM back4),
-        |intl(it, s_suppkey, phi) AS (
-        |  SELECT 0, s_suppkey, atan2(iz, pi2*(1 - e2i)) FROM back5
-        |  UNION ALL
-        |  SELECT i.it + 1, i.s_suppkey,
-        |    atan2(b.iz + b.e2i*(b.ai/sqrt(1 - b.e2i*sin(i.phi)*sin(i.phi)))*sin(i.phi), b.pi2)
-        |  FROM intl i JOIN back5 b ON i.s_suppkey = b.s_suppkey WHERE i.it < 20),
-        |back6 AS (
-        |  SELECT b.*, n.phi AS phii
-        |  FROM back5 b JOIN intl n ON n.s_suppkey = b.s_suppkey AND n.it = 20),
-        |back7 AS (
-        |  SELECT *,
-        |    tan(pi()/4 - phii/2) / pow((1 - ei*sin(phii))/(1 + ei*sin(phii)), ei/2) AS tfi
-        |  FROM back6),
-        |back8 AS (
-        |  SELECT *, ai*ff*pow(tfi, n) AS rhof, n*(atan2(iy, ix) - lam0) AS thetaf FROM back7),
-        |back9 AS (
-        |  SELECT *, xoff + rhof*sin(thetaf) AS bx, yoff + rho0 - rhof*cos(thetaf) AS byy FROM back8)
-        |SELECT s_suppkey,
-        |  floor(lon_deg*1e7 + 0.5)/1e7 AS lon,
-        |  floor(lat_deg*1e7 + 0.5)/1e7 AS lat,
-        |  floor((abs(bx - x) + abs(byy - y))*1e6 + 0.5)/1e6 AS roundtrip_err_m
-        |FROM back9 ORDER BY s_suppkey""".stripMargin,
-
-    "q01_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-        | sum(l_quantity) AS sum_qty,
-        | CAST(sum(CAST(round(l_extendedprice*100) AS BIGINT)) AS BIGINT)/100.0 AS sum_base_price,
-        | CAST(sum(CAST(round(l_extendedprice*(1-l_discount)*10000) AS BIGINT)) AS BIGINT)/10000.0 AS sum_disc_price,
-        | count(*) AS count_order
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q02_region_revenue" ->
-      """SELECT r_name,
-        | CAST(sum(CAST(round(l_extendedprice*(1-l_discount)*10000) AS BIGINT)) AS BIGINT)/10000.0 AS revenue,
-        | count(DISTINCT o_orderkey) AS n_orders
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name""".stripMargin,
-
-    "q03_top_orders" ->
-      """SELECT l_orderkey,
-        | CAST(sum(CAST(round(l_extendedprice*(1-l_discount)*10000) AS BIGINT)) AS BIGINT)/10000.0 AS revenue
-        |FROM lineitem GROUP BY l_orderkey
-        |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin,
-
-    "q04_part_line_stats" ->
-      """SELECT p_partkey, count(l_orderkey) AS n_lines,
-        | coalesce(sum(l_quantity), 0.0) AS total_qty
-        |FROM part LEFT JOIN lineitem ON p_partkey = l_partkey
-        |GROUP BY p_partkey""".stripMargin,
-
-    "q05_big_order_customers" ->
-      """SELECT c_custkey, c_name, c_mktsegment FROM customer
-        |WHERE EXISTS (SELECT 1 FROM orders
-        |  WHERE o_custkey = c_custkey AND o_totalprice > 300000)""".stripMargin,
-
-    "q06_never_bulk_ordered" ->
-      """SELECT p_partkey, p_name FROM part
-        |WHERE NOT EXISTS (SELECT 1 FROM lineitem
-        |  WHERE l_partkey = p_partkey AND l_quantity >= 48)""".stripMargin,
-
-    "q07_nation_coverage" ->
-      """SELECT coalesce(cn.nationkey, sn.nationkey) AS nationkey,
-        | coalesce(n_customers, CAST(0 AS BIGINT)) AS n_customers,
-        | coalesce(n_suppliers, CAST(0 AS BIGINT)) AS n_suppliers
-        |FROM (SELECT c_nationkey AS nationkey, count(*) AS n_customers
-        |      FROM customer GROUP BY 1) cn
-        |FULL JOIN (SELECT s_nationkey AS nationkey, count(*) AS n_suppliers
-        |      FROM supplier GROUP BY 1) sn USING (nationkey)""".stripMargin,
-
-    "q08_membership_flag" ->
-      """SELECT c_custkey,
-        | EXISTS (SELECT 1 FROM orders
-        |   WHERE o_custkey = c_custkey AND o_totalprice > 300000) AS has_big_order
-        |FROM customer""".stripMargin,
-
-    "q09_latest_order" ->
-      """SELECT o_custkey, o_orderkey, CAST(o_orderdate AS DATE) AS latest_date
-        |FROM (SELECT *, row_number() OVER (
-        |        PARTITION BY o_custkey
-        |        ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn
-        |      FROM orders)
-        |WHERE rn = 1""".stripMargin,
-
-    "q10_dup_order_days" ->
-      """SELECT o_orderkey, o_custkey, n
-        |FROM (SELECT o_orderkey, o_custkey,
-        |        count(*) OVER (PARTITION BY o_custkey, CAST(o_orderdate AS DATE)) AS n
-        |      FROM orders)
-        |WHERE n > 1""".stripMargin,
-
-    "q11_first_shipment" ->
-      """SELECT l_orderkey, l_linenumber, CAST(l_shipdate AS DATE) AS ship_day
-        |FROM (SELECT l_orderkey, l_linenumber, l_shipdate,
-        |        rank() OVER (PARTITION BY l_orderkey ORDER BY l_shipdate) AS rk
-        |      FROM lineitem)
-        |WHERE rk = 1""".stripMargin,
-
-    "q12_line_share" ->
-      """SELECT l_orderkey, l_linenumber,
-        | round(line_cents / CAST(sum(line_cents) OVER (PARTITION BY l_orderkey) AS BIGINT), 6) AS share
-        |FROM (SELECT l_orderkey, l_linenumber,
-        |        CAST(round(l_extendedprice*(1-l_discount)*10000) AS BIGINT) AS line_cents
-        |      FROM lineitem)""".stripMargin,
-
-    "q13_fill_group_max" ->
-      """SELECT event_id, user_id,
-        | coalesce(v, max(v) OVER (PARTITION BY user_id)) AS value_filled
-        |FROM (SELECT event_id, user_id,
-        |        CASE WHEN event_type = 'error' THEN NULL ELSE value END AS v
-        |      FROM events)""".stripMargin,
-
-    "q14_multi_status_custs" ->
-      """SELECT o_custkey, CAST(count(DISTINCT o_orderstatus) AS INTEGER) AS n_status
-        |FROM orders GROUP BY o_custkey
-        |HAVING count(DISTINCT o_orderstatus) > 1""".stripMargin,
-
-    "q15_status_pivot" ->
-      """SELECT o_custkey,
-        | count(CASE WHEN o_orderstatus = 'F' THEN 1 END) AS n_f,
-        | count(CASE WHEN o_orderstatus = 'O' THEN 1 END) AS n_o,
-        | count(CASE WHEN o_orderstatus = 'P' THEN 1 END) AS n_p
-        |FROM orders GROUP BY o_custkey""".stripMargin,
-
-    "q16_part_melt" ->
-      """SELECT p_partkey, 'p_retailprice' AS variable, p_retailprice AS value FROM part
-        |UNION ALL
-        |SELECT p_partkey, 'p_size_d' AS variable, CAST(p_size AS DOUBLE) AS value FROM part""".stripMargin,
-
-    "q75_coord_displacement" ->
-      """SELECT plot_id,
-        | CAST((s_suppkey * 7) % 1000 AS DOUBLE) AS "1_x",
-        | CAST((s_suppkey * 13) % 1000 AS DOUBLE) AS "1_y",
-        | CAST((s_suppkey * 7) % 1000 + (s_suppkey % 9) - 4 AS DOUBLE) AS "2_x",
-        | CAST((s_suppkey * 13) % 1000 + (s_suppkey % 7) - 3 AS DOUBLE) AS "2_y",
-        | round(sqrt(
-        |   pow(CAST((s_suppkey * 7) % 1000 AS DOUBLE) - CAST((s_suppkey * 7) % 1000 + (s_suppkey % 9) - 4 AS DOUBLE), 2)
-        | + pow(CAST((s_suppkey * 13) % 1000 AS DOUBLE) - CAST((s_suppkey * 13) % 1000 + (s_suppkey % 7) - 3 AS DOUBLE), 2)), 6) AS displacement_m
-        |FROM (SELECT s_suppkey, s_suppkey AS plot_id FROM supplier)""".stripMargin,
-
-    "q36_pivot_multi" ->
-      """SELECT o_custkey,
-        | count(CASE WHEN o_orderstatus = 'F' THEN 1 END) AS f_n,
-        | CASE WHEN count(CASE WHEN o_orderstatus = 'F' THEN 1 END) > 0
-        |   THEN CAST(sum(CASE WHEN o_orderstatus = 'F' THEN CAST(round(o_totalprice*100) AS BIGINT) END) AS BIGINT)/100.0 END AS f_total,
-        | count(CASE WHEN o_orderstatus = 'O' THEN 1 END) AS o_n,
-        | CASE WHEN count(CASE WHEN o_orderstatus = 'O' THEN 1 END) > 0
-        |   THEN CAST(sum(CASE WHEN o_orderstatus = 'O' THEN CAST(round(o_totalprice*100) AS BIGINT) END) AS BIGINT)/100.0 END AS o_total,
-        | count(CASE WHEN o_orderstatus = 'P' THEN 1 END) AS p_n,
-        | CASE WHEN count(CASE WHEN o_orderstatus = 'P' THEN 1 END) > 0
-        |   THEN CAST(sum(CASE WHEN o_orderstatus = 'P' THEN CAST(round(o_totalprice*100) AS BIGINT) END) AS BIGINT)/100.0 END AS p_total
-        |FROM orders GROUP BY o_custkey""".stripMargin,
-
-    "q17_separate_name" ->
-      """SELECT p_partkey,
-        | string_split(p_name, ' ')[1] AS color,
-        | string_split(p_name, ' ')[2] AS object
-        |FROM part""".stripMargin,
-
-    "q18_union_cycles" ->
-      """SELECT o_orderkey, o_totalprice, 1 AS mon_cycle FROM orders
-        | WHERE year(o_orderdate) < 1998
-        |UNION ALL
-        |SELECT o_orderkey, NULL AS o_totalprice, 2 AS mon_cycle FROM orders
-        | WHERE year(o_orderdate) >= 1998""".stripMargin,
-
-    "q19_priority_recode" ->
-      """SELECT CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 'high'
-        |            WHEN o_orderpriority = '3-MEDIUM' THEN 'medium'
-        |            ELSE 'low' END AS priority_class,
-        | count(*) AS n
-        |FROM orders GROUP BY 1""".stripMargin,
-
-    "q20_string_funcs" ->
-      """SELECT c_custkey,
-        | lower(c_name) AS name_lower,
-        | substring(c_name, 1, 8) AS name_prefix,
-        | CAST(regexp_extract(c_name, '([0-9]+)', 1) AS BIGINT) AS cust_num,
-        | CAST(length(c_name) AS INTEGER) AS name_len,
-        | concat_ws('-', c_mktsegment, c_name) AS seg_name
-        |FROM customer""".stripMargin,
-
-    "q21_year_stats" ->
-      """SELECT CAST(year(o_orderdate) AS INTEGER) AS order_year,
-        | count(*) AS n_orders,
-        | CAST(sum(CAST(round(o_totalprice*100) AS BIGINT)) AS BIGINT)/100.0 AS sum_total
-        |FROM orders GROUP BY 1""".stripMargin,
-
-    "q22_discount_rules" ->
-      """SELECT l_orderkey, l_linenumber,
-        | coalesce(nullif(l_discount, 0.0), 0.05) AS discount_imputed,
-        | round(least(l_discount + l_tax, 0.15), 6) AS charge_rate,
-        | greatest(l_quantity, 10.0) AS qty_floor
-        |FROM lineitem""".stripMargin,
-
-    "q23_discount_union" ->
-      s"""SELECT l_orderkey,
-        | ${round6Sql("1 - product(1 - l_discount ORDER BY 1 - l_discount)")} AS effective_discount
-        |FROM lineitem GROUP BY l_orderkey""".stripMargin,
-
-    "q24_status_concat" ->
-      """SELECT o_custkey,
-        | string_agg(DISTINCT o_orderstatus, ';' ORDER BY o_orderstatus) AS statuses
-        |FROM orders GROUP BY o_custkey""".stripMargin,
-
-    "q25_bool_flags" ->
-      """SELECT o_custkey,
-        | bool_or(o_orderpriority = '1-URGENT') AS any_urgent,
-        | bool_and(o_orderstatus = 'F') AS all_finished
-        |FROM orders GROUP BY o_custkey""".stripMargin,
-
-    "q26_nation_region" ->
-      """SELECT n_nationkey,
-        | min(n_regionkey) AS regionkey_first,
-        | count(DISTINCT n_regionkey) <= 1 AS regionkey_first_ok
-        |FROM nation GROUP BY n_nationkey""".stripMargin,
-
-    "q27_qty_stats" ->
-      """SELECT l_returnflag, count(*) AS n,
-        | round(sum(l_quantity) / count(*), 6) AS avg_qty,
-        | round(stddev_samp(l_quantity), 6) AS sd_qty
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-
-    "q28_acctbal_ratio" ->
-      """SELECT c_nationkey, count(*) AS n_customers,
-        | round(100.0 * count(CASE WHEN c_acctbal > 0 THEN 1 END) / count(*), 6) AS pct_positive
-        |FROM customer GROUP BY c_nationkey""".stripMargin,
-
-    "q29_events_hourly" ->
-      """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour,
-        | event_type,
-        | count(*) AS n_events,
-        | CAST(sum(CAST(round(value*100) AS BIGINT)) AS BIGINT)/100.0 AS sum_value
-        |FROM events GROUP BY 1, 2""".stripMargin,
-
-    "q30_user_sessions" ->
-      """SELECT user_id,
-        | CAST(max(session_seq) AS BIGINT) AS n_sessions,
-        | count(*) AS n_events
-        |FROM (
-        |  SELECT user_id,
-        |    sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                      ROWS UNBOUNDED PRECEDING) AS session_seq
-        |  FROM (
-        |    SELECT user_id, ts, event_id,
-        |      CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL THEN 1
-        |           WHEN epoch_us(ts) - epoch_us(lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)) > 1800000000 THEN 1
-        |           ELSE 0 END AS is_new
-        |    FROM events))
-        |GROUP BY user_id""".stripMargin,
-
-    "q31_events_props" ->
-      """SELECT event_type,
-        | round(sum(k) / count(*), 6) AS avg_k,
-        | max(k) AS max_k
-        |FROM (SELECT event_type,
-        |        CAST(regexp_extract(props, '"k": ([0-9]+)', 1) AS INTEGER) AS k
-        |      FROM events)
-        |GROUP BY event_type""".stripMargin,
-
-    "q33_salted_hot_count" ->
-      """SELECT o_orderpriority, count(*) AS n FROM orders GROUP BY 1""",
-
-    "q37_events_dedup_stream" ->
-      """SELECT DISTINCT user_id, event_type FROM events""",
-
-    "q32_events_hourly_stream" ->
-      """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour,
-        | event_type,
-        | count(*) AS n_events,
-        | CAST(sum(CAST(round(value*100) AS BIGINT)) AS BIGINT)/100.0 AS sum_value
-        |FROM events GROUP BY 1, 2""".stripMargin,
-
-    "q34_sessions_stateful_stream" ->
-      """SELECT user_id, CAST(max(session_seq) AS BIGINT) AS n_sessions
-        |FROM (
-        |  SELECT user_id,
-        |    sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                      ROWS UNBOUNDED PRECEDING) AS session_seq
-        |  FROM (
-        |    SELECT user_id, ts, event_id,
-        |      CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL THEN 1
-        |           WHEN epoch_us(ts) - epoch_us(lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)) > 1800000000 THEN 1
-        |           ELSE 0 END AS is_new
-        |    FROM events))
-        |GROUP BY user_id""".stripMargin,
-
-    "q35_session_bounds" ->
-      """SELECT user_id, CAST(session_seq AS BIGINT) AS session_seq,
-        | min(epoch_us(ts)) AS start_us,
-        | max(epoch_us(ts)) AS end_us,
-        | count(*) AS n_events
-        |FROM (
-        |  SELECT user_id, ts,
-        |    sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                      ROWS UNBOUNDED PRECEDING) AS session_seq
-        |  FROM (
-        |    SELECT user_id, ts, event_id,
-        |      CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL THEN 1
-        |           WHEN epoch_us(ts) - epoch_us(lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)) > 1800000000 THEN 1
-        |           ELSE 0 END AS is_new
-        |    FROM events))
-        |GROUP BY user_id, session_seq""".stripMargin,
-
-    "q40_docs_exact_dedup" ->
-      """SELECT doc_id,
-        | md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fingerprint,
-        | min(doc_id) OVER (
-        |   PARTITION BY md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'))) AS canonical_id
-        |FROM documents""".stripMargin,
-
-    "q41_docs_tokens" ->
-      """SELECT doc_id,
-        | CAST(len(string_split_regex(trim(text), '\s+')) AS INTEGER) AS n_tokens,
-        | CAST(len(regexp_extract_all(text, '[a-z0-9]+|[^a-z0-9\s]')) AS INTEGER) AS n_tokens_bpe,
-        | CAST(length(text) AS INTEGER) AS n_chars_measured,
-        | round(CAST(length(replace(text, ' ', '')) AS DOUBLE)
-        |   / len(string_split_regex(trim(text), '\s+')), 6) AS avg_token_len
-        |FROM documents""".stripMargin,
-
-    "q42_docs_quality" ->
-      """SELECT doc_id,
-        | CAST(n_tokens AS INTEGER) AS n_tokens,
-        | round(punct_ratio, 6) AS punct_ratio,
-        | round(stop_ratio, 6) AS stop_ratio,
-        | round(0.4 * least(1.0, n_tokens / 100.0)
-        |     + 0.4 * (1.0 - punct_ratio)
-        |     + 0.2 * (1.0 - abs(stop_ratio - 0.4)), 6) AS quality
-        |FROM (
-        |  SELECT doc_id, len(toks) AS n_tokens,
-        |    (length(text) - length(regexp_replace(text, '[^a-z0-9 ]', '', 'g'))) / length(text) AS punct_ratio,
-        |    CAST(len(list_filter(toks, x -> x IN ('the','a','of','and','to','in','is','it'))) AS BIGINT) / len(toks) AS stop_ratio
-        |  FROM (SELECT doc_id, text, string_split_regex(trim(text), '\s+') AS toks FROM documents))""".stripMargin,
-
-    "q43_docs_langid" ->
-      """SELECT doc_id, lang_pred, lang_pred = lang AS is_match
-        |FROM (
-        |  SELECT doc_id, lang,
-        |    CASE WHEN c_de = best THEN 'de'
-        |         WHEN c_en = best THEN 'en'
-        |         WHEN c_es = best THEN 'es'
-        |         WHEN c_fr = best THEN 'fr'
-        |         ELSE 'zh' END AS lang_pred
-        |  FROM (
-        |    SELECT doc_id, lang,
-        |      greatest(c_de, c_en, c_es, c_fr, c_zh) AS best,
-        |      c_de, c_en, c_es, c_fr, c_zh
-        |    FROM (
-        |      SELECT doc_id, lang,
-        |        len(list_filter(toks, x -> x IN ('der','und','die','das','batch','hash'))) AS c_de,
-        |        len(list_filter(toks, x -> x IN ('the','a','of','and','fast','slow'))) AS c_en,
-        |        len(list_filter(toks, x -> x IN ('el','la','de','que','table','row'))) AS c_es,
-        |        len(list_filter(toks, x -> x IN ('le','la','les','et','query','window'))) AS c_fr,
-        |        len(list_filter(toks, x -> x IN ('的','了','是','我','spark','stream'))) AS c_zh
-        |      FROM (SELECT doc_id, lang, string_split_regex(trim(text), '\s+') AS toks
-        |            FROM documents))))""".stripMargin,
-
-    "q46_blocked_jaccard" ->
-      """SELECT id_a, id_b, jaccard FROM (
-        | SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |   round(
-        |     CAST(len(list_filter(a.ts, x -> list_contains(b.ts, x))) AS BIGINT)
-        |     / len(list_distinct(a.ts || b.ts)), 6) AS jaccard
-        | FROM (SELECT doc_id, lang, source,
-        |         list_distinct(string_split_regex(trim(text), '\s+')) AS ts
-        |       FROM documents) a
-        | JOIN (SELECT doc_id, lang, source,
-        |         list_distinct(string_split_regex(trim(text), '\s+')) AS ts
-        |       FROM documents) b
-        |   ON a.lang = b.lang AND a.source = b.source AND a.doc_id < b.doc_id)
-        |WHERE jaccard >= 0.5""".stripMargin,
-
-    "q67_corpus_curation" ->
-      """SELECT doc_id, lang, n_tokens, quality FROM (
-        | SELECT doc_id, lang, n_tokens, quality,
-        |   min(doc_id) OVER (PARTITION BY fingerprint) AS canonical_id,
-        |   percent_rank() OVER (PARTITION BY lang
-        |     ORDER BY quality DESC, doc_id ASC) AS pr
-        | FROM (
-        |  SELECT doc_id, lang,
-        |    md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fingerprint,
-        |    CAST(len(toks) AS INTEGER) AS n_tokens,
-        |    round(0.4 * least(1.0, len(toks) / 100.0)
-        |        + 0.4 * (1.0 - (length(text) - length(regexp_replace(text, '[^a-z0-9 ]', '', 'g'))) / length(text))
-        |        + 0.2 * (1.0 - abs(CAST(len(list_filter(toks, x -> x IN ('the','a','of','and','to','in','is','it'))) AS BIGINT) / len(toks) - 0.4)), 6) AS quality
-        |  FROM (SELECT doc_id, lang, text,
-        |          string_split_regex(trim(text), '\s+') AS toks FROM documents)))
-        |WHERE doc_id = canonical_id AND n_tokens >= 20 AND pr <= 0.7""".stripMargin,
-
-    "q48_length_quantiles" ->
-      """SELECT lang,
-        | round(quantile_cont(n_tokens, 0.5), 6) AS median_tokens,
-        | round(quantile_cont(n_tokens, 0.9), 6) AS p90_tokens,
-        | count(*) AS n_docs
-        |FROM (SELECT lang,
-        |        CAST(len(string_split_regex(trim(text), '\s+')) AS DOUBLE) AS n_tokens
-        |      FROM documents)
-        |GROUP BY lang""".stripMargin,
-
-    "q49_quality_topfrac" ->
-      """SELECT doc_id, lang, quality FROM (
-        | SELECT doc_id, lang, quality,
-        |   percent_rank() OVER (PARTITION BY lang
-        |     ORDER BY quality DESC, doc_id ASC) AS pr
-        | FROM (
-        |  SELECT doc_id, lang,
-        |    round(0.4 * least(1.0, len(toks) / 100.0)
-        |        + 0.4 * (1.0 - (length(text) - length(regexp_replace(text, '[^a-z0-9 ]', '', 'g'))) / length(text))
-        |        + 0.2 * (1.0 - abs(CAST(len(list_filter(toks, x -> x IN ('the','a','of','and','to','in','is','it'))) AS BIGINT) / len(toks) - 0.4)), 6) AS quality
-        |  FROM (SELECT doc_id, lang, text,
-        |          string_split_regex(trim(text), '\s+') AS toks FROM documents)))
-        |WHERE pr <= 0.3""".stripMargin,
-
-    "q65_stratified_sample" ->
-      """SELECT source, doc_id, h FROM (
-        | SELECT source, doc_id, md5(text) AS h,
-        |   row_number() OVER (PARTITION BY source
-        |     ORDER BY md5(text) ASC, doc_id ASC) AS rn
-        | FROM documents)
-        |WHERE rn <= 5""".stripMargin,
-
-    "q66_vocab_topk" ->
-      """SELECT lang, token, n, rk FROM (
-        | SELECT lang, token, n,
-        |   CAST(row_number() OVER (PARTITION BY lang
-        |     ORDER BY n DESC, token ASC) AS INTEGER) AS rk
-        | FROM (SELECT lang, token, count(*) AS n
-        |       FROM (SELECT lang, unnest(string_split_regex(trim(text), '\s+')) AS token
-        |             FROM documents)
-        |       GROUP BY lang, token))
-        |WHERE rk <= 10""".stripMargin,
-
-    "q50_ann_bruteforce" ->
-      """WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 10),
-        | c AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings),
-        | s AS (SELECT query_id, neighbor_id,
-        |   round(
-        |     list_sum(list_transform(list_zip(qv, cv), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |     / (sqrt(list_sum(list_transform(qv, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-        |      * sqrt(list_sum(list_transform(cv, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 6) AS cosine
-        |   FROM q, c WHERE query_id <> neighbor_id)
-        |SELECT query_id, neighbor_id, cosine, CAST(rk AS INTEGER) AS rank
-        |FROM (SELECT *, row_number() OVER (
-        |        PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rk
-        |      FROM s)
-        |WHERE rk <= 5""".stripMargin,
-
-    "q53_label_cosine_pairs" ->
-      """SELECT id_a, id_b, cosine FROM (
-        | SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |   round(
-        |     list_sum(list_transform(list_zip(a.embedding, b.embedding), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |     / (sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-        |      * sqrt(list_sum(list_transform(b.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 6) AS cosine
-        | FROM embeddings a JOIN embeddings b
-        |   ON a.label = b.label AND a.vec_id < b.vec_id)
-        |WHERE cosine >= 0.3""".stripMargin,
-
-    "q68_loq_parsing" ->
-      """WITH raw AS (
-        |  SELECT l_orderkey,
-        |    CASE WHEN l_quantity < 10 THEN '<' || replace(CAST(l_quantity AS VARCHAR), '.', ',')
-        |         WHEN l_quantity > 45 THEN '> ' || replace(CAST(l_quantity AS VARCHAR), '.', ',')
-        |         WHEN l_quantity % 2 = 0 THEN 'K' || CAST(CAST(l_quantity % 5 AS INTEGER) AS VARCHAR)
-        |         ELSE replace(CAST(l_quantity AS VARCHAR), '.', ',') END AS value
-        |  FROM lineitem WHERE l_linenumber = 1),
-        |parsed AS (
-        |  SELECT l_orderkey, value,
-        |    starts_with(trim(value), '<') AS is_below_LOQ,
-        |    starts_with(trim(value), '>') AS is_above_LOQ,
-        |    replace(regexp_replace(trim(value), '^[<>]\s*', ''), ',', '.') AS stripped
-        |  FROM raw)
-        |SELECT l_orderkey, value, is_below_LOQ, is_above_LOQ,
-        |  regexp_matches(stripped, '^[0-9]+(\.[0-9]+)?$') AS is_numeric,
-        |  CASE WHEN regexp_matches(stripped, '^[0-9]+(\.[0-9]+)?$')
-        |       THEN CAST(stripped AS DOUBLE) END AS value_numeric,
-        |  CASE WHEN is_below_LOQ AND regexp_matches(stripped, '^[0-9]+(\.[0-9]+)?$')
-        |       THEN CAST(stripped AS DOUBLE) / 2
-        |       WHEN regexp_matches(stripped, '^[0-9]+(\.[0-9]+)?$')
-        |       THEN CAST(stripped AS DOUBLE) END AS value_adjusted
-        |FROM parsed""".stripMargin,
-
-    "q70_lsvi_detail" -> (lsviOracleCtes +
-      """SELECT id, criterium, indicator, voorwaarde, belang,
-        | round(value_numeric, 6) AS value_numeric, value_category, op,
-        | ref_numeric, voldoet
-        |FROM d""".stripMargin),
-
-    "q96_lsvi_detail_report" -> (lsviOracleCtes.stripSuffix("\n") +
-      s""", r2(voorwaarde, referentiewaarde, theoretischmaximum) AS (
-        |  VALUES
-        |   ('avg_discount', '0.05', 0.1),
-        |   ('return_rate', '0.336', 1.0),
-        |   ('avg_qty', '25.3', 50.0),
-        |   ('avg_price', '53000', 100000.0),
-        |   ('regio', '${lsviRegions.mkString(", ")}', CAST(NULL AS DOUBLE))),
-        |rep AS (
-        |  SELECT d.*, r2.referentiewaarde, r2.theoretischmaximum,
-        |    CASE WHEN d.id % 2 = 0 THEN '9120' ELSE '9130' END AS type_observed,
-        |    CASE WHEN d.voorwaarde IN ('avg_qty', 'avg_price') THEN 'square'
-        |         ELSE 'circle' END AS plot_type,
-        |    floor(d.value_numeric*1e6 + 0.5)/1e6 AS v6
-        |  FROM d JOIN r2 USING (voorwaarde)),
-        |scored AS (
-        |  SELECT *,
-        |    CASE
-        |      WHEN voldoet IS NULL THEN CAST(NULL AS DOUBLE)
-        |      WHEN op IN ('>=', '>') THEN
-        |        CASE WHEN voldoet THEN
-        |               CASE WHEN theoretischmaximum - ref_numeric <> 0
-        |                    THEN (value_numeric - ref_numeric)/(theoretischmaximum - ref_numeric) END
-        |             ELSE
-        |               CASE WHEN ref_numeric <> 0
-        |                    THEN (value_numeric - ref_numeric)/ref_numeric END END
-        |      WHEN op IN ('<=', '<') THEN
-        |        CASE WHEN voldoet THEN
-        |               CASE WHEN ref_numeric <> 0
-        |                    THEN (ref_numeric - value_numeric)/ref_numeric END
-        |             ELSE
-        |               CASE WHEN theoretischmaximum - ref_numeric <> 0
-        |                    THEN (ref_numeric - value_numeric)/(theoretischmaximum - ref_numeric) END END
-        |      ELSE CASE WHEN voldoet THEN 1.0 ELSE -1.0 END
-        |    END AS verschilscore
-        |  FROM rep)
-        |SELECT id, type_observed, criterium, indicator, belang, voorwaarde, plot_type,
-        |  CASE WHEN value_category IS NOT NULL THEN value_category
-        |       WHEN value_numeric IS NOT NULL THEN printf('%.6f', v6) END AS waarde,
-        |  floor(value_numeric*1e6 + 0.5)/1e6 AS waarde_numeric,
-        |  referentiewaarde, voldoet AS status_voorwaarde, theoretischmaximum,
-        |  floor(verschilscore*1e6 + 0.5)/1e6 AS verschilscore
-        |FROM scored""".stripMargin),
-
-    "q98_lsvi_plot_report" -> (lsviOracleCtes.stripSuffix("\n") +
-      """, i AS (
-        |  SELECT id, criterium, indicator, belang,
-        |    (count(CASE WHEN voldoet = false THEN 1 END) = 0 AND
-        |     count(CASE WHEN voldoet IS NULL THEN 1 END) = 0) AS gunstig,
-        |    count(CASE WHEN voldoet = true THEN 1 END)
-        |      / greatest(count(CASE WHEN voldoet IS NOT NULL THEN 1 END), 1) AS score
-        |  FROM d GROUP BY 1, 2, 3, 4),
-        |g AS (
-        |  SELECT id,
-        |    round(100.0 * count(CASE WHEN gunstig THEN 1 END) / count(*), 6) AS aandeel_gunstig,
-        |    round(sum(score) / count(*), 6) AS index_mean_ind,
-        |    CASE WHEN count(CASE WHEN belang = 'zb' AND NOT gunstig THEN 1 END) = 0 AND
-        |              count(CASE WHEN gunstig THEN 1 END) * 2 > count(*)
-        |         THEN 'gunstig' ELSE 'ongunstig' END AS lsvi
-        |  FROM i GROUP BY id),
-        |pts AS (
-        |  SELECT s_suppkey AS id,
-        |    CASE WHEN s_suppkey % 3 = 0 THEN 'vbi_' || s_suppkey
-        |         ELSE 'mhq_' || s_suppkey END AS point_code,
-        |    CAST('2022-01-01' AS DATE) + CAST(s_suppkey % 365 AS INTEGER) AS "date",
-        |    CAST(140000.0 + s_suppkey*100 AS DOUBLE) AS x,
-        |    CAST(160000.0 + s_suppkey*80 AS DOUBLE) AS y,
-        |    CASE WHEN s_suppkey % 2 = 0 THEN '9120' ELSE '9130' END AS habitatsubtype
-        |  FROM supplier)
-        |SELECT CASE WHEN point_code LIKE '%vbi%' THEN 'vbi' ELSE 'mhq' END AS scheme,
-        |  id, "date", point_code, x, y,
-        |  habitatsubtype AS type_observed, lsvi,
-        |  'RapportageHR' AS aggregatiemethode, aandeel_gunstig, index_mean_ind
-        |FROM g JOIN pts USING (id)""".stripMargin),
-
-    "q71_lsvi_globaal" -> (lsviOracleCtes.stripSuffix("\n") +
-      """, i AS (
-        |  SELECT id, criterium, indicator, belang,
-        |    (count(CASE WHEN voldoet = false THEN 1 END) = 0 AND
-        |     count(CASE WHEN voldoet IS NULL THEN 1 END) = 0) AS gunstig,
-        |    count(CASE WHEN voldoet = true THEN 1 END)
-        |      / greatest(count(CASE WHEN voldoet IS NOT NULL THEN 1 END), 1) AS score
-        |  FROM d GROUP BY 1, 2, 3, 4)
-        |SELECT id, count(*) AS n_ind,
-        | count(CASE WHEN gunstig THEN 1 END) AS n_gunstig,
-        | count(CASE WHEN belang = 'zb' AND NOT gunstig THEN 1 END) AS n_zb_ongunstig,
-        | round(100.0 * count(CASE WHEN gunstig THEN 1 END) / count(*), 6) AS aandeel_gunstig,
-        | round(sum(score) / count(*), 6) AS index_mean_ind,
-        | (count(CASE WHEN belang = 'zb' AND NOT gunstig THEN 1 END) = 0 AND
-        |  count(CASE WHEN gunstig THEN 1 END) * 2 > count(*)) AS status,
-        | CASE WHEN count(CASE WHEN belang = 'zb' AND NOT gunstig THEN 1 END) = 0 AND
-        |           count(CASE WHEN gunstig THEN 1 END) * 2 > count(*)
-        |      THEN 'gunstig' ELSE 'ongunstig' END AS lsvi
-        |FROM i GROUP BY id""".stripMargin),
-
-    "q77_lsvi_v3_detail" -> (v3OracleCtes +
-      """SELECT id, habitattype, criterium, indicator, voorwaarde, belang,
-        | round(value_numeric, 6) AS value_numeric, op, ref_numeric, voldoet
-        |FROM d""".stripMargin),
-
-    "q102_lsvi_forest_detail" -> (forestOracleCtes +
-      """SELECT id, survey, record_id_square, record_id_circle, type_observed,
-        | type_analysis, criterium, indicator, belang, voorwaarde, plot_type,
-        | waarde, waarde_numeric, referentiewaarde, status_voorwaarde,
-        | theoretischmaximum, verschilscore
-        |FROM d2""".stripMargin),
-
-    "q103_lsvi_forest_globaal" -> forestGlobaalOracleSql,
-
-    // q139: the q103 chain SQL restricted to the hash-deterministic
-    // globaal columns — the Spark side produced them through the
-    // publish job's write -> verified-read round trip, so equality
-    // here gates the whole Vc TSV/sidecar/type-restore path.
-    "q139_report_publish_roundtrip" ->
-      ("SELECT id, type_analysis, status, aggregatiemethode, " +
-        "n_zb_ongunstig, aandeel_gunstig FROM (" +
-        forestGlobaalOracleSql + ") roundtrip"),
-
-    "q107_lsvi_heath_globaal" -> (heathOracleCtes.stripSuffix("\n") +
-      lsviGlobaalSqlTail),
-
-    "q109_lsvi_dunes_globaal" -> {
-      val v3d = graft.lsvi.Versie3Dunes
-      wtGroupOracleCtes("DP_", v3d.habitattypes, v3d.rules,
-        v3d.downVoorwaarden, v3d.orVoorwaarden, Set.empty,
-        v3d.wtCategorical.keySet).stripSuffix("\n") + lsviGlobaalSqlTail
-    },
-
-    "q110_lsvi_moneos_globaal" -> {
-      val v3m = graft.lsvi.Versie3Moneos
-      val catVws = graft.lsvi.Versie3Dunes.wtCategorical.keySet ++
-        graft.lsvi.Versie3Forests.categorical.keySet
-      wtGroupOracleCtes("MP_", v3m.habitattypes, v3m.rules,
-        v3m.downVoorwaarden, v3m.orVoorwaarden,
-        graft.lsvi.Versie3Forests.noAggregateIndicators,
-        catVws).stripSuffix("\n") + lsviGlobaalSqlTail
-    },
-
-    "q111_lsvi_grassland_globaal" -> {
-      val v3g = graft.lsvi.Versie3Grasslands
-      // mirrors Versie3Grasslands.rulesDf rule-for-rule
-      val meta = (vw: String, ref: String, tm: Double, _: String) => {
-        val isT = ref == "T"
-        val isCat = isT && !v3g.tNumeric(vw)
-        val op =
-          if (v3g.strictVoorwaarden(vw)) "<"
-          else if (v3g.downVoorwaarden(vw)) "<=" else ">="
-        val scoreRef: Option[Double] =
-          if (isT) Some(v3g.tScoreRef)
-          else if (ref == "dynamisch") None
-          else Some(ref.toDouble)
-        val statusRef = if (isT && !isCat) Some(v3g.tStatusUp) else scoreRef
-        val met = if (isCat) Some(v3g.tCategorical(vw)) else None
-        (op, statusRef, scoreRef, if (isT) 100.0 else tm, met, "and", true)
-      }
-      wtGroupOracleCtes("GP_", v3g.habitattypes, v3g.rules,
-        v3g.downVoorwaarden, Set.empty, Set.empty, v3g.tCategorical.keySet,
-        Some(v3g.dynamicVoorwaarde), Some(meta)).stripSuffix("\n") +
-        lsviGlobaalSqlTail
-    },
-
-    "q112_lsvi_streams_globaal" -> (streamsOracleCtes.stripSuffix("\n") +
-      lsviGlobaalSqlTail),
-
-    // q113: status_indicatoren — latest-cycle-per-point selection,
-    // Binnen/Buiten/pooled strata, plain proportions, Wilson z bounds
-    // (same closed form on both sides), Goed/Niet goed/Onbekend at 75%.
-    "q113_status_indicatoren" -> {
-      val z = graft.lsvi.LsviStatus.z975
-      val z2 = z * z
-      statusOracleCtes.stripSuffix("\n") +
-        s""", ind AS (
-           |  SELECT p.id, p.habitattype, 'crit_' || (j.j % 2) AS criterium,
-           |    'ind_' || j.j AS indicator,
-           |    CASE WHEN j.j < 2 THEN 'zb' ELSE 'b' END AS belang,
-           |    CASE WHEN (p.ck * (j.j + 2)) % 5 = 0 THEN NULL
-           |         ELSE ((p.ck * (j.j + 2)) % 5) % 2 = 1 END AS status
-           |  FROM plots p CROSS JOIN (VALUES (0),(1),(2),(3),(4)) j(j)),
-           |rows_ AS (
-           |  SELECT i.habitattype,
-           |    CASE WHEN g.g = 1 THEN 'Binnen & Buiten'
-           |         WHEN l.in_sac = 1 THEN 'Binnen' ELSE 'Buiten' END AS sbzh,
-           |    i.criterium, i.indicator, i.belang, i.status
-           |  FROM ind i JOIN latest l ON i.id = l.id
-           |  CROSS JOIN (VALUES (0),(1)) g(g)
-           |  WHERE i.status IS NOT NULL),
-           |agg AS (
-           |  SELECT habitattype, sbzh, criterium, indicator, belang,
-           |    count(*) AS n_obs, count(CASE WHEN status THEN 1 END) AS k
-           |  FROM rows_ GROUP BY 1, 2, 3, 4, 5),
-           |wil AS (
-           |  SELECT *, CAST(k AS DOUBLE) / CAST(n_obs AS DOUBLE) AS p,
-           |    1.0 + $z2 / n_obs AS den
-           |  FROM agg),
-           |wil2 AS (
-           |  SELECT *,
-           |    (p + $z2 / (2.0 * n_obs)) / den AS center,
-           |    ($z / den) * sqrt(p * (1.0 - p) / n_obs + $z2 / (4.0 * n_obs * n_obs)) AS half
-           |  FROM wil),
-           |fin AS (
-           |  SELECT habitattype, sbzh, criterium, indicator, belang, n_obs,
-           |    round(100.0 * CAST(k AS DOUBLE) / n_obs, 6) AS aandeel_gunstig,
-           |    round(CASE WHEN k = 0 OR k = n_obs THEN 100.0 * p
-           |               ELSE 100.0 * greatest(0.0, center - half) END, 6)
-           |      AS aandeel_gunstig_llci,
-           |    round(CASE WHEN k = 0 OR k = n_obs THEN 100.0 * p
-           |               ELSE 100.0 * least(1.0, center + half) END, 6)
-           |      AS aandeel_gunstig_ulci
-           |  FROM wil2)
-           |SELECT *, CASE WHEN aandeel_gunstig_llci >= 75 THEN 'Goed'
-           |               WHEN aandeel_gunstig_ulci < 75 THEN 'Niet goed'
-           |               ELSE 'Onbekend' END AS beoordeling
-           |FROM fin""".stripMargin
-    },
-
-    // q114: index_hq — mean habitat-quality index per stratum/pooled
-    // group; 1e-6 fixed-point sums for order-independent distributed
-    // aggregation, exact integer variance identity, z interval.
-    "q114_index_hq" -> {
-      val z = graft.lsvi.LsviStatus.z975
-      statusOracleCtes.stripSuffix("\n") +
-        s""", g AS (
-           |  SELECT l.habitattype,
-           |    CASE WHEN gg.g = 0 THEN 'SBZH' ELSE 'Habitattype' END AS type_resultaat,
-           |    CASE WHEN gg.g = 1 THEN 'Binnen & Buiten'
-           |         WHEN l.in_sac = 1 THEN 'Binnen' ELSE 'Buiten' END AS sbzh,
-           |    CAST(floor(l.idx * 1000000.0 + 0.5) AS BIGINT) AS x6
-           |  FROM latest l CROSS JOIN (VALUES (0),(1)) gg(g)
-           |  WHERE l.idx IS NOT NULL),
-           |agg AS (
-           |  SELECT type_resultaat, habitattype, sbzh, count(*) AS n_obs,
-           |    CAST(sum(x6) AS BIGINT) AS s6, CAST(sum(x6 * x6) AS BIGINT) AS ss6
-           |  FROM g GROUP BY 1, 2, 3),
-           |f AS (
-           |  SELECT *, CAST(s6 AS DOUBLE) / n_obs / 1000000.0 AS m,
-           |    sqrt(CAST(n_obs * ss6 - s6 * s6 AS DOUBLE)
-           |         / (n_obs * (n_obs - 1))) / 1000000.0 AS sd
-           |  FROM agg)
-           |SELECT type_resultaat, habitattype, sbzh, n_obs,
-           |  round(m, 6) AS index_hq_mean,
-           |  CASE WHEN n_obs > 1
-           |       THEN round(m - $z * sd / sqrt(CAST(n_obs AS DOUBLE)), 6) END
-           |    AS index_hq_llci,
-           |  CASE WHEN n_obs > 1
-           |       THEN round(m + $z * sd / sqrt(CAST(n_obs AS DOUBLE)), 6) END
-           |    AS index_hq_ulci
-           |FROM f""".stripMargin
-    },
-
-    // q116: trend_indicatoren — per-cycle paired proportions with
-    // Wilson bounds, paired-Wald difference interval from the
-    // discordant counts, relative change as a point estimate.
-    "q116_trend_indicatoren" -> {
-      val z = graft.lsvi.LsviStatus.z975
-      val z2 = z * z
-      statusOracleCtes.stripSuffix("\n") +
-        s""", pairsAll AS (
-           |  SELECT habitattype, point_code,
-           |    arg_min(id, mdate || '|' || id) AS id_1, arg_max(id, mdate || '|' || id) AS id_2,
-           |    count(DISTINCT mdate) AS nc
-           |  FROM plots GROUP BY 1, 2),
-           |prs AS (SELECT * FROM pairsAll WHERE nc > 1),
-           |ind AS (
-           |  SELECT p.id, p.habitattype, 'crit_' || (j.j % 2) AS criterium,
-           |    'ind_' || j.j AS indicator,
-           |    CASE WHEN j.j < 2 THEN 'zb' ELSE 'b' END AS belang,
-           |    CASE WHEN (p.ck * (j.j + 2)) % 5 = 0 THEN NULL
-           |         ELSE ((p.ck * (j.j + 2)) % 5) % 2 = 1 END AS status
-           |  FROM plots p CROSS JOIN (VALUES (0),(1),(2),(3),(4)) j(j)),
-           |known AS (SELECT * FROM ind WHERE status IS NOT NULL),
-           |cyc AS (
-           |  SELECT id_1 AS id, 'c_1' AS periode FROM prs
-           |  UNION ALL
-           |  SELECT id_2 AS id, 'c_2' AS periode FROM prs),
-           |pc AS (
-           |  SELECT k.habitattype, c.periode, k.criterium, k.indicator, k.belang,
-           |    count(*) AS n_obs, count(CASE WHEN k.status THEN 1 END) AS k
-           |  FROM known k JOIN cyc c ON k.id = c.id
-           |  GROUP BY 1, 2, 3, 4, 5),
-           |wil AS (
-           |  SELECT *, CAST(k AS DOUBLE) / CAST(n_obs AS DOUBLE) AS p,
-           |    1.0 + $z2 / n_obs AS den
-           |  FROM pc),
-           |wil2 AS (
-           |  SELECT *,
-           |    (p + $z2 / (2.0 * n_obs)) / den AS center,
-           |    ($z / den) * sqrt(p * (1.0 - p) / n_obs + $z2 / (4.0 * n_obs * n_obs)) AS half
-           |  FROM wil),
-           |aandeel AS (
-           |  SELECT habitattype, periode, criterium, indicator, belang, n_obs,
-           |    'aandeel_gunstig' AS parameter,
-           |    round(100.0 * CAST(k AS DOUBLE) / n_obs, 6) AS mean,
-           |    round(CASE WHEN k = 0 OR k = n_obs THEN 100.0 * p
-           |               ELSE 100.0 * greatest(0.0, center - half) END, 6) AS llci,
-           |    round(CASE WHEN k = 0 OR k = n_obs THEN 100.0 * p
-           |               ELSE 100.0 * least(1.0, center + half) END, 6) AS ulci
-           |  FROM wil2),
-           |s1 AS (
-           |  SELECT p.habitattype, p.point_code, k.criterium, k.indicator,
-           |    k.belang, k.status AS st1
-           |  FROM known k JOIN prs p ON k.id = p.id_1),
-           |s2 AS (
-           |  SELECT p.habitattype, p.point_code, k.criterium, k.indicator,
-           |    k.status AS st2
-           |  FROM known k JOIN prs p ON k.id = p.id_2),
-           |pr AS (
-           |  SELECT s1.habitattype, s1.criterium, s1.indicator, s1.belang,
-           |    count(*) AS n_obs,
-           |    count(CASE WHEN st1 THEN 1 END) AS k1,
-           |    count(CASE WHEN st1 AND NOT st2 THEN 1 END) AS b,
-           |    count(CASE WHEN NOT st1 AND st2 THEN 1 END) AS c
-           |  FROM s1 JOIN s2 ON s1.habitattype = s2.habitattype
-           |    AND s1.point_code = s2.point_code
-           |    AND s1.criterium = s2.criterium AND s1.indicator = s2.indicator
-           |  GROUP BY 1, 2, 3, 4),
-           |vr AS (
-           |  SELECT *,
-           |    100.0 * (CAST(c AS DOUBLE) - CAST(b AS DOUBLE))
-           |      / CAST(n_obs AS DOUBLE) AS d,
-           |    100.0 * sqrt(CAST(b AS DOUBLE) + CAST(c AS DOUBLE)
-           |        - pow(CAST(b AS DOUBLE) - CAST(c AS DOUBLE), 2)
-           |          / CAST(n_obs AS DOUBLE))
-           |      / CAST(n_obs AS DOUBLE) AS se,
-           |    100.0 * CAST(k1 AS DOUBLE) / CAST(n_obs AS DOUBLE) AS a1
-           |  FROM pr)
-           |SELECT * FROM aandeel
-           |UNION ALL
-           |SELECT habitattype, 'c_2' AS periode, criterium, indicator, belang,
-           |  n_obs, 'verschil_aandeel_gunstig_abs' AS parameter,
-           |  round(d, 6) AS mean,
-           |  round(d - $z * se, 6) AS llci,
-           |  round(d + $z * se, 6) AS ulci
-           |FROM vr
-           |UNION ALL
-           |SELECT habitattype, 'c_2' AS periode, criterium, indicator, belang,
-           |  n_obs, 'verschil_aandeel_gunstig_rel' AS parameter,
-           |  CASE WHEN a1 > 0.0
-           |       THEN round(100.0 * (CAST(c AS DOUBLE) - CAST(b AS DOUBLE))
-           |                  / CAST(n_obs AS DOUBLE) / a1 * 100.0, 6) END AS mean,
-           |  CAST(NULL AS DOUBLE) AS llci,
-           |  CAST(NULL AS DOUBLE) AS ulci
-           |FROM vr""".stripMargin
-    },
-
-    // q117: status_habitat — the q113 Wilson machinery on the
-    // plot-level lsvi verdict.
-    "q117_status_habitat" -> {
-      val z = graft.lsvi.LsviStatus.z975
-      val z2 = z * z
-      statusOracleCtes.stripSuffix("\n") +
-        s""", rows_ AS (
-           |  SELECT habitattype,
-           |    CASE WHEN g.g = 1 THEN 'Binnen & Buiten'
-           |         WHEN in_sac = 1 THEN 'Binnen' ELSE 'Buiten' END AS sbzh,
-           |    (lsvi = 'gunstig') AS gn
-           |  FROM latest CROSS JOIN (VALUES (0),(1)) g(g)
-           |  WHERE lsvi IS NOT NULL),
-           |agg AS (
-           |  SELECT habitattype, sbzh, count(*) AS n_obs,
-           |    count(CASE WHEN gn THEN 1 END) AS k
-           |  FROM rows_ GROUP BY 1, 2),
-           |wil AS (
-           |  SELECT *, CAST(k AS DOUBLE) / CAST(n_obs AS DOUBLE) AS p,
-           |    1.0 + $z2 / n_obs AS den
-           |  FROM agg),
-           |wil2 AS (
-           |  SELECT *,
-           |    (p + $z2 / (2.0 * n_obs)) / den AS center,
-           |    ($z / den) * sqrt(p * (1.0 - p) / n_obs + $z2 / (4.0 * n_obs * n_obs)) AS half
-           |  FROM wil),
-           |fin AS (
-           |  SELECT habitattype, sbzh, n_obs,
-           |    round(100.0 * CAST(k AS DOUBLE) / n_obs, 6) AS aandeel_gunstig,
-           |    round(CASE WHEN k = 0 OR k = n_obs THEN 100.0 * p
-           |               ELSE 100.0 * greatest(0.0, center - half) END, 6)
-           |      AS aandeel_gunstig_llci,
-           |    round(CASE WHEN k = 0 OR k = n_obs THEN 100.0 * p
-           |               ELSE 100.0 * least(1.0, center + half) END, 6)
-           |      AS aandeel_gunstig_ulci
-           |  FROM wil2)
-           |SELECT *, CASE WHEN aandeel_gunstig_llci >= 75 THEN 'Goed'
-           |               WHEN aandeel_gunstig_ulci < 75 THEN 'Niet goed'
-           |               ELSE 'Onbekend' END AS beoordeling
-           |FROM fin""".stripMargin
-    },
-
-    // q118: index_ind — the q114 fixed-point mean machinery at
-    // indicator grain.
-    "q118_index_ind" -> {
-      val z = graft.lsvi.LsviStatus.z975
-      statusOracleCtes.stripSuffix("\n") +
-        s""", ind AS (
-           |  SELECT p.id, p.habitattype, 'crit_' || (j.j % 2) AS criterium,
-           |    'ind_' || j.j AS indicator,
-           |    CASE WHEN j.j < 2 THEN 'zb' ELSE 'b' END AS belang,
-           |    CASE WHEN (p.ck * (j.j + 2)) % 5 = 0 THEN NULL
-           |         ELSE CAST((p.ck * (j.j + 4)) % 2001 - 1000 AS DOUBLE) / 1000.0
-           |         END AS vs
-           |  FROM plots p CROSS JOIN (VALUES (0),(1),(2),(3),(4)) j(j)),
-           |rows_ AS (
-           |  SELECT i.habitattype,
-           |    CASE WHEN g.g = 0 THEN 'SBZH' ELSE 'Habitattype' END AS type_resultaat,
-           |    CASE WHEN g.g = 1 THEN 'Binnen & Buiten'
-           |         WHEN l.in_sac = 1 THEN 'Binnen' ELSE 'Buiten' END AS sbzh,
-           |    i.criterium, i.indicator, i.belang,
-           |    CAST(floor(i.vs * 1000000.0 + 0.5) AS BIGINT) AS x6
-           |  FROM ind i JOIN latest l ON i.id = l.id
-           |  CROSS JOIN (VALUES (0),(1)) g(g)
-           |  WHERE i.vs IS NOT NULL),
-           |agg AS (
-           |  SELECT type_resultaat, habitattype, sbzh, criterium, indicator,
-           |    belang, count(*) AS n_obs,
-           |    CAST(sum(x6) AS BIGINT) AS s6, CAST(sum(x6 * x6) AS BIGINT) AS ss6
-           |  FROM rows_ GROUP BY 1, 2, 3, 4, 5, 6),
-           |f AS (
-           |  SELECT *, CAST(s6 AS DOUBLE) / n_obs / 1000000.0 AS m,
-           |    sqrt(CAST(n_obs * ss6 - s6 * s6 AS DOUBLE)
-           |         / (n_obs * (n_obs - 1))) / 1000000.0 AS sd
-           |  FROM agg)
-           |SELECT type_resultaat, habitattype, sbzh, criterium, indicator,
-           |  belang, n_obs,
-           |  round(m, 6) AS index_ind_mean,
-           |  CASE WHEN n_obs > 1
-           |       THEN round(m - $z * sd / sqrt(CAST(n_obs AS DOUBLE)), 6) END
-           |    AS index_ind_llci,
-           |  CASE WHEN n_obs > 1
-           |       THEN round(m + $z * sd / sqrt(CAST(n_obs AS DOUBLE)), 6) END
-           |    AS index_ind_ulci
-           |FROM f""".stripMargin
-    },
-
-    // q119: trend_index_hq — exact fixed-point paired differences of
-    // the plot index, z interval, relative change = sum(d)/sum(x1).
-    "q119_trend_index_hq" -> {
-      val z = graft.lsvi.LsviStatus.z975
-      statusOracleCtes.stripSuffix("\n") +
-        s""", px AS (
-           |  SELECT habitattype, point_code, id, mdate, in_sac,
-           |    CAST(floor(idx * 1000000.0 + 0.5) AS BIGINT) AS x6
-           |  FROM plots WHERE idx IS NOT NULL),
-           |pairs AS (
-           |  SELECT habitattype, point_code,
-           |    arg_min(x6, mdate || '|' || id) AS x16, arg_max(x6, mdate || '|' || id) AS x26,
-           |    arg_max(in_sac, mdate || '|' || id) AS in_sac,
-           |    count(DISTINCT mdate) AS nc
-           |  FROM px GROUP BY 1, 2),
-           |d AS (
-           |  SELECT habitattype, x26 - x16 AS d6, x16, in_sac
-           |  FROM pairs WHERE nc > 1),
-           |rows_ AS (
-           |  SELECT habitattype,
-           |    CASE WHEN g.g = 0 THEN 'SBZH' ELSE 'Habitattype' END AS type_resultaat,
-           |    CASE WHEN g.g = 1 THEN 'Binnen & Buiten'
-           |         WHEN in_sac = 1 THEN 'Binnen' ELSE 'Buiten' END AS sbzh,
-           |    d6, x16
-           |  FROM d CROSS JOIN (VALUES (0),(1)) g(g)),
-           |agg AS (
-           |  SELECT type_resultaat, habitattype, sbzh, count(*) AS n_obs,
-           |    CAST(sum(d6) AS BIGINT) AS sd6,
-           |    CAST(sum(d6 * d6) AS BIGINT) AS ssd6,
-           |    CAST(sum(x16) AS BIGINT) AS s16
-           |  FROM rows_ GROUP BY 1, 2, 3),
-           |f AS (
-           |  SELECT *, CAST(sd6 AS DOUBLE) / n_obs / 1000000.0 AS m,
-           |    sqrt(CAST(n_obs * ssd6 - sd6 * sd6 AS DOUBLE)
-           |         / (n_obs * (n_obs - 1))) / 1000000.0 AS sd
-           |  FROM agg)
-           |SELECT type_resultaat, habitattype, sbzh, n_obs,
-           |  round(m, 6) AS index_diff_mean,
-           |  CASE WHEN n_obs > 1
-           |       THEN round(m - $z * sd / sqrt(CAST(n_obs AS DOUBLE)), 6) END
-           |    AS index_diff_llci,
-           |  CASE WHEN n_obs > 1
-           |       THEN round(m + $z * sd / sqrt(CAST(n_obs AS DOUBLE)), 6) END
-           |    AS index_diff_ulci,
-           |  CASE WHEN s16 <> 0
-           |       THEN round(CAST(sd6 AS DOUBLE) / CAST(s16 AS DOUBLE), 6) END
-           |    AS index_diff_rel
-           |FROM f""".stripMargin
-    },
-
-    // q120: trend_index_ind — the q119 machinery at indicator grain.
-    "q120_trend_index_ind" -> {
-      val z = graft.lsvi.LsviStatus.z975
-      statusOracleCtes.stripSuffix("\n") +
-        s""", pairs AS (
-           |  SELECT habitattype, point_code,
-           |    arg_min(id, mdate || '|' || id) AS id_1, arg_max(id, mdate || '|' || id) AS id_2,
-           |    arg_max(in_sac, mdate || '|' || id) AS in_sac,
-           |    count(DISTINCT mdate) AS nc
-           |  FROM plots GROUP BY 1, 2),
-           |prs AS (SELECT * FROM pairs WHERE nc > 1),
-           |ind AS (
-           |  SELECT p.id, 'crit_' || (j.j % 2) AS criterium,
-           |    'ind_' || j.j AS indicator,
-           |    CASE WHEN j.j < 2 THEN 'zb' ELSE 'b' END AS belang,
-           |    CASE WHEN (p.ck * (j.j + 2)) % 5 = 0 THEN NULL
-           |         ELSE CAST(floor(CAST((p.ck * (j.j + 4)) % 2001 - 1000 AS DOUBLE)
-           |                         / 1000.0 * 1000000.0 + 0.5) AS BIGINT)
-           |         END AS x6
-           |  FROM plots p CROSS JOIN (VALUES (0),(1),(2),(3),(4)) j(j)),
-           |known AS (SELECT * FROM ind WHERE x6 IS NOT NULL),
-           |s1 AS (
-           |  SELECT p.habitattype, p.point_code, p.in_sac, k.criterium,
-           |    k.indicator, k.belang, k.x6 AS x16
-           |  FROM known k JOIN prs p ON k.id = p.id_1),
-           |s2 AS (
-           |  SELECT p.habitattype, p.point_code, k.criterium, k.indicator,
-           |    k.x6 AS x26
-           |  FROM known k JOIN prs p ON k.id = p.id_2),
-           |d AS (
-           |  SELECT s1.habitattype, s1.criterium, s1.indicator, s1.belang,
-           |    s1.in_sac, s2.x26 - s1.x16 AS d6
-           |  FROM s1 JOIN s2 ON s1.habitattype = s2.habitattype
-           |    AND s1.point_code = s2.point_code
-           |    AND s1.criterium = s2.criterium AND s1.indicator = s2.indicator),
-           |rows_ AS (
-           |  SELECT habitattype,
-           |    CASE WHEN g.g = 0 THEN 'SBZH' ELSE 'Habitattype' END AS type_resultaat,
-           |    CASE WHEN g.g = 1 THEN 'Binnen & Buiten'
-           |         WHEN in_sac = 1 THEN 'Binnen' ELSE 'Buiten' END AS sbzh,
-           |    criterium, indicator, belang, d6
-           |  FROM d CROSS JOIN (VALUES (0),(1)) g(g)),
-           |agg AS (
-           |  SELECT type_resultaat, habitattype, sbzh, criterium, indicator,
-           |    belang, count(*) AS n_obs,
-           |    CAST(sum(d6) AS BIGINT) AS sd6,
-           |    CAST(sum(d6 * d6) AS BIGINT) AS ssd6
-           |  FROM rows_ GROUP BY 1, 2, 3, 4, 5, 6),
-           |f AS (
-           |  SELECT *, CAST(sd6 AS DOUBLE) / n_obs / 1000000.0 AS m,
-           |    sqrt(CAST(n_obs * ssd6 - sd6 * sd6 AS DOUBLE)
-           |         / (n_obs * (n_obs - 1))) / 1000000.0 AS sd
-           |  FROM agg)
-           |SELECT type_resultaat, habitattype, sbzh, criterium, indicator,
-           |  belang, n_obs,
-           |  round(m, 6) AS index_diff_mean,
-           |  CASE WHEN n_obs > 1
-           |       THEN round(m - $z * sd / sqrt(CAST(n_obs AS DOUBLE)), 6) END
-           |    AS index_diff_llci,
-           |  CASE WHEN n_obs > 1
-           |       THEN round(m + $z * sd / sqrt(CAST(n_obs AS DOUBLE)), 6) END
-           |    AS index_diff_ulci
-           |FROM f""".stripMargin
-    },
-
-    // q115: mc_nemar — paired two-cycle transitions per point, n +
-    // weighted n_adj per transition, chi-square without continuity
-    // correction on the weighted discordant counts (quarter-step
-    // weights are exact in binary: distributed sums replay bit-equal).
-    "q115_mc_nemar" -> (statusOracleCtes.stripSuffix("\n") +
-      """, pairs AS (
-        |  SELECT habitattype, point_code,
-        |    arg_min(lsvi, mdate || '|' || id) AS l1, arg_max(lsvi, mdate || '|' || id) AS l2,
-        |    arg_max(w, mdate || '|' || id) AS w, count(DISTINCT mdate) AS nc
-        |  FROM plots GROUP BY 1, 2),
-        |p2 AS (
-        |  SELECT habitattype, l1 || ' - ' || l2 AS trend_local, w
-        |  FROM pairs WHERE nc > 1),
-        |counts AS (
-        |  SELECT habitattype, trend_local, count(*) AS n,
-        |    round(sum(w), 6) AS n_adj
-        |  FROM p2 GROUP BY 1, 2),
-        |disc AS (
-        |  SELECT habitattype,
-        |    sum(CASE WHEN trend_local = 'gunstig - ongunstig' THEN w ELSE 0.0 END) AS b,
-        |    sum(CASE WHEN trend_local = 'ongunstig - gunstig' THEN w ELSE 0.0 END) AS c
-        |  FROM p2 GROUP BY 1)
-        |SELECT c.habitattype, c.trend_local, c.n, c.n_adj,
-        |  CASE WHEN d.b + d.c > 0.0
-        |       THEN round(pow(d.b - d.c, 2) / (d.b + d.c), 6) END AS mcnemar_chi2
-        |FROM counts c JOIN disc d ON c.habitattype = d.habitattype""".stripMargin),
-
-    // q121: trend_habitat — per-cycle paired proportions with Wilson
-    // bounds, paired-Wald absolute difference and log-ratio-delta
-    // relative change, both classified by the ten-class effect CASE
-    // (thresholds +-12pp abs / +-25% rel), year spans and the mean
-    // revisit interval.
-    "q121_trend_habitat" -> (
-      statusOracleCtes.stripSuffix("\n") +
-        s""", pairs AS (
-           |  SELECT habitattype, point_code,
-           |    arg_min(lsvi, mdate || '|' || id) = 'gunstig' AS g1,
-           |    arg_max(lsvi, mdate || '|' || id) = 'gunstig' AS g2,
-           |    arg_max(in_sac, mdate || '|' || id) AS in_sac,
-           |    min(mdate) AS j1, max(mdate) AS j2,
-           |    count(DISTINCT mdate) AS nc
-           |  FROM plots GROUP BY 1, 2),
-           |""".stripMargin + trendHabitatOracleTail("nc > 1")),
-
-    // q129: cycle-based pairing — the same trend tail over pairs that
-    // require one visit in each of cycles 0 and 1, with the cycle
-    // derived from each habitatsubtype's first visit year like
-    // assignCycles (6-year windows).
-    "q129_trend_habitat_cycles" -> {
-      val typeList = graft.lsvi.Versie3Forests.habitattypes
-        .map(sqlStr).mkString("[", ", ", "]")
-      s"""WITH base AS (
-         |  SELECT c_custkey AS ck, c_custkey // 2 AS pt
-         |  FROM customer WHERE (c_custkey * 3) % 7 <> 0),
-         |plots0 AS (
-         |  SELECT 'CY_' || ck AS id,
-         |    $typeList[CAST(pt % 11 AS INTEGER) + 1] AS habitattype,
-         |    $typeList[CAST(pt % 11 AS INTEGER) + 1] || '_s' || (pt % 3)
-         |      AS habitatsubtype,
-         |    'pt_' || pt AS point_code,
-         |    2010 + 3 * (ck % 5) AS mdate,
-         |    CASE WHEN pt % 3 < 2 THEN 1 ELSE 0 END AS in_sac,
-         |    CASE WHEN (ck * 5) % 3 = 0 THEN 'gunstig' ELSE 'ongunstig' END
-         |      AS lsvi
-         |  FROM base),
-         |y0 AS (
-         |  SELECT habitatsubtype, min(mdate) AS ys FROM plots0 GROUP BY 1),
-         |cycplots AS (
-         |  SELECT p.*, CAST(floor((p.mdate - y.ys) / 6) AS INTEGER) AS cyc
-         |  FROM plots0 p JOIN y0 y USING (habitatsubtype)),
-         |pairs AS (
-         |  SELECT habitattype, point_code,
-         |    arg_min(lsvi, mdate || '|' || id) = 'gunstig' AS g1,
-         |    arg_max(lsvi, mdate || '|' || id) = 'gunstig' AS g2,
-         |    arg_max(in_sac, mdate || '|' || id) AS in_sac,
-         |    min(mdate) AS j1, max(mdate) AS j2,
-         |    count(DISTINCT cyc) AS nc
-         |  FROM cycplots WHERE cyc IN (0, 1) GROUP BY 1, 2),
-         |""".stripMargin + trendHabitatOracleTail("nc = 2")
-    },
-
-    // q138: the q129 cycle-derived pairing CTEs with a per-visit
-    // weight, feeding the weighted trend tail.
-    "q138_trend_habitat_cycles_weighted" -> {
-      val typeList = graft.lsvi.Versie3Forests.habitattypes
-        .map(sqlStr).mkString("[", ", ", "]")
-      s"""WITH base AS (
-         |  SELECT c_custkey AS ck, c_custkey // 2 AS pt
-         |  FROM customer WHERE (c_custkey * 3) % 7 <> 0),
-         |plots0 AS (
-         |  SELECT 'CY_' || ck AS id,
-         |    $typeList[CAST(pt % 11 AS INTEGER) + 1] AS habitattype,
-         |    $typeList[CAST(pt % 11 AS INTEGER) + 1] || '_s' || (pt % 3)
-         |      AS habitatsubtype,
-         |    'pt_' || pt AS point_code,
-         |    2010 + 3 * (ck % 5) AS mdate,
-         |    CASE WHEN pt % 3 < 2 THEN 1 ELSE 0 END AS in_sac,
-         |    CASE WHEN (ck * 5) % 3 = 0 THEN 'gunstig' ELSE 'ongunstig' END
-         |      AS lsvi,
-         |    ((2010 + 3 * (ck % 5) - 2010) // 3 + 1) * 0.25 AS w
-         |  FROM base),
-         |y0 AS (
-         |  SELECT habitatsubtype, min(mdate) AS ys FROM plots0 GROUP BY 1),
-         |cycplots AS (
-         |  SELECT p.*, CAST(floor((p.mdate - y.ys) / 6) AS INTEGER) AS cyc
-         |  FROM plots0 p JOIN y0 y USING (habitatsubtype)),
-         |pairs AS (
-         |  SELECT habitattype, point_code,
-         |    arg_min(lsvi, mdate || '|' || id) = 'gunstig' AS g1,
-         |    arg_max(lsvi, mdate || '|' || id) = 'gunstig' AS g2,
-         |    arg_max(in_sac, mdate || '|' || id) AS in_sac,
-         |    arg_max(w, mdate || '|' || id) AS w,
-         |    min(mdate) AS j1, max(mdate) AS j2,
-         |    count(DISTINCT cyc) AS nc
-         |  FROM cycplots WHERE cyc IN (0, 1) GROUP BY 1, 2),
-         |""".stripMargin + trendHabitatWeightedOracleTail("nc = 2")
-    },
-
-    // q122: status_beheer — latest-per-point favourability split by
-    // management with Wilson bounds and the two-proportion Pearson
-    // chi-square (both rows of a habitattype carry the statistic; the
-    // test needs both groups with n >= 5 and a non-degenerate table).
-    "q122_status_beheer" -> {
-      val z = graft.lsvi.LsviStatus.z975
-      val z2 = z * z
-      val crit = graft.lsvi.LsviStatus.chi2Crit05
-      statusOracleCtes.stripSuffix("\n") +
-        s""", agg AS (
-           |  SELECT habitattype, beheer AS passend_beheer, count(*) AS n_obs,
-           |    count(CASE WHEN lsvi = 'gunstig' THEN 1 END) AS k
-           |  FROM latest GROUP BY 1, 2),
-           |tot AS (
-           |  SELECT *,
-           |    count(*) OVER (PARTITION BY habitattype) AS n_groups,
-           |    sum(n_obs) OVER (PARTITION BY habitattype) AS n_tot,
-           |    sum(k) OVER (PARTITION BY habitattype) AS k_tot,
-           |    min(n_obs) OVER (PARTITION BY habitattype) AS n_min
-           |  FROM agg),
-           |chi AS (
-           |  SELECT *,
-           |    CASE WHEN n_groups = 2 AND n_min >= 5
-           |              AND k_tot > 0 AND k_tot < n_tot
-           |         THEN round(n_tot * pow(CAST(k AS DOUBLE) * n_tot
-           |                  - CAST(k_tot AS DOUBLE) * n_obs, 2)
-           |              / (CAST(n_obs AS DOUBLE) * (n_tot - n_obs) * k_tot
-           |                 * (n_tot - k_tot)), 6)
-           |         END AS chi2_beheer,
-           |    CAST(k AS DOUBLE) / CAST(n_obs AS DOUBLE) AS p,
-           |    1.0 + $z2 / n_obs AS den
-           |  FROM tot),
-           |wil AS (
-           |  SELECT *,
-           |    (p + $z2 / (2.0 * n_obs)) / den AS center,
-           |    ($z / den) * sqrt(p * (1.0 - p) / n_obs + $z2 / (4.0 * n_obs * n_obs)) AS half
-           |  FROM chi),
-           |fin AS (
-           |  SELECT 'Passend beheer' AS type_resultaat, habitattype,
-           |    'Binnen & Buiten' AS sbzh, passend_beheer, n_obs,
-           |    round(100.0 * p, 6) AS aandeel_gunstig,
-           |    round(CASE WHEN k = 0 OR k = n_obs THEN 100.0 * p
-           |               ELSE 100.0 * greatest(0.0, center - half) END, 6)
-           |      AS aandeel_gunstig_llci,
-           |    round(CASE WHEN k = 0 OR k = n_obs THEN 100.0 * p
-           |               ELSE 100.0 * least(1.0, center + half) END, 6)
-           |      AS aandeel_gunstig_ulci,
-           |    chi2_beheer
-           |  FROM wil)
-           |SELECT type_resultaat, habitattype, sbzh, passend_beheer, n_obs,
-           |  aandeel_gunstig, aandeel_gunstig_llci, aandeel_gunstig_ulci,
-           |  CASE WHEN aandeel_gunstig_llci >= 75 THEN 'Goed'
-           |       WHEN aandeel_gunstig_ulci < 75 THEN 'Niet goed'
-           |       ELSE 'Onbekend' END AS beoordeling,
-           |  chi2_beheer,
-           |  CASE WHEN chi2_beheer IS NOT NULL THEN
-           |    CASE WHEN chi2_beheer > $crit THEN 'significant'
-           |         ELSE 'niet significant' END END AS effect_beheer
-           |FROM fin""".stripMargin
-    },
-
-    // q123: extra-vars msa — rectangle PIP as interval predicates
-    // (Spark side runs the generic even-odd ray cast), broadcast
-    // cluster/type dictionary joins, distinct.
-    "q123_extra_vars_msa" ->
-      """WITH pts AS (
-        |  SELECT c_custkey AS plot_id, c_custkey % 2 + 2 AS periode,
-        |    CAST((c_custkey * 7) % 97 AS DOUBLE) AS x,
-        |    CAST((c_custkey * 13) % 89 AS DOUBLE) AS y
-        |  FROM customer),
-        |polys AS (
-        |  SELECT n_nationkey AS polygon_id,
-        |    CAST((n_nationkey * 11) % 80 AS DOUBLE) - 0.5 AS x0,
-        |    CAST((n_nationkey * 17) % 70 AS DOUBLE) - 0.5 AS y0
-        |  FROM nation),
-        |hits AS (
-        |  SELECT p.plot_id, p.periode, q.polygon_id
-        |  FROM pts p JOIN polys q
-        |    ON p.x > q.x0 AND p.x < q.x0 + 15.0
-        |   AND p.y > q.y0 AND p.y < q.y0 + 20.0),
-        |clus AS (
-        |  SELECT n_nationkey AS polygon_id, n_nationkey % 7 AS cluster_id
-        |  FROM nation),
-        |typ AS (
-        |  SELECT n_nationkey AS cluster_id,
-        |    'T' || (n_nationkey % 3) AS type,
-        |    CAST(n_nationkey + 1 AS DOUBLE) * 1.5 AS msa_area_ha
-        |  FROM nation WHERE n_nationkey < 7)
-        |SELECT DISTINCT plot_id, periode, type, msa_area_ha
-        |FROM hits
-        |LEFT JOIN clus USING (polygon_id)
-        |LEFT JOIN typ USING (cluster_id)
-        |WHERE msa_area_ha IS NOT NULL""".stripMargin,
-
-    // q124: paired-coordinate QA distance — single aggregation with
-    // conditional-max cycle pivots, idgroup-carrying rows only feed
-    // the pivots while the period count spans all rows.
-    "q124_coord_paired_check" ->
-      """WITH c AS (
-        |  SELECT c_custkey // 2 AS idplots, c_custkey % 2 + 2 AS periode,
-        |    CASE WHEN (c_custkey // 2) % 5 = 0 THEN NULL
-        |         ELSE (c_custkey // 2) % 13 END AS idgroup,
-        |    'ht' || (c_custkey % 4) AS type,
-        |    CAST((c_custkey * 7) % 97 AS DOUBLE) AS x,
-        |    CAST((c_custkey * 13) % 89 AS DOUBLE) AS y
-        |  FROM customer),
-        |k AS (SELECT * FROM c WHERE periode > 1),
-        |agg AS (
-        |  SELECT idplots, count(DISTINCT periode) AS nc,
-        |    max(idgroup) AS idgroup,
-        |    max(CASE WHEN periode = 2 AND idgroup IS NOT NULL THEN x END) AS x_2,
-        |    max(CASE WHEN periode = 2 AND idgroup IS NOT NULL THEN y END) AS y_2,
-        |    max(CASE WHEN periode = 2 AND idgroup IS NOT NULL THEN type END) AS type_2,
-        |    max(CASE WHEN periode = 3 AND idgroup IS NOT NULL THEN x END) AS x_3,
-        |    max(CASE WHEN periode = 3 AND idgroup IS NOT NULL THEN y END) AS y_3,
-        |    max(CASE WHEN periode = 3 AND idgroup IS NOT NULL THEN type END) AS type_3
-        |  FROM k GROUP BY idplots)
-        |SELECT idplots, idgroup, x_2, y_2, type_2, x_3, y_3, type_3,
-        |  sqrt(pow(x_2 - x_3, 2) + pow(y_2 - y_3, 2)) AS distance
-        |FROM agg WHERE nc >= 2 AND idgroup IS NOT NULL""".stripMargin,
-
-    // q125/q126: continuous status/trend — the same 1e-4 fixed-point
-    // sums and double formula shapes as the engine, so values are
-    // bit-identical under any aggregation order; roll-up rows union
-    // in for multi-subtype types.
-    "q125_status_continuous" -> {
-      val z = graft.lsvi.LsviStatus.z975
-      continuousOracleCtes +
-      s"""persub AS (
-         |  SELECT habitattype, habitatsubtype, count(*) AS n,
-         |    CAST(sum(v) AS BIGINT) AS s1,
-         |    CAST(sum(v * v) AS BIGINT) AS s2
-         |  FROM latest GROUP BY 1, 2),
-         |$continuousRollupSql
-         |SELECT type_resultaat, habitattype, habitatsubtype,
-         |  'Binnen & Buiten' AS sbzh, n AS n_obs,
-         |  round(CAST(s1 AS DOUBLE) / n / 10000.0, 6) AS gemiddelde,
-         |  CASE WHEN n >= 2 THEN round(CAST(s1 AS DOUBLE) / n / 10000.0 -
-         |    $z * (sqrt(greatest((CAST(s2 AS DOUBLE) -
-         |      CAST(s1 AS DOUBLE) * s1 / n) / (n - 1), 0.0)) / 10000.0) /
-         |    sqrt(n), 6) END AS gemiddelde_llci,
-         |  CASE WHEN n >= 2 THEN round(CAST(s1 AS DOUBLE) / n / 10000.0 +
-         |    $z * (sqrt(greatest((CAST(s2 AS DOUBLE) -
-         |      CAST(s1 AS DOUBLE) * s1 / n) / (n - 1), 0.0)) / 10000.0) /
-         |    sqrt(n), 6) END AS gemiddelde_ulci,
-         |  'hoeveelheid dik dood hout' AS indicator,
-         |  'aantal exemplaren dik dood hout per ha' AS voorwaarde
-         |FROM allr""".stripMargin
-    },
-
-    "q126_trend_continuous" -> {
-      val z = graft.lsvi.LsviStatus.z975
-      continuousOracleCtes +
-      s"""pairs AS (
-         |  SELECT point_code, habitatsubtype,
-         |    arg_min(v4, mdate || '|' || id) AS v1, arg_max(v4, mdate || '|' || id) AS v2,
-         |    arg_max(habitattype, mdate || '|' || id) AS habitattype,
-         |    count(DISTINCT mdate) AS ncd
-         |  FROM m GROUP BY 1, 2),
-         |pd AS (
-         |  SELECT habitattype, habitatsubtype, v2 - v1 AS d
-         |  FROM pairs WHERE ncd > 1),
-         |persub AS (
-         |  SELECT habitattype, habitatsubtype, count(*) AS n,
-         |    CAST(sum(d) AS BIGINT) AS s1,
-         |    CAST(sum(d * d) AS BIGINT) AS s2
-         |  FROM pd GROUP BY 1, 2),
-         |$continuousRollupSql
-         |SELECT type_resultaat, habitattype, habitatsubtype,
-         |  'Binnen & Buiten' AS sbzh, n AS n_obs,
-         |  round(CAST(s1 AS DOUBLE) / n / 10000.0, 6) AS verschil,
-         |  CASE WHEN n >= 5 THEN round(CAST(s1 AS DOUBLE) / n / 10000.0 -
-         |    $z * (sqrt(greatest((CAST(s2 AS DOUBLE) -
-         |      CAST(s1 AS DOUBLE) * s1 / n) / (n - 1), 0.0)) / 10000.0) /
-         |    sqrt(n), 6) END AS verschil_llci,
-         |  CASE WHEN n >= 5 THEN round(CAST(s1 AS DOUBLE) / n / 10000.0 +
-         |    $z * (sqrt(greatest((CAST(s2 AS DOUBLE) -
-         |      CAST(s1 AS DOUBLE) * s1 / n) / (n - 1), 0.0)) / 10000.0) /
-         |    sqrt(n), 6) END AS verschil_ulci,
-         |  'hoeveelheid dik dood hout' AS indicator,
-         |  'aantal exemplaren dik dood hout per ha' AS voorwaarde
-         |FROM allr""".stripMargin
-    },
-
-    // q140/q141: the design-weighted continuous overloads — the
-    // latest-visit/pair selection carries the visit weight (arg_max by
-    // (date, id)), the roll-up sums the weighted partials, and the
-    // interval is the family's Kish-n_eff z form with the exact engine
-    // float shape. Quarter-step weights × fixed-point values keep all
-    // sums exact on both engines.
-    "q140_status_continuous_weighted" ->
-      (continuousOracleCtes +
-        s"""latestw AS (
-           |  SELECT point_code, habitatsubtype,
-           |    arg_max(v4, mdate || '|' || id) AS v,
-           |    arg_max(w, mdate || '|' || id) AS w,
-           |    arg_max(habitattype, mdate || '|' || id) AS habitattype
-           |  FROM m GROUP BY 1, 2),
-           |persubw AS (
-           |  SELECT habitattype, habitatsubtype, count(*) AS n,
-           |    sum(w) AS sw, sum(w * w) AS sw2,
-           |    sum(w * v) AS swv, sum(w * v * v) AS swv2
-           |  FROM latestw GROUP BY 1, 2),
-           |$continuousRollupWeightedSql
-           |${continuousWeightedSelectSql("gemiddelde", 2)}""".stripMargin),
-
-    "q141_trend_continuous_weighted" ->
-      (continuousOracleCtes +
-        s"""pairsw AS (
-           |  SELECT point_code, habitatsubtype,
-           |    arg_min(v4, mdate || '|' || id) AS v1,
-           |    arg_max(v4, mdate || '|' || id) AS v2,
-           |    arg_max(w, mdate || '|' || id) AS w,
-           |    arg_max(habitattype, mdate || '|' || id) AS habitattype,
-           |    count(DISTINCT mdate) AS ncd
-           |  FROM m GROUP BY 1, 2),
-           |pdw AS (
-           |  SELECT habitattype, habitatsubtype, w, v2 - v1 AS d
-           |  FROM pairsw WHERE ncd > 1),
-           |persubw AS (
-           |  SELECT habitattype, habitatsubtype, count(*) AS n,
-           |    sum(w) AS sw, sum(w * w) AS sw2,
-           |    sum(w * d) AS swv, sum(w * d * d) AS swv2
-           |  FROM pdw GROUP BY 1, 2),
-           |$continuousRollupWeightedSql
-           |${continuousWeightedSelectSql("verschil", 5)}""".stripMargin),
-
-    // q127/q128: area-weighted census shares — exact binary-fraction
-    // areas sum identically in both engines; the klasse CASE mirrors
-    // the point-estimate effectKlasse factor indexes.
-    "q127_status_area_census" ->
-      s"""${censusOracleCte(1)}
-         |SELECT type_resultaat, habitattype, sbzh, indicator,
-         |  round(g, 6) AS opp_gunstig_ha, round(o, 6) AS opp_ongunstig_ha,
-         |  round(u, 6) AS opp_onbekend_ha,
-         |  round((100.0 * g / (g + o + u) +
-         |    100.0 * (g + u) / (g + o + u)) / 2.0, 6) AS aandeel_gunstig,
-         |  round(100.0 * g / (g + o + u), 6) AS aandeel_gunstig_llci,
-         |  round(100.0 * (g + u) / (g + o + u), 6) AS aandeel_gunstig_ulci,
-         |  CASE WHEN 100.0 * g / (g + o + u) >= 75.0 THEN 'Goed'
-         |       WHEN 100.0 * (g + u) / (g + o + u) < 75.0 THEN 'Niet goed'
-         |       ELSE 'Onbekend' END AS beoordeling
-         |FROM agg1""".stripMargin,
-
-    "q128_trend_area_census" ->
-      s"""${censusOracleCte(1)},
-         |${censusOracleCte(2).replaceFirst("^WITH ", "")},
-         |a1 AS (
-         |  SELECT type_resultaat, habitattype, sbzh, indicator,
-         |    (100.0 * g / (g + o + u) +
-         |      100.0 * (g + u) / (g + o + u)) / 2.0 AS a
-         |  FROM agg1),
-         |a2 AS (
-         |  SELECT type_resultaat, habitattype, sbzh, indicator,
-         |    (100.0 * g / (g + o + u) +
-         |      100.0 * (g + u) / (g + o + u)) / 2.0 AS a
-         |  FROM agg2),
-         |j AS (
-         |  SELECT coalesce(a1.type_resultaat, a2.type_resultaat)
-         |      AS type_resultaat,
-         |    coalesce(a1.habitattype, a2.habitattype) AS habitattype,
-         |    coalesce(a1.sbzh, a2.sbzh) AS sbzh,
-         |    coalesce(a1.indicator, a2.indicator) AS indicator,
-         |    a1.a AS av1, a2.a AS av2,
-         |    -- + 0.0 normalizes IEEE -0.0 (round of the midpoints'
-         |    -- division noise, e.g. -1e-14 -> -0.0 in DuckDB) to +0.0,
-         |    -- matching Spark's BigDecimal round which has no signed
-         |    -- zero; identity for every other value
-         |    round(a2.a - a1.a, 2) + 0.0 AS d
-         |  FROM a1 FULL JOIN a2 USING (type_resultaat, habitattype,
-         |    sbzh, indicator))
-         |SELECT type_resultaat, habitattype, sbzh, indicator,
-         |  'verschil_aandeel_gunstig_abs' AS parameter,
-         |  CASE WHEN av1 IS NOT NULL AND av2 IS NOT NULL THEN d END AS mean,
-         |  CASE WHEN av1 IS NOT NULL AND av2 IS NOT NULL THEN
-         |    CASE WHEN d > 12.0 THEN '1' WHEN d < -12.0 THEN '7'
-         |         WHEN d > 0.0 THEN '3' WHEN d < 0.0 THEN '5'
-         |         ELSE '4' END END AS klasse,
-         |  2017 AS jaar_min, 2023 AS jaar_max, 6 AS verschil_jaar
-         |FROM j""".stripMargin,
-
-    // q130: design-weighted status_habitat — Hájek share Σw·g/Σw with
-    // the Kish-n_eff Wilson interval. Quarter-step weights keep every
-    // distributed double sum exact, so the engine/oracle hashes agree
-    // under any aggregation order.
-    "q130_status_habitat_weighted" -> {
-      val z = graft.lsvi.LsviStatus.z975
-      val z2 = z * z
-      statusOracleCtes.stripSuffix("\n") +
-        s""", rows_ AS (
-           |  SELECT habitattype,
-           |    CASE WHEN g.g = 1 THEN 'Binnen & Buiten'
-           |         WHEN in_sac = 1 THEN 'Binnen' ELSE 'Buiten' END AS sbzh,
-           |    lsvi = 'gunstig' AS gg, w
-           |  FROM latest CROSS JOIN (VALUES (0),(1)) g(g)
-           |  WHERE lsvi IS NOT NULL),
-           |agg AS (
-           |  SELECT habitattype, sbzh, count(*) AS n_obs,
-           |    sum(w) AS sw, sum(w * w) AS sw2,
-           |    sum(CASE WHEN gg THEN w ELSE 0.0 END) AS swk
-           |  FROM rows_ GROUP BY 1, 2),
-           |e1 AS (
-           |  SELECT *, sw * sw / sw2 AS neff, swk / sw AS p FROM agg),
-           |e2 AS (SELECT *, 1.0 + $z2 / neff AS den FROM e1),
-           |e3 AS (
-           |  SELECT *,
-           |    (p + $z2 / (2.0 * neff)) / den AS center,
-           |    ($z / den) * sqrt(p * (1.0 - p) / neff
-           |      + $z2 / (4.0 * neff * neff)) AS half
-           |  FROM e2),
-           |fin AS (
-           |  SELECT habitattype, sbzh, n_obs,
-           |    round(100.0 * swk / sw, 6) AS aandeel_gunstig,
-           |    round(CASE WHEN swk = 0.0 OR swk = sw THEN 100.0 * p
-           |               ELSE 100.0 * greatest(0.0, center - half) END, 6)
-           |      AS aandeel_gunstig_llci,
-           |    round(CASE WHEN swk = 0.0 OR swk = sw THEN 100.0 * p
-           |               ELSE 100.0 * least(1.0, center + half) END, 6)
-           |      AS aandeel_gunstig_ulci
-           |  FROM e3)
-           |SELECT *, CASE WHEN aandeel_gunstig_llci >= 75 THEN 'Goed'
-           |               WHEN aandeel_gunstig_ulci < 75 THEN 'Niet goed'
-           |               ELSE 'Onbekend' END AS beoordeling
-           |FROM fin""".stripMargin
-    },
-
-    // q131: design-weighted index_hq over the binary-fraction index
-    // twin — weighted mean Σw·x/Σw, design-effect z interval
-    // mean ± z·sqrt(v_pop/(n_eff − 1)).
-    "q131_index_hq_weighted" -> {
-      val z = graft.lsvi.LsviStatus.z975
-      statusOracleCtes.stripSuffix("\n") +
-        s""", rows_ AS (
-           |  SELECT habitattype,
-           |    CASE WHEN g.g = 0 THEN 'SBZH' ELSE 'Habitattype' END
-           |      AS type_resultaat,
-           |    CASE WHEN g.g = 1 THEN 'Binnen & Buiten'
-           |         WHEN in_sac = 1 THEN 'Binnen' ELSE 'Buiten' END AS sbzh,
-           |    idx_b AS x, w
-           |  FROM latest CROSS JOIN (VALUES (0),(1)) g(g)
-           |  WHERE idx_b IS NOT NULL),
-           |agg AS (
-           |  SELECT type_resultaat, habitattype, sbzh, count(*) AS n_obs,
-           |    sum(w) AS sw, sum(w * w) AS sw2,
-           |    sum(w * x) AS swx, sum(w * x * x) AS swx2
-           |  FROM rows_ GROUP BY 1, 2, 3),
-           |f AS (
-           |  SELECT *, sw * sw / sw2 AS neff, swx / sw AS m FROM agg),
-           |f2 AS (
-           |  SELECT *, greatest(swx2 / sw - m * m, 0.0) AS vpop FROM f)
-           |SELECT type_resultaat, habitattype, sbzh, n_obs,
-           |  round(m, 6) AS index_hq_mean,
-           |  CASE WHEN n_obs > 1
-           |       THEN round(m - $z * sqrt(vpop / (neff - 1.0)), 6) END
-           |    AS index_hq_llci,
-           |  CASE WHEN n_obs > 1
-           |       THEN round(m + $z * sqrt(vpop / (neff - 1.0)), 6) END
-           |    AS index_hq_ulci
-           |FROM f2""".stripMargin
-    },
-
-    // q132: design-weighted trend_habitat — the q121 pairing with the
-    // latest-visit weight (2020 visits carry +0.125), weighted shares,
-    // effective-count Wilson/Wald/log-ratio intervals, both klasse
-    // ladders. Every weighted sum is a binary-fraction multiple, so
-    // the distributed aggregation is order-independent on both sides.
-    "q132_trend_habitat_weighted" -> (
-      statusOracleCtes.stripSuffix("\n") +
-        s""", pairs AS (
-           |  SELECT habitattype, point_code,
-           |    arg_min(lsvi, mdate || '|' || id) = 'gunstig' AS g1,
-           |    arg_max(lsvi, mdate || '|' || id) = 'gunstig' AS g2,
-           |    arg_max(in_sac, mdate || '|' || id) AS in_sac,
-           |    arg_max(w + CASE WHEN mdate = 2020 THEN 0.125 ELSE 0.0 END,
-           |            mdate || '|' || id) AS w,
-           |    min(mdate) AS j1, max(mdate) AS j2,
-           |    count(DISTINCT mdate) AS nc
-           |  FROM plots GROUP BY 1, 2),
-           |""".stripMargin + trendHabitatWeightedOracleTail),
-
-    // q133: design-weighted status_indicatoren — q113 with Hájek
-    // shares and the Kish-n_eff Wilson interval (the q130 formula
-    // shape at indicator grain).
-    "q133_status_indicatoren_weighted" -> {
-      val z = graft.lsvi.LsviStatus.z975
-      val z2 = z * z
-      statusOracleCtes.stripSuffix("\n") +
-        s""", ind AS (
-           |  SELECT p.id, p.habitattype, 'crit_' || (j.j % 2) AS criterium,
-           |    'ind_' || j.j AS indicator,
-           |    CASE WHEN j.j < 2 THEN 'zb' ELSE 'b' END AS belang,
-           |    CASE WHEN (p.ck * (j.j + 2)) % 5 = 0 THEN NULL
-           |         ELSE ((p.ck * (j.j + 2)) % 5) % 2 = 1 END AS status
-           |  FROM plots p CROSS JOIN (VALUES (0),(1),(2),(3),(4)) j(j)),
-           |rows_ AS (
-           |  SELECT i.habitattype,
-           |    CASE WHEN g.g = 1 THEN 'Binnen & Buiten'
-           |         WHEN l.in_sac = 1 THEN 'Binnen' ELSE 'Buiten' END AS sbzh,
-           |    i.criterium, i.indicator, i.belang, i.status, l.w
-           |  FROM ind i JOIN latest l ON i.id = l.id
-           |  CROSS JOIN (VALUES (0),(1)) g(g)
-           |  WHERE i.status IS NOT NULL),
-           |agg AS (
-           |  SELECT habitattype, sbzh, criterium, indicator, belang,
-           |    count(*) AS n_obs, sum(w) AS sw, sum(w * w) AS sw2,
-           |    sum(CASE WHEN status THEN w ELSE 0.0 END) AS swk
-           |  FROM rows_ GROUP BY 1, 2, 3, 4, 5),
-           |e1 AS (
-           |  SELECT *, sw * sw / sw2 AS neff, swk / sw AS p FROM agg),
-           |e2 AS (SELECT *, 1.0 + $z2 / neff AS den FROM e1),
-           |e3 AS (
-           |  SELECT *,
-           |    (p + $z2 / (2.0 * neff)) / den AS center,
-           |    ($z / den) * sqrt(p * (1.0 - p) / neff
-           |      + $z2 / (4.0 * neff * neff)) AS half
-           |  FROM e2),
-           |fin AS (
-           |  SELECT habitattype, sbzh, criterium, indicator, belang, n_obs,
-           |    round(100.0 * swk / sw, 6) AS aandeel_gunstig,
-           |    round(CASE WHEN swk = 0.0 OR swk = sw THEN 100.0 * p
-           |               ELSE 100.0 * greatest(0.0, center - half) END, 6)
-           |      AS aandeel_gunstig_llci,
-           |    round(CASE WHEN swk = 0.0 OR swk = sw THEN 100.0 * p
-           |               ELSE 100.0 * least(1.0, center + half) END, 6)
-           |      AS aandeel_gunstig_ulci
-           |  FROM e3)
-           |SELECT *, CASE WHEN aandeel_gunstig_llci >= 75 THEN 'Goed'
-           |               WHEN aandeel_gunstig_ulci < 75 THEN 'Niet goed'
-           |               ELSE 'Onbekend' END AS beoordeling
-           |FROM fin""".stripMargin
-    },
-
-    // q134: design-weighted index_ind over the 1/1024-snapped
-    // verschilscore — Hájek mean, design-effect z interval (the q131
-    // weighted-mean tail at indicator grain).
-    "q134_index_ind_weighted" -> {
-      val z = graft.lsvi.LsviStatus.z975
-      statusOracleCtes.stripSuffix("\n") +
-        s""", ind AS (
-           |  SELECT p.id, p.habitattype, 'crit_' || (j.j % 2) AS criterium,
-           |    'ind_' || j.j AS indicator,
-           |    CASE WHEN j.j < 2 THEN 'zb' ELSE 'b' END AS belang,
-           |    CASE WHEN (p.ck * (j.j + 2)) % 5 = 0 THEN NULL
-           |         ELSE round((CAST((p.ck * (j.j + 4)) % 2001 - 1000 AS DOUBLE)
-           |                     / 1000.0) * 1024) / 1024.0
-           |         END AS x
-           |  FROM plots p CROSS JOIN (VALUES (0),(1),(2),(3),(4)) j(j)),
-           |rows_ AS (
-           |  SELECT i.habitattype,
-           |    CASE WHEN g.g = 0 THEN 'SBZH' ELSE 'Habitattype' END
-           |      AS type_resultaat,
-           |    CASE WHEN g.g = 1 THEN 'Binnen & Buiten'
-           |         WHEN l.in_sac = 1 THEN 'Binnen' ELSE 'Buiten' END AS sbzh,
-           |    i.criterium, i.indicator, i.belang, i.x, l.w
-           |  FROM ind i JOIN latest l ON i.id = l.id
-           |  CROSS JOIN (VALUES (0),(1)) g(g)
-           |  WHERE i.x IS NOT NULL),
-           |agg AS (
-           |  SELECT type_resultaat, habitattype, sbzh, criterium, indicator,
-           |    belang, count(*) AS n_obs,
-           |    sum(w) AS sw, sum(w * w) AS sw2,
-           |    sum(w * x) AS swx, sum(w * x * x) AS swx2
-           |  FROM rows_ GROUP BY 1, 2, 3, 4, 5, 6),
-           |f AS (
-           |  SELECT *, sw * sw / sw2 AS neff, swx / sw AS m FROM agg),
-           |f2 AS (
-           |  SELECT *, greatest(swx2 / sw - m * m, 0.0) AS vpop FROM f)
-           |SELECT type_resultaat, habitattype, sbzh, criterium, indicator,
-           |  belang, n_obs,
-           |  round(m, 6) AS index_ind_mean,
-           |  CASE WHEN n_obs > 1
-           |       THEN round(m - $z * sqrt(vpop / (neff - 1.0)), 6) END
-           |    AS index_ind_llci,
-           |  CASE WHEN n_obs > 1
-           |       THEN round(m + $z * sqrt(vpop / (neff - 1.0)), 6) END
-           |    AS index_ind_ulci
-           |FROM f2""".stripMargin
-    },
-
-    // q135: design-weighted trend_indicatoren — the q116 pairing with
-    // the latest-visit pair weight, per-cycle Hájek shares with
-    // effective-count Wilson bounds, and the paired Wald difference on
-    // the weighted within-point change (n_eff from the paired set).
-    "q135_trend_indicatoren_weighted" -> {
-      val z = graft.lsvi.LsviStatus.z975
-      val z2 = z * z
-      statusOracleCtes.stripSuffix("\n") +
-        s""", pairsAll AS (
-           |  SELECT habitattype, point_code,
-           |    arg_min(id, mdate || '|' || id) AS id_1,
-           |    arg_max(id, mdate || '|' || id) AS id_2,
-           |    arg_max(w + CASE WHEN mdate = 2020 THEN 0.125 ELSE 0.0 END,
-           |            mdate || '|' || id) AS w,
-           |    count(DISTINCT mdate) AS nc
-           |  FROM plots GROUP BY 1, 2),
-           |prs AS (SELECT * FROM pairsAll WHERE nc > 1),
-           |ind AS (
-           |  SELECT p.id, p.habitattype, 'crit_' || (j.j % 2) AS criterium,
-           |    'ind_' || j.j AS indicator,
-           |    CASE WHEN j.j < 2 THEN 'zb' ELSE 'b' END AS belang,
-           |    CASE WHEN (p.ck * (j.j + 2)) % 5 = 0 THEN NULL
-           |         ELSE ((p.ck * (j.j + 2)) % 5) % 2 = 1 END AS status
-           |  FROM plots p CROSS JOIN (VALUES (0),(1),(2),(3),(4)) j(j)),
-           |known AS (SELECT * FROM ind WHERE status IS NOT NULL),
-           |cyc AS (
-           |  SELECT point_code, w, id_1 AS id, 'c_1' AS periode FROM prs
-           |  UNION ALL
-           |  SELECT point_code, w, id_2, 'c_2' FROM prs),
-           |lvl1 AS (
-           |  SELECT k.habitattype, c.point_code, k.criterium, k.indicator,
-           |    k.belang,
-           |    max(CASE WHEN c.periode = 'c_1' THEN k.status END) AS s1,
-           |    max(CASE WHEN c.periode = 'c_2' THEN k.status END) AS s2,
-           |    max(c.w) AS w
-           |  FROM known k JOIN cyc c ON k.id = c.id
-           |  GROUP BY 1, 2, 3, 4, 5),
-           |lvl2 AS (
-           |  SELECT habitattype, criterium, indicator, belang,
-           |    count(s1) AS n1,
-           |    sum(CASE WHEN s1 IS NOT NULL THEN w ELSE 0.0 END) AS sw1,
-           |    sum(CASE WHEN s1 IS NOT NULL THEN w * w ELSE 0.0 END) AS sw1sq,
-           |    sum(CASE WHEN s1 THEN w ELSE 0.0 END) AS swk1c,
-           |    count(s2) AS n2,
-           |    sum(CASE WHEN s2 IS NOT NULL THEN w ELSE 0.0 END) AS sw2_,
-           |    sum(CASE WHEN s2 IS NOT NULL THEN w * w ELSE 0.0 END) AS sw2sq,
-           |    sum(CASE WHEN s2 THEN w ELSE 0.0 END) AS swk2c,
-           |    count(CASE WHEN s1 IS NOT NULL AND s2 IS NOT NULL THEN 1 END)
-           |      AS np,
-           |    sum(CASE WHEN s1 IS NOT NULL AND s2 IS NOT NULL
-           |             THEN w ELSE 0.0 END) AS swp,
-           |    sum(CASE WHEN s1 IS NOT NULL AND s2 IS NOT NULL
-           |             THEN w * w ELSE 0.0 END) AS swpsq,
-           |    sum(CASE WHEN s1 IS NOT NULL AND s2 IS NOT NULL AND s1
-           |             THEN w ELSE 0.0 END) AS swk1,
-           |    sum(CASE WHEN s1 IS NOT NULL AND s2 IS NOT NULL AND s1
-           |             AND NOT s2 THEN w ELSE 0.0 END) AS swb,
-           |    sum(CASE WHEN s1 IS NOT NULL AND s2 IS NOT NULL AND NOT s1
-           |             AND s2 THEN w ELSE 0.0 END) AS swc
-           |  FROM lvl1 GROUP BY 1, 2, 3, 4),
-           |acyc AS (
-           |  SELECT habitattype, 'c_1' AS periode, criterium, indicator,
-           |    belang, n1 AS n_obs, sw1 AS sw, sw1sq AS sw2, swk1c AS swk
-           |  FROM lvl2
-           |  UNION ALL
-           |  SELECT habitattype, 'c_2', criterium, indicator, belang,
-           |    n2, sw2_, sw2sq, swk2c FROM lvl2),
-           |wil AS (
-           |  SELECT *, sw * sw / sw2 AS neff, swk / sw AS p
-           |  FROM acyc WHERE n_obs > 0),
-           |wil2 AS (SELECT *, 1.0 + $z2 / neff AS den FROM wil),
-           |wil3 AS (
-           |  SELECT *,
-           |    (p + $z2 / (2.0 * neff)) / den AS center,
-           |    ($z / den) * sqrt(p * (1.0 - p) / neff
-           |      + $z2 / (4.0 * neff * neff)) AS half
-           |  FROM wil2),
-           |aandeel AS (
-           |  SELECT habitattype, periode, criterium, indicator, belang, n_obs,
-           |    'aandeel_gunstig' AS parameter,
-           |    round(100.0 * swk / sw, 6) AS mean,
-           |    round(CASE WHEN swk = 0.0 OR swk = sw THEN 100.0 * p
-           |               ELSE 100.0 * greatest(0.0, center - half) END, 6)
-           |      AS llci,
-           |    round(CASE WHEN swk = 0.0 OR swk = sw THEN 100.0 * p
-           |               ELSE 100.0 * least(1.0, center + half) END, 6)
-           |      AS ulci
-           |  FROM wil3),
-           |vr AS (
-           |  SELECT *, swp * swp / swpsq AS neff,
-           |    (swc - swb) / swp AS md, swk1 / swp AS p1
-           |  FROM lvl2 WHERE np > 0),
-           |vr2 AS (
-           |  SELECT *, 100.0 * md AS d,
-           |    greatest((swb + swc) / swp - md * md, 0.0) AS vpop
-           |  FROM vr),
-           |vr3 AS (SELECT *, 100.0 * sqrt(vpop / neff) AS se FROM vr2)
-           |SELECT * FROM aandeel
-           |UNION ALL
-           |SELECT habitattype, 'c_2' AS periode, criterium, indicator, belang,
-           |  np AS n_obs, 'verschil_aandeel_gunstig_abs' AS parameter,
-           |  round(d, 6) AS mean,
-           |  round(d - $z * se, 6) AS llci,
-           |  round(d + $z * se, 6) AS ulci
-           |FROM vr3
-           |UNION ALL
-           |SELECT habitattype, 'c_2' AS periode, criterium, indicator, belang,
-           |  np AS n_obs, 'verschil_aandeel_gunstig_rel' AS parameter,
-           |  CASE WHEN p1 > 0.0 THEN round(md / p1 * 100.0, 6) END AS mean,
-           |  CAST(NULL AS DOUBLE) AS llci,
-           |  CAST(NULL AS DOUBLE) AS ulci
-           |FROM vr3""".stripMargin
-    },
-
-    // q136: weighted trend_index_hq — paired index_b differences with
-    // the latest-visit weight; Hájek mean + Kish-n_eff z interval +
-    // weighted relative difference Σw·d / Σw·x1.
-    "q136_trend_index_hq_weighted" -> {
-      val z = graft.lsvi.LsviStatus.z975
-      statusOracleCtes.stripSuffix("\n") +
-        s""", pairs AS (
-           |  SELECT habitattype, point_code,
-           |    arg_min(idx_b, mdate || '|' || id) AS x1,
-           |    arg_max(idx_b, mdate || '|' || id) AS x2,
-           |    arg_max(in_sac, mdate || '|' || id) AS in_sac,
-           |    arg_max(w + CASE WHEN mdate = 2020 THEN 0.125 ELSE 0.0 END,
-           |            mdate || '|' || id) AS w,
-           |    count(DISTINCT mdate) AS nc
-           |  FROM plots GROUP BY 1, 2),
-           |prs AS (SELECT *, x2 - x1 AS d FROM pairs WHERE nc > 1),
-           |rows_ AS (
-           |  SELECT habitattype,
-           |    CASE WHEN g.g = 0 THEN 'SBZH' ELSE 'Habitattype' END
-           |      AS type_resultaat,
-           |    CASE WHEN g.g = 1 THEN 'Binnen & Buiten'
-           |         WHEN in_sac = 1 THEN 'Binnen' ELSE 'Buiten' END AS sbzh,
-           |    d, x1, w
-           |  FROM prs CROSS JOIN (VALUES (0),(1)) g(g)),
-           |agg AS (
-           |  SELECT type_resultaat, habitattype, sbzh, count(*) AS n_obs,
-           |    sum(w) AS sw, sum(w * w) AS sw2,
-           |    sum(w * d) AS swx, sum(w * d * d) AS swx2,
-           |    sum(w * x1) AS swx1
-           |  FROM rows_ GROUP BY 1, 2, 3),
-           |f AS (
-           |  SELECT *, sw * sw / sw2 AS neff, swx / sw AS m FROM agg),
-           |f2 AS (
-           |  SELECT *, greatest(swx2 / sw - m * m, 0.0) AS vpop FROM f)
-           |SELECT type_resultaat, habitattype, sbzh, n_obs,
-           |  CASE WHEN swx1 <> 0.0 THEN round(swx / swx1, 6) END
-           |    AS index_diff_rel,
-           |  round(m, 6) AS index_diff_mean,
-           |  CASE WHEN n_obs > 1
-           |       THEN round(m - $z * sqrt(vpop / (neff - 1.0)), 6) END
-           |    AS index_diff_llci,
-           |  CASE WHEN n_obs > 1
-           |       THEN round(m + $z * sqrt(vpop / (neff - 1.0)), 6) END
-           |    AS index_diff_ulci
-           |FROM f2""".stripMargin
-    },
-
-    // q137: weighted trend_index_ind — the q135 pairing joined to the
-    // 1/1024-snapped verschilscore, paired differences per indicator,
-    // Hájek mean + Kish-n_eff z interval.
-    "q137_trend_index_ind_weighted" -> {
-      val z = graft.lsvi.LsviStatus.z975
-      statusOracleCtes.stripSuffix("\n") +
-        s""", pairsAll AS (
-           |  SELECT habitattype, point_code,
-           |    arg_min(id, mdate || '|' || id) AS id_1,
-           |    arg_max(id, mdate || '|' || id) AS id_2,
-           |    arg_max(in_sac, mdate || '|' || id) AS in_sac,
-           |    arg_max(w + CASE WHEN mdate = 2020 THEN 0.125 ELSE 0.0 END,
-           |            mdate || '|' || id) AS w,
-           |    count(DISTINCT mdate) AS nc
-           |  FROM plots GROUP BY 1, 2),
-           |prs AS (SELECT * FROM pairsAll WHERE nc > 1),
-           |ind AS (
-           |  SELECT p.id, p.habitattype, 'crit_' || (j.j % 2) AS criterium,
-           |    'ind_' || j.j AS indicator,
-           |    CASE WHEN j.j < 2 THEN 'zb' ELSE 'b' END AS belang,
-           |    CASE WHEN (p.ck * (j.j + 2)) % 5 = 0 THEN NULL
-           |         ELSE round((CAST((p.ck * (j.j + 4)) % 2001 - 1000 AS DOUBLE)
-           |                     / 1000.0) * 1024) / 1024.0
-           |         END AS x
-           |  FROM plots p CROSS JOIN (VALUES (0),(1),(2),(3),(4)) j(j)),
-           |known AS (SELECT * FROM ind WHERE x IS NOT NULL),
-           |cyc AS (
-           |  SELECT point_code, in_sac, w, id_1 AS id, 'c_1' AS periode FROM prs
-           |  UNION ALL
-           |  SELECT point_code, in_sac, w, id_2, 'c_2' FROM prs),
-           |lvl1 AS (
-           |  SELECT k.habitattype, c.point_code, c.in_sac, k.criterium,
-           |    k.indicator, k.belang,
-           |    max(CASE WHEN c.periode = 'c_1' THEN k.x END) AS x1,
-           |    max(CASE WHEN c.periode = 'c_2' THEN k.x END) AS x2,
-           |    max(c.w) AS w
-           |  FROM known k JOIN cyc c ON k.id = c.id
-           |  GROUP BY 1, 2, 3, 4, 5, 6),
-           |prd AS (
-           |  SELECT *, x2 - x1 AS d FROM lvl1
-           |  WHERE x1 IS NOT NULL AND x2 IS NOT NULL),
-           |rows_ AS (
-           |  SELECT habitattype,
-           |    CASE WHEN g.g = 0 THEN 'SBZH' ELSE 'Habitattype' END
-           |      AS type_resultaat,
-           |    CASE WHEN g.g = 1 THEN 'Binnen & Buiten'
-           |         WHEN in_sac = 1 THEN 'Binnen' ELSE 'Buiten' END AS sbzh,
-           |    criterium, indicator, belang, d, w
-           |  FROM prd CROSS JOIN (VALUES (0),(1)) g(g)),
-           |agg AS (
-           |  SELECT type_resultaat, habitattype, sbzh, criterium, indicator,
-           |    belang, count(*) AS n_obs,
-           |    sum(w) AS sw, sum(w * w) AS sw2,
-           |    sum(w * d) AS swx, sum(w * d * d) AS swx2
-           |  FROM rows_ GROUP BY 1, 2, 3, 4, 5, 6),
-           |f AS (
-           |  SELECT *, sw * sw / sw2 AS neff, swx / sw AS m FROM agg),
-           |f2 AS (
-           |  SELECT *, greatest(swx2 / sw - m * m, 0.0) AS vpop FROM f)
-           |SELECT type_resultaat, habitattype, sbzh, criterium, indicator,
-           |  belang, n_obs,
-           |  round(m, 6) AS index_diff_mean,
-           |  CASE WHEN n_obs > 1
-           |       THEN round(m - $z * sqrt(vpop / (neff - 1.0)), 6) END
-           |    AS index_diff_llci,
-           |  CASE WHEN n_obs > 1
-           |       THEN round(m + $z * sqrt(vpop / (neff - 1.0)), 6) END
-           |    AS index_diff_ulci
-           |FROM f2""".stripMargin
-    },
-
-    "q108_lsvi_plot_report" -> {
-      val globaalSql = forestOracleCtes.stripSuffix("\n") + lsviGlobaalSqlTail
-      s"""SELECT g.id, m.date, m.point_code, m.x, m.y, m.in_sac,
-         | CASE WHEN g.type_analysis LIKE '91E0%' THEN '91E0'
-         |      WHEN g.type_analysis = '9130_end' THEN '9130'
-         |      ELSE g.type_analysis END AS habitattype,
-         | g.type_analysis AS habitatsubtype,
-         | CASE WHEN g.status THEN 'gunstig' ELSE 'ongunstig' END AS lsvi,
-         | g.aggregatiemethode, g.n_zb_ongunstig, g.aandeel_gunstig,
-         | g.index_mean_ind, g.doelbereik_mean_ind
-         |FROM (
-         |$globaalSql
-         |) g
-         |JOIN (SELECT 'FP_' || c_custkey AS id,
-         |        CAST(14610 + c_custkey % 3650 AS BIGINT) AS date,
-         |        'vbi_' || c_custkey AS point_code,
-         |        CAST(150000 + (c_custkey * 97) % 100000 AS DOUBLE) AS x,
-         |        CAST(150000 + (c_custkey * 53) % 100000 AS DOUBLE) AS y,
-         |        CAST(c_custkey % 2 AS INTEGER) AS in_sac
-         |      FROM customer) m ON g.id = m.id""".stripMargin
-    },
-
-    "q78_lsvi_v3_globaal" -> (v3OracleCtes.stripSuffix("\n") +
-      """, i AS (
-        |  SELECT id, criterium, indicator, belang,
-        |    (count(CASE WHEN voldoet = false THEN 1 END) = 0 AND
-        |     count(CASE WHEN voldoet IS NULL THEN 1 END) = 0) AS gunstig,
-        |    count(CASE WHEN voldoet = true THEN 1 END)
-        |      / greatest(count(CASE WHEN voldoet IS NOT NULL THEN 1 END), 1) AS score
-        |  FROM d GROUP BY 1, 2, 3, 4)
-        |SELECT id, count(*) AS n_ind,
-        | count(CASE WHEN gunstig THEN 1 END) AS n_gunstig,
-        | count(CASE WHEN belang = 'zb' AND NOT gunstig THEN 1 END) AS n_zb_ongunstig,
-        | round(100.0 * count(CASE WHEN gunstig THEN 1 END) / count(*), 6) AS aandeel_gunstig,
-        | round(sum(score) / count(*), 6) AS index_mean_ind,
-        | (count(CASE WHEN belang = 'zb' AND NOT gunstig THEN 1 END) = 0 AND
-        |  count(CASE WHEN gunstig THEN 1 END) * 2 > count(*)) AS status,
-        | CASE WHEN count(CASE WHEN belang = 'zb' AND NOT gunstig THEN 1 END) = 0 AND
-        |           count(CASE WHEN gunstig THEN 1 END) * 2 > count(*)
-        |      THEN 'gunstig' ELSE 'ongunstig' END AS lsvi
-        |FROM i GROUP BY id""".stripMargin),
-
-    "q79_heath_structure" ->
-      """WITH sv AS (
-        |  SELECT p_partkey AS plot_id, p_partkey % 4 AS segment_id,
-        |    CAST(p_size * 10 AS DOUBLE) AS area_m2,
-        |    CAST((p_partkey * 3) % 101 AS DOUBLE) AS shrub,
-        |    CAST((p_partkey * 2) % 7 + 1 AS INTEGER) AS sphagnumlayer,
-        |    CAST((p_partkey * 3) % 7 + 1 AS INTEGER) AS campylopus_introflexus,
-        |    CAST((p_partkey * 4) % 7 + 1 AS INTEGER) AS lowshrublayer,
-        |    CAST((p_partkey * 5) % 7 + 1 AS INTEGER) AS brushwood,
-        |    CAST((p_partkey * 6) % 7 + 1 AS INTEGER) AS herbs,
-        |    CAST((p_partkey * 7) % 7 + 1 AS INTEGER) AS calluna_phase_pioneer
-        |  FROM part),
-        |bms2(class_id, cover_description, cover_mean) AS (VALUES
-        |  (1, 'kaal', 0.5), (2, 'kwijnend', 0.5), (3, 'open', 5.0),
-        |  (4, 'frequent', 15.0), (5, 'talrijk', 35.0), (6, 'codominant', 62.5),
-        |  (7, 'dominant', 87.5)),
-        |melted AS (
-        |  SELECT plot_id, segment_id, area_m2, 'sphagnumlayer' AS structure_var,
-        |         sphagnumlayer AS class_id FROM sv
-        |  UNION ALL SELECT plot_id, segment_id, area_m2, 'campylopus_introflexus',
-        |         campylopus_introflexus FROM sv
-        |  UNION ALL SELECT plot_id, segment_id, area_m2, 'lowshrublayer', lowshrublayer FROM sv
-        |  UNION ALL SELECT plot_id, segment_id, area_m2, 'brushwood', brushwood FROM sv
-        |  UNION ALL SELECT plot_id, segment_id, area_m2, 'herbs', herbs FROM sv
-        |  UNION ALL SELECT plot_id, segment_id, area_m2, 'calluna_phase_pioneer',
-        |         calluna_phase_pioneer FROM sv)
-        |SELECT m.plot_id, m.segment_id, m.area_m2, m.structure_var,
-        |  'Beheermonitoringsschaal' AS coverscale_name,
-        |  b.cover_description, CAST(b.cover_mean AS DOUBLE) AS cover_mean,
-        |  CAST(NULL AS DOUBLE) AS cover
-        |FROM melted m LEFT JOIN bms2 b USING (class_id)
-        |UNION ALL
-        |SELECT plot_id, segment_id, area_m2, 'shrub_treelayer',
-        |  NULL, NULL, NULL, shrub
-        |FROM sv""".stripMargin,
-
-    "q80_trees_a3a4" ->
-      s"""WITH trees AS (
-        |  SELECT p_partkey AS tree_id, p_partkey % 500 AS plot_id,
-        |    p_partkey % 4 + 1 AS segment_id, p_partkey % 20 AS tree_species_id,
-        |    CAST(50 + p_size * 10 AS INTEGER) AS perimeter_cm,
-        |    CAST(8 + p_partkey % 15 AS DOUBLE) AS height_m
-        |  FROM part),
-        |t2 AS (
-        |  SELECT *, CAST(round(perimeter_cm * 10 / pi()) AS INTEGER) AS dbh_mm FROM trees),
-        |params(tree_species_id, a, b, c, d, e, f, formule_type) AS (
-        |  VALUES
-        |   $tariffValuesSql),
-        |vols AS (
-        |  SELECT t2.*,
-        |    pi() * (dbh_mm / 2000.0) * (dbh_mm / 2000.0) AS basalarea_m2,
-        |    CASE
-        |      WHEN formule_type = 1 THEN a + b*c150 + c*c150*c150 + d*c150*c150*c150
-        |      WHEN formule_type = 2 THEN a + b*c150 + c*c150*c150 + d*h + e*c150*h + f*c150*c150*h
-        |      WHEN formule_type = 3 THEN a + b*c150*c150 + c*c150*c150*h + d*h
-        |    END AS vol_m3
-        |  FROM (
-        |    SELECT t2.*, CAST(p.formule_type AS INTEGER) AS formule_type,
-        |      CAST(a AS DOUBLE) AS a, CAST(b AS DOUBLE) AS b, CAST(c AS DOUBLE) AS c,
-        |      CAST(d AS DOUBLE) AS d, CAST(e AS DOUBLE) AS e, CAST(f AS DOUBLE) AS f,
-        |      CAST(perimeter_cm AS DOUBLE) / 100.0 AS c150, height_m AS h
-        |    FROM t2 LEFT JOIN params p ON t2.tree_species_id = p.tree_species_id) t2),
-        |dated AS (
-        |  SELECT o_custkey % 500 AS plot_id, max(o_orderdate) AS date_assessment
-        |  FROM orders GROUP BY 1)
-        |SELECT v.plot_id, v.segment_id, v.perimeter_cm, v.dbh_mm, v.height_m,
-        |  'soort_' || v.tree_species_id AS name_nl,
-        |  CASE v.tree_id % 3 WHEN 0 THEN 'alive' WHEN 1 THEN 'dead standing'
-        |       ELSE 'lying' END AS status_tree,
-        |  CASE WHEN v.tree_id % 5 = 0 THEN 'coppice' ELSE 'individual' END AS coppice_individual,
-        |  CASE WHEN v.tree_id % 7 < 5 THEN 'intact' ELSE 'broken' END AS intact_tree,
-        |  v.tree_id, d.date_assessment,
-        |  floor(v.basalarea_m2*1e6 + 0.5)/1e6 AS basalarea_m2,
-        |  floor(v.vol_m3*1e6 + 0.5)/1e6 AS vol_stem_m3,
-        |  floor((v.vol_m3 * (1.0 + 1.0 / (v.tree_species_id + 2)))*1e6 + 0.5)/1e6 AS vol_tot_m3,
-        |  CAST(floor((year(d.date_assessment) - 1992) / 4.0) + 1 AS DOUBLE) AS mon_cycle,
-        |  'species_' || v.tree_species_id AS name_sc,
-        |  v.tree_species_id
-        |FROM vols v LEFT JOIN dated d ON v.plot_id = d.plot_id""".stripMargin,
-
-    // q101: ROI selection replay — rectangle containment as interval
-    // predicates (the half-unit offsets guarantee integer-derived
-    // points never sit on an edge), LSVI membership via the shared
-    // globaal CTEs.
-    "q101_roi_selection" -> (lsviOracleCtes.stripSuffix("\n") +
-      """, i AS (
-        |  SELECT id, criterium, indicator, belang,
-        |    (count(CASE WHEN voldoet = false THEN 1 END) = 0 AND
-        |     count(CASE WHEN voldoet IS NULL THEN 1 END) = 0) AS gunstig
-        |  FROM d GROUP BY 1, 2, 3, 4),
-        |g AS (SELECT id FROM i GROUP BY id),
-        |meas AS (
-        |  SELECT c_custkey AS id, 'P' || c_custkey AS point_code,
-        |    CASE WHEN c_custkey % 4 = 0 THEN '4010'
-        |         WHEN c_custkey % 4 = 1 THEN '4030'
-        |         WHEN c_custkey % 4 = 2 THEN '7140_oli'
-        |         ELSE '2310' END AS type,
-        |    CAST((c_custkey * 7) % 97 AS DOUBLE) AS x,
-        |    CAST((c_custkey * 13) % 89 AS DOUBLE) AS y
-        |  FROM customer
-        |  WHERE c_custkey % 4 IN (0, 1, 2)),
-        |roi AS (
-        |  SELECT 'md_' || r_regionkey AS code_md,
-        |    CAST((r_regionkey * 19) % 60 AS DOUBLE) - 0.5 AS x0,
-        |    CAST((r_regionkey * 23) % 50 AS DOUBLE) - 0.5 AS y0
-        |  FROM region)
-        |SELECT m.id, m.point_code, m.type, m.x, m.y, r.code_md,
-        |  m.id IN (SELECT id FROM g) AS lsvi_data
-        |FROM meas m JOIN roi r
-        |  ON m.x > r.x0 AND m.x < r.x0 + 25.0
-        | AND m.y > r.y0 AND m.y < r.y0 + 30.0""".stripMargin),
-
-    // q100: replay of the ingestion round. Shingle CTEs mirror q81;
-    // fingerprints mirror q40's normalized-md5. The chain is the
-    // shared corpusIngestChainSql so q212 (the JSONL-fed E2E) cannot
-    // drift from it.
-    "q100_corpus_ingest" ->
-      s"""WITH $corpusIngestChainSql
-        |SELECT doc_id, text, lang, source, n_chars FROM corpus
-        |UNION ALL SELECT doc_id, text, lang, source, n_chars FROM clean""".stripMargin,
-
-    "q81_decontamination" ->
-      """WITH docs AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |sh AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(toks) <= 3 THEN [array_to_string(toks, ' ')]
-        |         ELSE list_transform(range(1, len(toks) - 3 + 2),
-        |                i -> array_to_string(toks[i:i+2], ' ')) END AS shingles
-        |  FROM docs),
-        |bench AS (SELECT DISTINCT unnest(shingles) AS shingle FROM sh WHERE doc_id % 97 = 0),
-        |train AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh WHERE doc_id % 97 <> 0)
-        |SELECT t.doc_id,
-        |  CAST(count(DISTINCT t.shingle) AS BIGINT) AS n_contaminated_ngrams
-        |FROM train t JOIN bench b USING (shingle)
-        |GROUP BY t.doc_id""".stripMargin,
-
-    "q191_repetition_rules" -> repetitionOracleSql,
-
-    "q195_hybrid_retrieval" -> hybridRrfOracleSql(m = 4, k = 4, dim = 64,
-      topK = 10, k0 = 60),
-
-    // q196 = q190's exact semantics through the stateful streaming
-    // path (single ordered micro-batch ⟹ batch-identical emissions)
-    "q196_decontam_stream" ->
-      """WITH docs AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |sh AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(toks) <= 3 THEN [array_to_string(toks, ' ')]
-        |         ELSE list_transform(range(1, len(toks) - 3 + 2),
-        |                i -> array_to_string(toks[i:i+2], ' ')) END AS shingles
-        |  FROM docs),
-        |bench AS (SELECT DISTINCT unnest(shingles) AS shingle FROM sh WHERE doc_id % 89 = 0),
-        |train AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh WHERE doc_id % 89 <> 0)
-        |SELECT t.doc_id,
-        |  CAST(count(DISTINCT t.shingle) AS BIGINT) AS n_contaminated_ngrams
-        |FROM train t JOIN bench b USING (shingle)
-        |GROUP BY t.doc_id""".stripMargin,
-
-    // q194: per-char micro-contributions floor(−(p·ln p)·1e6 + 0.5)
-    // summed as exact integers (order-free), p = cnt / total in the
-    // identical division; keep compared on the integers.
-    "q194_char_entropy" ->
-      """WITH chars AS (
-        |  SELECT doc_id,
-        |    unnest(string_split(regexp_replace(text, '\s', '', 'g'), '')) AS ch
-        |  FROM documents WHERE length(regexp_replace(text, '\s', '', 'g')) > 0),
-        |cnts AS (SELECT doc_id, ch, count(*) AS cnt FROM chars GROUP BY 1, 2),
-        |tot AS (SELECT doc_id, CAST(sum(cnt) AS BIGINT) AS total,
-        |          CAST(count(*) AS INTEGER) AS distinct_chars
-        |        FROM cnts GROUP BY 1),
-        |h AS (SELECT c.doc_id,
-        |        CAST(sum(CAST(floor(
-        |          -((c.cnt / CAST(t.total AS DOUBLE)) * ln(c.cnt / CAST(t.total AS DOUBLE)))
-        |          * 1e6 + 0.5) AS BIGINT)) AS BIGINT) AS em
-        |      FROM cnts c JOIN tot t USING (doc_id) GROUP BY 1)
-        |SELECT t.doc_id, CAST(t.total AS INTEGER) AS n_chars, t.distinct_chars,
-        |  h.em AS entropy_micros, h.em >= 2000000 AS keep
-        |FROM tot t JOIN h USING (doc_id)""".stripMargin,
-
-    // q198: matching is substring search of ' '||phrase||' ' in the
-    // padded token join — the oracle probes each phrase with
-    // position(); the engine's Aho–Corasick pass is definitionally
-    // the same predicate evaluated once for all phrases.
-    "q198_blocklist_filter" ->
-      s"""WITH p AS (SELECT * FROM (VALUES $blocklistPhraseValuesSql) AS v(idx, phrase)),
-        | d AS (SELECT doc_id,
-        |   ' ' || array_to_string(string_split_regex(trim(text), '\\s+'), ' ') || ' ' AS padded
-        |   FROM documents),
-        | m AS (SELECT doc_id, CAST(count(*) AS INTEGER) AS n_matched,
-        |          min(idx) AS first_idx
-        |        FROM d JOIN p ON position(' ' || phrase || ' ' IN padded) > 0
-        |        GROUP BY doc_id)
-        |SELECT d.doc_id, COALESCE(m.n_matched, 0) AS n_matched,
-        |  fp.phrase AS first_phrase, m.doc_id IS NULL AS keep
-        |FROM d LEFT JOIN m USING (doc_id)
-        |LEFT JOIN p fp ON fp.idx = m.first_idx""".stripMargin,
-
-    // q199: identical integer threshold inequality on both engines —
-    // lo/hi = min value whose histogram CDF reaches 5%/95% of the
-    // language mass (quantile_disc convention); no floats anywhere.
-    "q199_length_trim" ->
-      """WITH hist AS (
-        |  SELECT lang, n_chars AS v, CAST(count(*) AS BIGINT) AS c
-        |  FROM documents GROUP BY 1, 2),
-        |cdf AS (
-        |  SELECT lang, v, c,
-        |    CAST(sum(c) OVER (PARTITION BY lang ORDER BY v) AS BIGINT) AS cum,
-        |    CAST(sum(c) OVER (PARTITION BY lang) AS BIGINT) AS n
-        |  FROM hist),
-        |th AS (
-        |  SELECT lang,
-        |    min(CASE WHEN cum * 20 >= 1 * n THEN v END) AS lo,
-        |    min(CASE WHEN cum * 20 >= 19 * n THEN v END) AS hi
-        |  FROM cdf GROUP BY 1)
-        |SELECT d.doc_id, d.lang, d.n_chars, th.lo, th.hi,
-        |  d.n_chars BETWEEN th.lo AND th.hi AS keep
-        |FROM documents d JOIN th USING (lang)""".stripMargin,
-
-    // q200: per-category term = (c_cur/N_cur − c_ref/N_ref) ·
-    // ln((c_cur·N_ref)/(c_ref·N_cur)) evaluated in the identical
-    // IEEE operation order, floored to micros, summed as integers;
-    // one-sided categories carry NULL terms excluded from the total.
-    "q200_drift_psi" -> DriftPsiOracleSql,
-    // q205 = the SAME report through the stateful streaming profile:
-    // a single ordered micro-batch makes the live Complete-mode count
-    // equal the batch conditional aggregate, so q200's oracle gates
-    // the streaming query hash-exact (the q187/q196 twin convention).
-    "q205_drift_stream" -> DriftPsiOracleSql,
-
-    // q201: score CTE is q42's quality formula verbatim (pinned
-    // lockstep in OracleConsistencySpec) snapped to integer micros;
-    // from there every rank/U/AUC step is the identical integer
-    // expression on both engines (doubled midranks, floor division).
-    "q201_quality_auc" ->
-      """WITH q AS (
-        |  SELECT source, lang = 'en' AS label,
-        |    CAST(round(round(0.4 * least(1.0, n_tokens / 100.0)
-        |        + 0.4 * (1.0 - punct_ratio)
-        |        + 0.2 * (1.0 - abs(stop_ratio - 0.4)), 6) * 1e6) AS BIGINT) AS s
-        |  FROM (
-        |    SELECT doc_id, source, lang, len(toks) AS n_tokens,
-        |      (length(text) - length(regexp_replace(text, '[^a-z0-9 ]', '', 'g'))) / length(text) AS punct_ratio,
-        |      CAST(len(list_filter(toks, x -> x IN ('the','a','of','and','to','in','is','it'))) AS BIGINT) / len(toks) AS stop_ratio
-        |    FROM (SELECT doc_id, source, lang, text, string_split_regex(trim(text), '\s+') AS toks FROM documents))),
-        |hist AS (
-        |  SELECT source, s, CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(CASE WHEN label THEN 1 ELSE 0 END) AS BIGINT) AS p
-        |  FROM q GROUP BY 1, 2),
-        |cdf AS (
-        |  SELECT *, CAST(sum(n) OVER (PARTITION BY source ORDER BY s) AS BIGINT) AS cum
-        |  FROM hist),
-        |agg AS (
-        |  SELECT source,
-        |    CAST(sum(p * (2 * cum - n + 1)) AS BIGINT) AS r2_pos,
-        |    CAST(sum(p) AS BIGINT) AS n_pos,
-        |    CAST(sum(n - p) AS BIGINT) AS n_neg
-        |  FROM cdf GROUP BY 1)
-        |SELECT source, n_pos, n_neg,
-        |  r2_pos - n_pos * (n_pos + 1) AS u2,
-        |  CASE WHEN n_pos > 0 AND n_neg > 0 THEN
-        |    (r2_pos - n_pos * (n_pos + 1)) * 1000000 // (2 * n_pos * n_neg)
-        |  END AS auc_micros
-        |FROM agg""".stripMargin,
-
-    // q204: q201's score CTE verbatim (the lockstep pin extends to
-    // this oracle), then the ECE chain — equal-width micro-probability
-    // bins (top edge folded into the last bin), per-bin floor-divided
-    // rates, row-weighted mean absolute gap. Every step is integer
-    // arithmetic; // mirrors Spark's div on these non-negative values.
-    "q204_calibration_audit" ->
-      """WITH q AS (
-        |  SELECT source, lang = 'en' AS label,
-        |    CAST(round(round(0.4 * least(1.0, n_tokens / 100.0)
-        |        + 0.4 * (1.0 - punct_ratio)
-        |        + 0.2 * (1.0 - abs(stop_ratio - 0.4)), 6) * 1e6) AS BIGINT) AS s
-        |  FROM (
-        |    SELECT doc_id, source, lang, len(toks) AS n_tokens,
-        |      (length(text) - length(regexp_replace(text, '[^a-z0-9 ]', '', 'g'))) / length(text) AS punct_ratio,
-        |      CAST(len(list_filter(toks, x -> x IN ('the','a','of','and','to','in','is','it'))) AS BIGINT) / len(toks) AS stop_ratio
-        |    FROM (SELECT doc_id, source, lang, text, string_split_regex(trim(text), '\s+') AS toks FROM documents))),
-        |b AS (SELECT source, least(CAST(9 AS BIGINT), (s * 10) // 1000000) AS bin,
-        |        s, label
-        |      FROM q),
-        |g AS (SELECT source, bin, CAST(count(*) AS BIGINT) AS n,
-        |        CAST(sum(CASE WHEN label THEN 1 ELSE 0 END) AS BIGINT) AS n_pos,
-        |        CAST(sum(s) AS BIGINT) AS conf_sum
-        |      FROM b GROUP BY 1, 2),
-        |t AS (SELECT source, bin, n, n_pos,
-        |        conf_sum // n AS avg_conf_micros,
-        |        n_pos * 1000000 // n AS acc_micros
-        |      FROM g),
-        |e AS (SELECT *, abs(acc_micros - avg_conf_micros) AS gap_micros FROM t)
-        |SELECT source, bin, n, n_pos, avg_conf_micros, acc_micros, gap_micros,
-        |  CAST(sum(n * gap_micros) OVER (PARTITION BY source) AS BIGINT)
-        |    // CAST(sum(n) OVER (PARTITION BY source) AS BIGINT) AS ece_micros
-        |FROM e""".stripMargin,
-
-    // q202: the docs/sh0 shingle grammar is q190's verbatim; the
-    // MinHash "permutations" are the q45 family's md5-slice
-    // arithmetic (hex digits 8j+1..8j+8 of md5(shingle || ':' || g) —
-    // unified in round 18, one digest drives four permutations), band
-    // keys concatenate the per-band integer minima in permutation
-    // order, and the verify stage is an exact shingle-set
-    // intersection with Jaccard as one integer division.
-    "q202_fuzzy_decontam" ->
-      """WITH docs AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |sh0 AS (
-        |  SELECT doc_id, CASE WHEN len(toks) <= 3 THEN [array_to_string(toks, ' ')]
-        |         ELSE list_transform(range(1, len(toks) - 3 + 2),
-        |                i -> array_to_string(toks[i:i+2], ' ')) END AS shingles
-        |  FROM docs),
-        |sh AS (SELECT DISTINCT doc_id, unnest(shingles) AS shingle FROM sh0),
-        |hx AS (
-        |  SELECT doc_id, shingle, g * 4 + j AS i,
-        |    CAST(('0x' || substr(md5(shingle || ':' || g), 1 + 8 * j, 8)) AS BIGINT) AS h
-        |  FROM sh CROSS JOIN range(2) rg(g) CROSS JOIN range(4) rj(j)),
-        |sig AS (SELECT doc_id, i, min(h) AS mh FROM hx GROUP BY 1, 2),
-        |bands AS (
-        |  SELECT doc_id, CAST(i // 2 AS VARCHAR) || '|' ||
-        |    string_agg(CAST(mh AS VARCHAR), '|' ORDER BY i) AS band
-        |  FROM sig GROUP BY doc_id, i // 2),
-        |cand AS (
-        |  SELECT DISTINCT t.doc_id AS train_id, e.doc_id AS eval_id
-        |  FROM bands t JOIN bands e USING (band)
-        |  WHERE t.doc_id % 89 <> 0 AND e.doc_id % 89 = 0),
-        |cnt AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sh FROM sh GROUP BY 1),
-        |inter AS (
-        |  SELECT c.train_id, c.eval_id, CAST(count(*) AS BIGINT) AS inter
-        |  FROM cand c JOIN sh ts ON ts.doc_id = c.train_id
-        |  JOIN sh es ON es.doc_id = c.eval_id AND es.shingle = ts.shingle
-        |  GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT c.train_id, c.eval_id, COALESCE(i.inter, 0) AS inter,
-        |    tc.n_sh AS n_tr, ec.n_sh AS n_ev,
-        |    COALESCE(i.inter, 0) * 1000000
-        |      // (tc.n_sh + ec.n_sh - COALESCE(i.inter, 0)) AS jaccard_micros
-        |  FROM cand c LEFT JOIN inter i USING (train_id, eval_id)
-        |  JOIN cnt tc ON tc.doc_id = c.train_id
-        |  JOIN cnt ec ON ec.doc_id = c.eval_id),
-        |best AS (
-        |  SELECT *, row_number() OVER (PARTITION BY train_id
-        |      ORDER BY jaccard_micros DESC, eval_id) AS rn,
-        |    CAST(count(*) OVER (PARTITION BY train_id) AS BIGINT) AS n_candidates
-        |  FROM pairs)
-        |SELECT train_id, n_candidates, eval_id AS best_eval_id,
-        |  CAST(jaccard_micros AS BIGINT) AS jaccard_micros,
-        |  jaccard_micros >= 500000 AS contaminated
-        |FROM best WHERE rn = 1""".stripMargin,
-
-    // q193: same span grammar as q161 (8-token windows, corpus-wide
-    // totals), then delete covered positions and rebuild the text in
-    // position order. Engine positions are 0-based and the oracle's
-    // 1-based, but positions never surface — each side is
-    // self-consistent.
-    "q193_dup_span_removal" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS ts
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |sp AS (
-        |  SELECT doc_id, i, array_to_string(ts[i:i+7], ' ') AS span
-        |  FROM toks, unnest(range(1, len(ts) - 6)) AS r(i)
-        |  WHERE len(ts) >= 8),
-        |dup AS (SELECT span FROM sp GROUP BY span HAVING count(*) > 1),
-        |cov AS (SELECT DISTINCT sp.doc_id, j AS pos
-        |        FROM sp JOIN dup USING (span), unnest(range(sp.i, sp.i + 8)) AS rj(j)),
-        |base AS (
-        |  SELECT doc_id, CAST(len(ts) AS INTEGER) AS n_tokens, i AS pos, ts[i] AS tok
-        |  FROM toks, unnest(range(1, len(ts) + 1)) AS r(i)),
-        |kept AS (
-        |  SELECT b.doc_id, b.n_tokens, b.pos, b.tok
-        |  FROM base b ANTI JOIN cov c ON b.doc_id = c.doc_id AND b.pos = c.pos)
-        |SELECT doc_id, n_tokens,
-        |  CAST(n_tokens - count(*) AS BIGINT) AS n_removed,
-        |  array_to_string(list(tok ORDER BY pos), ' ') AS clean_text
-        |FROM kept GROUP BY doc_id, n_tokens""".stripMargin,
-
-    // q190 = q81's exact semantics over the %89 split: the Bloom
-    // prefilter is an engine-side optimization that exact-verifies,
-    // so the oracle is the plain overlap SQL — any false positive
-    // surviving to the output would hash-mismatch here.
-    "q190_bloom_decontam" ->
-      """WITH docs AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |sh AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(toks) <= 3 THEN [array_to_string(toks, ' ')]
-        |         ELSE list_transform(range(1, len(toks) - 3 + 2),
-        |                i -> array_to_string(toks[i:i+2], ' ')) END AS shingles
-        |  FROM docs),
-        |bench AS (SELECT DISTINCT unnest(shingles) AS shingle FROM sh WHERE doc_id % 89 = 0),
-        |train AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh WHERE doc_id % 89 <> 0)
-        |SELECT t.doc_id,
-        |  CAST(count(DISTINCT t.shingle) AS BIGINT) AS n_contaminated_ngrams
-        |FROM train t JOIN bench b USING (shingle)
-        |GROUP BY t.doc_id""".stripMargin,
-
-    "q82_hash_split" ->
-      """SELECT doc_id,
-        |  CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 100 AS bucket,
-        |  CASE WHEN CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 100 < 80 THEN 'train'
-        |       WHEN CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 100 < 90 THEN 'val'
-        |       ELSE 'test' END AS split
-        |FROM documents""".stripMargin,
-
-    "q83_mixture_sampling" ->
-      """WITH weighted AS (
-        |  SELECT doc_id, lang,
-        |    CAST(CASE lang WHEN 'en' THEN 2.5 WHEN 'de' THEN 1.5 WHEN 'es' THEN 1.0
-        |         WHEN 'fr' THEN 0.8 WHEN 'zh' THEN 0.3 ELSE 1.0 END AS DOUBLE) AS w,
-        |    CAST(CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':mix'), 1, 8)) AS BIGINT) AS DOUBLE)
-        |      / CAST(4294967296 AS DOUBLE) AS frac
-        |  FROM documents),
-        |counted AS (
-        |  SELECT doc_id, lang,
-        |    CAST(floor(w) AS INTEGER) +
-        |      CASE WHEN frac < w - floor(w) THEN 1 ELSE 0 END AS n_copies
-        |  FROM weighted)
-        |SELECT doc_id, lang, CAST(unnest(range(1, n_copies + 1)) AS INTEGER) AS copy_no
-        |FROM counted WHERE n_copies >= 1""".stripMargin,
-
-    "q165_temperature_mixture" ->
-      """WITH g AS (SELECT lang, count(*) AS n FROM documents GROUP BY 1),
-        |ga AS (SELECT lang, n, sqrt(CAST(n AS DOUBLE)) AS a FROM g),
-        |tot AS (SELECT sum(n) AS nn,
-        |          sum(CAST(floor(a*1048576.0 + 0.5) AS BIGINT)) AS s FROM ga),
-        |wd AS (SELECT d.doc_id, d.lang,
-        |         (CAST(tot.nn AS DOUBLE) * ga.a * 1048576.0)
-        |           / (CAST(ga.n AS DOUBLE) * CAST(tot.s AS DOUBLE)) AS w
-        |       FROM documents d JOIN ga ON d.lang = ga.lang, tot),
-        |c AS (SELECT doc_id, lang, round(w, 6) AS weight,
-        |        CAST(floor(w) AS INTEGER) +
-        |          CASE WHEN CAST(CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':mix'), 1, 8)) AS BIGINT) AS DOUBLE)
-        |                 / CAST(4294967296 AS DOUBLE) < w - floor(w)
-        |               THEN 1 ELSE 0 END AS n_copies
-        |      FROM wd)
-        |SELECT doc_id, lang, weight,
-        |  CAST(unnest(range(1, n_copies + 1)) AS INTEGER) AS copy_no
-        |FROM c WHERE n_copies >= 1""".stripMargin,
-
-    "q84_domain_quota" ->
-      """WITH scored AS (
-        |  SELECT doc_id, source,
-        |    round(0.4 * least(1.0, n_tokens / 100.0)
-        |        + 0.4 * (1.0 - punct_ratio)
-        |        + 0.2 * (1.0 - abs(stop_ratio - 0.4)), 6) AS quality
-        |  FROM (
-        |    SELECT doc_id, source, len(toks) AS n_tokens,
-        |      (length(text) - length(regexp_replace(text, '[^a-z0-9 ]', '', 'g'))) / length(text) AS punct_ratio,
-        |      CAST(len(list_filter(toks, x -> x IN ('the','a','of','and','to','in','is','it'))) AS BIGINT) / len(toks) AS stop_ratio
-        |    FROM (SELECT doc_id, source, text, string_split_regex(trim(text), '\s+') AS toks FROM documents))),
-        |ranked AS (
-        |  SELECT *, row_number() OVER (PARTITION BY source ORDER BY quality DESC, doc_id) AS rk
-        |  FROM scored)
-        |SELECT doc_id, source, quality, CAST(rk AS INTEGER) AS rk
-        |FROM ranked WHERE rk <= 10""".stripMargin,
-
-    "q85_epoch_shuffle" ->
-      """SELECT doc_id, md5(CAST(doc_id AS VARCHAR) || ':42') AS shuffle_key,
-        |  row_number() OVER (ORDER BY md5(CAST(doc_id AS VARCHAR) || ':42')) - 1 AS pos
-        |FROM documents""".stripMargin,
-
-    "q86_pii_redaction" ->
-      """WITH seeded AS (
-        |  SELECT doc_id,
-        |    'contact user' || CAST(doc_id AS VARCHAR) || '@example.' ||
-        |      CASE WHEN doc_id % 2 = 0 THEN 'com' ELSE 'org' END ||
-        |      ' ip 10.' || CAST(doc_id % 256 AS VARCHAR) || '.0.' || CAST(doc_id % 100 AS VARCHAR) ||
-        |      ' tel +1 555 01' || lpad(CAST(doc_id % 100 AS VARCHAR), 2, '0') || ' ' || text AS text
-        |  FROM documents)
-        |SELECT doc_id,
-        |  CAST(len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS INTEGER) AS n_emails,
-        |  CAST(len(regexp_extract_all(text, '\b\d{1,3}(\.\d{1,3}){3}\b')) AS INTEGER) AS n_ips,
-        |  CAST(len(regexp_extract_all(text, '\+?\d[\d -]{7,}\d')) AS INTEGER) AS n_phones,
-        |  regexp_replace(regexp_replace(regexp_replace(text,
-        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-        |    '\b\d{1,3}(\.\d{1,3}){3}\b', '<IP>', 'g'),
-        |    '\+?\d[\d -]{7,}\d', '<PHONE>', 'g') AS redacted
-        |FROM seeded""".stripMargin,
-
-    "q87_repetition_stats" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS t FROM documents),
-        |big AS (
-        |  SELECT doc_id, t,
-        |    [t[i] || ' ' || t[i+1] FOR i IN range(1, len(t))] AS bigrams
-        |  FROM toks)
-        |SELECT doc_id, CAST(len(t) AS INTEGER) AS n_tokens,
-        |  floor((1.0 - CAST(len(list_distinct(t)) AS DOUBLE) / len(t))*1e6 + 0.5)/1e6 AS dup_token_frac,
-        |  CAST((SELECT max(cnt) FROM (SELECT count(*) AS cnt FROM unnest(big.bigrams) AS u(bg) GROUP BY bg) m) AS INTEGER) AS top_bigram_count,
-        |  floor((CAST((SELECT max(cnt) FROM (SELECT count(*) AS cnt FROM unnest(big.bigrams) AS u(bg) GROUP BY bg) m) AS DOUBLE) / (len(t) - 1))*1e6 + 0.5)/1e6 AS top_bigram_frac
-        |FROM big""".stripMargin,
-
-    "q88_sequence_packing" ->
-      """WITH c AS (
-        |  SELECT doc_id,
-        |    COALESCE(sum(n_chars) OVER (ORDER BY md5(CAST(doc_id AS VARCHAR) || ':42')
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_before
-        |  FROM documents)
-        |SELECT doc_id, CAST(cum_before // 4096 AS BIGINT) AS bin FROM c""".stripMargin,
-
-    "q89_tfidf_top_term" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS term FROM documents),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
-        |dfreq AS (SELECT term, count(DISTINCT doc_id) AS df FROM toks GROUP BY 1),
-        |n AS (SELECT count(*) AS n FROM documents),
-        |scored AS (
-        |  SELECT tf.doc_id, tf.term,
-        |    floor((tf.tf * ln(CAST(n.n AS DOUBLE) / dfreq.df))*1e6 + 0.5)/1e6 AS tfidf
-        |  FROM tf, dfreq, n WHERE tf.term = dfreq.term),
-        |ranked AS (
-        |  SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY tfidf DESC, term) AS rk
-        |  FROM scored)
-        |SELECT doc_id, term AS top_term, tfidf FROM ranked WHERE rk = 1""".stripMargin,
-
-    "q90_asof_join" ->
-      """WITH l AS (
-        |  SELECT event_id, user_id, epoch_us(ts) AS ts_us
-        |  FROM events WHERE event_type = 'click'),
-        |r AS (
-        |  SELECT user_id, epoch_us(ts) AS ts_us, value
-        |  FROM events WHERE event_type = 'purchase')
-        |SELECT l.event_id, l.user_id, l.ts_us,
-        |  r.ts_us AS purchase_ts_us, r.value AS purchase_value
-        |FROM l ASOF LEFT JOIN r
-        |  ON l.user_id = r.user_id AND l.ts_us >= r.ts_us""".stripMargin,
-
-    "q91_interval_join" ->
-      """WITH t0 AS (
-        |  SELECT epoch_us(date_trunc('day', min(ts))) AS t0_us FROM events),
-        |w AS (
-        |  SELECT CAST(i AS INTEGER) AS window_id,
-        |    t0_us + i * 10800000000 AS start_us,
-        |    t0_us + i * 10800000000 + 7200000000 AS end_us
-        |  FROM range(240) r(i), t0),
-        |p AS (SELECT event_id, epoch_us(ts) AS ts_us FROM events)
-        |SELECT p.event_id, w.window_id, p.ts_us
-        |FROM p JOIN w ON p.ts_us >= w.start_us AND p.ts_us < w.end_us""".stripMargin,
-
-    "q92_unigram_logprob" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS term FROM documents),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
-        |vocab AS (SELECT term, count(*) AS cnt FROM toks GROUP BY 1),
-        |tot AS (SELECT count(*) AS total FROM toks),
-        |contrib AS (
-        |  SELECT tf.doc_id, tf.term, tf.tf,
-        |    floor((tf.tf * ln(CAST(vocab.cnt AS DOUBLE) / tot.total))*1e6 + 0.5)/1e6 AS contrib
-        |  FROM tf, vocab, tot WHERE tf.term = vocab.term),
-        |folded AS (
-        |  SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_tokens,
-        |    list_reduce(list(contrib ORDER BY term), (x, y) -> x + y) AS lp
-        |  FROM contrib GROUP BY doc_id)
-        |SELECT doc_id, n_tokens,
-        |  floor(lp*1e6 + 0.5)/1e6 AS logprob,
-        |  floor((lp * -1 / n_tokens)*1e6 + 0.5)/1e6 AS ppl_proxy
-        |FROM folded""".stripMargin,
-
-    "q61_pip_join" ->
-      """SELECT c_custkey AS pid, n_nationkey AS poly_id
-        |FROM customer, nation
-        |WHERE CAST((c_custkey * 7) % 97 AS DOUBLE) > CAST((n_nationkey * 11) % 80 AS DOUBLE) - 0.5
-        |  AND CAST((c_custkey * 7) % 97 AS DOUBLE) < CAST((n_nationkey * 11) % 80 AS DOUBLE) - 0.5 + 15.0
-        |  AND CAST((c_custkey * 13) % 89 AS DOUBLE) > CAST((n_nationkey * 17) % 70 AS DOUBLE) - 0.5
-        |  AND CAST((c_custkey * 13) % 89 AS DOUBLE) < CAST((n_nationkey * 17) % 70 AS DOUBLE) - 0.5 + 20.0""".stripMargin,
-
-    "q76_pip_multipolygon" ->
-      """WITH pts AS (
-        |  SELECT c_custkey AS pid,
-        |    CAST((c_custkey * 7) % 97 AS DOUBLE) AS x,
-        |    CAST((c_custkey * 13) % 89 AS DOUBLE) AS y
-        |  FROM customer),
-        |rects AS (
-        |  SELECT n_nationkey AS poly_id,
-        |    CAST((n_nationkey * 11) % 80 AS DOUBLE) - 0.5 AS x0,
-        |    CAST((n_nationkey * 17) % 70 AS DOUBLE) - 0.5 AS y0
-        |  FROM nation)
-        |SELECT pid, poly_id
-        |FROM pts, rects
-        |WHERE (x > x0 AND x < x0 + 15.0 AND y > y0 AND y < y0 + 20.0
-        |       AND NOT (x > x0 + 4.0 AND x < x0 + 8.0 AND y > y0 + 5.0 AND y < y0 + 12.0))
-        |   OR (x > x0 + 18.0 AND x < x0 + 24.0 AND y > y0 AND y < y0 + 8.0)""".stripMargin,
-
-    "q64_media_segments" ->
-      """SELECT doc_id AS media_id, CAST(i AS INTEGER) AS segment_idx,
-        | substring(text, CAST(i * 64 + 1 AS INTEGER), 64) AS segment_text
-        |FROM documents CROSS JOIN range(0, 4096) t(i)
-        |WHERE i < greatest(CAST(1 AS BIGINT), CAST(ceil(strlen(text) / 64.0) AS BIGINT))
-        |  AND length(substring(text, CAST(i * 64 + 1 AS INTEGER), 64)) > 0""".stripMargin,
-
-    "q72_tree_volume" ->
-      s"""WITH trees AS (
-        |  SELECT p_partkey AS tree_id, p_partkey % 20 AS tree_species_id,
-        |    CAST(50 + p_size * 10 AS DOUBLE) AS perimeter_cm,
-        |    CAST(8 + p_partkey % 15 AS DOUBLE) AS height_m
-        |  FROM part),
-        |params(tree_species_id, a, b, c, d, e, f, formule_type) AS (
-        |  VALUES
-        |   $tariffValuesSql),
-        |j AS (
-        |  SELECT tree_id, t.tree_species_id, formule_type,
-        |    CAST(a AS DOUBLE) AS a, CAST(b AS DOUBLE) AS b, CAST(c AS DOUBLE) AS c,
-        |    CAST(d AS DOUBLE) AS d, CAST(e AS DOUBLE) AS e, CAST(f AS DOUBLE) AS f,
-        |    perimeter_cm / 100.0 AS c150, height_m AS h
-        |  FROM trees t LEFT JOIN params p ON t.tree_species_id = p.tree_species_id)
-        |SELECT tree_id, tree_species_id, CAST(formule_type AS INTEGER) AS formule_type,
-        |  floor((CASE
-        |    WHEN formule_type = 1 THEN a + b*c150 + c*c150*c150 + d*c150*c150*c150
-        |    WHEN formule_type = 2 THEN a + b*c150 + c*c150*c150 + d*h + e*c150*h + f*c150*c150*h
-        |    WHEN formule_type = 3 THEN a + b*c150*c150 + c*c150*c150*h + d*h
-        |  END)*1e6 + 0.5)/1e6 AS vol_m3
-        |FROM j""".stripMargin,
-
-    "q74_deadwood_volume" ->
-      """SELECT plot_id, count(*) AS n_pieces,
-        | round(pi() * pi() / (8 * 100.0) * 10000 *
-        |   sum(pow(diameter_cm / 100.0, 2) / cos(radians(angle_degrees))), 6) AS vol_m3_ha
-        |FROM (SELECT l_suppkey AS plot_id, l_quantity AS diameter_cm,
-        |        CAST(l_partkey % 30 AS DOUBLE) AS angle_degrees FROM lineitem)
-        |GROUP BY plot_id""".stripMargin,
-
-    "q73_tree_metrics" ->
-      """SELECT plot_id, count(*) AS n_trees,
-        | round(sum(pi() * (dbh_mm/2000.0) * (dbh_mm/2000.0)), 6) AS basal_area_m2,
-        | round(max(pi() * (dbh_mm/2000.0) * (dbh_mm/2000.0)), 6) AS max_tree_basal_m2
-        |FROM (SELECT p_partkey % 500 AS plot_id, p_partkey AS tree_id,
-        |        100 + (p_size * 17) % 500 AS dbh_mm FROM part)
-        |GROUP BY plot_id""".stripMargin,
-
-    "q60_media_meta" ->
-      """SELECT doc_id AS media_id, 'text_blob' AS kind,
-        | CAST(strlen(text) AS BIGINT) AS byte_len,
-        | md5(text) AS content_hash
-        |FROM documents""".stripMargin,
-
-    "q104_image_decode" ->
-      """SELECT doc_id AS media_id,
-        | CAST(doc_id % 13 + 3 AS INT) AS width,
-        | CAST(doc_id % 7 + 2 AS INT) AS height,
-        | CAST(doc_id % 251 AS DOUBLE) AS mean_px
-        |FROM documents""".stripMargin,
-
-    // q214: the container round trip replays frame-for-frame from the
-    // closed form (constant fills survive the 256-gray GIF palette
-    // exactly; a constant frame's double mean is the exact fill value)
-    "q214_gif_container_decode" ->
-      """SELECT doc_id AS media_id, CAST(f AS INTEGER) AS frame,
-        | CAST(doc_id % 13 + 3 AS INT) AS width,
-        | CAST(doc_id % 7 + 5 AS INT) AS height,
-        | CAST((doc_id * 7 + f * 31) % 251 AS DOUBLE) AS mean_px
-        |FROM documents CROSS JOIN range(0, 3) t(f)
-        |WHERE f <= doc_id % 3""".stripMargin,
-
-    // q218: the sampled frames' fills are the q214 closed form with
-    // the q218 constants; a resized constant raster is the fill byte
-    // repeated targetW*targetH times, hashed under the shared
-    // hex-rendering convention (Spark hex() and DuckDB hex() both
-    // render uppercase)
-    "q218_gif_frame_sample" ->
-      """SELECT doc_id AS media_id, CAST(f AS INTEGER) AS frame,
-        |  CAST(12 AS INTEGER) AS n_bytes,
-        |  CAST(('0x' || substr(md5(hex(repeat(
-        |      unhex(format('{:02x}', (doc_id * 11 + f * 37) % 251)), 12))),
-        |    1, 8)) AS BIGINT) AS resized_checksum
-        |FROM documents CROSS JOIN range(0, 6) t(f)
-        |WHERE f <= doc_id % 6 AND f % 2 = 0""".stripMargin,
-
-    // q215: the raw-text round trip is value-invisible — one
-    // order-independent report row replayed from parquet
-    "q215_rawtext_ingest" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(length(text)) AS BIGINT) AS chars_total,
-        |  CAST(sum(CAST(('0x' || substr(md5(text), 1, 8)) AS BIGINT)) AS BIGINT)
-        |    AS text_checksum
-        |FROM documents""".stripMargin,
-
-    // q216: q209's per-group replay plus the planted corrupt line's
-    // (NULL, NULL) group — exactly one row, all data aggregates NULL
-    "q216_csv2_audit" ->
-      """SELECT lang, source, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(n_chars) AS BIGINT) AS chars_total,
-        |  CAST(sum(CAST(('0x' || substr(md5(text), 1, 8)) AS BIGINT)) AS BIGINT)
-        |    AS text_checksum,
-        |  CAST(0 AS BIGINT) AS n_corrupt
-        |FROM documents GROUP BY 1, 2
-        |UNION ALL
-        |SELECT NULL AS lang, NULL AS source, CAST(1 AS BIGINT) AS n_docs,
-        |  CAST(NULL AS BIGINT) AS chars_total,
-        |  CAST(NULL AS BIGINT) AS text_checksum, CAST(1 AS BIGINT) AS n_corrupt""".stripMargin,
-
-    // q219: rebuild the exact token stream the shards encode — md5-slice
-    // ids + EOS(4096) per doc in doc-id order, global positions via the
-    // cumulative window, partial tail sequence dropped at total//64*64 —
-    // then per shard the count/sum and the position-weighted polynomial
-    // checksum mod 1e9+7 (rn is 1-based within the shard, matching the
-    // kernel's i+1). The Spark side derives every value from RE-READ
-    // shard BYTES, so a hash match proves the on-disk int32-LE layout.
-    // q219 and its byte-free twin q238 share ONE oracle text verbatim
-    // (the r20-verdict bifurcation: identical replay, different Spark
-    // leg — write+re-read vs direct stream aggregate)
-    "q219_token_shards" -> tokenShardsStreamOracleSql,
-    "q238_token_shards_stream" -> tokenShardsStreamOracleSql,
-
-    // q221: the Avro round trip is value-invisible like q209/q210's —
-    // the same per-group content-checksum replay from parquet
-    "q221_avro_roundtrip" ->
-      """SELECT lang, source, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(n_chars) AS BIGINT) AS chars_total,
-        |  CAST(sum(CAST(('0x' || substr(md5(text), 1, 8)) AS BIGINT)) AS BIGINT)
-        |    AS text_checksum
-        |FROM documents GROUP BY 1, 2""".stripMargin,
-
-    // q222: replay the same two derived versions and the same
-    // \x01-joined \x02-sentinel md5 row fingerprint (chr(1)/chr(2) in
-    // DuckDB), classify via the full outer join, drop unchanged.
-    "q222_snapshot_diff" ->
-      """WITH old AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 17 = 0 THEN text || ' v2' ELSE text END AS text,
-        |    lang, source, n_chars
-        |  FROM documents WHERE doc_id % 11 <> 0),
-        |nw AS (SELECT doc_id, text, lang, source, n_chars
-        |       FROM documents WHERE doc_id % 13 <> 0),
-        |o AS (SELECT doc_id, md5(concat_ws(chr(1),
-        |        coalesce(text, chr(2)), coalesce(lang, chr(2)),
-        |        coalesce(source, chr(2)),
-        |        coalesce(CAST(n_chars AS VARCHAR), chr(2)))) AS fp
-        |      FROM old),
-        |n AS (SELECT doc_id, md5(concat_ws(chr(1),
-        |        coalesce(text, chr(2)), coalesce(lang, chr(2)),
-        |        coalesce(source, chr(2)),
-        |        coalesce(CAST(n_chars AS VARCHAR), chr(2)))) AS fp
-        |      FROM nw),
-        |cls AS (
-        |  SELECT coalesce(o.doc_id, n.doc_id) AS doc_id,
-        |    CASE WHEN o.doc_id IS NULL THEN 'added'
-        |         WHEN n.doc_id IS NULL THEN 'removed'
-        |         WHEN o.fp <> n.fp THEN 'changed'
-        |         ELSE 'unchanged' END AS change
-        |  FROM o FULL OUTER JOIN n ON o.doc_id = n.doc_id)
-        |SELECT doc_id, change FROM cls WHERE change <> 'unchanged'""".stripMargin,
-
-    // q231: q42's quality-micros formula feeds the same composite
-    // arg-pick key; max/min + modular decode recover the picked ids
-    "q231_preference_pairs" ->
-      """WITH q AS (
-        |  SELECT lang, source, doc_id,
-        |    CAST(round(round(0.4 * least(1.0, n_tokens / 100.0)
-        |        + 0.4 * (1.0 - punct_ratio)
-        |        + 0.2 * (1.0 - abs(stop_ratio - 0.4)), 6) * 1e6) AS BIGINT)
-        |      * 1000000000000 + (999999999999 - doc_id) AS k
-        |  FROM (
-        |    SELECT doc_id, lang, source, len(toks) AS n_tokens,
-        |      CASE WHEN length(text) = 0 THEN 0.0
-        |           ELSE (length(text) - length(regexp_replace(text, '[^a-z0-9 ]', '', 'g'))) / length(text) END AS punct_ratio,
-        |      CASE WHEN len(toks) = 0 THEN 0.0
-        |           ELSE CAST(len(list_filter(toks, x -> x IN ('the','a','of','and','to','in','is','it'))) AS BIGINT) / len(toks) END AS stop_ratio
-        |    FROM (SELECT doc_id, lang, source, text,
-        |            CASE WHEN length(trim(text)) = 0 THEN []
-        |                 ELSE string_split_regex(trim(text), '\s+') END AS toks
-        |          FROM documents)))
-        |SELECT lang, source, count(*) AS n_docs,
-        |  CAST(999999999999 - max(k) % 1000000000000 AS BIGINT) AS chosen_id,
-        |  CAST(999999999999 - min(k) % 1000000000000 AS BIGINT) AS rejected_id,
-        |  CAST(max(k) // 1000000000000 - min(k) // 1000000000000 AS BIGINT)
-        |    AS margin_micros
-        |FROM q GROUP BY 1, 2 HAVING count(*) >= 2""".stripMargin,
-
-    // q232: the whole release replayed — the SHARED
-    // pretrainReleaseChainSql (q100's quality/fp/dedup text, q81's
-    // shingle CTEs at n=5, q165's mixture CTEs over the CLEAN set),
-    // then q219's stream tail over release_id = doc_id·16 + copy−1.
-    // OracleConsistencySpec pins each shared fragment in lockstep with
-    // its component oracle.
-    "q232_pretrain_release" ->
-      s"""WITH ${pretrainReleaseChainSql()},
-        |ids AS (
-        |  SELECT release_id,
-        |    list_append(
-        |      list_transform(
-        |        CASE WHEN length(trim(text)) = 0 THEN []
-        |             ELSE string_split_regex(trim(text), '\\s+') END,
-        |        t -> CAST(('0x' || substr(md5(t), 1, 8)) AS BIGINT) % 4096),
-        |      4096) AS ids
-        |  FROM release),
-        |offs AS (
-        |  SELECT release_id, ids,
-        |    coalesce(sum(len(ids)) OVER (ORDER BY release_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS doc_off,
-        |    sum(len(ids)) OVER () AS total
-        |  FROM ids),
-        |toks AS (
-        |  SELECT doc_off + i AS gpos, ids[i + 1] AS tid, total
-        |  FROM (SELECT doc_off, ids, total, unnest(range(len(ids))) AS i
-        |        FROM offs) t),
-        |sh AS (
-        |  SELECT CAST((gpos // 64) // 16 AS BIGINT) AS shard_id, gpos, tid
-        |  FROM toks WHERE gpos < (total // 64) * 64),
-        |st AS (
-        |  SELECT shard_id, tid,
-        |    row_number() OVER (PARTITION BY shard_id ORDER BY gpos) AS rn
-        |  FROM sh)
-        |SELECT shard_id, CAST(count(*) // 64 AS BIGINT) AS n_seqs,
-        |  CAST(count(*) AS BIGINT) AS n_tokens,
-        |  CAST(sum(tid) AS BIGINT) AS token_sum,
-        |  CAST(CAST(sum(rn * (tid + 1)) AS HUGEINT) % 1000000007 AS BIGINT)
-        |    AS poly_mod,
-        |  true AS manifest_match
-        |FROM st GROUP BY 1""".stripMargin,
-
-    // q233: the SAME shared chain, then q225's interval tail keyed by
-    // release_id — the sidecar and the shards derive from one chain
-    // definition on both engines, so they cannot drift
-    "q233_release_doc_spans" ->
-      s"""WITH ${pretrainReleaseChainSql()},
-        |ids AS (
-        |  SELECT release_id,
-        |    len(CASE WHEN length(trim(text)) = 0 THEN []
-        |         ELSE string_split_regex(trim(text), '\\s+') END) + 1 AS cost
-        |  FROM release),
-        |offs AS (
-        |  SELECT release_id, cost,
-        |    CAST(coalesce(sum(cost) OVER (ORDER BY release_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-        |      AS doc_off,
-        |    CAST(sum(cost) OVER () AS BIGINT) AS total
-        |  FROM ids),
-        |sp AS (
-        |  SELECT release_id, cost, doc_off, total,
-        |    unnest(range(doc_off // 64, (doc_off + cost - 1) // 64 + 1)) AS seq_id
-        |  FROM offs)
-        |SELECT seq_id, release_id,
-        |  CAST(greatest(0, doc_off - seq_id * 64) AS BIGINT) AS start_off,
-        |  CAST(least(doc_off + cost, (seq_id + 1) * 64)
-        |       - greatest(doc_off, seq_id * 64) AS BIGINT) AS n_tokens
-        |FROM sp WHERE seq_id < total // 64""".stripMargin,
-
-    // q234: the SAME shared chain; the card aggregates admitted copies
-    // joined back to the corpus slice (EOS-inclusive stream costs —
-    // what the shards encode), share as floor(ppm + 0.5) in the
-    // identical double op order on both engines
-    "q234_release_data_card" ->
-      s"""WITH ${pretrainReleaseChainSql()},
-        |card AS (
-        |  SELECT d.lang,
-        |    CAST(count(DISTINCT cc.doc_id) AS BIGINT) AS n_docs,
-        |    CAST(count(*) AS BIGINT) AS n_copies,
-        |    CAST(sum(len(CASE WHEN length(trim(cc.text)) = 0 THEN []
-        |         ELSE string_split_regex(trim(cc.text), '\\s+') END) + 1)
-        |      AS BIGINT) AS n_tokens
-        |  FROM cc JOIN rel_docs d USING (doc_id)
-        |  GROUP BY 1)
-        |SELECT lang, n_docs, n_copies, n_tokens,
-        |  CAST(floor(CAST(n_tokens AS DOUBLE) * 1000000.0
-        |      / CAST(sum(n_tokens) OVER () AS DOUBLE) + 0.5) AS BIGINT)
-        |    AS token_share_ppm
-        |FROM card""".stripMargin,
-
-    // q235: the shared chain releases the %3≡0 slice (drop 0); the
-    // delta replays the SAME admission gates against the RELEASED
-    // fingerprints (relfp ← clean) and the chain's own bench shingles
-    // (bsh), then both drops run q219's stream tail — the delta's
-    // shard ids offset to continue after drop 0's last file
-    "q235_release_delta" ->
-      s"""WITH ${pretrainReleaseChainSql("doc_id % 97 <> 0 AND doc_id % 3 = 0")},
-        |a_ids AS (
-        |  SELECT release_id,
-        |    list_append(
-        |      list_transform(
-        |        CASE WHEN length(trim(text)) = 0 THEN []
-        |             ELSE string_split_regex(trim(text), '\\s+') END,
-        |        t -> CAST(('0x' || substr(md5(t), 1, 8)) AS BIGINT) % 4096),
-        |      4096) AS ids
-        |  FROM release),
-        |a_offs AS (
-        |  SELECT release_id, ids,
-        |    coalesce(sum(len(ids)) OVER (ORDER BY release_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS doc_off,
-        |    sum(len(ids)) OVER () AS total
-        |  FROM a_ids),
-        |a_toks AS (
-        |  SELECT doc_off + i AS gpos, ids[i + 1] AS tid, total
-        |  FROM (SELECT doc_off, ids, total, unnest(range(len(ids))) AS i
-        |        FROM a_offs) t),
-        |a_sh AS (
-        |  SELECT CAST((gpos // 64) // 16 AS BIGINT) AS shard_id, gpos, tid
-        |  FROM a_toks WHERE gpos < (total // 64) * 64),
-        |a_st AS (
-        |  SELECT shard_id, tid,
-        |    row_number() OVER (PARTITION BY shard_id ORDER BY gpos) AS rn
-        |  FROM a_sh),
-        |a_off AS (
-        |  SELECT CASE WHEN coalesce(max(total), 0) // 64 = 0 THEN 0
-        |              ELSE (coalesce(max(total), 0) // 64 - 1) // 16 + 1
-        |         END AS shard_off
-        |  FROM a_offs),
-        |bq AS (
-        |  SELECT doc_id, text FROM documents
-        |  WHERE doc_id % 97 <> 0 AND doc_id % 3 <> 0
-        |    AND len(string_split_regex(trim(text), '\\s+')) >= 30),
-        |bfp AS (
-        |  SELECT *, md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS f FROM bq),
-        |bdedup AS (
-        |  SELECT * FROM (SELECT *, min(doc_id) OVER (PARTITION BY f) AS canon FROM bfp)
-        |  WHERE doc_id = canon),
-        |relfp AS (
-        |  SELECT DISTINCT md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS f
-        |  FROM clean),
-        |bfresh AS (
-        |  SELECT doc_id, text FROM bdedup
-        |  WHERE f NOT IN (SELECT f FROM relfp)),
-        |bfsh AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(toks) <= 5 THEN [array_to_string(toks, ' ')]
-        |         ELSE list_transform(range(1, len(toks) - 5 + 2),
-        |                i -> array_to_string(toks[i:i+4], ' ')) END AS shingles
-        |  FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks FROM bfresh)),
-        |bcont AS (
-        |  SELECT DISTINCT t.doc_id
-        |  FROM (SELECT doc_id, unnest(shingles) AS shingle FROM bfsh) t
-        |  JOIN bsh USING (shingle)),
-        |bclean AS (
-        |  SELECT doc_id, text FROM bfresh
-        |  WHERE doc_id NOT IN (SELECT doc_id FROM bcont)),
-        |brel AS (SELECT doc_id * 16 AS release_id, text FROM bclean),
-        |b_ids AS (
-        |  SELECT release_id,
-        |    list_append(
-        |      list_transform(
-        |        CASE WHEN length(trim(text)) = 0 THEN []
-        |             ELSE string_split_regex(trim(text), '\\s+') END,
-        |        t -> CAST(('0x' || substr(md5(t), 1, 8)) AS BIGINT) % 4096),
-        |      4096) AS ids
-        |  FROM brel),
-        |b_offs AS (
-        |  SELECT release_id, ids,
-        |    coalesce(sum(len(ids)) OVER (ORDER BY release_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS doc_off,
-        |    sum(len(ids)) OVER () AS total
-        |  FROM b_ids),
-        |b_toks AS (
-        |  SELECT doc_off + i AS gpos, ids[i + 1] AS tid, total
-        |  FROM (SELECT doc_off, ids, total, unnest(range(len(ids))) AS i
-        |        FROM b_offs) t),
-        |b_sh AS (
-        |  SELECT CAST((gpos // 64) // 16 + a_off.shard_off AS BIGINT) AS shard_id, gpos, tid
-        |  FROM b_toks, a_off WHERE gpos < (total // 64) * 64),
-        |b_st AS (
-        |  SELECT shard_id, tid,
-        |    row_number() OVER (PARTITION BY shard_id ORDER BY gpos) AS rn
-        |  FROM b_sh)
-        |SELECT 0 AS drop_no, shard_id, CAST(count(*) AS BIGINT) AS n_tokens,
-        |  CAST(sum(tid) AS BIGINT) AS token_sum,
-        |  CAST(CAST(sum(rn * (tid + 1)) AS HUGEINT) % 1000000007 AS BIGINT)
-        |    AS poly_mod
-        |FROM a_st GROUP BY 2
-        |UNION ALL
-        |SELECT 1 AS drop_no, shard_id, CAST(count(*) AS BIGINT) AS n_tokens,
-        |  CAST(sum(tid) AS BIGINT) AS token_sum,
-        |  CAST(CAST(sum(rn * (tid + 1)) AS HUGEINT) % 1000000007 AS BIGINT)
-        |    AS poly_mod
-        |FROM b_st GROUP BY 2""".stripMargin,
-
-    // q236: the shared chain's ids-only cost sum sizes the sequence
-    // table; positions are q85's md5 order per epoch (the ':seed' salt
-    // rendered as ':' || epoch)
-    "q236_release_epoch_order" ->
-      s"""WITH ${pretrainReleaseChainSql()},
-        |rtot AS (
-        |  SELECT coalesce(CAST(sum(len(CASE WHEN length(trim(text)) = 0 THEN []
-        |       ELSE string_split_regex(trim(text), '\\s+') END) + 1) AS BIGINT), 0)
-        |    AS total
-        |  FROM cc),
-        |seqs AS (
-        |  SELECT unnest(range((SELECT total // 64 FROM rtot))) AS seq_id),
-        |e AS (SELECT 0 AS epoch UNION ALL SELECT 1 AS epoch),
-        |keyed AS (
-        |  SELECT e.epoch, s.seq_id,
-        |    md5(CAST(s.seq_id AS VARCHAR) || ':' || CAST(e.epoch AS VARCHAR))
-        |      AS shuffle_key
-        |  FROM seqs s, e)
-        |SELECT epoch, seq_id, shuffle_key,
-        |  row_number() OVER (PARTITION BY epoch ORDER BY shuffle_key) - 1 AS pos
-        |FROM keyed""".stripMargin,
-
-    // q237: the shared chain's stage CTEs counted directly — the
-    // funnel and the release derive from one chain definition
-    "q237_release_funnel" ->
-      s"""WITH ${pretrainReleaseChainSql()}
-        |SELECT
-        |  (SELECT CAST(count(*) AS BIGINT) FROM rel_docs) AS n_candidates,
-        |  (SELECT CAST(count(*) AS BIGINT) FROM quality) AS n_quality,
-        |  (SELECT CAST(count(*) AS BIGINT) FROM dedup) AS n_dedup,
-        |  (SELECT CAST(count(*) AS BIGINT) FROM clean) AS n_clean,
-        |  (SELECT CAST(count(*) AS BIGINT) FROM cc) AS n_copies""".stripMargin,
-
-    // q230: q30's session CTE, kept = last-8 by (ts, event_id) desc,
-    // role by kept-index parity, transcript via ordered string_agg
-    // (chr(10) joiner on both engines)
-    "q230_sft_transcripts" ->
-      """WITH sess AS (
-        |  SELECT user_id, ts, event_id, event_type,
-        |    sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                      ROWS UNBOUNDED PRECEDING) AS session_seq
-        |  FROM (
-        |    SELECT user_id, ts, event_id, event_type,
-        |      CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL THEN 1
-        |           WHEN epoch_us(ts) - epoch_us(lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)) > 1800000000 THEN 1
-        |           ELSE 0 END AS is_new
-        |    FROM events)),
-        |kept AS (
-        |  SELECT * FROM (
-        |    SELECT user_id, session_seq, ts, event_id, event_type,
-        |      row_number() OVER (PARTITION BY user_id, session_seq
-        |                         ORDER BY ts DESC, event_id DESC) AS rnd
-        |    FROM sess) WHERE rnd <= 8),
-        |lines AS (
-        |  SELECT user_id, session_seq, ts, event_id,
-        |    (CASE WHEN (count(*) OVER (PARTITION BY user_id, session_seq)
-        |                - rnd) % 2 = 0
-        |          THEN 'user' ELSE 'assistant' END)
-        |      || ': ' || event_type AS line
-        |  FROM kept)
-        |SELECT user_id, CAST(session_seq AS BIGINT) AS session_id,
-        |  count(*) AS n_turns,
-        |  string_agg(line, chr(10) ORDER BY ts, event_id) AS transcript
-        |FROM lines GROUP BY 1, 2""".stripMargin,
-
-    // q229: the two-delivery replay of q187's labeling — 'dup_of_base'
-    // wins outright; otherwise 'new' goes to the min id of the FIRST
-    // delivery (A = even ids) containing the fingerprint, everything
-    // later is dup_in_delta (the restored-state semantics).
-    "q229_restart_recovery" ->
-      """WITH strm AS (
-        |  SELECT doc_id, text FROM documents WHERE doc_id % 3 = 0),
-        |basefp AS (
-        |  SELECT DISTINCT md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'))
-        |    AS fingerprint
-        |  FROM documents WHERE doc_id % 3 <> 0),
-        |f AS (
-        |  SELECT doc_id,
-        |    md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fingerprint,
-        |    doc_id % 2 = 0 AS in_a
-        |  FROM strm),
-        |firsts AS (
-        |  SELECT fingerprint,
-        |    min(CASE WHEN in_a THEN doc_id END) AS min_a,
-        |    min(CASE WHEN NOT in_a THEN doc_id END) AS min_b
-        |  FROM f GROUP BY 1)
-        |SELECT f.doc_id, f.fingerprint,
-        |  CASE WHEN f.fingerprint IN (SELECT fingerprint FROM basefp)
-        |         THEN 'dup_of_base'
-        |       WHEN firsts.min_a IS NOT NULL AND f.doc_id = firsts.min_a
-        |         THEN 'new'
-        |       WHEN firsts.min_a IS NULL AND f.doc_id = firsts.min_b
-        |         THEN 'new'
-        |       ELSE 'dup_in_delta' END AS status
-        |FROM f JOIN firsts USING (fingerprint)""".stripMargin,
-
-    // q228: same third-boundary slices via 1-based list ranges;
-    // concat_ws includes empty segments identically on both engines
-    // (docs under 3 tokens are excluded so none occur)
-    "q228_fim_transform" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    CASE WHEN length(trim(text)) = 0 THEN []
-        |         ELSE string_split_regex(trim(text), '\s+') END AS ts
-        |  FROM documents),
-        |cut AS (
-        |  SELECT doc_id, ts, len(ts) AS n,
-        |    len(ts) // 3 AS p1, (len(ts) * 2) // 3 AS p2
-        |  FROM toks WHERE len(ts) >= 3)
-        |SELECT doc_id, CAST(n AS BIGINT) AS n_tokens,
-        |  concat_ws(' ',
-        |    '<fim_prefix>', array_to_string(ts[1:p1], ' '),
-        |    '<fim_suffix>', array_to_string(ts[p2+1:n], ' '),
-        |    '<fim_middle>', array_to_string(ts[p1+1:p2], ' ')) AS fim_text
-        |FROM cut""".stripMargin,
-
-    // q227: the shared admission chain's own CTEs classify each batch
-    // doc by its first failing gate — one CASE, no re-derivation
-    "q227_ingest_rejection_audit" ->
-      s"""WITH $corpusIngestChainSql
-        |SELECT b.doc_id,
-        |  CASE WHEN len(string_split_regex(trim(b.text), '\\s+')) < 30
-        |         THEN 'quality'
-        |       WHEN b.doc_id NOT IN (SELECT doc_id FROM dedup)
-        |         THEN 'dup_in_batch'
-        |       WHEN b.doc_id NOT IN (SELECT doc_id FROM fresh)
-        |         THEN 'dup_of_corpus'
-        |       WHEN b.doc_id IN (SELECT doc_id FROM contaminated)
-        |         THEN 'contaminated'
-        |       ELSE 'admitted' END AS reason
-        |FROM batch b""".stripMargin,
-
-    // q226: positional replay — same block/mask/sentinel arithmetic
-    // over the unnested token stream, strings rebuilt via ordered
-    // string_agg (NULL-skipping on both engines); token-less docs are
-    // excluded on both sides.
-    "q226_span_corruption" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    CASE WHEN length(trim(text)) = 0 THEN []
-        |         ELSE string_split_regex(trim(text), '\s+') END AS ts
-        |  FROM documents),
-        |pos AS (
-        |  SELECT doc_id, ts, unnest(range(len(ts))) AS i
-        |  FROM toks WHERE len(ts) > 0),
-        |mk AS (
-        |  SELECT doc_id, i, ts[i + 1] AS tok, i // 3 AS b,
-        |    ((i // 3) + doc_id) % 7 = 0 AS masked,
-        |    '<extra_id_' ||
-        |      CAST(((i // 3) - (7 - doc_id % 7) % 7) // 7 AS VARCHAR) ||
-        |      '>' AS sent
-        |  FROM pos)
-        |SELECT doc_id,
-        |  CAST(sum(CASE WHEN masked THEN 1 ELSE 0 END) AS BIGINT) AS n_masked,
-        |  coalesce(string_agg(CASE WHEN NOT masked THEN tok
-        |      WHEN i % 3 = 0 THEN sent END, ' ' ORDER BY i), '') AS input_text,
-        |  coalesce(string_agg(CASE WHEN masked AND i % 3 = 0
-        |        THEN sent || ' ' || tok
-        |      WHEN masked THEN tok END, ' ' ORDER BY i), '') AS target_text
-        |FROM mk GROUP BY doc_id""".stripMargin,
-
-    // q225: doc-grain replay of the span arithmetic — cost = token
-    // count + EOS, offsets via the cumulative window (q219's stream
-    // definition), one row per (sequence, doc) interval overlap,
-    // clipped to the complete-sequence count.
-    "q225_shard_doc_spans" ->
-      """WITH ids AS (
-        |  SELECT doc_id,
-        |    len(CASE WHEN length(trim(text)) = 0 THEN []
-        |         ELSE string_split_regex(trim(text), '\s+') END) + 1 AS cost
-        |  FROM documents),
-        |offs AS (
-        |  SELECT doc_id, cost,
-        |    CAST(coalesce(sum(cost) OVER (ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-        |      AS doc_off,
-        |    CAST(sum(cost) OVER () AS BIGINT) AS total
-        |  FROM ids),
-        |sp AS (
-        |  SELECT doc_id, cost, doc_off, total,
-        |    unnest(range(doc_off // 64, (doc_off + cost - 1) // 64 + 1)) AS seq_id
-        |  FROM offs)
-        |SELECT seq_id, doc_id,
-        |  CAST(greatest(0, doc_off - seq_id * 64) AS BIGINT) AS start_off,
-        |  CAST(least(doc_off + cost, (seq_id + 1) * 64)
-        |       - greatest(doc_off, seq_id * 64) AS BIGINT) AS n_tokens
-        |FROM sp WHERE seq_id < total // 64""".stripMargin,
-
-    // q224: the reconstruction must equal version B exactly, so the
-    // oracle aggregates the derived version B directly
-    "q224_cdc_roundtrip" ->
-      """SELECT lang, source, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(n_chars) AS BIGINT) AS chars_total,
-        |  CAST(sum(CAST(('0x' || substr(md5(text), 1, 8)) AS BIGINT)) AS BIGINT)
-        |    AS text_checksum
-        |FROM documents WHERE doc_id % 13 <> 0 GROUP BY 1, 2""".stripMargin,
-
-    // q223: replay the measured append-mode watermark semantics — the
-    // trigger-N late filter uses trigger N-1's watermark, so delivery
-    // 2 (trigger 1, previous wm = -inf) survives whole while delivery
-    // 3 keeps only rows whose hourly window outlives delivery 1's
-    // watermark; emission = window end <= final watermark (global max
-    // ts - 90 min). Window ends are epoch-aligned hour boundaries on
-    // a UTC-session timestamp, identical on both engines.
-    "q223_late_data_audit" ->
-      """WITH ev AS (SELECT event_id, ts, event_type FROM events),
-        |mx AS (SELECT max(ts) AS m FROM ev),
-        |d1 AS (SELECT ev.* FROM ev WHERE event_id % 5 <> 0),
-        |d2 AS (SELECT ev.* FROM ev, mx
-        |       WHERE event_id % 5 = 0 AND ts >= m - INTERVAL 24 HOUR),
-        |d3 AS (SELECT ev.* FROM ev, mx
-        |       WHERE event_id % 5 = 0 AND ts < m - INTERVAL 24 HOUR),
-        |wm1 AS (SELECT max(ts) - INTERVAL 90 MINUTE AS w FROM d1),
-        |wmf AS (SELECT max(ts) - INTERVAL 90 MINUTE AS w FROM ev),
-        |surv AS (
-        |  SELECT ts, event_type FROM d1
-        |  UNION ALL SELECT ts, event_type FROM d2
-        |  UNION ALL SELECT d3.ts, d3.event_type FROM d3, wm1
-        |    WHERE date_trunc('hour', d3.ts) + INTERVAL 1 HOUR > wm1.w),
-        |agg AS (SELECT date_trunc('hour', ts) + INTERVAL 1 HOUR AS wend,
-        |          event_type, count(*) AS n FROM surv GROUP BY 1, 2)
-        |SELECT strftime(agg.wend, '%Y-%m-%d %H:%M:%S') AS hour_end,
-        |  agg.event_type, CAST(agg.n AS BIGINT) AS n_events
-        |FROM agg, wmf WHERE agg.wend <= wmf.w""".stripMargin,
-
-    // q220: q153's int16-LE sample reconstruction, then the single-bin
-    // projection against the SAME micro-scaled twiddle tables the
-    // engine kernel uses — embedded below as literal lists from
-    // DftTables (one build computes both sides; no cross-engine
-    // transcendental). j is the in-window sample index; the partial
-    // final window sums its shorter run of the same table.
-    "q220_pcm_spectral" -> {
-      val cosList = graft.functions.MediaKernels.DftTables
-        .cosMicros(256, 4).mkString("[", ", ", "]")
-      val sinList = graft.functions.MediaKernels.DftTables
-        .sinMicros(256, 4).mkString("[", ", ", "]")
-      s"""WITH m AS (SELECT doc_id, hex(encode(text)) AS h,
-        |             octet_length(encode(text)) // 2 AS n
-        |           FROM documents),
-        |sm AS (SELECT doc_id, i,
-        |         CAST(('0x' || substr(h, 4*i + 3, 2) || substr(h, 4*i + 1, 2))
-        |              AS INTEGER) AS v
-        |       FROM (SELECT doc_id, h, unnest(range(n)) AS i FROM m) t),
-        |sg AS (SELECT doc_id, i // 256 AS win, CAST(i % 256 AS BIGINT) AS j,
-        |         CASE WHEN v >= 32768 THEN v - 65536 ELSE v END AS s
-        |       FROM sm),
-        |ct AS (SELECT $cosList AS c, $sinList AS sn),
-        |w AS (SELECT doc_id, win,
-        |        CAST(sum(CAST(s AS BIGINT) * ct.c[j + 1]) AS BIGINT) AS re_u,
-        |        CAST(-sum(CAST(s AS BIGINT) * ct.sn[j + 1]) AS BIGINT) AS im_u
-        |      FROM sg, ct GROUP BY 1, 2)
-        |SELECT doc_id AS media_id, CAST(count(*) AS BIGINT) AS n_windows,
-        |  CAST(sum(abs(re_u) // 1000) AS BIGINT) AS re_mag_sum,
-        |  CAST(sum(abs(im_u) // 1000) AS BIGINT) AS im_mag_sum,
-        |  CAST(max(abs(re_u) // 1000 + abs(im_u) // 1000) AS BIGINT)
-        |    AS peak_bin_energy
-        |FROM w GROUP BY 1""".stripMargin
-    }
-  )
+  val oracleSql: Map[String, String] =
+    declarations.flatMap(q => q.oracle.map(q.name -> _)).toMap
+
+  /** Query name → the published reference-snapshot file it opens. These
+    * queries read that file as well as (or instead of) the sf dir, so
+    * they can be planned only where the snapshot is present; the
+    * snapshot is not part of the repository. */
+  val ReferenceInputs: Map[String, String] =
+    declarations.flatMap(q => q.reference.map(q.name -> _)).toMap
+
+  /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
+  def entry(spark: SparkSession): DataFrame =
+    queries("q01_pricing_summary")(spark, "/root/testdata/sf0.001")
 }

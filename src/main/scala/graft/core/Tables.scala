@@ -172,8 +172,8 @@ object Tables {
 
   /** Adapt `ts` to a proper TIMESTAMP on the OBSERVED type (the events
     * slice of [[normalize]], kept callable on its own for the streaming
-    * read in `SparkEntry.eventsStream`, which must wrap a `readStream`
-    * DataFrame rather than a path). */
+    * read in `graft.queries.Shared.eventsStream`, which must wrap a
+    * `readStream` DataFrame rather than a path). */
   def normalizeEventsTs(spark: SparkSession, df: DataFrame): DataFrame =
     df.withColumn("ts", adapt("events", "ts", df.schema("ts").dataType, TimestampType))
 

@@ -60,7 +60,7 @@ object MediaKernels {
   /** Micro-scaled DFT twiddle tables, memoized per (window, k). The
     * values are computed ONCE here (StrictMath — bit-identical on any
     * JVM) and the SAME arrays are embedded as literal lists in the
-    * DuckDB oracle SQL ([[graft.SparkEntry]] q220), so the spectral
+    * DuckDB oracle SQL ([[graft.queries.StreamingQueries]] q220), so the spectral
     * feature is exact integer arithmetic end to end with ZERO
     * cross-engine transcendental risk — unlike the ln/log recipes,
     * nothing here depends on two math libraries rounding alike. */

@@ -166,7 +166,7 @@ object LsviForest {
     * whole indicator subtree (the earlier perPlot ⋈ critMean join
     * re-planned the rules/measurement chain twice — no cross-branch
     * exchange reuse in local mode; same rationale as the fixed-point
-    * twin in SparkEntry, applied to the engine's double path;
+    * twin in LsviQueries, applied to the engine's double path;
     * dev-measured q139 3.16s → 2.82s). Dividing Σ by count at the end
     * is bit-identical to Spark's avg aggregate (same partial sums,
     * same final division). */

@@ -2,9 +2,10 @@ package graft.tools
 
 import graft.SparkEntry
 import graft.core.{GraftSession, PlanStats}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.GraftBridge
-import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.{FormattedMode, SQLExecution}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import scala.jdk.CollectionConverters._
@@ -21,8 +22,9 @@ import scala.util.control.NonFatal
   *  - `scans`: `PLANCHECK <q> SCANS=<n> SHUFFLES=<m>`, counted by
   *    `PlanStats`, the code the plan-shape specs pin;
   *  - `jobs`: after one warm run, each Spark job's start offset, wall
-  *    time and call site ("collect at TokenShards.scala:253"); time
-  *    between jobs is driver work (planning, codegen, local collects).
+  *    time and the call site of the SQL execution it runs under
+  *    ("collect at TokenShards.scala:253"); time between jobs is driver
+  *    work (planning, codegen, local collects).
   *
   * With no query named, every query is inspected. A query that fails is
   * reported and the rest still run; the exit code is then 1.
@@ -85,14 +87,30 @@ object Inspect {
     if (failed.nonEmpty) sys.exit(1)
   }
 
-  /** Id, start and end (epoch ms) and call site of every ended job. */
+  /** Id, start and end (epoch ms) and call site of every ended job.
+    * A job is named by the description of the SQL execution it runs
+    * under: that is the call site of the thread that started the
+    * execution, whereas the job's own `callSite.short` names AQE's
+    * thread pool for the jobs AQE launches. Jobs outside any execution
+    * fall back to `callSite.short`. */
   private final class JobLog extends SparkListener {
+    private val executions = new ConcurrentHashMap[Long, String]()
     private val started = new ConcurrentHashMap[Int, (Long, String)]()
     val ended = new ConcurrentLinkedQueue[(Int, Long, Long, String)]()
 
-    override def onJobStart(js: SparkListenerJobStart): Unit =
-      started.put(js.jobId, (js.time, Option(js.properties.getProperty("callSite.short"))
-        .orElse(js.stageInfos.lastOption.map(_.name)).getOrElse("?")))
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case x: SparkListenerSQLExecutionStart => executions.put(x.executionId, x.description)
+      case _ =>
+    }
+
+    override def onJobStart(js: SparkListenerJobStart): Unit = {
+      def prop(k: String) = Option(js.properties).flatMap(p => Option(p.getProperty(k)))
+      val site = prop(SQLExecution.EXECUTION_ID_KEY)
+        .flatMap(id => Option(executions.get(id.toLong)))
+        .orElse(prop("callSite.short"))
+        .orElse(js.stageInfos.lastOption.map(_.name))
+      started.put(js.jobId, (js.time, site.getOrElse("?")))
+    }
 
     override def onJobEnd(je: SparkListenerJobEnd): Unit =
       Option(started.remove(je.jobId)).foreach { case (t0, site) =>

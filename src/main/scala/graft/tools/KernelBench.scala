@@ -61,7 +61,8 @@ object KernelBench {
       .select(col("shard_id").cast("long"), col("gpos0").cast("long"), col("ids"))
       .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt, col("shard_id"))
       .sortWithinPartitions(col("shard_id"), col("gpos0")))
-    val base = java.nio.file.Files.createTempDirectory("graft-kb").toString
+    // reaped at JVM exit with the queries' own temp results
+    val base = graft.queries.Shared.tempResultDir("graft-kb")
     var i = 0
     timeRaw("TokenShards.write (full)") {
       i += 1; graft.io.TokenShards.write(chunks, s"$base/w$i/shards"); ()

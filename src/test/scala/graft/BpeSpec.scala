@@ -175,7 +175,7 @@ class BpeSpec extends SparkSuite {
       tstats.map { case (l, (nt, nc)) => l -> (nt, nc, nt, nc.toDouble / nt) }
     }
     val none = stats(Nil)
-    val six = stats(SparkEntry.bpeFixedMerges)
+    val six = stats(graft.queries.CurationQueries.bpeFixedMerges)
     for (l <- Seq("en", "de")) {
       // no merges -> every char its own token
       assert(none(l)._1 === none(l)._2, s"$l: char-level fertility broken")

@@ -25,6 +25,16 @@ class EntryContractSpec extends AnyFunSuite {
     "q54_ann_ivf",           // iterative k-means coarse quantizer (RecallSpec; exact scores vs q50)
     "q93_sketch_stats")      // HLL/CMS sketches, error-bound (TemporalSketchSpec)
 
+  test("declaration names are unique") {
+    // `queries` and `oracleSql` are maps built from the concatenated
+    // family declarations; a name declared twice would keep one build
+    // and silently drop the other
+    val names = SparkEntry.declarations.map(_.name)
+    val repeated = names.diff(names.distinct)
+    assert(repeated.isEmpty, s"declared more than once: ${repeated.distinct}")
+    assert(names.distinct.size === 231)
+  }
+
   test("every oracleSql key names an implemented query") {
     val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(orphans.isEmpty, s"oracle SQL without a query: $orphans")

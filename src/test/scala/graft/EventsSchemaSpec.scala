@@ -13,7 +13,7 @@ import java.nio.file.{Files, Path}
   * ten events-family queries when the encoding flipped to micros while
   * `Tables.load` still assumed raw nanos. This spec pins schema-adaptive
   * behavior on BOTH encodings, through the batch path (`Tables.load`) and
-  * the streaming path (`SparkEntry.eventsStream` via q37).
+  * the streaming path (`graft.queries.Shared.eventsStream` via q37).
   */
 class EventsSchemaSpec extends SparkSuite {
   import spark.implicits._
