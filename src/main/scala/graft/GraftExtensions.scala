@@ -2,7 +2,8 @@ package graft
 
 import graft.functions.{CosineSimilarity, HyperplaneLsh, MinHashSignature, SimHash64, WinnowFingerprint}
 import graft.geo.{CrsTransform, PointInRing, RingArea, WkbToRing}
-import org.apache.spark.SparkEnv
+import graft.io.LocalFs
+import org.apache.spark.{SparkContext, SparkEnv}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.internal.StaticSQLConf
@@ -16,14 +17,24 @@ import org.apache.spark.sql.SparkSessionExtensions
   * no UDF wrapping, full codegen where the expression provides it.
   *
   * Installed through the config, it also sizes Spark's compiled-class
-  * cache to the engine's working set (see `CodegenCacheMaxEntries`).
+  * cache to the engine's working set (see `CodegenCacheMaxEntries`), and
+  * it installs the fork-free local file system on the SparkContext's
+  * Hadoop conf: `fs.file.impl` = [[graft.io.LocalFs]] and
+  * `fs.AbstractFileSystem.file.impl` = [[graft.io.LocalFsContext]], each
+  * unless the user set it (see `LocalFs.install`). Hadoop caches
+  * `FileSystem` instances JVM-wide, by scheme and user, not by conf: a
+  * JVM that created a `file://` FileSystem before its first session
+  * with these extensions keeps that FileSystem. `FileContext` is not
+  * cached, so its twin takes effect in any case.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     // null on the `withExtensions` path, which runs before any context
-    Option(SparkEnv.get).foreach(_.conf.setIfMissing(
-      StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key,
-      GraftExtensions.CodegenCacheMaxEntries.toString))
+    Option(SparkEnv.get).foreach { env =>
+      env.conf.setIfMissing(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key,
+        GraftExtensions.CodegenCacheMaxEntries.toString)
+      LocalFs.install(SparkContext.getOrCreate().hadoopConfiguration)
+    }
     GraftExtensions.builders.foreach { case (name, builder) =>
       e.injectFunction((new FunctionIdentifier(name),
         new ExpressionInfo("graft", name), builder))

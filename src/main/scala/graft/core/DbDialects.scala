@@ -1,7 +1,5 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 /** Database-dialect dispatch for the fieldwork extracts (SURVEY.md §2.1
   * S1/S2 completeness): the reference picks an ODBC driver and a
   * dialect-specific query text from the database FILE EXTENSION —

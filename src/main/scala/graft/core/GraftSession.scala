@@ -9,7 +9,8 @@ import org.apache.spark.sql.SparkSession
   *  - master `local[n]` and n shuffle partitions, n from
   *    `SPARK_GRAFT_CPUS` (default: the JVM's available processors);
   *  - `spark.sql.extensions=graft.GraftExtensions`: the SQL functions,
-  *    both optimizer rules and the codegen cache size;
+  *    both optimizer rules, the codegen cache size and the local file
+  *    system (`graft.io.LocalFs`);
   *  - a 64 MB broadcast threshold, the UTC session time zone, no UI;
   *  - log level WARN.
   *

@@ -41,7 +41,7 @@ final case class DialectQuerySource(db: String,
   def load(spark: SparkSession): DataFrame = {
     val d = dialect.getOrElse(DbDialects.forDatabaseFile(db))
     val df = JdbcQuerySource(d.jdbcUrl(db), queryFor(d), d.connectionProperties).load(spark)
-    df.toDF(df.columns.map(_.toLowerCase): _*)
+    df.toDF(df.columns.map(_.toLowerCase).toIndexedSeq: _*)
   }
 }
 
@@ -53,7 +53,7 @@ final case class DialectQuerySource(db: String,
 final case class LowercaseSource(inner: Source) extends Source {
   def load(spark: SparkSession): DataFrame = {
     val df = inner.load(spark)
-    df.toDF(df.columns.map(_.toLowerCase): _*)
+    df.toDF(df.columns.map(_.toLowerCase).toIndexedSeq: _*)
   }
 }
 

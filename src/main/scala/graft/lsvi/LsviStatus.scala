@@ -54,7 +54,7 @@ object LsviStatus {
   def latestPerPoint(plotMeta: DataFrame): DataFrame = {
     val payload = struct(
       plotMeta.columns.filterNot(Seq("habitattype", "point_code").contains)
-        .map(col): _*)
+        .map(col).toIndexedSeq: _*)
     plotMeta
       .groupBy("habitattype", "point_code")
       .agg(max_by(payload, struct(col("date"), col("id"))).as("r"))

@@ -1,6 +1,6 @@
 package graft.lsvi
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The REAL LSVI Versie-3 rule content for the FOREST habitat types

@@ -1,7 +1,7 @@
 package graft.ml
 
 import graft.text.Text
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** fastText-style text quality/domain classifier (Joulin et al. 2016,

@@ -273,7 +273,7 @@ object LsviReportJob {
           }
         // the other reporting tables lead with versie/schaal labels
         else df.select(lit(cfg.versie).as("versie") +:
-          lit(cfg.schaal).as("schaal") +: df.columns.map(col): _*))
+          lit(cfg.schaal).as("schaal") +: df.columns.toIndexedSeq.map(col): _*))
     }
 
     labelled.foreach { case (name, df) =>

@@ -284,7 +284,11 @@ object PretrainRelease {
     * shipped shard). The delta ships one copy per doc — the mixture
     * is a property of the initial release; re-weighting happens at
     * training time, not by re-exporting. Returns both drops' verified
-    * stats with a `drop_no` column. */
+    * stats with a `drop_no` column.
+    *
+    * Failure path: drop A's byte verify runs on a second thread and is
+    * awaited only after drop B is written, so a drop-A verify failure
+    * throws with drop B's shards already under `pathB`. */
   def releaseDeltaShards(corpus: DataFrame, batch: DataFrame,
                          bench: DataFrame, pathA: String, pathB: String,
                          minTokens: Int, alphaQuarters: Int, vocab: Int,

@@ -98,7 +98,7 @@ object ReleaseQueries {
         "SELECT r.R_NAME, COUNT(*) AS N_NATIONS, MIN(n.N_NAME) AS FIRST_NATION " +
           "FROM nation n JOIN region r ON n.N_REGIONKEY = r.R_REGIONKEY " +
           "GROUP BY r.R_NAME").load(s)
-      pushed.toDF(pushed.columns.map(_.toLowerCase): _*)
+      pushed.toDF(pushed.columns.map(_.toLowerCase).toIndexedSeq: _*)
         .select(col("r_name"), col("n_nations").cast("long").as("n_nations"),
           col("first_nation"))
     }, Some(

@@ -69,7 +69,7 @@ object Bpe {
         if (r % checkpointEvery == 0) {
           val before = spark.sparkContext.getPersistentRDDs.keySet
           syms = syms.stable() // eager: materializes now
-          val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+          val added = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
           liveCheckpoint.foreach(id =>
             spark.sparkContext.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
           liveCheckpoint = added.headOption

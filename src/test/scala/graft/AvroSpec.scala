@@ -1,7 +1,6 @@
 package graft
 
 import graft.io.Avro
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Avro container interchange (q221): round-trip fidelity, reader-

@@ -1,7 +1,6 @@
 package graft
 
 import graft.similarity.Bitext
-import org.apache.spark.sql.functions._
 
 /** Margin-based bitext mining (q176). The driver gate pins the margin
   * arithmetic hash-exact against DuckDB; this spec pins the MINING

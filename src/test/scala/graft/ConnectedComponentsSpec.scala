@@ -1,7 +1,6 @@
 package graft
 
 import graft.graph.ConnectedComponents
-import org.apache.spark.sql.functions._
 
 class ConnectedComponentsSpec extends SparkSuite {
   import spark.implicits._

@@ -1,7 +1,6 @@
 package graft
 
 import graft.dedup.Dedup
-import org.apache.spark.sql.Row
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 /** Duplicated-substring spans (Lee et al. 2022 substring dedup at

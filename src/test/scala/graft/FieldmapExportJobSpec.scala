@@ -3,7 +3,6 @@ package graft
 import graft.pipelines.FieldmapExportJob
 import graft.pipelines.FieldmapExportJob.Inputs
 import graft.io.Vc
-import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
 /** E1 end-to-end on FIXTURES.md-shaped fixtures: union -> recode ->

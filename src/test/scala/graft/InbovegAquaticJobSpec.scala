@@ -5,7 +5,6 @@ import java.sql.DriverManager
 
 import graft.core.{JdbcTableSource, SourceRegistry}
 import graft.pipelines.InbovegAquaticJob
-import org.apache.spark.sql.functions._
 
 /** The aquatic chain end-to-end against embedded Derby: JDBC extract ->
   * prep -> Versie-3 LSVI verdicts, with hand-computed expectations. */

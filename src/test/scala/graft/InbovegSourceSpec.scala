@@ -4,7 +4,6 @@ import java.nio.file.Files
 import java.sql.DriverManager
 
 import graft.core.{InbovegSource, JdbcTableSource, SourceRegistry}
-import org.apache.spark.sql.functions._
 
 /** S3: the five-extract INBOVEG facade against a real embedded-Derby
   * database — the same JDBC dispatch shape as the production SQL Server

@@ -92,7 +92,7 @@ class IvfPqIndexSpec extends SparkSuite {
         built.state)
       .orderBy("neighbor_id").collect().toSeq
     val got = merged
-      .select(expected.head.schema.fieldNames.map(col): _*)
+      .select(expected.head.schema.fieldNames.toIndexedSeq.map(col): _*)
       .orderBy("neighbor_id").collect().toSeq
     assert(got === expected)
   }

@@ -22,7 +22,6 @@ import org.apache.spark.sql.functions._
   * reference snapshot, so value columns are shape-level).
   */
 class LsviReportJobSpec extends SparkSuite {
-  import spark.implicits._
 
   private val refDir = "/root/reference/processed/lsvi_mhq/forests/result"
   private val moneosGlobaal =

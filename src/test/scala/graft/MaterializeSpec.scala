@@ -11,7 +11,6 @@ import org.apache.spark.sql.functions._
   * an executor loss cannot kill the lineage-truncated frame); rows are
   * identical on every path. */
 class MaterializeSpec extends SparkSuite {
-  import spark.implicits._
 
   private def frame() =
     spark.range(0, 100).select(col("id"), (col("id") * 3).as("y"))

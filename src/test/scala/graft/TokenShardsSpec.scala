@@ -129,6 +129,20 @@ class TokenShardsSpec extends SparkSuite {
       stats.toSeq)
   }
 
+  test("write unwraps the checksummed local FS: no shard .crc sidecars") {
+    val root = new org.apache.hadoop.fs.Path("file:///")
+    assert(root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .isInstanceOf[graft.io.LocalFs])
+    val df = docs.toDF("doc_id", "text")
+    val dir = java.nio.file.Files.createTempDirectory("tokshard-crc").resolve("shards")
+    TokenShards.write(TokenShards.packChunks(df, "doc_id", "text",
+      vocab = Vocab, seqLen = 8, seqsPerShard = 2, nBuckets = 3), dir.toString)
+      .collect()
+    val names = dir.toFile.list().toSeq
+    assert(names.exists(_.endsWith(".bin")), names)
+    assert(!names.exists(_.endsWith(".crc")), names)
+  }
+
   test("write publishes shards from several tasks, bytes unchanged") {
     // a stream far under AQE's 1 MB minimum partition size: a by-column
     // repartition would be coalesced into one writer task

@@ -2,7 +2,6 @@ package graft
 
 import graft.core.PlanStats
 import graft.curation.Unimax
-import org.apache.spark.sql.functions._
 
 /** UniMax allocation (q175). The driver gate pins the window closed
   * form hash-exact against DuckDB; this spec pins it against the

@@ -2,7 +2,6 @@ package graft
 
 import graft.core.Checks
 import graft.io.VcSnapshots
-import org.apache.spark.sql.functions._
 
 class VcSnapshotsSpec extends SparkSuite {
   import spark.implicits._
