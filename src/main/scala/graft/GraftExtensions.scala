@@ -17,15 +17,20 @@ import org.apache.spark.sql.SparkSessionExtensions
   * no UDF wrapping, full codegen where the expression provides it.
   *
   * Installed through the config, it also sizes Spark's compiled-class
-  * cache to the engine's working set (see `CodegenCacheMaxEntries`), and
-  * it installs the fork-free local file system on the SparkContext's
-  * Hadoop conf: `fs.file.impl` = [[graft.io.LocalFs]] and
+  * cache to the engine's working set (see `CodegenCacheMaxEntries`),
+  * keeps broadcast chunks out of G1's humongous regions (see
+  * `BroadcastBlockSize`), and installs the fork-free local file system
+  * on the SparkContext's Hadoop conf: `fs.file.impl` = [[graft.io.LocalFs]] and
   * `fs.AbstractFileSystem.file.impl` = [[graft.io.LocalFsContext]], each
   * unless the user set it (see `LocalFs.install`). Hadoop caches
   * `FileSystem` instances JVM-wide, by scheme and user, not by conf: a
   * JVM that created a `file://` FileSystem before its first session
   * with these extensions keeps that FileSystem. `FileContext` is not
   * cached, so its twin takes effect in any case.
+  *
+  * Optimizer rules: [[graft.rules.JaccardLengthPruning]],
+  * [[graft.rules.SpatialJoinRewrite]] and [[graft.rules.ExactRound]]
+  * (`round(x)` on a double without `BigDecimal`).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
@@ -33,6 +38,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     Option(SparkEnv.get).foreach { env =>
       env.conf.setIfMissing(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key,
         GraftExtensions.CodegenCacheMaxEntries.toString)
+      env.conf.setIfMissing(GraftExtensions.BroadcastBlockSizeKey,
+        GraftExtensions.BroadcastBlockSize)
       LocalFs.install(SparkContext.getOrCreate().hadoopConfiguration)
     }
     GraftExtensions.builders.foreach { case (name, builder) =>
@@ -41,6 +48,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     }
     e.injectOptimizerRule(_ => graft.rules.JaccardLengthPruning)
     e.injectOptimizerRule(_ => graft.rules.SpatialJoinRewrite)
+    e.injectOptimizerRule(_ => graft.rules.ExactRound)
   }
 }
 
@@ -65,6 +73,21 @@ object GraftExtensions {
     * `withExtensions` calls `apply` before any context exists; that path
     * leaves the conf untouched. */
   val CodegenCacheMaxEntries = 4096
+
+  /** Chunk size of a torrent broadcast (`spark.broadcast.blockSize`,
+    * Spark's default 4m). `TorrentBroadcast` allocates one full chunk
+    * per broadcast, each stage's task binary included; at 4 MB every
+    * chunk is a G1 humongous object, and in a profiled benchmark run
+    * these chunks were about half of the allocations of 1 MB or more.
+    * 256 KB is under half of G1's smallest region (1 MB), so no chunk
+    * is humongous; a large broadcast is cut into more chunks instead.
+    *
+    * `apply` sets it on the SparkContext's conf with `setIfMissing`, so
+    * a value the user set wins. `TorrentBroadcast` reads the key from
+    * `SparkEnv.get.conf` on each broadcast, so it takes effect from the
+    * first broadcast after the extensions ran. */
+  val BroadcastBlockSize = "256k"
+  val BroadcastBlockSizeKey = "spark.broadcast.blockSize"
 
   private def intArg(e: Expression, what: String): Int = e match {
     case Literal(v: Int, _) => v

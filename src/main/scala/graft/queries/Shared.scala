@@ -70,7 +70,7 @@ object Shared {
   }
 
   /** round(x*10^s) as bigint — exact fixed-point per-row scaling. */
-  private[queries] def cents(c: Column, scale: Int): Column =
+  private[graft] def cents(c: Column, scale: Int): Column =
     round(c * math.pow(10, scale)).cast("long")
 
   /** Engine-stable 6-decimal rounding for NON-NEGATIVE values:

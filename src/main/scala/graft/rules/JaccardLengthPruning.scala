@@ -69,10 +69,13 @@ object JaccardLengthPruning extends Rule[LogicalPlan] {
     }
   }
 
-  /** round(jaccard, d) with a literal, non-negative integral scale. */
+  /** round(jaccard, d) with a literal, non-negative integral scale;
+    * [[ExactRound]]'s rewrite of `round(jaccard)` is scale 0 (both
+    * rules run in the same fixed-point batch, in either order). */
   private object RoundedJaccard {
     def unapply(e: Expression): Option[(JaccardSimilarity, Int)] = e match {
       case Round(j: JaccardSimilarity, Literal(d: Int, _), _) if d >= 0 => Some((j, d))
+      case RoundHalfUpDouble(j: JaccardSimilarity) => Some((j, 0))
       case _ => None
     }
   }

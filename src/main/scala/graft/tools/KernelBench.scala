@@ -3,12 +3,14 @@ package graft.tools
 import graft.core.GraftSession
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 /** Dev microbench: times individual map-side kernels over the sf
   * documents table with the noop sink (guide §1.4), so a multi-stage
   * query's cost can be attributed to the kernel level — `Inspect jobs`
   * stops at job granularity and the heavy queries run their whole
-  * chain inside one job.
+  * chain inside one job. It also times the exact-cents sum over
+  * lineitem with and without [[graft.rules.ExactRound]].
   *
   *   sbt "runMain graft.tools.KernelBench [sfDir]"
   */
@@ -52,6 +54,16 @@ object KernelBench {
     time("md5MinhashSig(k=8)")(docs.select(
       graft.functions.HashFunctions.md5MinhashSig(
         graft.text.Text.shingles(toks, 3), 8).as("ms")))
+
+    // the exact-cents idiom's round(double): graft.rules.ExactRound's
+    // kernel, then Spark's BigDecimal Round with the rule excluded
+    val lineitem = graft.core.Tables.load(spark, sfDir, "lineitem")
+    def centsSum = lineitem.agg(
+      sum(graft.queries.Shared.cents(col("l_extendedprice"), 2)).as("s"))
+    time("round: sum(cents) ExactRound")(centsSum)
+    spark.conf.set(SQLConf.OPTIMIZER_EXCLUDED_RULES.key, graft.rules.ExactRound.ruleName)
+    time("round: sum(cents) Spark Round")(centsSum)
+    spark.conf.unset(SQLConf.OPTIMIZER_EXCLUDED_RULES.key)
 
     // q219 write-chain decomposition
     def chunks = graft.io.TokenShards.packChunks(docs, "doc_id", "text",

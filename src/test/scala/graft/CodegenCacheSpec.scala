@@ -10,16 +10,18 @@ import org.apache.spark.sql.types.IntegerType
 /** `GraftExtensions` sizes Spark's compiled-class cache to the engine's
   * working set: a config-built session carries the constant, a value
   * set before the extension runs is kept, and a working set larger than
-  * Spark's default of 100 classes is compiled once, not on every pass. */
+  * Spark's default of 100 classes is compiled once, not on every pass.
+  * The torrent broadcast chunk size is set the same way. */
 class CodegenCacheSpec extends SparkSuite {
 
-  private val key = StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key
+  private val cacheKey = StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key
+  private val blockKey = GraftExtensions.BroadcastBlockSizeKey
 
   /** Builds a fresh session over the shared context from config only
     * (the `ConfigInjectionSpec` pattern), with the context's value of
     * `key` set to `preset` while the extension runs, and returns the
     * session's value of `key`. The context's conf is restored after. */
-  private def configBuiltValue(preset: Option[String]): String = {
+  private def configBuiltValue(key: String, preset: Option[String]): String = {
     val base = spark
     val sc = base.sparkContext
     val before = sc.getConf.getOption(key)
@@ -44,12 +46,20 @@ class CodegenCacheSpec extends SparkSuite {
   }
 
   test("a session built from spark.sql.extensions carries the codegen cache size") {
-    assert(configBuiltValue(preset = None) ==
+    assert(configBuiltValue(cacheKey, preset = None) ==
       GraftExtensions.CodegenCacheMaxEntries.toString)
   }
 
   test("a codegen cache size set before the extension runs is kept") {
-    assert(configBuiltValue(preset = Some("512")) == "512")
+    assert(configBuiltValue(cacheKey, preset = Some("512")) == "512")
+  }
+
+  test("a session built from spark.sql.extensions carries the broadcast block size") {
+    assert(configBuiltValue(blockKey, preset = None) == GraftExtensions.BroadcastBlockSize)
+  }
+
+  test("a broadcast block size set before the extension runs is kept") {
+    assert(configBuiltValue(blockKey, preset = Some("1m")) == "1m")
   }
 
   test("a working set above Spark's default 100 classes compiles once") {

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Proves the `spark.sql.extensions=graft.GraftExtensions` deployment
   * path end to end: a session built ONLY from config (no
-  * `withExtensions`) gets the SQL functions and both injected
+  * `withExtensions`) gets the SQL functions and the injected
   * optimizer rules. This is how a cluster job picks up the engine —
   * spark-submit --conf spark.sql.extensions=graft.GraftExtensions —
   * so it must work without any code-side hook. */
@@ -63,6 +63,7 @@ class ConfigInjectionSpec extends SparkSuite {
       assert(ruleNames.exists(_.contains("SpatialJoinRewrite")),
         s"SpatialJoinRewrite missing from optimizer batches")
       assert(ruleNames.exists(_.contains("JaccardLengthPruning")))
+      assert(ruleNames.contains(graft.rules.ExactRound.ruleName))
     } finally {
       // the shared base session stays the active/default one for later suites
       SparkSession.setActiveSession(base)
