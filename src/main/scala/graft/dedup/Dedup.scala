@@ -317,20 +317,13 @@ object Dedup {
     // surviving-fingerprint SETS (the verifyJaccard stance — two
     // id-keyed joins carrying one array each, instead of re-exploding
     // the fingerprint stream per pair)
+    val fpSets = fps.join(rare.select("fp"), Seq("fp"), "left_semi")
+      .groupBy(col("id")).agg(collect_set(col("fp")).as("fpset"))
+      .stable() // consumed by BOTH broadcast legs below (r22)
     val cand = fps.join(rare.select("fp", "rep"), Seq("fp"))
       .where(col("id") =!= col("rep"))
       .select(col("rep").as("id_a"), col("id").as("id_b"))
       .distinct()
-      .stable() // consumed by the id sliver below AND the edges join
-    // fpSets is only ever joined on cand's ids, so restricting it to
-    // them is exact: the collect_set and both broadcasts carry the
-    // near-dup sliver, not the whole corpus
-    val candIds = cand.select(col("id_a").as("id"))
-      .union(cand.select(col("id_b").as("id"))).distinct()
-    val fpSets = fps.join(rare.select("fp"), Seq("fp"), "left_semi")
-      .join(candIds, Seq("id"), "left_semi")
-      .groupBy(col("id")).agg(collect_set(col("fp")).as("fpset"))
-      .stable() // consumed by BOTH broadcast legs below
     // both legs BROADCAST (r22): a shuffle join here moves and sorts
     // rows carrying the fpset arrays (~100+ longs each) — the
     // candidate sliver is broadcast-sized by construction, so ship it

@@ -48,10 +48,10 @@ object Bm25 {
     val nDocs = probe.getLong(0)
     val avgdl = probe.getLong(1).toDouble / nDocs.toDouble
 
-    val queryTerms = queries
+    val qterms = queries
       .select(col(queryIdCol).as("query_id"),
         explode(Text.tokens(col(queryTextCol))).as("term"))
-    val qterms = queryTerms.distinct()
+      .distinct()
 
     val idf = round6(log(
       (lit(nDocs).cast("double") - col("df").cast("double") + lit(0.5))
@@ -62,19 +62,14 @@ object Bm25 {
         lit(1.2) * (lit(1.0) - lit(0.75) +
           lit(0.75) * (col("dl").cast("double") / lit(avgdl)))))
 
-    // dl has one row per DOCUMENT (df_ one per vocabulary term), so it
-    // grows with the corpus: semi-join it to the documents that hold a
-    // query term before broadcasting it, so the query-term sliver never
-    // shuffles by doc_id (the size estimate off the aggregate is too
-    // pessimistic for the planner to pick the broadcast itself).
-    // Both semi-join build sides are broadcast and the query terms are
-    // not deduplicated for them, so the filter adds no exchange.
-    val hitDocs = tf.join(broadcast(queryTerms.select("term")), Seq("term"), "left_semi")
-      .select("doc_id")
-    val dlHit = dl.join(broadcast(hitDocs), Seq("doc_id"), "left_semi")
     tf.join(broadcast(qterms), "term")
       .join(broadcast(df_.withColumn("idf", idf).select("term", "idf")), "term")
-      .join(broadcast(dlHit), "doc_id")
+      // broadcast dl so the query-term sliver never shuffles by doc_id
+      // (r22; the size estimate off the aggregate was too pessimistic
+      // for the planner to pick this up itself). Unlike df_ (one row
+      // per vocabulary term), dl has one row per DOCUMENT, so this
+      // broadcast grows with the corpus.
+      .join(broadcast(dl), "doc_id")
       .withColumn("contrib", contrib)
       .groupBy("query_id", "doc_id")
       .agg(aggregate(
