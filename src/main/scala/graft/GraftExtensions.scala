@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{CosineSimilarity, HyperplaneLsh, MinHashSignature, SimHash64, WinnowFingerprint}
+import graft.functions.{CosineSimilarity, HyperplaneLsh}
 import graft.geo.{CrsTransform, PointInRing, RingArea, WkbToRing}
 import graft.io.LocalFs
 import org.apache.spark.{SparkContext, SparkEnv}
@@ -110,10 +110,6 @@ object GraftExtensions {
 
   private val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "cosine_similarity" -> (es => CosineSimilarity(es(0), es(1))),
-    "simhash64" -> (es => SimHash64(es(0))),
-    "minhash_signature" -> (es => MinHashSignature(es(0), intArg(es(1), "k"))),
-    "winnow_fingerprint" -> (es => WinnowFingerprint(es(0),
-      intArg(es(1), "k"), intArg(es(2), "t"))),
     "hyperplane_lsh" -> (es => HyperplaneLsh(es(0), intArg(es(1), "bits"))),
     "point_in_ring" -> (es => PointInRing(es(0), es(1), es(2))),
     "point_in_rings" -> (es => graft.geo.PointInRings(es(0), es(1), es(2))),

@@ -1,7 +1,7 @@
 package graft.dedup
 
 import graft.core.Materialize.StableOps
-import graft.functions.{HashFunctions, JaccardFunctions, VectorFunctions}
+import graft.functions.{JaccardFunctions, VectorFunctions}
 import graft.text.Text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -63,131 +63,6 @@ object Dedup {
           .otherwise("new").as("status"))
   }
 
-  /** Shared MinHash banding pipeline (the [[hyperplaneBanded]] stance
-    * for token signatures): (id, sig, band, bucket) with band bucket =
-    * hash of the band's slice of the `bands*rowsPerBand`-hash signature
-    * over word `shingleSize`-grams. Callers drop `sig` when they don't
-    * carry it into the verify. */
-  private def minhashBanded(docs: DataFrame, textCol: String, idCol: String,
-                            shingleSize: Int, bands: Int,
-                            rowsPerBand: Int): DataFrame = {
-    val k = bands * rowsPerBand
-    val toks = Text.tokens(col(textCol))
-    val units = if (shingleSize <= 1) toks else Text.shingles(toks, shingleSize)
-    val sigs = docs.select(
-      col(idCol).as("id"),
-      HashFunctions.minhashSignature(units, k).as("sig"))
-    val bandStructs = (0 until bands).map(b =>
-      struct(lit(b).as("band"),
-        hash(slice(col("sig"), b * rowsPerBand + 1, rowsPerBand)).as("bucket")))
-    sigs.select(col("id"), col("sig"), explode(array(bandStructs: _*)).as("bb"))
-      .select(col("id"), col("sig"), col("bb.band"), col("bb.bucket"))
-  }
-
-  /** Candidate pairs from MinHash banding (LSH): docs sharing any band
-    * bucket become a candidate pair (id_a < id_b). */
-  def minhashCandidates(docs: DataFrame, textCol: String, idCol: String,
-                        shingleSize: Int = 3, bands: Int = 8, rowsPerBand: Int = 4): DataFrame = {
-    val banded = minhashBanded(docs, textCol, idCol, shingleSize, bands, rowsPerBand)
-      .select("id", "band", "bucket")
-    val l = banded.as("l")
-    val r = banded.as("r")
-    l.join(r,
-        col("l.band") === col("r.band") && col("l.bucket") === col("r.bucket") &&
-          col("l.id") < col("r.id"))
-      .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
-      .distinct()
-  }
-
-  private def shingleSets(docs: DataFrame, textCol: String, idCol: String,
-                          shingleSize: Int): DataFrame = {
-    val toks = Text.tokens(col(textCol))
-    val units = if (shingleSize <= 1) toks else Text.shingles(toks, shingleSize)
-    docs.select(col(idCol).as("id"), array_distinct(units).as("tokset"))
-  }
-
-  /** Exact shingle-set Jaccard for candidate pairs (id_a, id_b). */
-  def verifyJaccard(candidates: DataFrame, docs: DataFrame, textCol: String,
-                    idCol: String, threshold: Double, shingleSize: Int = 1): DataFrame = {
-    val sets = shingleSets(docs, textCol, idCol, shingleSize)
-    candidates
-      .join(sets.withColumnRenamed("id", "id_a").withColumnRenamed("tokset", "set_a"), Seq("id_a"))
-      .join(sets.withColumnRenamed("id", "id_b").withColumnRenamed("tokset", "set_b"), Seq("id_b"))
-      .withColumn("jaccard",
-        round(JaccardFunctions.jaccardSim(col("set_a"), col("set_b")), 6))
-      .where(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
-  }
-
-  /** MinHash-LSH near-dup pairs: band join for candidates, a cheap
-    * signature-agreement prefilter (the MinHash Jaccard ESTIMATE —
-    * fraction of equal signature components — with a slack margin), and
-    * exact Jaccard verification of the survivors only.
-    *
-    * The prefilter matters on degenerate corpora: band collisions can
-    * overshoot the true near-dup set several-fold, and comparing k
-    * longs is far cheaper than intersecting token sets. Slack of 0.1
-    * keeps the estimator's variance (~1/sqrt(k)) from dropping true
-    * pairs at the boundary. */
-  def minhashNearDups(docs: DataFrame, textCol: String, idCol: String,
-                      threshold: Double, shingleSize: Int = 1,
-                      bands: Int = 2, rowsPerBand: Int = 16): DataFrame = {
-    val banded = minhashBanded(docs, textCol, idCol, shingleSize, bands, rowsPerBand)
-    val l = banded.as("l")
-    val r = banded.as("r")
-    val estimate = HashFunctions.signatureAgreement(col("sig_a"), col("sig_b"))
-    // prefilter BEFORE distinct: the estimate runs on the (slightly
-    // duplicated) join output so the dedup shuffle carries only id
-    // pairs, never the signature arrays
-    val candidates = l.join(r,
-        col("l.band") === col("r.band") && col("l.bucket") === col("r.bucket") &&
-          col("l.id") < col("r.id"))
-      .select(col("l.id").as("id_a"), col("r.id").as("id_b"),
-        col("l.sig").as("sig_a"), col("r.sig").as("sig_b"))
-      .where(estimate >= threshold - 0.1)
-      .select("id_a", "id_b")
-      .distinct()
-    verifyJaccard(candidates, docs, textCol, idCol, threshold, shingleSize)
-  }
-
-  /** MinHash-LSH near-dup clustering with O(n) output: every document is
-    * mapped to a canonical id instead of emitting the pair list (which is
-    * O(n^2) inside a degenerate bucket — a bucket of m near-identical docs
-    * yields m(m-1)/2 pairs but only m mapping rows here).
-    *
-    * Semantics: within each LSH bucket the candidate representative is the
-    * bucket's min id; each doc is exact-Jaccard-verified against that
-    * representative only (m verifications per bucket, not m^2). The
-    * verified doc->representative edges then go through full connected
-    * components on the dup subgraph only ([[canonicalFromEdges]]), so a
-    * doc's canonical id is its cluster's global minimum no matter how
-    * long the A->B->C chain across buckets.
-    *
-    * Output: (idCol, canonical_id) for EVERY input doc; untouched docs map
-    * to themselves. */
-  def minhashCanonicalIds(docs: DataFrame, textCol: String, idCol: String,
-                          threshold: Double, shingleSize: Int = 1,
-                          bands: Int = 2, rowsPerBand: Int = 16): DataFrame = {
-    // the representative's SIGNATURE rides the bucket window (the
-    // embeddingCanonicalIds stance): one payload shuffle partitioned
-    // by bucket, and the signature-agreement prefilter (slack 0.1,
-    // same contract as minhashNearDups) runs map-side right after the
-    // window — the signatures are computed ONCE, never re-joined
-    // (the previous two sigs re-joins recomputed the minhash pass
-    // twice more over the corpus)
-    val banded = minhashBanded(docs, textCol, idCol, shingleSize, bands, rowsPerBand)
-    val byBucket = Window.partitionBy("band", "bucket")
-    val estimate = HashFunctions.signatureAgreement(col("rep.sig"), col("sig"))
-    val edges = banded
-      .withColumn("rep", min(struct(col("id"), col("sig"))).over(byBucket))
-      .where(col("id") =!= col("rep.id"))
-      .where(estimate >= threshold - 0.1)
-      .select(col("rep.id").as("id_a"), col("id").as("id_b"))
-      .distinct()
-    val verified = verifyJaccard(edges, docs, textCol, idCol, threshold, shingleSize)
-    canonicalFromEdges(docs, idCol, verified)
-  }
-
   /** Shared canonical-id assembly from verified duplicate edges
     * (`id_a` = representative, `id_b` = duplicate): one output row per
     * doc, `canonical_id` = the minimum of the doc's connected component
@@ -216,146 +91,6 @@ object Dedup {
         coalesce(col("component"), col("id")).as("canonical_id"))
   }
 
-  /** Shared SimHash banding: (id, sig, band, bucket) over the four
-    * 16-bit bands of the 64-bit signature. */
-  private def simhashBanded(docs: DataFrame, textCol: String,
-                            idCol: String): DataFrame = {
-    val sigs = docs.select(col(idCol).as("id"),
-      HashFunctions.simhash64(Text.tokens(col(textCol))).as("sig"))
-    val bandStructs = (0 until 4).map(b =>
-      struct(lit(b).as("band"),
-        shiftright(col("sig"), b * 16).bitwiseAND(lit(0xFFFFL)).as("bucket")))
-    sigs.select(col("id"), col("sig"), explode(array(bandStructs: _*)).as("bb"))
-      .select(col("id"), col("sig"), col("bb.band"), col("bb.bucket"))
-  }
-
-  /** SimHash near-dup canonical ids — the O(n)-output form of
-    * [[simhashNearDups]] (same stance as [[minhashCanonicalIds]]):
-    * candidate edges run doc -> bucket representative (`min(id)` per
-    * 16-bit band bucket), never all-pairs within a bucket, so a
-    * degenerate corpus cannot explode the edge count; the Hamming
-    * verify then keeps edges <= `maxHamming` apart. Output is one row
-    * per doc; the verified edges resolve through full connected
-    * components like the MinHash form, so cross-bucket chains collapse
-    * to their cluster minimum in one run. */
-  def simhashCanonicalIds(docs: DataFrame, textCol: String, idCol: String,
-                          maxHamming: Int = 3): DataFrame = {
-    val banded = simhashBanded(docs, textCol, idCol)
-    // min(struct(id, sig)) orders lexicographically by field order ->
-    // the bucket representative AND its signature in one window pass
-    val byBucket = Window.partitionBy("band", "bucket")
-    val edges = banded
-      .withColumn("rep", min(struct(col("id"), col("sig"))).over(byBucket))
-      .where(col("id") =!= col("rep.id"))
-      .where(bit_count(col("sig").bitwiseXOR(col("rep.sig"))) <= maxHamming)
-      .select(col("rep.id").as("id_a"), col("id").as("id_b"))
-      .distinct()
-    canonicalFromEdges(docs, idCol, edges)
-  }
-
-  /** Substring-level near-dup pairs via winnowing fingerprints
-    * ([[graft.functions.WinnowFingerprint]]): two documents pair when
-    * they share at least `minShared` fingerprints — i.e. they share
-    * verbatim byte runs, the signal token-set jaccard and simhash both
-    * miss (copied paragraphs inside otherwise-different documents).
-    *
-    * Scale guards: fingerprints occurring in more than `maxDf`
-    * documents are dropped before the self-join (boilerplate headers /
-    * license blocks would otherwise create quadratic buckets — the
-    * standard stop-fingerprint rule), so any bucket joins at most
-    * `maxDf` ids; only (id, fp) pairs ever shuffle, never text. */
-  def winnowNearDups(docs: DataFrame, textCol: String, idCol: String,
-                     k: Int = 16, t: Int = 8, minShared: Int = 2,
-                     maxDf: Int = 50): DataFrame = {
-    // array_distinct dedups intra-doc repeats MAP-SIDE (winnowing only
-    // drops consecutive duplicate picks), so (id, fp) is already
-    // unique after the explode — no corpus-wide distinct shuffle
-    val fps = docs.select(col(idCol).as("id"),
-      explode(array_distinct(graft.functions.HashFunctions
-        .winnowFingerprint(col(textCol), k, t))).as("fp"))
-    val rare = fps.groupBy("fp").agg(count(lit(1)).as("df"))
-      .where(col("df") <= maxDf).select("fp")
-    val pruned = fps.join(rare, Seq("fp"), "left_semi")
-    val l = pruned.as("l")
-    val r = pruned.as("r")
-    l.join(r, col("l.fp") === col("r.fp") && col("l.id") < col("r.id"))
-      .groupBy(col("l.id").as("id_a"), col("r.id").as("id_b"))
-      .agg(count(lit(1)).as("n_shared"))
-      .where(col("n_shared") >= minShared)
-  }
-
-  /** Winnowing canonical ids — the O(n)-output form of
-    * [[winnowNearDups]] (same stance as the MinHash/SimHash canonical
-    * forms): per surviving fingerprint the candidate edge runs
-    * doc -> fingerprint representative (min id), so a boilerplate
-    * bucket contributes O(bucket) edges, never O(bucket²). Each
-    * candidate pair then verifies on its TRUE shared-fingerprint
-    * count — the full |fps(doc) ∩ fps(rep)| over surviving
-    * fingerprints, exactly [[winnowNearDups]]' count for that pair —
-    * not just the fingerprints whose bucket minimum happens to be
-    * this rep (counting only those undercounts and silently missed
-    * pairs the pair form catches). Verified edges resolve through the
-    * shared connected-components closure so chains A~B~C discovered
-    * via different fingerprints collapse to one cluster minimum. */
-  def winnowCanonicalIds(docs: DataFrame, textCol: String, idCol: String,
-                         k: Int = 16, t: Int = 8, minShared: Int = 2,
-                         maxDf: Int = 50): DataFrame = {
-    // array_distinct dedups intra-doc repeats MAP-SIDE — see
-    // [[winnowNearDups]]; the corpus-wide distinct shuffle is gone
-    val fps = docs.select(col(idCol).as("id"),
-      explode(array_distinct(graft.functions.HashFunctions
-        .winnowFingerprint(col(textCol), k, t))).as("fp"))
-    // ONE aggregation yields both the stop-fingerprint df and the
-    // bucket representative — a window over fp would sort the whole
-    // (id, fp) stream per fingerprint; the hash groupBy + hash join
-    // shape keeps everything sort-free (measured 10.8s -> ~1s at sf0.1)
-    val rare = fps.groupBy("fp")
-      .agg(count(lit(1)).as("df"), min(col("id")).as("rep"))
-      .where(col("df") <= maxDf)
-    // candidate doc->rep pairs (O(docs × fps-per-doc), never bucket²),
-    // then the true intersection size per pair via the candidate docs'
-    // surviving-fingerprint SETS (the verifyJaccard stance — two
-    // id-keyed joins carrying one array each, instead of re-exploding
-    // the fingerprint stream per pair)
-    val fpSets = fps.join(rare.select("fp"), Seq("fp"), "left_semi")
-      .groupBy(col("id")).agg(collect_set(col("fp")).as("fpset"))
-      .stable() // consumed by BOTH broadcast legs below (r22)
-    val cand = fps.join(rare.select("fp", "rep"), Seq("fp"))
-      .where(col("id") =!= col("rep"))
-      .select(col("rep").as("id_a"), col("id").as("id_b"))
-      .distinct()
-    // both legs BROADCAST (r22): a shuffle join here moves and sorts
-    // rows carrying the fpset arrays (~100+ longs each) — the
-    // candidate sliver is broadcast-sized by construction, so ship it
-    // once instead of pushing array payloads through two exchanges
-    val edges = cand
-      .join(broadcast(fpSets.select(col("id").as("id_a"), col("fpset").as("set_a"))), Seq("id_a"))
-      .join(broadcast(fpSets.select(col("id").as("id_b"), col("fpset").as("set_b"))), Seq("id_b"))
-      .where(JaccardFunctions.longIntersectCount(col("set_a"), col("set_b"))
-        >= minShared)
-      .select("id_a", "id_b")
-    canonicalFromEdges(docs, idCol, edges)
-  }
-
-  /** SimHash near-dup pairs: 64-bit signature, candidates share one of
-    * four 16-bit bands (guarantees recall for Hamming distance <= 3),
-    * verified by exact Hamming <= maxHamming. */
-  def simhashNearDups(docs: DataFrame, textCol: String, idCol: String,
-                      maxHamming: Int = 3): DataFrame = {
-    val banded = simhashBanded(docs, textCol, idCol)
-    val l = banded.as("l")
-    val r = banded.as("r")
-    l.join(r,
-        col("l.band") === col("r.band") && col("l.bucket") === col("r.bucket") &&
-          col("l.id") < col("r.id"))
-      .select(col("l.id").as("id_a"), col("r.id").as("id_b"),
-        col("l.sig").as("sig_a"), col("r.sig").as("sig_b"))
-      .distinct()
-      .withColumn("hamming", bit_count(col("sig_a").bitwiseXOR(col("sig_b"))))
-      .where(col("hamming") <= maxHamming)
-      .select("id_a", "id_b", "hamming")
-  }
-
   /** Exact n-gram (token-set) Jaccard over blocked pairs: candidate pairs
     * share `blockCols` values (e.g. lang + source) AND a log2 length band —
     * the classic blocking join that keeps the O(n^2) confined to blocks.
@@ -368,9 +103,9 @@ object Dedup {
     * O(n) per (blockCols) group to O(n / #bands), which is what keeps the
     * candidate count near-linear when one source dominates the corpus.
     *
-    * Scale shape mirrors [[minhashNearDups]]: the banded self-join runs on
-    * a slim (id, blockCols, n, band) projection — token sets never enter
-    * the candidate shuffle — and survivors join their sets back by id for
+    * Scale shape: the banded self-join runs on a slim
+    * (id, blockCols, n, band) projection — token sets never enter the
+    * candidate shuffle — and survivors join their sets back by id for
     * exact verification. */
   def blockedJaccardPairs(docs: DataFrame, textCol: String, idCol: String,
                           blockCols: Seq[String], threshold: Double): DataFrame = {
@@ -448,8 +183,8 @@ object Dedup {
   }
 
   /** Embedding near-dup canonical ids — the O(n)-output form of
-    * [[embeddingNearDups]], same stance as [[minhashCanonicalIds]] /
-    * [[simhashCanonicalIds]]: edges run doc -> bucket representative
+    * [[embeddingNearDups]], same stance as [[minhashCanonicalIdsMd5]] /
+    * [[simhashCanonicalIdsMd5]]: edges run doc -> bucket representative
     * (never all-pairs within a bucket), verified by exact cosine.
     * The representative's vector rides the bucket window (one payload
     * shuffle, partitioned by bucket); the corpus itself never
@@ -742,15 +477,13 @@ object Dedup {
   }
 
   // ------------------------------------------------------------------
-  // md5-arithmetic siblings (the q202 technique, round 17): the same
-  // near-dup semantics as the xxhash64 family above, but every hash is
-  // derived from md5 hex digits — the one hash primitive Spark and
-  // DuckDB share bit-for-bit — so each operator replays EXACTLY in
-  // ANSI SQL and graduates from rows-only to full hash-exact oracle
-  // gating. The xxhash64 forms stay as the raw-throughput path (native
-  // codegen kernels, no digest per token); these are the
-  // verification-grade forms, and their banding/shuffle shapes are
-  // identical.
+  // Near-dup signatures (MinHash, SimHash, winnowing) in md5
+  // arithmetic (the q202 technique): every hash is derived from md5
+  // digest bits — the one hash primitive Spark and DuckDB share
+  // bit-for-bit — so each operator replays EXACTLY in ANSI SQL and is
+  // hash-exact oracle-gated. The hot loops are fused codegen kernels
+  // (graft.functions.Md5MinhashSig / Md5SimHash32 / WinnowPicksMd5)
+  // with a thread-local digest and no hex render per unit.
   // ------------------------------------------------------------------
 
   /** 32-bit hash slice `i` of the md5-arithmetic permutation family:
@@ -787,37 +520,21 @@ object Dedup {
     docs.select(col(idCol).as("id"),
       explode(array_distinct(md5UnitExpr(textCol, shingleSize))).as("u"))
 
-  /** Per-doc md5-MinHash signature table: (id, n_u, h0..h{k-1}, sig)
-    * with `sig` the k minima as an array. One digest projection per
-    * md5 group (k/4 digests per unit row), then a single map-side
-    * combined groupBy. */
-  private[graft] def md5Signatures(tok: DataFrame, k: Int): DataFrame = {
-    val tokH = tok.select(
-      col("id") +: (0 until k / 4).map(g =>
-        md5(concat(col("u"), lit(":" + g))).as(s"m$g")): _*)
-    def perm(i: Int) =
-      conv(substring(col(s"m${i / 4}"), 1 + 8 * (i % 4), 8), 16, 10).cast("long")
-    tokH.groupBy(col("id"))
-      .agg(count(lit(1)).as("n_u"),
-        (0 until k).map(i => min(perm(i)).as(s"h$i")): _*)
-      .withColumn("sig", array((0 until k).map(i => col(s"h$i")): _*))
-  }
-
-  /** MinHash-LSH near-dup canonical ids, md5-arithmetic — the
-    * oracle-replayable sibling of [[minhashCanonicalIds]] (same
-    * banding/representative/verify/closure shape, SQL-exact hashes):
-    * band keys concatenate each band's integer minima in permutation
-    * order (a string equi-join key — no engine-private bucket hash),
-    * the bucket representative is the min-id member whose signature
-    * rides the one bucket-partitioned window, the prefilter keeps
-    * edges agreeing on ≥ ceil(k·(tau−0.1)) components, and survivors
-    * verify on exact unit-set Jaccard in integer micros (no floats
-    * anywhere). Verified edges resolve through full connected
+  /** MinHash-LSH near-dup clustering with O(n) output, md5-arithmetic:
+    * every document is mapped to a canonical id instead of emitting the
+    * pair list (which is O(n^2) inside a degenerate bucket — a bucket
+    * of m near-identical docs yields m(m-1)/2 pairs but only m mapping
+    * rows here). Band keys concatenate each band's integer minima in
+    * permutation order (a string equi-join key — no engine-private
+    * bucket hash), the bucket representative is the min-id member
+    * whose signature rides the one bucket-partitioned window, the
+    * prefilter keeps edges agreeing on ≥ ceil(k·(tau−0.1)) components,
+    * and survivors verify on exact unit-set Jaccard in integer micros
+    * (no floats anywhere). Verified edges resolve through full connected
     * components; output is (idCol, canonical_id) for EVERY doc —
     * token-less docs carry no signature and self-map.
     *
-    * Scale shape is [[minhashCanonicalIds]]'s, one step better since
-    * round 18: the corpus collapses to signatures MAP-SIDE via the
+    * Scale shape: the corpus collapses to signatures MAP-SIDE via the
     * fused [[graft.functions.Md5MinhashSig]] kernel (one per-row loop
     * over distinct units, one digest per (unit, md5 group) — no hex
     * render/re-parse, no aggregation shuffle; byte-identical to
@@ -883,7 +600,7 @@ object Dedup {
   }
 
   /** Per-doc 32-bit md5 SimHash: (id, sig) for EVERY doc (token-less
-    * docs get sig 0, mirroring the 64-bit kernel). Bit b of the
+    * docs get sig 0). Bit b of the
     * signature is set when the multiset of token hashes — first 8 hex
     * digits of md5(token) — has more b-bits set than clear.
     *
@@ -903,8 +620,7 @@ object Dedup {
           .md5Simhash32(Text.tokens(col(textCol))), lit(0L))
         .as("sig"))
 
-  /** SimHash near-dup canonical ids, md5-arithmetic — the
-    * oracle-replayable sibling of [[simhashCanonicalIds]]: 32-bit
+  /** SimHash near-dup canonical ids, md5-arithmetic: 32-bit
     * [[simhash32Md5]] signatures banded into four 8-bit buckets
     * (pigeonhole-guaranteed recall for Hamming ≤ 3), candidate edges
     * doc → bucket representative only, Hamming verify via
@@ -966,12 +682,28 @@ object Dedup {
         col("pk.n").as("n"))
   }
 
-  /** Winnowing canonical ids, md5-arithmetic — the oracle-replayable
-    * sibling of [[winnowCanonicalIds]]: fingerprint sets come from
-    * [[winnowSelectedMd5]] (distinct selected hashes per doc), then
-    * the identical stop-fingerprint (`maxDf`) + doc→fingerprint-rep
-    * candidate + true-intersection (`minShared`) verify +
-    * connected-components pipeline. One row per doc. */
+  /** Substring-level near-dup canonical ids via md5 winnowing
+    * fingerprints: two documents link when they share at least
+    * `minShared` fingerprints — i.e. they share verbatim character
+    * runs, the signal token-set jaccard and simhash both miss (copied
+    * paragraphs inside otherwise-different documents). Fingerprint
+    * sets come from [[winnowSelectedMd5]] (distinct selected hashes
+    * per doc); robust winnowing guarantees that a shared substring of
+    * at least t + k - 1 codepoints yields a shared fingerprint.
+    *
+    * Scale guards: fingerprints occurring in more than `maxDf`
+    * documents are dropped (boilerplate headers / license blocks would
+    * otherwise create quadratic buckets — the standard stop-fingerprint
+    * rule), and per surviving fingerprint the candidate edge runs
+    * doc -> fingerprint representative (min id), so a bucket
+    * contributes O(bucket) edges, never O(bucket²). Each candidate
+    * pair then verifies on its TRUE shared-fingerprint count — the
+    * full |fps(doc) ∩ fps(rep)| over surviving fingerprints, not just
+    * the fingerprints whose bucket minimum happens to be this rep
+    * (counting only those undercounts and misses pairs). Verified
+    * edges resolve through the connected-components closure, so
+    * chains A~B~C discovered via different fingerprints collapse to
+    * one cluster minimum. One row per doc. */
   def winnowCanonicalIdsMd5(docs: DataFrame, textCol: String, idCol: String,
                             k: Int = 16, t: Int = 8, minShared: Int = 2,
                             maxDf: Int = 50): DataFrame = {

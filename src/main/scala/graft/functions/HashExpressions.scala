@@ -8,105 +8,15 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Hash kernels for large-scale dedup: SimHash and MinHash signatures,
-  * as native Catalyst expressions (fused per-row loops over the token
-  * array, xxHash64 on the raw UTF-8 bytes — zero string copies, zero
-  * boxing). Both are embarrassingly parallel scans: at 100 TB the
-  * signature pass is map-only and shuffles only (bucket_key, doc_id)
-  * pairs, never the text.
+/** Hash kernels for large-scale dedup and featurization, as native
+  * Catalyst expressions: fused per-row loops over the token array or
+  * text bytes, no string copies, no boxing. The near-dup signatures
+  * (MinHash, SimHash, winnowing) hash with md5 so the DuckDB oracle
+  * replays them bit for bit; each is a map-only scan, so at 100 TB
+  * the signature pass shuffles only (bucket_key, doc_id) pairs, never
+  * the text.
   */
 object HashKernels {
-  /** SimHash64 of a token multiset: per token, xxhash64 of its UTF-8
-    * bytes; bit j of the result is the sign of sum(+1/-1) votes. */
-  def simhash64(tokens: ArrayData): Long = {
-    val counts = new Array[Int](64)
-    val n = tokens.numElements()
-    var t = 0
-    while (t < n) {
-      if (!tokens.isNullAt(t)) {
-        val s = tokens.getUTF8String(t)
-        val h = XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes, 42L)
-        var j = 0
-        while (j < 64) {
-          if (((h >>> j) & 1L) == 1L) counts(j) += 1 else counts(j) -= 1
-          j += 1
-        }
-      }
-      t += 1
-    }
-    var out = 0L
-    var j = 0
-    while (j < 64) { if (counts(j) > 0) out |= (1L << j); j += 1 }
-    out
-  }
-
-  /** MinHash signature: sig(s) = min over tokens of xxhash64(token, seed=s). */
-  def minhash(tokens: ArrayData, k: Int): Array[Long] = {
-    val sig = Array.fill(k)(Long.MaxValue)
-    val n = tokens.numElements()
-    var t = 0
-    while (t < n) {
-      if (!tokens.isNullAt(t)) {
-        val str = tokens.getUTF8String(t)
-        var s = 0
-        while (s < k) {
-          val h = XXH64.hashUnsafeBytes(str.getBaseObject, str.getBaseOffset, str.numBytes, s.toLong)
-          if (h < sig(s)) sig(s) = h
-          s += 1
-        }
-      }
-      t += 1
-    }
-    sig
-  }
-
-  def hamming64(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
-
-  private final val RollBase = 1000003L // odd -> invertible mod 2^64
-
-  /** Winnowing fingerprint ([[WinnowFingerprint]]): k-byte Rabin
-    * rolling hashes (64-bit wraparound polynomial, base 1000003), then
-    * min-of-each-t-window with the rightmost-min tie rule and
-    * consecutive dedup from the original paper. Returns an empty array
-    * for texts shorter than k bytes. */
-  def winnow(text: UTF8String, k: Int, t: Int): ArrayData = {
-    val bytes = text.getBytes
-    val n = bytes.length - k + 1 // number of k-grams
-    if (n <= 0) return new GenericArrayData(Array.empty[Long])
-    // B^(k-1) for the leading-byte removal
-    var pow = 1L
-    var i = 1
-    while (i < k) { pow *= RollBase; i += 1 }
-    val hashes = new Array[Long](n)
-    var h = 0L
-    i = 0
-    while (i < k) { h = h * RollBase + (bytes(i) & 0xFF); i += 1 }
-    hashes(0) = h
-    i = 1
-    while (i < n) {
-      h = (h - (bytes(i - 1) & 0xFF) * pow) * RollBase + (bytes(i + k - 1) & 0xFF)
-      hashes(i) = h
-      i += 1
-    }
-    if (n <= t) { // one window: global min
-      var m = hashes(0)
-      i = 1
-      while (i < n) { if (hashes(i) <= m) m = hashes(i); i += 1 }
-      return new GenericArrayData(Array(m))
-    }
-    val out = new scala.collection.mutable.ArrayBuffer[Long](n / t + 1)
-    var lastPick = -1
-    var w = 0
-    while (w <= n - t) { // window = hashes[w, w+t)
-      var minIdx = w
-      i = w + 1
-      while (i < w + t) { if (hashes(i) <= hashes(minIdx)) minIdx = i; i += 1 }
-      if (minIdx != lastPick) { out += hashes(minIdx); lastPick = minIdx }
-      w += 1
-    }
-    new GenericArrayData(out.toArray)
-  }
-
   /** Histogram of small-int bucket ids: counts(b) = |{i : ids(i)=b}|
     * for b in [0, k). One pass, no boxing; ids outside [0, k) and null
     * elements are ignored (the hashed-bucket producers never emit
@@ -177,10 +87,9 @@ object HashKernels {
   }
 
   /** Robust-winnowing picks over codepoint k-grams with md5 hashes —
-    * the fused kernel behind [[WinnowPicksMd5]] (the oracle-replayable
-    * md5 sibling of [[winnow]]): gram p (0-based) covers codepoints
-    * [p, p+k) of the text, its hash is the first 32 bits of
-    * md5(UTF-8 bytes of the gram) — a codepoint gram's UTF-8 encoding
+    * the fused kernel behind [[WinnowPicksMd5]]: gram p (0-based)
+    * covers codepoints [p, p+k) of the text, its hash is the first 32
+    * bits of md5(UTF-8 bytes of the gram) — a codepoint gram's UTF-8 encoding
     * is the contiguous byte slice between codepoint boundaries, so no
     * substring materializes and the thread-local digest writes into a
     * reused 16-byte buffer (zero allocation per gram beyond the hash
@@ -250,8 +159,7 @@ object HashKernels {
   }
 
   /** 32-bit md5 SimHash of a token multiset — the fused kernel behind
-    * [[Md5SimHash32]] (the oracle-replayable md5 sibling of
-    * [[simhash64]]): per token, the first 32 bits of md5(UTF-8 bytes);
+    * [[Md5SimHash32]]: per token, the first 32 bits of md5(UTF-8 bytes);
     * bit b of the result is set when the multiset has more b-bits set
     * than clear. Byte-identical to the declarative
     * conv(substring(md5(u),1,8),16,10) bit-vote aggregation it
@@ -455,7 +363,6 @@ object HashKernels {
   }
 }
 
-/** simhash64(array<string>) -> bigint. */
 /** sign_bits(array<double>) -> array<bigint> of 32-bit words. */
 case class SignBits(child: Expression) extends UnaryExpression {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
@@ -489,114 +396,6 @@ case class IntCounts(child: Expression, k: Int) extends UnaryExpression {
     defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.intCounts($c, $k)")
 
   override protected def withNewChildInternal(c: Expression): IntCounts =
-    copy(child = c)
-}
-
-case class SimHash64(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "simhash64"
-
-  override def nullSafeEval(v: Any): Any =
-    HashKernels.simhash64(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.simhash64($c)")
-
-  override protected def withNewChildInternal(c: Expression): SimHash64 = copy(child = c)
-}
-
-/** minhash_signature(array<string>, k) -> array<bigint> (k signatures). */
-case class MinHashSignature(child: Expression, k: Int)
-    extends UnaryExpression {
-  require(k > 0 && k <= 512, "minhash k must be in (0, 512]")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "minhash_signature"
-
-  override def nullSafeEval(v: Any): Any =
-    new GenericArrayData(HashKernels.minhash(v.asInstanceOf[ArrayData], k))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
-        s"graft.functions.HashKernels.minhash($c, $k))")
-
-  override protected def withNewChildInternal(c: Expression): MinHashSignature = copy(child = c)
-}
-
-/** Fraction of positions where two bigint signature arrays agree — the
-  * MinHash Jaccard estimator. Fused native loop (the `zip_with` +
-  * `aggregate` HOF formulation evaluates interpreted per element, which
-  * dominates candidate-pair filtering cost). */
-case class SignatureAgreement(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def prettyName: String = "signature_agreement"
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val (l, r) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-    // signatures built with different k are incomparable -> NULL,
-    // never a silent prefix-based estimate
-    if (l.numElements() != r.numElements()) null
-    else SignatureAgreement.agreement(l, r)
-  }
-
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-    nullSafeCodeGen(ctx, ev, (a, b) => s"""
-      if ($a.numElements() != $b.numElements()) {
-        ${ev.isNull} = true;
-      } else {
-        ${ev.value} = graft.functions.SignatureAgreement.agreement($a, $b);
-      }""")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) =
-    copy(left = l, right = r)
-}
-
-object SignatureAgreement {
-  /** Fraction of equal components. Signatures built with different k are
-    * incomparable — the expression wrapper returns NULL for them before
-    * reaching here; direct callers get the same contract loudly instead
-    * of a silent prefix-based estimate. */
-  def agreement(a: ArrayData, b: ArrayData): Double = {
-    require(a.numElements() == b.numElements(),
-      s"incomparable signatures: k=${a.numElements()} vs k=${b.numElements()}")
-    val n = a.numElements()
-    if (n == 0) return 0.0
-    var eq = 0
-    var i = 0
-    while (i < n) { if (a.getLong(i) == b.getLong(i)) eq += 1; i += 1 }
-    eq.toDouble / n
-  }
-
-}
-
-/** winnow_fingerprint(text, k, t) -> array<long>: the winnowing
-  * document fingerprint (Schleimer, Wilkerson, Aiken, SIGMOD 2003 —
-  * the MOSS algorithm): k-byte Rabin rolling hashes over the UTF-8
-  * text, then the minimum hash of every window of t consecutive
-  * hashes, deduplicating consecutive picks. Guarantee: any shared
-  * substring of at least t + k - 1 bytes between two documents yields
-  * at least one shared fingerprint — substring-level dup detection
-  * where token-set measures (jaccard/simhash) see nothing. Map-only;
-  * at 100 TB the fingerprints feed the same banded join as the other
-  * signatures (explode fingerprint -> join on it), text never
-  * shuffles. */
-case class WinnowFingerprint(child: Expression, k: Int, t: Int)
-    extends UnaryExpression {
-  require(k >= 2 && t >= 1, s"need k >= 2, t >= 1; got k=$k t=$t")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "winnow_fingerprint"
-
-  override def nullSafeEval(v: Any): Any =
-    HashKernels.winnow(v.asInstanceOf[UTF8String], k, t)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.winnow($c, $k, $t)")
-
-  override protected def withNewChildInternal(c: Expression): WinnowFingerprint =
     copy(child = c)
 }
 
@@ -788,9 +587,6 @@ case class BloomMightContain(child: Expression, words: Seq[Long], k: Int)
 }
 
 object HashFunctions {
-  def simhash64(tokens: Column): Column =
-    GraftBridge.column(SimHash64(GraftBridge.expression(tokens)))
-
   def wordSpans(tokens: Column, w: Int): Column =
     GraftBridge.column(WordSpans(GraftBridge.expression(tokens), w))
 
@@ -799,9 +595,6 @@ object HashFunctions {
 
   def signBits(vec: Column): Column =
     GraftBridge.column(SignBits(GraftBridge.expression(vec)))
-
-  def winnowFingerprint(text: Column, k: Int, t: Int): Column =
-    GraftBridge.column(WinnowFingerprint(GraftBridge.expression(text), k, t))
 
   def winnowPicksMd5(text: Column, k: Int, t: Int): Column =
     GraftBridge.column(WinnowPicksMd5(GraftBridge.expression(text), k, t))
@@ -817,13 +610,6 @@ object HashFunctions {
 
   def md5BigramBuckets(tokens: Column, k: Int): Column =
     GraftBridge.column(Md5BigramBuckets(GraftBridge.expression(tokens), k))
-
-  def minhashSignature(tokens: Column, k: Int): Column =
-    GraftBridge.column(MinHashSignature(GraftBridge.expression(tokens), k))
-
-  def signatureAgreement(a: Column, b: Column): Column =
-    GraftBridge.column(SignatureAgreement(
-      GraftBridge.expression(a), GraftBridge.expression(b)))
 
   def bloomPositions(s: Column, k: Int, mBits: Int): Column =
     GraftBridge.column(BloomPositions(GraftBridge.expression(s), k, mBits))

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   *   3. quality select   — keep the best `keepFraction` per language
   *                         by the composite quality score
   *                         (percent_rank window, id tiebreak);
-  *   4. (optional)       — near-dup pruning via MinHash-LSH, applied
+  *   4. (optional)       — near-dup pruning via md5 MinHash-LSH, applied
   *                         as an anti-join against the id_b side of
   *                         detected pairs (keeps the lower id).
   *
@@ -57,15 +57,16 @@ object Curation {
   /** Stage 4: additionally drop near-duplicates — every doc whose
     * canonical id differs from its own (i.e. the non-representative
     * members of each near-dup cluster). Uses the O(n) canonical-id
-    * output of the MinHash-LSH path, NOT the O(n^2) pair list: on a
+    * output of the md5 MinHash-LSH path, NOT the O(n^2) pair list: on a
     * degenerate corpus a single cluster of m near-identical docs would
     * otherwise shuffle m(m-1)/2 pairs just to learn "drop m-1 ids".
-    * Not SQL-oracle-expressible (LSH banding); the exact verify inside
-    * minhashCanonicalIds keeps it deterministic. */
+    * `tauMicros` is the Jaccard threshold in 1e-6 fixed point, as in
+    * q45; the exact integer verify inside
+    * [[Dedup.minhashCanonicalIdsMd5]] keeps it deterministic. */
   def withNearDupPruning(docs: DataFrame, curated: DataFrame,
                          textCol: String = "text", idCol: String = "doc_id",
-                         threshold: Double = 0.95): DataFrame = {
-    val canon = Dedup.minhashCanonicalIds(docs, textCol, idCol, threshold)
+                         tauMicros: Long = 950000L): DataFrame = {
+    val canon = Dedup.minhashCanonicalIdsMd5(docs, textCol, idCol, tauMicros)
     val drops = canon.where(col("canonical_id") =!= col(idCol)).select(col(idCol))
     curated.join(drops, Seq(idCol), "left_anti")
   }

@@ -20,9 +20,8 @@ object DedupQueries {
 
     // ---- winnowing canonical ids (md5-arithmetic since round 17 —
     // ORACLE-GATED): the O(n)-output doc->representative form over
-    // md5 robust-winnowing fingerprints; the xxhash64 kernel form
-    // (winnowCanonicalIds) remains the map-side throughput path,
-    // chain collapse pinned by TextAndDedupSpec ----
+    // md5 robust-winnowing fingerprints; chain collapse pinned by
+    // TextAndDedupSpec ----
     Query("q105_winnow_canonical", (s, dir) =>
       graft.dedup.Dedup.winnowCanonicalIdsMd5(t(s, dir, "documents"), "text", "doc_id"),
       // q105: md5 winnowing canonical ids — distinct selected hashes per
@@ -87,9 +86,7 @@ object DedupQueries {
     // scan + a doc_id join to emit both families; with both kernels
     // per-row there is nothing to join (token-less docs: sig 0 via
     // the coalesce contract, null minhash columns via the kernel's
-    // null struct — exactly the old left join's gap rows). The
-    // xxhash64 kernels (simhash64 / minhashSignature) stay the
-    // codegen'd throughput path. ----
+    // null struct — exactly the old left join's gap rows). ----
     Query("q44_docs_signatures", (s, dir) => {
       val d = t(s, dir, "documents")
       d.select(col("doc_id"),
@@ -126,8 +123,7 @@ object DedupQueries {
     // 175,817 pairs at sf0.1 vs 1,692 at sf0.01 — quadratic on this
     // degenerate corpus) while the doc->canonical mapping is O(n). Only
     // clustered docs are emitted; banding stays highly selective
-    // (2 bands x 8 md5 minima) so candidates stay near-linear too. The
-    // xxhash64 form (minhashCanonicalIds) stays the throughput path.
+    // (2 bands x 8 md5 minima) so candidates stay near-linear too.
     Query("q45_minhash_neardups", (s, dir) =>
       Dedup.minhashCanonicalIdsMd5(t(s, dir, "documents"), "text", "doc_id",
           tauMicros = Md5MinhashTauMicros, shingleSize = 1,
@@ -180,8 +176,7 @@ object DedupQueries {
     // ---- SimHash near-dup canonical ids (md5-arithmetic since round
     // 17 — ORACLE-GATED): 32-bit md5 bit planes in four 8-bit bands
     // (pigeonhole recall for Hamming <= 3), O(n) output rows via
-    // bucket-representative edges, like q45; the 64-bit xxhash64 form
-    // (simhashCanonicalIds) stays the throughput path ----
+    // bucket-representative edges, like q45 ----
     Query("q47_simhash_neardups", (s, dir) =>
       Dedup.simhashCanonicalIdsMd5(t(s, dir, "documents"), "text", "doc_id",
         maxHamming = 3),

@@ -95,9 +95,8 @@ object StreamingQueries {
     // SQL-replayable: with the corpus in one micro-batch (id-sorted per
     // bucket), a doc's band verdict is the min id reachable through
     // ≥-agreeMin edges to earlier-id members — a recursive closure the
-    // oracle replays per bucket. The xxhash64 form (bandVerdicts)
-    // remains the codegen'd throughput path, batch-twin-pinned by
-    // DedupStreamSpec. ----
+    // oracle replays per bucket; the batch twin of the streamed replay
+    // is pinned by DedupStreamSpec. ----
     Query("q106_dedup_stream", (s, dir) => {
       val schema = Tables.observedSchema(s, dir, "documents")
       val stream = s.readStream.schema(schema)

@@ -1,13 +1,12 @@
 package graft.streaming
 
-import graft.functions.HashFunctions
 import graft.text.Text
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming near-duplicate detection — the continuous-ingestion form
-  * of `Dedup.minhashCanonicalIds` (SURVEY.md §2.11 L2): every arriving
+  * of `Dedup.minhashCanonicalIdsMd5` (SURVEY.md §2.11 L2): every arriving
   * document is checked against everything seen so far WITHOUT re-scanning
   * the corpus. This is the shape a production pipeline actually runs:
   * the batch dedup bootstraps the corpus once, then ingestion keeps it
@@ -15,8 +14,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * Scale design (what makes this work at 100 TB of accumulated corpus):
   *  - State is keyed by LSH band bucket and holds SIGNATURES ONLY —
-  *    k longs + a canonical id per doc, never text. A doc's state
-  *    footprint is ~`bands × (k+2) × 8` bytes, independent of doc size.
+  *    k md5-slice MinHash minima + a canonical id per doc, never text.
+  *    A doc's state footprint is ~`bands × (k+2) × 8` bytes,
+  *    independent of doc size.
   *  - An arriving doc compares against ONE bucket's members per band
   *    (the same candidates the batch band join would produce), so
   *    per-doc work is O(bucket occupancy), not O(corpus).
@@ -26,8 +26,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *    stop-fingerprint guard, trading recall on pathological keys for
   *    bounded state and latency.
   *
-  * Match semantics mirror the batch path: MinHash estimator agreement
-  * ≥ threshold against a bucket member; the canonical id propagates
+  * Match semantics mirror the batch path: a doc matches a bucket member
+  * when their signatures agree on ≥ ceil(k·(tau−0.1)) components (the
+  * batch prefilter's integer floor); the canonical id propagates
   * (a member stored with canonical=A hands A to its own matches, so
   * A->B->C chains collapse within a bucket); cross-band resolution is
   * min(canonical) per doc, done by [[resolveCanonical]] on the sink.
@@ -44,76 +45,17 @@ object DedupStream {
     * encoder codegen must be able to construct it). */
   final case class BandedSig(bucket: String, id: Long, sig: Array[Long])
 
-  /** Estimator agreement between two equal-k signatures. */
-  private def agreement(a: Array[Long], b: Array[Long]): Double = {
-    var same = 0; var i = 0
-    while (i < a.length) { if (a(i) == b(i)) same += 1; i += 1 }
-    same.toDouble / a.length
-  }
-
-  /** Stateful core: per-bucket arrival-order matching. Emits one
-    * verdict per (doc, band); `resolveCanonical` reduces to one row
-    * per doc. Works identically on a streaming or batch Dataset —
-    * the spec's batch-twin check relies on that. */
-  def bandVerdicts(docs: DataFrame, textCol: String, idCol: String,
-                   threshold: Double, shingleSize: Int = 1,
-                   bands: Int = 2, rowsPerBand: Int = 16,
-                   maxPerBucket: Int = 1000): Dataset[BandVerdict] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val k = bands * rowsPerBand
-    val toks = Text.tokens(col(textCol))
-    val units = if (shingleSize <= 1) toks else Text.shingles(toks, shingleSize)
-    val sigs = docs.select(col(idCol).cast("long").as("id"),
-      HashFunctions.minhashSignature(units, k).as("sig"))
-    val bandStructs = (0 until bands).map(b =>
-      struct(lit(b).as("band"),
-        hash(slice(col("sig"), b * rowsPerBand + 1, rowsPerBand)).as("bucket")))
-    val banded = sigs
-      .select(col("id"), col("sig"), explode(array(bandStructs: _*)).as("bb"))
-      .select(concat_ws(":", col("bb.band"), col("bb.bucket")).as("bucket"),
-        col("id"), col("sig"))
-      .as[BandedSig]
-
-    // estimator slack mirrors Dedup.minhashNearDups: the per-band
-    // signature variance must not drop boundary pairs
-    val tSafe = threshold - 0.1
-
-    banded.groupByKey(_.bucket)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (_: String, rows: Iterator[BandedSig], state: GroupState[List[SigEntry]]) => {
-          var members = state.getOption.getOrElse(Nil)
-          var nMembers = members.size
-          val out = List.newBuilder[BandVerdict]
-          // micro-batch arrival order is not defined across partitions;
-          // sorting by id makes replay deterministic and matches the
-          // batch path's min-id canonical convention
-          rows.toSeq.sortBy(_.id).foreach { row =>
-            val hit = members.iterator
-              .filter(m => agreement(m.sig, row.sig) >= tSafe)
-              .reduceOption((a, b) => if (a.canonical <= b.canonical) a else b)
-            val canonical = hit.map(_.canonical).getOrElse(row.id)
-            out += BandVerdict(row.id, canonical)
-            if (nMembers < maxPerBucket) {
-              members = SigEntry(row.id, canonical, row.sig) :: members
-              nMembers += 1
-            }
-          }
-          state.update(members)
-          out.result().iterator
-        })
-  }
-
   /** Reduce band verdicts to one (id, canonical_id) row per doc —
     * min across bands, batch aggregation on the sink output. */
   def resolveCanonical(verdicts: DataFrame): DataFrame =
     verdicts.groupBy(col("id"))
       .agg(min(col("canonical")).as("canonical_id"))
 
-  /** md5-arithmetic streaming dedup — the oracle-replayable sibling of
-    * [[bandVerdicts]] (the q202 technique; see
-    * [[graft.dedup.Dedup.minhashCanonicalIdsMd5]] for the batch form):
-    * signatures are md5-slice MinHash minima computed PER ROW with
+  /** Stateful core: per-bucket arrival-order matching. Emits one
+    * verdict per (doc, band); [[resolveCanonical]] reduces to one row
+    * per doc. Works identically on a streaming or batch Dataset (the
+    * q202 technique; see [[graft.dedup.Dedup.minhashCanonicalIdsMd5]]
+    * for the batch form): signatures are md5-slice MinHash minima computed PER ROW with
     * array expressions (no pre-state aggregation — Structured
     * Streaming allows one stateful op, and it must be the bucket
     * state), band keys concatenate each band's integer minima, and the
@@ -124,12 +66,10 @@ object DedupStream {
     * insertion-time canonical propagation collapses to exactly that
     * closure when one micro-batch carries the corpus), and
     * [[resolveCanonical]] takes the min across bands. Token-less docs
-    * carry no signature and are dropped — the batch sibling's
-    * contract.
+    * carry no signature and are dropped — the batch form's contract.
     *
-    * State shape is [[bandVerdicts]]'s: k longs + a canonical per
-    * member, `maxPerBucket`-capped buckets, O(bucket) work per
-    * arrival. */
+    * State: k longs + a canonical per member, `maxPerBucket`-capped
+    * buckets, O(bucket) work per arrival. */
   def bandVerdictsMd5(docs: DataFrame, textCol: String, idCol: String,
                       tauMicros: Long = 950000L, shingleSize: Int = 1,
                       k: Int = 16, bands: Int = 2,
@@ -192,6 +132,9 @@ object DedupStream {
           var members = state.getOption.getOrElse(Nil)
           var nMembers = members.size
           val out = List.newBuilder[BandVerdict]
+          // micro-batch arrival order is not defined across partitions;
+          // sorting by id makes replay deterministic and matches the
+          // batch path's min-id canonical convention
           rows.toSeq.sortBy(_.id).foreach { row =>
             val hit = members.iterator
               .filter(m => agreeCount(m.sig, row.sig) >= agreeMin)

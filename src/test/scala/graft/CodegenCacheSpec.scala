@@ -63,7 +63,6 @@ class CodegenCacheSpec extends SparkSuite {
   }
 
   test("a working set above Spark's default 100 classes compiles once") {
-    SparkSession.setActiveSession(spark)
     // one generated class per projection: `input + <literal>` inlines
     // the literal into the source, so each offset is a distinct class
     // (multiples of 7919, which no other suite compiles); 200 is above

@@ -70,7 +70,7 @@ class ConnectedComponentsSpec extends SparkSuite {
       (99L, "totally different content with no overlap at all"))
       .toDF("doc_id", "text")
     val got = graft.dedup.Dedup
-      .minhashCanonicalIds(docs, "text", "doc_id", threshold = 0.9)
+      .minhashCanonicalIdsMd5(docs, "text", "doc_id", tauMicros = 900000L)
       .as[(Long, Long)].collect().toMap
     assert(got === Map(10L -> 10L, 11L -> 10L, 12L -> 10L, 13L -> 10L, 99L -> 99L))
   }

@@ -41,7 +41,7 @@ class CurationSpec extends SparkSuite {
     // ids 1/2 are exact dups -> stage 1 already keeps only 1; simulate a
     // curated set that still contains both to exercise stage 4 directly
     val curated = docs.select(col("doc_id"), col("lang"))
-    val pruned = Curation.withNearDupPruning(docs, curated, threshold = 0.9)
+    val pruned = Curation.withNearDupPruning(docs, curated, tauMicros = 900000L)
       .select("doc_id").as[Long].collect().toSet
     assert(pruned === Set(1L, 9L))
   }

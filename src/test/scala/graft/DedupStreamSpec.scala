@@ -17,16 +17,17 @@ class DedupStreamSpec extends SparkSuite {
   private val batch1 = Seq(
     (1L, "the quick brown fox jumps over the lazy dog again and again"),
     (2L, "an entirely different document about spark physical planning"),
-    (3L, "the quick brown fox jumps over the lazy dog again and AGAIN!"))
+    // near copy of 1 (J = 10/11) that shares an md5 band bucket with it
+    (3L, "the quick brown fox jumps over the lazy dog again and again."))
   private val batch2 = Seq(
     (10L, "the quick brown fox jumps over the lazy dog again and again today"),
     (11L, "yet another unrelated text on parquet row group statistics"))
 
   private def runStream(dir: String): DataFrame = {
     val name = s"dedup_sink_${System.nanoTime()}"
-    val q = DedupStream.bandVerdicts(
+    val q = DedupStream.bandVerdictsMd5(
         spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(dir),
-        "text", "doc_id", threshold = 0.7)
+        "text", "doc_id", tauMicros = 700000L)
       .toDF()
       .writeStream.format("memory").queryName(name).outputMode("append").start()
     q.processAllAvailable(); q.stop()
@@ -56,7 +57,8 @@ class DedupStreamSpec extends SparkSuite {
     val streamed = DedupStream.resolveCanonical(runStream(dir))
       .as[(Long, Long)].collect().toSet
     val batched = DedupStream.resolveCanonical(
-        DedupStream.bandVerdicts(spark.read.parquet(dir), "text", "doc_id", 0.7).toDF())
+        DedupStream.bandVerdictsMd5(spark.read.parquet(dir), "text", "doc_id",
+          tauMicros = 700000L).toDF())
       .as[(Long, Long)].collect().toSet
     assert(streamed === batched)
   }
@@ -92,7 +94,8 @@ class DedupStreamSpec extends SparkSuite {
       (2L, "aaa bbb ccc ddd eee fff ggg hhh"),
       (3L, "aaa bbb ccc ddd eee fff ggg hhh")).toDF("doc_id", "text")
     val resolved = DedupStream.resolveCanonical(
-        DedupStream.bandVerdicts(docs, "text", "doc_id", 0.7, maxPerBucket = 1).toDF())
+        DedupStream.bandVerdictsMd5(docs, "text", "doc_id", tauMicros = 700000L,
+          maxPerBucket = 1).toDF())
       .as[(Long, Long)].collect().toMap
     // docs 2 and 3 both match the single retained member (doc 1), even
     // though doc 2 itself was never absorbed into state

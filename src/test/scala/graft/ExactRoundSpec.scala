@@ -2,7 +2,7 @@ package graft
 
 import graft.functions.JaccardFunctions
 import graft.rules.{ExactRound, JaccardLengthPruning, RoundHalfUpDouble}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, Literal, Round}
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
@@ -86,8 +86,6 @@ class ExactRoundSpec extends SparkSuite {
   private def bits(d: Double): Long = java.lang.Double.doubleToRawLongBits(d)
 
   test("the kernel and its generated code give Spark's round bits on the edge cases and 2M more") {
-    // the session first: the codegen cache is sized on first compile
-    SparkSession.setActiveSession(spark)
     val in = BoundReference(0, DoubleType, nullable = false)
     val spark0 = Round(in, Literal(0))
     val ours = RoundHalfUpDouble(in)

@@ -12,9 +12,9 @@ class ExtensionsSpec extends SparkSuite {
       .as[Double].collect().head
     assert(math.abs(cos - 1.0) < 1e-12)
 
-    val sim = spark.sql("SELECT simhash64(array('a','b','c')) AS s").as[Long].collect().head
+    val sim = spark.sql("SELECT md5_simhash32(array('a','b','c')) AS s").as[Long].collect().head
     val simCol = Seq(Seq("a", "b", "c")).toDF("t")
-      .select(graft.functions.HashFunctions.simhash64(col("t"))).as[Long].collect().head
+      .select(graft.functions.HashFunctions.md5Simhash32(col("t"))).as[Long].collect().head
     assert(sim === simCol)
 
     val area = spark.sql(
@@ -23,7 +23,7 @@ class ExtensionsSpec extends SparkSuite {
       .as[Double].collect().head
     assert(area === 16.0)
 
-    val mh = spark.sql("SELECT minhash_signature(array('a','b'), 4) AS m")
+    val mh = spark.sql("SELECT md5_minhash_sig(array('a','b'), 4).sig AS m")
       .as[Seq[Long]].collect().head
     assert(mh.length === 4)
 
@@ -118,9 +118,9 @@ class ExtensionsSpec extends SparkSuite {
     assert(err.getMessage.toLowerCase.contains("binary"))
   }
 
-  test("non-literal k for minhash_signature is rejected with a clear error") {
+  test("non-literal k for md5_minhash_sig is rejected with a clear error") {
     val e = intercept[Exception] {
-      spark.sql("SELECT minhash_signature(array('a'), CAST(rand()*4 AS INT))").collect()
+      spark.sql("SELECT md5_minhash_sig(array('a'), CAST(rand()*4 AS INT))").collect()
     }
     assert(e.getMessage.toLowerCase.contains("literal"))
   }

@@ -2,6 +2,7 @@ package graft
 
 import graft.core.GraftSession
 import org.apache.spark.sql.SparkSession
+import org.scalatest.Outcome
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM-wide session; suites run
@@ -18,6 +19,16 @@ object SparkTestBase {
 
 abstract class SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.spark
+
+  /** Each test runs with the shared session active. Spark sizes its
+    * compiled-class cache once per JVM, from the active session's conf
+    * at the first compile; with the session active, a test that
+    * generates code before any query still gets the size
+    * `GraftExtensions` sets, whatever order the suites run in. */
+  override def withFixture(test: NoArgTest): Outcome = {
+    SparkSession.setActiveSession(spark)
+    super.withFixture(test)
+  }
 
   /** Cancels the calling test, naming the first absent path, unless
     * every path exists. For tests whose input or expected values are

@@ -1,7 +1,7 @@
 package graft
 
 import graft.dedup.Dedup
-import graft.functions.{HashFunctions, HashKernels, VectorFunctions}
+import graft.functions.{HashFunctions, VectorFunctions}
 import graft.similarity.Ann
 import graft.text.Text
 import org.apache.spark.sql.functions._
@@ -23,24 +23,6 @@ class TextAndDedupSpec extends SparkSuite {
     val short = Seq("a b").toDF("t")
       .select(Text.shingles(Text.tokens(col("t")), 3)).as[Seq[String]].collect().head
     assert(short === Seq("a b"))
-  }
-
-  test("signature_agreement: mismatched k is NULL via the expression and loud via the static helper") {
-    // expression path: different-length signatures are incomparable -> NULL
-    val df = Seq((Seq(1L, 2L, 3L), Seq(1L, 2L)), (Seq(1L, 2L), Seq(1L, 9L)))
-      .toDF("a", "b")
-      .select(HashFunctions.signatureAgreement(col("a"), col("b")).as("agr"))
-    val got = df.collect().map(r => if (r.isNullAt(0)) None else Some(r.getDouble(0)))
-    assert(got.toSeq === Seq(None, Some(0.5)))
-    // static helper called directly (the non-Catalyst entry point) must
-    // throw, never fall back to a silent prefix-based estimate
-    def arr(xs: Long*) =
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(xs.toArray)
-    val err = intercept[IllegalArgumentException] {
-      graft.functions.SignatureAgreement.agreement(arr(1L, 2L, 3L), arr(1L, 2L))
-    }
-    assert(err.getMessage.contains("incomparable signatures"))
-    assert(graft.functions.SignatureAgreement.agreement(arr(1L, 2L), arr(1L, 2L)) === 1.0)
   }
 
   test("fingerprint is whitespace/case-insensitive canonical MD5") {
@@ -124,52 +106,6 @@ class TextAndDedupSpec extends SparkSuite {
     assert(again.forall(_ == "dup_of_base"))
   }
 
-  test("minhash LSH finds identical docs as candidates and verifies jaccard=1") {
-    val docs = Seq(
-      (1L, "spark makes big data small again for everyone today"),
-      (2L, "spark makes big data small again for everyone today"),
-      (3L, "an entirely unrelated document about cooking pasta")).toDF("doc_id", "text")
-    val pairs = Dedup.minhashNearDups(docs, "text", "doc_id", threshold = 0.9)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    assert(pairs === Set((1L, 2L)))
-  }
-
-  test("minhashCanonicalIds groups a 3-doc dup cluster identically to the pair list") {
-    val docs = Seq(
-      (1L, "spark makes big data small again for everyone today"),
-      (2L, "spark makes big data small again for everyone today"),
-      (5L, "spark makes big data small again for everyone today"),
-      (3L, "an entirely unrelated document about cooking pasta")).toDF("doc_id", "text")
-    val pairs = Dedup.minhashNearDups(docs, "text", "doc_id", threshold = 0.9)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    assert(pairs === Set((1L, 2L), (1L, 5L), (2L, 5L)))
-    // canonical grouping must be the same partition: {1,2,5} -> 1, {3} -> 3
-    val canon = Dedup.minhashCanonicalIds(docs, "text", "doc_id", threshold = 0.9)
-      .as[(Long, Long)].collect().toMap
-    assert(canon === Map(1L -> 1L, 2L -> 1L, 5L -> 1L, 3L -> 3L))
-    // and the mapping is one row per doc — O(n), never the O(n^2) pair list
-    assert(canon.size === 4)
-  }
-
-  test("simhashCanonicalIds groups near-dups like the pair list, O(n) rows") {
-    val docs = Seq(
-      (1L, "a b c d e f g h i j"),
-      (2L, "a b c d e f g h i j"),   // identical -> hamming 0
-      (4L, "a b c d e f g h i k"),   // near -> small hamming
-      (9L, "totally different words entirely unrelated content here"))
-      .toDF("doc_id", "text")
-    val pairs = Dedup.simhashNearDups(docs, "text", "doc_id", maxHamming = 20)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    assert(pairs.contains((1L, 2L)))
-    val canon = Dedup.simhashCanonicalIds(docs, "text", "doc_id", maxHamming = 20)
-      .as[(Long, Long)].collect().toMap
-    assert(canon.size === 4)                     // one row per doc
-    assert(canon(1L) === 1L && canon(2L) === 1L) // dup cluster -> min id
-    assert(canon(9L) === 9L)                     // singleton maps to itself
-    // every pair-list edge from the representative is honored
-    assert(pairs.filter(_._1 == 1L).forall { case (_, b) => canon(b) === 1L })
-  }
-
   test("winnow fingerprint: determinism, the shared-substring guarantee, edge cases") {
     val k = 8; val t = 4
     val copied = "the quick brown fox jumps over the lazy dog near the river bank"
@@ -177,24 +113,27 @@ class TextAndDedupSpec extends SparkSuite {
     val docB = s"completely different opening words here!! $copied ZZZZ trailing"
     val df = Seq((1L, docA), (2L, docB), (3L, docA), (4L, "tiny"), (5L, "nothing alike at all qqq"))
       .toDF("doc_id", "text")
-      .select(col("doc_id"),
-        HashFunctions.winnowFingerprint(col("text"), k, t).as("fp"))
-    val fp = df.as[(Long, Seq[Long])].collect().toMap
+    def hashes(picks: Seq[org.apache.spark.sql.Row]): Set[Long] =
+      picks.map(_.getAs[Long]("h")).toSet
+    val fp = df.select(col("doc_id"),
+        HashFunctions.winnowPicksMd5(col("text"), k, t).as("fp"))
+      .collect().map(r => r.getLong(0) -> hashes(r.getSeq[org.apache.spark.sql.Row](1)))
+      .toMap
     assert(fp(1L) === fp(3L))                    // identical docs, identical prints
-    assert(fp(4L).isEmpty)                       // shorter than k bytes
-    // winnowing guarantee: a shared substring of >= t + k - 1 bytes
-    // (here ~60) must yield at least one shared fingerprint
-    assert((fp(1L).toSet & fp(2L).toSet).nonEmpty)
-    assert((fp(5L).toSet & fp(1L).toSet).isEmpty) // disjoint text, no prints shared
+    assert(fp(4L).isEmpty)                       // shorter than k codepoints
+    // winnowing guarantee: a shared substring of >= t + k - 1
+    // codepoints (here ~60) must yield at least one shared fingerprint
+    assert((fp(1L) & fp(2L)).nonEmpty)
+    assert((fp(5L) & fp(1L)).isEmpty) // disjoint text, no prints shared
     // the installed SQL surface agrees with the Column API
     Seq((1L, docA)).toDF("doc_id", "text").createOrReplaceTempView("winnow_t")
     val viaSql = spark.sql(
-      s"SELECT winnow_fingerprint(text, $k, $t) AS fp FROM winnow_t")
-      .as[Seq[Long]].head()
-    assert(viaSql === fp(1L))
+      s"SELECT winnow_picks_md5(text, $k, $t) AS fp FROM winnow_t")
+      .head().getSeq[org.apache.spark.sql.Row](0)
+    assert(hashes(viaSql) === fp(1L))
   }
 
-  test("winnowNearDups finds copied paragraphs; stop-fingerprints bounded") {
+  test("winnowCanonicalIdsMd5 links copied paragraphs; stop-fingerprints bounded") {
     val para = "it was the best of times it was the worst of times " * 3
     val boiler = "standard license header all documents carry verbatim. "
     val docs = Seq(
@@ -203,15 +142,18 @@ class TextAndDedupSpec extends SparkSuite {
       (3L, s"$boiler nothing copied here at all, just original prose qq"),
       (4L, s"$boiler another fully original document zz ww yy xx vv"))
       .toDF("doc_id", "text")
+    def canon(maxDf: Int) = Dedup.winnowCanonicalIdsMd5(docs, "text", "doc_id",
+        k = 8, t = 4, minShared = 2, maxDf = maxDf)
+      .as[(Long, Long)].collect().toMap
     // maxDf=2: the boilerplate prefix (in all 4 docs) is dropped as a
-    // stop-fingerprint, so only the copied paragraph can pair docs
-    val pairs = Dedup.winnowNearDups(docs, "text", "doc_id",
-        k = 8, t = 4, minShared = 2, maxDf = 2)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    assert(pairs === Set((1L, 2L)))
+    // stop-fingerprint, so only the copied paragraph can link docs
+    assert(canon(2) === Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 4L))
+    // the bound is what keeps 3 and 4 apart: with it lifted, the
+    // shared boilerplate links every doc
+    assert(canon(4).values.toSet === Set(1L))
   }
 
-  test("winnowCanonicalIds: one row per doc, A~B~C chains collapse across buckets") {
+  test("winnowCanonicalIdsMd5: one row per doc, A~B~C chains collapse across buckets") {
     val paraX = "it was the best of times it was the worst of times " * 3
     val paraY = "call me ishmael some years ago never mind how long precisely " * 3
     val docs = Seq(
@@ -223,7 +165,7 @@ class TextAndDedupSpec extends SparkSuite {
     // 1~2 share paraX fingerprints, 2~3 share paraY: the component
     // {1,2,3} must collapse to min id 1 even though no fingerprint
     // links 1 and 3 directly
-    val canon = Dedup.winnowCanonicalIds(docs, "text", "doc_id",
+    val canon = Dedup.winnowCanonicalIdsMd5(docs, "text", "doc_id",
         k = 8, t = 4, minShared = 2, maxDf = 3)
       .as[(Long, Long)].collect().toMap
     assert(canon.size === 4)
@@ -231,22 +173,31 @@ class TextAndDedupSpec extends SparkSuite {
     assert(canon(4L) === 4L)
   }
 
-  test("winnowCanonicalIds counts the TRUE pair intersection, not per-rep splits") {
-    // doc 1 owns only region S2, so S2's fingerprint rep is 1 while
-    // S1's rep is 2 — docs 2 and 3 share BOTH regions, but their
-    // shared fingerprints split across reps 1 and 2. The per-rep
-    // grouping undercounted (each rep saw < minShared) and silently
-    // missed the 2~3 pair the pair form finds; the intersection count
-    // per candidate pair must link them.
-    val s1 = "quaint harbor lanterns glow " * 3  // long: many shared fps
-    val s2 = "mossy cellar doorway oak"          // barely >= t+k-1 = 23 bytes
+  test("winnowCanonicalIdsMd5 counts the TRUE pair intersection, not per-rep splits") {
+    // doc 1 shares only region S2 with docs 2 and 3, so S2's
+    // fingerprint rep is 1 while S1's rep is 2 — docs 2 and 3 share
+    // BOTH regions, but their shared fingerprints split across reps 1
+    // and 2. A per-rep count sees fewer than minShared on each side
+    // and misses the 2~3 pair; the intersection count per candidate
+    // pair must link them.
+    val s1 = "quaint harbor lanterns glow " * 3
+    val s2 = "mossy cellar doorway oak"
     val docs = Seq(
       (1L, s"solo prologue. $s2"),
       (2L, s"$s1 midline. $s2"),
       (3L, s"$s1 midline. $s2 epilogue"))
       .toDF("doc_id", "text")
-    val canon = Dedup.winnowCanonicalIds(docs, "text", "doc_id",
-        k = 16, t = 8, minShared = 4, maxDf = 3)
+    val minShared = 11
+    // the fixture must split: |F2 ∩ F3| reaches minShared, the part
+    // whose rep is 2 (the fingerprints doc 1 lacks) does not
+    val fps = Dedup.winnowSelectedMd5(docs, "text", "doc_id", k = 16, t = 8)
+      .select("id", "h").as[(Long, Long)].collect()
+      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+    val shared = fps(2L) & fps(3L)
+    assert(shared.size >= minShared && (shared -- fps(1L)).size < minShared,
+      s"fixture no longer splits: ${shared.size} shared, ${(shared -- fps(1L)).size} with rep 2")
+    val canon = Dedup.winnowCanonicalIdsMd5(docs, "text", "doc_id",
+        k = 16, t = 8, minShared = minShared, maxDf = 3)
       .as[(Long, Long)].collect().toMap
     assert(canon(2L) === canon(3L), s"2~3 must link: $canon")
     assert(canon(2L) === 2L, s"cluster minimum is 2: $canon")
@@ -276,30 +227,6 @@ class TextAndDedupSpec extends SparkSuite {
     val got = Dedup.blockedJaccardPairs(docs, "text", "doc_id",
       Seq("lang", "source"), 0.5).as[(Long, Long, Double)].collect()
     assert(got.toSeq === Seq((2L, 1L, 0.6)) || got.toSeq === Seq((1L, 2L, 0.6)))
-  }
-
-  test("simhash: identical token sets -> identical signature; near sets -> small hamming") {
-    val df = Seq(
-      (1L, "a b c d e f g h i j"),
-      (2L, "a b c d e f g h i j"),
-      (3L, "a b c d e f g h i k")).toDF("doc_id", "text")
-    val sigs = df.select(col("doc_id"),
-      HashFunctions.simhash64(Text.tokens(col("text"))).as("sig"))
-      .as[(Long, Long)].collect().toMap
-    assert(sigs(1L) === sigs(2L))
-    assert(HashKernels.hamming64(sigs(1L), sigs(3L)) < 20)
-  }
-
-  test("signatureAgreement: fraction of equal components; null on length mismatch") {
-    val df = Seq(
-      (1L, Seq(1L, 2L, 3L, 4L), Seq(1L, 9L, 3L, 4L)), // 3/4 agree
-      (2L, Seq(1L, 2L), Seq(1L, 2L, 3L))              // different k -> null
-    ).toDF("id", "a", "b")
-    val got = df.select(col("id"),
-        HashFunctions.signatureAgreement(col("a"), col("b")).as("agree"))
-      .as[(Long, Option[Double])].collect().toMap
-    assert(got(1L) === Some(0.75))
-    assert(got(2L) === None)
   }
 
   test("blockedJaccardPairs computes exact set jaccard within blocks") {
