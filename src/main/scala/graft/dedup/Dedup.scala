@@ -512,6 +512,17 @@ object Dedup {
     if (shingleSize <= 1) toks else Text.shingles(toks, shingleSize)
   }
 
+  /** The `bands` LSH band keys of a k-long md5 MinHash signature:
+    * `"b|sig[b·r]|…|sig[(b+1)·r − 1]"` for r = k / bands — shared by
+    * the batch band window and the streaming bucket state. */
+  private[graft] def md5BandKeys(sig: Column, k: Int, bands: Int): Column = {
+    val r = k / bands
+    array((0 until bands).map { b =>
+      concat_ws("|",
+        lit(b.toString) +: (b * r until (b + 1) * r).map(i => sig.getItem(i)): _*)
+    }: _*)
+  }
+
   /** (id, u) distinct shingle/token units of each doc — empty-token
     * docs vanish here, which is the md5 family's documented contract
     * (an empty doc has no signature and can near-dup nothing). */
@@ -547,7 +558,6 @@ object Dedup {
                              k: Int = 16, bands: Int = 2): DataFrame = {
     require(k % 4 == 0 && k % bands == 0,
       s"k=$k must split into 32-bit md5 slices and bands=$bands")
-    val r = k / bands
     val agreeMin = md5AgreeMin(k, tauMicros)
     val sig = docs
       .select(col(idCol).as("id"),
@@ -555,13 +565,8 @@ object Dedup {
           .md5MinhashSig(md5UnitExpr(textCol, shingleSize), k).as("ms"))
       .where(col("ms").isNotNull) // unit-less docs carry no signature
       .select(col("id"), col("ms.n_u").as("n_u"), col("ms.sig").as("sig"))
-    val bandCols = (0 until bands).map { b =>
-      concat_ws("|",
-        lit(b.toString) +: (b * r until (b + 1) * r)
-          .map(i => col("sig").getItem(i)): _*)
-    }
     val banded = sig.select(col("id"), col("n_u"), col("sig"),
-      explode(array(bandCols: _*)).as("band"))
+      explode(md5BandKeys(col("sig"), k, bands)).as("band"))
     val byBand = Window.partitionBy("band")
     val agree = aggregate(
       zip_with(col("rep.sig"), col("sig"),

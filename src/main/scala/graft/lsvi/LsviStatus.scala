@@ -34,9 +34,14 @@ import org.apache.spark.sql.functions._
   *     9120: (5.23263-3.48842)^2/8.72105 -> p=0.554769; streams:
   *     0.876836 -> p=0.34907).
   *
-  * The oracle-backed queries (q113-q115) use the CLOSED-FORM z-based
-  * intervals below (Wilson score; normal mean interval) so every
-  * column replays exactly in DuckDB; the reference-style Student-t
+  * Each statistic is ONE function with an optional design weight
+  * column: without one it is the equal-weight estimator (the
+  * oracle-backed q113-q129), with one the Hájek/Kish design-weighted
+  * estimator (q130-q141) — one row builder, and an aggregate and
+  * interval tail per estimator (see "one row builder, two tails"
+  * below). The intervals are CLOSED-FORM and z-based (Wilson score;
+  * normal mean interval) so every column replays exactly in DuckDB;
+  * the reference-style Student-t
   * variants ([[logitTCi]], [[meanTCi]], [[mcNemarP]]) are the engine's
   * driver-side reporting functions, spec-validated against the
   * published tables. All plot-level aggregation is distributed (two
@@ -61,19 +66,141 @@ object LsviStatus {
       .select(Seq(col("habitattype"), col("point_code"), col("r.*")): _*)
   }
 
-  /** Wilson score interval on [0, 100], z-based, with the reference's
-    * degenerate rendering at p in {0, 1} (the published tables show
-    * (100, 100) / (0, 0) there). Closed form — replays in DuckDB. */
-  private def wilson(k: Column, n: Column): (Column, Column) = {
-    val p = k.cast("double") / n.cast("double")
+  // ---- one row builder, two tails ----------------------------------------
+  //
+  // Every statistic below is ONE function with an optional design
+  // weight column (`weightCol`). Its selection (latest visit per point,
+  // or the first/last pairing), cycle pivot and stratum rows are built
+  // once and carry the weight as column `w`; only the aggregate and the
+  // interval tail depend on whether a weight is given, because the two
+  // tails are different published estimators:
+  //
+  //   - no weight: the equal-weight shapes the oracle-backed queries
+  //     q113-q129 replay — counts, and means in 1e-6 (index) or 1e-4
+  //     (continuous) fixed point, whose integer sums are bit-identical
+  //     under any aggregation order;
+  //   - a weight: the published pooled "Binnen & Buiten" rows carry
+  //     survey-design weights drawn in the reference's analysis repo.
+  //     The weighted tail computes Hájek-ratio estimates with
+  //     design-effect-adjusted intervals (q130-q141):
+  //
+  //       share / mean:  Σw·x / Σw
+  //       n_eff        = (Σw)² / Σw²        (Kish effective sample size)
+  //       every count X in a closed-form interval becomes its effective
+  //       count n_eff · (Σw·1[X] / Σw) — with unit weights that is X
+  //       itself, so each weighted formula reduces to the unweighted
+  //       algebra (not bit for bit: the weighted sums are doubles).
+  //
+  // The proportion estimators ([[statusHabitat]], [[statusIndicatoren]])
+  // have the weighted tail only: at w = 1, Σw and Σw·1[g] are the exact
+  // counts and n_eff = n·n/n is exactly n (n² < 2^53), so their shares
+  // and Wilson bounds are the plain proportion's operation for operation.
+  //
+  // Validation against the snapshot (WeightedStatusSpec): one weight
+  // ratio per (habitattype × SAC) stratum solved from the pooled
+  // `status_habitat_fs` row reproduces the published design-weighted
+  // pooled rows of BOTH `index_hq_fs.tsv` (≤1e-4 on all 6 types) and
+  // `status_indicatoren_fs.tsv` (≤0.02pp on every single-subtype
+  // pooled row) — i.e. the reference's weights are uniform within
+  // forest strata and its pooled estimator is this Σw·x/Σw. The
+  // weighted sums are plain doubles (one hash aggregation like the
+  // unweighted path); the oracle parity of the weighted queries relies
+  // on binary-fraction weights and values keeping every distributed
+  // sum exact (order-independent), as PLANS.md documents for the
+  // fixed-point chains.
+
+  /** A plot's SBZH stratum: Binnen inside the SAC, Buiten outside. */
+  private val stratum: Column =
+    when(col("in_sac") === 1, "Binnen").otherwise("Buiten")
+
+  /** The reporting strata of the mean and trend shapes. */
+  private val strataKeys = Seq("type_resultaat", "habitattype", "sbzh")
+
+  /** The indicator grain below a habitattype. */
+  private val indicatorKeys = Seq("criterium", "indicator", "belang")
+
+  /** `w` when a design weight is given: the name the row builders carry. */
+  private def wCol(weightCol: Option[String]): Seq[String] =
+    weightCol.map(_ => "w").toSeq
+
+  /** The design weight as column `w`, when one is given. */
+  private def weightOf(weightCol: Option[String]): Seq[Column] =
+    weightCol.map(c => col(c).cast("double").as("w")).toSeq
+
+  /** The latest visit's design weight (arg-max by `key`) as `w`. */
+  private def latestWeight(weightCol: Option[String], key: Column): Seq[Column] =
+    weightCol.map(c => max_by(col(c).cast("double"), key).as("w")).toSeq
+
+  /** The value a mean estimator aggregates: 1e-6 fixed point for the
+    * unweighted tail's integer sums, the raw double for the weighted
+    * one (fractional weights make integer accumulation impossible, so
+    * exact-replay fixtures feed binary-fraction values). */
+  private def meanValue(x: Column, weightCol: Option[String]): Column =
+    if (weightCol.isEmpty) floor(x * 1e6 + 0.5).cast("long") else x
+
+  /** Latest measurement per point: id, its SBZH `stratum` and weight. */
+  private def latestStrata(plotMeta: DataFrame,
+      weightCol: Option[String]): DataFrame =
+    latestPerPoint(plotMeta)
+      .select(col("id") +: stratum.as("stratum") +: weightOf(weightCol): _*)
+
+  /** Every row once under its SBZH stratum `sbzh` (type_resultaat
+    * SBZH) and once under the pooled Habitattype row (Binnen &
+    * Buiten); `cols` (habitattype first) ride along. */
+  private def byStratum(rows: DataFrame, sbzh: Column,
+      cols: Seq[String]): DataFrame =
+    rows.select(cols.map(col) :+ explode(array(
+        struct(lit("SBZH").as("type_resultaat"), sbzh.as("sbzh")),
+        struct(lit("Habitattype").as("type_resultaat"),
+          lit("Binnen & Buiten").as("sbzh")))).as("g"): _*)
+      .select(Seq(col("habitattype"), col("g.type_resultaat"), col("g.sbzh")) ++
+        cols.tail.map(col): _*)
+
+  /** The two visits of every point seen on more than one date — the
+    * first (c_1) and the latest (c_2) by (date, id) — as one
+    * (point_code, id, periode) row each, carrying the latest visit's
+    * `in_sac` when `withSac` and its design weight `w` when one is
+    * given. */
+  private def cycleIds(plotMeta: DataFrame, weightCol: Option[String],
+      withSac: Boolean): DataFrame = {
+    val key = struct(col("date"), col("id"))
+    val sac = if (withSac) Seq("in_sac") else Nil
+    val pairs = plotMeta.groupBy("habitattype", "point_code")
+      .agg(min_by(col("id"), key).as("id_1"),
+        (Seq(max_by(col("id"), key).as("id_2")) ++
+          sac.map(c => max_by(col(c), key).as(c)) ++
+          latestWeight(weightCol, key) :+
+          countDistinct(col("date")).as("nc")): _*)
+      .where(col("nc") > 1)
+    val carried = col("point_code") +: (sac ++ wCol(weightCol)).map(col)
+    pairs.select(carried :+ explode(array(
+        struct(col("id_1").as("id"), lit("c_1").as("periode")),
+        struct(col("id_2").as("id"), lit("c_2").as("periode")))).as("e"): _*)
+      .select(carried ++ Seq(col("e.id"), col("e.periode")): _*)
+  }
+
+  /** Wilson score interval on [0, 100], z-based, from effective
+    * counts: p = Σw·1[g]/Σw, n_eff = (Σw)²/Σw². Equal-weight callers
+    * pass (k, n, n): then n_eff = n·n/n is exactly n and every
+    * operation is the plain Wilson interval's. At p in {0, 1} it
+    * renders the reference's degenerate bounds (the published tables
+    * show (100, 100) / (0, 0) there). Closed form — replays in DuckDB. */
+  private def wilsonEff(swk: Column, sw: Column, sw2: Column): (Column, Column) = {
+    // zero-total-weight groups (degenerate input) null-propagate
+    // instead of throwing under ANSI division; identical otherwise
+    val swS = when(sw =!= 0.0, sw)
+    val sw2S = when(sw2 =!= 0.0, sw2)
+    val neff = sw * sw / sw2S
+    val p = swk / swS
     val z2 = lit(z975 * z975)
-    val den = lit(1.0) + z2 / n
-    val center = (p + z2 / (lit(2.0) * n)) / den
+    val den = lit(1.0) + z2 / neff
+    val center = (p + z2 / (lit(2.0) * neff)) / den
     val half = (lit(z975) / den) *
-      sqrt(p * (lit(1.0) - p) / n + z2 / (lit(4.0) * n * n))
-    val lo = when(k === 0 || k === n, lit(100.0) * p)
+      sqrt(p * (lit(1.0) - p) / neff + z2 / (lit(4.0) * neff * neff))
+    val degen = swk === lit(0.0) || swk === sw
+    val lo = when(degen, lit(100.0) * p)
       .otherwise(lit(100.0) * greatest(lit(0.0), center - half))
-    val hi = when(k === 0 || k === n, lit(100.0) * p)
+    val hi = when(degen, lit(100.0) * p)
       .otherwise(lit(100.0) * least(lit(1.0), center + half))
     (lo, hi)
   }
@@ -85,237 +212,212 @@ object LsviStatus {
       .when(hi < 75.0, "Niet goed")
       .otherwise("Onbekend")
 
-  /** `status_indicatoren` shape: per (habitattype, sbzh, criterium,
-    * indicator, belang) over the latest-per-point plots — n_obs,
-    * aandeel_gunstig (plain proportion), Wilson 95% bounds, verdict.
-    * `sbzh` takes Binnen / Buiten from the plot's `in_sac` plus the
-    * pooled "Binnen & Buiten" row. One shuffle on the group key after
-    * the broadcast-sized latest-per-point join. */
-  def statusIndicatoren(indicator: DataFrame, plotMeta: DataFrame): DataFrame = {
-    val latest = latestPerPoint(plotMeta)
-      .select(col("id"), when(col("in_sac") === 1, "Binnen").otherwise("Buiten")
-        .as("stratum"))
-    val rows = indicator
-      .join(latest, Seq("id"))
-      .where(col("status_indicator").isNotNull)
-      .select(col("type_analysis").as("habitattype"), col("criterium"),
-        col("indicator"), col("belang"), col("status_indicator"),
-        explode(array(col("stratum"), lit("Binnen & Buiten"))).as("sbzh"))
-    val agg = rows.groupBy("habitattype", "sbzh", "criterium", "indicator", "belang")
+  /** Share of favourable rows per `keys` group over rows carrying a
+    * weight `w`: n_obs (plot count, like the published tables), the
+    * Hájek share Σw·1[fav]/Σw with its effective-count Wilson 95%
+    * bounds, and the verdict. One aggregation. */
+  private def proportionStatus(rows: DataFrame, keys: Seq[String],
+      fav: Column): DataFrame = {
+    val agg = rows.groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("n_obs"),
-        count(when(col("status_indicator"), 1)).as("n_gunstig"))
-    val (lo, hi) = wilson(col("n_gunstig"), col("n_obs"))
+        sum(col("w")).as("sw"), sum(col("w") * col("w")).as("sw2"),
+        sum(when(fav, col("w")).otherwise(0.0)).as("swk"))
+    val (lo, hi) = wilsonEff(col("swk"), col("sw"), col("sw2"))
     agg
       .withColumn("aandeel_gunstig",
-        round(lit(100.0) * col("n_gunstig").cast("double") / col("n_obs"), 6))
+        round(lit(100.0) * col("swk") / col("sw"), 6))
       .withColumn("aandeel_gunstig_llci", round(lo, 6))
       .withColumn("aandeel_gunstig_ulci", round(hi, 6))
       .withColumn("beoordeling",
         beoordeling(col("aandeel_gunstig_llci"), col("aandeel_gunstig_ulci")))
-      .drop("n_gunstig")
+      .drop("sw", "sw2", "swk")
+  }
+
+  /** `status_indicatoren` shape: per (habitattype, sbzh, criterium,
+    * indicator, belang) over the latest-per-point plots — n_obs,
+    * aandeel_gunstig (plain proportion; the Hájek share under
+    * `weightCol`, which rides the plot table and joins to the
+    * indicator rows by id), Wilson 95% bounds, verdict. `sbzh` takes
+    * Binnen / Buiten from the plot's `in_sac` plus the pooled
+    * "Binnen & Buiten" row. One shuffle on the group key after the
+    * broadcast-sized latest-per-point join. */
+  def statusIndicatoren(indicator: DataFrame, plotMeta: DataFrame,
+      weightCol: Option[String] = None): DataFrame = {
+    val rows = indicator
+      .join(latestStrata(plotMeta, weightCol), Seq("id"))
+      .where(col("status_indicator").isNotNull)
+      .select(col("type_analysis").as("habitattype"), col("criterium"),
+        col("indicator"), col("belang"), col("status_indicator"),
+        weightCol.fold(lit(1.0))(_ => col("w")).as("w"),
+        explode(array(col("stratum"), lit("Binnen & Buiten"))).as("sbzh"))
+    proportionStatus(rows, Seq("habitattype", "sbzh") ++ indicatorKeys,
+      col("status_indicator"))
   }
 
   /** `status_habitat` shape: favourability of the plot-level lsvi
     * verdict per (habitattype, sbzh) over the latest-per-point plots —
     * the same Wilson + verdict machinery as [[statusIndicatoren]], one
     * aggregation. Validated: every published single-subtype stratum
-    * row of `status_habitat_fs.tsv` is this exact plain proportion. */
-  def statusHabitat(plotLsvi: DataFrame): DataFrame = {
+    * row of `status_habitat_fs.tsv` is this exact plain proportion.
+    * `weightCol` is the per-plot design weight (any positive scale —
+    * ratios are scale-free); `n_obs` stays the raw plot count. */
+  def statusHabitat(plotLsvi: DataFrame,
+      weightCol: Option[String] = None): DataFrame = {
     val rows = latestPerPoint(plotLsvi)
       .where(col("lsvi").isNotNull)
       .select(col("habitattype"), (col("lsvi") === "gunstig").as("g"),
-        explode(array(
-          when(col("in_sac") === 1, "Binnen").otherwise("Buiten"),
-          lit("Binnen & Buiten"))).as("sbzh"))
-    val agg = rows.groupBy("habitattype", "sbzh")
-      .agg(count(lit(1)).as("n_obs"), count(when(col("g"), 1)).as("n_gunstig"))
-    val (lo, hi) = wilson(col("n_gunstig"), col("n_obs"))
-    agg
-      .withColumn("aandeel_gunstig",
-        round(lit(100.0) * col("n_gunstig").cast("double") / col("n_obs"), 6))
-      .withColumn("aandeel_gunstig_llci", round(lo, 6))
-      .withColumn("aandeel_gunstig_ulci", round(hi, 6))
-      .withColumn("beoordeling",
-        beoordeling(col("aandeel_gunstig_llci"), col("aandeel_gunstig_ulci")))
-      .drop("n_gunstig")
+        weightCol.fold(lit(1.0))(c => col(c).cast("double")).as("w"),
+        explode(array(stratum, lit("Binnen & Buiten"))).as("sbzh"))
+    proportionStatus(rows, Seq("habitattype", "sbzh"), col("g"))
+  }
+
+  /** Mean of `x` per `keys` group with its 95% normal interval, as
+    * `${base}_mean` / `_llci` / `_ulci` (NULL bounds for single-plot
+    * groups, as the reference publishes for 9110 Buiten); `rel` names
+    * a first-cycle column whose sum divides the summed differences
+    * into `${base}_rel`.
+    *
+    * Unweighted, `x` is 1e-6 fixed point: the distributed integer sums
+    * are order-independent (bit-identical to the DuckDB oracle) and the
+    * variance is the exact integer identity (n·Σx² − (Σx)²) /
+    * (n·(n−1)). Weighted, the Hájek mean Σw·x/Σw with the design-
+    * effect interval mean ± z·sqrt(v_pop / (n_eff − 1)), v_pop the
+    * weighted population variance — with unit weights algebraically
+    * the unweighted z·s/√n. */
+  private def meanEstimate(rows: DataFrame, keys: Seq[String], base: String,
+      weighted: Boolean, rel: Option[String] = None): DataFrame = {
+    val grouped = rows.groupBy(keys.map(col): _*)
+    val (x, n) = (col("x"), col("n_obs"))
+    def bounds(df: DataFrame, m: Column, h: Column): DataFrame = df
+      .withColumn(s"${base}_mean", round(m, 6))
+      .withColumn(s"${base}_llci", when(n > 1, round(m - h, 6)))
+      .withColumn(s"${base}_ulci", when(n > 1, round(m + h, 6)))
+    if (!weighted) {
+      val agg = grouped.agg(count(lit(1)).as("n_obs"),
+        (Seq(sum(x).as("sx"), sum(x * x).as("sxx")) ++
+          rel.map(r => sum(col(r)).as("sr"))): _*)
+      val mean = col("sx").cast("double") / n / 1e6
+      val sd = sqrt((n * col("sxx") - col("sx") * col("sx"))
+          .cast("double") / (n * (n - lit(1L)))) / 1e6
+      val half = lit(z975) * sd / sqrt(n.cast("double"))
+      val out = bounds(agg, mean, half)
+      rel.fold(out)(_ => out.withColumn(s"${base}_rel",
+          when(col("sr") =!= 0L,
+            round(col("sx").cast("double") / col("sr").cast("double"), 6))))
+        .drop("sx", "sxx", "sr")
+    } else {
+      val w = col("w")
+      val agg0 = grouped.agg(count(lit(1)).as("n_obs"),
+        (Seq(sum(w).as("sw"), sum(w * w).as("sw2"), sum(w * x).as("swx"),
+          sum(w * x * x).as("swx2")) ++
+          rel.map(r => sum(w * col(r)).as("swr"))): _*)
+      val agg = rel.fold(agg0)(_ => agg0.withColumn(s"${base}_rel",
+        when(col("swr") =!= 0.0, round(col("swx") / col("swr"), 6))))
+      // null-guard the denominators: zero total weight (degenerate
+      // input) and n_eff == 1 (a single effective observation, e.g. all
+      // weight on one row) would THROW under ANSI division; the guarded
+      // expressions null-propagate — mean/interval become NULL — and are
+      // identical for every non-degenerate group
+      val swS = when(col("sw") =!= 0.0, col("sw"))
+      val sw2S = when(col("sw2") =!= 0.0, col("sw2"))
+      val neff = col("sw") * col("sw") / sw2S
+      val m = col("swx") / swS
+      val vpop = greatest(col("swx2") / swS - m * m, lit(0.0))
+      val h = lit(z975) * sqrt(vpop / when(neff =!= 1.0, neff - lit(1.0)))
+      bounds(agg, m, h).drop("sw", "sw2", "swx", "swx2", "swr")
+    }
   }
 
   /** `index_ind` shape: mean (clamped) indicator verschilscore + 95%
     * normal interval per (type_resultaat, habitattype, sbzh,
     * criterium, indicator, belang) over the latest-per-point plots —
-    * the [[indexHq]] fixed-point machinery at indicator grain.
-    * Validated: published single-subtype stratum means are exact
-    * (display-rounding only) on `index_ind_fs.tsv`. */
-  def indexInd(indicator: DataFrame, plotMeta: DataFrame): DataFrame = {
-    val latest = latestPerPoint(plotMeta)
-      .select(col("id"), when(col("in_sac") === 1, "Binnen").otherwise("Buiten")
-        .as("stratum"))
+    * the [[indexHq]] machinery at indicator grain. Validated: published
+    * single-subtype stratum means are exact (display-rounding only) on
+    * `index_ind_fs.tsv`. */
+  def indexInd(indicator: DataFrame, plotMeta: DataFrame,
+      weightCol: Option[String] = None): DataFrame = {
     val rows = indicator
-      .join(latest, Seq("id"))
+      .join(latestStrata(plotMeta, weightCol), Seq("id"))
       .where(col("verschilscore").isNotNull)
-      .withColumn("x6", floor(col("verschilscore") * 1e6 + 0.5).cast("long"))
-      .select(col("type_analysis").as("habitattype"), col("criterium"),
-        col("indicator"), col("belang"), col("x6"),
-        explode(array(
-          struct(lit("SBZH").as("type_resultaat"), col("stratum").as("sbzh")),
-          struct(lit("Habitattype").as("type_resultaat"),
-            lit("Binnen & Buiten").as("sbzh")))).as("g"))
-      .select(col("habitattype"), col("g.type_resultaat"), col("g.sbzh"),
-        col("criterium"), col("indicator"), col("belang"), col("x6"))
-    val agg = rows.groupBy("type_resultaat", "habitattype", "sbzh",
-        "criterium", "indicator", "belang")
-      .agg(count(lit(1)).as("n_obs"), sum(col("x6")).as("s6"),
-        sum(col("x6") * col("x6")).as("ss6"))
-    val mean = col("s6").cast("double") / col("n_obs") / 1e6
-    val sd = sqrt((col("n_obs") * col("ss6") - col("s6") * col("s6"))
-        .cast("double") / (col("n_obs") * (col("n_obs") - lit(1L)))) / 1e6
-    val half = lit(z975) * sd / sqrt(col("n_obs").cast("double"))
-    agg
-      .withColumn("index_ind_mean", round(mean, 6))
-      .withColumn("index_ind_llci",
-        when(col("n_obs") > 1, round(mean - half, 6)))
-      .withColumn("index_ind_ulci",
-        when(col("n_obs") > 1, round(mean + half, 6)))
-      .drop("s6", "ss6")
+      .select(Seq(col("type_analysis").as("habitattype"), col("criterium"),
+        col("indicator"), col("belang"), col("stratum"),
+        meanValue(col("verschilscore"), weightCol).as("x")) ++
+        wCol(weightCol).map(col): _*)
+    meanEstimate(
+      byStratum(rows, col("stratum"),
+        ("habitattype" +: indicatorKeys :+ "x") ++ wCol(weightCol)),
+      strataKeys ++ indicatorKeys, "index_ind", weightCol.isDefined)
   }
 
   /** `index_hq` shape: mean habitat-quality index (the globaal
     * `index_mean_ind`) + 95% normal interval per (type_resultaat,
     * habitattype, sbzh) over the latest-per-point plots; `Habitattype`
     * rows pool both strata, `SBZH` rows split them — exactly the
-    * published grouping. The index enters as 1e-6 fixed point so the
-    * distributed sums are order-independent (bit-identical to the
-    * DuckDB oracle); variance uses the exact integer identity
-    * (n*sum(x^2) - sum(x)^2) / (n*(n-1)). Single-plot groups publish
-    * NA bounds, as the reference does (9110 Buiten). */
-  def indexHq(plotIndex: DataFrame): DataFrame = {
-    val x6 = floor(col("index_mean_ind") * 1e6 + 0.5).cast("long")
+    * published grouping. See [[meanEstimate]] for the two tails. */
+  def indexHq(plotIndex: DataFrame,
+      weightCol: Option[String] = None): DataFrame = {
     val rows = latestPerPoint(plotIndex)
       .where(col("index_mean_ind").isNotNull)
-      .withColumn("x6", x6)
-      .select(col("habitattype"), col("x6"),
-        explode(array(
-          struct(lit("SBZH").as("type_resultaat"),
-            when(col("in_sac") === 1, "Binnen").otherwise("Buiten").as("sbzh")),
-          struct(lit("Habitattype").as("type_resultaat"),
-            lit("Binnen & Buiten").as("sbzh")))).as("g"))
-      .select(col("habitattype"), col("g.type_resultaat"), col("g.sbzh"), col("x6"))
-    val agg = rows.groupBy("type_resultaat", "habitattype", "sbzh")
-      .agg(count(lit(1)).as("n_obs"), sum(col("x6")).as("s6"),
-        sum(col("x6") * col("x6")).as("ss6"))
-    val mean = col("s6").cast("double") / col("n_obs") / 1e6
-    val sd = sqrt((col("n_obs") * col("ss6") - col("s6") * col("s6"))
-        .cast("double") / (col("n_obs") * (col("n_obs") - lit(1L)))) / 1e6
-    val half = lit(z975) * sd / sqrt(col("n_obs").cast("double"))
-    agg
-      .withColumn("index_hq_mean", round(mean, 6))
-      .withColumn("index_hq_llci",
-        when(col("n_obs") > 1, round(mean - half, 6)))
-      .withColumn("index_hq_ulci",
-        when(col("n_obs") > 1, round(mean + half, 6)))
-      .drop("s6", "ss6")
+      .select(Seq(col("habitattype"), col("in_sac"),
+        meanValue(col("index_mean_ind"), weightCol).as("x")) ++
+        weightOf(weightCol): _*)
+    meanEstimate(byStratum(rows, stratum, Seq("habitattype", "x") ++ wCol(weightCol)),
+      strataKeys, "index_hq", weightCol.isDefined)
   }
 
   /** `trend_index_hq` shape: paired two-cycle change of the plot-level
     * habitat-quality index per (type_resultaat, habitattype, sbzh) —
     * mean within-point difference (latest minus earliest), 95% normal
     * interval, and the relative change (mean difference over the
-    * first-cycle mean, = sum(d)/sum(x1) under equal weights). All in
-    * 1e-6 fixed point: the within-point difference of two fixed-point
-    * values is an exact integer, so the distributed sums replay
-    * bit-identically in the oracle. Validated: the published SBZH
-    * stratum rows of `trend_index_hq_fs.tsv` reproduce EXACTLY (mean
-    * and both bounds — the reference's interval is this z interval);
-    * pooled rows carry design weights (within 0.005). */
-  def trendIndexHq(plotIndex: DataFrame): DataFrame = {
-    val p = plotIndex.where(col("index_mean_ind").isNotNull)
-      .withColumn("x6", floor(col("index_mean_ind") * 1e6 + 0.5).cast("long"))
-    val pairs = p.groupBy("habitattype", "point_code").agg(
-        min_by(col("x6"), struct(col("date"), col("id"))).as("x16"),
-        max_by(col("x6"), struct(col("date"), col("id"))).as("x26"),
-        max_by(col("in_sac"), struct(col("date"), col("id"))).as("in_sac"),
-        countDistinct(col("date")).as("nc"))
+    * first-cycle mean, = sum(d)/sum(x1) under equal weights, Σw·d/Σw·x₁
+    * under a design weight, which is the pair's latest-visit weight).
+    * Unweighted all in 1e-6 fixed point: the within-point difference of
+    * two fixed-point values is an exact integer, so the distributed
+    * sums replay bit-identically in the oracle. Validated: the
+    * published SBZH stratum rows of `trend_index_hq_fs.tsv` reproduce
+    * EXACTLY (mean and both bounds — the reference's interval is this
+    * z interval); pooled rows carry design weights (within 0.005). */
+  def trendIndexHq(plotIndex: DataFrame,
+      weightCol: Option[String] = None): DataFrame = {
+    val key = struct(col("date"), col("id"))
+    val pairs = plotIndex.where(col("index_mean_ind").isNotNull)
+      .withColumn("x", meanValue(col("index_mean_ind"), weightCol))
+      .groupBy("habitattype", "point_code")
+      .agg(min_by(col("x"), key).as("x1"),
+        (Seq(max_by(col("x"), key).as("x2"),
+          max_by(col("in_sac"), key).as("in_sac")) ++
+          latestWeight(weightCol, key) :+
+          countDistinct(col("date")).as("nc")): _*)
       .where(col("nc") > 1)
-      .withColumn("d6", col("x26") - col("x16"))
-    val rows = pairs.select(col("habitattype"), col("d6"), col("x16"),
-        explode(array(
-          struct(lit("SBZH").as("type_resultaat"),
-            when(col("in_sac") === 1, "Binnen").otherwise("Buiten").as("sbzh")),
-          struct(lit("Habitattype").as("type_resultaat"),
-            lit("Binnen & Buiten").as("sbzh")))).as("g"))
-      .select(col("habitattype"), col("g.type_resultaat"), col("g.sbzh"),
-        col("d6"), col("x16"))
-    val agg = rows.groupBy("type_resultaat", "habitattype", "sbzh")
-      .agg(count(lit(1)).as("n_obs"), sum(col("d6")).as("sd6"),
-        sum(col("d6") * col("d6")).as("ssd6"), sum(col("x16")).as("s16"))
-    val mean = col("sd6").cast("double") / col("n_obs") / 1e6
-    val sd = sqrt((col("n_obs") * col("ssd6") - col("sd6") * col("sd6"))
-        .cast("double") / (col("n_obs") * (col("n_obs") - lit(1L)))) / 1e6
-    val half = lit(z975) * sd / sqrt(col("n_obs").cast("double"))
-    agg
-      .withColumn("index_diff_mean", round(mean, 6))
-      .withColumn("index_diff_llci",
-        when(col("n_obs") > 1, round(mean - half, 6)))
-      .withColumn("index_diff_ulci",
-        when(col("n_obs") > 1, round(mean + half, 6)))
-      .withColumn("index_diff_rel",
-        when(col("s16") =!= 0L,
-          round(col("sd6").cast("double") / col("s16").cast("double"), 6)))
-      .drop("sd6", "ssd6", "s16")
+      .withColumn("x", col("x2") - col("x1"))
+    meanEstimate(
+      byStratum(pairs, stratum, Seq("habitattype", "x", "x1") ++ wCol(weightCol)),
+      strataKeys, "index_diff", weightCol.isDefined, rel = Some("x1"))
   }
 
   /** `trend_index_ind` shape: the [[trendIndexHq]] paired-difference
     * machinery at indicator grain (clamped indicator verschilscores,
     * both cycles known). Published SBZH stratum rows reproduce exactly
     * (1.4e-5, display rounding). */
-  def trendIndexInd(indicator: DataFrame, plotMeta: DataFrame): DataFrame = {
+  def trendIndexInd(indicator: DataFrame, plotMeta: DataFrame,
+      weightCol: Option[String] = None): DataFrame = {
     // single-chain like [[trendIndicatoren]]: cycle pivot by conditional
     // aggregation instead of an s1 ⋈ s2 self-join (which planned the
     // pairing subtree twice)
-    val pr = plotMeta.groupBy("habitattype", "point_code").agg(
-        min_by(col("id"), struct(col("date"), col("id"))).as("id_1"),
-        max_by(col("id"), struct(col("date"), col("id"))).as("id_2"),
-        max_by(col("in_sac"), struct(col("date"), col("id"))).as("in_sac"),
-        countDistinct(col("date")).as("nc"))
-      .where(col("nc") > 1)
-    val cyc = pr.select(col("point_code"), col("in_sac"), explode(array(
-        struct(col("id_1").as("id"), lit("c_1").as("periode")),
-        struct(col("id_2").as("id"), lit("c_2").as("periode")))).as("e"))
-      .select(col("point_code"), col("in_sac"), col("e.id"), col("e.periode"))
-    val k = indicator.where(col("verschilscore").isNotNull)
-      .withColumn("x6", floor(col("verschilscore") * 1e6 + 0.5).cast("long"))
-    val rows = k.join(cyc, Seq("id"))
+    val rows = indicator.where(col("verschilscore").isNotNull)
+      .withColumn("x", meanValue(col("verschilscore"), weightCol))
+      .join(cycleIds(plotMeta, weightCol, withSac = true), Seq("id"))
       .groupBy(col("type_analysis").as("habitattype"), col("point_code"),
         col("in_sac"), col("criterium"), col("indicator"), col("belang"))
-      .agg(
-        max(when(col("periode") === "c_1", col("x6"))).as("x16"),
-        max(when(col("periode") === "c_2", col("x6"))).as("x26"))
-      .where(col("x16").isNotNull && col("x26").isNotNull)
-      .withColumn("d6", col("x26") - col("x16"))
-      .select(col("habitattype"), col("criterium"), col("indicator"),
-        col("belang"), col("d6"),
-        explode(array(
-          struct(lit("SBZH").as("type_resultaat"),
-            when(col("in_sac") === 1, "Binnen").otherwise("Buiten").as("sbzh")),
-          struct(lit("Habitattype").as("type_resultaat"),
-            lit("Binnen & Buiten").as("sbzh")))).as("g"))
-      .select(col("habitattype"), col("g.type_resultaat"), col("g.sbzh"),
-        col("criterium"), col("indicator"), col("belang"), col("d6"))
-    val agg = rows.groupBy("type_resultaat", "habitattype", "sbzh",
-        "criterium", "indicator", "belang")
-      .agg(count(lit(1)).as("n_obs"), sum(col("d6")).as("sd6"),
-        sum(col("d6") * col("d6")).as("ssd6"))
-    val mean = col("sd6").cast("double") / col("n_obs") / 1e6
-    val sd = sqrt((col("n_obs") * col("ssd6") - col("sd6") * col("sd6"))
-        .cast("double") / (col("n_obs") * (col("n_obs") - lit(1L)))) / 1e6
-    val half = lit(z975) * sd / sqrt(col("n_obs").cast("double"))
-    agg
-      .withColumn("index_diff_mean", round(mean, 6))
-      .withColumn("index_diff_llci",
-        when(col("n_obs") > 1, round(mean - half, 6)))
-      .withColumn("index_diff_ulci",
-        when(col("n_obs") > 1, round(mean + half, 6)))
-      .drop("sd6", "ssd6")
+      .agg(max(when(col("periode") === "c_1", col("x"))).as("x1"),
+        (max(when(col("periode") === "c_2", col("x"))).as("x2") +:
+          wCol(weightCol).map(c => max(col(c)).as(c))): _*)
+      .where(col("x1").isNotNull && col("x2").isNotNull)
+      .withColumn("x", col("x2") - col("x1"))
+    meanEstimate(
+      byStratum(rows, stratum,
+        ("habitattype" +: indicatorKeys :+ "x") ++ wCol(weightCol)),
+      strataKeys ++ indicatorKeys, "index_diff", weightCol.isDefined)
   }
 
   /** Chi-square df=1 critical value at alpha 0.05 — the published
@@ -380,101 +482,121 @@ object LsviStatus {
     * must pass an integer `cycle` column (see [[assignCycles]]): then
     * only points observed in BOTH cycle 0 and cycle 1 pair up, and
     * same-cycle re-visits are excluded — the published
-    * `trend_habitat_gr_bm` drops exactly those points. */
-  def trendHabitat(plotLsvi: DataFrame): DataFrame = {
+    * `trend_habitat_gr_bm` drops exactly those points.
+    *
+    * Under `weightCol` (the pair's latest-visit weight) the shares are
+    * Hájek shares, the Wilson, Wald and log-ratio intervals use
+    * effective counts, and the year columns stay descriptive. */
+  def trendHabitat(plotLsvi: DataFrame,
+      weightCol: Option[String] = None): DataFrame = {
     val hasCycle = plotLsvi.columns.contains("cycle")
     val in0 = plotLsvi.where(col("lsvi").isNotNull)
     val in1 = if (hasCycle) in0.where(col("cycle").isin(0, 1)) else in0
+    val key = struct(col("date"), col("id"))
+    val visit = struct((col("lsvi") === "gunstig").as("g"), col("date").as("j"))
     val pairs = in1
       .groupBy("habitattype", "point_code")
-      .agg(
-        min_by(struct((col("lsvi") === "gunstig").as("g"),
-          col("date").as("j")), struct(col("date"), col("id"))).as("r1"),
-        max_by(struct((col("lsvi") === "gunstig").as("g"),
-          col("date").as("j")), struct(col("date"), col("id"))).as("r2"),
-        max_by(col("in_sac"), struct(col("date"), col("id"))).as("in_sac"),
-        (if (hasCycle) countDistinct(col("cycle"))
-         else countDistinct(col("date"))).as("nc"))
+      .agg(min_by(visit, key).as("r1"),
+        (Seq(max_by(visit, key).as("r2"), max_by(col("in_sac"), key).as("in_sac")) ++
+          latestWeight(weightCol, key) :+
+          (if (hasCycle) countDistinct(col("cycle"))
+           else countDistinct(col("date"))).as("nc")): _*)
       .where(if (hasCycle) col("nc") === 2 else col("nc") > 1)
-    val rows = pairs.select(col("habitattype"),
+      .select(Seq(col("habitattype"), col("in_sac"),
         col("r1.g").as("g1"), col("r2.g").as("g2"),
-        col("r1.j").as("j1"), col("r2.j").as("j2"),
-        explode(array(
-          struct(lit("SBZH").as("type_resultaat"),
-            when(col("in_sac") === 1, "Binnen").otherwise("Buiten").as("sbzh")),
-          struct(lit("Habitattype").as("type_resultaat"),
-            lit("Binnen & Buiten").as("sbzh")))).as("s"))
-      .select(col("habitattype"), col("s.type_resultaat"), col("s.sbzh"),
-        col("g1"), col("g2"), col("j1"), col("j2"))
-    val agg = rows.groupBy("type_resultaat", "habitattype", "sbzh")
-      .agg(count(lit(1)).as("n_obs"),
-        count(when(col("g1"), 1)).as("k1"),
-        count(when(col("g2"), 1)).as("k2"),
-        count(when(col("g1") && !col("g2"), 1)).as("b"),
-        count(when(!col("g1") && col("g2"), 1)).as("c"),
-        min(col("j1")).as("jmin1"), max(col("j1")).as("jmax1"),
-        min(col("j2")).as("jmin2"), max(col("j2")).as("jmax2"),
-        sum(col("j2") - col("j1")).as("sdj"))
-    val nd = col("n_obs").cast("double")
-    val k1d = col("k1").cast("double")
-    val k2d = col("k2").cast("double")
-    val bd = col("b").cast("double")
-    val cd = col("c").cast("double")
-    val (lo1, hi1) = wilson(col("k1"), col("n_obs"))
-    val (lo2, hi2) = wilson(col("k2"), col("n_obs"))
-    val dAbs = lit(100.0) * (k2d - k1d) / nd
-    val seAbs = lit(100.0) * sqrt(bd + cd - pow(bd - cd, 2) / nd) / nd
+        col("r1.j").as("j1"), col("r2.j").as("j2")) ++
+        wCol(weightCol).map(col): _*)
+    val rows = byStratum(pairs, stratum,
+      Seq("habitattype", "g1", "g2", "j1", "j2") ++ wCol(weightCol))
+    val (g1, g2) = (col("g1"), col("g2"))
+    // year columns stay descriptive (unweighted) under a design weight
+    val years = Seq(min(col("j1")).as("jmin1"), max(col("j1")).as("jmax1"),
+      min(col("j2")).as("jmin2"), max(col("j2")).as("jmax2"),
+      sum(col("j2") - col("j1")).as("sdj"))
+    val grouped = rows.groupBy(strataKeys.map(col): _*)
+    // per tail: the aggregate, the favourable totals x1/x2 over `tot`
+    // pairs, both cycles' Wilson bounds, the paired absolute difference
+    // with its Wald SE, and the SE of the paired log-ratio
+    // Var(ln(p2/p1)) = (b + c) / (k1 * k2) for matched pairs
+    val (agg, tot, x1, x2, ci1, ci2, dAbs, seAbs, seLn) = weightCol match {
+      case None =>
+        val agg = grouped.agg(count(lit(1)).as("n_obs"), (Seq(
+          count(when(g1, 1)).as("k1"), count(when(g2, 1)).as("k2"),
+          count(when(g1 && !g2, 1)).as("b"),
+          count(when(!g1 && g2, 1)).as("c")) ++ years): _*)
+        val nd = col("n_obs").cast("double")
+        val k1d = col("k1").cast("double")
+        val k2d = col("k2").cast("double")
+        val bd = col("b").cast("double")
+        val cd = col("c").cast("double")
+        (agg, nd, k1d, k2d,
+          wilsonEff(col("k1"), col("n_obs"), col("n_obs")),
+          wilsonEff(col("k2"), col("n_obs"), col("n_obs")),
+          lit(100.0) * (k2d - k1d) / nd,
+          lit(100.0) * sqrt(bd + cd - pow(bd - cd, 2) / nd) / nd,
+          sqrt((bd + cd) / (k1d * k2d)))
+      case Some(_) =>
+        val w = col("w")
+        val agg = grouped.agg(count(lit(1)).as("n_obs"), (Seq(
+          sum(w).as("sw"), sum(w * w).as("sw2"),
+          sum(when(g1, w).otherwise(0.0)).as("swk1"),
+          sum(when(g2, w).otherwise(0.0)).as("swk2"),
+          sum(when(g1 && !g2, w).otherwise(0.0)).as("swb"),
+          sum(when(!g1 && g2, w).otherwise(0.0)).as("swc")) ++ years): _*)
+        val sw = col("sw")
+        val neff = sw * sw / col("sw2")
+        val md = (col("swk2") - col("swk1")) / sw
+        val vpop = greatest((col("swb") + col("swc")) / sw - md * md, lit(0.0))
+        // effective counts for the paired log-ratio interval
+        val k1e = neff * (col("swk1") / sw)
+        val k2e = neff * (col("swk2") / sw)
+        val bce = neff * ((col("swb") + col("swc")) / sw)
+        (agg, sw, col("swk1"), col("swk2"),
+          wilsonEff(col("swk1"), sw, col("sw2")),
+          wilsonEff(col("swk2"), sw, col("sw2")),
+          lit(100.0) * md, lit(100.0) * sqrt(vpop / neff),
+          sqrt(bce / (k1e * k2e)))
+    }
     val absLo = round(dAbs - lit(z975) * seAbs, 6)
     val absHi = round(dAbs + lit(z975) * seAbs, 6)
-    // paired log-ratio delta interval for the relative change:
-    // Var(ln(p2/p1)) = (b + c) / (k1 * k2) for matched pairs
-    val relMean = when(col("k1") > 0,
-      round(lit(100.0) * (k2d - k1d) / k1d, 6))
-    val seLn = sqrt((bd + cd) / (k1d * k2d))
-    val relDef = col("k1") > 0 && col("k2") > 0
+    val relMean = when(x1 > 0.0, round(lit(100.0) * (x2 - x1) / x1, 6))
+    val relDef = x1 > 0.0 && x2 > 0.0
     val relLo = when(relDef,
-      round(lit(100.0) * (exp(log(k2d / k1d) - lit(z975) * seLn) - lit(1.0)), 6))
+      round(lit(100.0) * (exp(log(x2 / x1) - lit(z975) * seLn) - lit(1.0)), 6))
     val relHi = when(relDef,
-      round(lit(100.0) * (exp(log(k2d / k1d) + lit(z975) * seLn) - lit(1.0)), 6))
-    val relKlasse = when(col("k1") > 0,
+      round(lit(100.0) * (exp(log(x2 / x1) + lit(z975) * seLn) - lit(1.0)), 6))
+    val relKlasse = when(x1 > 0.0,
         effectKlasse(relMean, relLo, relHi, 25.0, 25.0))
       .otherwise(when(absLo > 0.0, "++").otherwise("?"))
     // half-even like R's round(): the published tables carry 4.25 ->
     // 4.2 (coastal dunes 2120-Binnen) and 6.25 -> 6.2 (grassland
     // 6510-Buiten), which HALF_UP would print as 4.3 / 6.3
-    val vj = bround(col("sdj").cast("double") / nd, 1)
+    val vj = bround(col("sdj").cast("double") / col("n_obs").cast("double"), 1)
+    def share(i: Int, x: Column, ci: (Column, Column)) =
+      struct(lit(s"c_$i").as("periode"), lit("aandeel_gunstig").as("parameter"),
+        round(lit(100.0) * x / tot, 6).as("mean"),
+        round(ci._1, 6).as("llci"), round(ci._2, 6).as("ulci"),
+        lit(null).cast("string").as("klasse"),
+        lit(null).cast("string").as("periode_ref"),
+        col(s"jmin$i").as("jaar_min"), col(s"jmax$i").as("jaar_max"),
+        lit(null).cast("double").as("verschil_jaar"))
+    def change(parameter: String, mean: Column, lo: Column, hi: Column,
+        klasse: Column) =
+      struct(lit("c_2").as("periode"), lit(parameter).as("parameter"),
+        mean.as("mean"), lo.as("llci"), hi.as("ulci"), klasse.as("klasse"),
+        lit("c_1").as("periode_ref"),
+        least(col("jmin1"), col("jmin2")).as("jaar_min"),
+        greatest(col("jmax1"), col("jmax2")).as("jaar_max"),
+        vj.as("verschil_jaar"))
     val out = agg.select(col("type_resultaat"), col("habitattype"),
       col("sbzh"), col("n_obs"),
       explode(array(
-        struct(lit("c_1").as("periode"), lit("aandeel_gunstig").as("parameter"),
-          round(lit(100.0) * k1d / nd, 6).as("mean"),
-          round(lo1, 6).as("llci"), round(hi1, 6).as("ulci"),
-          lit(null).cast("string").as("klasse"),
-          lit(null).cast("string").as("periode_ref"),
-          col("jmin1").as("jaar_min"), col("jmax1").as("jaar_max"),
-          lit(null).cast("double").as("verschil_jaar")),
-        struct(lit("c_2").as("periode"), lit("aandeel_gunstig").as("parameter"),
-          round(lit(100.0) * k2d / nd, 6).as("mean"),
-          round(lo2, 6).as("llci"), round(hi2, 6).as("ulci"),
-          lit(null).cast("string").as("klasse"),
-          lit(null).cast("string").as("periode_ref"),
-          col("jmin2").as("jaar_min"), col("jmax2").as("jaar_max"),
-          lit(null).cast("double").as("verschil_jaar")),
-        struct(lit("c_2").as("periode"),
-          lit("verschil_aandeel_gunstig_abs").as("parameter"),
-          round(dAbs, 6).as("mean"), absLo.as("llci"), absHi.as("ulci"),
-          effectKlasse(round(dAbs, 6), absLo, absHi, 12.0, 12.0).as("klasse"),
-          lit("c_1").as("periode_ref"),
-          least(col("jmin1"), col("jmin2")).as("jaar_min"),
-          greatest(col("jmax1"), col("jmax2")).as("jaar_max"),
-          vj.as("verschil_jaar")),
-        struct(lit("c_2").as("periode"),
-          lit("verschil_aandeel_gunstig_rel").as("parameter"),
-          relMean.as("mean"), relLo.as("llci"), relHi.as("ulci"),
-          relKlasse.as("klasse"), lit("c_1").as("periode_ref"),
-          least(col("jmin1"), col("jmin2")).as("jaar_min"),
-          greatest(col("jmax1"), col("jmax2")).as("jaar_max"),
-          vj.as("verschil_jaar")))).as("r"))
+        share(1, x1, ci1),
+        share(2, x2, ci2),
+        change("verschil_aandeel_gunstig_abs", round(dAbs, 6), absLo, absHi,
+          effectKlasse(round(dAbs, 6), absLo, absHi, 12.0, 12.0)),
+        change("verschil_aandeel_gunstig_rel", relMean, relLo, relHi,
+          relKlasse))).as("r"))
     out.select(col("r.periode").as("periode"), col("type_resultaat"),
       col("habitattype"), col("sbzh"), col("n_obs"),
       col("r.parameter").as("parameter"), col("r.mean").as("mean"),
@@ -558,7 +680,7 @@ object LsviStatus {
     val chi2 = when(col("n_groups") === 2 && col("n_min") >= 5 &&
         col("k_tot") > 0 && col("k_tot") < col("n_tot"),
       round(nT * num * num / (nd * (nT - nd) * kT * (nT - kT)), 6))
-    val (lo, hi) = wilson(col("k"), col("n_obs"))
+    val (lo, hi) = wilsonEff(col("k"), col("n_obs"), col("n_obs"))
     agg
       .withColumn("n_groups", groups)
       .withColumn("n_tot", nTot)
@@ -635,42 +757,33 @@ object LsviStatus {
     * resampling-based in its analysis repo, outside this snapshot).
     * Published n_obs reproduces exactly (all 40 forest verschil rows
     * and every aandeel row); the published means carry design weights
-    * and sit within ~3pp of these equal-weight estimates. */
-  def trendIndicatoren(indicator: DataFrame, plotMeta: DataFrame): DataFrame = {
+    * and sit within ~3pp of these equal-weight estimates. Under
+    * `weightCol` (the pair's latest-visit weight) the same rows carry
+    * Hájek shares with effective-count Wilson bounds and the weighted
+    * paired Wald difference; the relative change stays a point
+    * estimate. */
+  def trendIndicatoren(indicator: DataFrame, plotMeta: DataFrame,
+      weightCol: Option[String] = None): DataFrame = {
     // single-chain: pairs -> per-(point, indicator) cycle pivot -> one
     // group-level aggregation that yields BOTH per-cycle counts and the
     // paired discordants — the earlier per-cycle aggregation + s1 ⋈ s2
     // self-join planned the pairing subtree three times (no
     // cross-branch reuse), tripling the upstream scans
-    val pairs = plotMeta
-      .groupBy("habitattype", "point_code")
-      .agg(
-        min_by(col("id"), struct(col("date"), col("id"))).as("id_1"),
-        max_by(col("id"), struct(col("date"), col("id"))).as("id_2"),
-        countDistinct(col("date")).as("nc"))
-      .where(col("nc") > 1)
-    val cyc = pairs.select(col("point_code"), explode(array(
-        struct(col("id_1").as("id"), lit("c_1").as("periode")),
-        struct(col("id_2").as("id"), lit("c_2").as("periode")))).as("e"))
-      .select(col("point_code"), col("e.id"), col("e.periode"))
     val known = indicator.where(col("status_indicator").isNotNull)
     // one row per (point, indicator, cycle) by the engine contract
     // (one indicator row per id), so max(when(...)) is the cycle pivot
-    val level1 = known.join(cyc, Seq("id"))
+    val level1 = known.join(cycleIds(plotMeta, weightCol, withSac = false), Seq("id"))
       .groupBy(col("type_analysis").as("habitattype"), col("point_code"),
         col("criterium"), col("indicator"), col("belang"))
       .agg(
         max(when(col("periode") === "c_1", col("status_indicator"))).as("s1"),
-        max(when(col("periode") === "c_2", col("status_indicator"))).as("s2"))
-    val both = col("s1").isNotNull && col("s2").isNotNull
-    val level2 = level1.groupBy("habitattype", "criterium", "indicator", "belang")
-      .agg(
-        count(col("s1")).as("n1"), count(when(col("s1"), 1)).as("k1c"),
-        count(col("s2")).as("n2"), count(when(col("s2"), 1)).as("k2c"),
-        count(when(both, 1)).as("np"),
-        count(when(both && col("s1"), 1)).as("k1"),
-        count(when(both && col("s1") && !col("s2"), 1)).as("b"),
-        count(when(both && !col("s1") && col("s2"), 1)).as("c"))
+        (max(when(col("periode") === "c_2", col("status_indicator"))).as("s2") +:
+          wCol(weightCol).map(c => max(col(c)).as(c))): _*)
+    val (s1, s2) = (col("s1"), col("s2"))
+    val both = s1.isNotNull && s2.isNotNull
+    val grouped = level1.groupBy(("habitattype" +: indicatorKeys).map(col): _*)
+    val counts = Seq(count(s1).as("n1"), count(s2).as("n2"),
+      count(when(both, 1)).as("np"))
     // single-chain tail (r11): the earlier aandeel ∪ verschil union
     // re-planned the whole pairing subtree per branch (4 scans /
     // 8 shuffles at sf0.1); emitting all four output rows from ONE
@@ -682,33 +795,73 @@ object LsviStatus {
     // (Spark 4 default) an unguarded zero division THROWS even for
     // doubles; a null denominator propagates null instead, and the
     // guarded value is identical for every surviving row.
-    val n1s = when(col("n1") > 0, col("n1"))
-    val n2s = when(col("n2") > 0, col("n2"))
-    val (alo1, ahi1) = wilson(col("k1c"), n1s)
-    val (alo2, ahi2) = wilson(col("k2c"), n2s)
-    val nd = when(col("np") > 0, col("np")).cast("double")
-    val bd = col("b").cast("double")
-    val cd = col("c").cast("double")
-    val d = lit(100.0) * (cd - bd) / nd
-    val se = lit(100.0) * sqrt(bd + cd - pow(bd - cd, 2) / nd) / nd
-    val a1 = lit(100.0) * col("k1").cast("double") / nd
+    val (has1, has2, hasP) = (col("n1") > 0, col("n2") > 0, col("np") > 0)
+    // per tail: the aggregate, each cycle's (favourable, total, squared
+    // total) for its share and Wilson bounds, and the paired difference
+    // of the within-point change d ∈ {-1, 0, 1} with its Wald SE and
+    // relative change
+    val (level2, cyc1, cyc2, d, se, rel) = weightCol match {
+      case None =>
+        val agg = grouped.agg(counts.head, (counts.tail ++ Seq(
+          count(when(s1, 1)).as("k1c"), count(when(s2, 1)).as("k2c"),
+          count(when(both && s1, 1)).as("k1"),
+          count(when(both && s1 && !s2, 1)).as("b"),
+          count(when(both && !s1 && s2, 1)).as("c"))): _*)
+        val n1s = when(has1, col("n1"))
+        val n2s = when(has2, col("n2"))
+        val nd = when(hasP, col("np")).cast("double")
+        val bd = col("b").cast("double")
+        val cd = col("c").cast("double")
+        val a1 = lit(100.0) * col("k1").cast("double") / nd
+        (agg, (col("k1c").cast("double"), n1s, n1s),
+          (col("k2c").cast("double"), n2s, n2s),
+          lit(100.0) * (cd - bd) / nd,
+          lit(100.0) * sqrt(bd + cd - pow(bd - cd, 2) / nd) / nd,
+          when(a1 > 0.0, round(lit(100.0) * (cd - bd) / nd / a1 * 100.0, 6)))
+      case Some(_) =>
+        // the pair's latest-visit weight; mean_d = (Σw·c − Σw·b)/Σw,
+        // SE = sqrt(v_pop(d)/n_eff) — with unit weights exactly the
+        // classic 100·sqrt(b+c−(b−c)²/n)/n Wald SE
+        val w = col("w")
+        def sw(c: Column) = sum(when(c, w).otherwise(0.0))
+        def sw2(c: Column) = sum(when(c, w * w).otherwise(0.0))
+        val agg = grouped.agg(counts.head, (counts.tail ++ Seq(
+          sw(s1.isNotNull).as("sw1"), sw2(s1.isNotNull).as("sw1sq"),
+          sw(s1).as("swk1c"),
+          sw(s2.isNotNull).as("sw2"), sw2(s2.isNotNull).as("sw2sq"),
+          sw(s2).as("swk2c"),
+          sw(both).as("swp"), sw2(both).as("swpsq"),
+          sw(both && s1).as("swk1"),
+          sw(both && s1 && !s2).as("swb"),
+          sw(both && !s1 && s2).as("swc"))): _*)
+        val swpS = when(hasP, col("swp"))
+        val neff = swpS * swpS / when(hasP, col("swpsq"))
+        val md = (col("swc") - col("swb")) / swpS
+        val vpop = greatest((col("swb") + col("swc")) / swpS - md * md, lit(0.0))
+        val p1 = col("swk1") / swpS
+        (agg,
+          (col("swk1c"), when(has1, col("sw1")), when(has1, col("sw1sq"))),
+          (col("swk2c"), when(has2, col("sw2")), when(has2, col("sw2sq"))),
+          lit(100.0) * md, lit(100.0) * sqrt(vpop / neff),
+          when(p1 > 0.0, round(md / p1 * 100.0, 6)))
+    }
     def outRow(periode: String, parameter: String, nObs: Column,
         mean: Column, llci: Column, ulci: Column) =
       struct(lit(periode).as("periode"), lit(parameter).as("parameter"),
         nObs.as("n_obs"), mean.cast("double").as("mean"),
         llci.cast("double").as("llci"), ulci.cast("double").as("ulci"))
+    def share(periode: String, nObs: Column, c: (Column, Column, Column)) = {
+      val (lo, hi) = wilsonEff(c._1, c._2, c._3)
+      outRow(periode, "aandeel_gunstig", nObs,
+        round(lit(100.0) * c._1 / c._2, 6), round(lo, 6), round(hi, 6))
+    }
     val rows = array(
-      outRow("c_1", "aandeel_gunstig", col("n1"),
-        round(lit(100.0) * col("k1c").cast("double") / n1s, 6),
-        round(alo1, 6), round(ahi1, 6)),
-      outRow("c_2", "aandeel_gunstig", col("n2"),
-        round(lit(100.0) * col("k2c").cast("double") / n2s, 6),
-        round(alo2, 6), round(ahi2, 6)),
+      share("c_1", col("n1"), cyc1),
+      share("c_2", col("n2"), cyc2),
       outRow("c_2", "verschil_aandeel_gunstig_abs", col("np"),
         round(d, 6), round(d - lit(z975) * se, 6),
         round(d + lit(z975) * se, 6)),
-      outRow("c_2", "verschil_aandeel_gunstig_rel", col("np"),
-        when(a1 > 0.0, round(lit(100.0) * (cd - bd) / nd / a1 * 100.0, 6)),
+      outRow("c_2", "verschil_aandeel_gunstig_rel", col("np"), rel,
         lit(null).cast("double"), lit(null).cast("double")))
     level2.select(col("habitattype"), col("criterium"), col("indicator"),
         col("belang"),
@@ -759,59 +912,82 @@ object LsviStatus {
   // of a verdict; `reference/processed/lsvi_mhq/forests/result/
   // status_dikdoodhout.tsv`) ----
 
-  /** Shared tail for [[statusContinuous]]/[[trendContinuous]]: given
-    * per-(subtype) aggregates of a 1e-4 fixed-point value (n, s1,
-    * s2 = integer sum and sum-of-squares), emit per-subtype rows plus
-    * a habitattype roll-up for multi-subtype types, with a normal 95%
-    * interval. The published tables use design-weighted/t bounds (see
-    * [[meanTCi]] for the t variant; the producing inputs are outside
-    * the reference snapshot), so the oracle-backed shape carries the
-    * z interval; bounds are NULL below `minN` plots, like the
+  /** Shared body of [[statusContinuous]]/[[trendContinuous]]: given
+    * (habitattype, habitatsubtype, v) rows of a 1e-4 fixed-point value
+    * (plus the design weight `w` when `weighted`), emit per-subtype
+    * rows plus a habitattype roll-up for multi-subtype types, with a
+    * 95% interval; bounds are NULL below `minN` plots, like the
     * published NA rows (trend n = 1, 2, 4 are NA; n = 14+ carry
-    * bounds). Fixed point keeps the engine/oracle hashes equal under
-    * any aggregation order (see PLANS.md). */
-  private def continuousShape(perSub: DataFrame, meanName: String,
-      minN: Int): DataFrame = {
-    // perSub: habitattype, habitatsubtype, n, s1, s2. Single chain:
-    // each per-subtype aggregate contributes itself AND a roll-up
-    // shard (explode), so the upstream is planned and scanned ONCE —
-    // a union of a subtype branch and a groupBy-rollup branch would
-    // re-plan the whole scan chain per branch (no cross-branch
+    * bounds).
+    *
+    * Unweighted: the mean of the integer sums (s1, s2) with the normal
+    * z interval — the published tables use design-weighted/t bounds
+    * (see [[meanTCi]] for the t variant; the producing inputs are
+    * outside the reference snapshot), so the oracle-backed shape
+    * carries the z interval; fixed point keeps the engine/oracle hashes
+    * equal under any aggregation order (see PLANS.md). Weighted:
+    * mean = Σw·v/Σw, population variance from the weighted moments,
+    * Kish n_eff = (Σw)²/Σw² in the z interval. Its denominator
+    * null-guards (zero Σw, n_eff = 1) are ANSI-safe and identity for
+    * positive weights — with w > 0 and n > 1, n_eff > 1 strictly, so
+    * the oracle SQL needs no matching guard. Quarter-step weights ×
+    * integer fixed-point values keep every weighted double sum exact,
+    * so the distributed aggregation is order-independent and the
+    * oracle compare hash-stable. */
+  private def continuousShape(rows: DataFrame, meanName: String,
+      minN: Int, weighted: Boolean): DataFrame = {
+    val (v, w) = (col("v"), col("w"))
+    val moments =
+      if (weighted) Seq("sw" -> w, "sw2" -> w * w, "swv" -> w * v, "swv2" -> w * v * v)
+      else Seq("s1" -> v, "s2" -> v * v)
+    val perSub = rows.groupBy("habitattype", "habitatsubtype")
+      .agg(count(lit(1)).as("n"), moments.map { case (m, e) => sum(e).as(m) }: _*)
+    // Single chain: each per-subtype aggregate contributes itself AND a
+    // roll-up shard (explode), so the upstream is planned and scanned
+    // ONCE — a union of a subtype branch and a groupBy-rollup branch
+    // would re-plan the whole scan chain per branch (no cross-branch
     // exchange reuse in local mode; see PLANS.md). Everything after
     // perSub is dictionary-sized.
-    val rows = perSub.select(col("habitattype"), col("habitatsubtype"),
-      col("n"), col("s1"), col("s2"),
-      explode(array(lit("sub"), lit("roll"))).as("role"))
-    val agg = rows.groupBy(col("habitattype"), col("role"),
+    val sums = "n" +: moments.map(_._1)
+    val shards = perSub.select(
+      (Seq("habitattype", "habitatsubtype") ++ sums).map(col) :+
+        explode(array(lit("sub"), lit("roll"))).as("role"): _*)
+    val agg = shards.groupBy(col("habitattype"), col("role"),
         when(col("role") === "sub", col("habitatsubtype")).otherwise("")
           .as("subkey"))
-      .agg(sum(col("n")).as("n"), sum(col("s1")).as("s1"),
-        sum(col("s2")).as("s2"), count(lit(1)).as("cnt"),
-        concat_ws("; ", sort_array(collect_set(col("habitatsubtype"))))
-          .as("subs"))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("habitattype")
+      .agg(sum(col("n")).as("n"), (sums.tail.map(m => sum(col(m)).as(m)) ++
+        Seq(count(lit(1)).as("cnt"),
+          concat_ws("; ", sort_array(collect_set(col("habitatsubtype"))))
+            .as("subs"))): _*)
+    val byType = org.apache.spark.sql.expressions.Window.partitionBy("habitattype")
     val typed = agg
-      .withColumn("nsub", max(when(col("role") === "roll", col("cnt"))).over(w))
+      .withColumn("nsub", max(when(col("role") === "roll", col("cnt"))).over(byType))
       .where(col("role") === "sub" || col("nsub") > 1)
-    val all = typed.select(
+    val (mean, h) =
+      if (weighted) {
+        val swS = when(col("sw") =!= 0.0, col("sw"))
+        val sw2S = when(col("sw2") =!= 0.0, col("sw2"))
+        val neff = col("sw") * col("sw") / sw2S
+        val m = col("swv") / swS / lit(10000.0)
+        val vpop = greatest(col("swv2") / swS / lit(1.0e8) - m * m, lit(0.0))
+        (m, lit(z975) * sqrt(vpop / when(neff =!= 1.0, neff - lit(1.0))))
+      } else {
+        val nd = col("n").cast("double")
+        // sample variance of the fixed-point values; the s1*s1 product
+        // is evaluated in doubles with the SAME shape as the oracle SQL,
+        // so any rounding is bit-identical on both sides
+        val va = greatest(
+          (col("s2").cast("double") - col("s1").cast("double") * col("s1") / nd) /
+            (nd - 1.0), lit(0.0))
+        (col("s1").cast("double") / nd / lit(10000.0),
+          lit(z975) * (sqrt(va) / lit(10000.0)) / sqrt(nd))
+      }
+    val ok = col("n") >= minN && col("n") > 1
+    typed.select(
       when(col("role") === "roll" || col("nsub") === 1, "Habitattype")
         .otherwise("Habitatsubtype").as("type_resultaat"),
       col("habitattype"), col("subs").as("habitatsubtype"),
-      col("n"), col("s1"), col("s2"))
-    val nd = col("n").cast("double")
-    val mean = col("s1").cast("double") / nd / lit(10000.0)
-    // sample variance of the fixed-point values; the s1*s1 product is
-    // evaluated in doubles with the SAME shape as the oracle SQL, so
-    // any rounding is bit-identical on both sides
-    val va = greatest(
-      (col("s2").cast("double") - col("s1").cast("double") * col("s1") / nd) /
-        (nd - 1.0), lit(0.0))
-    val sd = sqrt(va) / lit(10000.0)
-    val h = lit(z975) * sd / sqrt(nd)
-    val ok = col("n") >= minN && col("n") > 1
-    all.select(col("type_resultaat"), col("habitattype"),
-      col("habitatsubtype"), lit("Binnen & Buiten").as("sbzh"),
-      col("n").as("n_obs"),
+      lit("Binnen & Buiten").as("sbzh"), col("n").as("n_obs"),
       round(mean, 6).as(meanName),
       when(ok, round(mean - h, 6)).as(s"${meanName}_llci"),
       when(ok, round(mean + h, 6)).as(s"${meanName}_ulci"))
@@ -825,124 +1001,20 @@ object LsviStatus {
     * table at n_obs level for all 11 rows (the value column — thick
     *-dead-wood stems/ha from the tree-level inventory — is not in the
     * reference snapshot). Input: id, date, point_code, habitattype,
-    * habitatsubtype, value. */
+    * habitatsubtype, value. The published values are design-weighted
+    * means: under `weightCol` the weight rides the latest visit
+    * (arg-max by (date, id), like the value). */
   def statusContinuous(plots: DataFrame, indicator: String,
-      voorwaarde: String): DataFrame = {
-    val v4 = floor(col("value") * 10000.0 + 0.5).cast("long")
+      voorwaarde: String, weightCol: Option[String] = None): DataFrame = {
+    val key = struct(col("date"), col("id"))
     val latest = plots.where(col("value").isNotNull)
-      .withColumn("v4", v4)
+      .withColumn("v4", floor(col("value") * 10000.0 + 0.5).cast("long"))
       .groupBy("point_code", "habitatsubtype")
-      .agg(max_by(col("v4"), struct(col("date"), col("id"))).as("v"),
-        max_by(col("habitattype"), struct(col("date"), col("id")))
-          .as("habitattype"))
-    val perSub = latest.groupBy("habitattype", "habitatsubtype")
-      .agg(count(lit(1)).as("n"), sum(col("v")).as("s1"),
-        sum(col("v") * col("v")).as("s2"))
-    continuousShape(perSub, "gemiddelde", 2)
+      .agg(max_by(col("v4"), key).as("v"), (latestWeight(weightCol, key) :+
+        max_by(col("habitattype"), key).as("habitattype")): _*)
+    continuousShape(latest, "gemiddelde", 2, weightCol.isDefined)
       .withColumn("indicator", lit(indicator))
       .withColumn("voorwaarde", lit(voorwaarde))
-  }
-
-  /** Design-weighted [[statusContinuous]]: the published dikdoodhout
-    * values are design-weighted means (the unweighted overload is the
-    * equal-weight z shape). The weighted sums (Σw, Σw², Σw·v, Σw·v²)
-    * ride the SAME latest-visit + per-subtype aggregation and the
-    * habitattype roll-up sums the weighted partials, so the plan shape
-    * is unchanged — one scan, exploded roll-up shard, dictionary tail.
-    * The weight rides the latest visit (arg-max by (date, id), like
-    * the value). Interval: Kish n_eff z bounds — at unit weights
-    * n_eff = n and the algebra reduces EXACTLY to the unweighted
-    * z·sd/√n (pinned by `CensusShapesSpec`). */
-  def statusContinuous(plots: DataFrame, indicator: String,
-      voorwaarde: String, weightCol: String): DataFrame = {
-    val v4 = floor(col("value") * 10000.0 + 0.5).cast("long")
-    val latest = plots.where(col("value").isNotNull)
-      .withColumn("v4", v4)
-      .groupBy("point_code", "habitatsubtype")
-      .agg(max_by(col("v4"), struct(col("date"), col("id"))).as("v"),
-        max_by(col(weightCol).cast("double"), struct(col("date"), col("id")))
-          .as("w"),
-        max_by(col("habitattype"), struct(col("date"), col("id")))
-          .as("habitattype"))
-    continuousShapeWeighted(weightedPerSub(latest, col("v")), "gemiddelde", 2)
-      .withColumn("indicator", lit(indicator))
-      .withColumn("voorwaarde", lit(voorwaarde))
-  }
-
-  /** Design-weighted [[trendContinuous]]: paired differences weighted
-    * by the pair's LATEST-visit weight (the trendIndicatoren
-    * convention), same single-chain shape as the unweighted overload. */
-  def trendContinuous(plots: DataFrame, indicator: String,
-      voorwaarde: String, weightCol: String): DataFrame = {
-    val v4 = floor(col("value") * 10000.0 + 0.5).cast("long")
-    val pairs = plots.where(col("value").isNotNull)
-      .withColumn("v4", v4)
-      .groupBy("point_code", "habitatsubtype")
-      .agg(min_by(col("v4"), struct(col("date"), col("id"))).as("v1"),
-        max_by(col("v4"), struct(col("date"), col("id"))).as("v2"),
-        max_by(col(weightCol).cast("double"), struct(col("date"), col("id")))
-          .as("w"),
-        max_by(col("habitattype"), struct(col("date"), col("id")))
-          .as("habitattype"),
-        countDistinct(col("date")).as("nc"))
-      .where(col("nc") > 1)
-      .withColumn("d", col("v2") - col("v1"))
-    continuousShapeWeighted(weightedPerSub(pairs, col("d")), "verschil", 5)
-      .withColumn("indicator", lit(indicator))
-      .withColumn("voorwaarde", lit(voorwaarde))
-  }
-
-  /** Per-subtype weighted sums over a fixed-point value column. */
-  private def weightedPerSub(rows: DataFrame, v: Column): DataFrame =
-    rows.groupBy("habitattype", "habitatsubtype")
-      .agg(count(lit(1)).as("n"),
-        sum(col("w")).as("sw"), sum(col("w") * col("w")).as("sw2"),
-        sum(col("w") * v).as("swv"),
-        sum(col("w") * v * v).as("swv2"))
-
-  /** Weighted twin of [[continuousShape]]: same exploded roll-up single
-    * chain over (n, Σw, Σw², Σw·v, Σw·v²); mean = Σw·v/Σw (1e-4 fixed
-    * point), population variance from the weighted moments, Kish
-    * n_eff = (Σw)²/Σw² in the z interval. Denominator null-guards
-    * (zero Σw, n_eff = 1) are ANSI-safe and identity for positive
-    * weights — with w > 0 and n > 1, n_eff > 1 strictly, so the
-    * oracle SQL needs no matching guard. Bounds NULL below `minN`
-    * like the published NA rows. Fixture exactness: quarter-step
-    * weights × integer fixed-point values keep every weighted double
-    * sum exact, so the distributed aggregation is order-independent
-    * and the oracle compare hash-stable. */
-  private def continuousShapeWeighted(perSub: DataFrame, meanName: String,
-      minN: Int): DataFrame = {
-    val rows = perSub.select(col("habitattype"), col("habitatsubtype"),
-      col("n"), col("sw"), col("sw2"), col("swv"), col("swv2"),
-      explode(array(lit("sub"), lit("roll"))).as("role"))
-    val agg = rows.groupBy(col("habitattype"), col("role"),
-        when(col("role") === "sub", col("habitatsubtype")).otherwise("")
-          .as("subkey"))
-      .agg(sum(col("n")).as("n"), sum(col("sw")).as("sw"),
-        sum(col("sw2")).as("sw2"), sum(col("swv")).as("swv"),
-        sum(col("swv2")).as("swv2"), count(lit(1)).as("cnt"),
-        concat_ws("; ", sort_array(collect_set(col("habitatsubtype"))))
-          .as("subs"))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("habitattype")
-    val typed = agg
-      .withColumn("nsub", max(when(col("role") === "roll", col("cnt"))).over(w))
-      .where(col("role") === "sub" || col("nsub") > 1)
-    val swS = when(col("sw") =!= 0.0, col("sw"))
-    val sw2S = when(col("sw2") =!= 0.0, col("sw2"))
-    val neff = col("sw") * col("sw") / sw2S
-    val m = col("swv") / swS / lit(10000.0)
-    val vpop = greatest(col("swv2") / swS / lit(1.0e8) - m * m, lit(0.0))
-    val h = lit(z975) * sqrt(vpop / when(neff =!= 1.0, neff - lit(1.0)))
-    val ok = col("n") >= minN && col("n") > 1
-    typed.select(
-      when(col("role") === "roll" || col("nsub") === 1, "Habitattype")
-        .otherwise("Habitatsubtype").as("type_resultaat"),
-      col("habitattype"), col("subs").as("habitatsubtype"),
-      lit("Binnen & Buiten").as("sbzh"), col("n").as("n_obs"),
-      round(m, 6).as(meanName),
-      when(ok, round(m - h, 6)).as(s"${meanName}_llci"),
-      when(ok, round(m + h, 6)).as(s"${meanName}_ulci"))
   }
 
   /** `trend_dikdoodhout` shape: paired first-vs-last difference of a
@@ -950,24 +1022,22 @@ object LsviStatus {
     * require both visits in the SAME subtype (the published 91E0
     * subtype pairs sum to exactly the habitattype's 70 paired
     * points), and interval columns are NULL below 5 pairs like the
-    * published NA rows. n_obs validated on all 11 published rows. */
+    * published NA rows. n_obs validated on all 11 published rows.
+    * Under `weightCol` each difference is weighted by the pair's
+    * LATEST-visit weight (the [[trendIndicatoren]] convention). */
   def trendContinuous(plots: DataFrame, indicator: String,
-      voorwaarde: String): DataFrame = {
-    val v4 = floor(col("value") * 10000.0 + 0.5).cast("long")
+      voorwaarde: String, weightCol: Option[String] = None): DataFrame = {
+    val key = struct(col("date"), col("id"))
     val pairs = plots.where(col("value").isNotNull)
-      .withColumn("v4", v4)
+      .withColumn("v4", floor(col("value") * 10000.0 + 0.5).cast("long"))
       .groupBy("point_code", "habitatsubtype")
-      .agg(min_by(col("v4"), struct(col("date"), col("id"))).as("v1"),
-        max_by(col("v4"), struct(col("date"), col("id"))).as("v2"),
-        max_by(col("habitattype"), struct(col("date"), col("id")))
-          .as("habitattype"),
-        countDistinct(col("date")).as("nc"))
+      .agg(min_by(col("v4"), key).as("v1"), (Seq(max_by(col("v4"), key).as("v2")) ++
+        latestWeight(weightCol, key) ++ Seq(
+          max_by(col("habitattype"), key).as("habitattype"),
+          countDistinct(col("date")).as("nc"))): _*)
       .where(col("nc") > 1)
-      .withColumn("d", col("v2") - col("v1"))
-    val perSub = pairs.groupBy("habitattype", "habitatsubtype")
-      .agg(count(lit(1)).as("n"), sum(col("d")).as("s1"),
-        sum(col("d") * col("d")).as("s2"))
-    continuousShape(perSub, "verschil", 5)
+      .withColumn("v", col("v2") - col("v1"))
+    continuousShape(pairs, "verschil", 5, weightCol.isDefined)
       .withColumn("indicator", lit(indicator))
       .withColumn("voorwaarde", lit(voorwaarde))
   }
@@ -1097,480 +1167,4 @@ object LsviStatus {
     * P(X > chi2) = erfc(sqrt(chi2 / 2)). */
   def mcNemarP(chi2: Double): Double =
     org.apache.commons.math3.special.Erf.erfc(math.sqrt(chi2 / 2.0))
-
-  // ---- design-weighted variants ----------------------------------------
-  //
-  // The published pooled "Binnen & Buiten" rows carry survey-design
-  // weights drawn in the reference's analysis repo. These overloads
-  // accept an explicit per-plot weight column and compute
-  // Hájek-ratio estimates with design-effect-adjusted intervals:
-  //
-  //   share / mean:  Σw·x / Σw
-  //   n_eff        = (Σw)² / Σw²        (Kish effective sample size)
-  //   every count X in a closed-form interval becomes its effective
-  //   count n_eff · (Σw·1[X] / Σw)  — with unit weights that is X
-  //   itself, so each weighted formula reduces EXACTLY to its
-  //   unweighted sibling's algebra (validated in WeightedStatusSpec).
-  //
-  // Validation against the snapshot (WeightedStatusSpec): one weight
-  // ratio per (habitattype × SAC) stratum solved from the pooled
-  // `status_habitat_fs` row reproduces the published design-weighted
-  // pooled rows of BOTH `index_hq_fs.tsv` (≤1e-4 on all 6 types) and
-  // `status_indicatoren_fs.tsv` (≤0.02pp on every single-subtype
-  // pooled row) — i.e. the reference's weights are uniform within
-  // forest strata and its pooled estimator is this Σw·x/Σw.
-  //
-  // The weighted path aggregates plain double sums (Σw, Σw², Σw·x,
-  // Σw·x²) — at any scale these are one hash aggregation like the
-  // unweighted path; the q130/q131 oracle parity relies on the
-  // harness's binary-fraction weights and 1e-3-step values keeping
-  // every distributed sum exact (order-independent), as PLANS.md
-  // documents for the fixed-point chains.
-
-  /** Weighted Wilson interval on [0, 100] via effective counts; the
-    * degenerate all-gunstig / none-gunstig rendering follows the
-    * unweighted [[wilson]]. */
-  private def wilsonEff(swk: Column, sw: Column, sw2: Column): (Column, Column) = {
-    // zero-total-weight groups (degenerate input) null-propagate
-    // instead of throwing under ANSI division; identical otherwise
-    val swS = when(sw =!= 0.0, sw)
-    val sw2S = when(sw2 =!= 0.0, sw2)
-    val neff = sw * sw / sw2S
-    val p = swk / swS
-    val z2 = lit(z975 * z975)
-    val den = lit(1.0) + z2 / neff
-    val center = (p + z2 / (lit(2.0) * neff)) / den
-    val half = (lit(z975) / den) *
-      sqrt(p * (lit(1.0) - p) / neff + z2 / (lit(4.0) * neff * neff))
-    val degen = swk === lit(0.0) || swk === sw
-    val lo = when(degen, lit(100.0) * p)
-      .otherwise(lit(100.0) * greatest(lit(0.0), center - half))
-    val hi = when(degen, lit(100.0) * p)
-      .otherwise(lit(100.0) * least(lit(1.0), center + half))
-    (lo, hi)
-  }
-
-  /** Design-weighted [[statusHabitat]]: `weightCol` is the per-plot
-    * design weight on the plot table (any positive scale — ratios are
-    * scale-free). `n_obs` stays the raw plot count like the published
-    * tables; shares and bounds are weighted. */
-  def statusHabitat(plotLsvi: DataFrame, weightCol: String): DataFrame = {
-    val rows = latestPerPoint(plotLsvi)
-      .where(col("lsvi").isNotNull)
-      .select(col("habitattype"), (col("lsvi") === "gunstig").as("g"),
-        col(weightCol).cast("double").as("w"),
-        explode(array(
-          when(col("in_sac") === 1, "Binnen").otherwise("Buiten"),
-          lit("Binnen & Buiten"))).as("sbzh"))
-    val agg = rows.groupBy("habitattype", "sbzh")
-      .agg(count(lit(1)).as("n_obs"),
-        sum(col("w")).as("sw"), sum(col("w") * col("w")).as("sw2"),
-        sum(when(col("g"), col("w")).otherwise(0.0)).as("swk"))
-    val (lo, hi) = wilsonEff(col("swk"), col("sw"), col("sw2"))
-    agg
-      .withColumn("aandeel_gunstig",
-        round(lit(100.0) * col("swk") / col("sw"), 6))
-      .withColumn("aandeel_gunstig_llci", round(lo, 6))
-      .withColumn("aandeel_gunstig_ulci", round(hi, 6))
-      .withColumn("beoordeling",
-        beoordeling(col("aandeel_gunstig_llci"), col("aandeel_gunstig_ulci")))
-      .drop("sw", "sw2", "swk")
-  }
-
-  /** Design-weighted [[statusIndicatoren]] — the weight rides the
-    * plot table and joins to the indicator rows by id. */
-  def statusIndicatoren(indicator: DataFrame, plotMeta: DataFrame,
-      weightCol: String): DataFrame = {
-    val latest = latestPerPoint(plotMeta)
-      .select(col("id"), when(col("in_sac") === 1, "Binnen").otherwise("Buiten")
-        .as("stratum"), col(weightCol).cast("double").as("w"))
-    val rows = indicator
-      .join(latest, Seq("id"))
-      .where(col("status_indicator").isNotNull)
-      .select(col("type_analysis").as("habitattype"), col("criterium"),
-        col("indicator"), col("belang"), col("status_indicator"), col("w"),
-        explode(array(col("stratum"), lit("Binnen & Buiten"))).as("sbzh"))
-    val agg = rows.groupBy("habitattype", "sbzh", "criterium", "indicator", "belang")
-      .agg(count(lit(1)).as("n_obs"),
-        sum(col("w")).as("sw"), sum(col("w") * col("w")).as("sw2"),
-        sum(when(col("status_indicator"), col("w")).otherwise(0.0)).as("swk"))
-    val (lo, hi) = wilsonEff(col("swk"), col("sw"), col("sw2"))
-    agg
-      .withColumn("aandeel_gunstig",
-        round(lit(100.0) * col("swk") / col("sw"), 6))
-      .withColumn("aandeel_gunstig_llci", round(lo, 6))
-      .withColumn("aandeel_gunstig_ulci", round(hi, 6))
-      .withColumn("beoordeling",
-        beoordeling(col("aandeel_gunstig_llci"), col("aandeel_gunstig_ulci")))
-      .drop("sw", "sw2", "swk")
-  }
-
-  /** Shared weighted-mean tail: from (Σw, Σw², Σw·x, Σw·x²) to the
-    * Hájek mean and its design-effect z interval. The interval is
-    * mean ± z·sqrt(v_pop / (n_eff − 1)) with v_pop the weighted
-    * population variance — with unit weights that is algebraically the
-    * unweighted z interval (z·s/√n with the sample sd). */
-  private def weightedMeanCols(agg: DataFrame, base: String): DataFrame = {
-    // null-guard the denominators: zero total weight (degenerate
-    // input) and n_eff == 1 (a single effective observation, e.g. all
-    // weight on one row) would THROW under ANSI division; the guarded
-    // expressions null-propagate — mean/interval become NULL — and are
-    // identical for every non-degenerate group
-    val swS = when(col("sw") =!= 0.0, col("sw"))
-    val sw2S = when(col("sw2") =!= 0.0, col("sw2"))
-    val neff = col("sw") * col("sw") / sw2S
-    val m = col("swx") / swS
-    val vpop = greatest(col("swx2") / swS - m * m, lit(0.0))
-    val h = lit(z975) * sqrt(vpop / when(neff =!= 1.0, neff - lit(1.0)))
-    agg
-      .withColumn(s"${base}_mean", round(m, 6))
-      .withColumn(s"${base}_llci",
-        when(col("n_obs") > 1, round(m - h, 6)))
-      .withColumn(s"${base}_ulci",
-        when(col("n_obs") > 1, round(m + h, 6)))
-      .drop("sw", "sw2", "swx", "swx2")
-  }
-
-  /** Design-weighted [[indexHq]]. */
-  def indexHq(plotIndex: DataFrame, weightCol: String): DataFrame = {
-    val rows = latestPerPoint(plotIndex)
-      .where(col("index_mean_ind").isNotNull)
-      .select(col("habitattype"), col("index_mean_ind").as("x"),
-        col(weightCol).cast("double").as("w"),
-        explode(array(
-          struct(lit("SBZH").as("type_resultaat"),
-            when(col("in_sac") === 1, "Binnen").otherwise("Buiten").as("sbzh")),
-          struct(lit("Habitattype").as("type_resultaat"),
-            lit("Binnen & Buiten").as("sbzh")))).as("g"))
-      .select(col("habitattype"), col("g.type_resultaat"), col("g.sbzh"),
-        col("x"), col("w"))
-    val agg = rows.groupBy("type_resultaat", "habitattype", "sbzh")
-      .agg(count(lit(1)).as("n_obs"),
-        sum(col("w")).as("sw"), sum(col("w") * col("w")).as("sw2"),
-        sum(col("w") * col("x")).as("swx"),
-        sum(col("w") * col("x") * col("x")).as("swx2"))
-    weightedMeanCols(agg, "index_hq")
-  }
-
-  /** Design-weighted [[indexInd]]. */
-  def indexInd(indicator: DataFrame, plotMeta: DataFrame,
-      weightCol: String): DataFrame = {
-    val latest = latestPerPoint(plotMeta)
-      .select(col("id"), when(col("in_sac") === 1, "Binnen").otherwise("Buiten")
-        .as("stratum"), col(weightCol).cast("double").as("w"))
-    val rows = indicator
-      .join(latest, Seq("id"))
-      .where(col("verschilscore").isNotNull)
-      .select(col("type_analysis").as("habitattype"), col("criterium"),
-        col("indicator"), col("belang"),
-        col("verschilscore").as("x"), col("w"),
-        explode(array(
-          struct(lit("SBZH").as("type_resultaat"), col("stratum").as("sbzh")),
-          struct(lit("Habitattype").as("type_resultaat"),
-            lit("Binnen & Buiten").as("sbzh")))).as("g"))
-      .select(col("habitattype"), col("g.type_resultaat"), col("g.sbzh"),
-        col("criterium"), col("indicator"), col("belang"), col("x"), col("w"))
-    val agg = rows.groupBy("type_resultaat", "habitattype", "sbzh",
-        "criterium", "indicator", "belang")
-      .agg(count(lit(1)).as("n_obs"),
-        sum(col("w")).as("sw"), sum(col("w") * col("w")).as("sw2"),
-        sum(col("w") * col("x")).as("swx"),
-        sum(col("w") * col("x") * col("x")).as("swx2"))
-    weightedMeanCols(agg, "index_ind")
-  }
-
-  /** Design-weighted [[trendIndicatoren]]: per-cycle shares and the
-    * paired Wald difference via effective counts. The relative-change
-    * interval stays a point estimate like the unweighted shape. */
-  def trendIndicatoren(indicator: DataFrame, plotMeta: DataFrame,
-      weightCol: String): DataFrame = {
-    val pairs = plotMeta
-      .groupBy("habitattype", "point_code")
-      .agg(
-        min_by(col("id"), struct(col("date"), col("id"))).as("id_1"),
-        max_by(col("id"), struct(col("date"), col("id"))).as("id_2"),
-        max_by(col(weightCol).cast("double"), struct(col("date"), col("id")))
-          .as("w"),
-        countDistinct(col("date")).as("nc"))
-      .where(col("nc") > 1)
-    val cyc = pairs.select(col("point_code"), col("w"), explode(array(
-        struct(col("id_1").as("id"), lit("c_1").as("periode")),
-        struct(col("id_2").as("id"), lit("c_2").as("periode")))).as("e"))
-      .select(col("point_code"), col("w"), col("e.id"), col("e.periode"))
-    val known = indicator.where(col("status_indicator").isNotNull)
-    val level1 = known.join(cyc, Seq("id"))
-      .groupBy(col("type_analysis").as("habitattype"), col("point_code"),
-        col("criterium"), col("indicator"), col("belang"))
-      .agg(
-        max(when(col("periode") === "c_1", col("status_indicator"))).as("s1"),
-        max(when(col("periode") === "c_2", col("status_indicator"))).as("s2"),
-        max(col("w")).as("w"))
-    val both = col("s1").isNotNull && col("s2").isNotNull
-    val w = col("w")
-    val level2 = level1.groupBy("habitattype", "criterium", "indicator", "belang")
-      .agg(
-        count(col("s1")).as("n1"),
-        sum(when(col("s1").isNotNull, w).otherwise(0.0)).as("sw1"),
-        sum(when(col("s1").isNotNull, w * w).otherwise(0.0)).as("sw1sq"),
-        sum(when(col("s1"), w).otherwise(0.0)).as("swk1c"),
-        count(col("s2")).as("n2"),
-        sum(when(col("s2").isNotNull, w).otherwise(0.0)).as("sw2_"),
-        sum(when(col("s2").isNotNull, w * w).otherwise(0.0)).as("sw2sq"),
-        sum(when(col("s2"), w).otherwise(0.0)).as("swk2c"),
-        count(when(both, 1)).as("np"),
-        sum(when(both, w).otherwise(0.0)).as("swp"),
-        sum(when(both, w * w).otherwise(0.0)).as("swpsq"),
-        sum(when(both && col("s1"), w).otherwise(0.0)).as("swk1"),
-        sum(when(both && col("s2"), w).otherwise(0.0)).as("swk2"),
-        sum(when(both && col("s1") && !col("s2"), w).otherwise(0.0)).as("swb"),
-        sum(when(both && !col("s1") && col("s2"), w).otherwise(0.0)).as("swc"))
-    // single-chain tail (r11, same rationale as the unweighted shape):
-    // all four output rows from ONE explode over the level-2 aggregate,
-    // identical expressions, n_obs filter drops empty cells. Weighted
-    // denominators carry the same null guards (`when(n > 0, sum)`) —
-    // computed pre-filter, an empty cell's zero sums would otherwise
-    // THROW under ANSI division.
-    val sw1s = when(col("n1") > 0, col("sw1"))
-    val sw1sqS = when(col("n1") > 0, col("sw1sq"))
-    val sw2s = when(col("n2") > 0, col("sw2_"))
-    val sw2sqS = when(col("n2") > 0, col("sw2sq"))
-    val (alo1, ahi1) = wilsonEff(col("swk1c"), sw1s, sw1sqS)
-    val (alo2, ahi2) = wilsonEff(col("swk2c"), sw2s, sw2sqS)
-    // paired difference of the within-point change d ∈ {-1, 0, 1}:
-    // mean_d = (Σw·c − Σw·b)/Σw, SE = sqrt(v_pop(d)/n_eff) — with unit
-    // weights exactly the classic 100·sqrt(b+c−(b−c)²/n)/n Wald SE
-    val swpS = when(col("np") > 0, col("swp"))
-    val swpsqS = when(col("np") > 0, col("swpsq"))
-    val neff = swpS * swpS / swpsqS
-    val md = (col("swc") - col("swb")) / swpS
-    val vpop = greatest(
-      (col("swb") + col("swc")) / swpS - md * md, lit(0.0))
-    val d = lit(100.0) * md
-    val se = lit(100.0) * sqrt(vpop / neff)
-    val p1 = col("swk1") / swpS
-    def outRow(periode: String, parameter: String, nObs: Column,
-        mean: Column, llci: Column, ulci: Column) =
-      struct(lit(periode).as("periode"), lit(parameter).as("parameter"),
-        nObs.as("n_obs"), mean.cast("double").as("mean"),
-        llci.cast("double").as("llci"), ulci.cast("double").as("ulci"))
-    val rows = array(
-      outRow("c_1", "aandeel_gunstig", col("n1"),
-        round(lit(100.0) * col("swk1c") / sw1s, 6),
-        round(alo1, 6), round(ahi1, 6)),
-      outRow("c_2", "aandeel_gunstig", col("n2"),
-        round(lit(100.0) * col("swk2c") / sw2s, 6),
-        round(alo2, 6), round(ahi2, 6)),
-      outRow("c_2", "verschil_aandeel_gunstig_abs", col("np"),
-        round(d, 6), round(d - lit(z975) * se, 6),
-        round(d + lit(z975) * se, 6)),
-      outRow("c_2", "verschil_aandeel_gunstig_rel", col("np"),
-        when(p1 > 0.0, round(md / p1 * 100.0, 6)),
-        lit(null).cast("double"), lit(null).cast("double")))
-    level2.select(col("habitattype"), col("criterium"), col("indicator"),
-        col("belang"),
-        explode(filter(rows, r => r.getField("n_obs") > 0)).as("e"))
-      .select(col("habitattype"), col("e.periode").as("periode"),
-        col("criterium"), col("indicator"), col("belang"),
-        col("e.n_obs").as("n_obs"), col("e.parameter").as("parameter"),
-        col("e.mean").as("mean"), col("e.llci").as("llci"),
-        col("e.ulci").as("ulci"))
-  }
-
-  /** Design-weighted [[trendIndexHq]]: paired habitat-quality index
-    * differences with the latest-visit design weight — Hájek mean
-    * Σw·d/Σw, Kish-n_eff z interval (the [[weightedMeanCols]] tail),
-    * and the weighted relative difference Σw·d / Σw·x₁ (the weighted
-    * analogue of the unweighted shape's Σd / Σx₁). Unlike the
-    * unweighted shape there is no 1e-6 integer fixed point: fractional
-    * weights make integer accumulation impossible, so exact-replay
-    * fixtures should feed binary-fraction values (see q136). */
-  def trendIndexHq(plotIndex: DataFrame, weightCol: String): DataFrame = {
-    val key = struct(col("date"), col("id"))
-    val pairs = plotIndex.where(col("index_mean_ind").isNotNull)
-      .groupBy("habitattype", "point_code").agg(
-        min_by(col("index_mean_ind"), key).as("x1"),
-        max_by(col("index_mean_ind"), key).as("x2"),
-        max_by(col("in_sac"), key).as("in_sac"),
-        max_by(col(weightCol).cast("double"), key).as("w"),
-        countDistinct(col("date")).as("nc"))
-      .where(col("nc") > 1)
-      .withColumn("d", col("x2") - col("x1"))
-    val rows = pairs.select(col("habitattype"), col("d"), col("x1"), col("w"),
-        explode(array(
-          struct(lit("SBZH").as("type_resultaat"),
-            when(col("in_sac") === 1, "Binnen").otherwise("Buiten").as("sbzh")),
-          struct(lit("Habitattype").as("type_resultaat"),
-            lit("Binnen & Buiten").as("sbzh")))).as("g"))
-      .select(col("habitattype"), col("g.type_resultaat"), col("g.sbzh"),
-        col("d"), col("x1"), col("w"))
-    val agg = rows.groupBy("type_resultaat", "habitattype", "sbzh")
-      .agg(count(lit(1)).as("n_obs"),
-        sum(col("w")).as("sw"), sum(col("w") * col("w")).as("sw2"),
-        sum(col("w") * col("d")).as("swx"),
-        sum(col("w") * col("d") * col("d")).as("swx2"),
-        sum(col("w") * col("x1")).as("swx1"))
-      .withColumn("index_diff_rel",
-        when(col("swx1") =!= 0.0, round(col("swx") / col("swx1"), 6)))
-      .drop("swx1")
-    weightedMeanCols(agg, "index_diff")
-  }
-
-  /** Design-weighted [[trendIndexInd]]: the same single-chain cycle
-    * pivot with the latest-visit pair weight and the Hájek/Kish mean
-    * interval at indicator grain. */
-  def trendIndexInd(indicator: DataFrame, plotMeta: DataFrame,
-      weightCol: String): DataFrame = {
-    val key = struct(col("date"), col("id"))
-    val pr = plotMeta.groupBy("habitattype", "point_code").agg(
-        min_by(col("id"), key).as("id_1"),
-        max_by(col("id"), key).as("id_2"),
-        max_by(col("in_sac"), key).as("in_sac"),
-        max_by(col(weightCol).cast("double"), key).as("w"),
-        countDistinct(col("date")).as("nc"))
-      .where(col("nc") > 1)
-    val cyc = pr.select(col("point_code"), col("in_sac"), col("w"),
-        explode(array(
-          struct(col("id_1").as("id"), lit("c_1").as("periode")),
-          struct(col("id_2").as("id"), lit("c_2").as("periode")))).as("e"))
-      .select(col("point_code"), col("in_sac"), col("w"), col("e.id"),
-        col("e.periode"))
-    val rows = indicator.where(col("verschilscore").isNotNull)
-      .join(cyc, Seq("id"))
-      .groupBy(col("type_analysis").as("habitattype"), col("point_code"),
-        col("in_sac"), col("criterium"), col("indicator"), col("belang"))
-      .agg(
-        max(when(col("periode") === "c_1", col("verschilscore"))).as("x1"),
-        max(when(col("periode") === "c_2", col("verschilscore"))).as("x2"),
-        max(col("w")).as("w"))
-      .where(col("x1").isNotNull && col("x2").isNotNull)
-      .withColumn("d", col("x2") - col("x1"))
-      .select(col("habitattype"), col("criterium"), col("indicator"),
-        col("belang"), col("d"), col("w"),
-        explode(array(
-          struct(lit("SBZH").as("type_resultaat"),
-            when(col("in_sac") === 1, "Binnen").otherwise("Buiten").as("sbzh")),
-          struct(lit("Habitattype").as("type_resultaat"),
-            lit("Binnen & Buiten").as("sbzh")))).as("g"))
-      .select(col("habitattype"), col("g.type_resultaat"), col("g.sbzh"),
-        col("criterium"), col("indicator"), col("belang"), col("d"), col("w"))
-    val agg = rows.groupBy("type_resultaat", "habitattype", "sbzh",
-        "criterium", "indicator", "belang")
-      .agg(count(lit(1)).as("n_obs"),
-        sum(col("w")).as("sw"), sum(col("w") * col("w")).as("sw2"),
-        sum(col("w") * col("d")).as("swx"),
-        sum(col("w") * col("d") * col("d")).as("swx2"))
-    weightedMeanCols(agg, "index_diff")
-  }
-
-  /** Design-weighted [[trendHabitat]]: the same long-form output with
-    * weighted shares, effective-count Wilson and Wald intervals, and
-    * the log-ratio interval on effective counts. Year columns stay
-    * descriptive (unweighted min/max/mean interval). Supports the
-    * same optional `cycle` column as the unweighted shape. */
-  def trendHabitat(plotLsvi: DataFrame, weightCol: String): DataFrame = {
-    val hasCycle = plotLsvi.columns.contains("cycle")
-    val in0 = plotLsvi.where(col("lsvi").isNotNull)
-    val in1 = if (hasCycle) in0.where(col("cycle").isin(0, 1)) else in0
-    val pairs = in1
-      .groupBy("habitattype", "point_code")
-      .agg(
-        min_by(struct((col("lsvi") === "gunstig").as("g"),
-          col("date").as("j")), struct(col("date"), col("id"))).as("r1"),
-        max_by(struct((col("lsvi") === "gunstig").as("g"),
-          col("date").as("j")), struct(col("date"), col("id"))).as("r2"),
-        max_by(col("in_sac"), struct(col("date"), col("id"))).as("in_sac"),
-        max_by(col(weightCol).cast("double"), struct(col("date"), col("id")))
-          .as("w"),
-        (if (hasCycle) countDistinct(col("cycle"))
-         else countDistinct(col("date"))).as("nc"))
-      .where(if (hasCycle) col("nc") === 2 else col("nc") > 1)
-    val rows = pairs.select(col("habitattype"),
-        col("r1.g").as("g1"), col("r2.g").as("g2"),
-        col("r1.j").as("j1"), col("r2.j").as("j2"), col("w"),
-        explode(array(
-          struct(lit("SBZH").as("type_resultaat"),
-            when(col("in_sac") === 1, "Binnen").otherwise("Buiten").as("sbzh")),
-          struct(lit("Habitattype").as("type_resultaat"),
-            lit("Binnen & Buiten").as("sbzh")))).as("s"))
-      .select(col("habitattype"), col("s.type_resultaat"), col("s.sbzh"),
-        col("g1"), col("g2"), col("j1"), col("j2"), col("w"))
-    val agg = rows.groupBy("type_resultaat", "habitattype", "sbzh")
-      .agg(count(lit(1)).as("n_obs"),
-        sum(col("w")).as("sw"), sum(col("w") * col("w")).as("sw2"),
-        sum(when(col("g1"), col("w")).otherwise(0.0)).as("swk1"),
-        sum(when(col("g2"), col("w")).otherwise(0.0)).as("swk2"),
-        sum(when(col("g1") && !col("g2"), col("w")).otherwise(0.0)).as("swb"),
-        sum(when(!col("g1") && col("g2"), col("w")).otherwise(0.0)).as("swc"),
-        min(col("j1")).as("jmin1"), max(col("j1")).as("jmax1"),
-        min(col("j2")).as("jmin2"), max(col("j2")).as("jmax2"),
-        sum(col("j2") - col("j1")).as("sdj"))
-    val neff = col("sw") * col("sw") / col("sw2")
-    val (lo1, hi1) = wilsonEff(col("swk1"), col("sw"), col("sw2"))
-    val (lo2, hi2) = wilsonEff(col("swk2"), col("sw"), col("sw2"))
-    val md = (col("swk2") - col("swk1")) / col("sw")
-    val dAbs = lit(100.0) * md
-    val vpop = greatest(
-      (col("swb") + col("swc")) / col("sw") - md * md, lit(0.0))
-    val seAbs = lit(100.0) * sqrt(vpop / neff)
-    val absLo = round(dAbs - lit(z975) * seAbs, 6)
-    val absHi = round(dAbs + lit(z975) * seAbs, 6)
-    // effective counts for the paired log-ratio interval
-    val k1e = neff * (col("swk1") / col("sw"))
-    val k2e = neff * (col("swk2") / col("sw"))
-    val bce = neff * ((col("swb") + col("swc")) / col("sw"))
-    val relMean = when(col("swk1") > 0.0,
-      round(lit(100.0) * (col("swk2") - col("swk1")) / col("swk1"), 6))
-    val seLn = sqrt(bce / (k1e * k2e))
-    val relDef = col("swk1") > 0.0 && col("swk2") > 0.0
-    val relLo = when(relDef,
-      round(lit(100.0) *
-        (exp(log(col("swk2") / col("swk1")) - lit(z975) * seLn) - lit(1.0)), 6))
-    val relHi = when(relDef,
-      round(lit(100.0) *
-        (exp(log(col("swk2") / col("swk1")) + lit(z975) * seLn) - lit(1.0)), 6))
-    val relKlasse = when(col("swk1") > 0.0,
-        effectKlasse(relMean, relLo, relHi, 25.0, 25.0))
-      .otherwise(when(absLo > 0.0, "++").otherwise("?"))
-    val nd = col("n_obs").cast("double")
-    val vj = bround(col("sdj").cast("double") / nd, 1)
-    val out = agg.select(col("type_resultaat"), col("habitattype"),
-      col("sbzh"), col("n_obs"),
-      explode(array(
-        struct(lit("c_1").as("periode"), lit("aandeel_gunstig").as("parameter"),
-          round(lit(100.0) * col("swk1") / col("sw"), 6).as("mean"),
-          round(lo1, 6).as("llci"), round(hi1, 6).as("ulci"),
-          lit(null).cast("string").as("klasse"),
-          lit(null).cast("string").as("periode_ref"),
-          col("jmin1").as("jaar_min"), col("jmax1").as("jaar_max"),
-          lit(null).cast("double").as("verschil_jaar")),
-        struct(lit("c_2").as("periode"), lit("aandeel_gunstig").as("parameter"),
-          round(lit(100.0) * col("swk2") / col("sw"), 6).as("mean"),
-          round(lo2, 6).as("llci"), round(hi2, 6).as("ulci"),
-          lit(null).cast("string").as("klasse"),
-          lit(null).cast("string").as("periode_ref"),
-          col("jmin2").as("jaar_min"), col("jmax2").as("jaar_max"),
-          lit(null).cast("double").as("verschil_jaar")),
-        struct(lit("c_2").as("periode"),
-          lit("verschil_aandeel_gunstig_abs").as("parameter"),
-          round(dAbs, 6).as("mean"), absLo.as("llci"), absHi.as("ulci"),
-          effectKlasse(round(dAbs, 6), absLo, absHi, 12.0, 12.0).as("klasse"),
-          lit("c_1").as("periode_ref"),
-          least(col("jmin1"), col("jmin2")).as("jaar_min"),
-          greatest(col("jmax1"), col("jmax2")).as("jaar_max"),
-          vj.as("verschil_jaar")),
-        struct(lit("c_2").as("periode"),
-          lit("verschil_aandeel_gunstig_rel").as("parameter"),
-          relMean.as("mean"), relLo.as("llci"), relHi.as("ulci"),
-          relKlasse.as("klasse"), lit("c_1").as("periode_ref"),
-          least(col("jmin1"), col("jmin2")).as("jaar_min"),
-          greatest(col("jmax1"), col("jmax2")).as("jaar_max"),
-          vj.as("verschil_jaar")))).as("r"))
-    out.select(col("r.periode").as("periode"), col("type_resultaat"),
-      col("habitattype"), col("sbzh"), col("n_obs"),
-      col("r.parameter").as("parameter"), col("r.mean").as("mean"),
-      col("r.llci").as("llci"), col("r.ulci").as("ulci"),
-      col("r.klasse").as("klasse"), col("r.periode_ref").as("periode_ref"),
-      col("r.jaar_min").as("jaar_min"), col("r.jaar_max").as("jaar_max"),
-      col("r.verschil_jaar").as("verschil_jaar"))
-  }
 }

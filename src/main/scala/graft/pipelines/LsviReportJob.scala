@@ -35,7 +35,7 @@ object LsviReportJob {
     * @param schaal    reporting scale label column (published `schaal`)
     * @param weightCol optional design-weight column on `meta` — when
     *                  set, the status/index estimators use the
-    *                  design-weighted overloads (and `mc_nemar` the
+    *                  design-weighted estimators (and `mc_nemar` the
     *                  weighted discordants); when absent, equal
     *                  weights (and unit-weight mc_nemar)
     * @param tables    optional selection of base names to publish —
@@ -204,48 +204,34 @@ object LsviReportJob {
       "lsvi_globaal" -> (() => globaal),
       cfg.plotTable -> (() => plot),
       "status_indicatoren" -> (() =>
-        w.map(LsviStatus.statusIndicatoren(indicator, statusMeta, _))
-          .getOrElse(LsviStatus.statusIndicatoren(indicator, statusMeta))),
-      "status_habitat" -> (() => w.map(LsviStatus.statusHabitat(statusMeta, _))
-        .getOrElse(LsviStatus.statusHabitat(statusMeta))),
-      "index_hq" -> (() => w.map(LsviStatus.indexHq(statusMeta, _))
-        .getOrElse(LsviStatus.indexHq(statusMeta))),
-      "index_ind" -> (() => w.map(LsviStatus.indexInd(indicator, statusMeta, _))
-        .getOrElse(LsviStatus.indexInd(indicator, statusMeta))),
+        LsviStatus.statusIndicatoren(indicator, statusMeta, w)),
+      "status_habitat" -> (() => LsviStatus.statusHabitat(statusMeta, w)),
+      "index_hq" -> (() => LsviStatus.indexHq(statusMeta, w)),
+      "index_ind" -> (() => LsviStatus.indexInd(indicator, statusMeta, w)),
       "mc_nemar" -> (() => LsviStatus.mcNemar(
         statusMeta.withColumn("weight",
           w.map(col).getOrElse(lit(1.0)).cast("double")))),
       "trend_indicatoren" -> (() =>
-        w.map(LsviStatus.trendIndicatoren(indicator, statusMeta, _))
-          .getOrElse(LsviStatus.trendIndicatoren(indicator, statusMeta))),
-      "trend_habitat" -> (() => w.map(LsviStatus.trendHabitat(statusMeta, _))
-        .getOrElse(LsviStatus.trendHabitat(statusMeta))),
-      "trend_index_hq" -> (() => w.map(LsviStatus.trendIndexHq(statusMeta, _))
-        .getOrElse(LsviStatus.trendIndexHq(statusMeta))),
+        LsviStatus.trendIndicatoren(indicator, statusMeta, w)),
+      "trend_habitat" -> (() => LsviStatus.trendHabitat(statusMeta, w)),
+      "trend_index_hq" -> (() => LsviStatus.trendIndexHq(statusMeta, w)),
       "trend_index_ind" -> (() =>
-        w.map(LsviStatus.trendIndexInd(indicator, statusMeta, _))
-          .getOrElse(LsviStatus.trendIndexInd(indicator, statusMeta)))) ++
+        LsviStatus.trendIndexInd(indicator, statusMeta, w))) ++
       (if (meta.columns.contains("passend_beheer"))
          Map("status_beheer" -> (() => LsviStatus.statusBeheer(statusMeta)))
        else Map.empty[String, () => DataFrame]) ++
       continuous.map { c =>
         // the continuous input carries its own per-visit weights (it
         // pools schemes outside the chain); cfg.weightCol switches
-        // these shapes to the weighted overloads when that column is
+        // these shapes to the weighted estimators when that column is
         // present on the pooled frame — the published dikdoodhout
         // values are design-weighted (weights unpublished)
         val cw = w.filter(c.plots.columns.contains)
         Map(
           "status_dikdoodhout" -> (() =>
-            cw.map(LsviStatus.statusContinuous(c.plots, c.indicator,
-                c.voorwaarde, _))
-              .getOrElse(LsviStatus.statusContinuous(c.plots, c.indicator,
-                c.voorwaarde))),
+            LsviStatus.statusContinuous(c.plots, c.indicator, c.voorwaarde, cw)),
           "trend_dikdoodhout" -> (() =>
-            cw.map(LsviStatus.trendContinuous(c.plots, c.indicator,
-                c.voorwaarde, _))
-              .getOrElse(LsviStatus.trendContinuous(c.plots, c.indicator,
-                c.voorwaarde))))
+            LsviStatus.trendContinuous(c.plots, c.indicator, c.voorwaarde, cw)))
       }.getOrElse(Map.empty[String, () => DataFrame]) ++
       censusMaps.flatten.toMap
 

@@ -933,15 +933,15 @@ object LsviQueries {
          |FROM allr""".stripMargin
     }),
 
-    // q140/q141: the design-weighted continuous overloads — the
+    // q140/q141: the design-weighted continuous estimators — the
     // published dikdoodhout values are design-weighted, completing the
     // weighted family (q130-q137) for the continuous shapes. Same
     // single-chain plan; Σw-moments ride the same aggregations.
     Query("q140_status_continuous_weighted", (s, dir) =>
       graft.lsvi.LsviStatus.statusContinuous(continuousInputs(s, dir),
         "hoeveelheid dik dood hout",
-        "aantal exemplaren dik dood hout per ha", "weight"),
-      // q140/q141: the design-weighted continuous overloads — the
+        "aantal exemplaren dik dood hout per ha", Some("weight")),
+      // q140/q141: the design-weighted continuous estimators — the
       // latest-visit/pair selection carries the visit weight (arg_max by
       // (date, id)), the roll-up sums the weighted partials, and the
       // interval is the family's Kish-n_eff z form with the exact engine
@@ -965,7 +965,7 @@ object LsviQueries {
     Query("q141_trend_continuous_weighted", (s, dir) =>
       graft.lsvi.LsviStatus.trendContinuous(continuousInputs(s, dir),
         "hoeveelheid dik dood hout",
-        "aantal exemplaren dik dood hout per ha", "weight"),
+        "aantal exemplaren dik dood hout per ha", Some("weight")),
       Some((continuousOracleCtes +
         s"""pairsw AS (
            |  SELECT point_code, habitatsubtype,
@@ -1090,8 +1090,8 @@ object LsviQueries {
          |""".stripMargin + trendHabitatOracleTail("nc = 2")
     }),
 
-    // ---- design-weighted status estimators (LsviStatus weighted
-    // overloads): Hájek shares/means Σw·x/Σw with Kish-n_eff Wilson /
+    // ---- design-weighted status estimators (LsviStatus under a
+    // weight column): Hájek shares/means Σw·x/Σw with Kish-n_eff Wilson /
     // z intervals — the machinery that reproduces the reference's
     // design-weighted pooled rows (WeightedStatusSpec replays
     // status_indicatoren_fs / index_hq_fs pooled rows from solved
@@ -1100,7 +1100,7 @@ object LsviQueries {
     // see statusInputs). ----
     Query("q130_status_habitat_weighted", (s, dir) => {
       val (meta, _) = statusInputs(s, dir)
-      graft.lsvi.LsviStatus.statusHabitat(meta, "weight")
+      graft.lsvi.LsviStatus.statusHabitat(meta, Some("weight"))
     }, Some {
       // q130: design-weighted status_habitat — Hájek share Σw·g/Σw with
       // the Kish-n_eff Wilson interval. Quarter-step weights keep every
@@ -1150,7 +1150,7 @@ object LsviQueries {
       val (meta, _) = statusInputs(s, dir)
       graft.lsvi.LsviStatus.indexHq(
         meta.drop("index_mean_ind")
-          .withColumnRenamed("index_b", "index_mean_ind"), "weight")
+          .withColumnRenamed("index_b", "index_mean_ind"), Some("weight"))
     }, Some {
       // q131: design-weighted index_hq over the binary-fraction index
       // twin — weighted mean Σw·x/Σw, design-effect z interval
@@ -1186,7 +1186,7 @@ object LsviQueries {
            |FROM f2""".stripMargin
     }),
 
-    // ---- remaining weighted overloads, oracle-backed (q132-q135):
+    // ---- remaining weighted estimators, oracle-backed (q132-q135):
     // trend_habitat / status_indicatoren / index_ind /
     // trend_indicatoren with design weights. q132/q135 perturb the
     // weight on the 2020 visit (+0.125, a binary fraction) so the
@@ -1201,7 +1201,7 @@ object LsviQueries {
       graft.lsvi.LsviStatus.trendHabitat(
         meta.withColumn("weight",
           col("weight") + when(col("date") === 2020, 0.125).otherwise(0.0)),
-        "weight")
+        Some("weight"))
     }, Some(
       // q132: design-weighted trend_habitat — the q121 pairing with the
       // latest-visit weight (2020 visits carry +0.125), weighted shares,
@@ -1224,7 +1224,7 @@ object LsviQueries {
 
     Query("q133_status_indicatoren_weighted", (s, dir) => {
       val (meta, ind) = statusInputs(s, dir)
-      graft.lsvi.LsviStatus.statusIndicatoren(ind, meta, "weight")
+      graft.lsvi.LsviStatus.statusIndicatoren(ind, meta, Some("weight"))
     }, Some {
       // q133: design-weighted status_indicatoren — q113 with Hájek
       // shares and the Kish-n_eff Wilson interval (the q130 formula
@@ -1281,7 +1281,7 @@ object LsviQueries {
       val (meta, ind) = statusInputs(s, dir)
       graft.lsvi.LsviStatus.indexInd(
         ind.withColumn("verschilscore",
-          round(col("verschilscore") * 1024) / 1024.0), meta, "weight")
+          round(col("verschilscore") * 1024) / 1024.0), meta, Some("weight"))
     }, Some {
       // q134: design-weighted index_ind over the 1/1024-snapped
       // verschilscore — Hájek mean, design-effect z interval (the q131
@@ -1334,7 +1334,7 @@ object LsviQueries {
       graft.lsvi.LsviStatus.trendIndicatoren(ind,
         meta.withColumn("weight",
           col("weight") + when(col("date") === 2020, 0.125).otherwise(0.0)),
-        "weight")
+        Some("weight"))
     }, Some {
       // q135: design-weighted trend_indicatoren — the q116 pairing with
       // the latest-visit pair weight, per-cycle Hájek shares with
@@ -1463,7 +1463,7 @@ object LsviQueries {
           .withColumnRenamed("index_b", "index_mean_ind")
           .withColumn("weight",
             col("weight") + when(col("date") === 2020, 0.125).otherwise(0.0)),
-        "weight")
+        Some("weight"))
     }, Some {
       // q136: weighted trend_index_hq — paired index_b differences with
       // the latest-visit weight; Hájek mean + Kish-n_eff z interval +
@@ -1518,7 +1518,7 @@ object LsviQueries {
           round(col("verschilscore") * 1024) / 1024.0),
         meta.withColumn("weight",
           col("weight") + when(col("date") === 2020, 0.125).otherwise(0.0)),
-        "weight")
+        Some("weight"))
     }, Some {
       // q137: weighted trend_index_ind — the q135 pairing joined to the
       // 1/1024-snapped verschilscore, paired differences per indicator,
@@ -1598,7 +1598,7 @@ object LsviQueries {
         graft.lsvi.LsviStatus.assignCycles(
           cycleTrendInputs(s, dir).withColumn("weight",
             (expr("(date - 2010) div 3") + 1) * lit(0.25))),
-        "weight"),
+        Some("weight")),
       Some {
       // q138: the q129 cycle-derived pairing CTEs with a per-visit
       // weight, feeding the weighted trend tail.
@@ -2531,7 +2531,7 @@ object LsviQueries {
       (lit(2010) + lit(10) * (col("ck") % 2)).as("date"),
       (((col("ck") * 13) % 4001).cast("double") / 100.0).as("value"),
       // quarter-step per-visit design weight for the weighted
-      // overloads (q140/q141): products with the 1e-4 fixed-point
+      // estimators (q140/q141): products with the 1e-4 fixed-point
       // values stay exact doubles, so the weighted sums are
       // order-independent (ignored by the unweighted q125/q126)
       (((col("ck") * 3) % 7 + 1).cast("double") * 0.25).as("weight"))
@@ -2647,7 +2647,7 @@ object LsviQueries {
       |  FROM multi WHERE nsub > 1)""".stripMargin
 
   /** Shared q140/q141 oracle tail: the Kish-n_eff z interval with the
-    * EXACT float shape of `LsviStatus.continuousShapeWeighted`
+    * EXACT float shape of `LsviStatus.continuousShape`'s weighted tail
     * (m = swv/sw/1e4; vpop = greatest(swv2/sw/1e8 − m², 0);
     * h = z·sqrt(vpop/(n_eff − 1))). Positive fixture weights with
     * n > 1 give n_eff > 1 strictly, so no zero-division guard is
@@ -2821,7 +2821,7 @@ object LsviQueries {
 
   /** Weighted twin of [[trendHabitatOracleTail]]: expects a `pairs` CTE
     * that also carries the latest-visit design weight `w`. Mirrors
-    * [[graft.lsvi.LsviStatus.trendHabitat(plotLsvi,weightCol)*]]:
+    * [[graft.lsvi.LsviStatus.trendHabitat]] under a weight:
     * Hájek shares, Kish-n_eff Wilson/Wald intervals, effective-count
     * log-ratio interval, both klasse ladders, unweighted year columns. */
   private def trendHabitatWeightedOracleTail: String =

@@ -600,18 +600,7 @@ object Ann {
     require(shortlist >= topK, s"shortlist=$shortlist must cover topK=$topK")
     val (scored, _, _) =
       ivfPqScored(queries, corpus, idCol, vecCol, kc, m, k, iters, nprobe)
-    val short = rankTopK(scored, "adc_micros", shortlist)
-      .select("query_id", "neighbor_id")
-    // exact cosine over the finalists only, off the RAW (float)
-    // vectors so the value is bit-identical to bruteForceTopK's
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec"))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cvec"))
-    val exact = c.join(broadcast(short), Seq("neighbor_id"))
-      .join(broadcast(q), Seq("query_id"))
-      .withColumn("cosine",
-        round(VectorFunctions.cosineSim(col("qvec"), col("cvec")), 6))
-      .select("query_id", "neighbor_id", "cosine")
-    ranked(exact, topK)
+    cosineRerank(scored, queries, corpus, idCol, vecCol, shortlist, topK)
   }
 
   /** Rank-aware retrieval evaluation of the ADC searcher against the
@@ -957,16 +946,8 @@ object Ann {
     require(shortlist >= topK, s"shortlist=$shortlist must cover topK=$topK")
     val coded = ivfPqCodeWithState(corpus, idCol, vecCol, state)
     val (_, probes) = ivfPqProbes(queries, idCol, vecCol, state, nprobe)
-    val short = rankTopK(adcScored(coded, probes, state), "adc_micros", shortlist)
-      .select("query_id", "neighbor_id")
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec"))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cvec"))
-    val exact = c.join(broadcast(short), Seq("neighbor_id"))
-      .join(broadcast(q), Seq("query_id"))
-      .withColumn("cosine",
-        round(VectorFunctions.cosineSim(col("qvec"), col("cvec")), 6))
-      .select("query_id", "neighbor_id", "cosine")
-    ranked(exact, topK)
+    cosineRerank(adcScored(coded, probes, state), queries, corpus, idCol,
+      vecCol, shortlist, topK)
   }
 
   /** Append NEW vectors to a WRITTEN IVFADC index without retraining —
@@ -1031,13 +1012,9 @@ object Ann {
   def ivfPqSearchIndex(index: IvfPqIndex, queries: DataFrame,
                        idCol: String, vecCol: String,
                        nprobe: Int, topK: Int): DataFrame = {
-    val spark = queries.sparkSession
     val (_, probes) = ivfPqProbes(queries, idCol, vecCol, index.state, nprobe)
-    val cells = probes.select("gcell").distinct()
-      .collect().map(_.getInt(0)).sorted // ≤ kc values — driver state
-    val coded = graft.io.Vc.readPartitioned(spark, index.path, verify = false)
-      .where(col("gcell").isin(cells.toIndexedSeq: _*))
-    rankTopK(adcScored(coded, probes, index.state), "adc_micros", topK)
+    rankTopK(adcScored(probedCells(index, probes), probes, index.state),
+      "adc_micros", topK)
   }
 
   /** [[ivfPqCosineTopK]] served from a WRITTEN index: the ADC
@@ -1054,14 +1031,31 @@ object Ann {
                              nprobe: Int, shortlist: Int,
                              topK: Int): DataFrame = {
     require(shortlist >= topK, s"shortlist=$shortlist must cover topK=$topK")
-    val spark = queries.sparkSession
     val (_, probes) = ivfPqProbes(queries, idCol, vecCol, index.state, nprobe)
+    cosineRerank(adcScored(probedCells(index, probes), probes, index.state),
+      queries, corpus, idCol, vecCol, shortlist, topK)
+  }
+
+  /** The probed cells' code rows of a WRITTEN index: the probed cell
+    * ids are driver state (≤ kc values), pushed as a literal IN filter
+    * into the unverified partitioned read so the file listing itself
+    * shrinks to the probed cells. */
+  private def probedCells(index: IvfPqIndex, probes: DataFrame): DataFrame = {
     val cells = probes.select("gcell").distinct()
-      .collect().map(_.getInt(0)).sorted // ≤ kc values — driver state
-    val coded = graft.io.Vc.readPartitioned(spark, index.path, verify = false)
+      .collect().map(_.getInt(0)).sorted
+    graft.io.Vc.readPartitioned(probes.sparkSession, index.path, verify = false)
       .where(col("gcell").isin(cells.toIndexedSeq: _*))
-    val short = rankTopK(adcScored(coded, probes, index.state),
-        "adc_micros", shortlist)
+  }
+
+  /** Exact-cosine re-rank of ADC-scored candidates: the top
+    * `shortlist` per query by ADC distance, rescored by cosine over
+    * the RAW (float) vectors — bit-identical to bruteForceTopK's value
+    * — and ranked to `topK`. The bare-id shortlist and the queries
+    * broadcast into the corpus scan; the corpus never shuffles. */
+  private def cosineRerank(scored: DataFrame, queries: DataFrame,
+                           corpus: DataFrame, idCol: String, vecCol: String,
+                           shortlist: Int, topK: Int): DataFrame = {
+    val short = rankTopK(scored, "adc_micros", shortlist)
       .select("query_id", "neighbor_id")
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec"))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cvec"))

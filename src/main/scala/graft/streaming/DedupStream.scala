@@ -1,6 +1,7 @@
 package graft.streaming
 
-import graft.text.Text
+import graft.dedup.Dedup
+import graft.functions.HashFunctions
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -55,8 +56,10 @@ object DedupStream {
     * verdict per (doc, band); [[resolveCanonical]] reduces to one row
     * per doc. Works identically on a streaming or batch Dataset (the
     * q202 technique; see [[graft.dedup.Dedup.minhashCanonicalIdsMd5]]
-    * for the batch form): signatures are md5-slice MinHash minima computed PER ROW with
-    * array expressions (no pre-state aggregation — Structured
+    * for the batch form): signatures are md5-slice MinHash minima
+    * computed PER ROW by the batch form's codegen kernel
+    * ([[graft.functions.HashFunctions.md5MinhashSig]] — no pre-state
+    * aggregation: Structured
     * Streaming allows one stateful op, and it must be the bucket
     * state), band keys concatenate each band's integer minima, and the
     * match rule is an INTEGER agreement floor (≥ ceil(k·(tau−0.1))
@@ -78,47 +81,18 @@ object DedupStream {
     import spark.implicits._
     require(k % 4 == 0 && k % bands == 0,
       s"k=$k must split into 32-bit md5 slices and bands=$bands")
-    val r = k / bands
-    val agreeMin = graft.dedup.Dedup.md5AgreeMin(k, tauMicros).toInt
-    val toks = Text.tokens(col(textCol))
-    val units0 = if (shingleSize <= 1) toks else Text.shingles(toks, shingleSize)
-    val units = array_distinct(units0)
-    // per-row signature via a compiled flatMap kernel: one digest per
-    // (unit, md5 group), four 32-bit slices per digest — byte-level
-    // identical to Dedup.md5Slice / the DuckDB replay (Md5DedupSpec).
-    // An expression-tree formulation (16 interpreted array_min ∘
-    // transform folds) measured ~6× slower at sf0.1 because each fold
-    // re-digested every unit.
+    val agreeMin = Dedup.md5AgreeMin(k, tauMicros).toInt
+    // per-row signature via the codegen md5 MinHash kernel (one digest
+    // per (distinct unit, md5 group)) — the batch form's signature and
+    // band keys, byte-identical to the DuckDB replay (Md5DedupSpec)
     val banded = docs
-      .select(col(idCol).cast("long").as("id"), units.as("us"))
-      .as[(Long, Seq[String])]
-      .flatMap { case (id, us) =>
-        if (us == null || us.isEmpty) Iterator.empty
-        else {
-          val md = java.security.MessageDigest.getInstance("MD5")
-          val mins = Array.fill(k)(Long.MaxValue)
-          us.foreach { u =>
-            var g = 0
-            while (g < k / 4) {
-              val digest = md.digest((u + ":" + g).getBytes("UTF-8"))
-              var j = 0
-              while (j < 4) {
-                val v = ((digest(4 * j) & 0xffL) << 24) |
-                  ((digest(4 * j + 1) & 0xffL) << 16) |
-                  ((digest(4 * j + 2) & 0xffL) << 8) | (digest(4 * j + 3) & 0xffL)
-                if (v < mins(g * 4 + j)) mins(g * 4 + j) = v
-                j += 1
-              }
-              g += 1
-            }
-          }
-          (0 until bands).iterator.map { b =>
-            val key = b.toString + "|" +
-              (b * r until (b + 1) * r).map(mins).mkString("|")
-            BandedSig(key, id, mins)
-          }
-        }
-      }
+      .select(col(idCol).cast("long").as("id"),
+        HashFunctions.md5MinhashSig(Dedup.md5UnitExpr(textCol, shingleSize), k)
+          .as("ms"))
+      .where(col("ms").isNotNull) // unit-less docs carry no signature
+      .select(explode(Dedup.md5BandKeys(col("ms.sig"), k, bands)).as("bucket"),
+        col("id"), col("ms.sig").as("sig"))
+      .as[BandedSig]
 
     def agreeCount(a: Array[Long], b: Array[Long]): Int = {
       var same = 0; var i = 0

@@ -116,9 +116,9 @@ class CensusShapesSpec extends SparkSuite {
       .withColumn("w", lit(1.0))
     for ((uw, w) <- Seq(
         (LsviStatus.statusContinuous(in, "i", "v"),
-         LsviStatus.statusContinuous(in, "i", "v", "w")),
+         LsviStatus.statusContinuous(in, "i", "v", Some("w"))),
         (LsviStatus.trendContinuous(in, "i", "v"),
-         LsviStatus.trendContinuous(in, "i", "v", "w")))) {
+         LsviStatus.trendContinuous(in, "i", "v", Some("w"))))) {
       val meanCol = uw.columns.find(c => c == "gemiddelde" || c == "verschil").get
       val keys = Seq("type_resultaat", "habitattype", "habitatsubtype")
       val j = uw.alias("u").join(w.alias("w"), keys).cache()

@@ -1,7 +1,7 @@
 package graft
 
 import graft.lsvi.LsviStatus
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Validation of the design-weighted estimator overloads
@@ -123,7 +123,7 @@ class WeightedStatusSpec extends SparkSuite {
 
   test("weighted statusHabitat reproduces the pooled status_habitat_fs rows") {
     assumeFiles(plotMetaFiles ++ fs("status_habitat_fs.tsv"): _*)
-    val mine = LsviStatus.statusHabitat(weightedMeta, "weight")
+    val mine = LsviStatus.statusHabitat(weightedMeta, Some("weight"))
       .where(col("sbzh") === "Binnen & Buiten")
       .select(col("habitattype"), col("n_obs"), col("aandeel_gunstig"))
       .as[(String, Long, Double)].collect().map(r => r._1 -> r).toMap
@@ -146,7 +146,7 @@ class WeightedStatusSpec extends SparkSuite {
   test("weighted statusIndicatoren reproduces all 50 pooled status_indicatoren_fs rows within 0.02pp") {
     assumeFiles(plotMetaFiles ++ fs("status_habitat_fs.tsv",
       "lsvi_indicator_fs.tsv", "status_indicatoren_fs.tsv"): _*)
-    val mine = LsviStatus.statusIndicatoren(indicatorTbl, weightedMeta, "weight")
+    val mine = LsviStatus.statusIndicatoren(indicatorTbl, weightedMeta, Some("weight"))
     val pub = readTsv(s"$fsDir/status_indicatoren_fs.tsv")
       .where(!col("habitatsubtype").contains(";"))
     val pooled = mine.alias("m")
@@ -168,7 +168,7 @@ class WeightedStatusSpec extends SparkSuite {
 
   test("weighted indexHq reproduces the pooled index_hq_fs means within 2e-4 (independent of the solve)") {
     assumeFiles(plotMetaFiles ++ fs("status_habitat_fs.tsv", "index_hq_fs.tsv"): _*)
-    val mine = LsviStatus.indexHq(weightedMeta, "weight")
+    val mine = LsviStatus.indexHq(weightedMeta, Some("weight"))
       .where(col("type_resultaat") === "Habitattype")
       .select(col("habitattype"), col("n_obs"), col("index_hq_mean"))
       .as[(String, Long, Double)].collect().map(r => r._1 -> r).toMap
@@ -219,7 +219,7 @@ class WeightedStatusSpec extends SparkSuite {
     }
     val indDf = ind.toSeq.toDF("id", "type_analysis", "criterium", "indicator",
       "belang", "status_indicator")
-    val mine = LsviStatus.statusIndicatoren(indDf, meta, "weight")
+    val mine = LsviStatus.statusIndicatoren(indDf, meta, Some("weight"))
       .select(col("sbzh"), col("indicator"), col("n_obs"),
         col("aandeel_gunstig"))
       .as[(String, String, Long, Double)].collect()
@@ -265,7 +265,7 @@ class WeightedStatusSpec extends SparkSuite {
       .withColumn("habitattype", lit("3260"))
       .withColumn("point_code", col("id"))
       .withColumn("date", lit(1))
-    val mine = LsviStatus.indexHq(meta, "weight")
+    val mine = LsviStatus.indexHq(meta, Some("weight"))
       .where(col("type_resultaat") === "Habitattype")
       .select(col("n_obs"), col("index_hq_mean"))
       .as[(Long, Double)].collect()
@@ -327,24 +327,149 @@ class WeightedStatusSpec extends SparkSuite {
     val un = LsviStatus.trendIndicatoren(ind, meta).collect()
     assert(un.length == 1 && un.head.getAs[String]("periode") == "c_2")
     assert(un.head.getAs[Double]("mean") == 50.0)
-    val w = LsviStatus.trendIndicatoren(ind, meta, "one").collect()
+    val w = LsviStatus.trendIndicatoren(ind, meta, Some("one")).collect()
     assert(w.length == 1 && w.head.getAs[String]("periode") == "c_2")
     assert(w.head.getAs[Double]("mean") == 50.0)
   }
 
+  /** One visit of the in-memory estimator fixture. */
+  private case class FxVisit(id: String, point: String, date: Int, sac: Int,
+      lsvi: String, index: Double, sub: String, value: Double, w: Double)
+
+  /** Eight points visited in 2010 and 2020 — five inside the SAC, three
+    * outside, two subtypes — with a non-uniform design weight `w` that
+    * varies within every stratum. */
+  private val fxVisits = for (p <- 1 to 8; y <- Seq(2010, 2020)) yield {
+    val i = 2 * p + (if (y == 2020) 1 else 0)
+    FxVisit(s"v$i", s"pt$p", y, if (p <= 5) 1 else 0,
+      if (i % 3 == 0) "gunstig" else "ongunstig",
+      ((i * 37) % 201 - 100) / 100.0, if (p <= 5) "HT_a" else "HT_b",
+      ((i * 13) % 40) / 4.0, 0.5 + (i % 4) * 0.75)
+  }
+
+  /** Two indicators per visit: ind_0 always scored, ind_1 unknown on
+    * every fifth visit (its Buiten latest share is degenerate, 2 of 2). */
+  private val fxIndicators = fxVisits.flatMap { v =>
+    val i = v.id.tail.toInt
+    Seq(("ind_0", Some(i % 4 != 1), Some(((i * 11) % 21 - 10) / 10.0)),
+      ("ind_1", if (i % 5 == 0) None else Some(i > 4),
+        if (i % 5 == 0) None else Some(((i * 3) % 17 - 8) / 8.0)))
+      .map { case (ind, st, vs) => (v.id, "HT", "crit", ind, "b", st, vs) }
+  }
+
+  private lazy val fxMeta = fxVisits
+    .map(v => (v.id, "HT", v.point, v.date, v.sac, v.lsvi, v.index, v.sub,
+      v.value, 1.0, v.w))
+    .toDF("id", "habitattype", "point_code", "date", "in_sac", "lsvi",
+      "index_mean_ind", "habitatsubtype", "value", "one", "w")
+
+  private lazy val fxInd = fxIndicators.toDF("id", "type_analysis",
+    "criterium", "indicator", "belang", "status_indicator", "verschilscore")
+
+  /** Largest absolute difference between the double columns of two
+    * frames of one shape, rows matched on their string labels (the
+    * verdict labels left out: a weight may move them); a value null on
+    * one side only counts as infinite. */
+  private def maxDiff(a: DataFrame, b: DataFrame): Double = {
+    val labels = a.schema.fields.collect {
+      case f if f.dataType.typeName == "string" &&
+        !Set("klasse", "beoordeling")(f.name) => f.name
+    }.toSeq
+    val doubles = a.schema.fields.collect {
+      case f if f.dataType.typeName == "double" => f.name
+    }.toSeq
+    def rows(df: DataFrame) = df.collect().map { r =>
+      labels.map(c => String.valueOf(r.getAs[Any](c))).mkString("|") ->
+        doubles.map(c => Option(r.getAs[java.lang.Double](c)).map(_.doubleValue))
+    }.toMap
+    val (ra, rb) = (rows(a), rows(b))
+    assert(ra.keySet === rb.keySet, s"row labels differ: ${ra.keySet} vs ${rb.keySet}")
+    ra.keys.flatMap(k => ra(k).zip(rb(k)).map {
+      case (Some(x), Some(y)) => math.abs(x - y)
+      case (None, None) => 0.0
+      case _ => Double.PositiveInfinity
+    }).max
+  }
+
+  test("one function per statistic: closed-form proportions, unit weights, non-uniform weights") {
+    // (a) the proportion estimators without a weight: n_obs, the plain
+    // share and the z-based Wilson bounds are this Scala closed form
+    // over the latest visit per point, to the bit
+    val z = LsviStatus.z975
+    def r6(x: Double) =
+      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    def closedForm(k: Long, n: Long): (Long, Double, Double, Double) = {
+      val p = k.toDouble / n
+      val z2 = z * z
+      val den = 1.0 + z2 / n
+      val center = (p + z2 / (2.0 * n)) / den
+      val half = (z / den) * math.sqrt(p * (1.0 - p) / n + z2 / (4.0 * n * n))
+      val degen = k == 0 || k == n
+      (n, r6(100.0 * k / n),
+        r6(if (degen) 100.0 * p else 100.0 * math.max(0.0, center - half)),
+        r6(if (degen) 100.0 * p else 100.0 * math.min(1.0, center + half)))
+    }
+    def strata(sac: Int) = Seq(if (sac == 1) "Binnen" else "Buiten", "Binnen & Buiten")
+    def expected(obs: Seq[(String, Boolean)]) = obs.groupBy(_._1).map {
+      case (key, xs) => key -> closedForm(xs.count(_._2).toLong, xs.size.toLong)
+    }
+    def engine(df: DataFrame, key: Row => String) = df.collect().map { r =>
+      key(r) -> ((r.getAs[Long]("n_obs"), r.getAs[Double]("aandeel_gunstig"),
+        r.getAs[Double]("aandeel_gunstig_llci"),
+        r.getAs[Double]("aandeel_gunstig_ulci")))
+    }.toMap
+    val latest = fxVisits.groupBy(_.point).values.map(_.maxBy(_.date)).toSeq
+    val habitat = expected(latest.flatMap(v =>
+      strata(v.sac).map(s => (s, v.lsvi == "gunstig"))))
+    assert(engine(LsviStatus.statusHabitat(fxMeta),
+      _.getAs[String]("sbzh")) === habitat)
+    val indicatoren = expected(for {
+      v <- latest
+      (id, _, _, ind, _, Some(st), _) <- fxIndicators if id == v.id
+      s <- strata(v.sac)
+    } yield (s"$s/$ind", st))
+    assert(engine(LsviStatus.statusIndicatoren(fxInd, fxMeta),
+      r => r.getAs[String]("sbzh") + "/" + r.getAs[String]("indicator")) ===
+      indicatoren)
+    assert(habitat.values.exists(c => c._3 != c._2 && c._4 != c._2),
+      "fixture needs a non-degenerate interval")
+    assert(indicatoren.values.exists(c => c._2 == 100.0),
+      "fixture needs a degenerate interval")
+
+    // (b) unit weights reproduce the unweighted form of every statistic;
+    // (c) the non-uniform weight moves each of them
+    val shapes: Seq[(String, Option[String] => DataFrame, Double)] = Seq(
+      ("statusHabitat", LsviStatus.statusHabitat(fxMeta, _), 1e-6),
+      ("statusIndicatoren", LsviStatus.statusIndicatoren(fxInd, fxMeta, _), 1e-6),
+      ("indexHq", LsviStatus.indexHq(fxMeta, _), 1e-6),
+      ("indexInd", LsviStatus.indexInd(fxInd, fxMeta, _), 1e-6),
+      ("trendIndexHq", LsviStatus.trendIndexHq(fxMeta, _), 2e-6),
+      ("trendIndexInd", LsviStatus.trendIndexInd(fxInd, fxMeta, _), 2e-6),
+      ("trendIndicatoren", LsviStatus.trendIndicatoren(fxInd, fxMeta, _), 1e-6),
+      ("trendHabitat", LsviStatus.trendHabitat(fxMeta, _), 1e-6),
+      ("statusContinuous", LsviStatus.statusContinuous(fxMeta, "i", "v", _), 1e-6),
+      ("trendContinuous", LsviStatus.trendContinuous(fxMeta, "i", "v", _), 1e-6))
+    for ((name, f, tol) <- shapes) {
+      val un = f(None)
+      withClue(s"$name at unit weights: ") { assertClose(f(Some("one")), un, tol) }
+      assert(maxDiff(f(Some("w")), un) > 1e-3,
+        s"$name ignores a non-uniform weight")
+    }
+  }
+
   test("unit weights reduce every weighted overload to its unweighted sibling") {
     assumeFiles(plotMetaFiles ++ fs("lsvi_indicator_fs.tsv"): _*)
-    assertClose(LsviStatus.statusHabitat(plotMeta, "one"),
+    assertClose(LsviStatus.statusHabitat(plotMeta, Some("one")),
       LsviStatus.statusHabitat(plotMeta), 1e-6)
-    assertClose(LsviStatus.statusIndicatoren(indicatorTbl, plotMeta, "one"),
+    assertClose(LsviStatus.statusIndicatoren(indicatorTbl, plotMeta, Some("one")),
       LsviStatus.statusIndicatoren(indicatorTbl, plotMeta), 1e-6)
-    assertClose(LsviStatus.indexHq(plotMeta, "one"),
+    assertClose(LsviStatus.indexHq(plotMeta, Some("one")),
       LsviStatus.indexHq(plotMeta), 1e-6)
-    assertClose(LsviStatus.indexInd(indicatorTbl, plotMeta, "one"),
+    assertClose(LsviStatus.indexInd(indicatorTbl, plotMeta, Some("one")),
       LsviStatus.indexInd(indicatorTbl, plotMeta), 1e-6)
-    assertClose(LsviStatus.trendHabitat(plotMeta, "one"),
+    assertClose(LsviStatus.trendHabitat(plotMeta, Some("one")),
       LsviStatus.trendHabitat(plotMeta), 1e-6)
-    assertClose(LsviStatus.trendIndicatoren(indicatorTbl, plotMeta, "one"),
+    assertClose(LsviStatus.trendIndicatoren(indicatorTbl, plotMeta, Some("one")),
       LsviStatus.trendIndicatoren(indicatorTbl, plotMeta), 1e-6)
     // r11: the paired index-difference shapes — same algebra, but the
     // unweighted siblings aggregate 1e-6 fixed-point integers while
@@ -353,9 +478,9 @@ class WeightedStatusSpec extends SparkSuite {
     // (observed once in the 91E0_vm aandeel-dood-hout row: 0.043662 vs
     // 0.043663); 2e-6 admits exactly that one-digit flip and nothing
     // larger
-    assertClose(LsviStatus.trendIndexHq(plotMeta, "one"),
+    assertClose(LsviStatus.trendIndexHq(plotMeta, Some("one")),
       LsviStatus.trendIndexHq(plotMeta), 2e-6)
-    assertClose(LsviStatus.trendIndexInd(indicatorTbl, plotMeta, "one"),
+    assertClose(LsviStatus.trendIndexInd(indicatorTbl, plotMeta, Some("one")),
       LsviStatus.trendIndexInd(indicatorTbl, plotMeta), 2e-6)
   }
 }
