@@ -127,7 +127,4 @@ final case class SourceRegistry(sources: Map[String, Source]) {
       throw new IllegalArgumentException(
         s"unknown source '$name'; registered: ${sources.keys.toSeq.sorted.mkString(", ")}"))
       .load(spark)
-
-  def withSource(name: String, s: Source): SourceRegistry =
-    copy(sources = sources + (name -> s))
 }

@@ -174,7 +174,7 @@ object Tables {
     * slice of [[normalize]], kept callable on its own for the streaming
     * read in `graft.queries.Shared.eventsStream`, which must wrap a
     * `readStream` DataFrame rather than a path). */
-  def normalizeEventsTs(spark: SparkSession, df: DataFrame): DataFrame =
+  def normalizeEventsTs(df: DataFrame): DataFrame =
     df.withColumn("ts", adapt("events", "ts", df.schema("ts").dataType, TimestampType))
 
   /** Lowercase-normalize all column names — the reference lowercases after

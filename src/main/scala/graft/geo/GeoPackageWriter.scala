@@ -258,7 +258,6 @@ object GeoPackageWriter {
     private def renderPage(pageType: Int, cells: Seq[Array[Byte]],
                            rightmost: Option[Int], offset: Int = 0): Array[Byte] = {
       val pg = ByteBuffer.allocate(PageSize)
-      val headerLen = if (pageType == 5) 12 else 8
       var content = PageSize
       val ptrs = cells.map { c => content -= c.length; content }
       pg.position(offset)

@@ -43,11 +43,6 @@ object Relational {
   def withGroupCount(df: DataFrame, keys: Seq[String], as: String = "n"): DataFrame =
     df.withColumn(as, count(lit(1)).over(Window.partitionBy(keys.map(col): _*)))
 
-  /** W5: group sum kept on rows (plot weights,
-    * `calc_plot_segment_area.Rmd:100-105`). */
-  def withGroupSum(df: DataFrame, keys: Seq[String], value: Column, as: String): DataFrame =
-    df.withColumn(as, sum(value).over(Window.partitionBy(keys.map(col): _*)))
-
   /** W6: fill nulls with the group max
     * (`export_from_vbidwh.Rmd:147-148`). */
   def fillWithGroupMax(df: DataFrame, keys: Seq[String], valueCol: String): DataFrame =

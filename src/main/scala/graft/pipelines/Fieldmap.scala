@@ -23,12 +23,6 @@ object Fieldmap {
   def joinCoverScale(long: DataFrame, coverScales: DataFrame): DataFrame =
     long.join(broadcast(coverScales), Seq("coverscale_name", "class_id"), "left")
 
-  /** Latest status per (plot, cycle) — W2
-    * (`query_fieldmap.Rmd:1376-1379`). */
-  def latestStatus(gridPoints: DataFrame): DataFrame =
-    Relational.latestPerKey(gridPoints, Seq("plot_id", "mon_cycle"),
-      Seq(col("date_status").desc))
-
   /** Square-vs-circle observed-type resolution
     * (`query_fieldmap.Rmd:1560-1595`): full-join both observation
     * sources per plot (J5), prefer the square-plot type, fall back to

@@ -34,12 +34,4 @@ object PlotSegments {
       .withColumn("segment_weight_a4",
         when(col("area_a4_m2_plot") > 0, col("area_a4_m2") / col("area_a4_m2_plot")))
   }
-
-  /** The reference's own cross-check (`calc_plot_segment_area.Rmd:92`
-    * `check_area_a4`): recomputed area vs a stored column, equal at
-    * integer rounding. Returns violating rows (expected empty). */
-  def checkAreaA4(withStored: DataFrame, storedCol: String): DataFrame =
-    withAreas(withStored)
-      .where(round(col("area_a4_m2")) =!= round(col(storedCol)))
-      .select("plot_id", "segment_id", "area_a4_m2", storedCol)
 }

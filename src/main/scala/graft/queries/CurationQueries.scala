@@ -216,40 +216,12 @@ object CurationQueries {
       // lambda index/list indexing stay internally consistent. The pred
       // predicate is z >= 0 on BOTH sides (s >= 0.5 could diverge by one
       // rounding ulp at z ~ 0).
-      """WITH e AS (SELECT vec_id, label, CAST(label % 2 AS DOUBLE) AS y,
+      s"""WITH e AS (SELECT vec_id, label, CAST(label % 2 AS DOUBLE) AS y,
         |    list_concat(list_transform(embedding,
         |      x -> floor(CAST(x AS DOUBLE)*1048576.0 + 0.5)/1048576.0),
         |      [CAST(1.0 AS DOUBLE)]) AS xs
         |  FROM embeddings),
-        |ex1 AS (SELECT y,
-        |          unnest(list_transform(xs, (x, i) -> {'dim': i, 'x': x}),
-        |                 recursive := true)
-        |        FROM e),
-        |g1 AS (SELECT dim,
-        |         sum(CAST(floor((0.5 - y)*x*1048576.0 + 0.5) AS BIGINT)) AS g,
-        |         CAST(count(*) AS DOUBLE) AS n
-        |       FROM ex1 GROUP BY dim),
-        |w1 AS (SELECT list(0.0 - 4.0*(CAST(g AS DOUBLE)/(n*1048576.0)) ORDER BY dim) AS w
-        |       FROM g1),
-        |r2 AS (SELECT e.vec_id, e.y, e.xs,
-        |         (0.5 + z/(2.0*(1.0 + abs(z)))) - e.y AS r
-        |       FROM (SELECT e.*, list_sum(list_transform(list_zip(e.xs, w1.w),
-        |               p -> p[1]*p[2])) AS z
-        |             FROM e, w1) e),
-        |ex2 AS (SELECT r,
-        |          unnest(list_transform(xs, (x, i) -> {'dim': i, 'x': x}),
-        |                 recursive := true)
-        |        FROM r2),
-        |g2 AS (SELECT dim,
-        |         sum(CAST(floor(r*x*1048576.0 + 0.5) AS BIGINT)) AS g,
-        |         CAST(count(*) AS DOUBLE) AS n
-        |       FROM ex2 GROUP BY dim),
-        |w2 AS (SELECT list(w1.w[g2.dim] - 4.0*(CAST(g2.g AS DOUBLE)/(g2.n*1048576.0))
-        |                   ORDER BY g2.dim) AS w
-        |       FROM g2, w1),
-        |sc AS (SELECT e.vec_id, e.label, e.y,
-        |         list_sum(list_transform(list_zip(e.xs, w2.w), p -> p[1]*p[2])) AS z
-        |       FROM e, w2)
+        |$logisticTwoStepCtes
         |SELECT label, count(*) AS n_docs,
         |  CAST(sum(CASE WHEN z >= 0.0 THEN 1 ELSE 0 END) AS BIGINT) AS n_pred_pos,
         |  CAST(sum(CAST(floor((0.5 + z/(2.0*(1.0 + abs(z))))*1e6 + 0.5) AS BIGINT)) AS BIGINT)
@@ -271,37 +243,7 @@ object CurationQueries {
       // q150: q147's Lloyd CTE replayed verbatim through a1, then the
       // per-cluster (dist_micros, id) rank keeps the 20 most-central
       // documents of each cell — integer arithmetic end to end.
-      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |c0 AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 8),
-        |d0 AS (SELECT e.vec_id, c0.cid,
-        |         CAST(floor(list_sum(list_transform(list_zip(e.v, c0.cv),
-        |           p -> (p[1]-p[2])*(p[1]-p[2])))*1e6 + 0.5) AS BIGINT) AS dm
-        |       FROM e, c0),
-        |a0 AS (SELECT vec_id, cid FROM (
-        |         SELECT vec_id, cid,
-        |           row_number() OVER (PARTITION BY vec_id ORDER BY dm, cid) rk
-        |         FROM d0) t
-        |       WHERE rk = 1),
-        |ex AS (SELECT vec_id,
-        |         unnest(list_transform(v, (x, i) -> {'dim': i, 'x': x}),
-        |                recursive := true)
-        |       FROM e),
-        |upd AS (SELECT a0.cid, ex.dim,
-        |          sum(CAST(floor(ex.x*1048576.0 + 0.5) AS BIGINT)) AS s,
-        |          count(*) AS n
-        |        FROM ex JOIN a0 USING (vec_id) GROUP BY 1, 2),
-        |c1 AS (SELECT cid, list(s/(n*1048576.0) ORDER BY dim) AS cv
-        |       FROM upd GROUP BY cid),
-        |d1 AS (SELECT e.vec_id, c1.cid,
-        |         CAST(floor(list_sum(list_transform(list_zip(e.v, c1.cv),
-        |           p -> (p[1]-p[2])*(p[1]-p[2])))*1e6 + 0.5) AS BIGINT) AS dm
-        |       FROM e, c1),
-        |a1 AS (SELECT vec_id, cid, dm FROM (
-        |         SELECT vec_id, cid, dm,
-        |           row_number() OVER (PARTITION BY vec_id ORDER BY dm, cid) rk
-        |         FROM d1) t
-        |       WHERE rk = 1)
+      kmeansOracleCtes + """
         |SELECT vec_id, CAST(cid AS INTEGER) AS cluster_id,
         |  dm AS dist_micros, CAST(rk AS INTEGER) AS rk
         |FROM (SELECT vec_id, cid, dm,
@@ -754,16 +696,7 @@ object CurationQueries {
       // lockstep in OracleConsistencySpec) snapped to integer micros;
       // from there every rank/U/AUC step is the identical integer
       // expression on both engines (doubled midranks, floor division).
-      """WITH q AS (
-        |  SELECT source, lang = 'en' AS label,
-        |    CAST(round(round(0.4 * least(1.0, n_tokens / 100.0)
-        |        + 0.4 * (1.0 - punct_ratio)
-        |        + 0.2 * (1.0 - abs(stop_ratio - 0.4)), 6) * 1e6) AS BIGINT) AS s
-        |  FROM (
-        |    SELECT doc_id, source, lang, len(toks) AS n_tokens,
-        |      (length(text) - length(regexp_replace(text, '[^a-z0-9 ]', '', 'g'))) / length(text) AS punct_ratio,
-        |      CAST(len(list_filter(toks, x -> x IN ('the','a','of','and','to','in','is','it'))) AS BIGINT) / len(toks) AS stop_ratio
-        |    FROM (SELECT doc_id, source, lang, text, string_split_regex(trim(text), '\s+') AS toks FROM documents))),
+      qualityMicrosCte() + """,
         |hist AS (
         |  SELECT source, s, CAST(count(*) AS BIGINT) AS n,
         |    CAST(sum(CASE WHEN label THEN 1 ELSE 0 END) AS BIGINT) AS p
@@ -873,16 +806,7 @@ object CurationQueries {
       // bins (top edge folded into the last bin), per-bin floor-divided
       // rates, row-weighted mean absolute gap. Every step is integer
       // arithmetic; // mirrors Spark's div on these non-negative values.
-      """WITH q AS (
-        |  SELECT source, lang = 'en' AS label,
-        |    CAST(round(round(0.4 * least(1.0, n_tokens / 100.0)
-        |        + 0.4 * (1.0 - punct_ratio)
-        |        + 0.2 * (1.0 - abs(stop_ratio - 0.4)), 6) * 1e6) AS BIGINT) AS s
-        |  FROM (
-        |    SELECT doc_id, source, lang, len(toks) AS n_tokens,
-        |      (length(text) - length(regexp_replace(text, '[^a-z0-9 ]', '', 'g'))) / length(text) AS punct_ratio,
-        |      CAST(len(list_filter(toks, x -> x IN ('the','a','of','and','to','in','is','it'))) AS BIGINT) / len(toks) AS stop_ratio
-        |    FROM (SELECT doc_id, source, lang, text, string_split_regex(trim(text), '\s+') AS toks FROM documents))),
+      qualityMicrosCte() + """,
         |b AS (SELECT source, least(CAST(9 AS BIGINT), (s * 10) // 1000000) AS bin,
         |        s, label
         |      FROM q),
@@ -989,20 +913,7 @@ object CurationQueries {
       // prefilter is an engine-side optimization that exact-verifies,
       // so the oracle is the plain overlap SQL — any false positive
       // surviving to the output would hash-mismatch here.
-      """WITH docs AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |sh AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(toks) <= 3 THEN [array_to_string(toks, ' ')]
-        |         ELSE list_transform(range(1, len(toks) - 3 + 2),
-        |                i -> array_to_string(toks[i:i+2], ' ')) END AS shingles
-        |  FROM docs),
-        |bench AS (SELECT DISTINCT unnest(shingles) AS shingle FROM sh WHERE doc_id % 89 = 0),
-        |train AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh WHERE doc_id % 89 <> 0)
-        |SELECT t.doc_id,
-        |  CAST(count(DISTINCT t.shingle) AS BIGINT) AS n_contaminated_ngrams
-        |FROM train t JOIN bench b USING (shingle)
-        |GROUP BY t.doc_id""".stripMargin)),
+      decontaminationOracleSql(89))),
 
     // ---- PMI collocations (text.Colloc, Church & Hanks 1990): top
     // adjacent pairs by pointwise mutual information, pair count ≥ 5.
@@ -1243,14 +1154,14 @@ object CurationQueries {
       // q172: the q149 two-step GD machinery verbatim over hashed-bigram
       // bucket counts (md5-prefix mod 8 — integer features, so q149's
       // 2^-20 snap is the identity and is elided here); per-doc output.
-      Some("""WITH toks AS (
+      Some(s"""WITH toks AS (
         |  SELECT doc_id,
         |    CASE WHEN list_contains(
         |           CASE WHEN length(trim(text)) = 0 THEN CAST([] AS VARCHAR[])
-        |                ELSE string_split_regex(trim(text), '\s+') END, 'join')
+        |                ELSE string_split_regex(trim(text), '\\s+') END, 'join')
         |         THEN 1 ELSE 0 END AS label,
         |    CASE WHEN length(trim(text)) = 0 THEN CAST([] AS VARCHAR[])
-        |         ELSE string_split_regex(trim(text), '\s+') END AS ts
+        |         ELSE string_split_regex(trim(text), '\\s+') END AS ts
         |  FROM documents),
         |bm AS (
         |  SELECT doc_id, label,
@@ -1266,35 +1177,7 @@ object CurationQueries {
         |       FOR b IN range(0, 8)],
         |      [CAST(1.0 AS DOUBLE)]) AS xs
         |  FROM bm),
-        |ex1 AS (SELECT y,
-        |          unnest(list_transform(xs, (x, i) -> {'dim': i, 'x': x}),
-        |                 recursive := true)
-        |        FROM e),
-        |g1 AS (SELECT dim,
-        |         sum(CAST(floor((0.5 - y)*x*1048576.0 + 0.5) AS BIGINT)) AS g,
-        |         CAST(count(*) AS DOUBLE) AS n
-        |       FROM ex1 GROUP BY dim),
-        |w1 AS (SELECT list(0.0 - 4.0*(CAST(g AS DOUBLE)/(n*1048576.0)) ORDER BY dim) AS w
-        |       FROM g1),
-        |r2 AS (SELECT e.vec_id, e.y, e.xs,
-        |         (0.5 + z/(2.0*(1.0 + abs(z)))) - e.y AS r
-        |       FROM (SELECT e.*, list_sum(list_transform(list_zip(e.xs, w1.w),
-        |               p -> p[1]*p[2])) AS z
-        |             FROM e, w1) e),
-        |ex2 AS (SELECT r,
-        |          unnest(list_transform(xs, (x, i) -> {'dim': i, 'x': x}),
-        |                 recursive := true)
-        |        FROM r2),
-        |g2 AS (SELECT dim,
-        |         sum(CAST(floor(r*x*1048576.0 + 0.5) AS BIGINT)) AS g,
-        |         CAST(count(*) AS DOUBLE) AS n
-        |       FROM ex2 GROUP BY dim),
-        |w2 AS (SELECT list(w1.w[g2.dim] - 4.0*(CAST(g2.g AS DOUBLE)/(g2.n*1048576.0))
-        |                   ORDER BY g2.dim) AS w
-        |       FROM g2, w1),
-        |sc AS (SELECT e.vec_id, e.label, e.y,
-        |         list_sum(list_transform(list_zip(e.xs, w2.w), p -> p[1]*p[2])) AS z
-        |       FROM e, w2)
+        |$logisticTwoStepCtes
         |SELECT vec_id, CAST(label AS BIGINT) AS label,
         |  CAST(floor((0.5 + z/(2.0*(1.0 + abs(z))))*1e6 + 0.5) AS BIGINT)
         |    AS score_micros,
@@ -1362,46 +1245,7 @@ object CurationQueries {
       // q156: q148's Lloyd CTE through rnk, pairs with the sim in the
       // SELECT (filtered in the outer), cluster representatives ranked
       // by cluster id for the deterministic negative pick.
-      Some("""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |c0 AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 8),
-        |d0 AS (SELECT e.vec_id, c0.cid,
-        |         CAST(floor(list_sum(list_transform(list_zip(e.v, c0.cv),
-        |           p -> (p[1]-p[2])*(p[1]-p[2])))*1e6 + 0.5) AS BIGINT) AS dm
-        |       FROM e, c0),
-        |a0 AS (SELECT vec_id, cid FROM (
-        |         SELECT vec_id, cid,
-        |           row_number() OVER (PARTITION BY vec_id ORDER BY dm, cid) rk
-        |         FROM d0) t
-        |       WHERE rk = 1),
-        |ex AS (SELECT vec_id,
-        |         unnest(list_transform(v, (x, i) -> {'dim': i, 'x': x}),
-        |                recursive := true)
-        |       FROM e),
-        |upd AS (SELECT a0.cid, ex.dim,
-        |          sum(CAST(floor(ex.x*1048576.0 + 0.5) AS BIGINT)) AS s,
-        |          count(*) AS n
-        |        FROM ex JOIN a0 USING (vec_id) GROUP BY 1, 2),
-        |c1 AS (SELECT cid, list(s/(n*1048576.0) ORDER BY dim) AS cv
-        |       FROM upd GROUP BY cid),
-        |d1 AS (SELECT e.vec_id, c1.cid,
-        |         CAST(floor(list_sum(list_transform(list_zip(e.v, c1.cv),
-        |           p -> (p[1]-p[2])*(p[1]-p[2])))*1e6 + 0.5) AS BIGINT) AS dm
-        |       FROM e, c1),
-        |a1 AS (SELECT vec_id, cid, dm FROM (
-        |         SELECT vec_id, cid, dm,
-        |           row_number() OVER (PARTITION BY vec_id ORDER BY dm, cid) rk
-        |         FROM d1) t
-        |       WHERE rk = 1),
-        |sv AS (SELECT vec_id,
-        |         list_transform(v, x -> CAST(floor(x*1048576.0 + 0.5) AS BIGINT)) AS sv
-        |       FROM e),
-        |n2 AS (SELECT vec_id,
-        |         CAST(list_sum(list_transform(sv, x -> x*x)) AS BIGINT) AS n2
-        |       FROM sv),
-        |rnk AS (SELECT vec_id, cid,
-        |          row_number() OVER (PARTITION BY cid ORDER BY dm, vec_id) AS rk
-        |        FROM a1),
+      Some(kmeansOracleCtes + ",\n" + semDedupRankCtes + """,
         |reps AS (SELECT cid, vec_id AS rep_id,
         |           row_number() OVER (ORDER BY cid) AS o
         |         FROM rnk WHERE rk = 1),
@@ -1454,57 +1298,7 @@ object CurationQueries {
       // q148's full SemDeDup CTE (Lloyd prefix in lockstep), q40's
       // fingerprint canonical, q41's token count, q82's md5-bucket split
       // keyed on the canonical id.
-      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |c0 AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 8),
-        |d0 AS (SELECT e.vec_id, c0.cid,
-        |         CAST(floor(list_sum(list_transform(list_zip(e.v, c0.cv),
-        |           p -> (p[1]-p[2])*(p[1]-p[2])))*1e6 + 0.5) AS BIGINT) AS dm
-        |       FROM e, c0),
-        |a0 AS (SELECT vec_id, cid FROM (
-        |         SELECT vec_id, cid,
-        |           row_number() OVER (PARTITION BY vec_id ORDER BY dm, cid) rk
-        |         FROM d0) t
-        |       WHERE rk = 1),
-        |ex AS (SELECT vec_id,
-        |         unnest(list_transform(v, (x, i) -> {'dim': i, 'x': x}),
-        |                recursive := true)
-        |       FROM e),
-        |upd AS (SELECT a0.cid, ex.dim,
-        |          sum(CAST(floor(ex.x*1048576.0 + 0.5) AS BIGINT)) AS s,
-        |          count(*) AS n
-        |        FROM ex JOIN a0 USING (vec_id) GROUP BY 1, 2),
-        |c1 AS (SELECT cid, list(s/(n*1048576.0) ORDER BY dim) AS cv
-        |       FROM upd GROUP BY cid),
-        |d1 AS (SELECT e.vec_id, c1.cid,
-        |         CAST(floor(list_sum(list_transform(list_zip(e.v, c1.cv),
-        |           p -> (p[1]-p[2])*(p[1]-p[2])))*1e6 + 0.5) AS BIGINT) AS dm
-        |       FROM e, c1),
-        |a1 AS (SELECT vec_id, cid, dm FROM (
-        |         SELECT vec_id, cid, dm,
-        |           row_number() OVER (PARTITION BY vec_id ORDER BY dm, cid) rk
-        |         FROM d1) t
-        |       WHERE rk = 1),
-        |sv AS (SELECT vec_id,
-        |         list_transform(v, x -> CAST(floor(x*1048576.0 + 0.5) AS BIGINT)) AS sv
-        |       FROM e),
-        |n2 AS (SELECT vec_id,
-        |         CAST(list_sum(list_transform(sv, x -> x*x)) AS BIGINT) AS n2
-        |       FROM sv),
-        |rnk AS (SELECT vec_id, cid,
-        |          row_number() OVER (PARTITION BY cid ORDER BY dm, vec_id) AS rk
-        |        FROM a1),
-        |dups AS (SELECT DISTINCT y.vec_id
-        |         FROM rnk x JOIN rnk y ON x.cid = y.cid AND x.rk < y.rk
-        |         JOIN sv xs ON xs.vec_id = x.vec_id
-        |         JOIN sv ys ON ys.vec_id = y.vec_id
-        |         JOIN n2 xn ON xn.vec_id = x.vec_id
-        |         JOIN n2 yn ON yn.vec_id = y.vec_id
-        |         WHERE xn.n2 > 0 AND yn.n2 > 0
-        |           AND CAST(floor(CAST(list_sum(list_transform(
-        |                 list_zip(xs.sv, ys.sv), p -> p[1]*p[2])) AS DOUBLE)
-        |               / (sqrt(CAST(xn.n2 AS DOUBLE)) * sqrt(CAST(yn.n2 AS DOUBLE)))
-        |               * 1e6 + 0.5) AS BIGINT) >= 400000),
+      kmeansOracleCtes + ",\n" + semDedupRankCtes + ",\n" + semDedupDupsCte + """,
         |canon AS (
         |  SELECT doc_id, text,
         |    min(doc_id) OVER (
@@ -1539,20 +1333,7 @@ object CurationQueries {
         bench = docs.where(col("doc_id") % 97 === 0),
         n = 3)
     }, Some(
-      """WITH docs AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |sh AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(toks) <= 3 THEN [array_to_string(toks, ' ')]
-        |         ELSE list_transform(range(1, len(toks) - 3 + 2),
-        |                i -> array_to_string(toks[i:i+2], ' ')) END AS shingles
-        |  FROM docs),
-        |bench AS (SELECT DISTINCT unnest(shingles) AS shingle FROM sh WHERE doc_id % 97 = 0),
-        |train AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh WHERE doc_id % 97 <> 0)
-        |SELECT t.doc_id,
-        |  CAST(count(DISTINCT t.shingle) AS BIGINT) AS n_contaminated_ngrams
-        |FROM train t JOIN bench b USING (shingle)
-        |GROUP BY t.doc_id""".stripMargin)),
+      decontaminationOracleSql(97))),
 
     // ---- L-series E2E: one corpus-ingestion round (quality floor ->
     // within-batch exact dedup -> against-corpus fingerprint anti-join
@@ -1887,16 +1668,8 @@ object CurationQueries {
       // q230: q30's session CTE, kept = last-8 by (ts, event_id) desc,
       // role by kept-index parity, transcript via ordered string_agg
       // (chr(10) joiner on both engines)
-      Some("""WITH sess AS (
-        |  SELECT user_id, ts, event_id, event_type,
-        |    sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                      ROWS UNBOUNDED PRECEDING) AS session_seq
-        |  FROM (
-        |    SELECT user_id, ts, event_id, event_type,
-        |      CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL THEN 1
-        |           WHEN epoch_us(ts) - epoch_us(lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)) > 1800000000 THEN 1
-        |           ELSE 0 END AS is_new
-        |    FROM events)),
+      Some(s"""WITH sess AS (
+        |${sessionSeqSql(" ts, event_id, event_type,", " event_type,")}),
         |kept AS (
         |  SELECT * FROM (
         |    SELECT user_id, session_seq, ts, event_id, event_type,
@@ -2113,59 +1886,77 @@ object CurationQueries {
        |${(2 to 10).map(n => s"LEFT JOIN m$n ON m$n.doc_id = b.doc_id").mkString("\n")}""".stripMargin
   }
 
+  /** Two unrolled full-batch logistic GD steps (lr 4.0, zero start)
+    * over an `e` CTE of (vec_id, label, y, xs): exact BIGINT gradient
+    * sums, the engine's IEEE weight-update sequence, final scores `sc`
+    * (q149 on embeddings, q172 on bigram features). */
+  private val logisticTwoStepCtes: String =
+    """ex1 AS (SELECT y,
+      |          unnest(list_transform(xs, (x, i) -> {'dim': i, 'x': x}),
+      |                 recursive := true)
+      |        FROM e),
+      |g1 AS (SELECT dim,
+      |         sum(CAST(floor((0.5 - y)*x*1048576.0 + 0.5) AS BIGINT)) AS g,
+      |         CAST(count(*) AS DOUBLE) AS n
+      |       FROM ex1 GROUP BY dim),
+      |w1 AS (SELECT list(0.0 - 4.0*(CAST(g AS DOUBLE)/(n*1048576.0)) ORDER BY dim) AS w
+      |       FROM g1),
+      |r2 AS (SELECT e.vec_id, e.y, e.xs,
+      |         (0.5 + z/(2.0*(1.0 + abs(z)))) - e.y AS r
+      |       FROM (SELECT e.*, list_sum(list_transform(list_zip(e.xs, w1.w),
+      |               p -> p[1]*p[2])) AS z
+      |             FROM e, w1) e),
+      |ex2 AS (SELECT r,
+      |          unnest(list_transform(xs, (x, i) -> {'dim': i, 'x': x}),
+      |                 recursive := true)
+      |        FROM r2),
+      |g2 AS (SELECT dim,
+      |         sum(CAST(floor(r*x*1048576.0 + 0.5) AS BIGINT)) AS g,
+      |         CAST(count(*) AS DOUBLE) AS n
+      |       FROM ex2 GROUP BY dim),
+      |w2 AS (SELECT list(w1.w[g2.dim] - 4.0*(CAST(g2.g AS DOUBLE)/(g2.n*1048576.0))
+      |                   ORDER BY g2.dim) AS w
+      |       FROM g2, w1),
+      |sc AS (SELECT e.vec_id, e.label, e.y,
+      |         list_sum(list_transform(list_zip(e.xs, w2.w), p -> p[1]*p[2])) AS z
+      |       FROM e, w2)""".stripMargin
+
+  /** q42's quality score snapped to integer micros as `q` (source,
+    * `extra` columns, label = English, s) — q201/q204/q208/q211's
+    * shared input (OracleConsistencySpec pins the formula). */
+  private def qualityMicrosCte(extra: String = ""): String =
+    s"""WITH q AS (
+       |  SELECT source, ${extra}lang = 'en' AS label,
+       |    CAST(round(round(0.4 * least(1.0, n_tokens / 100.0)
+       |        + 0.4 * (1.0 - punct_ratio)
+       |        + 0.2 * (1.0 - abs(stop_ratio - 0.4)), 6) * 1e6) AS BIGINT) AS s
+       |  FROM (
+       |    SELECT doc_id, source, lang, len(toks) AS n_tokens,
+       |      (length(text) - length(regexp_replace(text, '[^a-z0-9 ]', '', 'g'))) / length(text) AS punct_ratio,
+       |      CAST(len(list_filter(toks, x -> x IN ('the','a','of','and','to','in','is','it'))) AS BIGINT) / len(toks) AS stop_ratio
+       |    FROM (SELECT doc_id, source, lang, text, string_split_regex(trim(text), '\\s+') AS toks FROM documents)))""".stripMargin
+
+  /** q154's oracle: the 6 learning rounds UNROLLED — per round a pair
+    * count over the exploded per-word symbol state, the (n desc, l, r)
+    * top-1 (DuckDB varchar comparison is memcmp, same as Spark's
+    * UTF8String binary order), and the greedy merge application. */
   private def bpeMergeOracleSql(rounds: Int): String = {
-    val head =
-      """WITH vocab AS (
-        |  SELECT w AS word, CAST(count(*) AS BIGINT) AS freq
-        |  FROM (SELECT unnest(regexp_split_to_array(trim(text), '\s+')) AS w
-        |        FROM documents WHERE length(trim(text)) > 0)
-        |  WHERE length(w) > 0 GROUP BY 1),
-        |seg_0 AS MATERIALIZED (
-        |  SELECT word, freq, i AS pos, chars[i] AS sym
-        |  FROM (SELECT word, freq, regexp_split_to_array(word, '') AS chars FROM vocab),
-        |       unnest(generate_series(1, len(chars))) AS gs(i))""".stripMargin
     val perRound = (1 to rounds).map { k =>
-      s"""pairs_$k AS (
-         |  SELECT a.sym AS l, b.sym AS r, CAST(SUM(a.freq) AS BIGINT) AS n
-         |  FROM seg_${k - 1} a JOIN seg_${k - 1} b
-         |    ON a.word = b.word AND b.pos = a.pos + 1
-         |  GROUP BY 1, 2),
-         |top_$k AS MATERIALIZED (
-         |  SELECT l, r, n FROM pairs_$k ORDER BY n DESC, l ASC, r ASC LIMIT 1),
-         |""".stripMargin +
+      bpePairsTopCtes(k) + ",\n" +
         bpeApplyMergeSql(k, s"seg_${k - 1}", "word", s" CROSS JOIN top_$k t",
           "t.l", "t.r")
     }
     val sel = (1 to rounds).map(k =>
       s"""SELECT $k AS rank, l AS "left", r AS "right", l || r AS merged, n AS pair_count FROM top_$k""")
       .mkString(" UNION ALL ")
-    (head +: perRound).mkString(",\n") + s"\nSELECT * FROM ($sel) ORDER BY rank"
+    (bpeVocabCtes +: perRound).mkString(",\n") + s"\nSELECT * FROM ($sel) ORDER BY rank"
   }
 
-  /** q157's oracle: the fixed merges applied (same unrolled machinery,
-    * pair literals instead of a learned top-1) to the exploded
-    * (doc_id, word-index, pos, sym) corpus state, reduced to the
-    * token histogram. */
   /** q179's oracle: q157's per-word segmentation chain with `lang`
     * carried through the words CTE, collapsed to per-language
     * fertility (tokens/word) and compression (chars/token) stats. */
-  private def bpeFertilityOracleSql(ms: Seq[(String, String)]): String = {
-    val head =
-      """WITH words AS (
-        |  SELECT doc_id, lang, i AS widx, ws[i] AS word
-        |  FROM (SELECT doc_id, lang, regexp_split_to_array(trim(text), '\s+') AS ws
-        |        FROM documents WHERE length(trim(text)) > 0),
-        |       unnest(generate_series(1, len(ws))) AS gs(i)
-        |  WHERE length(ws[i]) > 0),
-        |seg_0 AS MATERIALIZED (
-        |  SELECT doc_id, widx, i AS pos, chars[i] AS sym
-        |  FROM (SELECT doc_id, widx, regexp_split_to_array(word, '') AS chars FROM words),
-        |       unnest(generate_series(1, len(chars))) AS gs(i))""".stripMargin
-    def lit(x: String) = "'" + x.replace("'", "''") + "'"
-    val perRound = ms.zipWithIndex.map { case ((l, r), i) =>
-      bpeApplyMergeSql(i + 1, s"seg_$i", "doc_id, widx", "", lit(l), lit(r))
-    }
-    (head +: perRound).mkString(",\n") +
+  private def bpeFertilityOracleSql(ms: Seq[(String, String)]): String =
+    bpeSegmentChainSql(ms, lang = true) +
       s""",
          |wstats AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_words
          |           FROM words GROUP BY 1),
@@ -2181,29 +1972,63 @@ object CurationQueries {
          |  floor(CAST(n_chars AS DOUBLE)/CAST(n_tokens AS DOUBLE)*1e6 + 0.5)/1e6
          |    AS chars_per_token
          |FROM wstats JOIN tstats USING (lang)""".stripMargin
-  }
 
-  private def bpeSegmentOracleSql(ms: Seq[(String, String)]): String = {
-    val head =
-      """WITH words AS (
-        |  SELECT doc_id, i AS widx, ws[i] AS word
-        |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS ws
-        |        FROM documents WHERE length(trim(text)) > 0),
-        |       unnest(generate_series(1, len(ws))) AS gs(i)
-        |  WHERE length(ws[i]) > 0),
-        |seg_0 AS MATERIALIZED (
-        |  SELECT doc_id, widx, i AS pos, chars[i] AS sym
-        |  FROM (SELECT doc_id, widx, regexp_split_to_array(word, '') AS chars FROM words),
-        |       unnest(generate_series(1, len(chars))) AS gs(i))""".stripMargin
-    def lit(x: String) = "'" + x.replace("'", "''") + "'"
-    val perRound = ms.zipWithIndex.map { case ((l, r), i) =>
-      bpeApplyMergeSql(i + 1, s"seg_$i", "doc_id, widx", "", lit(l), lit(r))
-    }
-    (head +: perRound).mkString(",\n") +
+  /** q157's oracle: the fixed merges applied (same unrolled machinery,
+    * pair literals instead of a learned top-1) to the exploded
+    * (doc_id, word-index, pos, sym) corpus state, reduced to the
+    * token histogram. */
+  private def bpeSegmentOracleSql(ms: Seq[(String, String)]): String =
+    bpeSegmentChainSql(ms, lang = false) +
       s"""
          |SELECT sym AS token, CAST(count(*) AS BIGINT) AS n,
          |       CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs
          |FROM seg_${ms.size} GROUP BY 1""".stripMargin
+
+  /** q157's segmentation chain: [[bpeWordsCtes]] then one `seg_i` per
+    * fixed merge in `ms`, applied as pair literals. */
+  private def bpeSegmentChainSql(ms: Seq[(String, String)], lang: Boolean): String =
+    (("WITH " + bpeWordsCtes(lang)) +: ms.zipWithIndex.map { case ((l, r), i) =>
+      bpeApplyMergeSql(i + 1, s"seg_$i", "doc_id, widx", "", sqlStr(l), sqlStr(r))
+    }).mkString(",\n")
+
+  /** q154's learning start: word frequencies `vocab` and their
+    * per-character state `seg_0`. */
+  private val bpeVocabCtes: String =
+    """WITH vocab AS (
+      |  SELECT w AS word, CAST(count(*) AS BIGINT) AS freq
+      |  FROM (SELECT unnest(regexp_split_to_array(trim(text), '\s+')) AS w
+      |        FROM documents WHERE length(trim(text)) > 0)
+      |  WHERE length(w) > 0 GROUP BY 1),
+      |seg_0 AS MATERIALIZED (
+      |  SELECT word, freq, i AS pos, chars[i] AS sym
+      |  FROM (SELECT word, freq, regexp_split_to_array(word, '') AS chars FROM vocab),
+      |       unnest(generate_series(1, len(chars))) AS gs(i))""".stripMargin
+
+  /** Learning round k: adjacent-symbol pair counts over `seg_{k-1}`
+    * and the top pair `top_k` (count desc, then l, r). */
+  private def bpePairsTopCtes(k: Int): String =
+    s"""pairs_$k AS (
+       |  SELECT a.sym AS l, b.sym AS r, CAST(SUM(a.freq) AS BIGINT) AS n
+       |  FROM seg_${k - 1} a JOIN seg_${k - 1} b
+       |    ON a.word = b.word AND b.pos = a.pos + 1
+       |  GROUP BY 1, 2),
+       |top_$k AS MATERIALIZED (
+       |  SELECT l, r, n FROM pairs_$k ORDER BY n DESC, l ASC, r ASC LIMIT 1)""".stripMargin
+
+  /** The corpus `words` (doc_id[, lang], word index, word) and their
+    * per-character state `<p>seg_0`, where q157's application starts. */
+  private def bpeWordsCtes(lang: Boolean, p: String = ""): String = {
+    val l = if (lang) "lang, " else ""
+    s"""words AS (
+       |  SELECT doc_id, ${l}i AS widx, ws[i] AS word
+       |  FROM (SELECT doc_id, ${l}regexp_split_to_array(trim(text), '\\s+') AS ws
+       |        FROM documents WHERE length(trim(text)) > 0),
+       |       unnest(generate_series(1, len(ws))) AS gs(i)
+       |  WHERE length(ws[i]) > 0),
+       |${p}seg_0 AS MATERIALIZED (
+       |  SELECT doc_id, widx, i AS pos, chars[i] AS sym
+       |  FROM (SELECT doc_id, widx, regexp_split_to_array(word, '') AS chars FROM words),
+       |       unnest(generate_series(1, len(chars))) AS gs(i))""".stripMargin
   }
 
   /** q168's oracle: the tokenizer stack end-to-end — q154's unrolled
@@ -2213,26 +2038,7 @@ object CurationQueries {
     * CTE names keep the two chains apart), then per-doc token counts
     * packed with q88's hash-order running-sum bins. */
   private def bpeTokenizerE2eOracleSql(rounds: Int, budget: Long): String = {
-    val head =
-      """WITH vocab AS (
-        |  SELECT w AS word, CAST(count(*) AS BIGINT) AS freq
-        |  FROM (SELECT unnest(regexp_split_to_array(trim(text), '\s+')) AS w
-        |        FROM documents WHERE length(trim(text)) > 0)
-        |  WHERE length(w) > 0 GROUP BY 1),
-        |seg_0 AS MATERIALIZED (
-        |  SELECT word, freq, i AS pos, chars[i] AS sym
-        |  FROM (SELECT word, freq, regexp_split_to_array(word, '') AS chars FROM vocab),
-        |       unnest(generate_series(1, len(chars))) AS gs(i)),
-        |words AS (
-        |  SELECT doc_id, i AS widx, ws[i] AS word
-        |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS ws
-        |        FROM documents WHERE length(trim(text)) > 0),
-        |       unnest(generate_series(1, len(ws))) AS gs(i)
-        |  WHERE length(ws[i]) > 0),
-        |cseg_0 AS MATERIALIZED (
-        |  SELECT doc_id, widx, i AS pos, chars[i] AS sym
-        |  FROM (SELECT doc_id, widx, regexp_split_to_array(word, '') AS chars FROM words),
-        |       unnest(generate_series(1, len(chars))) AS gs(i))""".stripMargin
+    val head = bpeVocabCtes + ",\n" + bpeWordsCtes(lang = false, p = "c")
     // topx_k: top_k padded with a never-matching NULL sentinel when a
     // round finds no pair (corpus exhausted before `rounds` merges) —
     // the corpus chain then passes through unchanged, mirroring
@@ -2240,13 +2046,7 @@ object CurationQueries {
     // later cseg (the COALESCE(cand, false) in the apply makes the
     // NULL pair a no-op rather than a null-contagion row drop)
     val perRound = (1 to rounds).map { k =>
-      s"""pairs_$k AS (
-         |  SELECT a.sym AS l, b.sym AS r, CAST(SUM(a.freq) AS BIGINT) AS n
-         |  FROM seg_${k - 1} a JOIN seg_${k - 1} b
-         |    ON a.word = b.word AND b.pos = a.pos + 1
-         |  GROUP BY 1, 2),
-         |top_$k AS MATERIALIZED (
-         |  SELECT l, r, n FROM pairs_$k ORDER BY n DESC, l ASC, r ASC LIMIT 1),
+      bpePairsTopCtes(k) + s""",
          |topx_$k AS (
          |  SELECT l, r FROM top_$k
          |  UNION ALL
@@ -2275,16 +2075,7 @@ object CurationQueries {
     * ONE builder so the A/A control and the planted-drift twin cannot
     * drift apart. */
   private def ingestAuditOracleSql(isRefSql: String, thresholdMicros: Long): String =
-    s"""WITH q AS (
-       |  SELECT source, $isRefSql AS is_ref, lang = 'en' AS label,
-       |    CAST(round(round(0.4 * least(1.0, n_tokens / 100.0)
-       |        + 0.4 * (1.0 - punct_ratio)
-       |        + 0.2 * (1.0 - abs(stop_ratio - 0.4)), 6) * 1e6) AS BIGINT) AS s
-       |  FROM (
-       |    SELECT doc_id, source, lang, len(toks) AS n_tokens,
-       |      (length(text) - length(regexp_replace(text, '[^a-z0-9 ]', '', 'g'))) / length(text) AS punct_ratio,
-       |      CAST(len(list_filter(toks, x -> x IN ('the','a','of','and','to','in','is','it'))) AS BIGINT) / len(toks) AS stop_ratio
-       |    FROM (SELECT doc_id, source, lang, text, string_split_regex(trim(text), '\\s+') AS toks FROM documents))),
+    s"""${qualityMicrosCte(s"$isRefSql AS is_ref, ")},
        |hist AS (
        |  SELECT source, s, CAST(count(*) AS BIGINT) AS n,
        |    CAST(sum(CASE WHEN label THEN 1 ELSE 0 END) AS BIGINT) AS p,

@@ -286,37 +286,7 @@ object DedupQueries {
       // ids, fixed-point distance ranking (floor(d*1e6+0.5), id
       // tiebreak), 2^-20-snapped integer coordinate sums for the update
       // (order-independent -> bit-equal centroids), reassign, aggregate.
-      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |c0 AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 8),
-        |d0 AS (SELECT e.vec_id, c0.cid,
-        |         CAST(floor(list_sum(list_transform(list_zip(e.v, c0.cv),
-        |           p -> (p[1]-p[2])*(p[1]-p[2])))*1e6 + 0.5) AS BIGINT) AS dm
-        |       FROM e, c0),
-        |a0 AS (SELECT vec_id, cid FROM (
-        |         SELECT vec_id, cid,
-        |           row_number() OVER (PARTITION BY vec_id ORDER BY dm, cid) rk
-        |         FROM d0) t
-        |       WHERE rk = 1),
-        |ex AS (SELECT vec_id,
-        |         unnest(list_transform(v, (x, i) -> {'dim': i, 'x': x}),
-        |                recursive := true)
-        |       FROM e),
-        |upd AS (SELECT a0.cid, ex.dim,
-        |          sum(CAST(floor(ex.x*1048576.0 + 0.5) AS BIGINT)) AS s,
-        |          count(*) AS n
-        |        FROM ex JOIN a0 USING (vec_id) GROUP BY 1, 2),
-        |c1 AS (SELECT cid, list(s/(n*1048576.0) ORDER BY dim) AS cv
-        |       FROM upd GROUP BY cid),
-        |d1 AS (SELECT e.vec_id, c1.cid,
-        |         CAST(floor(list_sum(list_transform(list_zip(e.v, c1.cv),
-        |           p -> (p[1]-p[2])*(p[1]-p[2])))*1e6 + 0.5) AS BIGINT) AS dm
-        |       FROM e, c1),
-        |a1 AS (SELECT vec_id, cid, dm FROM (
-        |         SELECT vec_id, cid, dm,
-        |           row_number() OVER (PARTITION BY vec_id ORDER BY dm, cid) rk
-        |         FROM d1) t
-        |       WHERE rk = 1)
+      kmeansOracleCtes + """
         |SELECT CAST(cid AS INTEGER) AS cluster_id, count(*) AS n_points,
         |  CAST(sum(vec_id) AS BIGINT) AS id_sum,
         |  CAST(sum(dm) AS BIGINT) AS dist_micros
@@ -346,57 +316,7 @@ object DedupQueries {
       // units). Dots/norms are exact integer sums over 2^-20-snapped
       // coordinates; the cosine double op sequence (dot / (sqrt·sqrt),
       // ×1e6, +0.5, floor) matches the Spark expression exactly.
-      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |c0 AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 8),
-        |d0 AS (SELECT e.vec_id, c0.cid,
-        |         CAST(floor(list_sum(list_transform(list_zip(e.v, c0.cv),
-        |           p -> (p[1]-p[2])*(p[1]-p[2])))*1e6 + 0.5) AS BIGINT) AS dm
-        |       FROM e, c0),
-        |a0 AS (SELECT vec_id, cid FROM (
-        |         SELECT vec_id, cid,
-        |           row_number() OVER (PARTITION BY vec_id ORDER BY dm, cid) rk
-        |         FROM d0) t
-        |       WHERE rk = 1),
-        |ex AS (SELECT vec_id,
-        |         unnest(list_transform(v, (x, i) -> {'dim': i, 'x': x}),
-        |                recursive := true)
-        |       FROM e),
-        |upd AS (SELECT a0.cid, ex.dim,
-        |          sum(CAST(floor(ex.x*1048576.0 + 0.5) AS BIGINT)) AS s,
-        |          count(*) AS n
-        |        FROM ex JOIN a0 USING (vec_id) GROUP BY 1, 2),
-        |c1 AS (SELECT cid, list(s/(n*1048576.0) ORDER BY dim) AS cv
-        |       FROM upd GROUP BY cid),
-        |d1 AS (SELECT e.vec_id, c1.cid,
-        |         CAST(floor(list_sum(list_transform(list_zip(e.v, c1.cv),
-        |           p -> (p[1]-p[2])*(p[1]-p[2])))*1e6 + 0.5) AS BIGINT) AS dm
-        |       FROM e, c1),
-        |a1 AS (SELECT vec_id, cid, dm FROM (
-        |         SELECT vec_id, cid, dm,
-        |           row_number() OVER (PARTITION BY vec_id ORDER BY dm, cid) rk
-        |         FROM d1) t
-        |       WHERE rk = 1),
-        |sv AS (SELECT vec_id,
-        |         list_transform(v, x -> CAST(floor(x*1048576.0 + 0.5) AS BIGINT)) AS sv
-        |       FROM e),
-        |n2 AS (SELECT vec_id,
-        |         CAST(list_sum(list_transform(sv, x -> x*x)) AS BIGINT) AS n2
-        |       FROM sv),
-        |rnk AS (SELECT vec_id, cid,
-        |          row_number() OVER (PARTITION BY cid ORDER BY dm, vec_id) AS rk
-        |        FROM a1),
-        |dups AS (SELECT DISTINCT y.vec_id
-        |         FROM rnk x JOIN rnk y ON x.cid = y.cid AND x.rk < y.rk
-        |         JOIN sv xs ON xs.vec_id = x.vec_id
-        |         JOIN sv ys ON ys.vec_id = y.vec_id
-        |         JOIN n2 xn ON xn.vec_id = x.vec_id
-        |         JOIN n2 yn ON yn.vec_id = y.vec_id
-        |         WHERE xn.n2 > 0 AND yn.n2 > 0
-        |           AND CAST(floor(CAST(list_sum(list_transform(
-        |                 list_zip(xs.sv, ys.sv), p -> p[1]*p[2])) AS DOUBLE)
-        |               / (sqrt(CAST(xn.n2 AS DOUBLE)) * sqrt(CAST(yn.n2 AS DOUBLE)))
-        |               * 1e6 + 0.5) AS BIGINT) >= 400000)
+      kmeansOracleCtes + ",\n" + semDedupRankCtes + ",\n" + semDedupDupsCte + """
         |SELECT CAST(a1.cid AS INTEGER) AS cluster_id, count(*) AS n_docs,
         |  CAST(sum(CASE WHEN d.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_dups,
         |  CAST(sum(CASE WHEN d.vec_id IS NOT NULL THEN a1.vec_id END) AS BIGINT) AS dup_id_sum,
@@ -1036,25 +956,7 @@ object DedupQueries {
       graft.dedup.Dedup.incrementalStatus(
         docs.where(col("doc_id") % 3 =!= 0),
         docs.where(col("doc_id") % 3 === 0), "text", "doc_id")
-    }, Some(
-      // q184: base fingerprints distinct, delta min-id window, left
-      // join; the status CASE mirrors incrementalStatus branch order.
-      """WITH basefp AS (
-        |  SELECT DISTINCT md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'))
-        |    AS fingerprint
-        |  FROM documents WHERE doc_id % 3 <> 0),
-        |delta AS (
-        |  SELECT doc_id,
-        |    md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fingerprint,
-        |    min(doc_id) OVER (
-        |      PARTITION BY md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')))
-        |      AS first_id
-        |  FROM documents WHERE doc_id % 3 = 0)
-        |SELECT d.doc_id, d.fingerprint,
-        |  CASE WHEN b.fingerprint IS NOT NULL THEN 'dup_of_base'
-        |       WHEN d.first_id <> d.doc_id THEN 'dup_in_delta'
-        |       ELSE 'new' END AS status
-        |FROM delta d LEFT JOIN basefp b ON d.fingerprint = b.fingerprint""".stripMargin)),
+    }, Some(incrementalDedupOracleSql("""\s+"""))),
 
     // ---- typo-grade vocabulary canonicalization (Dedup.typoCanonical):
     // FastSS deletion-variant blocking (exact for edit distance ≤ 1 —
@@ -1174,40 +1076,16 @@ object DedupQueries {
         |FROM pe GROUP BY vec_id""".stripMargin))
   )
 
-  /** q154's oracle: the 6 learning rounds UNROLLED — per round a pair
-    * count over the exploded per-word symbol state, the (n desc, l, r)
-    * top-1 (DuckDB varchar comparison is memcmp, same as Spark's
-    * UTF8String binary order), and the greedy merge application. */
   /** q195's oracle: the q160 ADC chain (dense half, queries 1..3,
     * self-matches excluded) + the q188 BM25 chain verbatim with
     * b-prefixed CTE names (sparse half, no self to exclude), fused by
     * the q189 RRF tail — contributions fold in system order
     * (0 = dense, 1 = sparse), matching `Fusion.rrf`'s Seq order. */
   private def hybridRrfOracleSql(m: Int, k: Int, dim: Int,
-                                 topK: Int, k0: Int): String = {
-    val sub = dim / m
-    val scoreCtes = (0 until m).map { s =>
-      val lo = s * sub + 1; val hi = (s + 1) * sub
-      s"""s_$s AS (SELECT qv.query_id, a1_$s.vec_id AS neighbor_id,
-         |    CAST(floor(list_sum(list_transform(list_zip(qv.qv[$lo:$hi], c1_$s.cv),
-         |      p -> (p[1]-p[2])*(p[1]-p[2])))*1e6 + 0.5) AS BIGINT) AS dm
-         |  FROM a1_$s JOIN c1_$s USING (cid), qv)""".stripMargin
-    }
-    val joins = (1 until m).map(s =>
-      s"JOIN s_$s USING (query_id, neighbor_id)").mkString(" ")
-    val adc = (0 until m).map(s => s"s_$s.dm").mkString(" + ")
-    pqTrainCtes(m, k, dim) +
+                                 topK: Int, k0: Int): String =
+    pqAdcCtes(m, k, dim, "qv", "vec_id IN (1, 2, 3)") +
       s""",
-         |qv AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id IN (1, 2, 3)),
-         |${scoreCtes.mkString(",\n")},
-         |adc AS (SELECT query_id, neighbor_id, CAST($adc AS BIGINT) AS adc_micros
-         |        FROM s_0 $joins
-         |        WHERE query_id <> neighbor_id),
-         |sysa AS (SELECT query_id, neighbor_id, rk AS rank
-         |         FROM (SELECT *, row_number() OVER (
-         |                 PARTITION BY query_id ORDER BY adc_micros, neighbor_id) rk
-         |               FROM adc) t
-         |         WHERE rk <= $topK),
+         |${rrfSystemCte("sysa", "neighbor_id", "adc_micros, neighbor_id", "adc", topK)},
          |btoks AS (
          |  SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS term
          |  FROM documents WHERE length(trim(text)) > 0),
@@ -1242,28 +1120,8 @@ object DedupQueries {
          |          floor(list_reduce(list(contrib ORDER BY term), (x, y) -> x + y)
          |                *1e6 + 0.5)/1e6 AS score
          |        FROM bc GROUP BY 1, 2),
-         |sysb AS (SELECT query_id, doc_id AS neighbor_id, rk AS rank
-         |         FROM (SELECT *, row_number() OVER (
-         |                 PARTITION BY query_id ORDER BY score DESC, doc_id) rk
-         |               FROM bsc) t
-         |         WHERE rk <= $topK),
-         |u AS (SELECT query_id, neighbor_id, 0 AS sys, rank FROM sysa
-         |      UNION ALL
-         |      SELECT query_id, neighbor_id, 1 AS sys, rank FROM sysb),
-         |cr AS (SELECT query_id, neighbor_id, sys,
-         |         floor(1e0/(${k0}e0 + CAST(rank AS DOUBLE))*1e6 + 0.5)/1e6
-         |           AS contrib
-         |       FROM u),
-         |sc AS (SELECT query_id, neighbor_id,
-         |         floor(list_reduce(list(contrib ORDER BY sys), (x, y) -> x + y)
-         |               *1e6 + 0.5)/1e6 AS rrf
-         |       FROM cr GROUP BY 1, 2)
-         |SELECT query_id, neighbor_id, rrf, CAST(rk AS INTEGER) AS rank
-         |FROM (SELECT *, row_number() OVER (
-         |        PARTITION BY query_id ORDER BY rrf DESC, neighbor_id) rk
-         |      FROM sc) t
-         |WHERE rk <= $topK""".stripMargin
-  }
+         |${rrfSystemCte("sysb", "doc_id AS neighbor_id", "score DESC, doc_id", "bsc", topK)},
+         |${rrfFusionSql(k0, topK)}""".stripMargin
 
   /** Shared PQ training CTEs (q159/q160): q147's two-iteration Lloyd
     * CTE instantiated once per PQ subspace over the v[lo:hi] slice
@@ -1271,8 +1129,68 @@ object DedupQueries {
     * 2^-20 integer update). Exposes per subspace `a1_s` (final codes +
     * dm) and `c1_s` (final codebook). */
   private def pqTrainCtes(m: Int, k: Int, dim: Int): String =
-    "WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v\n" +
-      "           FROM embeddings),\n" + pqSubCtes(m, k, dim, src = "e")
+    "WITH " + embeddingsCte() + ",\n" + pqSubCtes(m, k, dim, src = "e")
+
+  /** q160's ADC chain over [[pqTrainCtes]]: the queries `q` (the `e`
+    * rows matching `qPred`), each query slice scored per subspace
+    * against every corpus vector's ASSIGNED centroid (a1_s join c1_s on
+    * cid), the floor'd micros summed into `adc`, self-matches excluded. */
+  private def pqAdcCtes(m: Int, k: Int, dim: Int, q: String, qPred: String): String = {
+    val sub = dim / m
+    val scoreCtes = (0 until m).map { s =>
+      val lo = s * sub + 1; val hi = (s + 1) * sub
+      s"""s_$s AS (SELECT $q.query_id, a1_$s.vec_id AS neighbor_id,
+         |    CAST(floor(list_sum(list_transform(list_zip($q.qv[$lo:$hi], c1_$s.cv),
+         |      p -> (p[1]-p[2])*(p[1]-p[2])))*1e6 + 0.5) AS BIGINT) AS dm
+         |  FROM a1_$s JOIN c1_$s USING (cid), $q)""".stripMargin
+    }
+    val joins = (1 until m).map(s =>
+      s"JOIN s_$s USING (query_id, neighbor_id)").mkString(" ")
+    val adc = (0 until m).map(s => s"s_$s.dm").mkString(" + ")
+    pqTrainCtes(m, k, dim) +
+      s""",
+         |$q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE $qPred),
+         |${scoreCtes.mkString(",\n")},
+         |adc AS (SELECT query_id, neighbor_id, CAST($adc AS BIGINT) AS adc_micros
+         |        FROM s_0 $joins
+         |        WHERE query_id <> neighbor_id)""".stripMargin
+  }
+
+  /** The `topK` best neighbors per query of `src`, ordered on `order`
+    * then neighbor id, with `col` and the 1-based rank. */
+  private def topKSql(col: String, order: String, src: String, topK: Int): String =
+    s"""SELECT query_id, neighbor_id, $col, CAST(rk AS INTEGER) AS rank
+       |FROM (SELECT *, row_number() OVER (
+       |        PARTITION BY query_id ORDER BY $order, neighbor_id) rk
+       |      FROM $src) t
+       |WHERE rk <= $topK""".stripMargin
+
+  /** One system's top-`topK` (query_id, neighbor_id, rank) list for
+    * [[rrfFusionSql]], ranked on `order` over `src`. */
+  private def rrfSystemCte(name: String, id: String, order: String, src: String,
+                           topK: Int): String =
+    s"""$name AS (SELECT query_id, $id, rk AS rank
+       |         FROM (SELECT *, row_number() OVER (
+       |                 PARTITION BY query_id ORDER BY $order) rk
+       |               FROM $src) t
+       |         WHERE rk <= $topK)""".stripMargin
+
+  /** q189's RRF tail over the `sysa` (system 0) and `sysb` (system 1)
+    * lists: snapped 1/(k0 + rank) contributions folded in system order
+    * (`Fusion.rrf`'s Seq order), then the fused top-`topK`. */
+  private def rrfFusionSql(k0: Int, topK: Int): String =
+    s"""u AS (SELECT query_id, neighbor_id, 0 AS sys, rank FROM sysa
+       |      UNION ALL
+       |      SELECT query_id, neighbor_id, 1 AS sys, rank FROM sysb),
+       |cr AS (SELECT query_id, neighbor_id, sys,
+       |         floor(1e0/(${k0}e0 + CAST(rank AS DOUBLE))*1e6 + 0.5)/1e6
+       |           AS contrib
+       |       FROM u),
+       |sc AS (SELECT query_id, neighbor_id,
+       |         floor(list_reduce(list(contrib ORDER BY sys), (x, y) -> x + y)
+       |               *1e6 + 0.5)/1e6 AS rrf
+       |       FROM cr GROUP BY 1, 2)
+       |${topKSql("rrf", "rrf DESC", "sc", topK)}""".stripMargin
 
   /** q159's oracle: the m final assignments joined back per vector. */
   private def pqOracleSql(m: Int, k: Int, dim: Int): String = {
@@ -1290,56 +1208,18 @@ object DedupQueries {
     * c1_s on cid), per-subspace floor'd micros summed, (adc, id)
     * ranked per query. */
   private def pqSearchOracleSql(m: Int, k: Int, dim: Int,
-                                nQueries: Int, topK: Int): String = {
-    val sub = dim / m
-    val scoreCtes = (0 until m).map { s =>
-      val lo = s * sub + 1; val hi = (s + 1) * sub
-      s"""s_$s AS (SELECT q.query_id, a1_$s.vec_id AS neighbor_id,
-         |    CAST(floor(list_sum(list_transform(list_zip(q.qv[$lo:$hi], c1_$s.cv),
-         |      p -> (p[1]-p[2])*(p[1]-p[2])))*1e6 + 0.5) AS BIGINT) AS dm
-         |  FROM a1_$s JOIN c1_$s USING (cid), q)""".stripMargin
-    }
-    val joins = (1 until m).map(s =>
-      s"JOIN s_$s USING (query_id, neighbor_id)").mkString(" ")
-    val adc = (0 until m).map(s => s"s_$s.dm").mkString(" + ")
-    pqTrainCtes(m, k, dim) +
-      s""",
-         |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < $nQueries),
-         |${scoreCtes.mkString(",\n")},
-         |adc AS (SELECT query_id, neighbor_id, CAST($adc AS BIGINT) AS adc_micros
-         |        FROM s_0 $joins
-         |        WHERE query_id <> neighbor_id)
-         |SELECT query_id, neighbor_id, adc_micros, CAST(rk AS INTEGER) AS rank
-         |FROM (SELECT *, row_number() OVER (
-         |        PARTITION BY query_id ORDER BY adc_micros, neighbor_id) rk
-         |      FROM adc) t
-         |WHERE rk <= $topK""".stripMargin
-  }
+                                nQueries: Int, topK: Int): String =
+    pqAdcCtes(m, k, dim, "q", s"vec_id < $nQueries") + "\n" +
+      topKSql("adc_micros", "adc_micros", "adc", topK)
 
   /** q181's oracle: q160's ADC chain as the system ranking, the exact
     * L2 top-k as ground truth, left-joined into per-query recall@k and
     * the reciprocal rank of the true NN (rk=1), coalesced to 0 on a
     * miss — divisions mirror Ann.adcEval token for token. */
   private def adcEvalOracleSql(m: Int, k: Int, dim: Int,
-                               nQueries: Int, topK: Int): String = {
-    val sub = dim / m
-    val scoreCtes = (0 until m).map { s =>
-      val lo = s * sub + 1; val hi = (s + 1) * sub
-      s"""s_$s AS (SELECT q.query_id, a1_$s.vec_id AS neighbor_id,
-         |    CAST(floor(list_sum(list_transform(list_zip(q.qv[$lo:$hi], c1_$s.cv),
-         |      p -> (p[1]-p[2])*(p[1]-p[2])))*1e6 + 0.5) AS BIGINT) AS dm
-         |  FROM a1_$s JOIN c1_$s USING (cid), q)""".stripMargin
-    }
-    val joins = (1 until m).map(s =>
-      s"JOIN s_$s USING (query_id, neighbor_id)").mkString(" ")
-    val adc = (0 until m).map(s => s"s_$s.dm").mkString(" + ")
-    pqTrainCtes(m, k, dim) +
+                               nQueries: Int, topK: Int): String =
+    pqAdcCtes(m, k, dim, "q", s"vec_id < $nQueries") +
       s""",
-         |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < $nQueries),
-         |${scoreCtes.mkString(",\n")},
-         |adc AS (SELECT query_id, neighbor_id, CAST($adc AS BIGINT) AS adc_micros
-         |        FROM s_0 $joins
-         |        WHERE query_id <> neighbor_id),
          |sys AS (SELECT query_id, neighbor_id, rk AS sys_rank
          |        FROM (SELECT *, row_number() OVER (
          |                PARTITION BY query_id ORDER BY adc_micros, neighbor_id) rk
@@ -1363,36 +1243,15 @@ object DedupQueries {
          |          THEN coalesce(1e0/sys_rank, 0e0) END), 0e0)*1e6 + 0.5e0)/1e6
          |    AS rr
          |FROM j GROUP BY 1""".stripMargin
-  }
 
   /** q189's oracle: q160's ADC ranking (system 0) and q185's sign-bit
     * Hamming ranking (system 1, sharing the `e` CTE), RRF-fused with
     * snapped 1/(k0+rank) contributions folded in system order. */
   private def rrfFusionOracleSql(m: Int, k: Int, dim: Int, nQueries: Int,
-                                 topK: Int, k0: Int): String = {
-    val sub = dim / m
-    val scoreCtes = (0 until m).map { s =>
-      val lo = s * sub + 1; val hi = (s + 1) * sub
-      s"""s_$s AS (SELECT q.query_id, a1_$s.vec_id AS neighbor_id,
-         |    CAST(floor(list_sum(list_transform(list_zip(q.qv[$lo:$hi], c1_$s.cv),
-         |      p -> (p[1]-p[2])*(p[1]-p[2])))*1e6 + 0.5) AS BIGINT) AS dm
-         |  FROM a1_$s JOIN c1_$s USING (cid), q)""".stripMargin
-    }
-    val joins = (1 until m).map(s =>
-      s"JOIN s_$s USING (query_id, neighbor_id)").mkString(" ")
-    val adc = (0 until m).map(s => s"s_$s.dm").mkString(" + ")
-    pqTrainCtes(m, k, dim) +
+                                 topK: Int, k0: Int): String =
+    pqAdcCtes(m, k, dim, "q", s"vec_id < $nQueries") +
       s""",
-         |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < $nQueries),
-         |${scoreCtes.mkString(",\n")},
-         |adc AS (SELECT query_id, neighbor_id, CAST($adc AS BIGINT) AS adc_micros
-         |        FROM s_0 $joins
-         |        WHERE query_id <> neighbor_id),
-         |sysa AS (SELECT query_id, neighbor_id, rk AS rank
-         |         FROM (SELECT *, row_number() OVER (
-         |                 PARTITION BY query_id ORDER BY adc_micros, neighbor_id) rk
-         |               FROM adc) t
-         |         WHERE rk <= $topK),
+         |${rrfSystemCte("sysa", "neighbor_id", "adc_micros, neighbor_id", "adc", topK)},
          |hb AS (SELECT vec_id,
          |    list_sum(list_transform(v[1:32],
          |      (x, i) -> CASE WHEN x > 0 THEN 1::BIGINT << (i-1) ELSE 0::BIGINT END)) AS w1,
@@ -1405,28 +1264,8 @@ object DedupQueries {
          |        CAST(bit_count(xor(q1, w1)) + bit_count(xor(q2, w2)) AS INTEGER)
          |          AS hamming
          |      FROM hb, hq WHERE query_id <> hb.vec_id),
-         |sysb AS (SELECT query_id, neighbor_id, rk AS rank
-         |         FROM (SELECT *, row_number() OVER (
-         |                 PARTITION BY query_id ORDER BY hamming, neighbor_id) rk
-         |               FROM hs) t
-         |         WHERE rk <= $topK),
-         |u AS (SELECT query_id, neighbor_id, 0 AS sys, rank FROM sysa
-         |      UNION ALL
-         |      SELECT query_id, neighbor_id, 1 AS sys, rank FROM sysb),
-         |cr AS (SELECT query_id, neighbor_id, sys,
-         |         floor(1e0/(${k0}e0 + CAST(rank AS DOUBLE))*1e6 + 0.5)/1e6
-         |           AS contrib
-         |       FROM u),
-         |sc AS (SELECT query_id, neighbor_id,
-         |         floor(list_reduce(list(contrib ORDER BY sys), (x, y) -> x + y)
-         |               *1e6 + 0.5)/1e6 AS rrf
-         |       FROM cr GROUP BY 1, 2)
-         |SELECT query_id, neighbor_id, rrf, CAST(rk AS INTEGER) AS rank
-         |FROM (SELECT *, row_number() OVER (
-         |        PARTITION BY query_id ORDER BY rrf DESC, neighbor_id) rk
-         |      FROM sc) t
-         |WHERE rk <= $topK""".stripMargin
-  }
+         |${rrfSystemCte("sysb", "neighbor_id", "hamming, neighbor_id", "hs", topK)},
+         |${rrfFusionSql(k0, topK)}""".stripMargin
 
   /** q162's oracle: IVFADC — q147's full-dim Lloyd CTE verbatim as the
     * coarse quantizer (c0..a1), residuals = v − final coarse centroid,
@@ -1439,14 +1278,17 @@ object DedupQueries {
                                    topK: Int,
                                    trainPred: Option[String] = None,
                                    codePred: Option[String] = None): String =
-    ivfPqAdcCtes(kc, m, k, dim, nQueries, nprobe, trainPred, codePred) +
-      s"""
-         |SELECT query_id, neighbor_id, adc_micros, CAST(rk AS INTEGER) AS rank
-         |FROM (SELECT *, row_number() OVER (
-         |        PARTITION BY query_id ORDER BY adc_micros, neighbor_id) rk
-         |      FROM adc) t
-         |WHERE rk <= $topK""".stripMargin
+    ivfPqAdcCtes(kc, m, k, dim, nQueries, nprobe, trainPred, codePred) + "\n" +
+      topKSql("adc_micros", "adc_micros", "adc", topK)
 
+  /** q203's oracle: BOTH directional bounded-probe searches of the
+    * approximate bitext miner, each a full [[ivfPqAdcCtes]] two-level
+    * quantizer chain (prefixes `f`/`b`) trained on its own label-split
+    * corpus with the OTHER side as queries, ADC-shortlisted to
+    * `shortlist`, re-ranked by the exact cosine off the RAW float
+    * embeddings (q176's cosine text, same round/tie order as
+    * `Ann.ivfPqCosineTopK`), then q176's margin tail verbatim over
+    * the two approximate top-`k` lists. */
   private def bitextApproxOracleSql(kc: Int, m: Int, pqK: Int, dim: Int,
                                     nprobe: Int, shortlist: Int, k: Int,
                                     minMargin: String): String = {
@@ -1517,11 +1359,7 @@ object DedupQueries {
          |           AS exact_micros
          |       FROM short JOIN e ON e.vec_id = short.neighbor_id
          |         JOIN q ON q.query_id = short.query_id)
-         |SELECT query_id, neighbor_id, exact_micros, CAST(rk AS INTEGER) AS rank
-         |FROM (SELECT *, row_number() OVER (
-         |        PARTITION BY query_id ORDER BY exact_micros, neighbor_id) rk
-         |      FROM rr) t
-         |WHERE rk <= $topK""".stripMargin
+         |${topKSql("exact_micros", "exact_micros", "rr", topK)}""".stripMargin
 
   /** Shared md5 32-bit SimHash oracle fragment (q44/q47 lockstep):
     * token-hash bit planes from the first 8 md5 hex digits, bit b set

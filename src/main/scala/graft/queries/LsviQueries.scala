@@ -30,25 +30,7 @@ object LsviQueries {
     // ---- K2 LSVI rules engine: RapportageHR global aggregation ----
     Query("q71_lsvi_globaal", (s, dir) =>
       Lsvi.globaal(Lsvi.indicator(Lsvi.detail(lsviMeasurements(s, dir), lsviRules(s)))),
-      Some((lsviOracleCtes.stripSuffix("\n") +
-      """, i AS (
-        |  SELECT id, criterium, indicator, belang,
-        |    (count(CASE WHEN voldoet = false THEN 1 END) = 0 AND
-        |     count(CASE WHEN voldoet IS NULL THEN 1 END) = 0) AS gunstig,
-        |    count(CASE WHEN voldoet = true THEN 1 END)
-        |      / greatest(count(CASE WHEN voldoet IS NOT NULL THEN 1 END), 1) AS score
-        |  FROM d GROUP BY 1, 2, 3, 4)
-        |SELECT id, count(*) AS n_ind,
-        | count(CASE WHEN gunstig THEN 1 END) AS n_gunstig,
-        | count(CASE WHEN belang = 'zb' AND NOT gunstig THEN 1 END) AS n_zb_ongunstig,
-        | round(100.0 * count(CASE WHEN gunstig THEN 1 END) / count(*), 6) AS aandeel_gunstig,
-        | round(sum(score) / count(*), 6) AS index_mean_ind,
-        | (count(CASE WHEN belang = 'zb' AND NOT gunstig THEN 1 END) = 0 AND
-        |  count(CASE WHEN gunstig THEN 1 END) * 2 > count(*)) AS status,
-        | CASE WHEN count(CASE WHEN belang = 'zb' AND NOT gunstig THEN 1 END) = 0 AND
-        |           count(CASE WHEN gunstig THEN 1 END) * 2 > count(*)
-        |      THEN 'gunstig' ELSE 'ongunstig' END AS lsvi
-        |FROM i GROUP BY id""".stripMargin))),
+      Some(lsviOracleCtes.stripSuffix("\n") + indicatorGlobaalSql)),
 
     // ---- K2 forest-detail report shape (`data_lsvi_forests.R:32`,
     // `lsvi_detail_fs.yml`): verschilscore / theoretischmaximum /
@@ -136,26 +118,7 @@ object LsviQueries {
     Query("q78_lsvi_v3_globaal", (s, dir) => {
       val (hab, sc, veg) = v3Inputs(s, dir)
       graft.lsvi.Versie3.score(hab, sc, veg)._4
-    }, Some(
-      (v3OracleCtes.stripSuffix("\n") +
-      """, i AS (
-        |  SELECT id, criterium, indicator, belang,
-        |    (count(CASE WHEN voldoet = false THEN 1 END) = 0 AND
-        |     count(CASE WHEN voldoet IS NULL THEN 1 END) = 0) AS gunstig,
-        |    count(CASE WHEN voldoet = true THEN 1 END)
-        |      / greatest(count(CASE WHEN voldoet IS NOT NULL THEN 1 END), 1) AS score
-        |  FROM d GROUP BY 1, 2, 3, 4)
-        |SELECT id, count(*) AS n_ind,
-        | count(CASE WHEN gunstig THEN 1 END) AS n_gunstig,
-        | count(CASE WHEN belang = 'zb' AND NOT gunstig THEN 1 END) AS n_zb_ongunstig,
-        | round(100.0 * count(CASE WHEN gunstig THEN 1 END) / count(*), 6) AS aandeel_gunstig,
-        | round(sum(score) / count(*), 6) AS index_mean_ind,
-        | (count(CASE WHEN belang = 'zb' AND NOT gunstig THEN 1 END) = 0 AND
-        |  count(CASE WHEN gunstig THEN 1 END) * 2 > count(*)) AS status,
-        | CASE WHEN count(CASE WHEN belang = 'zb' AND NOT gunstig THEN 1 END) = 0 AND
-        |           count(CASE WHEN gunstig THEN 1 END) * 2 > count(*)
-        |      THEN 'gunstig' ELSE 'ongunstig' END AS lsvi
-        |FROM i GROUP BY id""".stripMargin))),
+    }, Some(v3OracleCtes.stripSuffix("\n") + indicatorGlobaalSql)),
 
     // ---- K2 FOREST Versie-3 rule content (graft.lsvi.Versie3Forests —
     // the 203 published rule rows of lsvi_detail_fs.tsv) on synthetic
@@ -337,20 +300,11 @@ object LsviQueries {
       // q113: status_indicatoren — latest-cycle-per-point selection,
       // Binnen/Buiten/pooled strata, plain proportions, Wilson z bounds
       // (same closed form on both sides), Goed/Niet goed/Onbekend at 75%.
-      val z = graft.lsvi.LsviStatus.z975
-      val z2 = z * z
       statusOracleCtes.stripSuffix("\n") +
-        s""", ind AS (
-           |  SELECT p.id, p.habitattype, 'crit_' || (j.j % 2) AS criterium,
-           |    'ind_' || j.j AS indicator,
-           |    CASE WHEN j.j < 2 THEN 'zb' ELSE 'b' END AS belang,
-           |    CASE WHEN (p.ck * (j.j + 2)) % 5 = 0 THEN NULL
-           |         ELSE ((p.ck * (j.j + 2)) % 5) % 2 = 1 END AS status
-           |  FROM plots p CROSS JOIN (VALUES (0),(1),(2),(3),(4)) j(j)),
+        s""", ${indCte(indStatus)},
            |rows_ AS (
            |  SELECT i.habitattype,
-           |    CASE WHEN g.g = 1 THEN 'Binnen & Buiten'
-           |         WHEN l.in_sac = 1 THEN 'Binnen' ELSE 'Buiten' END AS sbzh,
+           |${sbzhCase("l.in_sac")},
            |    i.criterium, i.indicator, i.belang, i.status
            |  FROM ind i JOIN latest l ON i.id = l.id
            |  CROSS JOIN (VALUES (0),(1)) g(g)
@@ -359,29 +313,8 @@ object LsviQueries {
            |  SELECT habitattype, sbzh, criterium, indicator, belang,
            |    count(*) AS n_obs, count(CASE WHEN status THEN 1 END) AS k
            |  FROM rows_ GROUP BY 1, 2, 3, 4, 5),
-           |wil AS (
-           |  SELECT *, CAST(k AS DOUBLE) / CAST(n_obs AS DOUBLE) AS p,
-           |    1.0 + $z2 / n_obs AS den
-           |  FROM agg),
-           |wil2 AS (
-           |  SELECT *,
-           |    (p + $z2 / (2.0 * n_obs)) / den AS center,
-           |    ($z / den) * sqrt(p * (1.0 - p) / n_obs + $z2 / (4.0 * n_obs * n_obs)) AS half
-           |  FROM wil),
-           |fin AS (
-           |  SELECT habitattype, sbzh, criterium, indicator, belang, n_obs,
-           |    round(100.0 * CAST(k AS DOUBLE) / n_obs, 6) AS aandeel_gunstig,
-           |    round(CASE WHEN k = 0 OR k = n_obs THEN 100.0 * p
-           |               ELSE 100.0 * greatest(0.0, center - half) END, 6)
-           |      AS aandeel_gunstig_llci,
-           |    round(CASE WHEN k = 0 OR k = n_obs THEN 100.0 * p
-           |               ELSE 100.0 * least(1.0, center + half) END, 6)
-           |      AS aandeel_gunstig_ulci
-           |  FROM wil2)
-           |SELECT *, CASE WHEN aandeel_gunstig_llci >= 75 THEN 'Goed'
-           |               WHEN aandeel_gunstig_ulci < 75 THEN 'Niet goed'
-           |               ELSE 'Onbekend' END AS beoordeling
-           |FROM fin""".stripMargin
+           |${wilsonCtes("agg")},
+           |${statusFinSql("habitattype, sbzh, criterium, indicator, belang", weighted = false, "wil2")}""".stripMargin
     }),
 
     Query("q114_index_hq", (s, dir) => {
@@ -391,13 +324,11 @@ object LsviQueries {
       // q114: index_hq — mean habitat-quality index per stratum/pooled
       // group; 1e-6 fixed-point sums for order-independent distributed
       // aggregation, exact integer variance identity, z interval.
-      val z = graft.lsvi.LsviStatus.z975
       statusOracleCtes.stripSuffix("\n") +
         s""", g AS (
            |  SELECT l.habitattype,
            |    CASE WHEN gg.g = 0 THEN 'SBZH' ELSE 'Habitattype' END AS type_resultaat,
-           |    CASE WHEN gg.g = 1 THEN 'Binnen & Buiten'
-           |         WHEN l.in_sac = 1 THEN 'Binnen' ELSE 'Buiten' END AS sbzh,
+           |${sbzhCase("l.in_sac", "gg")},
            |    CAST(floor(l.idx * 1000000.0 + 0.5) AS BIGINT) AS x6
            |  FROM latest l CROSS JOIN (VALUES (0),(1)) gg(g)
            |  WHERE l.idx IS NOT NULL),
@@ -405,19 +336,9 @@ object LsviQueries {
            |  SELECT type_resultaat, habitattype, sbzh, count(*) AS n_obs,
            |    CAST(sum(x6) AS BIGINT) AS s6, CAST(sum(x6 * x6) AS BIGINT) AS ss6
            |  FROM g GROUP BY 1, 2, 3),
-           |f AS (
-           |  SELECT *, CAST(s6 AS DOUBLE) / n_obs / 1000000.0 AS m,
-           |    sqrt(CAST(n_obs * ss6 - s6 * s6 AS DOUBLE)
-           |         / (n_obs * (n_obs - 1))) / 1000000.0 AS sd
-           |  FROM agg)
+           |${fixedPointMomentsCte("s6", "ss6")}
            |SELECT type_resultaat, habitattype, sbzh, n_obs,
-           |  round(m, 6) AS index_hq_mean,
-           |  CASE WHEN n_obs > 1
-           |       THEN round(m - $z * sd / sqrt(CAST(n_obs AS DOUBLE)), 6) END
-           |    AS index_hq_llci,
-           |  CASE WHEN n_obs > 1
-           |       THEN round(m + $z * sd / sqrt(CAST(n_obs AS DOUBLE)), 6) END
-           |    AS index_hq_ulci
+           |${meanCiCols("index_hq", fixedPointSe)}
            |FROM f""".stripMargin
     }),
 
@@ -459,8 +380,6 @@ object LsviQueries {
       // q116: trend_indicatoren — per-cycle paired proportions with
       // Wilson bounds, paired-Wald difference interval from the
       // discordant counts, relative change as a point estimate.
-      val z = graft.lsvi.LsviStatus.z975
-      val z2 = z * z
       statusOracleCtes.stripSuffix("\n") +
         s""", pairsAll AS (
            |  SELECT habitattype, point_code,
@@ -468,13 +387,7 @@ object LsviQueries {
            |    count(DISTINCT mdate) AS nc
            |  FROM plots GROUP BY 1, 2),
            |prs AS (SELECT * FROM pairsAll WHERE nc > 1),
-           |ind AS (
-           |  SELECT p.id, p.habitattype, 'crit_' || (j.j % 2) AS criterium,
-           |    'ind_' || j.j AS indicator,
-           |    CASE WHEN j.j < 2 THEN 'zb' ELSE 'b' END AS belang,
-           |    CASE WHEN (p.ck * (j.j + 2)) % 5 = 0 THEN NULL
-           |         ELSE ((p.ck * (j.j + 2)) % 5) % 2 = 1 END AS status
-           |  FROM plots p CROSS JOIN (VALUES (0),(1),(2),(3),(4)) j(j)),
+           |${indCte(indStatus)},
            |known AS (SELECT * FROM ind WHERE status IS NOT NULL),
            |cyc AS (
            |  SELECT id_1 AS id, 'c_1' AS periode FROM prs
@@ -485,23 +398,12 @@ object LsviQueries {
            |    count(*) AS n_obs, count(CASE WHEN k.status THEN 1 END) AS k
            |  FROM known k JOIN cyc c ON k.id = c.id
            |  GROUP BY 1, 2, 3, 4, 5),
-           |wil AS (
-           |  SELECT *, CAST(k AS DOUBLE) / CAST(n_obs AS DOUBLE) AS p,
-           |    1.0 + $z2 / n_obs AS den
-           |  FROM pc),
-           |wil2 AS (
-           |  SELECT *,
-           |    (p + $z2 / (2.0 * n_obs)) / den AS center,
-           |    ($z / den) * sqrt(p * (1.0 - p) / n_obs + $z2 / (4.0 * n_obs * n_obs)) AS half
-           |  FROM wil),
+           |${wilsonCtes("pc")},
            |aandeel AS (
            |  SELECT habitattype, periode, criterium, indicator, belang, n_obs,
            |    'aandeel_gunstig' AS parameter,
            |    round(100.0 * CAST(k AS DOUBLE) / n_obs, 6) AS mean,
-           |    round(CASE WHEN k = 0 OR k = n_obs THEN 100.0 * p
-           |               ELSE 100.0 * greatest(0.0, center - half) END, 6) AS llci,
-           |    round(CASE WHEN k = 0 OR k = n_obs THEN 100.0 * p
-           |               ELSE 100.0 * least(1.0, center + half) END, 6) AS ulci
+           |${wilsonPctBounds(countsAllOrNone, "llci", "ulci", " ")}
            |  FROM wil2),
            |s1 AS (
            |  SELECT p.habitattype, p.point_code, k.criterium, k.indicator,
@@ -556,13 +458,10 @@ object LsviQueries {
     }, Some {
       // q117: status_habitat — the q113 Wilson machinery on the
       // plot-level lsvi verdict.
-      val z = graft.lsvi.LsviStatus.z975
-      val z2 = z * z
       statusOracleCtes.stripSuffix("\n") +
         s""", rows_ AS (
            |  SELECT habitattype,
-           |    CASE WHEN g.g = 1 THEN 'Binnen & Buiten'
-           |         WHEN in_sac = 1 THEN 'Binnen' ELSE 'Buiten' END AS sbzh,
+           |${sbzhCase("in_sac")},
            |    (lsvi = 'gunstig') AS gn
            |  FROM latest CROSS JOIN (VALUES (0),(1)) g(g)
            |  WHERE lsvi IS NOT NULL),
@@ -570,29 +469,8 @@ object LsviQueries {
            |  SELECT habitattype, sbzh, count(*) AS n_obs,
            |    count(CASE WHEN gn THEN 1 END) AS k
            |  FROM rows_ GROUP BY 1, 2),
-           |wil AS (
-           |  SELECT *, CAST(k AS DOUBLE) / CAST(n_obs AS DOUBLE) AS p,
-           |    1.0 + $z2 / n_obs AS den
-           |  FROM agg),
-           |wil2 AS (
-           |  SELECT *,
-           |    (p + $z2 / (2.0 * n_obs)) / den AS center,
-           |    ($z / den) * sqrt(p * (1.0 - p) / n_obs + $z2 / (4.0 * n_obs * n_obs)) AS half
-           |  FROM wil),
-           |fin AS (
-           |  SELECT habitattype, sbzh, n_obs,
-           |    round(100.0 * CAST(k AS DOUBLE) / n_obs, 6) AS aandeel_gunstig,
-           |    round(CASE WHEN k = 0 OR k = n_obs THEN 100.0 * p
-           |               ELSE 100.0 * greatest(0.0, center - half) END, 6)
-           |      AS aandeel_gunstig_llci,
-           |    round(CASE WHEN k = 0 OR k = n_obs THEN 100.0 * p
-           |               ELSE 100.0 * least(1.0, center + half) END, 6)
-           |      AS aandeel_gunstig_ulci
-           |  FROM wil2)
-           |SELECT *, CASE WHEN aandeel_gunstig_llci >= 75 THEN 'Goed'
-           |               WHEN aandeel_gunstig_ulci < 75 THEN 'Niet goed'
-           |               ELSE 'Onbekend' END AS beoordeling
-           |FROM fin""".stripMargin
+           |${wilsonCtes("agg")},
+           |${statusFinSql("habitattype, sbzh", weighted = false, "wil2")}""".stripMargin
     }),
 
     Query("q118_index_ind", (s, dir) => {
@@ -601,21 +479,12 @@ object LsviQueries {
     }, Some {
       // q118: index_ind — the q114 fixed-point mean machinery at
       // indicator grain.
-      val z = graft.lsvi.LsviStatus.z975
       statusOracleCtes.stripSuffix("\n") +
-        s""", ind AS (
-           |  SELECT p.id, p.habitattype, 'crit_' || (j.j % 2) AS criterium,
-           |    'ind_' || j.j AS indicator,
-           |    CASE WHEN j.j < 2 THEN 'zb' ELSE 'b' END AS belang,
-           |    CASE WHEN (p.ck * (j.j + 2)) % 5 = 0 THEN NULL
-           |         ELSE CAST((p.ck * (j.j + 4)) % 2001 - 1000 AS DOUBLE) / 1000.0
-           |         END AS vs
-           |  FROM plots p CROSS JOIN (VALUES (0),(1),(2),(3),(4)) j(j)),
+        s""", ${indCte(indVs)},
            |rows_ AS (
            |  SELECT i.habitattype,
            |    CASE WHEN g.g = 0 THEN 'SBZH' ELSE 'Habitattype' END AS type_resultaat,
-           |    CASE WHEN g.g = 1 THEN 'Binnen & Buiten'
-           |         WHEN l.in_sac = 1 THEN 'Binnen' ELSE 'Buiten' END AS sbzh,
+           |${sbzhCase("l.in_sac")},
            |    i.criterium, i.indicator, i.belang,
            |    CAST(floor(i.vs * 1000000.0 + 0.5) AS BIGINT) AS x6
            |  FROM ind i JOIN latest l ON i.id = l.id
@@ -626,20 +495,10 @@ object LsviQueries {
            |    belang, count(*) AS n_obs,
            |    CAST(sum(x6) AS BIGINT) AS s6, CAST(sum(x6 * x6) AS BIGINT) AS ss6
            |  FROM rows_ GROUP BY 1, 2, 3, 4, 5, 6),
-           |f AS (
-           |  SELECT *, CAST(s6 AS DOUBLE) / n_obs / 1000000.0 AS m,
-           |    sqrt(CAST(n_obs * ss6 - s6 * s6 AS DOUBLE)
-           |         / (n_obs * (n_obs - 1))) / 1000000.0 AS sd
-           |  FROM agg)
+           |${fixedPointMomentsCte("s6", "ss6")}
            |SELECT type_resultaat, habitattype, sbzh, criterium, indicator,
            |  belang, n_obs,
-           |  round(m, 6) AS index_ind_mean,
-           |  CASE WHEN n_obs > 1
-           |       THEN round(m - $z * sd / sqrt(CAST(n_obs AS DOUBLE)), 6) END
-           |    AS index_ind_llci,
-           |  CASE WHEN n_obs > 1
-           |       THEN round(m + $z * sd / sqrt(CAST(n_obs AS DOUBLE)), 6) END
-           |    AS index_ind_ulci
+           |${meanCiCols("index_ind", fixedPointSe)}
            |FROM f""".stripMargin
     }),
 
@@ -649,7 +508,6 @@ object LsviQueries {
     }, Some {
       // q119: trend_index_hq — exact fixed-point paired differences of
       // the plot index, z interval, relative change = sum(d)/sum(x1).
-      val z = graft.lsvi.LsviStatus.z975
       statusOracleCtes.stripSuffix("\n") +
         s""", px AS (
            |  SELECT habitattype, point_code, id, mdate, in_sac,
@@ -667,8 +525,7 @@ object LsviQueries {
            |rows_ AS (
            |  SELECT habitattype,
            |    CASE WHEN g.g = 0 THEN 'SBZH' ELSE 'Habitattype' END AS type_resultaat,
-           |    CASE WHEN g.g = 1 THEN 'Binnen & Buiten'
-           |         WHEN in_sac = 1 THEN 'Binnen' ELSE 'Buiten' END AS sbzh,
+           |${sbzhCase("in_sac")},
            |    d6, x16
            |  FROM d CROSS JOIN (VALUES (0),(1)) g(g)),
            |agg AS (
@@ -677,19 +534,9 @@ object LsviQueries {
            |    CAST(sum(d6 * d6) AS BIGINT) AS ssd6,
            |    CAST(sum(x16) AS BIGINT) AS s16
            |  FROM rows_ GROUP BY 1, 2, 3),
-           |f AS (
-           |  SELECT *, CAST(sd6 AS DOUBLE) / n_obs / 1000000.0 AS m,
-           |    sqrt(CAST(n_obs * ssd6 - sd6 * sd6 AS DOUBLE)
-           |         / (n_obs * (n_obs - 1))) / 1000000.0 AS sd
-           |  FROM agg)
+           |${fixedPointMomentsCte("sd6", "ssd6")}
            |SELECT type_resultaat, habitattype, sbzh, n_obs,
-           |  round(m, 6) AS index_diff_mean,
-           |  CASE WHEN n_obs > 1
-           |       THEN round(m - $z * sd / sqrt(CAST(n_obs AS DOUBLE)), 6) END
-           |    AS index_diff_llci,
-           |  CASE WHEN n_obs > 1
-           |       THEN round(m + $z * sd / sqrt(CAST(n_obs AS DOUBLE)), 6) END
-           |    AS index_diff_ulci,
+           |${meanCiCols("index_diff", fixedPointSe)},
            |  CASE WHEN s16 <> 0
            |       THEN round(CAST(sd6 AS DOUBLE) / CAST(s16 AS DOUBLE), 6) END
            |    AS index_diff_rel
@@ -701,7 +548,6 @@ object LsviQueries {
       graft.lsvi.LsviStatus.trendIndexInd(ind, meta)
     }, Some {
       // q120: trend_index_ind — the q119 machinery at indicator grain.
-      val z = graft.lsvi.LsviStatus.z975
       statusOracleCtes.stripSuffix("\n") +
         s""", pairs AS (
            |  SELECT habitattype, point_code,
@@ -710,15 +556,7 @@ object LsviQueries {
            |    count(DISTINCT mdate) AS nc
            |  FROM plots GROUP BY 1, 2),
            |prs AS (SELECT * FROM pairs WHERE nc > 1),
-           |ind AS (
-           |  SELECT p.id, 'crit_' || (j.j % 2) AS criterium,
-           |    'ind_' || j.j AS indicator,
-           |    CASE WHEN j.j < 2 THEN 'zb' ELSE 'b' END AS belang,
-           |    CASE WHEN (p.ck * (j.j + 2)) % 5 = 0 THEN NULL
-           |         ELSE CAST(floor(CAST((p.ck * (j.j + 4)) % 2001 - 1000 AS DOUBLE)
-           |                         / 1000.0 * 1000000.0 + 0.5) AS BIGINT)
-           |         END AS x6
-           |  FROM plots p CROSS JOIN (VALUES (0),(1),(2),(3),(4)) j(j)),
+           |${indCte(indX6, habitattype = false)},
            |known AS (SELECT * FROM ind WHERE x6 IS NOT NULL),
            |s1 AS (
            |  SELECT p.habitattype, p.point_code, p.in_sac, k.criterium,
@@ -737,8 +575,7 @@ object LsviQueries {
            |rows_ AS (
            |  SELECT habitattype,
            |    CASE WHEN g.g = 0 THEN 'SBZH' ELSE 'Habitattype' END AS type_resultaat,
-           |    CASE WHEN g.g = 1 THEN 'Binnen & Buiten'
-           |         WHEN in_sac = 1 THEN 'Binnen' ELSE 'Buiten' END AS sbzh,
+           |${sbzhCase("in_sac")},
            |    criterium, indicator, belang, d6
            |  FROM d CROSS JOIN (VALUES (0),(1)) g(g)),
            |agg AS (
@@ -747,20 +584,10 @@ object LsviQueries {
            |    CAST(sum(d6) AS BIGINT) AS sd6,
            |    CAST(sum(d6 * d6) AS BIGINT) AS ssd6
            |  FROM rows_ GROUP BY 1, 2, 3, 4, 5, 6),
-           |f AS (
-           |  SELECT *, CAST(sd6 AS DOUBLE) / n_obs / 1000000.0 AS m,
-           |    sqrt(CAST(n_obs * ssd6 - sd6 * sd6 AS DOUBLE)
-           |         / (n_obs * (n_obs - 1))) / 1000000.0 AS sd
-           |  FROM agg)
+           |${fixedPointMomentsCte("sd6", "ssd6")}
            |SELECT type_resultaat, habitattype, sbzh, criterium, indicator,
            |  belang, n_obs,
-           |  round(m, 6) AS index_diff_mean,
-           |  CASE WHEN n_obs > 1
-           |       THEN round(m - $z * sd / sqrt(CAST(n_obs AS DOUBLE)), 6) END
-           |    AS index_diff_llci,
-           |  CASE WHEN n_obs > 1
-           |       THEN round(m + $z * sd / sqrt(CAST(n_obs AS DOUBLE)), 6) END
-           |    AS index_diff_ulci
+           |${meanCiCols("index_diff", fixedPointSe)}
            |FROM f""".stripMargin
     }),
 
@@ -779,17 +606,8 @@ object LsviQueries {
       // relative change, both classified by the ten-class effect CASE
       // (thresholds +-12pp abs / +-25% rel), year spans and the mean
       // revisit interval.
-      (
-      statusOracleCtes.stripSuffix("\n") +
-        s""", pairs AS (
-           |  SELECT habitattype, point_code,
-           |    arg_min(lsvi, mdate || '|' || id) = 'gunstig' AS g1,
-           |    arg_max(lsvi, mdate || '|' || id) = 'gunstig' AS g2,
-           |    arg_max(in_sac, mdate || '|' || id) AS in_sac,
-           |    min(mdate) AS j1, max(mdate) AS j2,
-           |    count(DISTINCT mdate) AS nc
-           |  FROM plots GROUP BY 1, 2),
-           |""".stripMargin + trendHabitatOracleTail("nc > 1")))),
+      statusOracleCtes.stripSuffix("\n") + ", " + trendPairsCte("plots", "mdate") +
+        trendHabitatOracleTail("nc > 1"))),
 
     Query("q122_status_beheer", (s, dir) => {
       val (meta, _) = statusInputs(s, dir)
@@ -799,8 +617,6 @@ object LsviQueries {
       // management with Wilson bounds and the two-proportion Pearson
       // chi-square (both rows of a habitattype carry the statistic; the
       // test needs both groups with n >= 5 and a non-degenerate table).
-      val z = graft.lsvi.LsviStatus.z975
-      val z2 = z * z
       val crit = graft.lsvi.LsviStatus.chi2Crit05
       statusOracleCtes.stripSuffix("\n") +
         s""", agg AS (
@@ -826,21 +642,12 @@ object LsviQueries {
            |    CAST(k AS DOUBLE) / CAST(n_obs AS DOUBLE) AS p,
            |    1.0 + $z2 / n_obs AS den
            |  FROM tot),
-           |wil AS (
-           |  SELECT *,
-           |    (p + $z2 / (2.0 * n_obs)) / den AS center,
-           |    ($z / den) * sqrt(p * (1.0 - p) / n_obs + $z2 / (4.0 * n_obs * n_obs)) AS half
-           |  FROM chi),
+           |${wilsonCentreCte("wil", "chi")},
            |fin AS (
            |  SELECT 'Passend beheer' AS type_resultaat, habitattype,
            |    'Binnen & Buiten' AS sbzh, passend_beheer, n_obs,
            |    round(100.0 * p, 6) AS aandeel_gunstig,
-           |    round(CASE WHEN k = 0 OR k = n_obs THEN 100.0 * p
-           |               ELSE 100.0 * greatest(0.0, center - half) END, 6)
-           |      AS aandeel_gunstig_llci,
-           |    round(CASE WHEN k = 0 OR k = n_obs THEN 100.0 * p
-           |               ELSE 100.0 * least(1.0, center + half) END, 6)
-           |      AS aandeel_gunstig_ulci,
+           |${wilsonPctBounds(countsAllOrNone, "aandeel_gunstig_llci", "aandeel_gunstig_ulci")},
            |    chi2_beheer
            |  FROM wil)
            |SELECT type_resultaat, habitattype, sbzh, passend_beheer, n_obs,
@@ -871,7 +678,6 @@ object LsviQueries {
       // sums and double formula shapes as the engine, so values are
       // bit-identical under any aggregation order; roll-up rows union
       // in for multi-subtype types.
-      val z = graft.lsvi.LsviStatus.z975
       continuousOracleCtes +
       s"""persub AS (
          |  SELECT habitattype, habitatsubtype, count(*) AS n,
@@ -879,20 +685,7 @@ object LsviQueries {
          |    CAST(sum(v * v) AS BIGINT) AS s2
          |  FROM latest GROUP BY 1, 2),
          |$continuousRollupSql
-         |SELECT type_resultaat, habitattype, habitatsubtype,
-         |  'Binnen & Buiten' AS sbzh, n AS n_obs,
-         |  round(CAST(s1 AS DOUBLE) / n / 10000.0, 6) AS gemiddelde,
-         |  CASE WHEN n >= 2 THEN round(CAST(s1 AS DOUBLE) / n / 10000.0 -
-         |    $z * (sqrt(greatest((CAST(s2 AS DOUBLE) -
-         |      CAST(s1 AS DOUBLE) * s1 / n) / (n - 1), 0.0)) / 10000.0) /
-         |    sqrt(n), 6) END AS gemiddelde_llci,
-         |  CASE WHEN n >= 2 THEN round(CAST(s1 AS DOUBLE) / n / 10000.0 +
-         |    $z * (sqrt(greatest((CAST(s2 AS DOUBLE) -
-         |      CAST(s1 AS DOUBLE) * s1 / n) / (n - 1), 0.0)) / 10000.0) /
-         |    sqrt(n), 6) END AS gemiddelde_ulci,
-         |  'hoeveelheid dik dood hout' AS indicator,
-         |  'aantal exemplaren dik dood hout per ha' AS voorwaarde
-         |FROM allr""".stripMargin
+         |${continuousSelectSql("gemiddelde", 2, weighted = false)}""".stripMargin
     }),
 
     Query("q126_trend_continuous", (s, dir) =>
@@ -900,7 +693,6 @@ object LsviQueries {
         "hoeveelheid dik dood hout",
         "aantal exemplaren dik dood hout per ha"),
       Some {
-      val z = graft.lsvi.LsviStatus.z975
       continuousOracleCtes +
       s"""pairs AS (
          |  SELECT point_code, habitatsubtype,
@@ -917,20 +709,7 @@ object LsviQueries {
          |    CAST(sum(d * d) AS BIGINT) AS s2
          |  FROM pd GROUP BY 1, 2),
          |$continuousRollupSql
-         |SELECT type_resultaat, habitattype, habitatsubtype,
-         |  'Binnen & Buiten' AS sbzh, n AS n_obs,
-         |  round(CAST(s1 AS DOUBLE) / n / 10000.0, 6) AS verschil,
-         |  CASE WHEN n >= 5 THEN round(CAST(s1 AS DOUBLE) / n / 10000.0 -
-         |    $z * (sqrt(greatest((CAST(s2 AS DOUBLE) -
-         |      CAST(s1 AS DOUBLE) * s1 / n) / (n - 1), 0.0)) / 10000.0) /
-         |    sqrt(n), 6) END AS verschil_llci,
-         |  CASE WHEN n >= 5 THEN round(CAST(s1 AS DOUBLE) / n / 10000.0 +
-         |    $z * (sqrt(greatest((CAST(s2 AS DOUBLE) -
-         |      CAST(s1 AS DOUBLE) * s1 / n) / (n - 1), 0.0)) / 10000.0) /
-         |    sqrt(n), 6) END AS verschil_ulci,
-         |  'hoeveelheid dik dood hout' AS indicator,
-         |  'aantal exemplaren dik dood hout per ha' AS voorwaarde
-         |FROM allr""".stripMargin
+         |${continuousSelectSql("verschil", 5, weighted = false)}""".stripMargin
     }),
 
     // q140/q141: the design-weighted continuous estimators — the
@@ -960,7 +739,7 @@ object LsviQueries {
            |    sum(w * v) AS swv, sum(w * v * v) AS swv2
            |  FROM latestw GROUP BY 1, 2),
            |$continuousRollupWeightedSql
-           |${continuousWeightedSelectSql("gemiddelde", 2)}""".stripMargin))),
+           |${continuousSelectSql("gemiddelde", 2, weighted = true)}""".stripMargin))),
 
     Query("q141_trend_continuous_weighted", (s, dir) =>
       graft.lsvi.LsviStatus.trendContinuous(continuousInputs(s, dir),
@@ -984,7 +763,7 @@ object LsviQueries {
            |    sum(w * d) AS swv, sum(w * d * d) AS swv2
            |  FROM pdw GROUP BY 1, 2),
            |$continuousRollupWeightedSql
-           |${continuousWeightedSelectSql("verschil", 5)}""".stripMargin))),
+           |${continuousSelectSql("verschil", 5, weighted = true)}""".stripMargin))),
 
     Query("q127_status_area_census", (s, dir) =>
       graft.lsvi.LsviStatus.statusAreaCensus(censusPolys(s, dir, 1),
@@ -1058,36 +837,9 @@ object LsviQueries {
       // require one visit in each of cycles 0 and 1, with the cycle
       // derived from each habitatsubtype's first visit year like
       // assignCycles (6-year windows).
-      val typeList = graft.lsvi.Versie3Forests.habitattypes
-        .map(sqlStr).mkString("[", ", ", "]")
-      s"""WITH base AS (
-         |  SELECT c_custkey AS ck, c_custkey // 2 AS pt
-         |  FROM customer WHERE (c_custkey * 3) % 7 <> 0),
-         |plots0 AS (
-         |  SELECT 'CY_' || ck AS id,
-         |    $typeList[CAST(pt % 11 AS INTEGER) + 1] AS habitattype,
-         |    $typeList[CAST(pt % 11 AS INTEGER) + 1] || '_s' || (pt % 3)
-         |      AS habitatsubtype,
-         |    'pt_' || pt AS point_code,
-         |    2010 + 3 * (ck % 5) AS mdate,
-         |    CASE WHEN pt % 3 < 2 THEN 1 ELSE 0 END AS in_sac,
-         |    CASE WHEN (ck * 5) % 3 = 0 THEN 'gunstig' ELSE 'ongunstig' END
-         |      AS lsvi
-         |  FROM base),
-         |y0 AS (
-         |  SELECT habitatsubtype, min(mdate) AS ys FROM plots0 GROUP BY 1),
-         |cycplots AS (
-         |  SELECT p.*, CAST(floor((p.mdate - y.ys) / 6) AS INTEGER) AS cyc
-         |  FROM plots0 p JOIN y0 y USING (habitatsubtype)),
-         |pairs AS (
-         |  SELECT habitattype, point_code,
-         |    arg_min(lsvi, mdate || '|' || id) = 'gunstig' AS g1,
-         |    arg_max(lsvi, mdate || '|' || id) = 'gunstig' AS g2,
-         |    arg_max(in_sac, mdate || '|' || id) AS in_sac,
-         |    min(mdate) AS j1, max(mdate) AS j2,
-         |    count(DISTINCT cyc) AS nc
-         |  FROM cycplots WHERE cyc IN (0, 1) GROUP BY 1, 2),
-         |""".stripMargin + trendHabitatOracleTail("nc = 2")
+      cyclePlotsCtes(weighted = false) +
+        trendPairsCte("cycplots WHERE cyc IN (0, 1)", "cyc") +
+        trendHabitatOracleTail("nc = 2")
     }),
 
     // ---- design-weighted status estimators (LsviStatus under a
@@ -1106,13 +858,10 @@ object LsviQueries {
       // the Kish-n_eff Wilson interval. Quarter-step weights keep every
       // distributed double sum exact, so the engine/oracle hashes agree
       // under any aggregation order.
-      val z = graft.lsvi.LsviStatus.z975
-      val z2 = z * z
       statusOracleCtes.stripSuffix("\n") +
         s""", rows_ AS (
            |  SELECT habitattype,
-           |    CASE WHEN g.g = 1 THEN 'Binnen & Buiten'
-           |         WHEN in_sac = 1 THEN 'Binnen' ELSE 'Buiten' END AS sbzh,
+           |${sbzhCase("in_sac")},
            |    lsvi = 'gunstig' AS gg, w
            |  FROM latest CROSS JOIN (VALUES (0),(1)) g(g)
            |  WHERE lsvi IS NOT NULL),
@@ -1123,27 +872,8 @@ object LsviQueries {
            |  FROM rows_ GROUP BY 1, 2),
            |e1 AS (
            |  SELECT *, sw * sw / sw2 AS neff, swk / sw AS p FROM agg),
-           |e2 AS (SELECT *, 1.0 + $z2 / neff AS den FROM e1),
-           |e3 AS (
-           |  SELECT *,
-           |    (p + $z2 / (2.0 * neff)) / den AS center,
-           |    ($z / den) * sqrt(p * (1.0 - p) / neff
-           |      + $z2 / (4.0 * neff * neff)) AS half
-           |  FROM e2),
-           |fin AS (
-           |  SELECT habitattype, sbzh, n_obs,
-           |    round(100.0 * swk / sw, 6) AS aandeel_gunstig,
-           |    round(CASE WHEN swk = 0.0 OR swk = sw THEN 100.0 * p
-           |               ELSE 100.0 * greatest(0.0, center - half) END, 6)
-           |      AS aandeel_gunstig_llci,
-           |    round(CASE WHEN swk = 0.0 OR swk = sw THEN 100.0 * p
-           |               ELSE 100.0 * least(1.0, center + half) END, 6)
-           |      AS aandeel_gunstig_ulci
-           |  FROM e3)
-           |SELECT *, CASE WHEN aandeel_gunstig_llci >= 75 THEN 'Goed'
-           |               WHEN aandeel_gunstig_ulci < 75 THEN 'Niet goed'
-           |               ELSE 'Onbekend' END AS beoordeling
-           |FROM fin""".stripMargin
+           |${neffWilsonCtes("e1", "e2", "e3")},
+           |${statusFinSql("habitattype, sbzh", weighted = true, "e3")}""".stripMargin
     }),
 
     Query("q131_index_hq_weighted", (s, dir) => {
@@ -1155,14 +885,12 @@ object LsviQueries {
       // q131: design-weighted index_hq over the binary-fraction index
       // twin — weighted mean Σw·x/Σw, design-effect z interval
       // mean ± z·sqrt(v_pop/(n_eff − 1)).
-      val z = graft.lsvi.LsviStatus.z975
       statusOracleCtes.stripSuffix("\n") +
         s""", rows_ AS (
            |  SELECT habitattype,
            |    CASE WHEN g.g = 0 THEN 'SBZH' ELSE 'Habitattype' END
            |      AS type_resultaat,
-           |    CASE WHEN g.g = 1 THEN 'Binnen & Buiten'
-           |         WHEN in_sac = 1 THEN 'Binnen' ELSE 'Buiten' END AS sbzh,
+           |${sbzhCase("in_sac")},
            |    idx_b AS x, w
            |  FROM latest CROSS JOIN (VALUES (0),(1)) g(g)
            |  WHERE idx_b IS NOT NULL),
@@ -1171,18 +899,9 @@ object LsviQueries {
            |    sum(w) AS sw, sum(w * w) AS sw2,
            |    sum(w * x) AS swx, sum(w * x * x) AS swx2
            |  FROM rows_ GROUP BY 1, 2, 3),
-           |f AS (
-           |  SELECT *, sw * sw / sw2 AS neff, swx / sw AS m FROM agg),
-           |f2 AS (
-           |  SELECT *, greatest(swx2 / sw - m * m, 0.0) AS vpop FROM f)
+           |$weightedMomentsCtes
            |SELECT type_resultaat, habitattype, sbzh, n_obs,
-           |  round(m, 6) AS index_hq_mean,
-           |  CASE WHEN n_obs > 1
-           |       THEN round(m - $z * sqrt(vpop / (neff - 1.0)), 6) END
-           |    AS index_hq_llci,
-           |  CASE WHEN n_obs > 1
-           |       THEN round(m + $z * sqrt(vpop / (neff - 1.0)), 6) END
-           |    AS index_hq_ulci
+           |${meanCiCols("index_hq", weightedSe)}
            |FROM f2""".stripMargin
     }),
 
@@ -1208,19 +927,9 @@ object LsviQueries {
       // effective-count Wilson/Wald/log-ratio intervals, both klasse
       // ladders. Every weighted sum is a binary-fraction multiple, so
       // the distributed aggregation is order-independent on both sides.
-      (
-      statusOracleCtes.stripSuffix("\n") +
-        s""", pairs AS (
-           |  SELECT habitattype, point_code,
-           |    arg_min(lsvi, mdate || '|' || id) = 'gunstig' AS g1,
-           |    arg_max(lsvi, mdate || '|' || id) = 'gunstig' AS g2,
-           |    arg_max(in_sac, mdate || '|' || id) AS in_sac,
-           |    arg_max(w + CASE WHEN mdate = 2020 THEN 0.125 ELSE 0.0 END,
-           |            mdate || '|' || id) AS w,
-           |    min(mdate) AS j1, max(mdate) AS j2,
-           |    count(DISTINCT mdate) AS nc
-           |  FROM plots GROUP BY 1, 2),
-           |""".stripMargin + trendHabitatWeightedOracleTail))),
+      statusOracleCtes.stripSuffix("\n") + ", " +
+        trendPairsCte("plots", "mdate", Some(latestW2020)) +
+        trendHabitatOracleTail("nc > 1", weighted = true))),
 
     Query("q133_status_indicatoren_weighted", (s, dir) => {
       val (meta, ind) = statusInputs(s, dir)
@@ -1229,20 +938,11 @@ object LsviQueries {
       // q133: design-weighted status_indicatoren — q113 with Hájek
       // shares and the Kish-n_eff Wilson interval (the q130 formula
       // shape at indicator grain).
-      val z = graft.lsvi.LsviStatus.z975
-      val z2 = z * z
       statusOracleCtes.stripSuffix("\n") +
-        s""", ind AS (
-           |  SELECT p.id, p.habitattype, 'crit_' || (j.j % 2) AS criterium,
-           |    'ind_' || j.j AS indicator,
-           |    CASE WHEN j.j < 2 THEN 'zb' ELSE 'b' END AS belang,
-           |    CASE WHEN (p.ck * (j.j + 2)) % 5 = 0 THEN NULL
-           |         ELSE ((p.ck * (j.j + 2)) % 5) % 2 = 1 END AS status
-           |  FROM plots p CROSS JOIN (VALUES (0),(1),(2),(3),(4)) j(j)),
+        s""", ${indCte(indStatus)},
            |rows_ AS (
            |  SELECT i.habitattype,
-           |    CASE WHEN g.g = 1 THEN 'Binnen & Buiten'
-           |         WHEN l.in_sac = 1 THEN 'Binnen' ELSE 'Buiten' END AS sbzh,
+           |${sbzhCase("l.in_sac")},
            |    i.criterium, i.indicator, i.belang, i.status, l.w
            |  FROM ind i JOIN latest l ON i.id = l.id
            |  CROSS JOIN (VALUES (0),(1)) g(g)
@@ -1254,27 +954,8 @@ object LsviQueries {
            |  FROM rows_ GROUP BY 1, 2, 3, 4, 5),
            |e1 AS (
            |  SELECT *, sw * sw / sw2 AS neff, swk / sw AS p FROM agg),
-           |e2 AS (SELECT *, 1.0 + $z2 / neff AS den FROM e1),
-           |e3 AS (
-           |  SELECT *,
-           |    (p + $z2 / (2.0 * neff)) / den AS center,
-           |    ($z / den) * sqrt(p * (1.0 - p) / neff
-           |      + $z2 / (4.0 * neff * neff)) AS half
-           |  FROM e2),
-           |fin AS (
-           |  SELECT habitattype, sbzh, criterium, indicator, belang, n_obs,
-           |    round(100.0 * swk / sw, 6) AS aandeel_gunstig,
-           |    round(CASE WHEN swk = 0.0 OR swk = sw THEN 100.0 * p
-           |               ELSE 100.0 * greatest(0.0, center - half) END, 6)
-           |      AS aandeel_gunstig_llci,
-           |    round(CASE WHEN swk = 0.0 OR swk = sw THEN 100.0 * p
-           |               ELSE 100.0 * least(1.0, center + half) END, 6)
-           |      AS aandeel_gunstig_ulci
-           |  FROM e3)
-           |SELECT *, CASE WHEN aandeel_gunstig_llci >= 75 THEN 'Goed'
-           |               WHEN aandeel_gunstig_ulci < 75 THEN 'Niet goed'
-           |               ELSE 'Onbekend' END AS beoordeling
-           |FROM fin""".stripMargin
+           |${neffWilsonCtes("e1", "e2", "e3")},
+           |${statusFinSql("habitattype, sbzh, criterium, indicator, belang", weighted = true, "e3")}""".stripMargin
     }),
 
     Query("q134_index_ind_weighted", (s, dir) => {
@@ -1286,23 +967,13 @@ object LsviQueries {
       // q134: design-weighted index_ind over the 1/1024-snapped
       // verschilscore — Hájek mean, design-effect z interval (the q131
       // weighted-mean tail at indicator grain).
-      val z = graft.lsvi.LsviStatus.z975
       statusOracleCtes.stripSuffix("\n") +
-        s""", ind AS (
-           |  SELECT p.id, p.habitattype, 'crit_' || (j.j % 2) AS criterium,
-           |    'ind_' || j.j AS indicator,
-           |    CASE WHEN j.j < 2 THEN 'zb' ELSE 'b' END AS belang,
-           |    CASE WHEN (p.ck * (j.j + 2)) % 5 = 0 THEN NULL
-           |         ELSE round((CAST((p.ck * (j.j + 4)) % 2001 - 1000 AS DOUBLE)
-           |                     / 1000.0) * 1024) / 1024.0
-           |         END AS x
-           |  FROM plots p CROSS JOIN (VALUES (0),(1),(2),(3),(4)) j(j)),
+        s""", ${indCte(indSnapped)},
            |rows_ AS (
            |  SELECT i.habitattype,
            |    CASE WHEN g.g = 0 THEN 'SBZH' ELSE 'Habitattype' END
            |      AS type_resultaat,
-           |    CASE WHEN g.g = 1 THEN 'Binnen & Buiten'
-           |         WHEN l.in_sac = 1 THEN 'Binnen' ELSE 'Buiten' END AS sbzh,
+           |${sbzhCase("l.in_sac")},
            |    i.criterium, i.indicator, i.belang, i.x, l.w
            |  FROM ind i JOIN latest l ON i.id = l.id
            |  CROSS JOIN (VALUES (0),(1)) g(g)
@@ -1313,19 +984,10 @@ object LsviQueries {
            |    sum(w) AS sw, sum(w * w) AS sw2,
            |    sum(w * x) AS swx, sum(w * x * x) AS swx2
            |  FROM rows_ GROUP BY 1, 2, 3, 4, 5, 6),
-           |f AS (
-           |  SELECT *, sw * sw / sw2 AS neff, swx / sw AS m FROM agg),
-           |f2 AS (
-           |  SELECT *, greatest(swx2 / sw - m * m, 0.0) AS vpop FROM f)
+           |$weightedMomentsCtes
            |SELECT type_resultaat, habitattype, sbzh, criterium, indicator,
            |  belang, n_obs,
-           |  round(m, 6) AS index_ind_mean,
-           |  CASE WHEN n_obs > 1
-           |       THEN round(m - $z * sqrt(vpop / (neff - 1.0)), 6) END
-           |    AS index_ind_llci,
-           |  CASE WHEN n_obs > 1
-           |       THEN round(m + $z * sqrt(vpop / (neff - 1.0)), 6) END
-           |    AS index_ind_ulci
+           |${meanCiCols("index_ind", weightedSe)}
            |FROM f2""".stripMargin
     }),
 
@@ -1340,25 +1002,9 @@ object LsviQueries {
       // the latest-visit pair weight, per-cycle Hájek shares with
       // effective-count Wilson bounds, and the paired Wald difference on
       // the weighted within-point change (n_eff from the paired set).
-      val z = graft.lsvi.LsviStatus.z975
-      val z2 = z * z
       statusOracleCtes.stripSuffix("\n") +
-        s""", pairsAll AS (
-           |  SELECT habitattype, point_code,
-           |    arg_min(id, mdate || '|' || id) AS id_1,
-           |    arg_max(id, mdate || '|' || id) AS id_2,
-           |    arg_max(w + CASE WHEN mdate = 2020 THEN 0.125 ELSE 0.0 END,
-           |            mdate || '|' || id) AS w,
-           |    count(DISTINCT mdate) AS nc
-           |  FROM plots GROUP BY 1, 2),
-           |prs AS (SELECT * FROM pairsAll WHERE nc > 1),
-           |ind AS (
-           |  SELECT p.id, p.habitattype, 'crit_' || (j.j % 2) AS criterium,
-           |    'ind_' || j.j AS indicator,
-           |    CASE WHEN j.j < 2 THEN 'zb' ELSE 'b' END AS belang,
-           |    CASE WHEN (p.ck * (j.j + 2)) % 5 = 0 THEN NULL
-           |         ELSE ((p.ck * (j.j + 2)) % 5) % 2 = 1 END AS status
-           |  FROM plots p CROSS JOIN (VALUES (0),(1),(2),(3),(4)) j(j)),
+        s""", ${weightedIdPairsCtes(inSac = false)},
+           |${indCte(indStatus)},
            |known AS (SELECT * FROM ind WHERE status IS NOT NULL),
            |cyc AS (
            |  SELECT point_code, w, id_1 AS id, 'c_1' AS periode FROM prs
@@ -1405,23 +1051,12 @@ object LsviQueries {
            |wil AS (
            |  SELECT *, sw * sw / sw2 AS neff, swk / sw AS p
            |  FROM acyc WHERE n_obs > 0),
-           |wil2 AS (SELECT *, 1.0 + $z2 / neff AS den FROM wil),
-           |wil3 AS (
-           |  SELECT *,
-           |    (p + $z2 / (2.0 * neff)) / den AS center,
-           |    ($z / den) * sqrt(p * (1.0 - p) / neff
-           |      + $z2 / (4.0 * neff * neff)) AS half
-           |  FROM wil2),
+           |${neffWilsonCtes("wil", "wil2", "wil3")},
            |aandeel AS (
            |  SELECT habitattype, periode, criterium, indicator, belang, n_obs,
            |    'aandeel_gunstig' AS parameter,
            |    round(100.0 * swk / sw, 6) AS mean,
-           |    round(CASE WHEN swk = 0.0 OR swk = sw THEN 100.0 * p
-           |               ELSE 100.0 * greatest(0.0, center - half) END, 6)
-           |      AS llci,
-           |    round(CASE WHEN swk = 0.0 OR swk = sw THEN 100.0 * p
-           |               ELSE 100.0 * least(1.0, center + half) END, 6)
-           |      AS ulci
+           |${wilsonPctBounds(weightsAllOrNone, "llci", "ulci")}
            |  FROM wil3),
            |vr AS (
            |  SELECT *, swp * swp / swpsq AS neff,
@@ -1468,15 +1103,13 @@ object LsviQueries {
       // q136: weighted trend_index_hq — paired index_b differences with
       // the latest-visit weight; Hájek mean + Kish-n_eff z interval +
       // weighted relative difference Σw·d / Σw·x1.
-      val z = graft.lsvi.LsviStatus.z975
       statusOracleCtes.stripSuffix("\n") +
         s""", pairs AS (
            |  SELECT habitattype, point_code,
            |    arg_min(idx_b, mdate || '|' || id) AS x1,
            |    arg_max(idx_b, mdate || '|' || id) AS x2,
            |    arg_max(in_sac, mdate || '|' || id) AS in_sac,
-           |    arg_max(w + CASE WHEN mdate = 2020 THEN 0.125 ELSE 0.0 END,
-           |            mdate || '|' || id) AS w,
+           |    $latestW2020,
            |    count(DISTINCT mdate) AS nc
            |  FROM plots GROUP BY 1, 2),
            |prs AS (SELECT *, x2 - x1 AS d FROM pairs WHERE nc > 1),
@@ -1484,8 +1117,7 @@ object LsviQueries {
            |  SELECT habitattype,
            |    CASE WHEN g.g = 0 THEN 'SBZH' ELSE 'Habitattype' END
            |      AS type_resultaat,
-           |    CASE WHEN g.g = 1 THEN 'Binnen & Buiten'
-           |         WHEN in_sac = 1 THEN 'Binnen' ELSE 'Buiten' END AS sbzh,
+           |${sbzhCase("in_sac")},
            |    d, x1, w
            |  FROM prs CROSS JOIN (VALUES (0),(1)) g(g)),
            |agg AS (
@@ -1494,20 +1126,11 @@ object LsviQueries {
            |    sum(w * d) AS swx, sum(w * d * d) AS swx2,
            |    sum(w * x1) AS swx1
            |  FROM rows_ GROUP BY 1, 2, 3),
-           |f AS (
-           |  SELECT *, sw * sw / sw2 AS neff, swx / sw AS m FROM agg),
-           |f2 AS (
-           |  SELECT *, greatest(swx2 / sw - m * m, 0.0) AS vpop FROM f)
+           |$weightedMomentsCtes
            |SELECT type_resultaat, habitattype, sbzh, n_obs,
            |  CASE WHEN swx1 <> 0.0 THEN round(swx / swx1, 6) END
            |    AS index_diff_rel,
-           |  round(m, 6) AS index_diff_mean,
-           |  CASE WHEN n_obs > 1
-           |       THEN round(m - $z * sqrt(vpop / (neff - 1.0)), 6) END
-           |    AS index_diff_llci,
-           |  CASE WHEN n_obs > 1
-           |       THEN round(m + $z * sqrt(vpop / (neff - 1.0)), 6) END
-           |    AS index_diff_ulci
+           |${meanCiCols("index_diff", weightedSe)}
            |FROM f2""".stripMargin
     }),
 
@@ -1523,27 +1146,9 @@ object LsviQueries {
       // q137: weighted trend_index_ind — the q135 pairing joined to the
       // 1/1024-snapped verschilscore, paired differences per indicator,
       // Hájek mean + Kish-n_eff z interval.
-      val z = graft.lsvi.LsviStatus.z975
       statusOracleCtes.stripSuffix("\n") +
-        s""", pairsAll AS (
-           |  SELECT habitattype, point_code,
-           |    arg_min(id, mdate || '|' || id) AS id_1,
-           |    arg_max(id, mdate || '|' || id) AS id_2,
-           |    arg_max(in_sac, mdate || '|' || id) AS in_sac,
-           |    arg_max(w + CASE WHEN mdate = 2020 THEN 0.125 ELSE 0.0 END,
-           |            mdate || '|' || id) AS w,
-           |    count(DISTINCT mdate) AS nc
-           |  FROM plots GROUP BY 1, 2),
-           |prs AS (SELECT * FROM pairsAll WHERE nc > 1),
-           |ind AS (
-           |  SELECT p.id, p.habitattype, 'crit_' || (j.j % 2) AS criterium,
-           |    'ind_' || j.j AS indicator,
-           |    CASE WHEN j.j < 2 THEN 'zb' ELSE 'b' END AS belang,
-           |    CASE WHEN (p.ck * (j.j + 2)) % 5 = 0 THEN NULL
-           |         ELSE round((CAST((p.ck * (j.j + 4)) % 2001 - 1000 AS DOUBLE)
-           |                     / 1000.0) * 1024) / 1024.0
-           |         END AS x
-           |  FROM plots p CROSS JOIN (VALUES (0),(1),(2),(3),(4)) j(j)),
+        s""", ${weightedIdPairsCtes(inSac = true)},
+           |${indCte(indSnapped)},
            |known AS (SELECT * FROM ind WHERE x IS NOT NULL),
            |cyc AS (
            |  SELECT point_code, in_sac, w, id_1 AS id, 'c_1' AS periode FROM prs
@@ -1564,8 +1169,7 @@ object LsviQueries {
            |  SELECT habitattype,
            |    CASE WHEN g.g = 0 THEN 'SBZH' ELSE 'Habitattype' END
            |      AS type_resultaat,
-           |    CASE WHEN g.g = 1 THEN 'Binnen & Buiten'
-           |         WHEN in_sac = 1 THEN 'Binnen' ELSE 'Buiten' END AS sbzh,
+           |${sbzhCase("in_sac")},
            |    criterium, indicator, belang, d, w
            |  FROM prd CROSS JOIN (VALUES (0),(1)) g(g)),
            |agg AS (
@@ -1574,19 +1178,10 @@ object LsviQueries {
            |    sum(w) AS sw, sum(w * w) AS sw2,
            |    sum(w * d) AS swx, sum(w * d * d) AS swx2
            |  FROM rows_ GROUP BY 1, 2, 3, 4, 5, 6),
-           |f AS (
-           |  SELECT *, sw * sw / sw2 AS neff, swx / sw AS m FROM agg),
-           |f2 AS (
-           |  SELECT *, greatest(swx2 / sw - m * m, 0.0) AS vpop FROM f)
+           |$weightedMomentsCtes
            |SELECT type_resultaat, habitattype, sbzh, criterium, indicator,
            |  belang, n_obs,
-           |  round(m, 6) AS index_diff_mean,
-           |  CASE WHEN n_obs > 1
-           |       THEN round(m - $z * sqrt(vpop / (neff - 1.0)), 6) END
-           |    AS index_diff_llci,
-           |  CASE WHEN n_obs > 1
-           |       THEN round(m + $z * sqrt(vpop / (neff - 1.0)), 6) END
-           |    AS index_diff_ulci
+           |${meanCiCols("index_diff", weightedSe)}
            |FROM f2""".stripMargin
     }),
 
@@ -1602,38 +1197,10 @@ object LsviQueries {
       Some {
       // q138: the q129 cycle-derived pairing CTEs with a per-visit
       // weight, feeding the weighted trend tail.
-      val typeList = graft.lsvi.Versie3Forests.habitattypes
-        .map(sqlStr).mkString("[", ", ", "]")
-      s"""WITH base AS (
-         |  SELECT c_custkey AS ck, c_custkey // 2 AS pt
-         |  FROM customer WHERE (c_custkey * 3) % 7 <> 0),
-         |plots0 AS (
-         |  SELECT 'CY_' || ck AS id,
-         |    $typeList[CAST(pt % 11 AS INTEGER) + 1] AS habitattype,
-         |    $typeList[CAST(pt % 11 AS INTEGER) + 1] || '_s' || (pt % 3)
-         |      AS habitatsubtype,
-         |    'pt_' || pt AS point_code,
-         |    2010 + 3 * (ck % 5) AS mdate,
-         |    CASE WHEN pt % 3 < 2 THEN 1 ELSE 0 END AS in_sac,
-         |    CASE WHEN (ck * 5) % 3 = 0 THEN 'gunstig' ELSE 'ongunstig' END
-         |      AS lsvi,
-         |    ((2010 + 3 * (ck % 5) - 2010) // 3 + 1) * 0.25 AS w
-         |  FROM base),
-         |y0 AS (
-         |  SELECT habitatsubtype, min(mdate) AS ys FROM plots0 GROUP BY 1),
-         |cycplots AS (
-         |  SELECT p.*, CAST(floor((p.mdate - y.ys) / 6) AS INTEGER) AS cyc
-         |  FROM plots0 p JOIN y0 y USING (habitatsubtype)),
-         |pairs AS (
-         |  SELECT habitattype, point_code,
-         |    arg_min(lsvi, mdate || '|' || id) = 'gunstig' AS g1,
-         |    arg_max(lsvi, mdate || '|' || id) = 'gunstig' AS g2,
-         |    arg_max(in_sac, mdate || '|' || id) AS in_sac,
-         |    arg_max(w, mdate || '|' || id) AS w,
-         |    min(mdate) AS j1, max(mdate) AS j2,
-         |    count(DISTINCT cyc) AS nc
-         |  FROM cycplots WHERE cyc IN (0, 1) GROUP BY 1, 2),
-         |""".stripMargin + trendHabitatWeightedOracleTail("nc = 2")
+      cyclePlotsCtes(weighted = true) +
+        trendPairsCte("cycplots WHERE cyc IN (0, 1)", "cyc",
+          Some("arg_max(w, mdate || '|' || id) AS w")) +
+        trendHabitatOracleTail("nc = 2", weighted = true)
     }),
 
     // ---- E2 publish round trip (q139): the LAST-MILE composition the
@@ -1712,12 +1279,8 @@ object LsviQueries {
       // predicates (the half-unit offsets guarantee integer-derived
       // points never sit on an edge), LSVI membership via the shared
       // globaal CTEs.
-      (lsviOracleCtes.stripSuffix("\n") +
-      """, i AS (
-        |  SELECT id, criterium, indicator, belang,
-        |    (count(CASE WHEN voldoet = false THEN 1 END) = 0 AND
-        |     count(CASE WHEN voldoet IS NULL THEN 1 END) = 0) AS gunstig
-        |  FROM d GROUP BY 1, 2, 3, 4),
+      (lsviOracleCtes.stripSuffix("\n") + indicatorCte(score = false) +
+      """,
         |g AS (SELECT id FROM i GROUP BY id),
         |meas AS (
         |  SELECT c_custkey AS id, 'P' || c_custkey AS point_code,
@@ -1766,14 +1329,8 @@ object LsviQueries {
           lit("RapportageHR").as("aggregatiemethode"),
           col("aandeel_gunstig"), col("index_mean_ind"))
     }, Some(
-      (lsviOracleCtes.stripSuffix("\n") +
-      """, i AS (
-        |  SELECT id, criterium, indicator, belang,
-        |    (count(CASE WHEN voldoet = false THEN 1 END) = 0 AND
-        |     count(CASE WHEN voldoet IS NULL THEN 1 END) = 0) AS gunstig,
-        |    count(CASE WHEN voldoet = true THEN 1 END)
-        |      / greatest(count(CASE WHEN voldoet IS NOT NULL THEN 1 END), 1) AS score
-        |  FROM d GROUP BY 1, 2, 3, 4),
+      (lsviOracleCtes.stripSuffix("\n") + indicatorCte() +
+      """,
         |g AS (
         |  SELECT id,
         |    round(100.0 * count(CASE WHEN gunstig THEN 1 END) / count(*), 6) AS aandeel_gunstig,
@@ -1797,6 +1354,185 @@ object LsviQueries {
         |  'RapportageHR' AS aggregatiemethode, aandeel_gunstig, index_mean_ind
         |FROM g JOIN pts USING (id)""".stripMargin)))
   )
+
+  // ---- oracle SQL fragments shared by several LSVI oracles; each is
+  // one formula, so two oracles cannot drift apart on it ----
+
+  /** The two-sided 95 % normal quantile every interval oracle uses. */
+  private val z = graft.lsvi.LsviStatus.z975
+  private val z2 = z * z
+
+  /** The forest habitat types as a DuckDB list literal (1-based). */
+  private lazy val forestTypeList: String =
+    graft.lsvi.Versie3Forests.habitattypes.map(sqlStr).mkString("[", ", ", "]")
+
+  /** The `base` CTE of the status, continuous and cycle fixtures:
+    * customers with (ck·3) % 7 <> 0 and their point pt = ck // 2. */
+  private val statusBaseCte: String =
+    """WITH base AS (
+      |  SELECT c_custkey AS ck, c_custkey // 2 AS pt
+      |  FROM customer WHERE (c_custkey * 3) % 7 <> 0),""".stripMargin
+
+  /** RapportageHR indicator roll-up `i` of the `d` detail CTE (with a
+    * leading ", "): gunstig when no voorwaarde fails or is unknown;
+    * `score` adds the share of known voorwaarden met. */
+  private def indicatorCte(score: Boolean = true): String =
+    """, i AS (
+      |  SELECT id, criterium, indicator, belang,
+      |    (count(CASE WHEN voldoet = false THEN 1 END) = 0 AND
+      |     count(CASE WHEN voldoet IS NULL THEN 1 END) = 0) AS gunstig""".stripMargin +
+      (if (score)
+        """,
+          |    count(CASE WHEN voldoet = true THEN 1 END)
+          |      / greatest(count(CASE WHEN voldoet IS NOT NULL THEN 1 END), 1) AS score""".stripMargin
+      else "") +
+      "\n  FROM d GROUP BY 1, 2, 3, 4)"
+
+  /** q71/q78's globaal report over [[indicatorCte]]: counts, shares,
+    * the mean score and the RapportageHR verdict per plot. */
+  private val indicatorGlobaalSql: String = indicatorCte() +
+    """
+      |SELECT id, count(*) AS n_ind,
+      | count(CASE WHEN gunstig THEN 1 END) AS n_gunstig,
+      | count(CASE WHEN belang = 'zb' AND NOT gunstig THEN 1 END) AS n_zb_ongunstig,
+      | round(100.0 * count(CASE WHEN gunstig THEN 1 END) / count(*), 6) AS aandeel_gunstig,
+      | round(sum(score) / count(*), 6) AS index_mean_ind,
+      | (count(CASE WHEN belang = 'zb' AND NOT gunstig THEN 1 END) = 0 AND
+      |  count(CASE WHEN gunstig THEN 1 END) * 2 > count(*)) AS status,
+      | CASE WHEN count(CASE WHEN belang = 'zb' AND NOT gunstig THEN 1 END) = 0 AND
+      |           count(CASE WHEN gunstig THEN 1 END) * 2 > count(*)
+      |      THEN 'gunstig' ELSE 'ongunstig' END AS lsvi
+      |FROM i GROUP BY id""".stripMargin
+
+  /** The five synthetic indicator rows per plot that [[statusInputs]]
+    * explodes, NULL on every fifth (ck, j) pair; `value` ends the CASE
+    * with the known rows' value column (one of the four below). */
+  private def indCte(value: String, habitattype: Boolean = true): String =
+    s"""ind AS (
+       |  SELECT p.id, ${if (habitattype) "p.habitattype, " else ""}'crit_' || (j.j % 2) AS criterium,
+       |    'ind_' || j.j AS indicator,
+       |    CASE WHEN j.j < 2 THEN 'zb' ELSE 'b' END AS belang,
+       |    CASE WHEN (p.ck * (j.j + 2)) % 5 = 0 THEN NULL
+       |         $value
+       |  FROM plots p CROSS JOIN (VALUES (0),(1),(2),(3),(4)) j(j))""".stripMargin
+
+  private val indStatus = "ELSE ((p.ck * (j.j + 2)) % 5) % 2 = 1 END AS status"
+
+  private val indVs =
+    """ELSE CAST((p.ck * (j.j + 4)) % 2001 - 1000 AS DOUBLE) / 1000.0
+      |         END AS vs""".stripMargin
+
+  private val indX6 =
+    """ELSE CAST(floor(CAST((p.ck * (j.j + 4)) % 2001 - 1000 AS DOUBLE)
+      |                         / 1000.0 * 1000000.0 + 0.5) AS BIGINT)
+      |         END AS x6""".stripMargin
+
+  private val indSnapped =
+    """ELSE round((CAST((p.ck * (j.j + 4)) % 2001 - 1000 AS DOUBLE)
+      |                     / 1000.0) * 1024) / 1024.0
+      |         END AS x""".stripMargin
+
+  /** The Wilson score interval's centre and half-width at z975 over
+    * `p` and `den` of `src`, as CTE `name`. */
+  private def wilsonCentreCte(name: String, src: String): String =
+    s"""$name AS (
+       |  SELECT *,
+       |    (p + $z2 / (2.0 * n_obs)) / den AS center,
+       |    ($z / den) * sqrt(p * (1.0 - p) / n_obs + $z2 / (4.0 * n_obs * n_obs)) AS half
+       |  FROM $src)""".stripMargin
+
+  /** The Wilson interval over `src`'s counts (k of n_obs): `wil` adds
+    * the share `p`, `wil2` the centre and half-width. */
+  private def wilsonCtes(src: String): String =
+    s"""wil AS (
+       |  SELECT *, CAST(k AS DOUBLE) / CAST(n_obs AS DOUBLE) AS p,
+       |    1.0 + $z2 / n_obs AS den
+       |  FROM $src),
+       |${wilsonCentreCte("wil2", "wil")}""".stripMargin
+
+  /** The Kish-n_eff Wilson interval over `src`'s Hájek share `p` and
+    * `neff`: `den` adds the denominator, `out` the centre and
+    * half-width. */
+  private def neffWilsonCtes(src: String, den: String, out: String): String =
+    s"""$den AS (SELECT *, 1.0 + $z2 / neff AS den FROM $src),
+       |$out AS (
+       |  SELECT *,
+       |    (p + $z2 / (2.0 * neff)) / den AS center,
+       |    ($z / den) * sqrt(p * (1.0 - p) / neff
+       |      + $z2 / (4.0 * neff * neff)) AS half
+       |  FROM $den)""".stripMargin
+
+  /** The all-or-none guards of the Wilson bounds: plain counts, Hájek
+    * weight sums. */
+  private val countsAllOrNone = "k = 0 OR k = n_obs"
+  private val weightsAllOrNone = "swk = 0.0 OR swk = sw"
+
+  /** The Wilson bounds in percent as SELECT-list lines, clamped to
+    * [0, 100] and equal to the share itself when `allOrNone`; `sep`
+    * sits between each bound and its alias. */
+  private def wilsonPctBounds(allOrNone: String, llci: String, ulci: String,
+                              sep: String = "\n      "): String =
+    s"""    round(CASE WHEN $allOrNone THEN 100.0 * p
+       |               ELSE 100.0 * greatest(0.0, center - half) END, 6)${sep}AS $llci,
+       |    round(CASE WHEN $allOrNone THEN 100.0 * p
+       |               ELSE 100.0 * least(1.0, center + half) END, 6)${sep}AS $ulci""".stripMargin
+
+  /** The status shape's `fin` over the Wilson CTE `src` (count or, if
+    * `weighted`, Hájek shares) and the 75 % beoordeling verdict: Goed
+    * when the lower bound reaches 75, Niet goed when the upper bound
+    * stays below, Onbekend otherwise. */
+  private def statusFinSql(cols: String, weighted: Boolean, src: String): String = {
+    val (share, allOrNone) =
+      if (weighted) ("100.0 * swk / sw", weightsAllOrNone)
+      else ("100.0 * CAST(k AS DOUBLE) / n_obs", countsAllOrNone)
+    s"""fin AS (
+       |  SELECT $cols, n_obs,
+       |    round($share, 6) AS aandeel_gunstig,
+       |${wilsonPctBounds(allOrNone, "aandeel_gunstig_llci", "aandeel_gunstig_ulci")}
+       |  FROM $src)
+       |SELECT *, CASE WHEN aandeel_gunstig_llci >= 75 THEN 'Goed'
+       |               WHEN aandeel_gunstig_ulci < 75 THEN 'Niet goed'
+       |               ELSE 'Onbekend' END AS beoordeling
+       |FROM fin""".stripMargin
+  }
+
+  /** The sbzh stratum column over the `<g>(g)` cross join: pooled
+    * 'Binnen & Buiten' for g = 1, else the SAC stratum of `inSac`. */
+  private def sbzhCase(inSac: String, g: String = "g"): String =
+    s"""    CASE WHEN $g.g = 1 THEN 'Binnen & Buiten'
+       |         WHEN $inSac = 1 THEN 'Binnen' ELSE 'Buiten' END AS sbzh""".stripMargin
+
+  /** Mean and sample sd `f` from `agg`'s 1e-6 fixed-point sums (`s` of
+    * x6, `ss` of x6²): integer sums, so the moments are order-free. */
+  private def fixedPointMomentsCte(s: String, ss: String): String =
+    s"""f AS (
+       |  SELECT *, CAST($s AS DOUBLE) / n_obs / 1000000.0 AS m,
+       |    sqrt(CAST(n_obs * $ss - $s * $s AS DOUBLE)
+       |         / (n_obs * (n_obs - 1))) / 1000000.0 AS sd
+       |  FROM agg)""".stripMargin
+
+  /** Kish n_eff and the Hájek mean `m` (f), then the population
+    * variance `vpop` (f2), from `agg`'s weight sums. */
+  private val weightedMomentsCtes: String =
+    """f AS (
+      |  SELECT *, sw * sw / sw2 AS neff, swx / sw AS m FROM agg),
+      |f2 AS (
+      |  SELECT *, greatest(swx2 / sw - m * m, 0.0) AS vpop FROM f)""".stripMargin
+
+  /** The standard errors of the two moment CTEs above. */
+  private val fixedPointSe = "sd / sqrt(CAST(n_obs AS DOUBLE))"
+  private val weightedSe = "sqrt(vpop / (neff - 1.0))"
+
+  /** `<name>_mean` and its z975 interval m ± z·`se` (NULL for a single
+    * observation) as SELECT-list lines. */
+  private def meanCiCols(name: String, se: String): String =
+    s"""  round(m, 6) AS ${name}_mean,
+       |  CASE WHEN n_obs > 1
+       |       THEN round(m - $z * $se, 6) END
+       |    AS ${name}_llci,
+       |  CASE WHEN n_obs > 1
+       |       THEN round(m + $z * $se, 6) END
+       |    AS ${name}_ulci""".stripMargin
 
   /** LSVI demo inputs derived from the harness tables: scale-free
     * per-supplier metrics as "measurements", plus a categorical region
@@ -2242,24 +1978,39 @@ object LsviQueries {
        |  score_ref, score_max) AS (
        |  VALUES
        |   $ruleVals),
-       |d AS (
+       |""".stripMargin +
+      versie3DetailCtes("""r.voorwaarde, 'and' AS role, TRUE AS aggregate,
+        |    m.value_numeric AS v,
+        |    COALESCE(m.ref_override, r.status_ref) AS sref,
+        |    COALESCE(m.ref_override, r.score_ref) AS cref,
+        |    r.score_max, r.op""".stripMargin)
+  }
+
+  /** The Versie-3 detail CTEs of the heath, streams and WT-group
+    * replays: `d` joins each plot to its type's rules `r` and its
+    * measurements `m` (`cols` follow the rule keys), `d2` adds the op
+    * verdict and the verschilscore clamped to [-1, 1]. `classVerdict`
+    * puts a class-membership branch first, `unscored` says when a row
+    * has no score and `atOrBelow` scores a down rule met at or below
+    * its reference. */
+  private def versie3DetailCtes(cols: String,
+                                unscored: String = "v IS NULL OR sref IS NULL",
+                                atOrBelow: String = heathAtOrBelow,
+                                classVerdict: Option[String] = None): String =
+    s"""d AS (
        |  SELECT p.id, p.type_analysis, r.criterium, r.indicator, r.belang,
-       |    r.voorwaarde, 'and' AS role, TRUE AS aggregate,
-       |    m.value_numeric AS v,
-       |    COALESCE(m.ref_override, r.status_ref) AS sref,
-       |    COALESCE(m.ref_override, r.score_ref) AS cref,
-       |    r.score_max, r.op
+       |    $cols
        |  FROM plots p
        |  JOIN r ON p.type_analysis = r.habitattype
        |  LEFT JOIN m ON m.id = p.id AND m.voorwaarde = r.voorwaarde),
        |d2 AS (
        |  SELECT id, type_analysis, criterium, indicator, belang, voorwaarde,
        |    role, aggregate,
-       |    CASE WHEN op = '>=' THEN v >= sref
+       |    CASE ${classVerdict.fold("")(_ + "\n         ")}WHEN op = '>=' THEN v >= sref
        |         WHEN op = '>'  THEN v > sref
        |         WHEN op = '<=' THEN v <= sref
        |         ELSE v < sref END AS status_voorwaarde,
-       |    CASE WHEN v IS NULL OR sref IS NULL THEN NULL
+       |    CASE WHEN $unscored THEN NULL
        |         ELSE greatest(-1.0, least(1.0,
        |           CASE WHEN op IN ('>=', '>') THEN
        |                  CASE WHEN v >= cref THEN
@@ -2269,13 +2020,17 @@ object LsviQueries {
        |                       WHEN v = cref THEN 0.0 END
        |                ELSE
        |                  CASE WHEN v <= cref THEN
-       |                         (CASE WHEN cref = 0 THEN 1.0
-       |                               ELSE (cref - v) / cref END)
+       |                         $atOrBelow
        |                       ELSE (cref - v) / (score_max - cref) END
        |           END)) END AS verschilscore
        |  FROM d)
        |""".stripMargin
-  }
+
+  /** The heath and WT-group score of a down rule met at or below cref:
+    * 1.0 at a zero reference (the streams rule set differs there). */
+  private val heathAtOrBelow =
+    """(CASE WHEN cref = 0 THEN 1.0
+      |                               ELSE (cref - v) / cref END)""".stripMargin
 
   /** Synthetic (plots, measurements) for the streams (3260) rule set,
     * exercising the HT3260_LSVI.Rmd:96-119 prep: a per-plot species
@@ -2424,37 +2179,12 @@ object LsviQueries {
        |  score_ref, score_max, role) AS (
        |  VALUES
        |   $ruleVals),
-       |d AS (
-       |  SELECT p.id, p.type_analysis, r.criterium, r.indicator, r.belang,
-       |    r.voorwaarde, r.role, TRUE AS aggregate,
-       |    m.value_numeric AS v, r.status_ref AS sref, r.score_ref AS cref,
-       |    r.score_max, r.op
-       |  FROM plots p
-       |  JOIN r ON p.type_analysis = r.habitattype
-       |  LEFT JOIN m ON m.id = p.id AND m.voorwaarde = r.voorwaarde),
-       |d2 AS (
-       |  SELECT id, type_analysis, criterium, indicator, belang, voorwaarde,
-       |    role, aggregate,
-       |    CASE WHEN op = '>=' THEN v >= sref
-       |         WHEN op = '>'  THEN v > sref
-       |         WHEN op = '<=' THEN v <= sref
-       |         ELSE v < sref END AS status_voorwaarde,
-       |    CASE WHEN v IS NULL OR sref IS NULL THEN NULL
-       |         ELSE greatest(-1.0, least(1.0,
-       |           CASE WHEN op IN ('>=', '>') THEN
-       |                  CASE WHEN v >= cref THEN
-       |                         (CASE WHEN score_max = cref THEN 1.0
-       |                               ELSE (v - cref) / (score_max - cref) END)
-       |                       WHEN cref <> 0 THEN (v - cref) / cref
-       |                       WHEN v = cref THEN 0.0 END
-       |                ELSE
-       |                  CASE WHEN v <= cref THEN
-       |                         (CASE WHEN cref <> 0 THEN (cref - v) / cref
-       |                               WHEN v = cref THEN 1.0 END)
-       |                       ELSE (cref - v) / (score_max - cref) END
-       |           END)) END AS verschilscore
-       |  FROM d)
-       |""".stripMargin
+       |""".stripMargin +
+      versie3DetailCtes("""r.voorwaarde, r.role, TRUE AS aggregate,
+        |    m.value_numeric AS v, r.status_ref AS sref, r.score_ref AS cref,
+        |    r.score_max, r.op""".stripMargin,
+      atOrBelow = """(CASE WHEN cref <> 0 THEN (cref - v) / cref
+        |                               WHEN v = cref THEN 1.0 END)""".stripMargin)
   }
 
   /** Synthetic (plotMeta, indicatorRows) for the status/trend shapes
@@ -2584,15 +2314,11 @@ object LsviQueries {
     * [[continuousInputs]] with the engine's 1e-4 fixed-point value
     * (the trailing `latest` CTE is unused by q126 — harmless). */
   private def continuousOracleCtes: String = {
-    val typeList = graft.lsvi.Versie3Forests.habitattypes
-      .map(sqlStr).mkString("[", ", ", "]")
-    s"""WITH base AS (
-       |  SELECT c_custkey AS ck, c_custkey // 2 AS pt
-       |  FROM customer WHERE (c_custkey * 3) % 7 <> 0),
+    s"""$statusBaseCte
        |m AS (
        |  SELECT 'CT_' || ck AS id,
-       |    $typeList[CAST(pt % 11 AS INTEGER) + 1] AS habitattype,
-       |    $typeList[CAST(pt % 11 AS INTEGER) + 1] || '_s' ||
+       |    $forestTypeList[CAST(pt % 11 AS INTEGER) + 1] AS habitattype,
+       |    $forestTypeList[CAST(pt % 11 AS INTEGER) + 1] || '_s' ||
        |      (CASE WHEN ck % 5 = 0 THEN (pt + 1) % 3 ELSE pt % 3 END)
        |      AS habitatsubtype,
        |    'pt_' || pt AS point_code,
@@ -2646,22 +2372,35 @@ object LsviQueries {
       |  SELECT 'Habitattype', habitattype, subs, rn, rsw, rsw2, rswv, rswv2
       |  FROM multi WHERE nsub > 1)""".stripMargin
 
-  /** Shared q140/q141 oracle tail: the Kish-n_eff z interval with the
-    * EXACT float shape of `LsviStatus.continuousShape`'s weighted tail
-    * (m = swv/sw/1e4; vpop = greatest(swv2/sw/1e8 − m², 0);
-    * h = z·sqrt(vpop/(n_eff − 1))). Positive fixture weights with
-    * n > 1 give n_eff > 1 strictly, so no zero-division guard is
-    * needed on either side. */
-  private def continuousWeightedSelectSql(meanCol: String, minN: Int): String = {
-    val z = graft.lsvi.LsviStatus.z975
-    val m = "swv / sw / 10000.0"
-    val h = s"$z * sqrt(greatest(swv2 / sw / 1.0e8 - ($m) * ($m), 0.0) / " +
-      "(sw * sw / sw2 - 1.0))"
+  /** The q125/q126 SELECT over `allr` (q140/q141 if `weighted`): the
+    * mean and its z975 interval from `minN` observations, each with the
+    * EXACT float shape of `LsviStatus.continuousShape`. Unweighted:
+    * 1e-4 fixed-point sums and the sample sd. Weighted: m = swv/sw/1e4;
+    * vpop = greatest(swv2/sw/1e8 − m², 0); h = z·sqrt(vpop/(n_eff − 1));
+    * positive fixture weights with n > 1 give n_eff > 1 strictly, so no
+    * zero-division guard is needed on either side. */
+  private def continuousSelectSql(meanCol: String, minN: Int, weighted: Boolean): String = {
+    val cols = if (weighted) {
+      val m = "swv / sw / 10000.0"
+      val h = s"$z * sqrt(greatest(swv2 / sw / 1.0e8 - ($m) * ($m), 0.0) / " +
+        "(sw * sw / sw2 - 1.0))"
+      s"""  round($m, 6) AS $meanCol,
+         |  CASE WHEN n >= $minN THEN round($m - $h, 6) END AS ${meanCol}_llci,
+         |  CASE WHEN n >= $minN THEN round($m + $h, 6) END AS ${meanCol}_ulci""".stripMargin
+    } else {
+      val m = "CAST(s1 AS DOUBLE) / n / 10000.0"
+      def bound(op: String) =
+        s"""CASE WHEN n >= $minN THEN round($m $op
+           |    $z * (sqrt(greatest((CAST(s2 AS DOUBLE) -
+           |      CAST(s1 AS DOUBLE) * s1 / n) / (n - 1), 0.0)) / 10000.0) /
+           |    sqrt(n), 6) END""".stripMargin
+      s"""  round($m, 6) AS $meanCol,
+         |  ${bound("-")} AS ${meanCol}_llci,
+         |  ${bound("+")} AS ${meanCol}_ulci""".stripMargin
+    }
     s"""SELECT type_resultaat, habitattype, habitatsubtype,
        |  'Binnen & Buiten' AS sbzh, n AS n_obs,
-       |  round($m, 6) AS $meanCol,
-       |  CASE WHEN n >= $minN THEN round($m - $h, 6) END AS ${meanCol}_llci,
-       |  CASE WHEN n >= $minN THEN round($m + $h, 6) END AS ${meanCol}_ulci,
+       |$cols,
        |  'hoeveelheid dik dood hout' AS indicator,
        |  'aantal exemplaren dik dood hout per ha' AS voorwaarde
        |FROM allr""".stripMargin
@@ -2671,10 +2410,8 @@ object LsviQueries {
     * stratum explode and the per-verdict area sums, suffixed by the
     * cycle tag (no trailing comma — callers chain with ",\n"). */
   private def censusOracleCte(cycle: Int): String = {
-    val typeList = graft.lsvi.Versie3Forests.habitattypes
-      .map(sqlStr).mkString("[", ", ", "]")
     s"""WITH p$cycle AS (
-       |  SELECT $typeList[CAST(p_partkey % 7 AS INTEGER) + 1] AS habitattype,
+       |  SELECT $forestTypeList[CAST(p_partkey % 7 AS INTEGER) + 1] AS habitattype,
        |    CASE WHEN p_partkey % 3 < 2 THEN 1 ELSE 0 END AS in_sac,
        |    CASE WHEN (p_partkey * $cycle) % 5 < 2 THEN 'gunstig'
        |         WHEN (p_partkey * $cycle) % 5 = 4 THEN 'onbekend'
@@ -2696,9 +2433,6 @@ object LsviQueries {
        |  FROM strata$cycle GROUP BY 1, 2, 3, 4)""".stripMargin
   }
 
-  /** Shared oracle tail for q121/q129 (`trend_habitat`): from the
-    * paired flags to the four published row families; `ncPred` is the
-    * pairing filter (`nc > 1` visit-based, `nc = 2` cycle-based). */
   /** SQL rendering of [[graft.lsvi.LsviStatus.effectKlasse]] (the
     * ten-class trend-effect ladder) over rounded mean/llci/ulci
     * columns — shared by the unweighted and weighted trend oracle
@@ -2717,219 +2451,209 @@ object LsviQueries {
        |     WHEN coalesce(ulci, mean) <= $th THEN '?-'
        |     ELSE '?' END""".stripMargin.replace("\n", " ").replaceAll(" +", " ")
 
-  private def trendHabitatOracleTail(ncPred: String): String = {
-    val z = graft.lsvi.LsviStatus.z975
-    val z2 = z * z
+  /** The trend_habitat oracle tail, from the `pairs` flags to the four
+    * published row families (q121/q129; `weighted`: q132/q138, whose
+    * `pairs` also carry the latest visit's design weight `w`).
+    * `ncPred` is the pairing filter (`nc > 1` visit-based, `nc = 2`
+    * cycle-based). The weighted tail mirrors
+    * [[graft.lsvi.LsviStatus.trendHabitat]] under a weight: Hájek
+    * shares, Kish-n_eff Wilson/Wald intervals, an effective-count
+    * log-ratio interval; the year columns stay unweighted. */
+  private def trendHabitatOracleTail(ncPred: String, weighted: Boolean = false): String = {
+    val vj =
+      """CAST(CASE
+        |      WHEN 2 * ((sdj * 10) % n_obs) > n_obs THEN (sdj * 10) // n_obs + 1
+        |      WHEN 2 * ((sdj * 10) % n_obs) < n_obs THEN (sdj * 10) // n_obs
+        |      ELSE (sdj * 10) // n_obs + ((sdj * 10) // n_obs) % 2
+        |    END AS DOUBLE) / 10 AS vj""".stripMargin
+    def aand(mean: String, allOrNone: String, src: String) =
+      s"""aand AS (
+         |  SELECT periode, type_resultaat, habitattype, sbzh, n_obs,
+         |    'aandeel_gunstig' AS parameter,
+         |    round($mean, 6) AS mean,
+         |${wilsonPctBounds(allOrNone, "llci", "ulci", " ")},
+         |    CAST(NULL AS VARCHAR) AS klasse, CAST(NULL AS VARCHAR) AS periode_ref,
+         |    jaar_min, jaar_max, CAST(NULL AS DOUBLE) AS verschil_jaar
+         |  FROM $src)""".stripMargin
+    val (sums, shares, diffs, rel, relGuard) = if (weighted) (
+      """    sum(w) AS sw, sum(w * w) AS sw2,
+        |    sum(CASE WHEN g1 THEN w ELSE 0.0 END) AS swk1,
+        |    sum(CASE WHEN g2 THEN w ELSE 0.0 END) AS swk2,
+        |    sum(CASE WHEN g1 AND NOT g2 THEN w ELSE 0.0 END) AS swb,
+        |    sum(CASE WHEN NOT g1 AND g2 THEN w ELSE 0.0 END) AS swc,""".stripMargin,
+      s"""acyc AS (
+         |  SELECT 'c_1' AS periode, type_resultaat, habitattype, sbzh, n_obs,
+         |    sw, sw2, swk1 AS swk, jmin1 AS jaar_min, jmax1 AS jaar_max
+         |  FROM agg
+         |  UNION ALL
+         |  SELECT 'c_2', type_resultaat, habitattype, sbzh, n_obs,
+         |    sw, sw2, swk2, jmin2, jmax2 FROM agg),
+         |wil AS (
+         |  SELECT *, sw * sw / sw2 AS neff, swk / sw AS p FROM acyc),
+         |${neffWilsonCtes("wil", "wil2", "wil3")},
+         |${aand("100.0 * swk / sw", weightsAllOrNone, "wil3")}""".stripMargin,
+      s"""vb0 AS (
+         |  SELECT *, sw * sw / sw2 AS neff, (swk2 - swk1) / sw AS md FROM agg),
+         |vb1 AS (
+         |  SELECT *, 100.0 * md AS d,
+         |    greatest((swb + swc) / sw - md * md, 0.0) AS vpop,
+         |    neff * (swk1 / sw) AS k1e, neff * (swk2 / sw) AS k2e,
+         |    neff * ((swb + swc) / sw) AS bce,
+         |    least(jmin1, jmin2) AS jaar_min, greatest(jmax1, jmax2) AS jaar_max,
+         |    $vj
+         |  FROM vb0),
+         |vboth AS (
+         |  SELECT *, 100.0 * sqrt(vpop / neff) AS se,
+         |    sqrt(bce / (k1e * k2e)) AS se_ln
+         |  FROM vb1)""".stripMargin,
+      s"""    CASE WHEN swk1 > 0.0
+         |         THEN round(100.0 * (swk2 - swk1) / swk1, 6) END AS mean,
+         |    CASE WHEN swk1 > 0.0 AND swk2 > 0.0
+         |         THEN round(100.0 * (exp(ln(swk2 / swk1)
+         |                - $z * se_ln) - 1.0), 6) END AS llci,
+         |    CASE WHEN swk1 > 0.0 AND swk2 > 0.0
+         |         THEN round(100.0 * (exp(ln(swk2 / swk1)
+         |                + $z * se_ln) - 1.0), 6) END AS ulci,
+         |    swk1, round(d - $z * se, 6) AS abs_llci,""".stripMargin,
+      "swk1 > 0.0")
+    else (
+      """    count(CASE WHEN g1 THEN 1 END) AS k1,
+        |    count(CASE WHEN g2 THEN 1 END) AS k2,
+        |    count(CASE WHEN g1 AND NOT g2 THEN 1 END) AS b,
+        |    count(CASE WHEN NOT g1 AND g2 THEN 1 END) AS c,""".stripMargin,
+      s"""acyc AS (
+         |  SELECT 'c_1' AS periode, type_resultaat, habitattype, sbzh, n_obs,
+         |    k1 AS k, jmin1 AS jaar_min, jmax1 AS jaar_max FROM agg
+         |  UNION ALL
+         |  SELECT 'c_2', type_resultaat, habitattype, sbzh, n_obs,
+         |    k2, jmin2, jmax2 FROM agg),
+         |${wilsonCtes("acyc")},
+         |${aand("100.0 * p", countsAllOrNone, "wil2")}""".stripMargin,
+      s"""vboth AS (
+         |  SELECT *,
+         |    100.0 * (CAST(k2 AS DOUBLE) - k1) / n_obs AS d,
+         |    100.0 * sqrt(b + c - pow(CAST(b AS DOUBLE) - c, 2) / n_obs) / n_obs AS se,
+         |    least(jmin1, jmin2) AS jaar_min, greatest(jmax1, jmax2) AS jaar_max,
+         |    -- half-even to 1 decimal like the engine's bround (DuckDB
+         |    -- round() is half-away-from-zero on doubles): integer
+         |    -- half-even of the exact rational sdj*10/n_obs, which the
+         |    -- correctly-rounded IEEE division makes identical to
+         |    -- Spark's decimal-string HALF_EVEN (sdj >= 0 by pairing)
+         |    $vj
+         |  FROM agg)""".stripMargin,
+      s"""    CASE WHEN k1 > 0
+         |         THEN round(100.0 * (CAST(k2 AS DOUBLE) - k1) / k1, 6) END AS mean,
+         |    CASE WHEN k1 > 0 AND k2 > 0
+         |         THEN round(100.0 * (exp(ln(CAST(k2 AS DOUBLE) / k1)
+         |                - $z * sqrt((b + c) / (CAST(k1 AS DOUBLE) * k2))) - 1.0), 6)
+         |         END AS llci,
+         |    CASE WHEN k1 > 0 AND k2 > 0
+         |         THEN round(100.0 * (exp(ln(CAST(k2 AS DOUBLE) / k1)
+         |                + $z * sqrt((b + c) / (CAST(k1 AS DOUBLE) * k2))) - 1.0), 6)
+         |         END AS ulci,
+         |    k1, round(d - $z * se, 6) AS abs_llci,""".stripMargin,
+      "k1 > 0")
     s"""rows_ AS (
-           |  SELECT habitattype,
-           |    CASE WHEN g.g = 0 THEN 'SBZH' ELSE 'Habitattype' END AS type_resultaat,
-           |    CASE WHEN g.g = 1 THEN 'Binnen & Buiten'
-           |         WHEN in_sac = 1 THEN 'Binnen' ELSE 'Buiten' END AS sbzh,
-           |    g1, g2, j1, j2
-           |  FROM pairs CROSS JOIN (VALUES (0),(1)) g(g) WHERE $ncPred),
-           |agg AS (
-           |  SELECT type_resultaat, habitattype, sbzh, count(*) AS n_obs,
-           |    count(CASE WHEN g1 THEN 1 END) AS k1,
-           |    count(CASE WHEN g2 THEN 1 END) AS k2,
-           |    count(CASE WHEN g1 AND NOT g2 THEN 1 END) AS b,
-           |    count(CASE WHEN NOT g1 AND g2 THEN 1 END) AS c,
-           |    min(j1) AS jmin1, max(j1) AS jmax1,
-           |    min(j2) AS jmin2, max(j2) AS jmax2,
-           |    sum(j2 - j1) AS sdj
-           |  FROM rows_ GROUP BY 1, 2, 3),
-           |acyc AS (
-           |  SELECT 'c_1' AS periode, type_resultaat, habitattype, sbzh, n_obs,
-           |    k1 AS k, jmin1 AS jaar_min, jmax1 AS jaar_max FROM agg
-           |  UNION ALL
-           |  SELECT 'c_2', type_resultaat, habitattype, sbzh, n_obs,
-           |    k2, jmin2, jmax2 FROM agg),
-           |wil AS (
-           |  SELECT *, CAST(k AS DOUBLE) / CAST(n_obs AS DOUBLE) AS p,
-           |    1.0 + $z2 / n_obs AS den
-           |  FROM acyc),
-           |wil2 AS (
-           |  SELECT *,
-           |    (p + $z2 / (2.0 * n_obs)) / den AS center,
-           |    ($z / den) * sqrt(p * (1.0 - p) / n_obs + $z2 / (4.0 * n_obs * n_obs)) AS half
-           |  FROM wil),
-           |aand AS (
-           |  SELECT periode, type_resultaat, habitattype, sbzh, n_obs,
-           |    'aandeel_gunstig' AS parameter,
-           |    round(100.0 * p, 6) AS mean,
-           |    round(CASE WHEN k = 0 OR k = n_obs THEN 100.0 * p
-           |               ELSE 100.0 * greatest(0.0, center - half) END, 6) AS llci,
-           |    round(CASE WHEN k = 0 OR k = n_obs THEN 100.0 * p
-           |               ELSE 100.0 * least(1.0, center + half) END, 6) AS ulci,
-           |    CAST(NULL AS VARCHAR) AS klasse, CAST(NULL AS VARCHAR) AS periode_ref,
-           |    jaar_min, jaar_max, CAST(NULL AS DOUBLE) AS verschil_jaar
-           |  FROM wil2),
-           |vboth AS (
-           |  SELECT *,
-           |    100.0 * (CAST(k2 AS DOUBLE) - k1) / n_obs AS d,
-           |    100.0 * sqrt(b + c - pow(CAST(b AS DOUBLE) - c, 2) / n_obs) / n_obs AS se,
-           |    least(jmin1, jmin2) AS jaar_min, greatest(jmax1, jmax2) AS jaar_max,
-           |    -- half-even to 1 decimal like the engine's bround (DuckDB
-           |    -- round() is half-away-from-zero on doubles): integer
-           |    -- half-even of the exact rational sdj*10/n_obs, which the
-           |    -- correctly-rounded IEEE division makes identical to
-           |    -- Spark's decimal-string HALF_EVEN (sdj >= 0 by pairing)
-           |    CAST(CASE
-           |      WHEN 2 * ((sdj * 10) % n_obs) > n_obs THEN (sdj * 10) // n_obs + 1
-           |      WHEN 2 * ((sdj * 10) % n_obs) < n_obs THEN (sdj * 10) // n_obs
-           |      ELSE (sdj * 10) // n_obs + ((sdj * 10) // n_obs) % 2
-           |    END AS DOUBLE) / 10 AS vj
-           |  FROM agg),
-           |vabs AS (
-           |  SELECT 'c_2' AS periode, type_resultaat, habitattype, sbzh, n_obs,
-           |    'verschil_aandeel_gunstig_abs' AS parameter,
-           |    round(d, 6) AS mean, round(d - $z * se, 6) AS llci,
-           |    round(d + $z * se, 6) AS ulci,
-           |    CAST(NULL AS VARCHAR) AS klasse, 'c_1' AS periode_ref,
-           |    jaar_min, jaar_max, vj AS verschil_jaar
-           |  FROM vboth),
-           |vabs2 AS (
-           |  SELECT periode, type_resultaat, habitattype, sbzh, n_obs, parameter,
-           |    mean, llci, ulci, ${klasseSql(12.0, 12.0)} AS klasse,
-           |    periode_ref, jaar_min, jaar_max, verschil_jaar
-           |  FROM vabs),
-           |vrel AS (
-           |  SELECT 'c_2' AS periode, type_resultaat, habitattype, sbzh, n_obs,
-           |    'verschil_aandeel_gunstig_rel' AS parameter,
-           |    CASE WHEN k1 > 0
-           |         THEN round(100.0 * (CAST(k2 AS DOUBLE) - k1) / k1, 6) END AS mean,
-           |    CASE WHEN k1 > 0 AND k2 > 0
-           |         THEN round(100.0 * (exp(ln(CAST(k2 AS DOUBLE) / k1)
-           |                - $z * sqrt((b + c) / (CAST(k1 AS DOUBLE) * k2))) - 1.0), 6)
-           |         END AS llci,
-           |    CASE WHEN k1 > 0 AND k2 > 0
-           |         THEN round(100.0 * (exp(ln(CAST(k2 AS DOUBLE) / k1)
-           |                + $z * sqrt((b + c) / (CAST(k1 AS DOUBLE) * k2))) - 1.0), 6)
-           |         END AS ulci,
-           |    k1, round(d - $z * se, 6) AS abs_llci,
-           |    jaar_min, jaar_max, vj
-           |  FROM vboth),
-           |vrel2 AS (
-           |  SELECT periode, type_resultaat, habitattype, sbzh, n_obs, parameter,
-           |    mean, llci, ulci,
-           |    CASE WHEN k1 > 0 THEN ${klasseSql(25.0, 25.0)}
-           |         WHEN abs_llci > 0.0 THEN '++' ELSE '?' END AS klasse,
-           |    'c_1' AS periode_ref, jaar_min, jaar_max, vj AS verschil_jaar
-           |  FROM vrel)
-           |SELECT * FROM aand UNION ALL SELECT * FROM vabs2
-           |UNION ALL SELECT * FROM vrel2""".stripMargin
+       |  SELECT habitattype,
+       |    CASE WHEN g.g = 0 THEN 'SBZH' ELSE 'Habitattype' END AS type_resultaat,
+       |${sbzhCase("in_sac")},
+       |    g1, g2, j1, j2${if (weighted) ", w" else ""}
+       |  FROM pairs CROSS JOIN (VALUES (0),(1)) g(g) WHERE $ncPred),
+       |agg AS (
+       |  SELECT type_resultaat, habitattype, sbzh, count(*) AS n_obs,
+       |$sums
+       |    min(j1) AS jmin1, max(j1) AS jmax1,
+       |    min(j2) AS jmin2, max(j2) AS jmax2,
+       |    sum(j2 - j1) AS sdj
+       |  FROM rows_ GROUP BY 1, 2, 3),
+       |$shares,
+       |$diffs,
+       |vabs AS (
+       |  SELECT 'c_2' AS periode, type_resultaat, habitattype, sbzh, n_obs,
+       |    'verschil_aandeel_gunstig_abs' AS parameter,
+       |    round(d, 6) AS mean, round(d - $z * se, 6) AS llci,
+       |    round(d + $z * se, 6) AS ulci,
+       |    CAST(NULL AS VARCHAR) AS klasse, 'c_1' AS periode_ref,
+       |    jaar_min, jaar_max, vj AS verschil_jaar
+       |  FROM vboth),
+       |vabs2 AS (
+       |  SELECT periode, type_resultaat, habitattype, sbzh, n_obs, parameter,
+       |    mean, llci, ulci, ${klasseSql(12.0, 12.0)} AS klasse,
+       |    periode_ref, jaar_min, jaar_max, verschil_jaar
+       |  FROM vabs),
+       |vrel AS (
+       |  SELECT 'c_2' AS periode, type_resultaat, habitattype, sbzh, n_obs,
+       |    'verschil_aandeel_gunstig_rel' AS parameter,
+       |$rel
+       |    jaar_min, jaar_max, vj
+       |  FROM vboth),
+       |vrel2 AS (
+       |  SELECT periode, type_resultaat, habitattype, sbzh, n_obs, parameter,
+       |    mean, llci, ulci,
+       |    CASE WHEN $relGuard THEN ${klasseSql(25.0, 25.0)}
+       |         WHEN abs_llci > 0.0 THEN '++' ELSE '?' END AS klasse,
+       |    'c_1' AS periode_ref, jaar_min, jaar_max, vj AS verschil_jaar
+       |  FROM vrel)
+       |SELECT * FROM aand UNION ALL SELECT * FROM vabs2
+       |UNION ALL SELECT * FROM vrel2""".stripMargin
   }
 
-  /** Weighted twin of [[trendHabitatOracleTail]]: expects a `pairs` CTE
-    * that also carries the latest-visit design weight `w`. Mirrors
-    * [[graft.lsvi.LsviStatus.trendHabitat]] under a weight:
-    * Hájek shares, Kish-n_eff Wilson/Wald intervals, effective-count
-    * log-ratio interval, both klasse ladders, unweighted year columns. */
-  private def trendHabitatWeightedOracleTail: String =
-    trendHabitatWeightedOracleTail("nc > 1")
+  /** The trend pairing `pairs` per point of `from` (ends in ",\n"):
+    * first/latest verdicts g1/g2, the latest in_sac (and weight `w`),
+    * the year span and the number of distinct `visit`s `nc`. */
+  private def trendPairsCte(from: String, visit: String, w: Option[String] = None): String =
+    s"""pairs AS (
+       |  SELECT habitattype, point_code,
+       |    arg_min(lsvi, mdate || '|' || id) = 'gunstig' AS g1,
+       |    arg_max(lsvi, mdate || '|' || id) = 'gunstig' AS g2,
+       |    arg_max(in_sac, mdate || '|' || id) AS in_sac,${w.map(x => s"\n    $x,").getOrElse("")}
+       |    min(mdate) AS j1, max(mdate) AS j2,
+       |    count(DISTINCT $visit) AS nc
+       |  FROM $from GROUP BY 1, 2),
+       |""".stripMargin
 
-  private def trendHabitatWeightedOracleTail(ncPred: String): String = {
-    val z = graft.lsvi.LsviStatus.z975
-    val z2 = z * z
-    s"""rows_ AS (
-           |  SELECT habitattype,
-           |    CASE WHEN g.g = 0 THEN 'SBZH' ELSE 'Habitattype' END AS type_resultaat,
-           |    CASE WHEN g.g = 1 THEN 'Binnen & Buiten'
-           |         WHEN in_sac = 1 THEN 'Binnen' ELSE 'Buiten' END AS sbzh,
-           |    g1, g2, j1, j2, w
-           |  FROM pairs CROSS JOIN (VALUES (0),(1)) g(g) WHERE $ncPred),
-           |agg AS (
-           |  SELECT type_resultaat, habitattype, sbzh, count(*) AS n_obs,
-           |    sum(w) AS sw, sum(w * w) AS sw2,
-           |    sum(CASE WHEN g1 THEN w ELSE 0.0 END) AS swk1,
-           |    sum(CASE WHEN g2 THEN w ELSE 0.0 END) AS swk2,
-           |    sum(CASE WHEN g1 AND NOT g2 THEN w ELSE 0.0 END) AS swb,
-           |    sum(CASE WHEN NOT g1 AND g2 THEN w ELSE 0.0 END) AS swc,
-           |    min(j1) AS jmin1, max(j1) AS jmax1,
-           |    min(j2) AS jmin2, max(j2) AS jmax2,
-           |    sum(j2 - j1) AS sdj
-           |  FROM rows_ GROUP BY 1, 2, 3),
-           |acyc AS (
-           |  SELECT 'c_1' AS periode, type_resultaat, habitattype, sbzh, n_obs,
-           |    sw, sw2, swk1 AS swk, jmin1 AS jaar_min, jmax1 AS jaar_max
-           |  FROM agg
-           |  UNION ALL
-           |  SELECT 'c_2', type_resultaat, habitattype, sbzh, n_obs,
-           |    sw, sw2, swk2, jmin2, jmax2 FROM agg),
-           |wil AS (
-           |  SELECT *, sw * sw / sw2 AS neff, swk / sw AS p FROM acyc),
-           |wil2 AS (SELECT *, 1.0 + $z2 / neff AS den FROM wil),
-           |wil3 AS (
-           |  SELECT *,
-           |    (p + $z2 / (2.0 * neff)) / den AS center,
-           |    ($z / den) * sqrt(p * (1.0 - p) / neff
-           |      + $z2 / (4.0 * neff * neff)) AS half
-           |  FROM wil2),
-           |aand AS (
-           |  SELECT periode, type_resultaat, habitattype, sbzh, n_obs,
-           |    'aandeel_gunstig' AS parameter,
-           |    round(100.0 * swk / sw, 6) AS mean,
-           |    round(CASE WHEN swk = 0.0 OR swk = sw THEN 100.0 * p
-           |               ELSE 100.0 * greatest(0.0, center - half) END, 6) AS llci,
-           |    round(CASE WHEN swk = 0.0 OR swk = sw THEN 100.0 * p
-           |               ELSE 100.0 * least(1.0, center + half) END, 6) AS ulci,
-           |    CAST(NULL AS VARCHAR) AS klasse, CAST(NULL AS VARCHAR) AS periode_ref,
-           |    jaar_min, jaar_max, CAST(NULL AS DOUBLE) AS verschil_jaar
-           |  FROM wil3),
-           |vb0 AS (
-           |  SELECT *, sw * sw / sw2 AS neff, (swk2 - swk1) / sw AS md FROM agg),
-           |vb1 AS (
-           |  SELECT *, 100.0 * md AS d,
-           |    greatest((swb + swc) / sw - md * md, 0.0) AS vpop,
-           |    neff * (swk1 / sw) AS k1e, neff * (swk2 / sw) AS k2e,
-           |    neff * ((swb + swc) / sw) AS bce,
-           |    least(jmin1, jmin2) AS jaar_min, greatest(jmax1, jmax2) AS jaar_max,
-           |    CAST(CASE
-           |      WHEN 2 * ((sdj * 10) % n_obs) > n_obs THEN (sdj * 10) // n_obs + 1
-           |      WHEN 2 * ((sdj * 10) % n_obs) < n_obs THEN (sdj * 10) // n_obs
-           |      ELSE (sdj * 10) // n_obs + ((sdj * 10) // n_obs) % 2
-           |    END AS DOUBLE) / 10 AS vj
-           |  FROM vb0),
-           |vboth AS (
-           |  SELECT *, 100.0 * sqrt(vpop / neff) AS se,
-           |    sqrt(bce / (k1e * k2e)) AS se_ln
-           |  FROM vb1),
-           |vabs AS (
-           |  SELECT 'c_2' AS periode, type_resultaat, habitattype, sbzh, n_obs,
-           |    'verschil_aandeel_gunstig_abs' AS parameter,
-           |    round(d, 6) AS mean, round(d - $z * se, 6) AS llci,
-           |    round(d + $z * se, 6) AS ulci,
-           |    CAST(NULL AS VARCHAR) AS klasse, 'c_1' AS periode_ref,
-           |    jaar_min, jaar_max, vj AS verschil_jaar
-           |  FROM vboth),
-           |vabs2 AS (
-           |  SELECT periode, type_resultaat, habitattype, sbzh, n_obs, parameter,
-           |    mean, llci, ulci, ${klasseSql(12.0, 12.0)} AS klasse,
-           |    periode_ref, jaar_min, jaar_max, verschil_jaar
-           |  FROM vabs),
-           |vrel AS (
-           |  SELECT 'c_2' AS periode, type_resultaat, habitattype, sbzh, n_obs,
-           |    'verschil_aandeel_gunstig_rel' AS parameter,
-           |    CASE WHEN swk1 > 0.0
-           |         THEN round(100.0 * (swk2 - swk1) / swk1, 6) END AS mean,
-           |    CASE WHEN swk1 > 0.0 AND swk2 > 0.0
-           |         THEN round(100.0 * (exp(ln(swk2 / swk1)
-           |                - $z * se_ln) - 1.0), 6) END AS llci,
-           |    CASE WHEN swk1 > 0.0 AND swk2 > 0.0
-           |         THEN round(100.0 * (exp(ln(swk2 / swk1)
-           |                + $z * se_ln) - 1.0), 6) END AS ulci,
-           |    swk1, round(d - $z * se, 6) AS abs_llci,
-           |    jaar_min, jaar_max, vj
-           |  FROM vboth),
-           |vrel2 AS (
-           |  SELECT periode, type_resultaat, habitattype, sbzh, n_obs, parameter,
-           |    mean, llci, ulci,
-           |    CASE WHEN swk1 > 0.0 THEN ${klasseSql(25.0, 25.0)}
-           |         WHEN abs_llci > 0.0 THEN '++' ELSE '?' END AS klasse,
-           |    'c_1' AS periode_ref, jaar_min, jaar_max, vj AS verschil_jaar
-           |  FROM vrel)
-           |SELECT * FROM aand UNION ALL SELECT * FROM vabs2
-           |UNION ALL SELECT * FROM vrel2""".stripMargin
-  }
+  /** q129's visits replayed from [[cycleTrendInputs]] (`weighted`:
+    * q138's per-visit weight too), each numbered into its 6-year cycle
+    * from the subtype's first visit year like `assignCycles`. */
+  private def cyclePlotsCtes(weighted: Boolean): String =
+    s"""$statusBaseCte
+       |plots0 AS (
+       |  SELECT 'CY_' || ck AS id,
+       |    $forestTypeList[CAST(pt % 11 AS INTEGER) + 1] AS habitattype,
+       |    $forestTypeList[CAST(pt % 11 AS INTEGER) + 1] || '_s' || (pt % 3)
+       |      AS habitatsubtype,
+       |    'pt_' || pt AS point_code,
+       |    2010 + 3 * (ck % 5) AS mdate,
+       |    CASE WHEN pt % 3 < 2 THEN 1 ELSE 0 END AS in_sac,
+       |    CASE WHEN (ck * 5) % 3 = 0 THEN 'gunstig' ELSE 'ongunstig' END
+       |      AS lsvi${if (weighted) ",\n    ((2010 + 3 * (ck % 5) - 2010) // 3 + 1) * 0.25 AS w" else ""}
+       |  FROM base),
+       |y0 AS (
+       |  SELECT habitatsubtype, min(mdate) AS ys FROM plots0 GROUP BY 1),
+       |cycplots AS (
+       |  SELECT p.*, CAST(floor((p.mdate - y.ys) / 6) AS INTEGER) AS cyc
+       |  FROM plots0 p JOIN y0 y USING (habitatsubtype)),
+       |""".stripMargin
+
+  /** The latest visit's design weight with 2020 visits carrying
+    * +0.125, so a pick of an earlier visit's weight shows (q132,
+    * q135-q137). */
+  private val latestW2020: String =
+    """arg_max(w + CASE WHEN mdate = 2020 THEN 0.125 ELSE 0.0 END,
+      |            mdate || '|' || id) AS w""".stripMargin
+
+  /** The q116 pairing with [[latestW2020]]: first/latest visit ids per
+    * point (and, `inSac`, the latest in_sac), kept in `prs` where the
+    * point has two visit dates. */
+  private def weightedIdPairsCtes(inSac: Boolean): String =
+    s"""pairsAll AS (
+       |  SELECT habitattype, point_code,
+       |    arg_min(id, mdate || '|' || id) AS id_1,
+       |    arg_max(id, mdate || '|' || id) AS id_2,${if (inSac) "\n    arg_max(in_sac, mdate || '|' || id) AS in_sac," else ""}
+       |    $latestW2020,
+       |    count(DISTINCT mdate) AS nc
+       |  FROM plots GROUP BY 1, 2),
+       |prs AS (SELECT * FROM pairsAll WHERE nc > 1)""".stripMargin
 
   /** Shared oracle CTE prefix for q113-q115: replays [[statusInputs]]
     * and the latest-cycle-per-point selection in DuckDB (`mdate`, not
@@ -2938,14 +2662,10 @@ object LsviQueries {
     * key sorts exactly like the engine's `struct(date, id)`, so
     * same-date revisits break ties identically on both sides. */
   private def statusOracleCtes: String = {
-    val typeList = graft.lsvi.Versie3Forests.habitattypes
-      .map(sqlStr).mkString("[", ", ", "]")
-    s"""WITH base AS (
-       |  SELECT c_custkey AS ck, c_custkey // 2 AS pt
-       |  FROM customer WHERE (c_custkey * 3) % 7 <> 0),
+    s"""$statusBaseCte
        |plots AS (
        |  SELECT 'ST_' || ck AS id, ck, pt,
-       |    $typeList[CAST(pt % 11 AS INTEGER) + 1] AS habitattype,
+       |    $forestTypeList[CAST(pt % 11 AS INTEGER) + 1] AS habitattype,
        |    'pt_' || pt AS point_code,
        |    2010 + 10 * (ck % 2) AS mdate,
        |    CASE WHEN pt % 3 < 2 THEN 1 ELSE 0 END AS in_sac,
@@ -3099,42 +2819,16 @@ object LsviQueries {
        |  score_ref, score_max, met_classes, role, aggregate) AS (
        |  VALUES
        |   $ruleVals),
-       |d AS (
-       |  SELECT p.id, p.type_analysis, r.criterium, r.indicator, r.belang,
-       |    r.voorwaarde, r.role, r.aggregate,
-       |    m.value_numeric AS v, m.value_category AS cls,
-       |    COALESCE(m.ref_override, r.status_ref) AS sref,
-       |    COALESCE(m.ref_override, r.score_ref) AS cref,
-       |    r.score_max, r.op, r.met_classes
-       |  FROM plots p
-       |  JOIN r ON p.type_analysis = r.habitattype
-       |  LEFT JOIN m ON m.id = p.id AND m.voorwaarde = r.voorwaarde),
-       |d2 AS (
-       |  SELECT id, type_analysis, criterium, indicator, belang, voorwaarde,
-       |    role, aggregate,
-       |    CASE WHEN met_classes IS NOT NULL THEN
-       |           (CASE WHEN cls IS NOT NULL THEN list_contains(met_classes, cls) END)
-       |         WHEN op = '>=' THEN v >= sref
-       |         WHEN op = '>'  THEN v > sref
-       |         WHEN op = '<=' THEN v <= sref
-       |         ELSE v < sref END AS status_voorwaarde,
-       |    CASE WHEN v IS NULL OR cref IS NULL OR
-       |              (met_classes IS NOT NULL AND cls IS NULL) THEN NULL
-       |         ELSE greatest(-1.0, least(1.0,
-       |           CASE WHEN op IN ('>=', '>') THEN
-       |                  CASE WHEN v >= cref THEN
-       |                         (CASE WHEN score_max = cref THEN 1.0
-       |                               ELSE (v - cref) / (score_max - cref) END)
-       |                       WHEN cref <> 0 THEN (v - cref) / cref
-       |                       WHEN v = cref THEN 0.0 END
-       |                ELSE
-       |                  CASE WHEN v <= cref THEN
-       |                         (CASE WHEN cref = 0 THEN 1.0
-       |                               ELSE (cref - v) / cref END)
-       |                       ELSE (cref - v) / (score_max - cref) END
-       |           END)) END AS verschilscore
-       |  FROM d)
-       |""".stripMargin
+       |""".stripMargin +
+      versie3DetailCtes("""r.voorwaarde, r.role, r.aggregate,
+        |    m.value_numeric AS v, m.value_category AS cls,
+        |    COALESCE(m.ref_override, r.status_ref) AS sref,
+        |    COALESCE(m.ref_override, r.score_ref) AS cref,
+        |    r.score_max, r.op, r.met_classes""".stripMargin,
+      unscored = """v IS NULL OR cref IS NULL OR
+        |              (met_classes IS NOT NULL AND cls IS NULL)""".stripMargin,
+      classVerdict = Some("""WHEN met_classes IS NOT NULL THEN
+        |           (CASE WHEN cls IS NOT NULL THEN list_contains(met_classes, cls) END)""".stripMargin))
   }
 
   /** Shared CTE prefix for the forest oracle SQL: replays

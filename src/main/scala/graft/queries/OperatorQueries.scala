@@ -456,28 +456,16 @@ object OperatorQueries {
         .select(date_format(col("hour"), "yyyy-MM-dd HH:mm:ss").as("hour"),
           col("event_type"), col("n_events"), col("sum_value"))
     }, Some(
-      """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour,
-        | event_type,
-        | count(*) AS n_events,
-        | CAST(sum(CAST(round(value*100) AS BIGINT)) AS BIGINT)/100.0 AS sum_value
-        |FROM events GROUP BY 1, 2""".stripMargin)),
+      eventsHourlyOracleSql)),
 
     // ---- sessionization, batch twin of mapGroupsWithState (§2.9) ----
     Query("q30_user_sessions", (s, dir) =>
       Events.sessionCounts(t(s, dir, "events"), gapMinutes = 30),
-      Some("""SELECT user_id,
+      Some(s"""SELECT user_id,
         | CAST(max(session_seq) AS BIGINT) AS n_sessions,
         | count(*) AS n_events
         |FROM (
-        |  SELECT user_id,
-        |    sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                      ROWS UNBOUNDED PRECEDING) AS session_seq
-        |  FROM (
-        |    SELECT user_id, ts, event_id,
-        |      CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL THEN 1
-        |           WHEN epoch_us(ts) - epoch_us(lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)) > 1800000000 THEN 1
-        |           ELSE 0 END AS is_new
-        |    FROM events))
+        |${sessionSeqSql()})
         |GROUP BY user_id""".stripMargin)),
 
     // ---- regex field extraction from semi-structured props (§2.7) ----
@@ -515,20 +503,12 @@ object OperatorQueries {
           count(lit(1)).as("n_events"))
         .withColumn("session_seq", col("session_seq").cast("long"))
     }, Some(
-      """SELECT user_id, CAST(session_seq AS BIGINT) AS session_seq,
+      s"""SELECT user_id, CAST(session_seq AS BIGINT) AS session_seq,
         | min(epoch_us(ts)) AS start_us,
         | max(epoch_us(ts)) AS end_us,
         | count(*) AS n_events
         |FROM (
-        |  SELECT user_id, ts,
-        |    sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                      ROWS UNBOUNDED PRECEDING) AS session_seq
-        |  FROM (
-        |    SELECT user_id, ts, event_id,
-        |      CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL THEN 1
-        |           WHEN epoch_us(ts) - epoch_us(lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)) > 1800000000 THEN 1
-        |           ELSE 0 END AS is_new
-        |    FROM events))
+        |${sessionSeqSql(" ts,")})
         |GROUP BY user_id, session_seq""".stripMargin)),
 
     // ---- W4/W8 oracle gate (q146): group-wise any-flag kept on rows

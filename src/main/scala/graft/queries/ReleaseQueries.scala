@@ -465,39 +465,8 @@ object ReleaseQueries {
       // OracleConsistencySpec pins each shared fragment in lockstep with
       // its component oracle.
       s"""WITH ${pretrainReleaseChainSql()},
-        |ids AS (
-        |  SELECT release_id,
-        |    list_append(
-        |      list_transform(
-        |        CASE WHEN length(trim(text)) = 0 THEN []
-        |             ELSE string_split_regex(trim(text), '\\s+') END,
-        |        t -> CAST(('0x' || substr(md5(t), 1, 8)) AS BIGINT) % 4096),
-        |      4096) AS ids
-        |  FROM release),
-        |offs AS (
-        |  SELECT release_id, ids,
-        |    coalesce(sum(len(ids)) OVER (ORDER BY release_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS doc_off,
-        |    sum(len(ids)) OVER () AS total
-        |  FROM ids),
-        |toks AS (
-        |  SELECT doc_off + i AS gpos, ids[i + 1] AS tid, total
-        |  FROM (SELECT doc_off, ids, total, unnest(range(len(ids))) AS i
-        |        FROM offs) t),
-        |sh AS (
-        |  SELECT CAST((gpos // 64) // 16 AS BIGINT) AS shard_id, gpos, tid
-        |  FROM toks WHERE gpos < (total // 64) * 64),
-        |st AS (
-        |  SELECT shard_id, tid,
-        |    row_number() OVER (PARTITION BY shard_id ORDER BY gpos) AS rn
-        |  FROM sh)
-        |SELECT shard_id, CAST(count(*) // 64 AS BIGINT) AS n_seqs,
-        |  CAST(count(*) AS BIGINT) AS n_tokens,
-        |  CAST(sum(tid) AS BIGINT) AS token_sum,
-        |  CAST(CAST(sum(rn * (tid + 1)) AS HUGEINT) % 1000000007 AS BIGINT)
-        |    AS poly_mod,
-        |  true AS manifest_match
-        |FROM st GROUP BY 1""".stripMargin)),
+        |${tokenStreamCtes("release_id", "release")}
+        |$shardStatsSql""".stripMargin)),
 
     // ---- RELEASE DOC-SPAN SIDECAR (PretrainRelease.releaseDocSpansTo
     // — q225's masking metadata at the RELEASE grain: where each
@@ -612,32 +581,7 @@ object ReleaseQueries {
       // (bsh), then both drops run q219's stream tail — the delta's
       // shard ids offset to continue after drop 0's last file
       s"""WITH ${pretrainReleaseChainSql("doc_id % 97 <> 0 AND doc_id % 3 = 0")},
-        |a_ids AS (
-        |  SELECT release_id,
-        |    list_append(
-        |      list_transform(
-        |        CASE WHEN length(trim(text)) = 0 THEN []
-        |             ELSE string_split_regex(trim(text), '\\s+') END,
-        |        t -> CAST(('0x' || substr(md5(t), 1, 8)) AS BIGINT) % 4096),
-        |      4096) AS ids
-        |  FROM release),
-        |a_offs AS (
-        |  SELECT release_id, ids,
-        |    coalesce(sum(len(ids)) OVER (ORDER BY release_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS doc_off,
-        |    sum(len(ids)) OVER () AS total
-        |  FROM a_ids),
-        |a_toks AS (
-        |  SELECT doc_off + i AS gpos, ids[i + 1] AS tid, total
-        |  FROM (SELECT doc_off, ids, total, unnest(range(len(ids))) AS i
-        |        FROM a_offs) t),
-        |a_sh AS (
-        |  SELECT CAST((gpos // 64) // 16 AS BIGINT) AS shard_id, gpos, tid
-        |  FROM a_toks WHERE gpos < (total // 64) * 64),
-        |a_st AS (
-        |  SELECT shard_id, tid,
-        |    row_number() OVER (PARTITION BY shard_id ORDER BY gpos) AS rn
-        |  FROM a_sh),
+        |${tokenStreamCtes("release_id", "release", "a_")},
         |a_off AS (
         |  SELECT CASE WHEN coalesce(max(total), 0) // 64 = 0 THEN 0
         |              ELSE (coalesce(max(total), 0) // 64 - 1) // 16 + 1
@@ -672,32 +616,7 @@ object ReleaseQueries {
         |  SELECT doc_id, text FROM bfresh
         |  WHERE doc_id NOT IN (SELECT doc_id FROM bcont)),
         |brel AS (SELECT doc_id * 16 AS release_id, text FROM bclean),
-        |b_ids AS (
-        |  SELECT release_id,
-        |    list_append(
-        |      list_transform(
-        |        CASE WHEN length(trim(text)) = 0 THEN []
-        |             ELSE string_split_regex(trim(text), '\\s+') END,
-        |        t -> CAST(('0x' || substr(md5(t), 1, 8)) AS BIGINT) % 4096),
-        |      4096) AS ids
-        |  FROM brel),
-        |b_offs AS (
-        |  SELECT release_id, ids,
-        |    coalesce(sum(len(ids)) OVER (ORDER BY release_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS doc_off,
-        |    sum(len(ids)) OVER () AS total
-        |  FROM b_ids),
-        |b_toks AS (
-        |  SELECT doc_off + i AS gpos, ids[i + 1] AS tid, total
-        |  FROM (SELECT doc_off, ids, total, unnest(range(len(ids))) AS i
-        |        FROM b_offs) t),
-        |b_sh AS (
-        |  SELECT CAST((gpos // 64) // 16 + a_off.shard_off AS BIGINT) AS shard_id, gpos, tid
-        |  FROM b_toks, a_off WHERE gpos < (total // 64) * 64),
-        |b_st AS (
-        |  SELECT shard_id, tid,
-        |    row_number() OVER (PARTITION BY shard_id ORDER BY gpos) AS rn
-        |  FROM b_sh)
+        |${tokenStreamCtes("release_id", "brel", "b_", Some("a_off"))}
         |SELECT 0 AS drop_no, shard_id, CAST(count(*) AS BIGINT) AS n_tokens,
         |  CAST(sum(tid) AS BIGINT) AS token_sum,
         |  CAST(CAST(sum(rn * (tid + 1)) AS HUGEINT) % 1000000007 AS BIGINT)

@@ -65,9 +65,31 @@ object Shared {
   private[queries] def eventsStream(s: SparkSession, dir: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = Tables.observedSchema(s, dir, "events")
-    Tables.normalizeEventsTs(s, s.readStream.schema(schema)
+    Tables.normalizeEventsTs(s.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet").parquet(dir))
   }
+
+  /** q29's hourly event stats, shared verbatim by its streaming twin. */
+  private[queries] val eventsHourlyOracleSql: String =
+    """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour,
+      | event_type,
+      | count(*) AS n_events,
+      | CAST(sum(CAST(round(value*100) AS BIGINT)) AS BIGINT)/100.0 AS sum_value
+      |FROM events GROUP BY 1, 2""".stripMargin
+
+  /** q30's 30-minute-gap sessionization as a subquery body: each
+    * event's running session number per user in (ts, event_id) order,
+    * carrying the `outer` and `inner` extra columns. */
+  private[queries] def sessionSeqSql(outer: String = "", inner: String = ""): String =
+    s"""  SELECT user_id,$outer
+       |    sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
+       |                      ROWS UNBOUNDED PRECEDING) AS session_seq
+       |  FROM (
+       |    SELECT user_id, ts, event_id,$inner
+       |      CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL THEN 1
+       |           WHEN epoch_us(ts) - epoch_us(lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)) > 1800000000 THEN 1
+       |           ELSE 0 END AS is_new
+       |    FROM events)""".stripMargin
 
   /** round(x*10^s) as bigint — exact fixed-point per-row scaling. */
   private[graft] def cents(c: Column, scale: Int): Column =
@@ -91,6 +113,90 @@ object Shared {
 
   private[queries] def sqlStr(s: String) = "'" + s.replace("'", "''") + "'"
 
+  /** The CTE every embedding oracle opens with (no WITH): `vec_id` and
+    * the embedding widened to DOUBLE as `v`, `where` filtering rows. */
+  private[queries] def embeddingsCte(name: String = "e", where: String = ""): String =
+    s"$name AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v\n" +
+      s"           FROM embeddings$where)"
+
+  /** q147's Lloyd k-means replay as the CTE chain c0 → d0 → a0 → ex →
+    * upd → c1 → d1 → a1 over a CTE exposing (vec_id, v): centroids start
+    * at the `init`-selected rows of `train`, distances rank as floor'd
+    * micros with cid tiebreaks, the update sums 2^-20-snapped integer
+    * coordinates (order-independent, so both engines get bit-equal
+    * centroids), and d1/a1 assign every row of `src` with its distance.
+    * `n` names each CTE, so several chains compose in one WITH. */
+  private[queries] def lloydCtes(src: String, init: String,
+                                 train: Option[String] = None,
+                                 n: String => String = identity): String = {
+    val tr = train.getOrElse(src)
+    val Seq(c0, d0, a0, ex, upd, c1, d1, a1) =
+      Seq("c0", "d0", "a0", "ex", "upd", "c1", "d1", "a1").map(n)
+    s"""$c0 AS (SELECT vec_id AS cid, v AS cv FROM $tr $init),
+       |$d0 AS (SELECT $tr.vec_id, $c0.cid,
+       |         CAST(floor(list_sum(list_transform(list_zip($tr.v, $c0.cv),
+       |           p -> (p[1]-p[2])*(p[1]-p[2])))*1e6 + 0.5) AS BIGINT) AS dm
+       |       FROM $tr, $c0),
+       |$a0 AS (SELECT vec_id, cid FROM (
+       |         SELECT vec_id, cid,
+       |           row_number() OVER (PARTITION BY vec_id ORDER BY dm, cid) rk
+       |         FROM $d0) t
+       |       WHERE rk = 1),
+       |$ex AS (SELECT vec_id,
+       |         unnest(list_transform(v, (x, i) -> {'dim': i, 'x': x}),
+       |                recursive := true)
+       |       FROM $tr),
+       |$upd AS (SELECT $a0.cid, $ex.dim,
+       |          sum(CAST(floor($ex.x*1048576.0 + 0.5) AS BIGINT)) AS s,
+       |          count(*) AS n
+       |        FROM $ex JOIN $a0 USING (vec_id) GROUP BY 1, 2),
+       |$c1 AS (SELECT cid, list(s/(n*1048576.0) ORDER BY dim) AS cv
+       |       FROM $upd GROUP BY cid),
+       |$d1 AS (SELECT $src.vec_id, $c1.cid,
+       |         CAST(floor(list_sum(list_transform(list_zip($src.v, $c1.cv),
+       |           p -> (p[1]-p[2])*(p[1]-p[2])))*1e6 + 0.5) AS BIGINT) AS dm
+       |       FROM $src, $c1),
+       |$a1 AS (SELECT vec_id, cid, dm FROM (
+       |         SELECT vec_id, cid, dm,
+       |           row_number() OVER (PARTITION BY vec_id ORDER BY dm, cid) rk
+       |         FROM $d1) t
+       |       WHERE rk = 1)""".stripMargin
+  }
+
+  /** The k = 8 clustering that q147 checks and q148/q150/q155/q156 rank
+    * within (OracleConsistencySpec pins the five in lockstep). */
+  private[queries] val kmeansOracleCtes: String =
+    "WITH " + embeddingsCte() + ",\n" + lloydCtes("e", "WHERE vec_id < 8")
+
+  /** SemDeDup's ranking over [[kmeansOracleCtes]]: 2^-20-snapped
+    * coordinates `sv`, their exact squared norms `n2`, and each doc's
+    * (distance to its final centroid, id) rank within its cluster. */
+  private[queries] val semDedupRankCtes: String =
+    """sv AS (SELECT vec_id,
+      |         list_transform(v, x -> CAST(floor(x*1048576.0 + 0.5) AS BIGINT)) AS sv
+      |       FROM e),
+      |n2 AS (SELECT vec_id,
+      |         CAST(list_sum(list_transform(sv, x -> x*x)) AS BIGINT) AS n2
+      |       FROM sv),
+      |rnk AS (SELECT vec_id, cid,
+      |          row_number() OVER (PARTITION BY cid ORDER BY dm, vec_id) AS rk
+      |        FROM a1)""".stripMargin
+
+  /** q148's dup set: docs whose fixed-point cosine to a better-ranked
+    * cluster mate reaches 400000 micros (q155 gates on the same set). */
+  private[queries] val semDedupDupsCte: String =
+    """dups AS (SELECT DISTINCT y.vec_id
+      |         FROM rnk x JOIN rnk y ON x.cid = y.cid AND x.rk < y.rk
+      |         JOIN sv xs ON xs.vec_id = x.vec_id
+      |         JOIN sv ys ON ys.vec_id = y.vec_id
+      |         JOIN n2 xn ON xn.vec_id = x.vec_id
+      |         JOIN n2 yn ON yn.vec_id = y.vec_id
+      |         WHERE xn.n2 > 0 AND yn.n2 > 0
+      |           AND CAST(floor(CAST(list_sum(list_transform(
+      |                 list_zip(xs.sv, ys.sv), p -> p[1]*p[2])) AS DOUBLE)
+      |               / (sqrt(CAST(xn.n2 AS DOUBLE)) * sqrt(CAST(yn.n2 AS DOUBLE)))
+      |               * 1e6 + 0.5) AS BIGINT) >= 400000)""".stripMargin
+
   /** The m per-subspace Lloyd CTE chains (no WITH header) over any
     * source CTE exposing (vec_id, v) — `src = "e"` for q159/q160's
     * direct PQ, `src = "res"` for q162's residual PQ. */
@@ -112,49 +218,15 @@ object Shared {
       val lo = s0 * sub + 1; val hi = (s0 + 1) * sub
       // see ivfPqAdcCtes: train over `et_N` when trainPred is set,
       // final assignment (d1_N/a1_N) always over the full e_N
-      val tr = if (trainPred.isDefined) s"et_$s" else s"e_$s"
       val etCte = trainPred
         .map(p => s"et_$s AS (SELECT * FROM e_$s WHERE $p),\n").getOrElse("")
       val init = if (subsetInit) s"ORDER BY vec_id LIMIT $k" else s"WHERE vec_id < $k"
-      s"""e_$s AS (SELECT vec_id, v[$lo:$hi] AS v FROM $src),
-         |${etCte}c0_$s AS (SELECT vec_id AS cid, v AS cv FROM $tr $init),
-         |d0_$s AS (SELECT $tr.vec_id, c0_$s.cid,
-         |         CAST(floor(list_sum(list_transform(list_zip($tr.v, c0_$s.cv),
-         |           p -> (p[1]-p[2])*(p[1]-p[2])))*1e6 + 0.5) AS BIGINT) AS dm
-         |       FROM $tr, c0_$s),
-         |a0_$s AS (SELECT vec_id, cid FROM (
-         |         SELECT vec_id, cid,
-         |           row_number() OVER (PARTITION BY vec_id ORDER BY dm, cid) rk
-         |         FROM d0_$s) t
-         |       WHERE rk = 1),
-         |ex_$s AS (SELECT vec_id,
-         |         unnest(list_transform(v, (x, i) -> {'dim': i, 'x': x}),
-         |                recursive := true)
-         |       FROM $tr),
-         |upd_$s AS (SELECT a0_$s.cid, ex_$s.dim,
-         |          sum(CAST(floor(ex_$s.x*1048576.0 + 0.5) AS BIGINT)) AS s,
-         |          count(*) AS n
-         |        FROM ex_$s JOIN a0_$s USING (vec_id) GROUP BY 1, 2),
-         |c1_$s AS (SELECT cid, list(s/(n*1048576.0) ORDER BY dim) AS cv
-         |       FROM upd_$s GROUP BY cid),
-         |d1_$s AS (SELECT e_$s.vec_id, c1_$s.cid,
-         |         CAST(floor(list_sum(list_transform(list_zip(e_$s.v, c1_$s.cv),
-         |           p -> (p[1]-p[2])*(p[1]-p[2])))*1e6 + 0.5) AS BIGINT) AS dm
-         |       FROM e_$s, c1_$s),
-         |a1_$s AS (SELECT vec_id, cid, dm FROM (
-         |         SELECT vec_id, cid, dm,
-         |           row_number() OVER (PARTITION BY vec_id ORDER BY dm, cid) rk
-         |         FROM d1_$s) t
-         |       WHERE rk = 1)""".stripMargin
+      s"e_$s AS (SELECT vec_id, v[$lo:$hi] AS v FROM $src),\n" + etCte +
+        lloydCtes(s"e_$s", init, trainPred.map(_ => s"et_$s"), c => s"${c}_$s")
     }
     perSub.mkString(",\n")
   }
 
-  /** q200's oracle, shared verbatim by its streaming twin q205 (the
-    * q190/q196 convention: batch-identical single-micro-batch runs
-    * ride the batch oracle). The A/A split (even/odd event_id), the
-    * fixed-order transcendental term and the micros snap mirror
-    * `Drift.psiFromCounts` token for token. */
   /** The q100 admission-chain CTE block (corpus ∪ surviving batch docs
     * after quality floor → within-batch exact dedup → against-corpus
     * anti-join → decontamination), shared verbatim by the q100 replay
@@ -199,6 +271,11 @@ object Shared {
       |  SELECT doc_id, text, lang, source, n_chars FROM fresh
       |  WHERE doc_id NOT IN (SELECT doc_id FROM contaminated))""".stripMargin
 
+  /** q200's oracle, shared verbatim by its streaming twin q205 (the
+    * q190/q196 convention: batch-identical single-micro-batch runs
+    * ride the batch oracle). The A/A split (even/odd event_id), the
+    * fixed-order transcendental term and the micros snap mirror
+    * `Drift.psiFromCounts` token for token. */
   private[queries] val DriftPsiOracleSql: String =
     """WITH c AS (
       |  SELECT event_type,
@@ -220,53 +297,104 @@ object Shared {
       |  COALESCE(CAST(sum(term_micros) OVER () AS BIGINT), 0) >= 200000 AS drifted
       |FROM t""".stripMargin
 
-  /** q203's oracle: BOTH directional bounded-probe searches of the
-    * approximate bitext miner, each a full [[ivfPqAdcCtes]] two-level
-    * quantizer chain (prefixes `f`/`b`) trained on its own label-split
-    * corpus with the OTHER side as queries, ADC-shortlisted to
-    * `shortlist`, re-ranked by the exact cosine off the RAW float
-    * embeddings (q176's cosine text, same round/tie order as
-    * `Ann.ivfPqCosineTopK`), then q176's margin tail verbatim over
-    * the two approximate top-`k` lists. */
-  /** q219's shard-stream replay, shared VERBATIM with its byte-free
-    * twin q238: the stream is replayed arithmetically (gpos computed
-    * from cumulative doc costs, never from row order), cut at the
-    * complete-sequence boundary, and reduced per shard to count / sum
-    * / position-weighted polynomial mod 1e9+7. */
-  private[queries] val tokenShardsStreamOracleSql: String =
-    """WITH ids AS (
-      |  SELECT doc_id,
-      |    list_append(
-      |      list_transform(
-      |        CASE WHEN length(trim(text)) = 0 THEN []
-      |             ELSE string_split_regex(trim(text), '\s+') END,
-      |        t -> CAST(('0x' || substr(md5(t), 1, 8)) AS BIGINT) % 4096),
-      |      4096) AS ids
-      |  FROM documents),
-      |offs AS (
-      |  SELECT doc_id, ids,
-      |    coalesce(sum(len(ids)) OVER (ORDER BY doc_id
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS doc_off,
-      |    sum(len(ids)) OVER () AS total
-      |  FROM ids),
-      |toks AS (
-      |  SELECT doc_off + i AS gpos, ids[i + 1] AS tid, total
-      |  FROM (SELECT doc_off, ids, total, unnest(range(len(ids))) AS i
-      |        FROM offs) t),
-      |sh AS (
-      |  SELECT CAST((gpos // 64) // 16 AS BIGINT) AS shard_id, gpos, tid
-      |  FROM toks WHERE gpos < (total // 64) * 64),
-      |st AS (
-      |  SELECT shard_id, tid,
-      |    row_number() OVER (PARTITION BY shard_id ORDER BY gpos) AS rn
-      |  FROM sh)
-      |SELECT shard_id, CAST(count(*) // 64 AS BIGINT) AS n_seqs,
+  /** q219's stream replay as CTEs `<p>ids` .. `<p>st` over the
+    * (`key`, text) rows of `src`: md5-prefix token ids plus an EOS per
+    * doc, each doc's stream offset from the cumulative costs before it,
+    * the cut at the last complete 64-token sequence, and each token's
+    * rank inside its 16-sequence shard. `shardOff` names a CTE whose
+    * `shard_off` shifts the shard ids (q235's second drop). */
+  private[queries] def tokenStreamCtes(key: String, src: String, p: String = "",
+                                       shardOff: Option[String] = None): String =
+    s"""${p}ids AS (
+       |  SELECT $key,
+       |    list_append(
+       |      list_transform(
+       |        CASE WHEN length(trim(text)) = 0 THEN []
+       |             ELSE string_split_regex(trim(text), '\\s+') END,
+       |        t -> CAST(('0x' || substr(md5(t), 1, 8)) AS BIGINT) % 4096),
+       |      4096) AS ids
+       |  FROM $src),
+       |${p}offs AS (
+       |  SELECT $key, ids,
+       |    coalesce(sum(len(ids)) OVER (ORDER BY $key
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS doc_off,
+       |    sum(len(ids)) OVER () AS total
+       |  FROM ${p}ids),
+       |${p}toks AS (
+       |  SELECT doc_off + i AS gpos, ids[i + 1] AS tid, total
+       |  FROM (SELECT doc_off, ids, total, unnest(range(len(ids))) AS i
+       |        FROM ${p}offs) t),
+       |${p}sh AS (
+       |  SELECT CAST((gpos // 64) // 16${shardOff.map(o => s" + $o.shard_off").getOrElse("")} AS BIGINT) AS shard_id, gpos, tid
+       |  FROM ${p}toks${shardOff.map(", " + _).getOrElse("")} WHERE gpos < (total // 64) * 64),
+       |${p}st AS (
+       |  SELECT shard_id, tid,
+       |    row_number() OVER (PARTITION BY shard_id ORDER BY gpos) AS rn
+       |  FROM ${p}sh)""".stripMargin
+
+  /** Per-shard sequence/token counts, token sum and the position-
+    * weighted polynomial mod 1e9+7 over [[tokenStreamCtes]]'s `st`. */
+  private[queries] val shardStatsSql: String =
+    """SELECT shard_id, CAST(count(*) // 64 AS BIGINT) AS n_seqs,
       |  CAST(count(*) AS BIGINT) AS n_tokens,
       |  CAST(sum(tid) AS BIGINT) AS token_sum,
       |  CAST(CAST(sum(rn * (tid + 1)) AS HUGEINT) % 1000000007 AS BIGINT)
       |    AS poly_mod,
       |  true AS manifest_match
       |FROM st GROUP BY 1""".stripMargin
+
+  /** q219's shard-stream replay, shared VERBATIM with its byte-free
+    * twin q238: the stream is replayed arithmetically (gpos computed
+    * from cumulative doc costs, never from row order), cut at the
+    * complete-sequence boundary, and reduced per shard to count / sum
+    * / position-weighted polynomial mod 1e9+7. */
+  private[queries] val tokenShardsStreamOracleSql: String =
+    s"""WITH ${tokenStreamCtes("doc_id", "documents")}
+       |$shardStatsSql""".stripMargin
+
+  /** q81's benchmark-decontamination oracle: docs sharing a token
+    * 3-gram with the bench slice `doc_id % benchMod = 0` (q190/q196
+    * run the same semantics over the %89 split). */
+  private[queries] def decontaminationOracleSql(benchMod: Int): String =
+    s"""WITH docs AS (
+       |  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks FROM documents),
+       |sh AS (
+       |  SELECT doc_id,
+       |    CASE WHEN len(toks) <= 3 THEN [array_to_string(toks, ' ')]
+       |         ELSE list_transform(range(1, len(toks) - 3 + 2),
+       |                i -> array_to_string(toks[i:i+2], ' ')) END AS shingles
+       |  FROM docs),
+       |bench AS (SELECT DISTINCT unnest(shingles) AS shingle FROM sh WHERE doc_id % $benchMod = 0),
+       |train AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh WHERE doc_id % $benchMod <> 0)
+       |SELECT t.doc_id,
+       |  CAST(count(DISTINCT t.shingle) AS BIGINT) AS n_contaminated_ngrams
+       |FROM train t JOIN bench b USING (shingle)
+       |GROUP BY t.doc_id""".stripMargin
+
+  /** q184's incremental-dedup labeling: distinct base fingerprints,
+    * each delta doc's fingerprint and its min-id duplicate, then the
+    * status CASE in `Dedup.incrementalStatus`' branch order. `ws` is the
+    * whitespace regex the fingerprint collapses. q187/q217 pass
+    * `\\s+`, a regex for a backslash and then `s`s, so their oracle
+    * collapses no whitespace; they match q184 only while every
+    * document's inner whitespace is single spaces. */
+  private[queries] def incrementalDedupOracleSql(ws: String): String =
+    s"""WITH basefp AS (
+       |  SELECT DISTINCT md5(regexp_replace(lower(trim(text)), '$ws', ' ', 'g'))
+       |    AS fingerprint
+       |  FROM documents WHERE doc_id % 3 <> 0),
+       |delta AS (
+       |  SELECT doc_id,
+       |    md5(regexp_replace(lower(trim(text)), '$ws', ' ', 'g')) AS fingerprint,
+       |    min(doc_id) OVER (
+       |      PARTITION BY md5(regexp_replace(lower(trim(text)), '$ws', ' ', 'g')))
+       |      AS first_id
+       |  FROM documents WHERE doc_id % 3 = 0)
+       |SELECT d.doc_id, d.fingerprint,
+       |  CASE WHEN b.fingerprint IS NOT NULL THEN 'dup_of_base'
+       |       WHEN d.first_id <> d.doc_id THEN 'dup_in_delta'
+       |       ELSE 'new' END AS status
+       |FROM delta d LEFT JOIN basefp b ON d.fingerprint = b.fingerprint""".stripMargin
 
   /** Shared q162/q164 CTE chain: coarse Lloyd → residuals →
     * per-subspace PQ → probe → per-subspace ADC scores → `adc`. */
@@ -296,7 +424,6 @@ object Shared {
     // produces. With trainPred = None the emitted text is byte-
     // identical to the shared q162/q164/q169 chain
     // (OracleConsistencySpec pins that stability).
-    val tr = if (trainPred.isDefined) s"${P}et" else s"${P}e"
     val etCte = trainPred
       .map(p => s"${P}et AS (SELECT * FROM ${P}e WHERE $p),\n").getOrElse("")
     // q197's delete variant: the state is trained and the corpus coded
@@ -307,36 +434,9 @@ object Shared {
     val coarseInit =
       if (corpusPred.isDefined) s"ORDER BY vec_id LIMIT $kc"
       else s"WHERE vec_id < $kc"
-    val coarse =
-      s"""${etCte}${P}c0 AS (SELECT vec_id AS cid, v AS cv FROM $tr $coarseInit),
-         |${P}d0 AS (SELECT $tr.vec_id, ${P}c0.cid,
-         |         CAST(floor(list_sum(list_transform(list_zip($tr.v, ${P}c0.cv),
-         |           p -> (p[1]-p[2])*(p[1]-p[2])))*1e6 + 0.5) AS BIGINT) AS dm
-         |       FROM $tr, ${P}c0),
-         |${P}a0 AS (SELECT vec_id, cid FROM (
-         |         SELECT vec_id, cid,
-         |           row_number() OVER (PARTITION BY vec_id ORDER BY dm, cid) rk
-         |         FROM ${P}d0) t
-         |       WHERE rk = 1),
-         |${P}ex AS (SELECT vec_id,
-         |         unnest(list_transform(v, (x, i) -> {'dim': i, 'x': x}),
-         |                recursive := true)
-         |       FROM $tr),
-         |${P}upd AS (SELECT ${P}a0.cid, ${P}ex.dim,
-         |          sum(CAST(floor(${P}ex.x*1048576.0 + 0.5) AS BIGINT)) AS s,
-         |          count(*) AS n
-         |        FROM ${P}ex JOIN ${P}a0 USING (vec_id) GROUP BY 1, 2),
-         |${P}c1 AS (SELECT cid, list(s/(n*1048576.0) ORDER BY dim) AS cv
-         |       FROM ${P}upd GROUP BY cid),
-         |${P}d1 AS (SELECT ${P}e.vec_id, ${P}c1.cid,
-         |         CAST(floor(list_sum(list_transform(list_zip(${P}e.v, ${P}c1.cv),
-         |           p -> (p[1]-p[2])*(p[1]-p[2])))*1e6 + 0.5) AS BIGINT) AS dm
-         |       FROM ${P}e, ${P}c1),
-         |${P}a1 AS (SELECT vec_id, cid, dm FROM (
-         |         SELECT vec_id, cid, dm,
-         |           row_number() OVER (PARTITION BY vec_id ORDER BY dm, cid) rk
-         |         FROM ${P}d1) t
-         |       WHERE rk = 1),
+    val coarse = etCte +
+      lloydCtes(s"${P}e", coarseInit, trainPred.map(_ => s"${P}et"), P + _) +
+      s""",
          |${P}res AS (SELECT ${P}e.vec_id, ${P}a1.cid AS gcell,
          |          list_transform(list_zip(${P}e.v, ${P}c1.cv), p -> p[1]-p[2]) AS v
          |        FROM ${P}e JOIN ${P}a1 USING (vec_id) JOIN ${P}c1 ON ${P}a1.cid = ${P}c1.cid)""".stripMargin
@@ -357,12 +457,10 @@ object Shared {
       case None =>
         s"${P}q AS (SELECT vec_id AS query_id, v AS qv FROM ${P}e WHERE vec_id < $nQueries),"
       case Some(qp) =>
-        s"""${P}qe AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           |           FROM embeddings WHERE $qp),
+        s"""${embeddingsCte(s"${P}qe", s" WHERE $qp")},
            |${P}q AS (SELECT vec_id AS query_id, v AS qv FROM ${P}qe),""".stripMargin
     }
-    s"WITH ${P}e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v\n" +
-      s"           FROM embeddings$corpusWhere),\n" + coarse + ",\n" +
+    "WITH " + embeddingsCte(s"${P}e", corpusWhere) + ",\n" + coarse + ",\n" +
       pqSubCtes(m, k, dim, src = s"${P}res", trainPred = trainPred,
         pfx = P, subsetInit = corpusPred.isDefined) +
       s""",

@@ -36,11 +36,7 @@ object StreamingQueries {
         .select(date_format(col("hour"), "yyyy-MM-dd HH:mm:ss").as("hour"),
           col("event_type"), col("n_events"), col("sum_value"))
     }, Some(
-      """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour,
-        | event_type,
-        | count(*) AS n_events,
-        | CAST(sum(CAST(round(value*100) AS BIGINT)) AS BIGINT)/100.0 AS sum_value
-        |FROM events GROUP BY 1, 2""".stripMargin)),
+      eventsHourlyOracleSql)),
 
     // ---- stateful streaming: mapGroupsWithState sessionization run as
     // a real streaming query, oracle-checked against the batch window
@@ -56,17 +52,9 @@ object StreamingQueries {
       }
       s.table(sink).select(col("user_id"), col("n_sessions"))
     }, Some(
-      """SELECT user_id, CAST(max(session_seq) AS BIGINT) AS n_sessions
+      s"""SELECT user_id, CAST(max(session_seq) AS BIGINT) AS n_sessions
         |FROM (
-        |  SELECT user_id,
-        |    sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                      ROWS UNBOUNDED PRECEDING) AS session_seq
-        |  FROM (
-        |    SELECT user_id, ts, event_id,
-        |      CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL THEN 1
-        |           WHEN epoch_us(ts) - epoch_us(lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)) > 1800000000 THEN 1
-        |           ELSE 0 END AS is_new
-        |    FROM events))
+        |${sessionSeqSql()})
         |GROUP BY user_id""".stripMargin)),
 
     // ---- streaming exact-duplicate suppression twin: state bounded by
@@ -162,13 +150,7 @@ object StreamingQueries {
       // consecutive samples within a window (window starts excluded via
       // i % 256 = 0), peak = max |s|. A trailing odd byte is ignored
       // (octet_length // 2), zero-sample docs vanish on both sides.
-      """WITH m AS (SELECT doc_id, hex(encode(text)) AS h,
-        |             octet_length(encode(text)) // 2 AS n
-        |           FROM documents),
-        |sm AS (SELECT doc_id, i,
-        |         CAST(('0x' || substr(h, 4*i + 3, 2) || substr(h, 4*i + 1, 2))
-        |              AS INTEGER) AS v
-        |       FROM (SELECT doc_id, h, unnest(range(n)) AS i FROM m) t),
+      s"""$pcmSampleCtes,
         |sg AS (SELECT doc_id, i, i // 256 AS win,
         |         CASE WHEN v >= 32768 THEN v - 65536 ELSE v END AS s
         |       FROM sm),
@@ -229,20 +211,7 @@ object StreamingQueries {
     }, Some(
       // q196 = q190's exact semantics through the stateful streaming
       // path (single ordered micro-batch ⟹ batch-identical emissions)
-      """WITH docs AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |sh AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(toks) <= 3 THEN [array_to_string(toks, ' ')]
-        |         ELSE list_transform(range(1, len(toks) - 3 + 2),
-        |                i -> array_to_string(toks[i:i+2], ' ')) END AS shingles
-        |  FROM docs),
-        |bench AS (SELECT DISTINCT unnest(shingles) AS shingle FROM sh WHERE doc_id % 89 = 0),
-        |train AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh WHERE doc_id % 89 <> 0)
-        |SELECT t.doc_id,
-        |  CAST(count(DISTINCT t.shingle) AS BIGINT) AS n_contaminated_ngrams
-        |FROM train t JOIN bench b USING (shingle)
-        |GROUP BY t.doc_id""".stripMargin)),
+      decontaminationOracleSql(89))),
 
     // ---- STREAMING drift gate (streaming.DriftStream — q200's
     // stateful twin, the q187/q196 pattern): current-window events
@@ -306,7 +275,7 @@ object StreamingQueries {
     }, Some(
       // q187: the streaming twin's output equals the batch q184 exactly
       // (single ordered micro-batch) -> same oracle SQL.
-      ingestDedupStreamOracleSql)),
+      incrementalDedupOracleSql("""\\s+"""))),
 
     // ---- STREAMING JSONL shard-delivery ingest (q187's stateful
     // dedup admission fed by io.Jsonl.readStream — the continuous
@@ -353,7 +322,7 @@ object StreamingQueries {
       // value-invisible (q209's gate) and the planted corrupt line is
       // filtered before the state path, so the streamed-from-shards
       // labels must equal the streamed-from-parquet labels exactly.
-      ingestDedupStreamOracleSql)),
+      incrementalDedupOracleSql("""\\s+"""))),
 
     // ---- multimodal segment sampling: stride-aligned byte windows
     // over the binary media column (frame-sampling plumbing; ASCII
@@ -718,13 +687,7 @@ object StreamingQueries {
         .cosMicros(256, 4).mkString("[", ", ", "]")
       val sinList = graft.functions.MediaKernels.DftTables
         .sinMicros(256, 4).mkString("[", ", ", "]")
-      s"""WITH m AS (SELECT doc_id, hex(encode(text)) AS h,
-        |             octet_length(encode(text)) // 2 AS n
-        |           FROM documents),
-        |sm AS (SELECT doc_id, i,
-        |         CAST(('0x' || substr(h, 4*i + 3, 2) || substr(h, 4*i + 1, 2))
-        |              AS INTEGER) AS v
-        |       FROM (SELECT doc_id, h, unnest(range(n)) AS i FROM m) t),
+      s"""$pcmSampleCtes,
         |sg AS (SELECT doc_id, i // 256 AS win, CAST(i % 256 AS BIGINT) AS j,
         |         CASE WHEN v >= 32768 THEN v - 65536 ELSE v END AS s
         |       FROM sm),
@@ -742,24 +705,15 @@ object StreamingQueries {
     })
   )
 
-  /** The q187 incremental-dedup labeling chain, shared verbatim with
-    * q217 (the same admission semantics fed from JSONL shards — one
-    * builder, the twins cannot drift). */
-  private val ingestDedupStreamOracleSql: String =
-    """WITH basefp AS (
-      |  SELECT DISTINCT md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))
-      |    AS fingerprint
-      |  FROM documents WHERE doc_id % 3 <> 0),
-      |delta AS (
-      |  SELECT doc_id,
-      |    md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS fingerprint,
-      |    min(doc_id) OVER (
-      |      PARTITION BY md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')))
-      |      AS first_id
-      |  FROM documents WHERE doc_id % 3 = 0)
-      |SELECT d.doc_id, d.fingerprint,
-      |  CASE WHEN b.fingerprint IS NOT NULL THEN 'dup_of_base'
-      |       WHEN d.first_id <> d.doc_id THEN 'dup_in_delta'
-      |       ELSE 'new' END AS status
-      |FROM delta d LEFT JOIN basefp b ON d.fingerprint = b.fingerprint""".stripMargin
+  /** The int16 little-endian PCM samples `sm` (doc_id, i, v) of each
+    * document's bytes, re-parsed from hex(encode(text)) like q153's
+    * replay; a trailing odd byte is ignored. */
+  private val pcmSampleCtes: String =
+    """WITH m AS (SELECT doc_id, hex(encode(text)) AS h,
+      |             octet_length(encode(text)) // 2 AS n
+      |           FROM documents),
+      |sm AS (SELECT doc_id, i,
+      |         CAST(('0x' || substr(h, 4*i + 3, 2) || substr(h, 4*i + 1, 2))
+      |              AS INTEGER) AS v
+      |       FROM (SELECT doc_id, h, unnest(range(n)) AS i FROM m) t)""".stripMargin
 }

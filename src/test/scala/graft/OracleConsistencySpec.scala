@@ -6,13 +6,17 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * The synthetic indicator CTE (replaying `statusInputs`' `ind`
   * generation) appears in several oracles (q113/q116/q118/q120 and the
-  * weighted q133/q134/q135/q137) in exactly three value variants:
-  * boolean `status`, raw `vs` (k/1000), and the 1/1024-snapped `x`.
-  * The copies must stay in lockstep with each other AND with the Spark
-  * fixture — editing one without the others silently breaks a
-  * different query's hash parity. This spec normalizes every `ind AS
+  * weighted q133/q134/q135/q137). Every copy now comes from one
+  * builder, `LsviQueries.indCte`, in four value variants: boolean
+  * `status`, raw `vs` (k/1000), the 1e-6 fixed-point `x6` and the
+  * 1/1024-snapped `x`. The text must stay in lockstep with the Spark
+  * fixture — a change to the builder or to one variant silently breaks
+  * other queries' hash parity. This spec normalizes every `ind AS
   * (...)` block out of the generated oracle SQL and pins the distinct
-  * set to the three canonical variants.
+  * set to the four canonical variants. The other shared fragments it
+  * pins (the Lloyd chain, the quality formula, the release chain) are
+  * builders in `graft.queries.Shared` and the family objects too; the
+  * pins check the generated text, not the source.
   */
 class OracleConsistencySpec extends AnyFunSuite {
 
