@@ -314,7 +314,7 @@ object LsviQueries {
            |    count(*) AS n_obs, count(CASE WHEN status THEN 1 END) AS k
            |  FROM rows_ GROUP BY 1, 2, 3, 4, 5),
            |${wilsonCtes("agg")},
-           |${statusFinSql("habitattype, sbzh, criterium, indicator, belang", weighted = false, "wil2")}""".stripMargin
+           |${statusFinSql("habitattype, sbzh, criterium, indicator, belang", "wil2", countsShare, countsAllOrNone)}""".stripMargin
     }),
 
     Query("q114_index_hq", (s, dir) => {
@@ -470,7 +470,7 @@ object LsviQueries {
            |    count(CASE WHEN gn THEN 1 END) AS k
            |  FROM rows_ GROUP BY 1, 2),
            |${wilsonCtes("agg")},
-           |${statusFinSql("habitattype, sbzh", weighted = false, "wil2")}""".stripMargin
+           |${statusFinSql("habitattype, sbzh", "wil2", countsShare, countsAllOrNone)}""".stripMargin
     }),
 
     Query("q118_index_ind", (s, dir) => {
@@ -607,7 +607,7 @@ object LsviQueries {
       // (thresholds +-12pp abs / +-25% rel), year spans and the mean
       // revisit interval.
       statusOracleCtes.stripSuffix("\n") + ", " + trendPairsCte("plots", "mdate") +
-        trendHabitatOracleTail("nc > 1"))),
+        trendHabitatCountTail("nc > 1"))),
 
     Query("q122_status_beheer", (s, dir) => {
       val (meta, _) = statusInputs(s, dir)
@@ -685,7 +685,7 @@ object LsviQueries {
          |    CAST(sum(v * v) AS BIGINT) AS s2
          |  FROM latest GROUP BY 1, 2),
          |$continuousRollupSql
-         |${continuousSelectSql("gemiddelde", 2, weighted = false)}""".stripMargin
+         |${continuousSelectSql(fixedPointContinuousCols("gemiddelde", 2))}""".stripMargin
     }),
 
     Query("q126_trend_continuous", (s, dir) =>
@@ -709,7 +709,7 @@ object LsviQueries {
          |    CAST(sum(d * d) AS BIGINT) AS s2
          |  FROM pd GROUP BY 1, 2),
          |$continuousRollupSql
-         |${continuousSelectSql("verschil", 5, weighted = false)}""".stripMargin
+         |${continuousSelectSql(fixedPointContinuousCols("verschil", 5))}""".stripMargin
     }),
 
     // q140/q141: the design-weighted continuous estimators — the
@@ -739,7 +739,7 @@ object LsviQueries {
            |    sum(w * v) AS swv, sum(w * v * v) AS swv2
            |  FROM latestw GROUP BY 1, 2),
            |$continuousRollupWeightedSql
-           |${continuousSelectSql("gemiddelde", 2, weighted = true)}""".stripMargin))),
+           |${continuousSelectSql(weightedContinuousCols("gemiddelde", 2))}""".stripMargin))),
 
     Query("q141_trend_continuous_weighted", (s, dir) =>
       graft.lsvi.LsviStatus.trendContinuous(continuousInputs(s, dir),
@@ -763,7 +763,7 @@ object LsviQueries {
            |    sum(w * d) AS swv, sum(w * d * d) AS swv2
            |  FROM pdw GROUP BY 1, 2),
            |$continuousRollupWeightedSql
-           |${continuousSelectSql("verschil", 5, weighted = true)}""".stripMargin))),
+           |${continuousSelectSql(weightedContinuousCols("verschil", 5))}""".stripMargin))),
 
     Query("q127_status_area_census", (s, dir) =>
       graft.lsvi.LsviStatus.statusAreaCensus(censusPolys(s, dir, 1),
@@ -837,9 +837,9 @@ object LsviQueries {
       // require one visit in each of cycles 0 and 1, with the cycle
       // derived from each habitatsubtype's first visit year like
       // assignCycles (6-year windows).
-      cyclePlotsCtes(weighted = false) +
+      cyclePlotsCtes() +
         trendPairsCte("cycplots WHERE cyc IN (0, 1)", "cyc") +
-        trendHabitatOracleTail("nc = 2")
+        trendHabitatCountTail("nc = 2")
     }),
 
     // ---- design-weighted status estimators (LsviStatus under a
@@ -873,7 +873,7 @@ object LsviQueries {
            |e1 AS (
            |  SELECT *, sw * sw / sw2 AS neff, swk / sw AS p FROM agg),
            |${neffWilsonCtes("e1", "e2", "e3")},
-           |${statusFinSql("habitattype, sbzh", weighted = true, "e3")}""".stripMargin
+           |${statusFinSql("habitattype, sbzh", "e3", weightsShare, weightsAllOrNone)}""".stripMargin
     }),
 
     Query("q131_index_hq_weighted", (s, dir) => {
@@ -929,7 +929,7 @@ object LsviQueries {
       // the distributed aggregation is order-independent on both sides.
       statusOracleCtes.stripSuffix("\n") + ", " +
         trendPairsCte("plots", "mdate", Some(latestW2020)) +
-        trendHabitatOracleTail("nc > 1", weighted = true))),
+        trendHabitatWeightedTail("nc > 1"))),
 
     Query("q133_status_indicatoren_weighted", (s, dir) => {
       val (meta, ind) = statusInputs(s, dir)
@@ -955,7 +955,7 @@ object LsviQueries {
            |e1 AS (
            |  SELECT *, sw * sw / sw2 AS neff, swk / sw AS p FROM agg),
            |${neffWilsonCtes("e1", "e2", "e3")},
-           |${statusFinSql("habitattype, sbzh, criterium, indicator, belang", weighted = true, "e3")}""".stripMargin
+           |${statusFinSql("habitattype, sbzh, criterium, indicator, belang", "e3", weightsShare, weightsAllOrNone)}""".stripMargin
     }),
 
     Query("q134_index_ind_weighted", (s, dir) => {
@@ -1197,10 +1197,10 @@ object LsviQueries {
       Some {
       // q138: the q129 cycle-derived pairing CTEs with a per-visit
       // weight, feeding the weighted trend tail.
-      cyclePlotsCtes(weighted = true) +
+      cyclePlotsCtes(Some("((2010 + 3 * (ck % 5) - 2010) // 3 + 1) * 0.25 AS w")) +
         trendPairsCte("cycplots WHERE cyc IN (0, 1)", "cyc",
           Some("arg_max(w, mdate || '|' || id) AS w")) +
-        trendHabitatOracleTail("nc = 2", weighted = true)
+        trendHabitatWeightedTail("nc = 2")
     }),
 
     // ---- E2 publish round trip (q139): the LAST-MILE composition the
@@ -1462,9 +1462,11 @@ object LsviQueries {
        |      + $z2 / (4.0 * neff * neff)) AS half
        |  FROM $den)""".stripMargin
 
-  /** The all-or-none guards of the Wilson bounds: plain counts, Hájek
-    * weight sums. */
+  /** The share in percent and the all-or-none guard of the Wilson
+    * bounds: plain counts, Hájek weight sums. */
+  private val countsShare = "100.0 * CAST(k AS DOUBLE) / n_obs"
   private val countsAllOrNone = "k = 0 OR k = n_obs"
+  private val weightsShare = "100.0 * swk / sw"
   private val weightsAllOrNone = "swk = 0.0 OR swk = sw"
 
   /** The Wilson bounds in percent as SELECT-list lines, clamped to
@@ -1477,14 +1479,11 @@ object LsviQueries {
        |    round(CASE WHEN $allOrNone THEN 100.0 * p
        |               ELSE 100.0 * least(1.0, center + half) END, 6)${sep}AS $ulci""".stripMargin
 
-  /** The status shape's `fin` over the Wilson CTE `src` (count or, if
-    * `weighted`, Hájek shares) and the 75 % beoordeling verdict: Goed
-    * when the lower bound reaches 75, Niet goed when the upper bound
-    * stays below, Onbekend otherwise. */
-  private def statusFinSql(cols: String, weighted: Boolean, src: String): String = {
-    val (share, allOrNone) =
-      if (weighted) ("100.0 * swk / sw", weightsAllOrNone)
-      else ("100.0 * CAST(k AS DOUBLE) / n_obs", countsAllOrNone)
+  /** The status shape's `fin` over the Wilson CTE `src` (`share` and
+    * `allOrNone` from the pairs above) and the 75 % beoordeling verdict:
+    * Goed when the lower bound reaches 75, Niet goed when the upper
+    * bound stays below, Onbekend otherwise. */
+  private def statusFinSql(cols: String, src: String, share: String, allOrNone: String): String =
     s"""fin AS (
        |  SELECT $cols, n_obs,
        |    round($share, 6) AS aandeel_gunstig,
@@ -1494,7 +1493,6 @@ object LsviQueries {
        |               WHEN aandeel_gunstig_ulci < 75 THEN 'Niet goed'
        |               ELSE 'Onbekend' END AS beoordeling
        |FROM fin""".stripMargin
-  }
 
   /** The sbzh stratum column over the `<g>(g)` cross join: pooled
     * 'Binnen & Buiten' for g = 1, else the SAC stratum of `inSac`. */
@@ -2372,38 +2370,44 @@ object LsviQueries {
       |  SELECT 'Habitattype', habitattype, subs, rn, rsw, rsw2, rswv, rswv2
       |  FROM multi WHERE nsub > 1)""".stripMargin
 
-  /** The q125/q126 SELECT over `allr` (q140/q141 if `weighted`): the
-    * mean and its z975 interval from `minN` observations, each with the
-    * EXACT float shape of `LsviStatus.continuousShape`. Unweighted:
-    * 1e-4 fixed-point sums and the sample sd. Weighted: m = swv/sw/1e4;
-    * vpop = greatest(swv2/sw/1e8 − m², 0); h = z·sqrt(vpop/(n_eff − 1));
-    * positive fixture weights with n > 1 give n_eff > 1 strictly, so no
-    * zero-division guard is needed on either side. */
-  private def continuousSelectSql(meanCol: String, minN: Int, weighted: Boolean): String = {
-    val cols = if (weighted) {
-      val m = "swv / sw / 10000.0"
-      val h = s"$z * sqrt(greatest(swv2 / sw / 1.0e8 - ($m) * ($m), 0.0) / " +
-        "(sw * sw / sw2 - 1.0))"
-      s"""  round($m, 6) AS $meanCol,
-         |  CASE WHEN n >= $minN THEN round($m - $h, 6) END AS ${meanCol}_llci,
-         |  CASE WHEN n >= $minN THEN round($m + $h, 6) END AS ${meanCol}_ulci""".stripMargin
-    } else {
-      val m = "CAST(s1 AS DOUBLE) / n / 10000.0"
-      def bound(op: String) =
-        s"""CASE WHEN n >= $minN THEN round($m $op
-           |    $z * (sqrt(greatest((CAST(s2 AS DOUBLE) -
-           |      CAST(s1 AS DOUBLE) * s1 / n) / (n - 1), 0.0)) / 10000.0) /
-           |    sqrt(n), 6) END""".stripMargin
-      s"""  round($m, 6) AS $meanCol,
-         |  ${bound("-")} AS ${meanCol}_llci,
-         |  ${bound("+")} AS ${meanCol}_ulci""".stripMargin
-    }
+  /** The continuous shapes' output SELECT over `allr`, with `stats`
+    * the mean and interval columns of one of the two builders below. */
+  private def continuousSelectSql(stats: String): String =
     s"""SELECT type_resultaat, habitattype, habitatsubtype,
        |  'Binnen & Buiten' AS sbzh, n AS n_obs,
-       |$cols,
+       |$stats,
        |  'hoeveelheid dik dood hout' AS indicator,
        |  'aantal exemplaren dik dood hout per ha' AS voorwaarde
        |FROM allr""".stripMargin
+
+  /** q125/q126: the mean `meanCol` and its z975 interval from `minN`
+    * observations in the EXACT float shape of the unweighted
+    * `LsviStatus.continuousShape`: 1e-4 fixed-point sums and the
+    * sample sd. */
+  private def fixedPointContinuousCols(meanCol: String, minN: Int): String = {
+    val m = "CAST(s1 AS DOUBLE) / n / 10000.0"
+    def bound(op: String) =
+      s"""CASE WHEN n >= $minN THEN round($m $op
+         |    $z * (sqrt(greatest((CAST(s2 AS DOUBLE) -
+         |      CAST(s1 AS DOUBLE) * s1 / n) / (n - 1), 0.0)) / 10000.0) /
+         |    sqrt(n), 6) END""".stripMargin
+    s"""  round($m, 6) AS $meanCol,
+       |  ${bound("-")} AS ${meanCol}_llci,
+       |  ${bound("+")} AS ${meanCol}_ulci""".stripMargin
+  }
+
+  /** q140/q141: the design-weighted mean and interval in the EXACT float
+    * shape of the weighted `LsviStatus.continuousShape`: m = swv/sw/1e4;
+    * vpop = greatest(swv2/sw/1e8 − m², 0); h = z·sqrt(vpop/(n_eff − 1));
+    * positive fixture weights with n > 1 give n_eff > 1 strictly, so no
+    * zero-division guard is needed on either side. */
+  private def weightedContinuousCols(meanCol: String, minN: Int): String = {
+    val m = "swv / sw / 10000.0"
+    val h = s"$z * sqrt(greatest(swv2 / sw / 1.0e8 - ($m) * ($m), 0.0) / " +
+      "(sw * sw / sw2 - 1.0))"
+    s"""  round($m, 6) AS $meanCol,
+       |  CASE WHEN n >= $minN THEN round($m - $h, 6) END AS ${meanCol}_llci,
+       |  CASE WHEN n >= $minN THEN round($m + $h, 6) END AS ${meanCol}_ulci""".stripMargin
   }
 
   /** One census cycle for the q127/q128 oracles: polygons, the
@@ -2451,113 +2455,16 @@ object LsviQueries {
        |     WHEN coalesce(ulci, mean) <= $th THEN '?-'
        |     ELSE '?' END""".stripMargin.replace("\n", " ").replaceAll(" +", " ")
 
-  /** The trend_habitat oracle tail, from the `pairs` flags to the four
-    * published row families (q121/q129; `weighted`: q132/q138, whose
-    * `pairs` also carry the latest visit's design weight `w`).
-    * `ncPred` is the pairing filter (`nc > 1` visit-based, `nc = 2`
-    * cycle-based). The weighted tail mirrors
-    * [[graft.lsvi.LsviStatus.trendHabitat]] under a weight: Hájek
-    * shares, Kish-n_eff Wilson/Wald intervals, an effective-count
-    * log-ratio interval; the year columns stay unweighted. */
-  private def trendHabitatOracleTail(ncPred: String, weighted: Boolean = false): String = {
-    val vj =
-      """CAST(CASE
-        |      WHEN 2 * ((sdj * 10) % n_obs) > n_obs THEN (sdj * 10) // n_obs + 1
-        |      WHEN 2 * ((sdj * 10) % n_obs) < n_obs THEN (sdj * 10) // n_obs
-        |      ELSE (sdj * 10) // n_obs + ((sdj * 10) // n_obs) % 2
-        |    END AS DOUBLE) / 10 AS vj""".stripMargin
-    def aand(mean: String, allOrNone: String, src: String) =
-      s"""aand AS (
-         |  SELECT periode, type_resultaat, habitattype, sbzh, n_obs,
-         |    'aandeel_gunstig' AS parameter,
-         |    round($mean, 6) AS mean,
-         |${wilsonPctBounds(allOrNone, "llci", "ulci", " ")},
-         |    CAST(NULL AS VARCHAR) AS klasse, CAST(NULL AS VARCHAR) AS periode_ref,
-         |    jaar_min, jaar_max, CAST(NULL AS DOUBLE) AS verschil_jaar
-         |  FROM $src)""".stripMargin
-    val (sums, shares, diffs, rel, relGuard) = if (weighted) (
-      """    sum(w) AS sw, sum(w * w) AS sw2,
-        |    sum(CASE WHEN g1 THEN w ELSE 0.0 END) AS swk1,
-        |    sum(CASE WHEN g2 THEN w ELSE 0.0 END) AS swk2,
-        |    sum(CASE WHEN g1 AND NOT g2 THEN w ELSE 0.0 END) AS swb,
-        |    sum(CASE WHEN NOT g1 AND g2 THEN w ELSE 0.0 END) AS swc,""".stripMargin,
-      s"""acyc AS (
-         |  SELECT 'c_1' AS periode, type_resultaat, habitattype, sbzh, n_obs,
-         |    sw, sw2, swk1 AS swk, jmin1 AS jaar_min, jmax1 AS jaar_max
-         |  FROM agg
-         |  UNION ALL
-         |  SELECT 'c_2', type_resultaat, habitattype, sbzh, n_obs,
-         |    sw, sw2, swk2, jmin2, jmax2 FROM agg),
-         |wil AS (
-         |  SELECT *, sw * sw / sw2 AS neff, swk / sw AS p FROM acyc),
-         |${neffWilsonCtes("wil", "wil2", "wil3")},
-         |${aand("100.0 * swk / sw", weightsAllOrNone, "wil3")}""".stripMargin,
-      s"""vb0 AS (
-         |  SELECT *, sw * sw / sw2 AS neff, (swk2 - swk1) / sw AS md FROM agg),
-         |vb1 AS (
-         |  SELECT *, 100.0 * md AS d,
-         |    greatest((swb + swc) / sw - md * md, 0.0) AS vpop,
-         |    neff * (swk1 / sw) AS k1e, neff * (swk2 / sw) AS k2e,
-         |    neff * ((swb + swc) / sw) AS bce,
-         |    least(jmin1, jmin2) AS jaar_min, greatest(jmax1, jmax2) AS jaar_max,
-         |    $vj
-         |  FROM vb0),
-         |vboth AS (
-         |  SELECT *, 100.0 * sqrt(vpop / neff) AS se,
-         |    sqrt(bce / (k1e * k2e)) AS se_ln
-         |  FROM vb1)""".stripMargin,
-      s"""    CASE WHEN swk1 > 0.0
-         |         THEN round(100.0 * (swk2 - swk1) / swk1, 6) END AS mean,
-         |    CASE WHEN swk1 > 0.0 AND swk2 > 0.0
-         |         THEN round(100.0 * (exp(ln(swk2 / swk1)
-         |                - $z * se_ln) - 1.0), 6) END AS llci,
-         |    CASE WHEN swk1 > 0.0 AND swk2 > 0.0
-         |         THEN round(100.0 * (exp(ln(swk2 / swk1)
-         |                + $z * se_ln) - 1.0), 6) END AS ulci,
-         |    swk1, round(d - $z * se, 6) AS abs_llci,""".stripMargin,
-      "swk1 > 0.0")
-    else (
-      """    count(CASE WHEN g1 THEN 1 END) AS k1,
-        |    count(CASE WHEN g2 THEN 1 END) AS k2,
-        |    count(CASE WHEN g1 AND NOT g2 THEN 1 END) AS b,
-        |    count(CASE WHEN NOT g1 AND g2 THEN 1 END) AS c,""".stripMargin,
-      s"""acyc AS (
-         |  SELECT 'c_1' AS periode, type_resultaat, habitattype, sbzh, n_obs,
-         |    k1 AS k, jmin1 AS jaar_min, jmax1 AS jaar_max FROM agg
-         |  UNION ALL
-         |  SELECT 'c_2', type_resultaat, habitattype, sbzh, n_obs,
-         |    k2, jmin2, jmax2 FROM agg),
-         |${wilsonCtes("acyc")},
-         |${aand("100.0 * p", countsAllOrNone, "wil2")}""".stripMargin,
-      s"""vboth AS (
-         |  SELECT *,
-         |    100.0 * (CAST(k2 AS DOUBLE) - k1) / n_obs AS d,
-         |    100.0 * sqrt(b + c - pow(CAST(b AS DOUBLE) - c, 2) / n_obs) / n_obs AS se,
-         |    least(jmin1, jmin2) AS jaar_min, greatest(jmax1, jmax2) AS jaar_max,
-         |    -- half-even to 1 decimal like the engine's bround (DuckDB
-         |    -- round() is half-away-from-zero on doubles): integer
-         |    -- half-even of the exact rational sdj*10/n_obs, which the
-         |    -- correctly-rounded IEEE division makes identical to
-         |    -- Spark's decimal-string HALF_EVEN (sdj >= 0 by pairing)
-         |    $vj
-         |  FROM agg)""".stripMargin,
-      s"""    CASE WHEN k1 > 0
-         |         THEN round(100.0 * (CAST(k2 AS DOUBLE) - k1) / k1, 6) END AS mean,
-         |    CASE WHEN k1 > 0 AND k2 > 0
-         |         THEN round(100.0 * (exp(ln(CAST(k2 AS DOUBLE) / k1)
-         |                - $z * sqrt((b + c) / (CAST(k1 AS DOUBLE) * k2))) - 1.0), 6)
-         |         END AS llci,
-         |    CASE WHEN k1 > 0 AND k2 > 0
-         |         THEN round(100.0 * (exp(ln(CAST(k2 AS DOUBLE) / k1)
-         |                + $z * sqrt((b + c) / (CAST(k1 AS DOUBLE) * k2))) - 1.0), 6)
-         |         END AS ulci,
-         |    k1, round(d - $z * se, 6) AS abs_llci,""".stripMargin,
-      "k1 > 0")
+  /** The trend_habitat tails' `rows_`/`agg` frame: the `pairs` that pass
+    * `ncPred` (`nc > 1` visit-based, `nc = 2` cycle-based) in both
+    * stratum families with `rowCols` carried along, and per stratum the
+    * estimator's `sums` beside n_obs and the year spans. */
+  private def trendAggCtes(ncPred: String, rowCols: String, sums: String): String =
     s"""rows_ AS (
        |  SELECT habitattype,
        |    CASE WHEN g.g = 0 THEN 'SBZH' ELSE 'Habitattype' END AS type_resultaat,
        |${sbzhCase("in_sac")},
-       |    g1, g2, j1, j2${if (weighted) ", w" else ""}
+       |    g1, g2, j1, j2$rowCols
        |  FROM pairs CROSS JOIN (VALUES (0),(1)) g(g) WHERE $ncPred),
        |agg AS (
        |  SELECT type_resultaat, habitattype, sbzh, count(*) AS n_obs,
@@ -2565,10 +2472,35 @@ object LsviQueries {
        |    min(j1) AS jmin1, max(j1) AS jmax1,
        |    min(j2) AS jmin2, max(j2) AS jmax2,
        |    sum(j2 - j1) AS sdj
-       |  FROM rows_ GROUP BY 1, 2, 3),
-       |$shares,
-       |$diffs,
-       |vabs AS (
+       |  FROM rows_ GROUP BY 1, 2, 3)""".stripMargin
+
+  /** The mean revisit interval sdj / n_obs, half-even to one decimal. */
+  private val trendVjCol: String =
+    """CAST(CASE
+      |      WHEN 2 * ((sdj * 10) % n_obs) > n_obs THEN (sdj * 10) // n_obs + 1
+      |      WHEN 2 * ((sdj * 10) % n_obs) < n_obs THEN (sdj * 10) // n_obs
+      |      ELSE (sdj * 10) // n_obs + ((sdj * 10) // n_obs) % 2
+      |    END AS DOUBLE) / 10 AS vj""".stripMargin
+
+  /** The per-cycle `aand` rows over the Wilson CTE `src`: the share
+    * `mean` in percent with its clamped bounds. */
+  private def trendAandCte(mean: String, allOrNone: String, src: String): String =
+    s"""aand AS (
+       |  SELECT periode, type_resultaat, habitattype, sbzh, n_obs,
+       |    'aandeel_gunstig' AS parameter,
+       |    round($mean, 6) AS mean,
+       |${wilsonPctBounds(allOrNone, "llci", "ulci", " ")},
+       |    CAST(NULL AS VARCHAR) AS klasse, CAST(NULL AS VARCHAR) AS periode_ref,
+       |    jaar_min, jaar_max, CAST(NULL AS DOUBLE) AS verschil_jaar
+       |  FROM $src)""".stripMargin
+
+  /** The two change row families over `vboth` (d, se, vj) and the final
+    * union with `aand`: the absolute difference d ± z·se on the ±12pp
+    * ladder, and the relative change (`rel`: its mean, llci and ulci,
+    * the guard's base column and abs_llci) on the ±25 % ladder where
+    * `relGuard` holds, else by the sign of abs_llci. */
+  private def trendChangeSql(rel: String, relGuard: String): String =
+    s"""vabs AS (
        |  SELECT 'c_2' AS periode, type_resultaat, habitattype, sbzh, n_obs,
        |    'verschil_aandeel_gunstig_abs' AS parameter,
        |    round(d, 6) AS mean, round(d - $z * se, 6) AS llci,
@@ -2596,6 +2528,102 @@ object LsviQueries {
        |  FROM vrel)
        |SELECT * FROM aand UNION ALL SELECT * FROM vabs2
        |UNION ALL SELECT * FROM vrel2""".stripMargin
+
+  /** q121/q129's trend_habitat tail from the `pairs` flags (`ncPred` as
+    * in [[trendAggCtes]]): per-cycle count shares with Wilson bounds,
+    * the paired-Wald absolute difference and the log-ratio-delta
+    * relative change, as [[graft.lsvi.LsviStatus.trendHabitat]]. */
+  private def trendHabitatCountTail(ncPred: String): String = {
+    val sums =
+      """    count(CASE WHEN g1 THEN 1 END) AS k1,
+        |    count(CASE WHEN g2 THEN 1 END) AS k2,
+        |    count(CASE WHEN g1 AND NOT g2 THEN 1 END) AS b,
+        |    count(CASE WHEN NOT g1 AND g2 THEN 1 END) AS c,""".stripMargin
+    val rel =
+      s"""    CASE WHEN k1 > 0
+         |         THEN round(100.0 * (CAST(k2 AS DOUBLE) - k1) / k1, 6) END AS mean,
+         |    CASE WHEN k1 > 0 AND k2 > 0
+         |         THEN round(100.0 * (exp(ln(CAST(k2 AS DOUBLE) / k1)
+         |                - $z * sqrt((b + c) / (CAST(k1 AS DOUBLE) * k2))) - 1.0), 6)
+         |         END AS llci,
+         |    CASE WHEN k1 > 0 AND k2 > 0
+         |         THEN round(100.0 * (exp(ln(CAST(k2 AS DOUBLE) / k1)
+         |                + $z * sqrt((b + c) / (CAST(k1 AS DOUBLE) * k2))) - 1.0), 6)
+         |         END AS ulci,
+         |    k1, round(d - $z * se, 6) AS abs_llci,""".stripMargin
+    s"""${trendAggCtes(ncPred, "", sums)},
+       |acyc AS (
+       |  SELECT 'c_1' AS periode, type_resultaat, habitattype, sbzh, n_obs,
+       |    k1 AS k, jmin1 AS jaar_min, jmax1 AS jaar_max FROM agg
+       |  UNION ALL
+       |  SELECT 'c_2', type_resultaat, habitattype, sbzh, n_obs,
+       |    k2, jmin2, jmax2 FROM agg),
+       |${wilsonCtes("acyc")},
+       |${trendAandCte("100.0 * p", countsAllOrNone, "wil2")},
+       |vboth AS (
+       |  SELECT *,
+       |    100.0 * (CAST(k2 AS DOUBLE) - k1) / n_obs AS d,
+       |    100.0 * sqrt(b + c - pow(CAST(b AS DOUBLE) - c, 2) / n_obs) / n_obs AS se,
+       |    least(jmin1, jmin2) AS jaar_min, greatest(jmax1, jmax2) AS jaar_max,
+       |    -- half-even to 1 decimal like the engine's bround (DuckDB
+       |    -- round() is half-away-from-zero on doubles): integer
+       |    -- half-even of the exact rational sdj*10/n_obs, which the
+       |    -- correctly-rounded IEEE division makes identical to
+       |    -- Spark's decimal-string HALF_EVEN (sdj >= 0 by pairing)
+       |    $trendVjCol
+       |  FROM agg),
+       |${trendChangeSql(rel, "k1 > 0")}""".stripMargin
+  }
+
+  /** q132/q138's trend_habitat tail: the count tail's shape under the
+    * latest visit's design weight `w` carried by `pairs`, as
+    * [[graft.lsvi.LsviStatus.trendHabitat]] with a weight: Hájek
+    * shares, Kish-n_eff Wilson/Wald intervals, an effective-count
+    * log-ratio interval; the year columns stay unweighted. */
+  private def trendHabitatWeightedTail(ncPred: String): String = {
+    val sums =
+      """    sum(w) AS sw, sum(w * w) AS sw2,
+        |    sum(CASE WHEN g1 THEN w ELSE 0.0 END) AS swk1,
+        |    sum(CASE WHEN g2 THEN w ELSE 0.0 END) AS swk2,
+        |    sum(CASE WHEN g1 AND NOT g2 THEN w ELSE 0.0 END) AS swb,
+        |    sum(CASE WHEN NOT g1 AND g2 THEN w ELSE 0.0 END) AS swc,""".stripMargin
+    val rel =
+      s"""    CASE WHEN swk1 > 0.0
+         |         THEN round(100.0 * (swk2 - swk1) / swk1, 6) END AS mean,
+         |    CASE WHEN swk1 > 0.0 AND swk2 > 0.0
+         |         THEN round(100.0 * (exp(ln(swk2 / swk1)
+         |                - $z * se_ln) - 1.0), 6) END AS llci,
+         |    CASE WHEN swk1 > 0.0 AND swk2 > 0.0
+         |         THEN round(100.0 * (exp(ln(swk2 / swk1)
+         |                + $z * se_ln) - 1.0), 6) END AS ulci,
+         |    swk1, round(d - $z * se, 6) AS abs_llci,""".stripMargin
+    s"""${trendAggCtes(ncPred, ", w", sums)},
+       |acyc AS (
+       |  SELECT 'c_1' AS periode, type_resultaat, habitattype, sbzh, n_obs,
+       |    sw, sw2, swk1 AS swk, jmin1 AS jaar_min, jmax1 AS jaar_max
+       |  FROM agg
+       |  UNION ALL
+       |  SELECT 'c_2', type_resultaat, habitattype, sbzh, n_obs,
+       |    sw, sw2, swk2, jmin2, jmax2 FROM agg),
+       |wil AS (
+       |  SELECT *, sw * sw / sw2 AS neff, swk / sw AS p FROM acyc),
+       |${neffWilsonCtes("wil", "wil2", "wil3")},
+       |${trendAandCte(weightsShare, weightsAllOrNone, "wil3")},
+       |vb0 AS (
+       |  SELECT *, sw * sw / sw2 AS neff, (swk2 - swk1) / sw AS md FROM agg),
+       |vb1 AS (
+       |  SELECT *, 100.0 * md AS d,
+       |    greatest((swb + swc) / sw - md * md, 0.0) AS vpop,
+       |    neff * (swk1 / sw) AS k1e, neff * (swk2 / sw) AS k2e,
+       |    neff * ((swb + swc) / sw) AS bce,
+       |    least(jmin1, jmin2) AS jaar_min, greatest(jmax1, jmax2) AS jaar_max,
+       |    $trendVjCol
+       |  FROM vb0),
+       |vboth AS (
+       |  SELECT *, 100.0 * sqrt(vpop / neff) AS se,
+       |    sqrt(bce / (k1e * k2e)) AS se_ln
+       |  FROM vb1),
+       |${trendChangeSql(rel, "swk1 > 0.0")}""".stripMargin
   }
 
   /** The trend pairing `pairs` per point of `from` (ends in ",\n"):
@@ -2612,10 +2640,10 @@ object LsviQueries {
        |  FROM $from GROUP BY 1, 2),
        |""".stripMargin
 
-  /** q129's visits replayed from [[cycleTrendInputs]] (`weighted`:
-    * q138's per-visit weight too), each numbered into its 6-year cycle
+  /** q129's visits replayed from [[cycleTrendInputs]] (plus q138's
+    * per-visit weight column `w`), each numbered into its 6-year cycle
     * from the subtype's first visit year like `assignCycles`. */
-  private def cyclePlotsCtes(weighted: Boolean): String =
+  private def cyclePlotsCtes(w: Option[String] = None): String =
     s"""$statusBaseCte
        |plots0 AS (
        |  SELECT 'CY_' || ck AS id,
@@ -2626,7 +2654,7 @@ object LsviQueries {
        |    2010 + 3 * (ck % 5) AS mdate,
        |    CASE WHEN pt % 3 < 2 THEN 1 ELSE 0 END AS in_sac,
        |    CASE WHEN (ck * 5) % 3 = 0 THEN 'gunstig' ELSE 'ongunstig' END
-       |      AS lsvi${if (weighted) ",\n    ((2010 + 3 * (ck % 5) - 2010) // 3 + 1) * 0.25 AS w" else ""}
+       |      AS lsvi${w.map(x => s",\n    $x").getOrElse("")}
        |  FROM base),
        |y0 AS (
        |  SELECT habitatsubtype, min(mdate) AS ys FROM plots0 GROUP BY 1),

@@ -1,28 +1,31 @@
 #!/usr/bin/env python3
 """Duplicate-window scan: find blocks of lines that are written out twice.
 
-Usage: python3 tools/dup_windows.py [root ...] [--window N] [--under PREFIX]
-                                     [--show]
+Usage: python3 tools/dup_windows.py [--show]   (from the repo root)
 
-Reads every *.scala file under the roots (default: src/main) and
-normalizes each line: trim it, drop a leading `|` stripMargin margin and
-collapse runs of whitespace to one space. A window is N consecutive
-normalized lines (default 6); windows that hold a line of 3 characters
-or fewer (a brace, a blank, `)`, a closing triple quote) are skipped, so
-closing punctuation does not make two blocks look alike.
+Reads every *.scala file under src/main and normalizes each line: trim
+it, drop a leading `|` stripMargin margin and collapse runs of
+whitespace to one space. A window is 6 consecutive normalized lines;
+windows that hold a line of 3 characters or fewer (a brace, a blank,
+`)`, a closing triple quote) are skipped, so closing punctuation does
+not make two blocks look alike.
 
 A window that occurs more than once across all scanned files marks its
 lines as "in repeated windows". Every occurrence after the first, in
 file-path then line order, marks its lines as "repeating an earlier
 copy": those are the lines a shared builder would remove. Prints both
-counts per file and a total; with --under, the total also covers just
-the files whose path contains PREFIX. --show also lists each run of
-repeating lines (1-based, inclusive) with where its first copy starts.
+counts per file, a total, and the total over graft/queries/. --show
+also lists each run of repeating lines (1-based, inclusive) with where
+its first copy starts.
 """
 import argparse
 import os
 import re
 import sys
+
+ROOT = "src/main"
+WINDOW = 6
+UNDER = "graft/queries/"
 
 
 def normalize(line):
@@ -32,15 +35,14 @@ def normalize(line):
     return re.sub(r"\s+", " ", s)
 
 
-def scala_files(roots):
-    for root in roots:
-        for d, _, names in os.walk(root):
-            for n in sorted(names):
-                if n.endswith(".scala"):
-                    yield os.path.join(d, n)
+def scala_files(root):
+    for d, _, names in os.walk(root):
+        for n in sorted(names):
+            if n.endswith(".scala"):
+                yield os.path.join(d, n)
 
 
-def scan(paths, window):
+def scan(paths):
     lines = {}
     for p in paths:
         with open(p, encoding="utf-8") as f:
@@ -50,8 +52,8 @@ def scan(paths, window):
     later = {p: {} for p in paths}  # line -> (first path, first line)
     for p in paths:
         ls = lines[p]
-        for i in range(len(ls) - window + 1):
-            w = tuple(ls[i:i + window])
+        for i in range(len(ls) - WINDOW + 1):
+            w = tuple(ls[i:i + WINDOW])
             if any(len(x) <= 3 for x in w):
                 continue
             first = seen.get(w)
@@ -59,9 +61,9 @@ def scan(paths, window):
                 seen[w] = (p, i)
                 continue
             fp, fi = first
-            repeated[fp].update(range(fi, fi + window))
-            repeated[p].update(range(i, i + window))
-            for k in range(window):
+            repeated[fp].update(range(fi, fi + WINDOW))
+            repeated[p].update(range(i, i + WINDOW))
+            for k in range(WINDOW):
                 later[p].setdefault(i + k, (fp, fi + k))
     return repeated, later
 
@@ -79,13 +81,10 @@ def runs(later):
 
 def main(argv):
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument("roots", nargs="*", default=["src/main"])
-    ap.add_argument("--window", type=int, default=6)
-    ap.add_argument("--under", default="graft/queries/")
     ap.add_argument("--show", action="store_true")
     a = ap.parse_args(argv)
-    paths = sorted(scala_files(a.roots))
-    repeated, later = scan(paths, a.window)
+    paths = sorted(scala_files(ROOT))
+    repeated, later = scan(paths)
     tot_r = tot_l = sub_r = sub_l = 0
     print(f"{'in repeated windows':>20} {'repeat earlier copy':>20}  file")
     for p in paths:
@@ -98,11 +97,11 @@ def main(argv):
                 print(f"{'':>42}{lo}-{hi} repeats {src[0]}:{src[1]}")
         tot_r += r
         tot_l += l
-        if a.under in p:
+        if UNDER in p:
             sub_r += r
             sub_l += l
     print(f"{tot_r:>20} {tot_l:>20}  total")
-    print(f"{sub_r:>20} {sub_l:>20}  total under {a.under}")
+    print(f"{sub_r:>20} {sub_l:>20}  total under {UNDER}")
 
 
 if __name__ == "__main__":
